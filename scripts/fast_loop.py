@@ -15,10 +15,9 @@ directory; see tests/conftest.py):
 
 Wall time ≈ the slowest shard instead of the serial sum. Coverage is
 IDENTICAL to `pytest tests/ -m "not slow"`: the oracle-shard env var
-only partitions the sweep's parametrize list, and the md5 shard bit is
-independent of the rotation bit, so both shards carry rotated-in and
-rotated-out-marked queries alike. The driver's full `pytest tests/`
-run is untouched (no env vars set → no sharding, stock layout).
+only partitions the sweep's parametrize list (md5(name) % 2), and no
+oracle sweep param carries the slow mark. A plain `pytest tests/` run
+is untouched (no env vars set → no sharding, stock layout).
 
 Usage: python scripts/fast_loop.py [extra pytest args…]
 Exit code: non-zero if ANY shard fails; each shard's tail is printed.

@@ -190,7 +190,7 @@ def strip_top_limit(sql: str) -> str:
 def site_inventory() -> list[dict]:
     """Static (no-SQL-execution) inventory of every round(sum(...)) oracle
     site: [{query, alias, idiom, digits}], sorted. Snapshotted to
-    scripts/money_sites.json by --snapshot; tests/test_registry_window.py
+    scripts/money_sites.json by --snapshot; tests/test_oracle.py
     compares the live inventory to the snapshot so a NEW rounded-sum site
     (or an idiom downgrade on an existing one) fails the fast loop with a
     pointer to run the full distance audit — the gate runs continuously,

@@ -6,36 +6,27 @@ hosts), so it gets the same process-level sharding treatment as
 scripts/fast_loop.py (round-12/13 template; pytest-xdist is not in this
 environment).
 
-Composition of the slow set (round 16): ~134 rotated-out oracle sweep
-params in tests/test_oracle.py (certified queries rotated out of the
-per-commit loop — the dominant cost, and already splittable with the
-md5-deterministic SPARK_GRAFT_ORACLE_SHARD partition fast_loop uses) +
-8 heavy integration tests across six other files. Four shards (the
-first cut ran rest as ONE shard and measured it the 397 s straggler
-behind two ~95 s oracle shards; test_empty_tables — a full-catalog
-degenerate-corpus sweep per test, ~90% of rest's wall — splits one
+Composition of the slow set: 6 heavy integration tests across five
+files (mllib grid sweep, recall floor, property check, BPE oracles,
+analyze roundtrip) plus test_empty_tables.py's full-catalog
+degenerate-corpus sweeps, which dominate the wall time and split one
 test per shard. NB: -k matches the whole node id INCLUDING the
 filename, so the selectors below use the test-function substrings, not
-"empty_tables", which matches both via the module name):
+"empty_tables", which matches both via the module name:
 
-  1. oracle sweep with SPARK_GRAFT_ORACLE_SHARD=0/2 + the six small
-     heavy files (mllib grid sweep, recall floors, property checks,
-     BPE oracles, analyze roundtrip)
-  2. oracle sweep with SPARK_GRAFT_ORACLE_SHARD=1/2
-  3. the empty-corpus catalog sweep (-k survives_empty)
-  4. everything ELSE in test_empty_tables.py (-k "not survives_empty" —
+  1. every slow test outside test_empty_tables.py
+  2. the empty-corpus catalog sweep (-k survives_empty)
+  3. everything ELSE in test_empty_tables.py (-k "not survives_empty" —
      today exactly the single-row-corpus sweep, the slowest single test:
      quantizers/trainers on degenerate input pay fixed overhead per
      catalog entry). Complement-based so a future slow test added to the
-     file lands in a shard instead of silently vanishing (round-16
-     ADVICE); tests/test_slow_loop_coverage.py pins union == serial.
+     file lands in a shard instead of silently vanishing;
+     tests/test_slow_loop_coverage.py pins union == serial.
 
 Each shard gets its own warehouse/Derby home via
 SPARK_GRAFT_TEST_SHARD_DIR (embedded Derby allows one metastore per
 directory; tests/conftest.py). Coverage is IDENTICAL to the serial
-`pytest tests/ -m slow`: the oracle-shard env var only partitions the
-parametrize list and is independent of the rotation bit. The driver's
-full `pytest tests/` run is untouched (no env vars → no sharding).
+`pytest tests/ -m slow`. The full `pytest tests/` run is untouched.
 
 Usage: python scripts/slow_loop.py [extra pytest args…]
 Exit code: non-zero if ANY shard fails; each shard's tail is printed.
@@ -52,19 +43,13 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SHARDS = [
-    ("slow-oracle-0/2+rest", ["tests", "--ignore=tests/test_empty_tables.py"],
-     {"SPARK_GRAFT_ORACLE_SHARD": "0/2"}),
-    ("slow-oracle-1/2", ["tests/test_oracle.py"],
-     {"SPARK_GRAFT_ORACLE_SHARD": "1/2"}),
+    ("slow-rest", ["tests", "--ignore=tests/test_empty_tables.py"], {}),
     ("slow-empty", ["tests/test_empty_tables.py",
                     "-k", "survives_empty"], {}),
-    # COMPLEMENT of the shard above, not a second positive substring —
-    # round-16 ADVICE: two positive -k selectors would silently drop a
-    # future slow test in this file that matches neither, while shard 1
-    # ignores the whole file. With `not survives_empty` the two shards
-    # partition the file by construction (today this shard is exactly the
-    # single-row sweep); tests/test_slow_loop_coverage.py pins the
-    # union-equals-serial invariant across all shards.
+    # COMPLEMENT of the shard above, not a second positive substring: two
+    # positive -k selectors would silently drop a future slow test in
+    # this file that matches neither, while slow-rest ignores the whole
+    # file. tests/test_slow_loop_coverage.py pins union == serial.
     ("slow-single+rest", ["tests/test_empty_tables.py",
                           "-k", "not survives_empty"], {}),
 ]

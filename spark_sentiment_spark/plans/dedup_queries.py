@@ -221,13 +221,15 @@ def _jaccard_pair_frame(docs):
     )
 
 
-def _minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
-                        seed: int = 42, threshold: float = 0.5) -> str:
-    """DuckDB twin of the full MinHash-LSH pipeline, generated from the
+def _lsh_cand_sql(tail: str, cand_where: str = "", n_hashes: int = 32,
+                  n_bands: int = 8, seed: int = 42) -> str:
+    """DuckDB twin of the MinHash-LSH candidate stage, generated from the
     SAME permutation constants as the Spark signature stage: md5-derived
-    31-bit shingle hashes → (a*h+b) mod p mins → '-'-joined band keys →
-    bucket self-join → signature-agreement estimate. Every step is
-    engine-independent, so the driver's value-hash check is exact."""
+    31-bit shingle hashes → (a*h+b) mod p mins (``sig``) → '-'-joined band
+    keys → bucket self-join (``cand``, narrowed by ``cand_where``). Every
+    step is engine-independent, so the value-hash check is exact. ``tail``
+    follows ``cand``'s closing paren: further CTEs or the final SELECT,
+    scoring pairs with `_est_jaccard_sql`."""
     p = _MINHASH_P
     perms = _perm_constants(n_hashes, seed)
     mh_cols = ",\n         ".join(
@@ -239,8 +241,7 @@ def _minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
         + ", ".join(f"mh{band * rpb + r}" for r in range(rpb))
         + ") AS bh FROM sig"
         for band in range(n_bands))
-    agree = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
-                       for i in range(n_hashes))
+    where = f"\n  WHERE {cand_where}" if cand_where else ""
     return f"""
 WITH toks AS (
   SELECT doc_id, string_split(lower(text), ' ') AS t
@@ -266,16 +267,33 @@ WITH toks AS (
 ), cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.bh = b.bh AND a.doc_id < b.doc_id
-)
+    ON a.band_id = b.band_id AND a.bh = b.bh AND a.doc_id < b.doc_id{where}
+){tail}"""
+
+
+def _est_jaccard_sql(n_hashes: int = 32) -> str:
+    """Signature-agreement Jaccard estimate of a ``cand`` pair joined to
+    ``sig`` as ``sa``/``sb``, rounded like the Spark side."""
+    agree = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
+                       for i in range(n_hashes))
+    return f"round(({agree}) / {float(n_hashes)}, 4)"
+
+
+def _minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
+                        seed: int = 42, threshold: float = 0.5,
+                        cand_where: str = "", extra_cols: str = "") -> str:
+    """DuckDB twin of the full MinHash-LSH pipeline: every candidate pair
+    (narrowed by ``cand_where``) whose estimate clears ``threshold``."""
+    est = _est_jaccard_sql(n_hashes)
+    return _lsh_cand_sql(f"""
 SELECT doc_a, doc_b,
-       round(({agree}) / {float(n_hashes)}, 4) AS est_jaccard
+       {est} AS est_jaccard{extra_cols}
 FROM cand
 JOIN sig sa ON doc_a = sa.doc_id
 JOIN sig sb ON doc_b = sb.doc_id
-WHERE round(({agree}) / {float(n_hashes)}, 4) >= {threshold}
+WHERE {est} >= {threshold}
 ORDER BY doc_a, doc_b
-"""
+""", cand_where, n_hashes, n_bands, seed)
 
 
 @register("dedup_minhash_lsh", bench=True, sql=_minhash_oracle_sql(),
@@ -350,62 +368,16 @@ def dedup_minhash_lsh(spark, sf_dir):
 def _incr_minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
                              seed: int = 42, threshold: float = 0.5) -> str:
     """DuckDB twin of the INCREMENTAL MinHash query: the full-corpus LSH
-    pipeline (identical permutation constants, band keys, and agreement
-    estimate as `_minhash_oracle_sql`) restricted to candidate pairs that
-    TOUCH the incoming batch (doc_id % 5 = 4) — exactly the pair set the
-    incremental plan generates, since pairs entirely inside the already-
-    indexed corpus were emitted by earlier batches."""
-    p = _MINHASH_P
-    perms = _perm_constants(n_hashes, seed)
-    mh_cols = ",\n         ".join(
-        f"min((h * {a} + {b}) % {p}) AS mh{i}"
-        for i, (a, b) in enumerate(perms))
-    rpb = n_hashes // n_bands
-    band_selects = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {band} AS band_id, concat_ws('-', "
-        + ", ".join(f"mh{band * rpb + r}" for r in range(rpb))
-        + ") AS bh FROM sig"
-        for band in range(n_bands))
-    agree = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
-                       for i in range(n_hashes))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t
-  FROM documents WHERE text IS NOT NULL
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN list_transform(generate_series(1, len(t) - 2),
-                                  i -> array_to_string(t[i:i+2], ' '))
-              ELSE [array_to_string(t, ' ')] END AS shingles
-  FROM toks
-), shd AS (
-  SELECT DISTINCT doc_id, unnest(shingles) AS w FROM sh
-), hv AS (
-  SELECT doc_id, ('0x' || substr(md5(w), 1, 8))::BIGINT & 2147483647 AS h
-  FROM shd
-), sig AS (
-  SELECT doc_id,
-         {mh_cols}
-  FROM hv GROUP BY doc_id
-), bands AS (
-{band_selects}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.bh = b.bh AND a.doc_id < b.doc_id
-  WHERE a.doc_id % 5 = 4 OR b.doc_id % 5 = 4
-)
-SELECT doc_a, doc_b,
-       round(({agree}) / {float(n_hashes)}, 4) AS est_jaccard,
+    pipeline restricted to candidate pairs that TOUCH the incoming batch
+    (doc_id % 5 = 4) — exactly the pair set the incremental plan
+    generates, since pairs entirely inside the already-indexed corpus were
+    emitted by earlier batches."""
+    return _minhash_oracle_sql(
+        n_hashes, n_bands, seed, threshold,
+        cand_where="a.doc_id % 5 = 4 OR b.doc_id % 5 = 4",
+        extra_cols=""",
        CAST(CASE WHEN doc_a % 5 = 4 AND doc_b % 5 = 4
-                 THEN 0 ELSE 1 END AS BIGINT) AS vs_corpus
-FROM cand
-JOIN sig sa ON doc_a = sa.doc_id
-JOIN sig sb ON doc_b = sb.doc_id
-WHERE round(({agree}) / {float(n_hashes)}, 4) >= {threshold}
-ORDER BY doc_a, doc_b
-"""
+                 THEN 0 ELSE 1 END AS BIGINT) AS vs_corpus""")
 
 
 @register("dedup_incremental_minhash", sql=_incr_minhash_oracle_sql(),
@@ -1406,56 +1378,13 @@ def dedup_sentence_exact(spark, sf_dir):
 def _cross_source_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
                              seed: int = 42, threshold: float = 0.5) -> str:
     """DuckDB twin of the provenance-matrix query: the full MinHash-LSH
-    pair pipeline (identical constants as `_minhash_oracle_sql`) joined
-    back to each side's ``source`` and rolled up per unordered source
-    pair. Kept as its own generator rather than refactoring the shared
-    prefix out of the sibling oracles — their SQL strings are
-    hash-snapshotted by the driver-window guard, so byte-identical
-    stability wins over DRY here."""
-    p = _MINHASH_P
-    perms = _perm_constants(n_hashes, seed)
-    mh_cols = ",\n         ".join(
-        f"min((h * {a} + {b}) % {p}) AS mh{i}"
-        for i, (a, b) in enumerate(perms))
-    rpb = n_hashes // n_bands
-    band_selects = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {band} AS band_id, concat_ws('-', "
-        + ", ".join(f"mh{band * rpb + r}" for r in range(rpb))
-        + ") AS bh FROM sig"
-        for band in range(n_bands))
-    agree = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
-                       for i in range(n_hashes))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t
-  FROM documents WHERE text IS NOT NULL
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN list_transform(generate_series(1, len(t) - 2),
-                                  i -> array_to_string(t[i:i+2], ' '))
-              ELSE [array_to_string(t, ' ')] END AS shingles
-  FROM toks
-), shd AS (
-  SELECT DISTINCT doc_id, unnest(shingles) AS w FROM sh
-), hv AS (
-  SELECT doc_id, ('0x' || substr(md5(w), 1, 8))::BIGINT & 2147483647 AS h
-  FROM shd
-), sig AS (
-  SELECT doc_id,
-         {mh_cols}
-  FROM hv GROUP BY doc_id
-), bands AS (
-{band_selects}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.bh = b.bh AND a.doc_id < b.doc_id
-), pairs AS (
+    pair pipeline joined back to each side's ``source`` and rolled up per
+    unordered source pair."""
+    return _lsh_cand_sql(f""", pairs AS (
   SELECT doc_a, doc_b FROM cand
   JOIN sig sa ON doc_a = sa.doc_id
   JOIN sig sb ON doc_b = sb.doc_id
-  WHERE round(({agree}) / {float(n_hashes)}, 4) >= {threshold}
+  WHERE {_est_jaccard_sql(n_hashes)} >= {threshold}
 )
 SELECT least(da.source, db.source) AS source_a,
        greatest(da.source, db.source) AS source_b,
@@ -1467,7 +1396,7 @@ JOIN documents da ON doc_a = da.doc_id
 JOIN documents db ON doc_b = db.doc_id
 GROUP BY 1, 2
 ORDER BY source_a, source_b
-"""
+""", "", n_hashes, n_bands, seed)
 
 
 @register("dedup_cross_source_pairs", sql=_cross_source_oracle_sql(),
@@ -1536,59 +1465,12 @@ def _probe_minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
                               seed: int = 42,
                               threshold: float = 0.5) -> str:
     """DuckDB twin of the BUCKETED band-index probe: the full-corpus LSH
-    pipeline (identical constants to `_minhash_oracle_sql`) restricted
-    to pairs with EXACTLY ONE side in the incoming batch (doc_id%5=4) —
-    the new-vs-old probe set; new-vs-new pairs belong to the batch
-    self-join, old-vs-old to earlier batches."""
-    p = _MINHASH_P
-    perms = _perm_constants(n_hashes, seed)
-    mh_cols = ",\n         ".join(
-        f"min((h * {a} + {b}) % {p}) AS mh{i}"
-        for i, (a, b) in enumerate(perms))
-    rpb = n_hashes // n_bands
-    band_selects = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {band} AS band_id, concat_ws('-', "
-        + ", ".join(f"mh{band * rpb + r}" for r in range(rpb))
-        + ") AS bh FROM sig"
-        for band in range(n_bands))
-    agree = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
-                       for i in range(n_hashes))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t
-  FROM documents WHERE text IS NOT NULL
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN list_transform(generate_series(1, len(t) - 2),
-                                  i -> array_to_string(t[i:i+2], ' '))
-              ELSE [array_to_string(t, ' ')] END AS shingles
-  FROM toks
-), shd AS (
-  SELECT DISTINCT doc_id, unnest(shingles) AS w FROM sh
-), hv AS (
-  SELECT doc_id, ('0x' || substr(md5(w), 1, 8))::BIGINT & 2147483647 AS h
-  FROM shd
-), sig AS (
-  SELECT doc_id,
-         {mh_cols}
-  FROM hv GROUP BY doc_id
-), bands AS (
-{band_selects}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.bh = b.bh AND a.doc_id < b.doc_id
-  WHERE (a.doc_id % 5 = 4) <> (b.doc_id % 5 = 4)
-)
-SELECT doc_a, doc_b,
-       round(({agree}) / {float(n_hashes)}, 4) AS est_jaccard
-FROM cand
-JOIN sig sa ON doc_a = sa.doc_id
-JOIN sig sb ON doc_b = sb.doc_id
-WHERE round(({agree}) / {float(n_hashes)}, 4) >= {threshold}
-ORDER BY doc_a, doc_b
-"""
+    pipeline restricted to pairs with EXACTLY ONE side in the incoming
+    batch (doc_id%5=4) — the new-vs-old probe set; new-vs-new pairs belong
+    to the batch self-join, old-vs-old to earlier batches."""
+    return _minhash_oracle_sql(
+        n_hashes, n_bands, seed, threshold,
+        cand_where="(a.doc_id % 5 = 4) <> (b.doc_id % 5 = 4)")
 
 
 @register("dedup_minhash_bucketed_probe", sql=_probe_minhash_oracle_sql(),

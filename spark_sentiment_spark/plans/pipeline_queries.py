@@ -287,9 +287,6 @@ def vocab_coverage(spark, sf_dir):
 
 
 # --- Prefix dedup (boilerplate-headed near-dup elimination) -----------------
-# Lives here rather than in plans/dedup_queries.py so registration order
-# keeps the driver's correctness window on the round-1-unchecked surface;
-# rotate into the window next round.
 
 PREFIX_K = 4
 
@@ -1448,9 +1445,6 @@ def dedup_incremental_bloom(spark, sf_dir):
 
 
 # --- Semantic dedup (SemDeDup-style cluster-scoped near-dup removal) --------
-# Lives here rather than in plans/similarity_queries.py so registration
-# order keeps the driver's correctness window on the oracle-backed
-# streaming queries (see all_queries()); rotates forward next round.
 
 SEMDEDUP_K = 8
 SEMDEDUP_TAU = 0.4
@@ -1772,8 +1766,6 @@ def bpe_token_counts(spark, sf_dir):
 
 
 # --- Unigram-LM perplexity quality scoring (CCNet-style, simplified) --------
-# Lives here (tail) rather than in plans/text_queries.py so the addition
-# does not shift the driver's registration-order correctness window.
 
 PPL_SQL = """
 WITH toks AS (

@@ -232,96 +232,9 @@ def _fanout_needed(spark: SparkSession) -> bool:
     return spark.sparkContext.master.startswith("local")
 
 
-# The external correctness harness records rows for only the FIRST 50
-# catalog entries, so ordering is an explicit, audited decision rather
-# than an accident of import order.
-#
-# The round-17 window is COMPUTED, not hand-maintained: `python
-# scripts/gen_window.py` derives it from the registry and the
-# CORRECTNESS_r*.json history for rounds strictly before WINDOW_ROUND
-# (=17, so the list stays frozen when the driver lands the current
-# round's artifact mid-round), and tests/test_registry_window.py asserts
-# this committed list matches that computation. Cut 2026-08-16 at
-# round-17 start, matching the round-16 verdict accounting: the single
-# round-16 addition (ann_ivfpq_refresh_probe — never driver-checked;
-# independently re-verified at sf0.01 by the round-16 judge and at sf0.1
-# twice on landing) takes the priority slot; the upgraded-since-row and
-# forced-rows-only classes are EMPTY (the r16 window certified the r15
-# upgrades, and mlib_score_documents' one-time FORCE_ROWS_ONLY routing
-# was consumed at the r16 cut — all 4 rows-only queries now have driver
-# no_oracle rows on record). That leaves 49 backfill slots: the 18
-# remaining r11-stale rows (newest driver row 5 rounds old at this cut)
-# + 31 of the r12 rows (round asc, name asc). After this round the
-# stale set is the ~17 remaining r12 rows + r13+ rows; the full-refresh
-# cycle stays ~2 rounds at window 50 with the catalog held flat.
-_WINDOW_PRIORITY = [
-    # round-19 close-time cut (scripts/gen_window.py --cut at
-    # WINDOW_ROUND = 19): 54 upgraded-since-row candidates for 50
-    # slots — every value-risk r19 restructure and every un-rowed
-    # r18 restructure is in; the 4 truncated are r19 persist-only
-    # (value-identical) ann_ivfpq probes, locally oracle-green at
-    # both SFs (triage note in OPTIMIZATION_r19.md).
-    # — never driver-checked —
-    # — upgraded after latest row —
-    "contrastive_pairs",  # r16
-    "vocab_coverage",  # r12
-    "agg_hll_sketch",  # r15
-    "events_daily_uniques_hll",  # r15
-    "agg_hll_merge_shards",  # r13
-    "events_sliding_users_hll",  # r13
-    "curate_corpus",  # r13
-    "curate_corpus_gopher",  # r13
-    "curate_corpus_c4",  # r13
-    "curate_corpus_staged",  # r14
-    "dedup_incremental",  # r16
-    "dedup_incremental_bloom",  # r16
-    "q15_top_supplier",  # r14
-    "events_stickiness",  # r15
-    "events_seasonal_anomaly",  # r15
-    "token_pmi_bigrams",  # r16
-    "snapshot_diff",  # r12
-    "decontaminate_minhash",  # r15
-    "events_retention_cohorts",  # r14
-    "events_cumulative_users",  # r13
-    "events_rollup_incremental",  # r16
-    "events_gap_fill",  # r14
-    "events_peak_concurrency",  # r13
-    "events_rfm_scores",  # r14
-    "events_rfm_distributed",  # r16
-    "events_rfm_cutpoints_bucketed",  # r13
-    "events_funnel",  # r14
-    "events_funnel_windowed",  # r15
-    "preference_pairs",  # r13
-    "mixture_upsample",  # r15
-    "source_overlap",  # r13
-    "zorder_probe",  # r15
-    "q21_waiting_suppliers",  # r12
-    "streaming_winnowing_probe",  # r12
-    "dedup_winnowing_pairs",  # r16
-    "dedup_embedding_cosine",  # r15
-    "langid_kappa",  # r14
-    "dedup_jaccard_pairs",  # r16
-    "dedup_char_ngrams",  # r15
-    "wordlist_extraction",  # r16
-    "token_pagerank",  # r18
-    "events_stickiness_hll",  # r18
-    "dedup_clusters",  # r15
-    "dedup_cluster_stats",  # r15
-    "dedup_cluster_canonical",  # r15
-    "dedup_winnowing_incremental",  # r18
-    "dedup_incremental_minhash",  # r13
-    "dedup_minhash_bucketed_probe",  # r15
-    "streaming_minhash_probe",  # r16
-    "ann_pq_persisted_probe",  # r14
-    # — forced rows-only (one-time) —
-    # — oldest-stale backfill —
-]
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Import registration modules for their side effects, then reorder the
-    # catalog so _WINDOW_PRIORITY names come first (prefix-checking
-    # harnesses spend their rows on not-yet-verified queries).
+    # Import registration modules for their side effects; catalog order is
+    # registration order.
     import spark_sentiment_spark.plans.dedup_queries  # noqa: F401
     import spark_sentiment_spark.plans.similarity_queries  # noqa: F401
     import spark_sentiment_spark.plans.events_queries  # noqa: F401
@@ -334,11 +247,6 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     import spark_sentiment_spark.plans.corpus_queries  # noqa: F401
     import spark_sentiment_spark.plans.ml_queries  # noqa: F401
     import spark_sentiment_spark.plans.sketch_queries  # noqa: F401
-
-    ordered = {n: REGISTRY[n] for n in _WINDOW_PRIORITY if n in REGISTRY}
-    ordered.update((n, q) for n, q in REGISTRY.items() if n not in ordered)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
     return {name: q.fn for name, q in REGISTRY.items()}
 
 
@@ -348,14 +256,9 @@ def all_oracles() -> dict[str, str]:
 
 
 def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Name-sorted, NOT registry order: registry order follows the
-    # correctness-window rotation, so before round 9 each cut silently
-    # reshuffled the bench execution order — and position in the session
-    # is worth ~1.4x on sub-2s queries (early runs still pay JVM/JIT
-    # warm-up; the round-9 q10 adjudication in PLANS.md measured
-    # early=1.33s vs late=0.93s medians for the same plan in one
-    # session). A fixed order keeps per-query medians comparable across
-    # rounds.
+    # Name-sorted: position in the session is worth ~1.4x on sub-2s
+    # queries (early runs still pay JVM/JIT warm-up), so a fixed order
+    # keeps per-query medians comparable when modules gain or move queries.
     all_queries()
     return {name: REGISTRY[name].fn
             for name in sorted(REGISTRY) if REGISTRY[name].bench}

@@ -1,6 +1,6 @@
 """Round-16 addition: `ann_ivfpq_refresh_probe` has an exact DuckDB
 oracle (driver-routed, swept by tests/test_oracle.py at sf0.001 and by
-scripts/sweep_sf01.py at sf0.1); these tests pin what the driver row
+scripts/sweep.py at sf0.1); these tests pin what the driver row
 can't see — the decision rule's BOTH branches on the same corpus, the
 decision metadata against direct corpus counts, the recall floors of
 both serving paths, and the balance contract (the reason a production
