@@ -3,7 +3,8 @@
 
 Env knobs:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS    local[] parallelism (default: the CPUs this process
+                      may run on)
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect). Prints {"metric", "value", "unit", "queries", "sf"}.
@@ -26,7 +27,8 @@ def _force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:

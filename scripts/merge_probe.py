@@ -3,9 +3,9 @@
 item 3): grow the HISTORY ×K at a FIXED delta batch and time
 
   (a) the MERGE against a MATERIALIZED history dimension — the
-      production nightly cost (`_scd2_merge`), which the docstring
+      production nightly cost (`scd2_merge`), which the docstring
       claims scales with the delta, never the history; and
-  (b) the FULL REBUILD (`_scd2_dim` over history + delta) — the cost
+  (b) the FULL REBUILD (`scd2_dim` over history + delta) — the cost
       the incremental form exists to avoid.
 
 History replicas re-key user_id as id + 10^9 * rep, so replica 0 keeps
@@ -53,8 +53,7 @@ SECTION = "## Fixed-delta SCD2 merge probe"
 
 def main() -> None:
     from spark_sentiment_spark import get_spark
-    from spark_sentiment_spark.plans.events_queries import (_scd2_dim,
-                                                            _scd2_merge)
+    from spark_sentiment_spark.operators.scd2 import scd2_dim, scd2_merge
     from spark_sentiment_spark.plans.registry import load
 
     spark = get_spark(master="local[32]", shuffle_partitions=32,
@@ -92,16 +91,16 @@ def main() -> None:
             hist_k.repartition(32).write.mode("overwrite").parquet(hist_path)
             # Materialize the EXISTING dimension (untimed: in production
             # it already exists — it is last night's output).
-            _scd2_dim(spark.read.parquet(hist_path)) \
+            scd2_dim(spark.read.parquet(hist_path)) \
                 .write.mode("overwrite").parquet(dim_path)
 
             def run_merge():
-                _scd2_merge(spark.read.parquet(dim_path),
-                            spark.read.parquet(delta_path)) \
+                scd2_merge(spark.read.parquet(dim_path),
+                           spark.read.parquet(delta_path)) \
                     .write.format("noop").mode("overwrite").save()
 
             def run_rebuild():
-                _scd2_dim(spark.read.parquet(hist_path).unionByName(
+                scd2_dim(spark.read.parquet(hist_path).unionByName(
                     spark.read.parquet(delta_path))) \
                     .write.format("noop").mode("overwrite").save()
 
@@ -132,9 +131,9 @@ def main() -> None:
         "users exist in the open dimension), the DELTA BATCH IS FIXED at",
         "the base corpus's last 30%, and the existing SCD2 dimension is",
         "MATERIALIZED to parquet before timing — so `merge` times exactly",
-        "the nightly increment (`_scd2_merge`: delta windows + open-row",
+        "the nightly increment (`scd2_merge`: delta windows + open-row",
         "join + closed-row pass-through) while `rebuild` times the full",
-        "`_scd2_dim` window over history+delta that the incremental form",
+        "`scd2_dim` window over history+delta that the incremental form",
         "avoids.", "",
         "| path | " + " | ".join(f"×{k} history" for k in FACTORS)
         + " | ×{}/×1 time |".format(FACTORS[-1]),

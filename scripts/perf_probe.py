@@ -6,9 +6,9 @@ min-of-3 full-bench reading elects random movers (individual queries
 swing up to ~2.6x run-to-run on this host); the r17 VERDICT item 4
 adopts dedicated repeat probes as the only bench adjudication. This
 script is that protocol, committed: same session config as bench.py
-(local[$SPARK_GRAFT_CPUS], interpreted mode, noop sink, warm-up,
-release_caches between runs), N repeats per named query, prints
-min/median/all.
+(local[$SPARK_GRAFT_CPUS], default the CPUs this process may run on;
+interpreted mode, noop sink, warm-up, release_caches between runs), N
+repeats per named query, prints min/median/all.
 
 Usage:
   python scripts/perf_probe.py q1_pricing_summary,ann_lsh_topk [repeats]
@@ -29,7 +29,8 @@ def main() -> None:
     names = sys.argv[1].split(",") if len(sys.argv) > 1 else []
     repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
 
     from spark_sentiment_spark import get_spark
     from spark_sentiment_spark.plans.registry import (all_queries,

@@ -288,31 +288,31 @@ def _probe_only_builders(spark, sf_dir):
     """Pre-stage every staged index at this K and return zero-arg probe
     builders (each returns the recurring per-batch DataFrame). Staging
     dirs stay alive until the caller's release_caches()."""
+    from spark_sentiment_spark.operators import bm25, vectors
     from spark_sentiment_spark.plans import pipeline_queries as pq
-    from spark_sentiment_spark.plans import similarity_queries as sq
-    from spark_sentiment_spark.plans import text_queries as tq
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    e = sq._as_double("embedding")
-    unit = F.transform(e, lambda x: x / sq._norm(e))
-    vecs = emb.select("vec_id", unit.alias("e"))
-    pq_base, pq_n = sq._pq_stage_index(spark, vecs)
-    ivfpq_base, ivfpq_n = sq._ivfpq_stage_index(spark, vecs)
-    postings, dl = tq._bm25_stage_index(spark, sf_dir)
+    vecs = emb.select("vec_id", vectors.unit_vector("embedding").alias("e"))
+    pq_base, pq_n = vectors.pq_stage_index(spark, vecs)
+    ivfpq_base, ivfpq_n = vectors.ivfpq_stage_index(spark, vecs)
+    postings, dl = bm25.bm25_stage_index(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         F.col("text").isNotNull())
     v, g = pq._curate_stage(spark, docs)
     return {
         "ann_pq_persisted_probe.probe_only":
             ("embeddings",
-             lambda: sq._pq_probe(spark, vecs, pq_base, pq_n,
-                                  sq.PQ_RERANK, 10)),
+             lambda: vectors.pq_probe(spark, vecs, pq_base, pq_n,
+                                      vectors.PQ_RERANK, 10)),
         "ann_ivfpq_persisted_probe.probe_only":
             ("embeddings",
-             lambda: sq._ivfpq_probe(spark, vecs, ivfpq_base, ivfpq_n,
-                                     sq.IVFPQ_RERANK, 10)),
+             lambda: vectors.ivfpq_probe(spark, vecs, ivfpq_base, ivfpq_n,
+                                         vectors.IVFPQ_RERANK, 10)),
         "search_bm25_persisted_probe.probe_only":
-            ("documents", lambda: tq._bm25_probe(spark, postings, dl)),
+            ("documents",
+             lambda: bm25.bm25_probe(postings, dl,
+                                     bm25.bm25_query_frame(spark),
+                                     bm25.BM25_TERMS)),
         "curate_corpus_staged.probe_only":
             ("documents", lambda: pq._curate_assemble(v, g)),
     }

@@ -52,6 +52,24 @@ def clean_text_sql(expr: str) -> str:
     return out
 
 
+# Whitespace tokens of a trimmed ``text`` column: the corpus statistics'
+# token unit, as DuckDB SQL and as the identical Spark Column.
+WS_TOKENS_SQL = "string_split_regex(trim(text), '\\s+')"
+
+
+def ws_tokens() -> Column:
+    return F.split(F.trim(F.col("text")), r"\s+")
+
+
+def token_bigrams(tokens: str) -> Column:
+    """Adjacent pairs of the token array column ``tokens`` as an array of
+    struct<w1, w2> (empty for fewer than two tokens; explode for rows)."""
+    return F.expr(
+        f"zip_with(slice({tokens}, 1, size({tokens})-1),"
+        f" slice({tokens}, 2, size({tokens})-1),"
+        " (a, b) -> struct(a AS w1, b AS w2))")
+
+
 def emoji_to_word_col(col: Column | str, mapping: dict | None = None) -> Column:
     """Per-token emoji→word substitution (SRC/utils/Helper.scala:91-93,
     intended semantics — the reference emits the literal ``Some(word)``, a bug

@@ -240,6 +240,23 @@ def header_metadata(df: DataFrame, content_col: str = "content",
     )
 
 
+# Oracle of `header_metadata` over `attach_media_content(documents)`: the
+# container and geometry `attach_media_content` derives from doc_id,
+# recomputed arithmetically.
+HEADERS_SQL = """
+SELECT doc_id,
+       CASE CAST(doc_id % 3 AS INTEGER)
+            WHEN 0 THEN 'png' WHEN 1 THEN 'wav' ELSE 'mp4' END AS container,
+       CASE WHEN doc_id % 3 = 0 THEN 64 + doc_id % 512 END AS width,
+       CASE WHEN doc_id % 3 = 0 THEN 48 + doc_id % 256 END AS height,
+       CASE WHEN doc_id % 3 = 1 THEN 1 + doc_id % 2 END AS channels,
+       CASE WHEN doc_id % 3 = 1 THEN 8000 + (doc_id % 5) * 8000 END
+         AS sample_rate
+FROM documents
+ORDER BY doc_id
+"""
+
+
 def parse_container_header(b: bytes):
     """Python twin of :func:`header_metadata` plus the variable-offset
     cases (JPEG SOF marker scan, WAV chunk walk) — REAL parsing used by the

@@ -14,25 +14,23 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.plans.registry import (PER_CORPUS, load,
-                                                  register, track_persist)
-
-_TOKENS_SQL = "string_split_regex(trim(text), '\\s+')"
-
-
-def _tokens_col():
-    return F.split(F.trim(F.col("text")), r"\s+")
-
+from spark_sentiment_spark.functions.text import (WS_TOKENS_SQL,
+                                                  token_bigrams, ws_tokens)
+from spark_sentiment_spark.operators.mixture import (TEMP_ALPHA, md5_ranked,
+                                                     mixture_quota_pick,
+                                                     mixture_quotas)
+from spark_sentiment_spark.operators.winnow import (WINNOW_CTE,
+                                                    winnow_selected)
+from spark_sentiment_spark.plans.registry import (load, register,
+                                                  track_persist)
 
 # --- Temperature-scaled mixture weights ------------------------------------
-
-TEMP_ALPHA = 0.7
 
 MIXTURE_TEMP_SQL = f"""
 WITH src AS (
   SELECT source,
          CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len({_TOKENS_SQL})) AS BIGINT) AS n_tokens
+         CAST(sum(len({WS_TOKENS_SQL})) AS BIGINT) AS n_tokens
   FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
   GROUP BY source
@@ -60,7 +58,7 @@ def mixture_temperature(spark, sf_dir):
         docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"),
-             F.sum(F.size(_tokens_col())).alias("n_tokens"))
+             F.sum(F.size(ws_tokens())).alias("n_tokens"))
     )
     w = Window.partitionBy()  # bounded: one row per source
     scaled = F.pow(F.col("n_tokens"), F.lit(TEMP_ALPHA))
@@ -80,7 +78,7 @@ def mixture_temperature(spark, sf_dir):
 
 ENTROPY_SQL = f"""
 WITH tok AS (
-  SELECT source, unnest({_TOKENS_SQL}) AS w
+  SELECT source, unnest({WS_TOKENS_SQL}) AS w
   FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
 ), cnt AS (
@@ -108,7 +106,7 @@ def corpus_token_entropy(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     tok = (
         docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-        .select("source", F.explode(_tokens_col()).alias("w"))
+        .select("source", F.explode(ws_tokens()).alias("w"))
     )
     cnt = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
     t = F.sum("c").over(Window.partitionBy("source"))
@@ -128,7 +126,7 @@ PMI_MIN_COUNT = 5
 
 PMI_SQL = f"""
 WITH t AS (
-  SELECT {_TOKENS_SQL} AS l
+  SELECT {WS_TOKENS_SQL} AS l
   FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
 ), bg AS (
@@ -173,7 +171,7 @@ def token_pmi_bigrams(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     t = (
         docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-        .select(_tokens_col().alias("l"))
+        .select(ws_tokens().alias("l"))
     )
     # Round-18 optimization (guide §2.4): both count tables are persisted.
     # `bg` feeds the n_bi scalar and the main projection, `uni` feeds the
@@ -184,9 +182,7 @@ def token_pmi_bigrams(spark, sf_dir):
     # twice (bigram pass + unigram pass) instead of five times.
     bg = track_persist(
         t.where(F.size("l") > 1)
-        .select(F.explode(F.expr(
-            "zip_with(slice(l, 1, size(l)-1), slice(l, 2, size(l)-1),"
-            " (a, b) -> struct(a AS w1, b AS w2))")).alias("bg"))
+        .select(F.explode(token_bigrams("l")).alias("bg"))
         .select("bg.w1", "bg.w2")
         .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     )
@@ -366,8 +362,7 @@ def contrastive_pairs(spark, sf_dir):
         "vec_id", "label",
         F.row_number().over(wl).alias("r"),
         F.coalesce(F.lead("vec_id").over(wl),
-                   F.first("vec_id").over(wl_full)).alias("pos_id")),
-        level=PER_CORPUS)  # one narrow row per vector
+                   F.first("vec_id").over(wl_full)).alias("pos_id")))
     sizes = ranked.groupBy("label").agg(F.count(F.lit(1)).alias("s"))
     wlab = Window.orderBy("label")  # bounded: one row per label
     wlab_full = wlab.rowsBetween(Window.unboundedPreceding,
@@ -458,8 +453,7 @@ def preference_pairs(spark, sf_dir):
         "doc_id", "source", "score",
         F.row_number().over(wb).alias("r_best"),
         F.row_number().over(ww).alias("r_worst"),
-        F.count(F.lit(1)).over(wn).alias("n")),
-        level=PER_CORPUS)  # one narrow row per doc
+        F.count(F.lit(1)).over(wn).alias("n")))  # one narrow row per doc
     b = ranked.alias("b")
     w = ranked.alias("w")
     return (
@@ -570,7 +564,7 @@ MIXTURE_BUDGET = 300
 MIXTURE_APPLY_SQL = f"""
 WITH src AS (
   SELECT source, count(*) AS n_docs,
-         sum(len({_TOKENS_SQL})) AS n_tokens
+         sum(len({WS_TOKENS_SQL})) AS n_tokens
   FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
   GROUP BY source
@@ -637,8 +631,8 @@ def mixture_apply(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     live = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
             .select("doc_id", "source",
-                    F.size(_tokens_col()).alias("n_tokens")))
-    return (_mixture_quota_pick(live)
+                    F.size(ws_tokens()).alias("n_tokens")))
+    return (mixture_quota_pick(live, MIXTURE_BUDGET)
             .select("doc_id", "source", "pick")
             .orderBy("source", "pick"))
 
@@ -650,7 +644,7 @@ UPSAMPLE_BUDGET = 600
 MIXTURE_UPSAMPLE_SQL = f"""
 WITH src AS (
   SELECT source, count(*) AS n_docs,
-         sum(len({_TOKENS_SQL})) AS n_tokens
+         sum(len({WS_TOKENS_SQL})) AS n_tokens
   FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
   GROUP BY source
@@ -705,7 +699,7 @@ def mixture_upsample(spark, sf_dir):
     counts, e.g. the multilingual-sampling scheme of Conneau & Lample
     2019 and the per-source epoch tables of Llama/GPT-3-class data
     mixes). Each source gets its UNCAPPED largest-remainder quota q
-    (the `_mixture_quotas` builder `mixture_apply` also uses, sums to
+    (the `mixture_quotas` builder `mixture_apply` also uses, sums to
     the budget exactly); selection slot k ∈ 1..q maps to the doc at
     content-addressed md5 rank ((k-1) mod n_docs)+1 with epoch
     (k-1) div n_docs — every doc of the source appears floor(q/n) or
@@ -725,9 +719,8 @@ def mixture_upsample(spark, sf_dir):
     live = track_persist(
         docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
         .select("doc_id", "source",
-                F.size(_tokens_col()).alias("n_tokens")),
-        level=PER_CORPUS)  # 3 narrow cols per doc
-    quota = _mixture_quotas(live, UPSAMPLE_BUDGET)
+                F.size(ws_tokens()).alias("n_tokens")))
+    quota = mixture_quotas(live, UPSAMPLE_BUDGET)
     # guard q >= 1 before sequence(): Spark's sequence(1, 0) yields a
     # DESCENDING [1, 0] rather than the empty series DuckDB produces
     ks = (quota.where(F.col("q") >= 1)
@@ -737,71 +730,12 @@ def mixture_upsample(spark, sf_dir):
     slots = ks.select(
         "source", "n_docs", "k",
         (((F.col("k") - 1) % F.col("n_docs")) + 1).alias("pick_t"))
-    return (_md5_ranked(live).withColumnRenamed("pick", "pick_t")
+    return (md5_ranked(live).withColumnRenamed("pick", "pick_t")
             .join(F.broadcast(slots), ["source", "pick_t"])
             .select("doc_id", "source", F.col("k").alias("pick"),
                     F.floor((F.col("k") - 1) / F.col("n_docs"))
                     .cast("bigint").alias("epoch"))
             .orderBy("source", "pick"))
-
-
-def _mixture_quotas(live, budget: int):
-    """The largest-remainder temperature-quota table over any
-    (doc_id, source, n_tokens) frame: (source, n_docs, q) where q is
-    the UNCAPPED integer quota (sums to ``budget`` by construction) —
-    `_mixture_quota_pick` caps at n_docs for the sampling form,
-    `mixture_upsample` keeps the excess as extra epochs."""
-    src = live.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"))
-    wall = Window.partitionBy()  # bounded: one row per source
-    scaled = F.pow(F.col("n_tokens"), F.lit(TEMP_ALPHA))
-    alloc = src.select(
-        "source", "n_docs", "n_tokens",
-        (scaled / F.sum(scaled).over(wall) * budget)
-        .alias("quota_f"))
-    based = alloc.select(
-        "source", "n_docs", "n_tokens",
-        F.floor("quota_f").cast("bigint").alias("base_q"),
-        F.round(F.col("quota_f") - F.floor("quota_f"), 6).alias("rem"))
-    wrem = Window.partitionBy().orderBy(
-        F.col("rem").desc(), F.col("n_tokens").desc(), "source")
-    lr = based.select(
-        "source", "n_docs", "base_q",
-        F.row_number().over(wrem).alias("rr"),
-        (F.lit(budget) - F.sum("base_q").over(wall))
-        .alias("leftover"))
-    return lr.select(
-        "source", "n_docs",
-        (F.col("base_q")
-         + F.when(F.col("rr") <= F.col("leftover"), 1).otherwise(0))
-        .alias("q"))
-
-
-def _md5_ranked(live):
-    """Content-addressed per-source rank (doc_id, source, pick): the
-    stable total order both mixture forms pick from."""
-    wr = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id")
-    return live.select(
-        "doc_id", "source",
-        F.row_number().over(wr).cast("bigint").alias("pick"))
-
-
-def _mixture_quota_pick(live, budget: int = MIXTURE_BUDGET):
-    """The temperature-quota selection shared by `mixture_apply` and the
-    composed `prepare_training_set` (plans/pipeline_queries.py): over any
-    (doc_id, source, n_tokens) frame, allocate per-source
-    largest-remainder quotas of ``budget`` documents (capped at source
-    size) and pick each source's md5-smallest ``quota`` docs. Takes the
-    token count as a COLUMN (not text) so a caller can compute it once,
-    persist the narrow frame, and reuse it across stages. Returns
-    (doc_id, source, pick), unordered."""
-    quota = _mixture_quotas(live, budget).select(
-        "source", F.least(F.col("q"), F.col("n_docs")).alias("q"))
-    return (_md5_ranked(live).join(F.broadcast(quota), "source")
-            .where(F.col("pick") <= F.col("q"))
-            .select("doc_id", "source", "pick"))
 
 
 # --- TextRank token centrality (integer fixed-point PageRank) ---------------
@@ -825,7 +759,7 @@ def _pagerank_sql(iters: int = PAGERANK_ITERS,
     base = (15 * scale) // 100
     sql = f"""
 WITH t AS (
-  SELECT {_TOKENS_SQL} AS l
+  SELECT {WS_TOKENS_SQL} AS l
   FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
 ), bg AS (
@@ -909,11 +843,9 @@ def token_pagerank(spark, sf_dir, iters: int = PAGERANK_ITERS,
     estimates + AQE."""
     docs = load(spark, sf_dir, "documents")
     t = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-         .select(_tokens_col().alias("l")))
+         .select(ws_tokens().alias("l")))
     bg = (t.where(F.size("l") > 1)
-          .select(F.explode(F.expr(
-              "zip_with(slice(l, 1, size(l)-1), slice(l, 2, size(l)-1),"
-              " (a, b) -> struct(a AS w1, b AS w2))")).alias("bg"))
+          .select(F.explode(token_bigrams("l")).alias("bg"))
           .select("bg.w1", "bg.w2")
           .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")))
     # top-V vocabulary cap: distributed TakeOrdered on the aggregated
@@ -997,7 +929,7 @@ _VG_SHARD_SQL = ("(strpos('0123456789abcdef',"
 
 VOCAB_GROWTH_SQL = f"""
 WITH tok AS (
-  SELECT {_VG_SHARD_SQL} AS shard, unnest({_TOKENS_SQL}) AS w
+  SELECT {_VG_SHARD_SQL} AS shard, unnest({WS_TOKENS_SQL}) AS w
   FROM documents
   WHERE text IS NOT NULL AND trim(text) <> ''
 ), occ AS (
@@ -1058,7 +990,7 @@ def vocab_growth_curve(spark, sf_dir):
     shard = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1),
                     16, 10).cast("int"))
     tok = docs.select(shard.alias("shard"),
-                      F.explode(_tokens_col()).alias("w"))
+                      F.explode(ws_tokens()).alias("w"))
     # Round-18 optimization (guide §2.3/§2.4): one persisted (shard, type)
     # count table feeds both outputs — token mass per shard is sum(c),
     # first-seen types are min(shard) per type — instead of two
@@ -1178,7 +1110,7 @@ def token_zipf_fit(spark, sf_dir):
 
 HAPAX_SQL = f"""
 WITH tok AS (
-  SELECT source, unnest({_TOKENS_SQL}) AS w
+  SELECT source, unnest({WS_TOKENS_SQL}) AS w
   FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
 ), tf AS (
   SELECT source, w, count(*) AS c FROM tok GROUP BY source, w
@@ -1210,7 +1142,7 @@ def token_hapax_rate(spark, sf_dir):
     global, no window; the same two-agg shape as corpus_token_entropy."""
     docs = load(spark, sf_dir, "documents").where(
         F.col("text").isNotNull() & (F.trim("text") != ""))
-    tf = (docs.select("source", F.explode(_tokens_col()).alias("w"))
+    tf = (docs.select("source", F.explode(ws_tokens()).alias("w"))
           .groupBy("source", "w").agg(F.count(F.lit(1)).alias("c")))
     hapax = F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
     return (tf.groupBy("source")
@@ -1227,7 +1159,7 @@ def token_hapax_rate(spark, sf_dir):
 
 TRIANGLE_SQL = f"""
 WITH t AS (
-  SELECT {_TOKENS_SQL} AS l
+  SELECT {WS_TOKENS_SQL} AS l
   FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
 ), bg AS (
   SELECT z.bg[1] AS w1, z.bg[2] AS w2
@@ -1291,11 +1223,9 @@ def graph_triangle_count(spark, sf_dir):
     vocabulary-bounded edge table; the corpus itself is touched once."""
     docs = load(spark, sf_dir, "documents")
     t = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-         .select(_tokens_col().alias("l")))
+         .select(ws_tokens().alias("l")))
     bg = (t.where(F.size("l") > 1)
-          .select(F.explode(F.expr(
-              "zip_with(slice(l, 1, size(l)-1), slice(l, 2, size(l)-1),"
-              " (a, b) -> struct(a AS w1, b AS w2))")).alias("bg"))
+          .select(F.explode(token_bigrams("l")).alias("bg"))
           .select("bg.w1", "bg.w2")
           .where(F.col("w1") != F.col("w2")))
     ed = track_persist(
@@ -1344,7 +1274,7 @@ def graph_triangle_count(spark, sf_dir):
 
 BURSTINESS_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS w
+  SELECT doc_id, unnest({WS_TOKENS_SQL}) AS w
   FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
 ), per_doc AS (
   SELECT w, doc_id, CAST(count(*) AS BIGINT) AS c
@@ -1388,7 +1318,7 @@ def token_burstiness(spark, sf_dir):
     quadratic, per-term state is three integers."""
     docs = load(spark, sf_dir, "documents").where(
         F.col("text").isNotNull() & (F.trim("text") != ""))
-    per_doc = (docs.select("doc_id", F.explode(_tokens_col()).alias("w"))
+    per_doc = (docs.select("doc_id", F.explode(ws_tokens()).alias("w"))
                .groupBy("w", "doc_id")
                .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
     stats = (per_doc.groupBy("w")
@@ -1407,7 +1337,7 @@ def token_burstiness(spark, sf_dir):
 
 ASSORT_SQL = f"""
 WITH t AS (
-  SELECT {_TOKENS_SQL} AS l
+  SELECT {WS_TOKENS_SQL} AS l
   FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
 ), bg AS (
   SELECT z.bg[1] AS w1, z.bg[2] AS w2
@@ -1468,11 +1398,9 @@ def graph_degree_assortativity(spark, sf_dir):
     wedge blowup: the join fan-out is exactly 2 rows per edge)."""
     docs = load(spark, sf_dir, "documents")
     t = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-         .select(_tokens_col().alias("l")))
+         .select(ws_tokens().alias("l")))
     bg = (t.where(F.size("l") > 1)
-          .select(F.explode(F.expr(
-              "zip_with(slice(l, 1, size(l)-1), slice(l, 2, size(l)-1),"
-              " (a, b) -> struct(a AS w1, b AS w2))")).alias("bg"))
+          .select(F.explode(token_bigrams("l")).alias("bg"))
           .select("bg.w1", "bg.w2")
           .where(F.col("w1") != F.col("w2")))
     ed = track_persist(
@@ -1516,99 +1444,7 @@ def graph_degree_assortativity(spark, sf_dir):
 
 # --- Winnowing document fingerprints (Schleimer/Wilkerson/Aiken MOSS) -------
 
-from spark_sentiment_spark.plans.sketch_queries import _hexpoly  # noqa: E402
-
-_WN_K = 3   # tokens per k-gram
-_WN_W = 4   # k-grams per winnowing window
-# 48-bit integer hash of the k-gram text: first 12 md5 hex chars as an
-# instr() polynomial — valid and identical in Spark SQL and DuckDB.
-_WN_HASH = _hexpoly("md5(kg)", 1, 12)
-
-def _winnow_selected(docs):
-    """(doc_id, h, s) rows: every k-gram hash with s=1 where the
-    position is some window's rightmost minimum — the Spark twin of the
-    shared `_WINNOW_CTE` chain (see doc_winnowing's docstring for the
-    reach derivation)."""
-    docs = docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-    t = (docs.select("doc_id", _tokens_col().alias("l"))
-         .where(F.size("l") >= _WN_K))
-    kg = (t.select(
-        "doc_id",
-        F.posexplode(F.expr(
-            f"transform(sequence(1, size(l) - {_WN_K - 1}),"
-            f" i -> array_join(slice(l, i, {_WN_K}), ' '))"))
-        .alias("pos0", "kg"))
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"),
-                F.expr(_WN_HASH).alias("h")))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    wm = Window.partitionBy("doc_id")
-    g1, g2, g3 = (F.lag("h", i).over(w) for i in (1, 2, 3))
-    e1, e2, e3 = (F.lead("h", i).over(w) for i in (1, 2, 3))
-    h = F.col("h")
-
-    def ind(cond):
-        return F.coalesce(cond.cast("int"), F.lit(0))
-
-    c1, c2, c3 = ind(g1 >= h), ind(g2 >= h), ind(g3 >= h)
-    d1, d2, d3 = ind(e1 > h), ind(e2 > h), ind(e3 > h)
-    a = c1 + c1 * c2 + c1 * c2 * c3
-    b = d1 + d1 * d2 + d1 * d2 * d3
-    m = F.count(F.lit(1)).over(wm)
-    return kg.select(
-        "doc_id", "h",
-        (F.greatest(F.lit(1), F.col("pos") - a)
-         <= F.least(F.col("pos"), m - (_WN_W - 1),
-                    F.col("pos") + b - (_WN_W - 1)))
-        .cast("int").alias("s"))
-
-
-# Shared CTE chain: tokenize → k-gram hashes → lag/lead reach → per-
-# position selection flag. doc_winnowing aggregates it per doc;
-# dedup_winnowing_pairs joins selected fingerprints across docs.
-_WINNOW_CTE = f"""
-WITH t AS (
-  SELECT doc_id, {_TOKENS_SQL} AS l FROM documents
-  WHERE text IS NOT NULL AND trim(text) <> ''
-), idx AS (
-  SELECT doc_id, l, unnest(generate_series(1, len(l) - {_WN_K - 1})) AS pos
-  FROM t WHERE len(l) >= {_WN_K}
-), kg AS (
-  SELECT doc_id, pos,
-         {_hexpoly(f"md5(array_to_string(l[pos:pos+{_WN_K - 1}], ' '))", 1, 12)} AS h
-  FROM idx
-), win AS (
-  SELECT doc_id, pos, h,
-         lag(h, 1) OVER w AS g1, lag(h, 2) OVER w AS g2,
-         lag(h, 3) OVER w AS g3,
-         lead(h, 1) OVER w AS e1, lead(h, 2) OVER w AS e2,
-         lead(h, 3) OVER w AS e3,
-         count(*) OVER (PARTITION BY doc_id) AS m
-  FROM kg
-  WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-), reach AS (
-  SELECT doc_id, pos, h, m,
-         coalesce(CAST(g1 >= h AS INT), 0)
-           + coalesce(CAST(g1 >= h AS INT), 0)
-             * coalesce(CAST(g2 >= h AS INT), 0)
-           + coalesce(CAST(g1 >= h AS INT), 0)
-             * coalesce(CAST(g2 >= h AS INT), 0)
-             * coalesce(CAST(g3 >= h AS INT), 0) AS a,
-         coalesce(CAST(e1 > h AS INT), 0)
-           + coalesce(CAST(e1 > h AS INT), 0)
-             * coalesce(CAST(e2 > h AS INT), 0)
-           + coalesce(CAST(e1 > h AS INT), 0)
-             * coalesce(CAST(e2 > h AS INT), 0)
-             * coalesce(CAST(e3 > h AS INT), 0) AS b
-  FROM win
-), sel AS (
-  SELECT doc_id, h,
-         CASE WHEN greatest(1, pos - a)
-                   <= least(pos, m - {_WN_W - 1}, pos + b - {_WN_W - 1})
-              THEN 1 ELSE 0 END AS s
-  FROM reach
-)"""
-
-WINNOW_SQL = _WINNOW_CTE + """
+WINNOW_SQL = WINNOW_CTE + """
 SELECT doc_id,
        CAST(count(*) AS BIGINT) AS n_kgrams,
        CAST(sum(s) AS BIGINT) AS n_fp,
@@ -1642,7 +1478,7 @@ def doc_winnowing(spark, sf_dir):
     whole algorithm; equivalence to the window-by-window definition is
     pinned against a brute-force reference in
     tests/test_round10_queries.py. The 48-bit k-gram hash is the
-    engine-shared md5/instr polynomial (`sketch_queries._hexpoly`), so
+    engine-shared md5/instr polynomial (`operators.sketch.hexpoly`), so
     the DuckDB twin replays fingerprint SETS bit-for-bit (count, min,
     sum per doc), not just counts.
 
@@ -1651,7 +1487,7 @@ def doc_winnowing(spark, sf_dir):
     one doc-sized hash agg; nothing crosses documents, so the operator
     partitions perfectly at any corpus size. W and K are the standard
     MOSS defaults scaled to the fixture's short docs."""
-    sel = _winnow_selected(load(spark, sf_dir, "documents"))
+    sel = winnow_selected(load(spark, sf_dir, "documents"))
     return (sel.groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_kgrams"),
                  F.sum("s").cast("bigint").alias("n_fp"),
@@ -1662,7 +1498,7 @@ def doc_winnowing(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-WINNOW_PAIRS_SQL = _WINNOW_CTE + """
+WINNOW_PAIRS_SQL = WINNOW_CTE + """
 , fp AS (
   SELECT DISTINCT doc_id, h FROM sel WHERE s = 1
 ), hot AS (
@@ -1713,12 +1549,12 @@ def dedup_winnowing_pairs(spark, sf_dir):
     construction — the documented artifact class); its scale posture is
     the cap plus doc_winnowing's linear selection slope.
 
-    Oracle: the shared `_WINNOW_CTE` chain extended with the same cap,
+    Oracle: the shared `WINNOW_CTE` chain extended with the same cap,
     distinct, pair join and integer ppm — fingerprint sets replay
     bit-for-bit, so the pair list and overlap values hash-match."""
-    fp = (_winnow_selected(load(spark, sf_dir, "documents"))
+    fp = (winnow_selected(load(spark, sf_dir, "documents"))
           .where(F.col("s") == 1).select("doc_id", "h").distinct())
-    fp = track_persist(fp, level=PER_CORPUS)  # per (doc, fingerprint)
+    fp = track_persist(fp)  # per (doc, fingerprint)
     hot = (fp.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
            .where(F.col("df") > 50).select("h"))
     # No broadcast hint on the hot list: its size is bounded only by
@@ -1727,15 +1563,13 @@ def dedup_winnowing_pairs(spark, sf_dir):
     # broadcast limit. AQE broadcasts it while its measured size fits
     # (it does at every test SF) and falls back to a shuffled anti-join
     # beyond that, which is the correct degradation.
-    keep = track_persist(fp.join(hot, "h", "left_anti"),
-                         level=PER_CORPUS)  # per (doc, fingerprint)
+    keep = track_persist(fp.join(hot, "h", "left_anti"))
     # Round-18 optimization (guide §2.4): nd feeds both final join sides
     # (na, nb) — persist the narrow per-doc count so the aggregation over
     # the cached keep frame runs once instead of twice.
     nd = track_persist(
         keep.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint")
-                                   .alias("nfp")),
-        level=PER_CORPUS)  # 2 longs per doc
+                                   .alias("nfp")))  # 2 longs per doc
     a = keep.select(F.col("doc_id").alias("doc_a"), "h")
     b = keep.select(F.col("doc_id").alias("doc_b"), "h")
     pr = (a.join(b, "h")
@@ -1753,7 +1587,7 @@ def dedup_winnowing_pairs(spark, sf_dir):
             .orderBy("doc_a", "doc_b"))
 
 
-WINNOW_INCR_SQL = _WINNOW_CTE + """
+WINNOW_INCR_SQL = WINNOW_CTE + """
 , fp AS (
   SELECT DISTINCT doc_id, h FROM sel WHERE s = 1
 ), hot AS (
@@ -1796,7 +1630,7 @@ def dedup_winnowing_incremental(spark, sf_dir):
     updates them on append), so the incremental pair set provably
     equals `dedup_winnowing_pairs`' full-corpus output restricted to
     batch-touching pairs — pinned in tests/test_round11_queries.py and
-    replayed bit-for-bit by the shared `_WINNOW_CTE` oracle with the
+    replayed bit-for-bit by the shared `WINNOW_CTE` oracle with the
     same restriction. No broadcast hint on the hot list (it grows
     linearly with the corpus; AQE broadcasts while it fits).
 
@@ -1807,9 +1641,9 @@ def dedup_winnowing_incremental(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 5 == 4
     # Round-19 optimization (guide §2.4): the batch and index sides used
-    # to run _winnow_selected on complementary doc slices — TWO corpus
+    # to run winnow_selected on complementary doc slices — TWO corpus
     # scans, each paying the k-gram explode + two window passes.
-    # Selection is doc-local (every window in _winnow_selected is
+    # Selection is doc-local (every window in winnow_selected is
     # partitioned by doc_id), so winnow(slice) ≡ winnow(corpus) filtered
     # to the slice: one winnow pass fills one cache, and both sides are
     # cheap filters over it. The doc-locality is also what keeps the
@@ -1819,9 +1653,8 @@ def dedup_winnowing_incremental(spark, sf_dir):
     # same thing without paying the corpus pass twice. The hot-list agg
     # also now reads the cache directly (fp IS fp_new ∪ fp_old).
     fp = track_persist(
-        _winnow_selected(docs)
-        .where(F.col("s") == 1).select("doc_id", "h").distinct(),
-        level=PER_CORPUS)  # per (doc, fingerprint)
+        winnow_selected(docs)
+        .where(F.col("s") == 1).select("doc_id", "h").distinct())
     hot = track_persist(
         fp.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") > 50).select("h"))
@@ -1829,8 +1662,7 @@ def dedup_winnowing_incremental(spark, sf_dir):
     # (the cross probe and both intra sides) — persist it so the hot-list
     # anti-join runs once instead of three times.
     keep = fp.join(hot, "h", "left_anti")
-    keep_new = track_persist(keep.where(is_new),
-                             level=PER_CORPUS)  # per (batch doc, fp)
+    keep_new = track_persist(keep.where(is_new))  # per (batch doc, fp)
     keep_old = keep.where(~is_new)
     nw, od = keep_new.alias("nw"), keep_old.alias("od")
     cross = (nw.join(od, F.col("nw.h") == F.col("od.h"))
@@ -1954,8 +1786,7 @@ def _dsir_log_weights(docs):
         grams.groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).alias("g"),
              F.max(F.when(F.col("lang") == "en", 1).otherwise(0))
-             .alias("is_target")),
-        level=PER_CORPUS)  # <= DSIR_BUCKETS rows per doc
+             .alias("is_target")))  # <= DSIR_BUCKETS rows per doc
     stats = (dbc.groupBy("b")
              .agg(F.sum(F.when(F.col("is_target") == 1, F.col("g"))
                         .otherwise(0)).alias("ct"),

@@ -8,114 +8,19 @@ quadratic by nature, and excluded from the bench set."""
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.plans.registry import (PER_CORPUS, load,
-                                                  register, track_persist)
-
-def _shingled(docs, id_col: str = "doc_id", text_col: str = "text"):
-    """(id, shingle) rows: 3-word shingles over the lowercased text (whole
-    text as a single shingle when shorter than 3 tokens) — the unit set for
-    Jaccard/MinHash. The token array is projected ONCE and indexed inside the
-    transform lambda (t[i..i+2]); slicing a freshly re-split array per
-    position would be O(len²) per document."""
-    toks = F.split(F.lower(F.col(text_col)), " ", -1)
-    sh = F.when(
-        F.size(F.col("__t")) >= 3,
-        F.expr(
-            "transform(sequence(0, size(__t) - 3),"
-            " i -> concat(__t[i], ' ', __t[i + 1], ' ', __t[i + 2]))"
-        ),
-    ).otherwise(F.array(F.array_join(F.col("__t"), " ")))
-    return (
-        docs.select(id_col, toks.alias("__t"))
-        .select(id_col, F.explode(F.array_distinct(sh)).alias("w"))
-    )
-
-
-_MINHASH_P = (1 << 31) - 1  # Mersenne prime: a*h+b < 2^62, safe in int64
-
-
-def _perm_constants(n_hashes: int = 32, seed: int = 42):
-    """The (a_i, b_i) permutation constants — shared by the Spark signature
-    stage AND the generated DuckDB oracle SQL, so both engines compute the
-    *identical* signatures."""
-    import random
-
-    rng = random.Random(seed)
-    return [(rng.randrange(1, _MINHASH_P), rng.randrange(0, _MINHASH_P))
-            for _ in range(n_hashes)]
-
-
-def _minhash_signatures(docs, n_hashes: int = 32, seed: int = 42,
-                        id_col: str = "doc_id", text_col: str = "text"):
-    """(id, mh0..mh{n-1}) MinHash signature rows via ``mapInPandas``: each
-    document's 3-word shingle set and all n mins are computed LOCALLY
-    inside its Arrow batch (one k×n numpy outer-product min per doc), so
-    the token stream is never materialized as rows and never SHUFFLED —
-    the per-doc form is embarrassingly parallel. Deterministic permutation
-    parameters (fixed seed); the base hash is the first 8 hex chars of
-    md5(shingle) masked to 31 bits — engine-independent (DuckDB computes
-    the same value as ('0x'||substr(md5(w),1,8))::BIGINT & 0x7FFFFFFF),
-    which is what makes the exact-hash oracle possible."""
-    import hashlib
-
-    import numpy as np
-
-    p = _MINHASH_P
-    perms = _perm_constants(n_hashes, seed)
-    A = np.array([a for a, _ in perms], dtype=np.int64)
-    B = np.array([b for _, b in perms], dtype=np.int64)
-
-    sig_schema = f"{id_col} long, " + ", ".join(
-        f"mh{i} long" for i in range(n_hashes))
-
-    def _signatures(batches):
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                toks = text.lower().split(" ")
-                if len(toks) >= 3:
-                    sh = {" ".join(toks[i:i + 3])
-                          for i in range(len(toks) - 2)}
-                else:
-                    sh = {" ".join(toks)}
-                h = np.fromiter(
-                    (int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-                     & 0x7FFFFFFF for s in sh),
-                    dtype=np.int64, count=len(sh))
-                sigs.append(((h[:, None] * A + B) % p).min(axis=0))
-                ids.append(doc_id)
-            S = np.vstack(sigs) if sigs else np.empty((0, n_hashes), np.int64)
-            yield pd.DataFrame(
-                {id_col: ids,
-                 **{f"mh{i}": S[:, i] for i in range(n_hashes)}})
-
-    return docs.select(id_col, text_col).mapInPandas(_signatures, sig_schema)
-
-
-def _band_buckets(mins, n_hashes: int, n_bands: int, id_col: str = "doc_id"):
-    """(id, band_id, band_hash) LSH banding rows via a single posexplode —
-    no n_bands-way union. Docs sharing any (band_id, band_hash) bucket are
-    candidate pairs; the bucket join is the LSH scale path (no all-pairs
-    product)."""
-    rows_per_band = n_hashes // n_bands
-    # The bucket key is the '-'-joined minhash tuple itself (exact band
-    # equality, zero collision risk) rather than a second-level hash —
-    # and, being plain decimal strings, it is engine-independent, so the
-    # DuckDB oracle reproduces the buckets bit-for-bit.
-    band_hashes = F.array(*[
-        F.concat_ws("-", *[F.col(f"mh{band * rows_per_band + r}")
-                           for r in range(rows_per_band)])
-        for band in range(n_bands)
-    ])
-    return mins.select(
-        id_col, F.posexplode(band_hashes).alias("band_id", "bh"))
+from spark_sentiment_spark.operators.minhash import (band_buckets,
+                                                     band_pairs,
+                                                     est_jaccard_sql,
+                                                     lsh_cand_sql,
+                                                     minhash_oracle_sql,
+                                                     minhash_signatures,
+                                                     probe_minhash_oracle_sql,
+                                                     scored_pairs, shingled)
+from spark_sentiment_spark.plans.registry import (load, register,
+                                                  track_persist)
 
 
 EXACT_SQL = """
@@ -197,8 +102,7 @@ def _jaccard_pair_frame(docs):
     # both self-join sides — persist the distinct shingle table so the
     # shingling (explode + distinct shuffle over full text) runs once,
     # the same shape decontaminate_minhash persists.
-    tok = track_persist(_shingled(docs).distinct(),
-                        level=PER_CORPUS)  # per (doc, shingle) row
+    tok = track_persist(shingled(docs).distinct())  # per (doc, shingle) row
     sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = tok.alias("a")
     b = tok.alias("b")
@@ -221,82 +125,7 @@ def _jaccard_pair_frame(docs):
     )
 
 
-def _lsh_cand_sql(tail: str, cand_where: str = "", n_hashes: int = 32,
-                  n_bands: int = 8, seed: int = 42) -> str:
-    """DuckDB twin of the MinHash-LSH candidate stage, generated from the
-    SAME permutation constants as the Spark signature stage: md5-derived
-    31-bit shingle hashes → (a*h+b) mod p mins (``sig``) → '-'-joined band
-    keys → bucket self-join (``cand``, narrowed by ``cand_where``). Every
-    step is engine-independent, so the value-hash check is exact. ``tail``
-    follows ``cand``'s closing paren: further CTEs or the final SELECT,
-    scoring pairs with `_est_jaccard_sql`."""
-    p = _MINHASH_P
-    perms = _perm_constants(n_hashes, seed)
-    mh_cols = ",\n         ".join(
-        f"min((h * {a} + {b}) % {p}) AS mh{i}"
-        for i, (a, b) in enumerate(perms))
-    rpb = n_hashes // n_bands
-    band_selects = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {band} AS band_id, concat_ws('-', "
-        + ", ".join(f"mh{band * rpb + r}" for r in range(rpb))
-        + ") AS bh FROM sig"
-        for band in range(n_bands))
-    where = f"\n  WHERE {cand_where}" if cand_where else ""
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t
-  FROM documents WHERE text IS NOT NULL
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN list_transform(generate_series(1, len(t) - 2),
-                                  i -> array_to_string(t[i:i+2], ' '))
-              ELSE [array_to_string(t, ' ')] END AS shingles
-  FROM toks
-), shd AS (
-  SELECT DISTINCT doc_id, unnest(shingles) AS w FROM sh
-), hv AS (
-  SELECT doc_id, ('0x' || substr(md5(w), 1, 8))::BIGINT & 2147483647 AS h
-  FROM shd
-), sig AS (
-  SELECT doc_id,
-         {mh_cols}
-  FROM hv GROUP BY doc_id
-), bands AS (
-{band_selects}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.bh = b.bh AND a.doc_id < b.doc_id{where}
-){tail}"""
-
-
-def _est_jaccard_sql(n_hashes: int = 32) -> str:
-    """Signature-agreement Jaccard estimate of a ``cand`` pair joined to
-    ``sig`` as ``sa``/``sb``, rounded like the Spark side."""
-    agree = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
-                       for i in range(n_hashes))
-    return f"round(({agree}) / {float(n_hashes)}, 4)"
-
-
-def _minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
-                        seed: int = 42, threshold: float = 0.5,
-                        cand_where: str = "", extra_cols: str = "") -> str:
-    """DuckDB twin of the full MinHash-LSH pipeline: every candidate pair
-    (narrowed by ``cand_where``) whose estimate clears ``threshold``."""
-    est = _est_jaccard_sql(n_hashes)
-    return _lsh_cand_sql(f"""
-SELECT doc_a, doc_b,
-       {est} AS est_jaccard{extra_cols}
-FROM cand
-JOIN sig sa ON doc_a = sa.doc_id
-JOIN sig sb ON doc_b = sb.doc_id
-WHERE {est} >= {threshold}
-ORDER BY doc_a, doc_b
-""", cand_where, n_hashes, n_bands, seed)
-
-
-@register("dedup_minhash_lsh", bench=True, sql=_minhash_oracle_sql(),
+@register("dedup_minhash_lsh", bench=True, sql=minhash_oracle_sql(),
           tags=("dedup",))
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash near-dup candidate pairs at scale: shingle → minhash
@@ -325,44 +154,16 @@ def dedup_minhash_lsh(spark, sf_dir):
     """
     docs = load(spark, sf_dir, "documents")
     n_hashes, n_bands = 32, 8
-    mins = track_persist(_minhash_signatures(docs, n_hashes),
-                         level=PER_CORPUS)  # 33 longs per doc
+    mins = track_persist(minhash_signatures(docs, n_hashes))
     # NOT persisted (round-18 A/B): both self-join sides re-derive the
     # band explode from the cached signatures, but that derivation is a
     # cheap projection over cached rows — a min-of-10 A/B measured the
     # persist's cache-fill barrier at +9% min / +7% median on this bench
     # query, so the recompute wins.
-    pairs = _band_buckets(mins, n_hashes, n_bands)
-    # Candidate pairs: docs sharing any band bucket (bucket-local join, the
-    # LSH scale path — no all-pairs product).
-    a = pairs.alias("a")
-    b = pairs.alias("b")
-    cand = (
-        a.join(b, (F.col("a.bh") == F.col("b.bh"))
-               & (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(band_buckets(mins, n_hashes, n_bands))
     # Estimate similarity = fraction of agreeing minhashes, read off the
     # cached signatures.
-    am = mins.alias("am")
-    bm = mins.alias("bm")
-    agree = sum(
-        F.when(F.col(f"am.mh{i}") == F.col(f"bm.mh{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    )
-    return (
-        cand.join(am, F.col("doc_a") == F.col("am.doc_id"))
-        .join(bm, F.col("doc_b") == F.col("bm.doc_id"))
-        .select(
-            "doc_a", "doc_b",
-            F.round(agree / F.lit(float(n_hashes)), 4).alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= 0.5)
-        .orderBy("doc_a", "doc_b")
-    )
+    return scored_pairs(cand, mins, n_hashes).orderBy("doc_a", "doc_b")
 
 
 def _incr_minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
@@ -372,7 +173,7 @@ def _incr_minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
     (doc_id % 5 = 4) — exactly the pair set the incremental plan
     generates, since pairs entirely inside the already-indexed corpus were
     emitted by earlier batches."""
-    return _minhash_oracle_sql(
+    return minhash_oracle_sql(
         n_hashes, n_bands, seed, threshold,
         cand_where="a.doc_id % 5 = 4 OR b.doc_id % 5 = 4",
         extra_cols=""",
@@ -419,8 +220,7 @@ def dedup_incremental_minhash(spark, sf_dir):
     # sig(slice) ≡ sig(corpus) filtered — ONE corpus scan + signature
     # pass fills one cache and both sides are filters over it, instead of
     # two full passes each paying the md5-shingle fold.
-    sig = track_persist(_minhash_signatures(docs, n_hashes),
-                        level=PER_CORPUS)  # 33 longs per doc
+    sig = track_persist(minhash_signatures(docs, n_hashes))  # 33 longs per doc
     sig_new = sig.where(is_new)
     sig_old = sig.where(~is_new)
     # NOT persisted (round-18 A/B): bands_new feeds three branches, but
@@ -429,8 +229,8 @@ def dedup_incremental_minhash(spark, sf_dir):
     # (n_bands× rows) frame behind a cache-fill barrier. Min-of-10 A/B:
     # persist +18% min (2.327 → 2.740 s at sf0.1), same verdict as
     # dedup_minhash_lsh's identical pattern. Recompute wins.
-    bands_new = _band_buckets(sig_new, n_hashes, n_bands)
-    bands_old = _band_buckets(sig_old, n_hashes, n_bands)
+    bands_new = band_buckets(sig_new, n_hashes, n_bands)
+    bands_old = band_buckets(sig_old, n_hashes, n_bands)
     nb, ob = bands_new.alias("nb"), bands_old.alias("ob")
     cross = (nb.join(ob, (F.col("nb.bh") == F.col("ob.bh"))
                      & (F.col("nb.band_id") == F.col("ob.band_id")))
@@ -445,18 +245,8 @@ def dedup_incremental_minhash(spark, sf_dir):
                      F.col("nb2.doc_id").alias("doc_b"),
                      F.lit(0).cast("long").alias("vs_corpus")))
     cand = cross.unionByName(intra).distinct()
-    sigs = sig  # the fused cache IS new ∪ old
-    am, bm = sigs.alias("am"), sigs.alias("bm")
-    agree = sum(
-        F.when(F.col(f"am.mh{i}") == F.col(f"bm.mh{i}"), 1).otherwise(0)
-        for i in range(n_hashes))
-    return (cand.join(am, F.col("doc_a") == F.col("am.doc_id"))
-            .join(bm, F.col("doc_b") == F.col("bm.doc_id"))
-            .select("doc_a", "doc_b",
-                    F.round(agree / F.lit(float(n_hashes)), 4)
-                    .alias("est_jaccard"),
-                    "vs_corpus")
-            .where(F.col("est_jaccard") >= 0.5)
+    # the fused cache IS new ∪ old
+    return (scored_pairs(cand, sig, n_hashes, "vs_corpus")
             .orderBy("doc_a", "doc_b"))
 
 
@@ -623,8 +413,7 @@ def dedup_clusters(spark, sf_dir):
         .select("doc_id", F.md5(F.lower("text")).alias("h"))
         .withColumn("rep", F.min("doc_id").over(wg))
         .withColumn("gsize", F.count(F.lit(1)).over(wg))
-        .select("doc_id", "rep", "gsize"),
-        level=PER_CORPUS)  # 3 longs per doc
+        .select("doc_id", "rep", "gsize"))  # 3 longs per doc
     reps = member.where(F.col("doc_id") == F.col("rep")).select("doc_id")
     pairs = _jaccard_pair_frame(docs.join(reps, "doc_id")) \
         .select("doc_a", "doc_b")
@@ -689,13 +478,11 @@ def decontaminate_minhash(spark, sf_dir):
     n_hashes, n_bands = 32, 16
     is_eval = F.col("doc_id") % 11 == 0
 
-    mins = track_persist(_minhash_signatures(docs, n_hashes),
-                         level=PER_CORPUS)  # 33 longs per doc
+    mins = track_persist(minhash_signatures(docs, n_hashes))
     # Round-18 optimization (guide §2.4): the train and eval sides each
     # re-derived the band explode from the cached signatures — persist the
     # narrow (doc_id, band_id, bh) frame so the banding runs once.
-    buckets = track_persist(_band_buckets(mins, n_hashes, n_bands),
-                            level=PER_CORPUS)  # n_bands rows per doc
+    buckets = track_persist(band_buckets(mins, n_hashes, n_bands))
     t = buckets.where(~is_eval).alias("t")
     e = buckets.where(is_eval).alias("e")
     cand = (t.join(e, (F.col("t.bh") == F.col("e.bh"))
@@ -710,14 +497,12 @@ def decontaminate_minhash(spark, sf_dir):
     # Round-18 optimization (guide §2.4): the distinct shingle table
     # feeds three branches (sizes + both intersect sides) — persist it
     # so the corpus is shingled once instead of three times.
-    tok = track_persist(_shingled(docs).distinct(),
-                        level=PER_CORPUS)  # per (doc, shingle) row
+    tok = track_persist(shingled(docs).distinct())  # per (doc, shingle) row
     # Round-18 optimization (guide §2.4): sizes feeds both final join
     # sides (st, se) — persist the narrow per-doc count so the aggregation
     # over the cached shingle table runs once.
     sizes = track_persist(
-        tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")),
-        level=PER_CORPUS)  # 2 longs per doc
+        tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")))
     ta, ea = tok.alias("ta"), tok.alias("ea")
     inter = (cand
              .join(ta, F.col("train_doc") == F.col("ta.doc_id"))
@@ -887,8 +672,7 @@ def char_ngram_stats(docs, n: int = CHAR_NGRAM_LEN):
             F.explode(F.expr(
                 f"transform(sequence(1, length(text) - {n} + 1),"
                 f" i -> substring(text, i, {n}))")).alias("gram"))
-        .distinct(),
-        level=PER_CORPUS)  # per distinct (doc, char-gram) — text-sized
+        .distinct())  # per distinct (doc, char-gram) — text-sized
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("nd"))
     shared = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0))
     return (grams.join(counts, "gram")
@@ -1020,8 +804,7 @@ def dedup_simjoin_prefix(spark, sf_dir):
     oracle uses."""
     docs = load(spark, sf_dir, "documents").where(
         F.col("text").isNotNull() & (F.trim("text") != ""))
-    tok = track_persist(_simjoin_grams(docs),
-                        level=PER_CORPUS)  # per (doc, gram) row
+    tok = track_persist(_simjoin_grams(docs))  # per (doc, gram) row
     cand = _simjoin_candidates(tok)
     ta = tok.select(F.col("doc_id").alias("doc_a"), "w")
     tb = tok.select(F.col("doc_id").alias("doc_b"), "w")
@@ -1100,8 +883,7 @@ def dedup_containment_prefix(spark, sf_dir):
     rarity order again drops stopword-grade grams from every prefix."""
     docs = load(spark, sf_dir, "documents").where(
         F.col("text").isNotNull() & (F.trim("text") != ""))
-    tok = track_persist(_simjoin_grams(docs),
-                        level=PER_CORPUS)  # per (doc, gram) row
+    tok = track_persist(_simjoin_grams(docs))  # per (doc, gram) row
     dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     wdoc = Window.partitionBy("doc_id").orderBy("df", "w")
     wall = Window.partitionBy("doc_id")
@@ -1345,8 +1127,7 @@ def dedup_sentence_exact(spark, sf_dir):
                     F.posexplode(F.split("text", r"\. ", -1))
                     .alias("idx0", "s"))
         .where(F.col("s") != "")
-        .select("doc_id", (F.col("idx0") + 1).alias("idx"), "s"),
-        level=PER_CORPUS)  # per (doc, sentence) row — text-sized
+        .select("doc_id", (F.col("idx0") + 1).alias("idx"), "s"))
     first = sent.groupBy("s").agg(
         F.min(F.struct("doc_id", "idx")).alias("f"))
     kept = (sent.join(first, "s")
@@ -1380,11 +1161,11 @@ def _cross_source_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
     """DuckDB twin of the provenance-matrix query: the full MinHash-LSH
     pair pipeline joined back to each side's ``source`` and rolled up per
     unordered source pair."""
-    return _lsh_cand_sql(f""", pairs AS (
+    return lsh_cand_sql(f""", pairs AS (
   SELECT doc_a, doc_b FROM cand
   JOIN sig sa ON doc_a = sa.doc_id
   JOIN sig sb ON doc_b = sb.doc_id
-  WHERE {_est_jaccard_sql(n_hashes)} >= {threshold}
+  WHERE {est_jaccard_sql(n_hashes)} >= {threshold}
 )
 SELECT least(da.source, db.source) AS source_a,
        greatest(da.source, db.source) AS source_b,
@@ -1417,32 +1198,15 @@ def dedup_cross_source_pairs(spark, sf_dir):
     broadcast dimension at any corpus size where sources matter."""
     docs = load(spark, sf_dir, "documents")
     n_hashes, n_bands = 32, 8
-    mins = track_persist(_minhash_signatures(docs, n_hashes),
-                         level=PER_CORPUS)  # 33 longs per doc
+    mins = track_persist(minhash_signatures(docs, n_hashes))
     # NOT persisted (round-18 A/B): both self-join sides re-derive the
     # band explode from the CACHED signatures — a cheap projection —
     # while persisting materializes the exploded (n_bands× rows) frame
     # behind a cache-fill barrier. Min-of-10 A/B: persist +25% min
     # (1.534 → 1.921 s at sf0.1, median +54%), same verdict as
     # dedup_minhash_lsh's identical pattern. Recompute wins.
-    bands = _band_buckets(mins, n_hashes, n_bands)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.band_id") == F.col("b.band_id"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    am, bm = mins.alias("am"), mins.alias("bm")
-    agree = sum(
-        F.when(F.col(f"am.mh{i}") == F.col(f"bm.mh{i}"), 1).otherwise(0)
-        for i in range(n_hashes))
-    pairs = (cand.join(am, F.col("doc_a") == F.col("am.doc_id"))
-             .join(bm, F.col("doc_b") == F.col("bm.doc_id"))
-             .select("doc_a", "doc_b",
-                     F.round(agree / F.lit(float(n_hashes)), 4)
-                     .alias("est"))
-             .where(F.col("est") >= 0.5))
+    pairs = scored_pairs(
+        band_pairs(band_buckets(mins, n_hashes, n_bands)), mins, n_hashes)
     da = docs.select(F.col("doc_id").alias("doc_a"),
                      F.col("source").alias("sa"))
     db = docs.select(F.col("doc_id").alias("doc_b"),
@@ -1461,19 +1225,7 @@ def dedup_cross_source_pairs(spark, sf_dir):
 # near-dup, materialized instead of promised) --------------------------------
 
 
-def _probe_minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
-                              seed: int = 42,
-                              threshold: float = 0.5) -> str:
-    """DuckDB twin of the BUCKETED band-index probe: the full-corpus LSH
-    pipeline restricted to pairs with EXACTLY ONE side in the incoming
-    batch (doc_id%5=4) — the new-vs-old probe set; new-vs-new pairs belong
-    to the batch self-join, old-vs-old to earlier batches."""
-    return _minhash_oracle_sql(
-        n_hashes, n_bands, seed, threshold,
-        cand_where="(a.doc_id % 5 = 4) <> (b.doc_id % 5 = 4)")
-
-
-@register("dedup_minhash_bucketed_probe", sql=_probe_minhash_oracle_sql(),
+@register("dedup_minhash_bucketed_probe", sql=probe_minhash_oracle_sql(),
           tags=("dedup", "layout", "pipeline"))
 def dedup_minhash_bucketed_probe(spark, sf_dir):
     """The incremental near-dup's band-index probe routed through an
@@ -1514,8 +1266,7 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
     # class): signatures are per-doc (mapInPandas, doc-local), so ONE
     # corpus signature pass fills one cache and both sides are filters
     # over it — instead of two full md5-shingle passes.
-    sig = track_persist(_minhash_signatures(docs, n_hashes),
-                        level=PER_CORPUS)  # 33 longs per doc
+    sig = track_persist(minhash_signatures(docs, n_hashes))  # 33 longs per doc
     sig_new = sig.where(is_new)
     sig_old = sig.where(~is_new)
 
@@ -1528,10 +1279,10 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
     suffix = os.path.basename(base)
     t_idx = track_temp_table(spark, f"mh_band_index_{suffix}")
     t_bat = track_temp_table(spark, f"mh_band_batch_{suffix}")
-    save_bucketed(keyed(_band_buckets(sig_old, n_hashes, n_bands), "old_id")
+    save_bucketed(keyed(band_buckets(sig_old, n_hashes, n_bands), "old_id")
                   .repartition(nb, F.col("bkey")),
                   t_idx, ["bkey"], nb, ["bkey"], base + "/index")
-    save_bucketed(keyed(_band_buckets(sig_new, n_hashes, n_bands), "new_id")
+    save_bucketed(keyed(band_buckets(sig_new, n_hashes, n_bands), "new_id")
                   .repartition(nb, F.col("bkey")),
                   t_bat, ["bkey"], nb, ["bkey"], base + "/batch")
 
@@ -1540,15 +1291,5 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
             .select(F.least("new_id", "old_id").alias("doc_a"),
                     F.greatest("new_id", "old_id").alias("doc_b"))
             .distinct())
-    sigs = sig  # the fused cache IS new ∪ old
-    am, bm = sigs.alias("am"), sigs.alias("bm")
-    agree = sum(
-        F.when(F.col(f"am.mh{i}") == F.col(f"bm.mh{i}"), 1).otherwise(0)
-        for i in range(n_hashes))
-    return (cand.join(am, F.col("doc_a") == F.col("am.doc_id"))
-            .join(bm, F.col("doc_b") == F.col("bm.doc_id"))
-            .select("doc_a", "doc_b",
-                    F.round(agree / F.lit(float(n_hashes)), 4)
-                    .alias("est_jaccard"))
-            .where(F.col("est_jaccard") >= 0.5)
-            .orderBy("doc_a", "doc_b"))
+    # the fused cache IS new ∪ old
+    return scored_pairs(cand, sig, n_hashes).orderBy("doc_a", "doc_b")

@@ -7,19 +7,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spark_sentiment_spark.operators.event_windows import (SLIDE_SQL,
+                                                           TUMBLE_SQL)
+from spark_sentiment_spark.operators.scd2 import (SCD2_SQL, scd2_dim,
+                                                  scd2_formatted, scd2_merge)
 from spark_sentiment_spark.plans.registry import (load, register,
                                                   track_persist)
-
-TUMBLE_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type,
-       count(*) AS n,
-       round(sum(value), 4) AS total_value
-FROM events
-GROUP BY 1, 2
-ORDER BY window_start, event_type
-"""
-
 
 @register("events_tumbling_hour", sql=TUMBLE_SQL, bench=True, tags=("events",))
 def events_tumbling_hour(spark, sf_dir):
@@ -34,23 +27,6 @@ def events_tumbling_hour(spark, sf_dir):
              F.round(F.sum("value"), 4).alias("total_value"))
         .orderBy("window_start", "event_type")
     )
-
-
-SLIDE_SQL = """
-WITH grid AS (
-  SELECT unnest(generate_series(
-    date_trunc('hour', (SELECT min(ts) FROM events)) - INTERVAL 30 MINUTE,
-    (SELECT max(ts) FROM events),
-    INTERVAL 30 MINUTE)) AS w_start
-)
-SELECT strftime(g.w_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-       count(*) AS n,
-       round(sum(e.value), 4) AS total_value
-FROM grid g
-JOIN events e ON e.ts >= g.w_start AND e.ts < g.w_start + INTERVAL 1 HOUR
-GROUP BY g.w_start
-ORDER BY window_start
-"""
 
 
 @register("events_sliding_hour", sql=SLIDE_SQL, tags=("events",))
@@ -921,34 +897,6 @@ def events_rolling_distinct(spark, sf_dir):
 
 # --- SCD Type-2 dimension build from the event stream -----------------------
 
-SCD2_SQL = """
-WITH ordered AS (
-  SELECT user_id, ts, event_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_type
-  FROM events
-), changes AS (
-  SELECT user_id, ts, event_id, event_type
-  FROM ordered
-  WHERE prev_type IS NULL OR event_type <> prev_type
-), versioned AS (
-  SELECT user_id, event_type AS state, ts AS valid_from,
-         lead(ts) OVER (PARTITION BY user_id
-                        ORDER BY ts, event_id) AS valid_to,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS version
-  FROM changes
-)
-SELECT user_id,
-       state,
-       strftime(valid_from, '%Y-%m-%d %H:%M:%S') AS valid_from,
-       strftime(valid_to,   '%Y-%m-%d %H:%M:%S') AS valid_to,
-       CAST(version AS BIGINT) AS version,
-       CAST(valid_to IS NULL AS BIGINT) AS is_current
-FROM versioned
-ORDER BY user_id, version
-"""
-
 
 @register("events_scd2_history", sql=SCD2_SQL, tags=("events", "cdc"))
 def events_scd2_history(spark, sf_dir):
@@ -970,21 +918,11 @@ def events_scd2_history(spark, sf_dir):
     version numbering, and the lead() interval close — so version
     numbers and valid_to assignment are deterministic even when two
     retained changes share (user_id, ts) (round-7 ADVICE). The build
-    itself is `_scd2_dim` (shared with `events_scd2_merge_delta`, whose
-    oracle is this very query's SQL — one definition keeps the full
-    rebuild and the incremental merge equivalent by construction); this
-    wrapper only formats timestamps and derives is_current."""
-    dim = _scd2_dim(load(spark, sf_dir, "events"))
-    return (dim
-            .select("user_id", "state",
-                    F.date_format("valid_from", "yyyy-MM-dd HH:mm:ss")
-                    .alias("valid_from"),
-                    F.date_format("valid_to", "yyyy-MM-dd HH:mm:ss")
-                    .alias("valid_to"),
-                    "version",
-                    F.col("valid_to").isNull().cast("long")
-                    .alias("is_current"))
-            .orderBy("user_id", "version"))
+    itself is `operators.scd2.scd2_dim` (shared with
+    `events_scd2_merge_delta`, whose oracle is this very query's SQL —
+    one definition keeps the full rebuild and the incremental merge
+    equivalent by construction)."""
+    return scd2_formatted(scd2_dim(load(spark, sf_dir, "events")))
 
 
 # --- Peak session concurrency (sweep line) ----------------------------------
@@ -1855,79 +1793,6 @@ def events_user_lifecycle(spark, sf_dir):
 # --- Incremental SCD2 merge (nightly delta batch into existing history) -----
 
 
-def _scd2_dim(ev):
-    """The SCD2 build over an event frame with RAW timestamp columns
-    (shared by events_scd2_history's formatted output and the delta
-    merge below): run-collapsed changes per user with [valid_from,
-    valid_to) intervals and 1-based version numbers, every window
-    tiebroken on (ts, event_id)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changes = (ev
-               .withColumn("prev_type", F.lag("event_type").over(w))
-               .where(F.col("prev_type").isNull()
-                      | (F.col("event_type") != F.col("prev_type")))
-               .select("user_id", "ts", "event_id",
-                       F.col("event_type").alias("state")))
-    wv = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (changes
-            .withColumn("valid_to", F.lead("ts").over(wv))
-            .withColumn("version", F.row_number().over(wv).cast("long"))
-            .select("user_id", "state", F.col("ts").alias("valid_from"),
-                    "valid_to", "version"))
-
-
-def _scd2_merge(hist_dim, delta_ev):
-    """Merge a DELTA event batch into an EXISTING raw SCD2 dimension
-    (the _scd2_dim shape): open rows close at the delta's first
-    retained change, runs continue across the boundary, versions number
-    onward per user, closed rows pass through untouched. Split out so
-    scripts/merge_probe.py can time the merge against a MATERIALIZED
-    history dimension — the production nightly cost, which must scale
-    with the delta, never the history (the registered query rebuilds
-    hist_dim inline because the demo owns no persistent state)."""
-    open_rows = (hist_dim.where(F.col("valid_to").isNull())
-                 .select("user_id", F.col("state").alias("open_state"),
-                         F.col("version").alias("open_version")))
-
-    # Change detection WITHIN the delta batch (one window over the
-    # batch, never over history)...
-    wd = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    delta_changes = (delta_ev
-                     .withColumn("prev_type", F.lag("event_type").over(wd))
-                     .where(F.col("prev_type").isNull()
-                            | (F.col("event_type") != F.col("prev_type")))
-                     .select("user_id", "ts", "event_id",
-                             F.col("event_type").alias("state"))
-                     .withColumn("rn", F.row_number().over(wd)))
-    # ...then the boundary rule: the batch's FIRST change appends only
-    # if it differs from the user's open state (run continuation).
-    kept = (delta_changes
-            .join(open_rows, "user_id", "left")
-            .where((F.col("rn") > 1) | F.col("open_state").isNull()
-                   | (F.col("state") != F.col("open_state"))))
-
-    wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    new_rows = (kept
-                .withColumn("valid_to", F.lead("ts").over(wk))
-                .withColumn("version",
-                            F.coalesce(F.col("open_version"), F.lit(0))
-                            + F.row_number().over(wk))
-                .select("user_id", "state", F.col("ts").alias("valid_from"),
-                        "valid_to", F.col("version").cast("long")
-                        .alias("version")))
-
-    # Close each touched open row at its user's first appended change.
-    first_new = (new_rows.groupBy("user_id")
-                 .agg(F.min("valid_from").alias("close_at")))
-    hist_merged = (hist_dim.join(first_new, "user_id", "left")
-                   .withColumn("valid_to",
-                               F.when(F.col("valid_to").isNull(),
-                                      F.col("close_at"))
-                               .otherwise(F.col("valid_to")))
-                   .drop("close_at"))
-    return hist_merged.unionByName(new_rows)
-
-
 @register("events_scd2_merge_delta", sql=SCD2_SQL, tags=("events", "cdc"))
 def events_scd2_merge_delta(spark, sf_dir):
     """Incremental SCD2 maintenance — the production NIGHTLY shape for
@@ -1960,18 +1825,9 @@ def events_scd2_merge_delta(spark, sf_dir):
         lo = hi = 0
     cutoff = F.timestamp_millis(F.lit(lo + (hi - lo) * 7 // 10))
 
-    hist_dim = _scd2_dim(ev.where(F.col("ts") < cutoff))
-    merged = _scd2_merge(hist_dim, ev.where(F.col("ts") >= cutoff))
-    return (merged
-            .select("user_id", "state",
-                    F.date_format("valid_from", "yyyy-MM-dd HH:mm:ss")
-                    .alias("valid_from"),
-                    F.date_format("valid_to", "yyyy-MM-dd HH:mm:ss")
-                    .alias("valid_to"),
-                    "version",
-                    F.col("valid_to").isNull().cast("long")
-                    .alias("is_current"))
-            .orderBy("user_id", "version"))
+    hist_dim = scd2_dim(ev.where(F.col("ts") < cutoff))
+    merged = scd2_merge(hist_dim, ev.where(F.col("ts") >= cutoff))
+    return scd2_formatted(merged)
 
 
 # --- Windowed funnel (conversion deadlines per step) ------------------------

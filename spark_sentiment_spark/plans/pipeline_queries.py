@@ -15,17 +15,32 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.plans.registry import (PER_CORPUS, load,
-                                                  register, track_persist,
+from spark_sentiment_spark.functions.text import (WS_TOKENS_SQL,
+                                                  token_bigrams, ws_tokens)
+from spark_sentiment_spark.operators.event_windows import ANOMALY_SQL
+from spark_sentiment_spark.operators.mixture import (TEMP_ALPHA,
+                                                     mixture_quota_pick)
+from spark_sentiment_spark.operators.multimodal import HEADERS_SQL
+from spark_sentiment_spark.operators.quality import (C4_FEATS_SQL,
+                                                     C4_KEEP_SQL,
+                                                     C4_REASON_SQL,
+                                                     GOPHER_FEATS_SQL,
+                                                     GOPHER_KEEP_SQL,
+                                                     GOPHER_REASON_SQL,
+                                                     c4_feats, gopher_feats,
+                                                     stopword_langid)
+from spark_sentiment_spark.operators.vectors import (as_double, dot,
+                                                     ivf_centroids,
+                                                     ivf_ranked, norm,
+                                                     row_count,
+                                                     unit_vector_frame)
+from spark_sentiment_spark.plans.registry import (load, register,
+                                                  track_persist,
                                                   track_staging_dir)
-
-# Whitespace tokenization shared by both sides. Spark `split` and DuckDB
-# `string_split_regex` agree on '\\s+' for trimmed, non-empty text.
-_TOKENS_SQL = "string_split_regex(trim(text), '\\s+')"
 
 
 def _n_tokens_col():
-    return F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
+    return F.size(ws_tokens()).cast("bigint")
 
 
 # --- Sequence packing (GPT-style concat-and-chunk window assignment) --------
@@ -39,8 +54,8 @@ SELECT doc_id,
        CAST(floor((cum - n_tokens) / {PACK_BUDGET}.0) AS BIGINT) AS window_id
 FROM (
   SELECT doc_id, source,
-         CAST(length({_TOKENS_SQL}) AS BIGINT) AS n_tokens,
-         sum(CAST(length({_TOKENS_SQL}) AS BIGINT)) OVER (
+         CAST(length({WS_TOKENS_SQL}) AS BIGINT) AS n_tokens,
+         sum(CAST(length({WS_TOKENS_SQL}) AS BIGINT)) OVER (
            PARTITION BY source ORDER BY doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
   FROM documents
@@ -90,8 +105,8 @@ FROM (
   SELECT doc_id, source, n_tokens, cum - n_tokens AS start, cum
   FROM (
     SELECT doc_id, source,
-           CAST(length({_TOKENS_SQL}) AS BIGINT) AS n_tokens,
-           sum(CAST(length({_TOKENS_SQL}) AS BIGINT)) OVER (
+           CAST(length({WS_TOKENS_SQL}) AS BIGINT) AS n_tokens,
+           sum(CAST(length({WS_TOKENS_SQL}) AS BIGINT)) OVER (
              PARTITION BY source ORDER BY doc_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
     FROM documents
@@ -237,7 +252,7 @@ VOCAB_TOPK = 100
 
 VOCAB_SQL = f"""
 WITH toks AS (
-  SELECT unnest({_TOKENS_SQL}) AS token
+  SELECT unnest({WS_TOKENS_SQL}) AS token
   FROM documents WHERE text IS NOT NULL
 ),
 counts AS (SELECT token, count(*) AS cnt FROM toks GROUP BY token),
@@ -435,12 +450,9 @@ def dedup_incremental(spark, sf_dir):
     not the cache-fill barrier. Kept; ledger entry in OPTIMIZATION_r19.
     """
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # PER_CORPUS: one row per document (doc_id + 32-hex hash + tag,
-    # ~50 B/row -> billions of rows / 100s of GB at 100 TB) — disk-backed
-    # eviction, never recompute the text-hash pass (registry.py policy).
     hashed = track_persist(docs.select(
         "doc_id", _prefix_hash_col().alias("prefix_hash"),
-        (F.col("doc_id") % 5).alias("__m")), level=PER_CORPUS)
+        (F.col("doc_id") % 5).alias("__m")))
     corpus = (hashed.where(F.col("__m") != 4)
               .select("prefix_hash").distinct())
     w = Window.partitionBy("prefix_hash").orderBy("doc_id")
@@ -492,19 +504,6 @@ def mixture_sample(spark, sf_dir):
 
 
 # --- Multimodal header round-trip (construct natively, parse natively) ------
-
-HEADERS_SQL = """
-SELECT doc_id,
-       CASE CAST(doc_id % 3 AS INTEGER)
-            WHEN 0 THEN 'png' WHEN 1 THEN 'wav' ELSE 'mp4' END AS container,
-       CASE WHEN doc_id % 3 = 0 THEN 64 + doc_id % 512 END AS width,
-       CASE WHEN doc_id % 3 = 0 THEN 48 + doc_id % 256 END AS height,
-       CASE WHEN doc_id % 3 = 1 THEN 1 + doc_id % 2 END AS channels,
-       CASE WHEN doc_id % 3 = 1 THEN 8000 + (doc_id % 5) * 8000 END
-         AS sample_rate
-FROM documents
-ORDER BY doc_id
-"""
 
 
 @register("multimodal_headers", sql=HEADERS_SQL,
@@ -740,7 +739,7 @@ def _composite_gate(docs):
     stage-attribution probe (`curation_stage_frames`) times exactly the
     plan the pass runs.
 
-    TWO projection layers on purpose (the `_gopher_feats` shape): the
+    TWO projection layers on purpose (the `gopher_feats` shape): the
     heuristics are aliased in an inner select and the verdict/reason
     reference them by NAME. CollapseProject refuses to inline expensive
     multi-referenced aliases, so the regexp alpha ratio and the
@@ -887,9 +886,6 @@ def _curation_verdicts(docs, gate, ranked=None, cont=None):
 
 
 def _gopher_gate_ctes():
-    from spark_sentiment_spark.plans.text_queries import (GOPHER_FEATS_SQL,
-                                                          GOPHER_KEEP_SQL,
-                                                          GOPHER_REASON_SQL)
     return rf"""gofeats AS (
 {GOPHER_FEATS_SQL}
 ),
@@ -911,7 +907,7 @@ def curate_corpus_gopher(spark, sf_dir):
     published rule set: benchmark exclusion → Gopher gate → prefix
     keep-best dedup among gate survivors → 3-gram decontamination, one
     declarative plan with first-failing-stage verdicts. The gate stage
-    reuses `_gopher_feats` verbatim (Spark) and the GOPHER_*_SQL pieces
+    reuses `gopher_feats` verbatim (Spark) and the GOPHER_*_SQL pieces
     verbatim (oracle), and the downstream stages are `_curation_verdicts`
     shared with `curate_corpus` — the two passes differ ONLY in the gate.
 
@@ -924,19 +920,14 @@ def curate_corpus_gopher(spark, sf_dir):
     Scale: identical to `curate_corpus` — the gate folds over token/line
     arrays inside one codegen projection; three bounded-key shuffles
     end-to-end."""
-    from spark_sentiment_spark.plans.text_queries import _gopher_feats
-
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    gate = _gopher_feats(docs).select(
+    gate = gopher_feats(docs).select(
         "doc_id", "text", F.col("keep").alias("q_keep"),
         F.col("reason").alias("q_reason"))
     return _curation_verdicts(docs, gate)
 
 
 def _c4_gate_ctes():
-    from spark_sentiment_spark.plans.text_queries import (C4_FEATS_SQL,
-                                                          C4_KEEP_SQL,
-                                                          C4_REASON_SQL)
     return rf"""c4feats AS (
 {C4_FEATS_SQL}
 ),
@@ -958,7 +949,7 @@ def curate_corpus_c4(spark, sf_dir):
     the composite one. Benchmark exclusion → C4 gate → prefix keep-best
     dedup among gate survivors → 3-gram decontamination, one
     declarative plan with first-failing-stage verdicts; the gate reuses
-    `_c4_feats` verbatim (Spark) and the C4_*_SQL pieces verbatim
+    `c4_feats` verbatim (Spark) and the C4_*_SQL pieces verbatim
     (oracle), downstream stages are `_curation_verdicts` shared with
     both siblings.
 
@@ -971,10 +962,8 @@ def curate_corpus_c4(spark, sf_dir):
     Scale: identical to its siblings — the gate folds over the line
     array inside one codegen projection; three bounded-key shuffles
     end-to-end."""
-    from spark_sentiment_spark.plans.text_queries import _c4_feats
-
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    gate = _c4_feats(docs).select(
+    gate = c4_feats(docs).select(
         "doc_id", "text", F.col("keep").alias("q_keep"),
         F.col("reason").alias("q_reason"))
     return _curation_verdicts(docs, gate)
@@ -985,20 +974,18 @@ def curation_stage_frames(spark, sf_dir, kind="composite"):
     (scripts/deep_probe.py's stage attribution, round-12 VERDICT item
     5): which stage owns the pass's ×8→×32 marginal slope. Returns
     {'gate': …, 'dedup': …, 'decon': …} built from exactly the builders
-    the composed pass runs (`_composite_gate`/`_gopher_feats`/
-    `_c4_feats`, `_dedup_ranked`, `_contaminated`) — NOT a catalog
+    the composed pass runs (`_composite_gate`/`gopher_feats`/
+    `c4_feats`, `_dedup_ranked`, `_contaminated`) — NOT a catalog
     query; the composed single-plan pass stays the product."""
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     if kind == "composite":
         gate = _composite_gate(docs)
     elif kind == "gopher":
-        from spark_sentiment_spark.plans.text_queries import _gopher_feats
-        gate = _gopher_feats(docs).select(
+        gate = gopher_feats(docs).select(
             "doc_id", "text", F.col("keep").alias("q_keep"),
             F.col("reason").alias("q_reason"))
     elif kind == "c4":
-        from spark_sentiment_spark.plans.text_queries import _c4_feats
-        gate = _c4_feats(docs).select(
+        gate = c4_feats(docs).select(
             "doc_id", "text", F.col("keep").alias("q_keep"),
             F.col("reason").alias("q_reason"))
     else:
@@ -1043,11 +1030,8 @@ def merge_upsert(spark, sf_dir):
     # Round-18 optimization (guide §2.4): base and both update slices
     # project the same two columns — persist the narrow frame so the
     # table is scanned once instead of three times.
-    # PER_CORPUS: per-doc (doc_id, lang) — narrow but corpus-sized;
-    # see registry.py storage-level policy.
     docs = track_persist(
-        load(spark, sf_dir, "documents").select("doc_id", "lang"),
-        level=PER_CORPUS)
+        load(spark, sf_dir, "documents").select("doc_id", "lang"))
     base = docs.select("doc_id", "lang", F.lit("v1").alias("version"))
     updates = (docs.where(F.col("doc_id") % 7 == 0)
                .select("doc_id", F.upper("lang").alias("lang"),
@@ -1191,9 +1175,7 @@ def langid_confusion(spark, sf_dir):
     predicted, n): pivoting to a wide matrix is presentation, and wide
     schemas depend on the label set. One partial+final agg on a bounded
     (|langs|²) key space — scan-speed at any corpus size."""
-    from spark_sentiment_spark.plans.text_queries import langid_stopword
-
-    pred = langid_stopword(spark, sf_dir)
+    pred = stopword_langid(load(spark, sf_dir, "documents"))
     return (pred.groupBy("lang", "predicted_lang")
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy("lang", "predicted_lang"))
@@ -1268,8 +1250,6 @@ def langid_kappa(spark, sf_dir):
     Scale: one bounded (|langs|²) confusion agg (the langid_confusion
     shape), then constant-size marginal joins — scan-speed at any
     corpus size."""
-    from spark_sentiment_spark.plans.text_queries import langid_stopword
-
     # Round-18 optimization (guide §2.4): cm is consumed by FOUR plan
     # branches (total, agree, row marginals, column marginals) and its
     # subtree is a full corpus scan through the stop-word classifier
@@ -1281,7 +1261,7 @@ def langid_kappa(spark, sf_dir):
     # persist's serialization costs wall-clock, while at scale three
     # eliminated corpus passes dominate a 16-row cache.
     cm = track_persist(
-        langid_stopword(spark, sf_dir)
+        stopword_langid(load(spark, sf_dir, "documents"))
         .groupBy("lang", "predicted_lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n")))
     tot = cm.agg(F.sum("n").cast("bigint").alias("n"))
@@ -1310,27 +1290,6 @@ def langid_kappa(spark, sf_dir):
 
 
 # --- Event-volume anomaly detection (z-score over hourly counts) ------------
-
-ANOMALY_SQL = """
-WITH hourly AS (
-  SELECT event_type,
-         strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-         count(*) AS n
-  FROM events
-  GROUP BY 1, 2
-),
-stats AS (
-  SELECT event_type, hour_start, n,
-         avg(n)         OVER (PARTITION BY event_type) AS mu,
-         stddev_samp(n) OVER (PARTITION BY event_type) AS sigma
-  FROM hourly
-)
-SELECT event_type, hour_start, n,
-       round((n - mu) / sigma, 4) AS z
-FROM stats
-WHERE sigma > 0 AND abs((n - mu) / sigma) >= 2.0
-ORDER BY event_type, hour_start
-"""
 
 
 @register("events_volume_anomaly", sql=ANOMALY_SQL,
@@ -1420,18 +1379,16 @@ def dedup_incremental_bloom(spark, sf_dir):
     # Round-18 optimization, same as dedup_incremental: persist the
     # narrow hashed frame (2 corpus scans -> 1). `incoming` is also
     # persisted — the bloom split consumes it twice (~might / might).
-    # PER_CORPUS x2: hashed is one row/doc, incoming one row/distinct
-    # incoming hash — both corpus-cardinality (registry.py policy).
     hashed = track_persist(docs.select(
         "doc_id", _prefix_hash_col().alias("prefix_hash"),
-        (F.col("doc_id") % 5).alias("__m")), level=PER_CORPUS)
+        (F.col("doc_id") % 5).alias("__m")))
     corpus = (hashed.where(F.col("__m") != 4)
               .select("prefix_hash").distinct())
     w = Window.partitionBy("prefix_hash").orderBy("doc_id")
     incoming = track_persist(
         hashed.where(F.col("__m") == 4)
         .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1), level=PER_CORPUS)
+        .where(F.col("rn") == 1))
 
     might = bloom_might_contain(
         F.col("prefix_hash"), bloom_build(corpus, "prefix_hash"))
@@ -1556,41 +1513,20 @@ def dedup_semantic(spark, sf_dir, k: int | None = None,
     median +9% — noise); preferSortMergeJoin=false = 1.459/1.634
     (+12% min). All three rejected again; join strategy stays with the
     planner + AQE, which keeps the at-scale freedom too."""
-    from spark_sentiment_spark.plans.registry import track_persist
-    from spark_sentiment_spark.plans.similarity_queries import (
-        _as_double, _dot, _norm, _row_count)
-
     if k is None:
-        n = _row_count(spark, f"{sf_dir}/embeddings.parquet")
+        n = row_count(spark, f"{sf_dir}/embeddings.parquet")
         k = max(SEMDEDUP_K, n // SEMDEDUP_CELL_TARGET)
 
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", unit.alias("u")),
-                         level=PER_CORPUS)  # one row per vector
-
-    seeds = (vecs
-             .select("vec_id", "u",
-                     F.md5(F.col("vec_id").cast("string")).alias("h"))
-             .orderBy("h", "vec_id").limit(k))
-    cent = seeds.select(
-        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cluster"),
-        F.col("u").alias("cu"))  # bounded: k rows
-
-    sim = F.round(_dot(F.col("u"), F.col("cu")), 6)
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cluster"))
+    vecs = unit_vector_frame(emb, "u")
+    cent = ivf_centroids(vecs, k, "cluster")  # bounded: k rows
     probes = track_persist(
-        vecs.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cluster", "u", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(wa))
-        .where(F.col("rn") <= probe)
-        .select("vec_id", "cluster", "u", "rn"),
-        level=PER_CORPUS)  # `probe` rows per vector
+        ivf_ranked(vecs, cent, "cluster").where(F.col("rn") <= probe)
+        .select("vec_id", "cluster", "u", "rn"))  # `probe` rows per vector
     assigned = probes.where(F.col("rn") == 1).select("vec_id", "cluster", "u")
 
     x, y = probes.alias("x"), probes.alias("y")
-    cos = _dot(F.col("x.u"), F.col("y.u"))
+    cos = dot(F.col("x.u"), F.col("y.u"))
     # y shares a probed cell with a smaller-id near-dup -> y is dropped
     dropped = (
         x.join(y, (F.col("x.cluster") == F.col("y.cluster"))
@@ -1798,13 +1734,10 @@ def quality_perplexity(spark, sf_dir):
     size, never corpus size. The exploded token table is persisted — the
     train side (vocab counts) and the score side both read it, so the
     corpus is scanned and regex-tokenized once, not three times."""
-    from spark_sentiment_spark.plans.registry import track_persist
-
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = track_persist(docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")),
-        level=PER_CORPUS)  # per (doc, token) row — text-sized
+        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")))
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = vocab.agg(F.sum("cnt").cast("double").alias("n"))
     bits = -F.log2(F.col("cnt") / F.col("n"))
@@ -1888,15 +1821,10 @@ def quality_bigram_backoff(spark, sf_dir):
     AQE/size estimates decide) plus the 1-row (N,V) scalar broadcast;
     one doc_id aggregation. bits_per_bigram rounds to 4dp like the
     unigram query."""
-    from spark_sentiment_spark.plans.registry import track_persist
-
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = track_persist(docs.select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("l")),
-        level=PER_CORPUS)  # one token-array row per doc — text-sized
-    bg_expr = F.expr(
-        "zip_with(slice(l, 1, size(l)-1), slice(l, 2, size(l)-1),"
-        " (a, b) -> struct(a AS w1, b AS w2))")
+        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("l")))
+    bg_expr = token_bigrams("l")
     is_train = F.col("doc_id") % 5 != 4
 
     # Round-18 optimization (guide §2.4): the unigram table feeds three
@@ -2030,14 +1958,11 @@ def hybrid_search_rrf(spark, sf_dir):
     min). Full-outer cannot broadcast, the sides are per-query top-50
     lists (hundreds of rows), and both knobs re-measured negative-to-flat
     on the r19 host — the SMJ stays."""
-    from spark_sentiment_spark.plans.registry import track_persist
-
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = track_persist(docs.select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"))
-        .where(F.length("tok") > 0).distinct(),
-        level=PER_CORPUS)  # per distinct (doc, token) — text-sized
+        .where(F.length("tok") > 0).distinct())
     # NOT persisted (round-18 A/B): sizes feeds both lex join sides, but
     # each re-aggregates from the CACHED token table — a min-of-10 A/B
     # measured the persist's cache-fill barrier at +27% min / +30% median
@@ -2059,16 +1984,14 @@ def hybrid_search_rrf(spark, sf_dir):
            .where(F.col("lr") <= HYBRID_POOL)
            .select("qid", "doc_id", "lr"))
 
-    from spark_sentiment_spark.plans.similarity_queries import (_as_double,
-                                                                _dot, _norm)
     emb = load(spark, sf_dir, "embeddings")
     qv = (emb.where(F.col("vec_id") < 3)
           .select(F.col("vec_id").alias("qid"),
-                  _as_double("embedding").alias("qe")))
+                  as_double("embedding").alias("qe")))
     cv = emb.select(F.col("vec_id").alias("doc_id"),
-                    _as_double("embedding").alias("ce"))
-    cos = _dot(F.col("qe"), F.col("ce")) / (
-        _norm(F.col("qe")) * _norm(F.col("ce")))
+                    as_double("embedding").alias("ce"))
+    cos = dot(F.col("qe"), F.col("ce")) / (
+        norm(F.col("qe")) * norm(F.col("ce")))
     wv = Window.partitionBy("qid").orderBy(F.desc("cos"), "doc_id")
     vec = (cv.crossJoin(F.broadcast(qv))
            .where(F.col("qid") != F.col("doc_id"))
@@ -2236,11 +2159,8 @@ def snapshot_diff(spark, sf_dir):
     # scanned the table three times and ran the content md5 over the
     # full text in each branch. One scan, both hashes in one pass,
     # 32-byte rows in the cache.
-    # PER_CORPUS: per-doc 2x32-hex rows (~80 B/row at corpus
-    # cardinality) — see registry.py storage-level policy.
     hashes = track_persist(
-        docs.select("doc_id", h1.alias("h1"), h2.alias("h2")),
-        level=PER_CORPUS)
+        docs.select("doc_id", h1.alias("h1"), h2.alias("h2")))
     v1 = hashes.select("doc_id", F.col("h1").alias("h"))
     v2 = (hashes.where(F.col("doc_id") % 11 != 0)
           .select("doc_id", F.col("h2").alias("h"))
@@ -2744,8 +2664,7 @@ def source_overlap(spark, sf_dir):
     # corpus is scanned and prefix-hashed once.
     hs = track_persist(
         docs.select(_prefix_hash_col().alias("h"), "source")
-        .groupBy("h", "source").agg(F.count(F.lit(1)).alias("c")),
-        level=PER_CORPUS)  # <= one row per (doc hash, source)
+        .groupBy("h", "source").agg(F.count(F.lit(1)).alias("c")))
     a, b = hs.alias("a"), hs.alias("b")
     return (
         a.join(b, (F.col("a.h") == F.col("b.h"))
@@ -2809,7 +2728,7 @@ def shard_balance(spark, sf_dir):
 
 PACK_EFF_SQL = f"""
 WITH t AS (
-  SELECT source, CAST(length({_TOKENS_SQL}) AS BIGINT) AS n
+  SELECT source, CAST(length({WS_TOKENS_SQL}) AS BIGINT) AS n
   FROM documents WHERE text IS NOT NULL
 )
 SELECT source,
@@ -2938,12 +2857,10 @@ def multimodal_phash_dedup(spark, sf_dir):
     hamming verification touches candidates only."""
     from spark_sentiment_spark.operators.multimodal import (
         attach_ppm_group_content, decode_ppm_ahash)
-    from spark_sentiment_spark.plans.registry import track_persist
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     hashes = track_persist(
-        decode_ppm_ahash(attach_ppm_group_content(docs)),
-        level=PER_CORPUS)  # one perceptual-hash row per doc
+        decode_ppm_ahash(attach_ppm_group_content(docs)))
     bands = hashes.selectExpr(
         "doc_id", "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (bi, bv)")
     cand = (bands.alias("a")
@@ -3347,12 +3264,6 @@ PREP_BUDGET = 150  # mixture budget over the curated survivors: ~260 of 500
 #   every test SF (a budget >= the survivor count would select everything
 #   and reduce the mixture stage to a no-op)
 
-# Keep in sync with corpus_queries.TEMP_ALPHA (not imported: a module-
-# scope import would run corpus_queries' registrations early and shift
-# the catalog order — the same rule as streaming_queries' ANOMALY_SQL
-# note; tests/test_round14_queries.py pins the equality).
-PREP_TEMP_ALPHA = 0.7
-
 PREP_SQL = rf"""
 WITH {_curate_ctes(_COMPOSITE_GATE_CTES)},
 kept AS (
@@ -3362,14 +3273,14 @@ kept AS (
 ),
 src AS (
   SELECT source, count(*) AS n_docs,
-         sum(len({_TOKENS_SQL})) AS n_tokens
+         sum(len({WS_TOKENS_SQL})) AS n_tokens
   FROM kept
   GROUP BY source
 ),
 alloc AS (
   SELECT source, n_docs, n_tokens,
-         pow(n_tokens, {PREP_TEMP_ALPHA}) /
-           sum(pow(n_tokens, {PREP_TEMP_ALPHA})) OVER ()
+         pow(n_tokens, {TEMP_ALPHA}) /
+           sum(pow(n_tokens, {TEMP_ALPHA})) OVER ()
            * {PREP_BUDGET} AS quota_f
   FROM src
 ),
@@ -3395,7 +3306,7 @@ quota AS (
 ),
 mranked AS (
   SELECT doc_id, source,
-         CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tokens,
+         CAST(len({WS_TOKENS_SQL}) AS BIGINT) AS n_tokens,
          row_number() OVER (PARTITION BY source
                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
            AS pick
@@ -3441,7 +3352,7 @@ def prepare_training_set(spark, sf_dir, manifest=None):
          keep-best dedup + 3-gram decontamination) selects the
          survivors;
       2. mixture quota (`mixture_apply` semantics via the shared
-         `_mixture_quota_pick` builder, budget {PREP_BUDGET}): each
+         `mixture_quota_pick` builder, budget {PREP_BUDGET}): each
          source contributes a temperature-scaled largest-remainder
          quota of survivors, picked by content-addressed md5 rank;
       3. sequence packing (`pack_sequences` semantics): per-source
@@ -3480,18 +3391,14 @@ def prepare_training_set(spark, sf_dir, manifest=None):
     kept = track_persist(
         docs.select("doc_id", "source",
                     _n_tokens_col().alias("n_tokens"))
-        .join(manifest.where(F.col("keep")).select("doc_id"), "doc_id"),
-        level=PER_CORPUS)  # per-surviving-doc, 3 narrow cols
+        .join(manifest.where(F.col("keep")).select("doc_id"), "doc_id"))
     return _prep_training_set(kept)
 
 
 def _prep_training_set(kept):
     """Stages 2–4 of the training-set build over the curated survivors
     (doc_id, source, n_tokens): mixture quota → packing → shuffle."""
-    from spark_sentiment_spark.plans.corpus_queries import \
-        _mixture_quota_pick
-
-    picked = _mixture_quota_pick(kept, budget=PREP_BUDGET)
+    picked = mixture_quota_pick(kept, budget=PREP_BUDGET)
     sel = picked.join(kept.select("doc_id", "n_tokens"), "doc_id")
 
     wp = (Window.partitionBy("source").orderBy("doc_id")

@@ -40,42 +40,9 @@ REGISTRY: dict[str, Query] = {}
 _PERSISTED: list[DataFrame] = []
 
 
-# Round-19 storage-level audit (guide §5; r18 VERDICT item 6): every
-# persist site in the catalog falls into one of two cardinality classes,
-# and the storage level is now a DELIBERATE per-class choice instead of
-# an inherited default (the full site-by-site table is in
-# OPTIMIZATION_r19.md):
-#
-# * bounded frames — vocabularies, per-day/per-hour rollups, sketch
-#   register tables, confusion matrices, top-k lists, hot/boilerplate
-#   lists. Size is corpus-independent (or log/√-corpus); they stay
-#   memory-resident at any scale and any level works. They use the
-#   plain default below.
-# * PER_CORPUS frames — per-doc hashes/signatures, per-token shingle
-#   and gram tables, per-vector embeddings, per-fingerprint indexes,
-#   per-user rollups. At 100 TB these are DISK-sized, not memory-sized
-#   (billions of rows even when narrow). The deliberate bits are
-#   useDisk=True + useMemory=True: under memory pressure the cache
-#   EVICTS TO DISK rather than dropping blocks, because every one of
-#   these persists exists to avoid re-running a full corpus scan (+ an
-#   explode/hash/fold pass) — a spilled read is orders of magnitude
-#   cheaper than the recompute. Spark SQL caches store compressed
-#   columnar batches regardless of the level's 'deserialized' flag, so
-#   PER_CORPUS is byte-identical to the default AT THIS SCALE (no bench
-#   delta by construction); what the annotation adds is the audited
-#   at-scale contract, asserted per-site in code.
-from pyspark import StorageLevel  # noqa: E402  (after module docstring)
-
-PER_CORPUS = StorageLevel.MEMORY_AND_DISK_DESER
-
-
-def track_persist(df: DataFrame,
-                  level: StorageLevel | None = None) -> DataFrame:
-    """persist() a plan intermediate and track it for release_caches().
-    ``level=PER_CORPUS`` marks (and pins) corpus-cardinality frames —
-    see the storage-level policy note above."""
-    df = df.persist(level if level is not None
-                    else StorageLevel.MEMORY_AND_DISK_DESER)
+def track_persist(df: DataFrame) -> DataFrame:
+    """persist() a plan intermediate and track it for release_caches()."""
+    df = df.persist()
     _PERSISTED.append(df)
     return df
 

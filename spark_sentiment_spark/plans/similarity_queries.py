@@ -12,26 +12,26 @@ import pandas as pd  # module-level: pandas-UDF type hints resolve from here
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.plans.registry import (PER_CORPUS, load,
-                                                  register, track_persist)
-
-
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-    ))
+from spark_sentiment_spark.operators.vectors import (ANN_IVF_SQL,
+                                                     ANN_IVFPQ_SQL,
+                                                     ANN_PQ_SQL, IVF_ASSIGN,
+                                                     IVF_K, IVF_PROBE,
+                                                     IVF_TOPK, IVFPQ_RERANK,
+                                                     PQ_RERANK,
+                                                     as_double, dot,
+                                                     ivf_centroids,
+                                                     ivf_ranked,
+                                                     ivfpq_probe, ivfpq_sql,
+                                                     ivfpq_stage_index, norm,
+                                                     pq_adc_tables,
+                                                     pq_adc_topk, pq_encoder,
+                                                     pq_probe,
+                                                     pq_seed_codebooks,
+                                                     pq_stage_index,
+                                                     row_count, unit_vector,
+                                                     unit_vector_frame)
+from spark_sentiment_spark.plans.registry import (load, register,
+                                                  track_persist)
 
 
 KNN_SQL = """
@@ -66,9 +66,9 @@ def knn_cosine_topk(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     q = (emb.where(F.col("vec_id") < 5)
          .select(F.col("vec_id").alias("qid"),
-                 _as_double("embedding").alias("qe")))
-    c = emb.select("vec_id", "label", _as_double("embedding").alias("ce"))
-    cos = _dot(F.col("qe"), F.col("ce")) / (_norm(F.col("qe")) * _norm(F.col("ce")))
+                 as_double("embedding").alias("qe")))
+    c = emb.select("vec_id", "label", as_double("embedding").alias("ce"))
+    cos = dot(F.col("qe"), F.col("ce")) / (norm(F.col("qe")) * norm(F.col("ce")))
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("qid") != F.col("vec_id"))
@@ -107,7 +107,7 @@ def embedding_centroids(spark, sf_dir):
     columns via posexplode (the building block of IVF coarse quantization)."""
     emb = load(spark, sf_dir, "embeddings")
     per_dim = (
-        emb.select("label", F.posexplode(_as_double("embedding"))
+        emb.select("label", F.posexplode(as_double("embedding"))
                    .alias("i", "x"))
         .groupBy("label", "i")
         .agg(F.avg("x").alias("v"))
@@ -120,53 +120,6 @@ def embedding_centroids(spark, sf_dir):
         )
         .orderBy("label")
     )
-
-
-IVF_K, IVF_ASSIGN, IVF_PROBE, IVF_TOPK = 16, 2, 3, 10
-
-ANN_IVF_SQL = f"""
-WITH c AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
-), un AS (
-  SELECT vec_id, label,
-         list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS u
-  FROM c
-), seeds AS (
-  SELECT vec_id, u
-  FROM un ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-  LIMIT {IVF_K}
-), cent AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, u AS cu
-  FROM seeds
-), scored AS (
-  SELECT un.vec_id, un.label, un.u, cent.cell,
-         row_number() OVER (
-           PARTITION BY un.vec_id
-           ORDER BY round(list_dot_product(un.u, cent.cu), 6) DESC,
-                    cent.cell) AS rn
-  FROM un CROSS JOIN cent
-), assigned AS (
-  SELECT vec_id, label, u, cell FROM scored WHERE rn <= {IVF_ASSIGN}
-), qprobes AS (
-  SELECT vec_id AS qid, u AS qu, cell FROM scored
-  WHERE vec_id < 5 AND rn <= {IVF_PROBE}
-), cand AS (
-  SELECT DISTINCT q.qid, a.vec_id, a.label,
-         round(list_dot_product(q.qu, a.u), 6) AS cos
-  FROM qprobes q JOIN assigned a ON q.cell = a.cell
-  WHERE a.vec_id <> q.qid
-), ranked AS (
-  SELECT qid, vec_id, label, cos,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos DESC, vec_id) AS rn
-  FROM cand
-)
-SELECT qid, vec_id, CAST(label AS BIGINT) AS label,
-       cos AS cosine, CAST(rn AS BIGINT) AS rn
-FROM ranked
-WHERE rn <= {IVF_TOPK}
-ORDER BY qid, rn
-"""
 
 
 @register("ann_ivf_topk", sql=ANN_IVF_SQL, tags=("similarity",))
@@ -198,25 +151,9 @@ def ann_ivf_topk(spark, sf_dir):
     unlike vocab-sized tables these stay hint-safe at any corpus
     size."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", "label", unit.alias("u")), level=PER_CORPUS)
-
-    seeds = (vecs
-             .select("vec_id", "u",
-                     F.md5(F.col("vec_id").cast("string")).alias("h"))
-             .orderBy("h", "vec_id").limit(IVF_K))
-    cent = seeds.select(
-        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cell"),
-        F.col("u").alias("cu"))
-
-    sim = F.round(_dot(F.col("u"), F.col("cu")), 6)
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    scored = track_persist(
-        vecs.crossJoin(F.broadcast(cent))
-        .select("vec_id", "label", "u", "cell", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(wa)),
-        level=PER_CORPUS)  # n_cells rows per vector
+    vecs = unit_vector_frame(emb, "u", "label")
+    cent = ivf_centroids(vecs)
+    scored = track_persist(ivf_ranked(vecs, cent))  # n_cells rows per vector
     assigned = scored.where(F.col("rn") <= IVF_ASSIGN) \
         .select("vec_id", "label", "u", "cell")
     qprobes = (scored.where((F.col("vec_id") < 5)
@@ -226,7 +163,7 @@ def ann_ivf_topk(spark, sf_dir):
 
     cand = (assigned.join(F.broadcast(qprobes), "cell")
             .where(F.col("vec_id") != F.col("qid")))
-    cos = F.round(_dot(F.col("qu"), F.col("u")), 6)
+    cos = F.round(dot(F.col("qu"), F.col("u")), 6)
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         cand.select("qid", "vec_id",
@@ -278,25 +215,9 @@ def ann_ivf_bucketed_probe(spark, sf_dir):
     from spark_sentiment_spark.sources.bucketing import save_bucketed
 
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", "label", unit.alias("u")), level=PER_CORPUS)
-
-    seeds = (vecs
-             .select("vec_id", "u",
-                     F.md5(F.col("vec_id").cast("string")).alias("h"))
-             .orderBy("h", "vec_id").limit(IVF_K))
-    cent = seeds.select(
-        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cell"),
-        F.col("u").alias("cu"))
-
-    sim = F.round(_dot(F.col("u"), F.col("cu")), 6)
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    scored = track_persist(
-        vecs.crossJoin(F.broadcast(cent))
-        .select("vec_id", "label", "u", "cell", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(wa)),
-        level=PER_CORPUS)  # n_cells rows per vector
+    vecs = unit_vector_frame(emb, "u", "label")
+    cent = ivf_centroids(vecs)
+    scored = track_persist(ivf_ranked(vecs, cent))  # n_cells rows per vector
 
     nb = 8
     base = track_staging_dir(tempfile.mkdtemp(prefix="ivf_probe_"))
@@ -317,7 +238,7 @@ def ann_ivf_bucketed_probe(spark, sf_dir):
     cand = (spark.table(t_bat).hint("merge")
             .join(spark.table(t_idx), "cell")
             .where(F.col("vec_id") != F.col("qid")))
-    cos = F.round(_dot(F.col("qu"), F.col("u")), 6)
+    cos = F.round(dot(F.col("qu"), F.col("u")), 6)
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         cand.select("qid", "vec_id",
@@ -355,15 +276,12 @@ def dedup_embedding_cosine(spark, sf_dir):
     100 TB path. Norms are computed once per side before the join so the
     pair loop is one dot product, not three."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
     # Round-18 optimization (guide §2.4): both pair-join sides consumed
     # the normalize projection — persist the (vec_id, unit-vector) frame
     # so the per-vector norm+divide runs once, not once per side.
-    sides = track_persist(emb.select("vec_id", (F.transform(
-        e, lambda x: x / _norm(e))).alias("u")),
-        level=PER_CORPUS)  # one row per vector
+    sides = unit_vector_frame(emb, "u")  # one row per vector
     a, b = sides.alias("a"), sides.alias("b")
-    cos = _dot(F.col("a.u"), F.col("b.u"))
+    cos = dot(F.col("a.u"), F.col("b.u"))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .where(cos >= 0.4)
@@ -383,17 +301,6 @@ def dedup_embedding_cosine(spark, sf_dir):
 #: near-dup workloads target, the same config exceeds 0.99. Scale rule: keep
 #: tables fixed, grow planes ≈ log2(n/bucket_target) so per-bucket occupancy
 #: (and the in-bucket join) stays bounded as the corpus grows.
-#: table-size cache for the adaptive-planes rule: the count only feeds a
-#: log2, staleness across appends is harmless (planes move by whole bits).
-_ROW_COUNTS: dict[str, int] = {}
-
-
-def _row_count(spark, path: str) -> int:
-    if path not in _ROW_COUNTS:
-        _ROW_COUNTS[path] = spark.read.parquet(path).count()
-    return _ROW_COUNTS[path]
-
-
 ANN_LSH_TABLES = 12
 ANN_LSH_PLANES = 6
 ANN_LSH_DIM = 64
@@ -490,11 +397,11 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
         # measured 0.8s/run at sf0.1 — just to size an integer.
         import math
 
-        n = _row_count(spark, f"{sf_dir}/embeddings.parquet")
+        n = row_count(spark, f"{sf_dir}/embeddings.parquet")
         n_planes = max(ANN_LSH_PLANES,
                        math.ceil(math.log2(max(n, 1) / 16 or 1)))
 
-    e = _as_double("embedding")
+    e = as_double("embedding")
     # The T×P signature is one Arrow-batched matmul per partition:
     # (batch × dim) @ (dim × T·P) → sign bits → per-table radix pack.
     # This is the documented exception to the no-Python-hot-path rule:
@@ -530,12 +437,10 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
     # sigs is persisted: both sides of the bucket self-join read the cached
     # signatures instead of re-evaluating the T×P dot products.
     sigs = track_persist(emb.select(
-        "vec_id", F.posexplode(buckets).alias("t", "bucket")),
-        level=PER_CORPUS)  # n_tables rows per vector
+        "vec_id", F.posexplode(buckets).alias("t", "bucket")))
     # Vectors are L2-normalized ONCE here (2 norm passes per candidate
     # pair → 1 per vector): the re-rank cosine is then a bare dot product.
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")), level=PER_CORPUS)
+    vecs = unit_vector_frame(emb, "e")
 
     a, b = sigs.alias("a"), sigs.alias("b")
     cand = (
@@ -549,7 +454,7 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
     va, vb = vecs.alias("va"), vecs.alias("vb")
     # Round-19 rejected probe (guide §4.2 / §1.2; VERDICT r18 item 5): an
     # Arrow-batched pair cosine (order-preserving dimension-wise sum, same
-    # fold order as _dot, oracle-verified bit-identical at both SFs) was
+    # fold order as dot, oracle-verified bit-identical at both SFs) was
     # A/B'd against this expression re-rank with an INTERLEAVED min-of-8
     # in one session so host noise cancels, twice: expr 2.270 min /
     # 2.405 med vs arrow 2.248 / 2.506, then expr 2.365 / 2.458 vs arrow
@@ -561,7 +466,7 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
     # crossing the boundary once), the pair re-rank is serialization-bound.
     # Kept native; re-rank cost scales with candidate pairs, which the
     # n_planes scale rule above bounds per bucket as the corpus grows.
-    cos = _dot(F.col("va.e"), F.col("vb.e"))
+    cos = dot(F.col("va.e"), F.col("vb.e"))
     pairs = (
         cand.join(va, F.col("vec_a") == F.col("va.vec_id"))
         .join(vb, F.col("vec_b") == F.col("vb.vec_id"))
@@ -604,108 +509,17 @@ def embedding_quantize(spark, sf_dir):
     expressions (one pass, no shuffle, no Python); the quantized KNN
     recall floor is pinned in tests/test_similarity_recall.py."""
     emb = load(spark, sf_dir, "embeddings")
-    v = _as_double("embedding")
+    v = as_double("embedding")
     mx = F.array_max(F.transform(v, F.abs))
     deq = F.transform(v, lambda x: F.round(x * 127.0 / mx) * mx / 127.0)
     e = emb.select("vec_id", v.alias("v"), mx.alias("mx"), deq.alias("d"))
-    cos = _dot(F.col("v"), F.col("d")) / (
-        _norm(F.col("v")) * _norm(F.col("d")))
+    cos = dot(F.col("v"), F.col("d")) / (
+        norm(F.col("v")) * norm(F.col("d")))
     return (
         e.select("vec_id", F.round("mx", 6).alias("scale"),
                  F.round(1 - cos, 9).alias("cos_err"))
         .orderBy("vec_id")
     )
-
-
-#: PQ layout: M subvectors × K centroids (4-bit codes). 64 dims → 8×8-dim
-#: subspaces; 8 codes/vector vs 64 floats = 32× memory compression, the
-#: knob that decides whether a 100 TB embedding store fits in cluster RAM.
-PQ_M = 8
-PQ_K = 16
-
-
-PQ_RERANK = 200
-PQ_SUB = 64 // PQ_M  # subspace dim (embeddings are dim-64)
-
-
-def _pq_sql(topk: int = 10, rerank: int = PQ_RERANK) -> str:
-    sub = PQ_SUB
-    return f"""
-WITH c AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-), un AS (
-  SELECT vec_id,
-         list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS u
-  FROM c
-), seeds AS (
-  SELECT vec_id, u
-  FROM un ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-  LIMIT {PQ_K}
-), cb AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, u AS cu
-  FROM seeds
-), enc AS (
-  SELECT un.vec_id, m.m, cb.code,
-         list_dot_product(
-           list_transform(generate_series(1, {sub}),
-                          s -> un.u[m.m * {sub} + s]
-                               - cb.cu[m.m * {sub} + s]),
-           list_transform(generate_series(1, {sub}),
-                          s -> un.u[m.m * {sub} + s]
-                               - cb.cu[m.m * {sub} + s])) AS d2
-  FROM un
-  CROSS JOIN generate_series(0, {PQ_M - 1}) AS m(m)
-  CROSS JOIN cb
-), codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT vec_id, m, code,
-           row_number() OVER (PARTITION BY vec_id, m
-                              ORDER BY d2, code) AS rn
-    FROM enc)
-  WHERE rn = 1
-), qt AS (
-  SELECT q.vec_id AS qid, m.m, cb.code,
-         CAST(floor(list_dot_product(
-           list_transform(generate_series(1, {sub}),
-                          s -> q.u[m.m * {sub} + s]),
-           list_transform(generate_series(1, {sub}),
-                          s -> cb.cu[m.m * {sub} + s])) * 1000000)
-           AS BIGINT) AS ip_fp
-  FROM un q
-  CROSS JOIN generate_series(0, {PQ_M - 1}) AS m(m)
-  CROSS JOIN cb
-  WHERE q.vec_id < 5
-), adc AS (
-  SELECT qt.qid, codes.vec_id, sum(qt.ip_fp) AS adc_fp
-  FROM codes JOIN qt ON codes.m = qt.m AND codes.code = qt.code
-  WHERE codes.vec_id <> qt.qid
-  GROUP BY qt.qid, codes.vec_id
-), cand AS (
-  SELECT qid, vec_id FROM (
-    SELECT qid, vec_id,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY adc_fp DESC, vec_id) AS rn
-    FROM adc)
-  WHERE rn <= {rerank}
-), rer AS (
-  SELECT cand.qid, cand.vec_id,
-         list_dot_product(q.u, v.u) AS cos
-  FROM cand
-  JOIN un q ON cand.qid = q.vec_id
-  JOIN un v ON cand.vec_id = v.vec_id
-)
-SELECT qid, vec_id, round(cos, 6) AS cosine, CAST(rn AS BIGINT) AS rn
-FROM (
-  SELECT qid, vec_id, cos,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos DESC, vec_id) AS rn
-  FROM rer)
-WHERE rn <= {topk}
-ORDER BY qid, rn
-"""
-
-
-ANN_PQ_SQL = _pq_sql()
 
 
 @register("ann_pq_topk", sql=ANN_PQ_SQL, tags=("similarity",))
@@ -742,84 +556,21 @@ def ann_pq_topk(spark, sf_dir, topk: int = 10, rerank: int = PQ_RERANK):
     plane); encode is Arrow-batched and embarrassingly parallel; the ADC
     scan is linear with a per-qid top-``rerank`` window; re-rank touches
     rerank×queries rows."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")), level=PER_CORPUS)
-
-    # -- content-addressed codebooks: 16-row bounded driver fetch --------
-    sub = PQ_SUB
-    seed_rows = (vecs
-                 .select("vec_id", "e",
-                         F.md5(F.col("vec_id").cast("string")).alias("h"))
-                 .orderBy("h", "vec_id").limit(PQ_K)
-                 .select("vec_id", "e").collect())
-    seed_rows.sort(key=lambda r: r["vec_id"])   # code order = vec_id order
-    n_codes = len(seed_rows)   # min(corpus, PQ_K), like the oracle's LIMIT
+    vecs = unit_vector_frame(emb, "e")
+    n_codes, _, codebooks = pq_seed_codebooks(vecs)
     if n_codes == 0:
         # empty corpus: no quantizer exists — empty result, stable schema
         # (tests/test_empty_tables.py).
         return spark.createDataFrame(
             [], "qid long, vec_id long, cosine double, rn long")
-    cbmat = np.asarray([r["e"] for r in seed_rows], dtype=np.float64)
-    codebooks = np.ascontiguousarray(
-        cbmat.reshape(n_codes, PQ_M, sub).transpose(1, 0, 2))  # M × K × s
-
-    # -- encode: Arrow batched argmin, sequential-dim accumulation -------
-    @pandas_udf("array<int>")
-    def _encode(embs: pd.Series) -> pd.Series:
-        V = np.asarray(embs.tolist(), dtype=np.float64)     # batch × dim
-        parts = V.reshape(len(V), PQ_M, sub)                # b × M × s
-        d2 = np.zeros((len(V), PQ_M, n_codes))
-        for s in range(sub):  # sequential over dims == DuckDB fold order
-            diff = parts[:, :, None, s] - codebooks[None, :, :, s]
-            d2 += diff * diff
-        return pd.Series(d2.argmin(-1).astype(np.int32).tolist())
-
-    encoded = track_persist(vecs.select("vec_id",
-                                    _encode("e").alias("codes")),
-                        level=PER_CORPUS)  # one row per vector
-
-    # -- per-query integer ADC tables (M×K, broadcast) -------------------
+    encode = pq_encoder(codebooks, n_codes)
+    encoded = track_persist(
+        vecs.select("vec_id", encode("e").alias("codes")))  # row per vector
     queries = vecs.where(F.col("vec_id") < 5) \
         .select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")).collect()
-    probe_rows = []
-    for q in queries:
-        qv = np.asarray(q["qe"], dtype=np.float64).reshape(PQ_M, sub)
-        ip = np.zeros((PQ_M, n_codes))
-        for s in range(sub):  # sequential fold, then fixed-point floor
-            ip += qv[:, None, s] * codebooks[:, :, s]
-        tbl = np.floor(ip * 1e6).astype(np.int64).reshape(-1)
-        probe_rows.append((q["qid"], [int(x) for x in tbl],
-                           [float(x) for x in q["qe"]]))
-    probes = spark.createDataFrame(
-        probe_rows, "qid long, tbl array<long>, qe array<double>")
-
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(PQ_M - 1)), F.lit(0).cast("bigint"),
-        lambda acc, m: acc + F.element_at(
-            F.col("tbl"), (m * F.lit(n_codes)
-                           + F.element_at(F.col("codes"), m + 1) + 1)
-            .cast("int")))
-    w = Window.partitionBy("qid").orderBy(F.desc("adc"), F.asc("vec_id"))
-    cand = (encoded.crossJoin(F.broadcast(probes))
-            .where(F.col("vec_id") != F.col("qid"))
-            .select("qid", "vec_id", "qe", adc.alias("adc"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= rerank))
-
-    # -- exact re-rank of the short candidate list -----------------------
-    cos = _dot(F.col("qe"), F.col("e"))
-    w2 = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (cand.join(vecs, "vec_id")
-            .select("qid", "vec_id", cos.alias("cos"))
-            .withColumn("rn", F.row_number().over(w2).cast("long"))
-            .where(F.col("rn") <= topk)
-            .select("qid", "vec_id", F.round("cos", 6).alias("cosine"), "rn")
-            .orderBy("qid", "rn"))
+    probes = pq_adc_tables(spark, queries, codebooks, n_codes)
+    return pq_adc_topk(encoded, probes, vecs, n_codes, rerank, topk)
 
 
 @register("ann_pq_persisted_probe", sql=ANN_PQ_SQL,
@@ -864,303 +615,19 @@ def ann_pq_persisted_probe(spark, sf_dir, topk: int = 10,
     the artifact valid for the next batch — same append contract as the
     MinHash band index and the IVF cell index."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    # Round-19 optimization (guide §2.4): every staged-index entry point
-    # re-derived the unit-normalized frame per consumer — the codebook
-    # seed fetch, the cell assignment, the Arrow encode, the invariant
-    # count and the probe each paid the parquet scan + normalize.
-    # Persist it once (narrow: one row per vector).
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")),
-                         level=PER_CORPUS)
+    vecs = unit_vector_frame(emb, "e")
 
     # ---- phase 1: build + persist the quantized index (ONCE) -----------
-    base, n_codes = _pq_stage_index(spark, vecs)
+    base, n_codes = pq_stage_index(spark, vecs)
     if n_codes == 0:
         return spark.createDataFrame(
             [], "qid long, vec_id long, cosine double, rn long")
 
     # ---- phase 2: per-batch probe of the stored index -------------------
-    return _pq_probe(spark, vecs, base, n_codes, rerank, topk)
-
-
-def _pq_probe(spark, vecs, base: str, n_codes: int, rerank: int, topk: int):
-    """Phase-2 of the flat PQ index — the recurring per-batch cost,
-    callable on its own against pre-staged artifacts (scripts/
-    scale_probe.py times it separately from the build): ADC tables from
-    the PERSISTED codebook, integer ADC scan over the stored codes,
-    exact re-rank."""
-    cb = _pq_read_codebook(spark, base, n_codes)
-    queries = vecs.where(F.col("vec_id") < 5) \
-        .select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")).collect()
-    probes = _pq_adc_tables(spark, queries, cb, n_codes)
-
-    codes = spark.read.parquet(base + "/codes")
-    return _pq_adc_topk(codes, probes, vecs, n_codes, rerank, topk)
-
-
-def _pq_seed_codebooks(vecs):
-    """Content-addressed seed fetch shared by every staged quantizer
-    build: the PQ_K md5-smallest unit vectors (a 16-row bounded driver
-    fetch any engine replays), returned as (n_codes, cbmat, codebooks)
-    where cbmat is the K×dim seed matrix in vec_id order (row i = coarse
-    centroid of cell i for the IVF layer) and codebooks its M×K×sub
-    per-subspace view (codeword k of subspace m for the PQ layer).
-    n_codes == 0 marks an empty corpus."""
-    import numpy as np
-
-    seed_rows = (vecs
-                 .select("vec_id", "e",
-                         F.md5(F.col("vec_id").cast("string")).alias("h"))
-                 .orderBy("h", "vec_id").limit(PQ_K)
-                 .select("vec_id", "e").collect())
-    seed_rows.sort(key=lambda r: r["vec_id"])   # code order = vec_id order
-    n_codes = len(seed_rows)
-    if n_codes == 0:
-        return 0, None, None
-    cbmat = np.asarray([r["e"] for r in seed_rows], dtype=np.float64)
-    codebooks = np.ascontiguousarray(
-        cbmat.reshape(n_codes, PQ_M, PQ_SUB).transpose(1, 0, 2))  # M × K × s
-    return n_codes, cbmat, codebooks
-
-
-def _pq_encoder(codebooks, n_codes: int):
-    """The Arrow-batched PQ encode UDF (argmin codeword per subspace).
-    The per-code distance accumulates over subspace dims SEQUENTIALLY (a
-    dim-loop of vectorized +=, not np.sum) so the floats stay
-    byte-identical to DuckDB's left-to-right list_dot_product fold."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<int>")
-    def _encode(embs: pd.Series) -> pd.Series:
-        V = np.asarray(embs.tolist(), dtype=np.float64)     # batch × dim
-        parts = V.reshape(len(V), PQ_M, PQ_SUB)             # b × M × s
-        d2 = np.zeros((len(V), PQ_M, n_codes))
-        for s in range(PQ_SUB):  # sequential over dims == DuckDB fold order
-            diff = parts[:, :, None, s] - codebooks[None, :, :, s]
-            d2 += diff * diff
-        return pd.Series(d2.argmin(-1).astype(np.int32).tolist())
-
-    return _encode
-
-
-def _pq_stage_index(spark, vecs):
-    """Phase-1 PQ index builder shared by `ann_pq_persisted_probe` and
-    `streaming_pq_probe` (plans/streaming_queries.py): content-addressed
-    codebooks (the PQ_K md5-smallest vectors, replayable by any engine)
-    + the Arrow-batched sequential-dim encode, staged as the two parquet
-    artifacts a probe replays from — codes/ (vec_id, M small-int codes)
-    and codebook/ (M×K codewords). Returns (base_dir, n_codes);
-    n_codes == 0 marks an empty corpus (nothing staged)."""
-    import tempfile
-
-    from spark_sentiment_spark.plans.registry import track_staging_dir
-
-    n_codes, codebooks_kd, codebooks = _pq_seed_codebooks(vecs)
-    if n_codes == 0:
-        return None, 0
-    _encode = _pq_encoder(codebooks, n_codes)
-
-    base = track_staging_dir(tempfile.mkdtemp(prefix="pq_index_"))
-    vecs.select("vec_id", _encode("e").alias("codes")) \
-        .write.mode("overwrite").parquet(base + "/codes")
-    spark.createDataFrame(
-        [(int(m), int(k), [float(x) for x in codebooks[m, k]])
-         for m in range(PQ_M) for k in range(n_codes)],
-        "m int, code int, cw array<double>") \
-        .write.mode("overwrite").parquet(base + "/codebook")
-    return base, n_codes
-
-
-def _pq_read_codebook(spark, base: str, n_codes: int):
-    """Bounded M×K read of the PERSISTED codebook back into the ndarray
-    layout the ADC-table builder uses — probes replay from the artifact,
-    never from driver memory left over from the build."""
-    import numpy as np
-
-    cb_rows = spark.read.parquet(base + "/codebook").collect()
-    cb = np.zeros((PQ_M, n_codes, PQ_SUB))
-    for r in cb_rows:
-        cb[r["m"], r["code"]] = r["cw"]
-    return cb
-
-
-def _pq_adc_tables(spark, queries, cb, n_codes: int):
-    """Per-query fixed-point integer ADC tables (M×K inner products,
-    floor(ip·1e6)) from collected query rows (qid, qe) — the tiny
-    broadcast side of the ADC scan. Sequential fold over subspace dims
-    keeps the floats byte-identical to DuckDB's list_dot_product."""
-    import numpy as np
-
-    probe_rows = []
-    for q in queries:
-        qv = np.asarray(q["qe"], dtype=np.float64).reshape(PQ_M, PQ_SUB)
-        ip = np.zeros((PQ_M, n_codes))
-        for s in range(PQ_SUB):  # sequential fold, then fixed-point floor
-            ip += qv[:, None, s] * cb[:, :, s]
-        tbl = np.floor(ip * 1e6).astype(np.int64).reshape(-1)
-        probe_rows.append((q["qid"], [int(x) for x in tbl],
-                           [float(x) for x in q["qe"]]))
-    return spark.createDataFrame(
-        probe_rows, "qid long, tbl array<long>, qe array<double>")
-
-
-def _pq_adc_topk(codes, probes, vecs, n_codes: int, rerank: int, topk: int,
-                 cand=None):
-    """The ADC scan + exact re-rank shared verbatim by the persisted
-    batch probe, each streaming micro-batch, and the composed IVF+PQ
-    probe: integer table-lookup scores over the stored codes (never the
-    floats), per-qid top-``rerank`` window, exact cosine re-rank against
-    the embedding store, top-``topk`` out. By default every (query,
-    code-row) pair is scored (the full linear ADC scan of the flat PQ
-    index); a caller that already narrowed the candidate set — the
-    IVF+PQ probe joins probe cells to the cell-partitioned code table —
-    passes it as ``cand`` (columns qid, vec_id, codes, tbl, qe) and only
-    those pairs are scored."""
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(PQ_M - 1)), F.lit(0).cast("bigint"),
-        lambda acc, m: acc + F.element_at(
-            F.col("tbl"), (m * F.lit(n_codes)
-                           + F.element_at(F.col("codes"), m + 1) + 1)
-            .cast("int")))
-    if cand is None:
-        cand = (codes.crossJoin(F.broadcast(probes))
-                .where(F.col("vec_id") != F.col("qid")))
-    w = Window.partitionBy("qid").orderBy(F.desc("adc"), F.asc("vec_id"))
-    cand = (cand
-            .select("qid", "vec_id", "qe", adc.alias("adc"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= rerank))
-
-    cos = _dot(F.col("qe"), F.col("e"))
-    w2 = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (vecs.join(F.broadcast(cand), "vec_id")
-            .select("qid", "vec_id", cos.alias("cos"))
-            .withColumn("rn", F.row_number().over(w2).cast("long"))
-            .where(F.col("rn") <= topk)
-            .select("qid", "vec_id", F.round("cos", 6).alias("cosine"), "rn")
-            .orderBy("qid", "rn"))
+    return pq_probe(spark, vecs, base, n_codes, rerank, topk)
 
 
 # --- Composed IVF+PQ persisted index (the FAISS-IVFPQ production shape) -----
-
-IVFPQ_RERANK = 50
-
-
-def _ivfpq_sql(topk: int = 10, rerank: int = IVFPQ_RERANK,
-               extra_cols: str = "", cand_pred: str = "",
-               base_pred: str = "") -> str:
-    """The composed oracle: ANN_IVF_SQL's coarse chain (seeds → cells →
-    multi-assignment → query probes) spliced with _pq_sql's fine chain
-    (codebooks → encode → fixed-point ADC tables), candidates restricted
-    to probed cells BEFORE ADC scoring. With content-addressed seeds the
-    two layers share one seed CTE: cb.code doubles as the coarse cell id
-    (cell i's centroid IS seed vector i; codeword k of subspace m is its
-    m-th sub-vector) — standard IVFPQ trains the two quantizers
-    separately, but sampled quantizers seeded from the same rows
-    coincide, which is exactly what makes the composition exactly
-    replayable by any engine.
-
-    ``base_pred`` (default "" — generated default output byte-identical)
-    restricts the INDEXED corpus in the base CTE: the quantizer-refresh
-    oracle passes the survivor predicate here, so seeds, cells, codes
-    and candidates all re-derive from the post-delete corpus — exactly
-    what retraining on survivors means."""
-    sub = PQ_SUB
-    return f"""
-WITH c AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings{base_pred}
-), un AS (
-  SELECT vec_id,
-         list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS u
-  FROM c
-), seeds AS (
-  SELECT vec_id, u
-  FROM un ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-  LIMIT {PQ_K}
-), cb AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, u AS cu
-  FROM seeds
-), cscore AS (
-  SELECT un.vec_id, cb.code AS cell,
-         row_number() OVER (
-           PARTITION BY un.vec_id
-           ORDER BY round(list_dot_product(un.u, cb.cu), 6) DESC,
-                    cb.code) AS rn
-  FROM un CROSS JOIN cb
-), assigned AS (
-  SELECT vec_id, cell FROM cscore WHERE rn <= {IVF_ASSIGN}
-), qprobes AS (
-  SELECT vec_id AS qid, cell FROM cscore
-  WHERE vec_id < 5 AND rn <= {IVF_PROBE}
-), enc AS (
-  SELECT un.vec_id, m.m, cb.code,
-         list_dot_product(
-           list_transform(generate_series(1, {sub}),
-                          s -> un.u[m.m * {sub} + s]
-                               - cb.cu[m.m * {sub} + s]),
-           list_transform(generate_series(1, {sub}),
-                          s -> un.u[m.m * {sub} + s]
-                               - cb.cu[m.m * {sub} + s])) AS d2
-  FROM un
-  CROSS JOIN generate_series(0, {PQ_M - 1}) AS m(m)
-  CROSS JOIN cb
-), codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT vec_id, m, code,
-           row_number() OVER (PARTITION BY vec_id, m
-                              ORDER BY d2, code) AS rn
-    FROM enc)
-  WHERE rn = 1
-), qt AS (
-  SELECT q.vec_id AS qid, m.m, cb.code,
-         CAST(floor(list_dot_product(
-           list_transform(generate_series(1, {sub}),
-                          s -> q.u[m.m * {sub} + s]),
-           list_transform(generate_series(1, {sub}),
-                          s -> cb.cu[m.m * {sub} + s])) * 1000000)
-           AS BIGINT) AS ip_fp
-  FROM un q
-  CROSS JOIN generate_series(0, {PQ_M - 1}) AS m(m)
-  CROSS JOIN cb
-  WHERE q.vec_id < 5
-), cellcand AS (
-  SELECT DISTINCT q.qid, a.vec_id
-  FROM qprobes q JOIN assigned a ON q.cell = a.cell
-  WHERE a.vec_id <> q.qid{cand_pred}
-), adc AS (
-  SELECT cc.qid, cc.vec_id, sum(qt.ip_fp) AS adc_fp
-  FROM cellcand cc
-  JOIN codes ON codes.vec_id = cc.vec_id
-  JOIN qt ON qt.qid = cc.qid AND qt.m = codes.m AND qt.code = codes.code
-  GROUP BY cc.qid, cc.vec_id
-), cand AS (
-  SELECT qid, vec_id FROM (
-    SELECT qid, vec_id,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY adc_fp DESC, vec_id) AS rn
-    FROM adc)
-  WHERE rn <= {rerank}
-), rer AS (
-  SELECT cand.qid, cand.vec_id,
-         list_dot_product(q.u, v.u) AS cos
-  FROM cand
-  JOIN un q ON cand.qid = q.vec_id
-  JOIN un v ON cand.vec_id = v.vec_id
-)
-SELECT qid, vec_id, round(cos, 6) AS cosine, CAST(rn AS BIGINT) AS rn{extra_cols}
-FROM (
-  SELECT qid, vec_id, cos,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos DESC, vec_id) AS rn
-  FROM rer)
-WHERE rn <= {topk}
-ORDER BY qid, rn
-"""
-
-
-ANN_IVFPQ_SQL = _ivfpq_sql()
 
 # The compaction oracle: the probe result verbatim (compaction moves
 # bytes, never rows) PLUS the layout's part-file counts computed by the
@@ -1173,81 +640,11 @@ ANN_IVFPQ_SQL = _ivfpq_sql()
 # rewrites each cell to one file: files_after = distinct cells.
 N_COMPACT_BATCHES = 4
 
-ANN_IVFPQ_COMPACT_SQL = _ivfpq_sql(extra_cols=f""",
+ANN_IVFPQ_COMPACT_SQL = ivfpq_sql(extra_cols=f""",
        (SELECT count(*) FROM (
           SELECT DISTINCT vec_id % {N_COMPACT_BATCHES} AS b, cell
           FROM assigned) fb) AS files_before,
        (SELECT count(DISTINCT cell) FROM assigned) AS files_after""")
-
-
-def _ivfpq_stage_index(spark, vecs, code_batches: int = 1,
-                       prefix: str = "ivfpq_index_"):
-    """Phase-1 composed IVF+PQ index builder: ONE corpus pass computes
-    both quantizer layers — multi-assignment coarse cells (the
-    `ann_ivf_topk` machinery) and M 4-bit PQ codes (the `_pq_encoder`
-    machinery, same content-addressed seeds) — and stages three parquet
-    artifacts: codes/ PARTITIONED BY cell (so a probe's directory
-    listing already prunes to visited cells), centroids/ (K rows, probe
-    routing replays from the artifact), codebook/ (M×K codewords for
-    ADC tables). Returns (base, n_codes); n_codes == 0 marks an empty
-    corpus (nothing staged).
-
-    ``code_batches > 1`` writes the code table as that many successive
-    partitionBy-cell APPENDs (slice b = vec_id % code_batches), each
-    hash-clustered on cell so a cell directory gains exactly one file
-    per batch touching it — the micro-batch ingest shape that fragments
-    cell partitions and that `ann_ivfpq_compacted_probe`'s maintenance
-    pass exists to clean up. The staged ROWS are identical either way
-    (quantizer artifacts come from the full corpus in both paths; only
-    the code write is sliced), which is what makes compact-then-probe
-    comparable to the one-shot index."""
-    import tempfile
-
-    from spark_sentiment_spark.plans.registry import (track_persist,
-                                                      track_staging_dir)
-
-    n_codes, cbmat, codebooks = _pq_seed_codebooks(vecs)
-    if n_codes == 0:
-        return None, 0
-    _encode = _pq_encoder(codebooks, n_codes)
-
-    cent = spark.createDataFrame(
-        [(int(i), [float(x) for x in cbmat[i]]) for i in range(n_codes)],
-        "cell int, cu array<double>")
-    sim = F.round(_dot(F.col("e"), F.col("cu")), 6)
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    cells = (vecs.crossJoin(F.broadcast(cent))
-             .select("vec_id", "cell", sim.alias("sim"))
-             .withColumn("rn", F.row_number().over(wa))
-             .where(F.col("rn") <= IVF_ASSIGN)
-             .select("vec_id", "cell"))
-
-    base = track_staging_dir(tempfile.mkdtemp(prefix=prefix))
-    coded = cells.join(vecs.select("vec_id", _encode("e").alias("codes")),
-                       "vec_id")
-    if code_batches == 1:
-        (coded.repartition(8, F.col("cell"))
-         .write.mode("overwrite").partitionBy("cell")
-         .parquet(base + "/codes"))
-    else:
-        # One narrow (vec_id, cell, codes) frame serves every batch
-        # write — unpersisted, each append re-runs the assignment
-        # cross-join AND the Arrow encode over the whole corpus
-        # (round-14 plan-audit gotcha #3: k references re-expand the
-        # DAG k times).
-        coded = track_persist(coded, level=PER_CORPUS)
-        for b in range(code_batches):
-            (coded.where(F.col("vec_id") % code_batches == b)
-             .repartition(F.col("cell"))
-             .write.mode("overwrite" if b == 0 else "append")
-             .partitionBy("cell").parquet(base + "/codes"))
-    cent.write.mode("overwrite").parquet(base + "/centroids")
-    spark.createDataFrame(
-        [(int(m), int(k), [float(x) for x in codebooks[m, k]])
-         for m in range(PQ_M) for k in range(n_codes)],
-        "m int, code int, cw array<double>") \
-        .write.mode("overwrite").parquet(base + "/codebook")
-    return base, n_codes
 
 
 @register("ann_ivfpq_persisted_probe", sql=ANN_IVFPQ_SQL,
@@ -1276,13 +673,13 @@ def ann_ivfpq_persisted_probe(spark, sf_dir, topk: int = 10,
     tests/test_plan_shape.py), which is the whole point of the
     composition: expected I/O is probe/K of the (already 32×-compressed)
     codes. Candidates join the probe-cell list, dedupe the
-    multi-assignment overlap, ADC-score via the same `_pq_adc_topk`
+    multi-assignment overlap, ADC-score via the same `pq_adc_topk`
     integer tables as the flat PQ probe, and exact-re-rank the top
     ``rerank`` against the embedding store. Zero Python nodes in the
     probe plan (the Arrow encode lives in the build phase).
 
     Exact oracle: ANN_IVF_SQL's coarse CTE chain composed with
-    _pq_sql's fine chain — candidates restricted to probed cells before
+    pq_sql's fine chain — candidates restricted to probed cells before
     ADC. rerank=50 (vs the flat probe's 200) keeps the ADC cut ACTIVE
     on the test fixtures (a probed-cell candidate set is ~6/16 of the
     corpus, so 200 would cover it entirely and reduce the query to pure
@@ -1299,86 +696,16 @@ def ann_ivfpq_persisted_probe(spark, sf_dir, topk: int = 10,
     the same append contract as the IVF cell index and the MinHash band
     index."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    # Round-19 optimization (guide §2.4): every staged-index entry point
-    # re-derived the unit-normalized frame per consumer — the codebook
-    # seed fetch, the cell assignment, the Arrow encode, the invariant
-    # count and the probe each paid the parquet scan + normalize.
-    # Persist it once (narrow: one row per vector).
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")),
-                         level=PER_CORPUS)
+    vecs = unit_vector_frame(emb, "e")
 
     # ---- phase 1: build + persist the composed index (ONCE) ------------
-    base, n_codes = _ivfpq_stage_index(spark, vecs)
+    base, n_codes = ivfpq_stage_index(spark, vecs)
     if n_codes == 0:
         return spark.createDataFrame(
             [], "qid long, vec_id long, cosine double, rn long")
 
     # ---- phase 2: per-batch probe ---------------------------------------
-    return _ivfpq_probe(spark, vecs, base, n_codes, rerank, topk)
-
-
-def _ivfpq_probe(spark, vecs, base: str, n_codes: int, rerank: int,
-                 topk: int, queries=None, n_probe: int = IVF_PROBE,
-                 codes_subdir: str = "codes", tombstones=None):
-    """Phase-2 of the composed IVF+PQ index — the recurring per-batch
-    cost, callable on its own against pre-staged artifacts
-    (scripts/scale_probe.py times it separately from the build;
-    `streaming_ivfpq_probe` runs it per micro-batch with that batch's
-    ``queries`` frame (qid, qe) — default is the standard 5-query
-    batch). ``n_probe`` (visited cells per query) and ``rerank`` are
-    the two knobs of the recall/cost tradeoff — more probes read more
-    code partitions, deeper rerank exact-scores more candidates; the
-    measured curve is in PLANS.md and its monotonicity is pinned in
-    tests/test_similarity_recall.py.
-
-    Query routing replays from the persisted centroids — same ranking
-    as the inline IVF (round-6dp sim desc, cell asc), a 16-row
-    broadcast and a ≤ queries×n_probe collect (bounded control
-    plane, like the codebook fetch)."""
-    if queries is None:
-        queries = vecs.where(F.col("vec_id") < 5) \
-            .select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
-    cent = spark.read.parquet(base + "/centroids")
-    sim = F.round(_dot(F.col("qe"), F.col("cu")), 6)
-    wq = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("cell"))
-    qcell_rows = (queries
-                  .crossJoin(F.broadcast(cent))
-                  .select("qid", "cell", sim.alias("sim"))
-                  .withColumn("rn", F.row_number().over(wq))
-                  .where(F.col("rn") <= n_probe)
-                  .select("qid", "cell").collect())
-    visited = sorted({int(r["cell"]) for r in qcell_rows})
-    qcells = spark.createDataFrame(
-        [(int(r["qid"]), int(r["cell"])) for r in qcell_rows],
-        "qid long, cell int")
-
-    cb = _pq_read_codebook(spark, base, n_codes)
-    probes = _pq_adc_tables(spark, queries.collect(), cb, n_codes)
-
-    # The visited-cell predicate prunes the partitioned code table at the
-    # directory level — the probe never reads an unvisited cell's codes.
-    # ``codes_subdir`` lets a maintenance pass (compaction) stage a
-    # rewritten layout next to the original and serve probes from it.
-    codes = (spark.read.parquet(f"{base}/{codes_subdir}")
-             .where(F.col("cell").isin(visited)))
-    if tombstones is not None:
-        # Logical deletes applied at scan time: a broadcast LEFT ANTI
-        # against the (small) delete set — the deletion-vector pattern;
-        # the code table itself is never shuffled or rewritten here
-        # (the physical rewrite is the purge pass, pinned identical in
-        # tests/test_round15_queries.py).
-        codes = codes.join(F.broadcast(tombstones.select("vec_id")),
-                           "vec_id", "left_anti")
-    cand = (codes.join(F.broadcast(qcells), "cell")
-            .where(F.col("vec_id") != F.col("qid"))
-            # multi-assignment means a candidate can match a query via
-            # two cells — dedupe before ADC or rn double-counts it
-            .dropDuplicates(["qid", "vec_id"])
-            .join(F.broadcast(probes), "qid"))
-    return _pq_adc_topk(codes, probes, vecs, n_codes, rerank, topk,
-                        cand=cand)
+    return ivfpq_probe(spark, vecs, base, n_codes, rerank, topk)
 
 
 # Deterministic delete set for the tombstone demo: every 7th vector by
@@ -1387,7 +714,7 @@ def _ivfpq_probe(spark, vecs, base: str, n_codes: int, rerank: int,
 # would only change which qids appear, muddying the demo.
 TOMB_MOD, TOMB_RES = 7, 6
 
-ANN_IVFPQ_TOMBSTONE_SQL = _ivfpq_sql(
+ANN_IVFPQ_TOMBSTONE_SQL = ivfpq_sql(
     cand_pred=f"\n    AND a.vec_id % {TOMB_MOD} <> {TOMB_RES}")
 
 
@@ -1407,7 +734,7 @@ def ann_ivfpq_tombstone_probe(spark, sf_dir, topk: int = 10,
       scan (the deletion-vector pattern Delta/Iceberg use): the
       quantizer artifacts and the cell-partitioned code table stay
       byte-untouched, a deleted vector simply stops being a candidate.
-      The rest of the probe is the unmodified `_ivfpq_probe` chain —
+      The rest of the probe is the unmodified `ivfpq_probe` chain —
       routing from persisted centroids, directory-pruned code scan,
       integer-ADC, exact re-rank.
     * PHYSICAL purge (pinned in tests/test_round15_queries.py): the
@@ -1432,25 +759,17 @@ def ann_ivfpq_tombstone_probe(spark, sf_dir, topk: int = 10,
     is one linear anti-join pass over the compressed codes, per-cell
     independent like compaction. No Python anywhere."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    # Round-19 optimization (guide §2.4): every staged-index entry point
-    # re-derived the unit-normalized frame per consumer — the codebook
-    # seed fetch, the cell assignment, the Arrow encode, the invariant
-    # count and the probe each paid the parquet scan + normalize.
-    # Persist it once (narrow: one row per vector).
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")),
-                         level=PER_CORPUS)
+    vecs = unit_vector_frame(emb, "e")
 
-    base, n_codes = _ivfpq_stage_index(spark, vecs)
+    base, n_codes = ivfpq_stage_index(spark, vecs)
     if n_codes == 0:
         return spark.createDataFrame(
             [], "qid long, vec_id long, cosine double, rn long")
 
     tomb = (vecs.where((F.col("vec_id") % TOMB_MOD) == TOMB_RES)
             .select("vec_id"))
-    return _ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
-                        tombstones=tomb)
+    return ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
+                       tombstones=tomb)
 
 
 def _count_cell_parts(codes_dir: str) -> int:
@@ -1509,20 +828,12 @@ def ann_ivfpq_compacted_probe(spark, sf_dir, topk: int = 10,
     threshold. Probe cost afterwards returns to the one-shot-index
     baseline: probe/K of the cells, one file each."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    # Round-19 optimization (guide §2.4): every staged-index entry point
-    # re-derived the unit-normalized frame per consumer — the codebook
-    # seed fetch, the cell assignment, the Arrow encode, the invariant
-    # count and the probe each paid the parquet scan + normalize.
-    # Persist it once (narrow: one row per vector).
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")),
-                         level=PER_CORPUS)
+    vecs = unit_vector_frame(emb, "e")
 
     # ---- build + append: the fragmented micro-batch layout -------------
-    base, n_codes = _ivfpq_stage_index(spark, vecs,
-                                       code_batches=N_COMPACT_BATCHES,
-                                       prefix="ivfpq_compact_")
+    base, n_codes = ivfpq_stage_index(spark, vecs,
+                                      code_batches=N_COMPACT_BATCHES,
+                                      prefix="ivfpq_compact_")
     if n_codes == 0:
         return spark.createDataFrame(
             [], "qid long, vec_id long, cosine double, rn long, "
@@ -1537,8 +848,8 @@ def ann_ivfpq_compacted_probe(spark, sf_dir, topk: int = 10,
     files_after = _count_cell_parts(base + "/codes_compact")
 
     # ---- probe the compacted index --------------------------------------
-    res = _ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
-                       codes_subdir="codes_compact")
+    res = ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
+                      codes_subdir="codes_compact")
     return (res
             .withColumn("files_before",
                         F.lit(files_before).cast("bigint"))
@@ -1556,7 +867,7 @@ def ann_ivfpq_compacted_probe(spark, sf_dir, topk: int = 10,
 # with a raised threshold in tests/test_round16_queries.py.
 REFRESH_PCT = 10
 
-ANN_IVFPQ_REFRESH_SQL = _ivfpq_sql(
+ANN_IVFPQ_REFRESH_SQL = ivfpq_sql(
     base_pred=f" WHERE vec_id % {TOMB_MOD} <> {TOMB_RES}",
     extra_cols=f""",
        (SELECT count(*) FROM embeddings
@@ -1592,7 +903,7 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
       survivors and rebuild the index. Content-addressed seeds make the
       retrain deterministic — the refreshed coarse cells and codebook
       are exactly the composed-IVFPQ construction applied to the
-      survivor corpus, so the oracle is `_ivfpq_sql` with the survivor
+      survivor corpus, so the oracle is `ivfpq_sql` with the survivor
       predicate in its base CTE (seeds, cells, codes, candidates all
       re-derive — no new SQL machinery) plus the decision metrics as
       scalar subqueries over the raw table (equal to the index-derived
@@ -1627,18 +938,10 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
     the stale index answers (tombstone-correct) until the refreshed
     artifacts are staged. No Python on any data path."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    # Round-19 optimization (guide §2.4): every staged-index entry point
-    # re-derived the unit-normalized frame per consumer — the codebook
-    # seed fetch, the cell assignment, the Arrow encode, the invariant
-    # count and the probe each paid the parquet scan + normalize.
-    # Persist it once (narrow: one row per vector).
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")),
-                         level=PER_CORPUS)
+    vecs = unit_vector_frame(emb, "e")
 
     # ---- the standing index + accumulated deletes -----------------------
-    base, n_codes = _ivfpq_stage_index(spark, vecs, prefix="ivfpq_refresh_")
+    base, n_codes = ivfpq_stage_index(spark, vecs, prefix="ivfpq_refresh_")
     if n_codes == 0:
         return spark.createDataFrame(
             [], "qid long, vec_id long, cosine double, rn long, "
@@ -1675,8 +978,8 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
     # ---- act: retrain on survivors, or keep serving the stale index -----
     if refreshed:
         survivors = vecs.where((F.col("vec_id") % TOMB_MOD) != TOMB_RES)
-        base2, n_codes2 = _ivfpq_stage_index(spark, survivors,
-                                             prefix="ivfpq_refreshed_")
+        base2, n_codes2 = ivfpq_stage_index(spark, survivors,
+                                            prefix="ivfpq_refreshed_")
         if n_codes2 == 0:
             # full takedown: every indexed vector deleted — nothing to
             # retrain on and nothing to probe (engine-grade degenerate
@@ -1684,10 +987,10 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
             return spark.createDataFrame(
                 [], "qid long, vec_id long, cosine double, rn long, "
                     "tomb_rows long, indexed_rows long, refreshed long")
-        res = _ivfpq_probe(spark, survivors, base2, n_codes2, rerank, topk)
+        res = ivfpq_probe(spark, survivors, base2, n_codes2, rerank, topk)
     else:
-        res = _ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
-                           tombstones=tomb)
+        res = ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
+                          tombstones=tomb)
     return (res
             .withColumn("tomb_rows", F.lit(tomb_rows).cast("bigint"))
             .withColumn("indexed_rows", F.lit(indexed_rows).cast("bigint"))
@@ -1827,13 +1130,12 @@ def multiprobe_candidates(emb, n_tables: int = MP_TABLES,
             out[:, f + 1::per_probe] = home ^ mask
         return pd.Series(out.tolist())
 
-    e = _as_double("embedding")
+    e = as_double("embedding")
     sigs = track_persist(emb.select(
         "vec_id", F.posexplode(_probe_buckets(e)).alias("idx", "bucket"))
         .select("vec_id",
                 (F.col("idx") / per_probe).cast("int").alias("t"),
-                (F.col("idx") % per_probe).alias("slot"), "bucket"),
-        level=PER_CORPUS)  # n_probes rows per vector
+                (F.col("idx") % per_probe).alias("slot"), "bucket"))
     homes = sigs.where(F.col("slot") == 0).select("vec_id", "t", "bucket")
     p, h = sigs.alias("p"), homes.alias("h")
     return (p.join(h, (F.col("p.t") == F.col("h.t"))
@@ -1878,14 +1180,12 @@ def dedup_embedding_multiprobe(spark, sf_dir):
     import math
 
     emb = load(spark, sf_dir, "embeddings")
-    n = _row_count(spark, f"{sf_dir}/embeddings.parquet")
+    n = row_count(spark, f"{sf_dir}/embeddings.parquet")
     n_planes = max(MP_PLANES, math.ceil(math.log2(max(n, 1) / 16 or 1)))
     cand = multiprobe_candidates(emb, n_planes=n_planes)
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", unit.alias("u")), level=PER_CORPUS)
+    vecs = unit_vector_frame(emb, "u")
     va, vb = vecs.alias("va"), vecs.alias("vb")
-    cos = _dot(F.col("va.u"), F.col("vb.u"))
+    cos = dot(F.col("va.u"), F.col("vb.u"))
     return (cand.join(va, F.col("vec_a") == F.col("va.vec_id"))
             .join(vb, F.col("vec_b") == F.col("vb.vec_id"))
             .where(cos >= MP_TAU)
@@ -1933,17 +1233,15 @@ def decontaminate_semantic(spark, sf_dir):
     import math
 
     emb = load(spark, sf_dir, "embeddings")
-    n = _row_count(spark, f"{sf_dir}/embeddings.parquet")
+    n = row_count(spark, f"{sf_dir}/embeddings.parquet")
     n_planes = max(MP_PLANES, math.ceil(math.log2(max(n, 1) / 16 or 1)))
     is_eval_a = F.col("vec_a") % 11 == 0
     is_eval_b = F.col("vec_b") % 11 == 0
     cand = (multiprobe_candidates(emb, n_planes=n_planes)
             .where(is_eval_a != is_eval_b))
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", unit.alias("u")), level=PER_CORPUS)
+    vecs = unit_vector_frame(emb, "u")
     va, vb = vecs.alias("va"), vecs.alias("vb")
-    cos = _dot(F.col("va.u"), F.col("vb.u"))
+    cos = dot(F.col("va.u"), F.col("vb.u"))
     return (cand.join(va, F.col("vec_a") == F.col("va.vec_id"))
             .join(vb, F.col("vec_b") == F.col("vb.vec_id"))
             .where(cos >= MP_TAU)
@@ -2018,10 +1316,10 @@ def knn_classify(spark, sf_dir):
     q = (emb.where(F.col("vec_id") < KNN_CLASSIFY_NQ)
          .select(F.col("vec_id").alias("qid"),
                  F.col("label").alias("true_label"),
-                 _as_double("embedding").alias("qe")))
-    c = emb.select("vec_id", "label", _as_double("embedding").alias("ce"))
-    cos = (_dot(F.col("qe"), F.col("ce"))
-           / (_norm(F.col("qe")) * _norm(F.col("ce"))))
+                 as_double("embedding").alias("qe")))
+    c = emb.select("vec_id", "label", as_double("embedding").alias("ce"))
+    cos = (dot(F.col("qe"), F.col("ce"))
+           / (norm(F.col("qe")) * norm(F.col("ce"))))
     w_rank = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
     topk = (c.crossJoin(F.broadcast(q))
             .where(F.col("qid") != F.col("vec_id"))
@@ -2118,23 +1416,9 @@ def knn_classify_ivf(spark, sf_dir):
     join only their probed cells, and per-query work is cell-occupancy-
     bounded; the vote stays a (query × labels-in-topk) hash agg."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", "label", unit.alias("u")), level=PER_CORPUS)
-    seeds = (vecs
-             .select("vec_id", "u",
-                     F.md5(F.col("vec_id").cast("string")).alias("h"))
-             .orderBy("h", "vec_id").limit(IVF_K))
-    cent = seeds.select(
-        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cell"),
-        F.col("u").alias("cu"))
-    sim = F.round(_dot(F.col("u"), F.col("cu")), 6)
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    scored = track_persist(
-        vecs.crossJoin(F.broadcast(cent))
-        .select("vec_id", "label", "u", "cell", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(wa)),
-        level=PER_CORPUS)  # n_cells rows per vector
+    vecs = unit_vector_frame(emb, "u", "label")
+    cent = ivf_centroids(vecs)
+    scored = track_persist(ivf_ranked(vecs, cent))  # n_cells rows per vector
     assigned = scored.where(F.col("rn") <= IVF_ASSIGN) \
         .select("vec_id", "label", "u", "cell")
     qprobes = (scored.where((F.col("vec_id") < KNN_CLASSIFY_NQ)
@@ -2142,7 +1426,7 @@ def knn_classify_ivf(spark, sf_dir):
                .select(F.col("vec_id").alias("qid"),
                        F.col("label").alias("true_label"),
                        F.col("u").alias("qu"), "cell"))
-    cos = F.round(_dot(F.col("qu"), F.col("u")), 6)
+    cos = F.round(dot(F.col("qu"), F.col("u")), 6)
     cand = (assigned.join(F.broadcast(qprobes), "cell")
             .where(F.col("vec_id") != F.col("qid"))
             .select("qid", "true_label", "vec_id", "label",
@@ -2228,11 +1512,7 @@ def embedding_outliers(spark, sf_dir):
     array dot per row; label stats one more bounded agg. Three linear
     passes, no pairwise anything."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    un = track_persist(emb.select(
-        "vec_id", "label",
-        F.transform(e, lambda x: x / _norm(e)).alias("u")),
-        level=PER_CORPUS)  # one row per vector
+    un = unit_vector_frame(emb, "u", "label")
     per_dim = (un.select("label", F.posexplode("u").alias("i", "x"))
                .groupBy("label", "i").agg(F.avg("x").alias("v")))
     cent = (per_dim.groupBy("label")
@@ -2240,12 +1520,11 @@ def embedding_outliers(spark, sf_dir):
                  .alias("iv"))
             .select("label",
                     F.expr("transform(iv, s -> s.v)").alias("cu")))
-    cos = F.round(_dot(F.col("u"), F.col("cu"))
-                  / _norm(F.col("cu")), 6)
+    cos = F.round(dot(F.col("u"), F.col("cu"))
+                  / norm(F.col("cu")), 6)
     scored = track_persist(
         un.join(F.broadcast(cent), "label")
-        .select("vec_id", "label", cos.alias("cos")),
-        level=PER_CORPUS)  # one narrow row per vector
+        .select("vec_id", "label", cos.alias("cos")))
     stats = scored.groupBy("label").agg(
         F.avg("cos").alias("mu"), F.stddev_pop("cos").alias("sd"))
     z_raw = F.round((F.col("cos") - F.col("mu")) / F.col("sd"), 6)
@@ -2348,11 +1627,10 @@ def embedding_kmeans_iter(spark, sf_dir):
     The movement join is vec_id-local. A real driver loop would
     checkpoint per round exactly like `token_pagerank`."""
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
+    unit = unit_vector("embedding")
     ui = F.transform(unit, lambda x: F.floor(x * KMEANS_GRID)
                      .cast("double"))
-    un = track_persist(emb.select("vec_id", ui.alias("ui")), level=PER_CORPUS)
+    un = track_persist(emb.select("vec_id", ui.alias("ui")))
     seeds = (un.select("vec_id", "ui",
                        F.md5(F.col("vec_id").cast("string")).alias("h"))
              .orderBy("h", "vec_id").limit(KMEANS_K))
@@ -2364,11 +1642,10 @@ def embedding_kmeans_iter(spark, sf_dir):
     a0 = track_persist(
         un.crossJoin(F.broadcast(cent0))
         .select("vec_id", "ui", "cell",
-                _dot(F.col("ui"), F.col("cu")).alias("score"))
+                dot(F.col("ui"), F.col("cu")).alias("score"))
         .withColumn("rn", F.row_number().over(w_a))
         .where(F.col("rn") == 1)
-        .select("vec_id", "ui", "cell"),
-        level=PER_CORPUS)  # one row per vector
+        .select("vec_id", "ui", "cell"))  # one row per vector
     n0 = a0.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
     cent1 = (a0.select("cell", F.posexplode("ui").alias("i", "x"))
              .groupBy("cell", "i").agg(F.sum("x").alias("s"))
@@ -2379,7 +1656,7 @@ def embedding_kmeans_iter(spark, sf_dir):
              .join(n0, "cell"))
     a1 = (un.crossJoin(F.broadcast(cent1))
           .select("vec_id", "cell",
-                  (_dot(F.col("ui"), F.col("sv")) / F.col("n"))
+                  (dot(F.col("ui"), F.col("sv")) / F.col("n"))
                   .alias("score"))
           .withColumn("rn", F.row_number().over(w_a))
           .where(F.col("rn") == 1)

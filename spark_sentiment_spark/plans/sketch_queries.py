@@ -19,65 +19,34 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spark_sentiment_spark.functions.text import WS_TOKENS_SQL
+from spark_sentiment_spark.operators.sketch import (HLL_A, HLL_BITS,
+                                                    HLL_BUCKET, HLL_M,
+                                                    HLL_POW2, HLL_RHO,
+                                                    hexpoly, hll_sum)
 from spark_sentiment_spark.plans.registry import (load, register,
                                                   track_persist)
 
-
-def _hexpoly(col: str, start: int, n: int) -> str:
-    """Integer value of hex chars [start, start+n) of ``col`` (1-based),
-    as SQL text valid and identical in Spark SQL and DuckDB (instr /
-    substring / integer arithmetic only)."""
-    terms = " + ".join(
-        f"CAST(instr('0123456789abcdef', substring({col}, {start + i}, 1))"
-        f" - 1 AS BIGINT) * {16 ** (n - 1 - i)}"
-        for i in range(n))
-    return f"({terms})"
-
-
-# --- HyperLogLog-style distinct-count sketch --------------------------------
-
-_HLL_M = 256          # 2^8 buckets (first 2 hex chars)
-_HLL_BITS = 40        # tail width: next 10 hex chars
-# alpha_m * m^2 * 2^BITS+1 pre-folded into one double literal; both engines
-# parse the identical decimal literal, so the final division A / S is one
-# correctly-rounded IEEE op on identical operands.
-_HLL_A = repr(0.7213 / (1 + 1.079 / _HLL_M) * _HLL_M * _HLL_M
-              * float(2 ** (_HLL_BITS + 1)))
-
-_HLL_BUCKET = _hexpoly("h", 1, 2)
-_HLL_TAIL = _hexpoly("h", 3, 10)
-# rho = 1 + leading zeros of the 40-bit tail = 41 - bit_length(tail);
-# bin() strips leading zeros identically in both engines (bin(0)='0',
-# handled by the CASE).
-_HLL_RHO = (f"CASE WHEN {_HLL_TAIL} = 0 THEN {_HLL_BITS + 1} "
-            f"ELSE {_HLL_BITS + 1} - length(bin(CAST({_HLL_TAIL} AS BIGINT)))"
-            f" END")
-# 2^(41 - mj) as an integer CASE table: no pow(), no shift operator
-# (DuckDB and Spark disagree on << / div syntax; a literal table is exact
-# everywhere). Empty buckets contribute 2^41 each (rho = 0).
-_HLL_POW2 = ("CASE mj " + " ".join(
-    f"WHEN {k} THEN {2 ** (_HLL_BITS + 1 - k)}"
-    for k in range(1, _HLL_BITS + 2)) + " END")
 
 HLL_SQL = f"""
 WITH keyed AS (
   SELECT l_orderkey AS k, md5(CAST(l_orderkey AS VARCHAR)) AS h
   FROM lineitem
 ), buckets AS (
-  SELECT {_HLL_BUCKET} AS bucket, max({_HLL_RHO}) AS mj
+  SELECT {HLL_BUCKET} AS bucket, max({HLL_RHO}) AS mj
   FROM keyed GROUP BY 1
 ), sketch AS (
-  SELECT CAST(sum({_HLL_POW2}) AS BIGINT)
-         + ({_HLL_M} - count(*)) * {2 ** (_HLL_BITS + 1)} AS s,
+  SELECT CAST(sum({HLL_POW2}) AS BIGINT)
+         + ({HLL_M} - count(*)) * {2 ** (HLL_BITS + 1)} AS s,
          CAST(count(*) AS BIGINT) AS n_buckets
   FROM buckets
 ), exact AS (
   SELECT CAST(count(DISTINCT k) AS BIGINT) AS n_exact FROM keyed
 )
 SELECT n_exact,
-       round({_HLL_A} / CAST(s AS DOUBLE), 2) AS n_est,
+       round({HLL_A} / CAST(s AS DOUBLE), 2) AS n_est,
        n_buckets,
-       round(abs(round({_HLL_A} / CAST(s AS DOUBLE), 2) - n_exact)
+       round(abs(round({HLL_A} / CAST(s AS DOUBLE), 2) - n_exact)
              / n_exact, 4) AS rel_err
 FROM sketch CROSS JOIN exact
 """
@@ -108,16 +77,14 @@ def agg_hll_sketch(spark, sf_dir):
         load(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("k")).distinct())
     keyed = dk.withColumn("h", F.md5(F.col("k").cast("string")))
-    buckets = (keyed.select(F.expr(_HLL_BUCKET).alias("bucket"),
-                            F.expr(_HLL_RHO).alias("rho"))
+    buckets = (keyed.select(F.expr(HLL_BUCKET).alias("bucket"),
+                            F.expr(HLL_RHO).alias("rho"))
                .groupBy("bucket").agg(F.max("rho").alias("mj")))
     sketch = buckets.agg(
-        (F.sum(F.expr(_HLL_POW2)).cast("bigint")
-         + (F.lit(_HLL_M) - F.count(F.lit(1)))
-         * F.lit(2 ** (_HLL_BITS + 1))).alias("s"),
+        hll_sum().alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"))
     exact = dk.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-    est = F.round(F.lit(float(_HLL_A)) / F.col("s").cast("double"), 2)
+    est = F.round(F.lit(float(HLL_A)) / F.col("s").cast("double"), 2)
     return (sketch.crossJoin(F.broadcast(exact))
             .select("n_exact", est.alias("n_est"), "n_buckets",
                     F.round(F.abs(est - F.col("n_exact"))
@@ -131,14 +98,12 @@ _CMS_D = 4      # independent hash rows ('0'..'3' salts)
 _CMS_TOPK = 20
 
 _CMS_HASH = "md5(concat(r, '|', w))"
-_CMS_BUCKET = f"({_hexpoly('hh', 1, 5)} % {_CMS_W})"
-
-_TOKENS_SQL = "string_split_regex(trim(text), '\\s+')"
+_CMS_BUCKET = f"({hexpoly('hh', 1, 5)} % {_CMS_W})"
 
 CMS_SQL = f"""
 WITH tf AS (
   SELECT w, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT unnest({_TOKENS_SQL}) AS w
+  FROM (SELECT unnest({WS_TOKENS_SQL}) AS w
         FROM documents
         WHERE text IS NOT NULL AND trim(text) <> '')
   GROUP BY w
@@ -653,12 +618,12 @@ WITH keyed AS (
          user_id AS k, md5(CAST(user_id AS VARCHAR)) AS h
   FROM events
 ), buckets AS (
-  SELECT day, {_HLL_BUCKET} AS bucket, max({_HLL_RHO}) AS mj
+  SELECT day, {HLL_BUCKET} AS bucket, max({HLL_RHO}) AS mj
   FROM keyed GROUP BY 1, 2
 ), sketch AS (
   SELECT day,
-         CAST(sum({_HLL_POW2}) AS BIGINT)
-         + ({_HLL_M} - count(*)) * {2 ** (_HLL_BITS + 1)} AS s,
+         CAST(sum({HLL_POW2}) AS BIGINT)
+         + ({HLL_M} - count(*)) * {2 ** (HLL_BITS + 1)} AS s,
          CAST(count(*) AS BIGINT) AS n_buckets
   FROM buckets GROUP BY day
 ), exact AS (
@@ -666,7 +631,7 @@ WITH keyed AS (
   FROM keyed GROUP BY day
 )
 SELECT e.day, e.n_exact,
-       round({_HLL_A} / CAST(s.s AS DOUBLE), 2) AS n_est,
+       round({HLL_A} / CAST(s.s AS DOUBLE), 2) AS n_est,
        s.n_buckets
 FROM exact e JOIN sketch s ON e.day = s.day
 ORDER BY e.day
@@ -700,19 +665,17 @@ def events_daily_uniques_hll(spark, sf_dir):
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
         F.col("user_id").alias("k")).distinct())
     keyed = ud.withColumn("h", F.md5(F.col("k").cast("string")))
-    buckets = (keyed.select("day", F.expr(_HLL_BUCKET).alias("bucket"),
-                            F.expr(_HLL_RHO).alias("rho"))
+    buckets = (keyed.select("day", F.expr(HLL_BUCKET).alias("bucket"),
+                            F.expr(HLL_RHO).alias("rho"))
                .groupBy("day", "bucket").agg(F.max("rho").alias("mj")))
     sketch = buckets.groupBy("day").agg(
-        (F.sum(F.expr(_HLL_POW2)).cast("bigint")
-         + (F.lit(_HLL_M) - F.count(F.lit(1)))
-         * F.lit(2 ** (_HLL_BITS + 1))).alias("s"),
+        hll_sum().alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"))
     exact = ud.groupBy("day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     return (exact.join(sketch, "day")
             .select("day", "n_exact",
-                    F.round(F.lit(float(_HLL_A))
+                    F.round(F.lit(float(HLL_A))
                             / F.col("s").cast("double"), 2).alias("n_est"),
                     "n_buckets")
             .orderBy("day"))
@@ -826,7 +789,7 @@ WITH ev AS (
          ts, user_id, md5(CAST(user_id AS VARCHAR)) AS h
   FROM events
 ), mp AS (
-  SELECT minute, {_HLL_BUCKET} AS bucket, max({_HLL_RHO}) AS mj
+  SELECT minute, {HLL_BUCKET} AS bucket, max({HLL_RHO}) AS mj
   FROM ev GROUP BY 1, 2
 ), mw AS (
   SELECT w, minute, bucket, mj FROM (
@@ -841,8 +804,8 @@ WITH ev AS (
 ), merged AS (
   SELECT w, bucket, max(mj) AS mj FROM mw GROUP BY 1, 2
 ), sk AS (
-  SELECT w, CAST(sum({_HLL_POW2}) AS BIGINT)
-            + ({_HLL_M} - count(*)) * {2 ** (_HLL_BITS + 1)} AS s
+  SELECT w, CAST(sum({HLL_POW2}) AS BIGINT)
+            + ({HLL_M} - count(*)) * {2 ** (HLL_BITS + 1)} AS s
   FROM merged GROUP BY w
 ), ew AS (
   SELECT w, user_id FROM (
@@ -860,9 +823,9 @@ WITH ev AS (
 )
 SELECT strftime(e.w, '%Y-%m-%d %H:%M:%S') AS window_start,
        e.n_exact,
-       CAST(floor({_HLL_A} / CAST(s.s AS DOUBLE) * 100) AS BIGINT)
+       CAST(floor({HLL_A} / CAST(s.s AS DOUBLE) * 100) AS BIGINT)
          AS n_est_cents,
-       CAST(floor(abs({_HLL_A} / CAST(s.s AS DOUBLE) - e.n_exact)
+       CAST(floor(abs({HLL_A} / CAST(s.s AS DOUBLE) - e.n_exact)
                   / e.n_exact * 10000) AS BIGINT) AS rel_err_bp
 FROM exact e JOIN sk s ON e.w = s.w
 ORDER BY window_start
@@ -913,8 +876,8 @@ def events_sliding_users_hll(spark, sf_dir):
         F.expr("timestamp_seconds((unix_seconds(ts) div 60) * 60)")
         .alias("minute"), "user_id").distinct())
     keyed = um.withColumn("h", F.md5(F.col("user_id").cast("string")))
-    mp = (keyed.select("minute", F.expr(_HLL_BUCKET).alias("bucket"),
-                       F.expr(_HLL_RHO).alias("rho"))
+    mp = (keyed.select("minute", F.expr(HLL_BUCKET).alias("bucket"),
+                       F.expr(HLL_RHO).alias("rho"))
           .groupBy("minute", "bucket").agg(F.max("rho").alias("mj")))
 
     def two_windows(tcol):
@@ -930,9 +893,7 @@ def events_sliding_users_hll(spark, sf_dir):
                      "INTERVAL 1 HOUR"))))
     merged = mw.groupBy("w", "bucket").agg(F.max("mj").alias("mj"))
     sk = merged.groupBy("w").agg(
-        (F.sum(F.expr(_HLL_POW2)).cast("bigint")
-         + (F.lit(_HLL_M) - F.count(F.lit(1)))
-         * F.lit(2 ** (_HLL_BITS + 1))).alias("s"))
+        hll_sum().alias("s"))
 
     ew = (um.select(two_windows("minute"), "minute", "user_id")
           .where((F.col("minute") >= F.col("w"))
@@ -946,7 +907,7 @@ def events_sliding_users_hll(spark, sf_dir):
     # true binary value — at sf0.01 one of 1441 windows landed on a
     # shortest-repr tie (22.39625 vs ...24999) and diverged. floor over
     # identical doubles is divergence-free by construction.
-    est = F.lit(float(_HLL_A)) / F.col("s").cast("double")
+    est = F.lit(float(HLL_A)) / F.col("s").cast("double")
     return (exact.join(sk, "w")
             .select(F.date_format("w", "yyyy-MM-dd HH:mm:ss")
                     .alias("window_start"),
@@ -966,23 +927,23 @@ WITH keyed AS (
          md5(CAST(user_id AS VARCHAR)) AS h
   FROM events
 ), shard_buckets AS (
-  SELECT shard, {_HLL_BUCKET} AS bucket, max({_HLL_RHO}) AS mj
+  SELECT shard, {HLL_BUCKET} AS bucket, max({HLL_RHO}) AS mj
   FROM keyed GROUP BY 1, 2
 ), merged_buckets AS (
   SELECT bucket, max(mj) AS mj FROM shard_buckets GROUP BY bucket
 ), direct_buckets AS (
-  SELECT {_HLL_BUCKET} AS bucket, max({_HLL_RHO}) AS mj
+  SELECT {HLL_BUCKET} AS bucket, max({HLL_RHO}) AS mj
   FROM keyed GROUP BY 1
 ), est_m AS (
-  SELECT round({_HLL_A} / CAST(
-           CAST(sum({_HLL_POW2}) AS BIGINT)
-           + ({_HLL_M} - count(*)) * {2 ** (_HLL_BITS + 1)} AS DOUBLE),
+  SELECT round({HLL_A} / CAST(
+           CAST(sum({HLL_POW2}) AS BIGINT)
+           + ({HLL_M} - count(*)) * {2 ** (HLL_BITS + 1)} AS DOUBLE),
          2) AS e
   FROM merged_buckets
 ), est_d AS (
-  SELECT round({_HLL_A} / CAST(
-           CAST(sum({_HLL_POW2}) AS BIGINT)
-           + ({_HLL_M} - count(*)) * {2 ** (_HLL_BITS + 1)} AS DOUBLE),
+  SELECT round({HLL_A} / CAST(
+           CAST(sum({HLL_POW2}) AS BIGINT)
+           + ({HLL_M} - count(*)) * {2 ** (HLL_BITS + 1)} AS DOUBLE),
          2) AS e
   FROM direct_buckets
 ), exact AS (
@@ -1028,23 +989,21 @@ def agg_hll_merge_shards(spark, sf_dir):
         (F.col("event_id") % 8).alias("shard"), "user_id").distinct())
     keyed = su.withColumn("h", F.md5(F.col("user_id").cast("string")))
     shard_buckets = (keyed
-                     .select("shard", F.expr(_HLL_BUCKET).alias("bucket"),
-                             F.expr(_HLL_RHO).alias("rho"))
+                     .select("shard", F.expr(HLL_BUCKET).alias("bucket"),
+                             F.expr(HLL_RHO).alias("rho"))
                      .groupBy("shard", "bucket")
                      .agg(F.max("rho").alias("mj")))
     merged_buckets = (shard_buckets.groupBy("bucket")
                       .agg(F.max("mj").alias("mj")))
     direct_buckets = (keyed
-                      .select(F.expr(_HLL_BUCKET).alias("bucket"),
-                              F.expr(_HLL_RHO).alias("rho"))
+                      .select(F.expr(HLL_BUCKET).alias("bucket"),
+                              F.expr(HLL_RHO).alias("rho"))
                       .groupBy("bucket").agg(F.max("rho").alias("mj")))
 
     def estimate(buckets):
         return buckets.agg(
-            F.round(F.lit(float(_HLL_A))
-                    / (F.sum(F.expr(_HLL_POW2)).cast("bigint")
-                       + (F.lit(_HLL_M) - F.count(F.lit(1)))
-                       * F.lit(2 ** (_HLL_BITS + 1))).cast("double"),
+            F.round(F.lit(float(HLL_A))
+                    / hll_sum().cast("double"),
                     2).alias("e"))
 
     est_m = estimate(merged_buckets)
@@ -1207,7 +1166,7 @@ WITH ud AS (
 ), keyed AS (
   SELECT d, user_id, md5(CAST(user_id AS VARCHAR)) AS h FROM ud
 ), daypart AS (
-  SELECT d, {_HLL_BUCKET} AS bucket, max({_HLL_RHO}) AS mj
+  SELECT d, {HLL_BUCKET} AS bucket, max({HLL_RHO}) AS mj
   FROM keyed GROUP BY 1, 2
 ), days AS (SELECT DISTINCT d FROM ud),
 mau_part AS (
@@ -1216,20 +1175,20 @@ mau_part AS (
     ON p.d <= g.d AND p.d > g.d - INTERVAL 28 DAY
   GROUP BY 1, 2
 ), mau_sk AS (
-  SELECT d, CAST(sum({_HLL_POW2}) AS BIGINT)
-            + ({_HLL_M} - count(*)) * {2 ** (_HLL_BITS + 1)} AS s_mau
+  SELECT d, CAST(sum({HLL_POW2}) AS BIGINT)
+            + ({HLL_M} - count(*)) * {2 ** (HLL_BITS + 1)} AS s_mau
   FROM mau_part GROUP BY d
 ), dau_sk AS (
-  SELECT d, CAST(sum({_HLL_POW2}) AS BIGINT)
-            + ({_HLL_M} - count(*)) * {2 ** (_HLL_BITS + 1)} AS s_dau
+  SELECT d, CAST(sum({HLL_POW2}) AS BIGINT)
+            + ({HLL_M} - count(*)) * {2 ** (HLL_BITS + 1)} AS s_dau
   FROM daypart GROUP BY d
 ), dau_exact AS (
   SELECT d, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY d
 )
 SELECT strftime(e.d, '%Y-%m-%d') AS day, e.dau,
-       CAST(floor({_HLL_A} / CAST(ds.s_dau AS DOUBLE) * 100) AS BIGINT)
+       CAST(floor({HLL_A} / CAST(ds.s_dau AS DOUBLE) * 100) AS BIGINT)
          AS dau_est_cents,
-       CAST(floor({_HLL_A} / CAST(ms.s_mau AS DOUBLE) * 100) AS BIGINT)
+       CAST(floor({HLL_A} / CAST(ms.s_mau AS DOUBLE) * 100) AS BIGINT)
          AS mau_est_cents,
        CAST(floor(CAST(ms.s_mau AS DOUBLE) / CAST(ds.s_dau AS DOUBLE)
                   * 1000000.0) AS BIGINT) AS stickiness_est_ppm
@@ -1263,16 +1222,14 @@ def _stickiness_hll_core(ud):
     # cache — so the extra fill exchange bought nothing downstream.)
     p = ud.sparkSession.sparkContext.defaultParallelism
     daypart = track_persist(
-        keyed.select("d", F.expr(_HLL_BUCKET).alias("bucket"),
-                     F.expr(_HLL_RHO).alias("rho"))
+        keyed.select("d", F.expr(HLL_BUCKET).alias("bucket"),
+                     F.expr(HLL_RHO).alias("rho"))
         .groupBy("d", "bucket").agg(F.max("rho").alias("mj"),
                                     F.count(F.lit(1)).alias("nb")))
     days = daypart.select("d").distinct()
 
     def _sk(name):
-        return (F.sum(F.expr(_HLL_POW2)).cast("bigint")
-                + (F.lit(_HLL_M) - F.count(F.lit(1)))
-                * F.lit(2 ** (_HLL_BITS + 1))).alias(name)
+        return hll_sum().alias(name)
 
     # Round-19 (guide §2.4): exact DAU and the DAU sketch are BOTH
     # groupBy(d) aggregates over the same cached partials — one fused agg
@@ -1292,7 +1249,7 @@ def _stickiness_hll_core(ud):
               .repartition(p, "d")
               .groupBy("d", "bucket").agg(F.max("mj").alias("mj"))
               .groupBy("d").agg(_sk("s_mau")))
-    a = F.lit(float(_HLL_A))
+    a = F.lit(float(HLL_A))
     # stickiness = (A/s_dau)/(A/s_mau) = s_mau/s_dau; BIGINT ppm would
     # overflow (s <= 256 * 2^41 = 2^49, x 10^6 > 2^63), so this is the
     # floor-of-identical-DOUBLEs recipe: one IEEE division and one IEEE

@@ -20,58 +20,68 @@ landing exactly on the boundary.
 from __future__ import annotations
 
 import itertools
+import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.plans.registry import (PER_CORPUS, load,
-                                                  register, track_persist,
+from spark_sentiment_spark.operators.bm25 import (BM25_QUERIES, BM25_SQL,
+                                                  bm25_probe,
+                                                  bm25_stage_index)
+from spark_sentiment_spark.operators.event_windows import (ANOMALY_SQL,
+                                                           SLIDE_SQL,
+                                                           TUMBLE_SQL)
+from spark_sentiment_spark.operators.minhash import (band_buckets,
+                                                     band_keys, est_jaccard,
+                                                     minhash_signatures,
+                                                     probe_minhash_oracle_sql)
+from spark_sentiment_spark.operators.multimodal import (HEADERS_SQL,
+                                                        attach_media_content,
+                                                        header_metadata)
+from spark_sentiment_spark.operators.scd2 import (SCD2_SQL, scd2_dim,
+                                                  scd2_formatted, scd2_merge)
+from spark_sentiment_spark.operators.sketch import (HLL_A, HLL_BITS,
+                                                    HLL_BUCKET, HLL_M,
+                                                    HLL_POW2, HLL_RHO,
+                                                    hll_sum)
+from spark_sentiment_spark.operators.vectors import (ANN_IVF_SQL,
+                                                     ANN_IVFPQ_SQL,
+                                                     ANN_PQ_SQL, IVF_ASSIGN,
+                                                     IVF_PROBE, IVF_TOPK,
+                                                     IVFPQ_RERANK,
+                                                     PQ_RERANK, dot,
+                                                     ivf_centroids,
+                                                     ivf_ranked,
+                                                     ivfpq_probe,
+                                                     ivfpq_stage_index,
+                                                     pq_adc_tables,
+                                                     pq_adc_topk,
+                                                     pq_read_codebook,
+                                                     pq_stage_index,
+                                                     unit_vector,
+                                                     unit_vector_frame)
+from spark_sentiment_spark.operators.winnow import (WINNOW_CTE,
+                                                    winnow_selected)
+from spark_sentiment_spark.plans.registry import (load, register,
+                                                  track_persist,
                                                   track_staging_dir)
-
-
 from spark_sentiment_spark.streaming.streams import (
+    _stage_dir,
+    await_stream,
+    dedup_stream,
+    read_document_stream,
     read_event_stream,
+    run_probe_stream,
     run_to_memory,
     session_windows,
+    sliding_hourly,
+    stage_ordered_segments,
     stateful_user_counts,
     stream_static_enrich,
+    stream_stream_conversions,
     tumbling_hourly,
 )
 
-
-def _stage_ordered_segments(slices, prefix: str) -> str:
-    """Stage each DataFrame slice as ONE parquet file with ascending
-    names AND mtimes in a fresh tracked staging dir: the file stream
-    source (latestFirst=false) admits oldest-mtime files first, so a
-    reader capped at one file per trigger replays the slices in order,
-    one micro-batch each — the in-order CDC-log delivery contract shared
-    by `streaming_scd2_merge` and `streaming_winnowing_probe`.
-
-    An EMPTY slice still stages a schema-only part file and therefore
-    still fires an (empty) micro-batch: Spark's coalesce(1) parquet
-    write always emits one part file (asserted below — a multi-part or
-    zero-part write would silently break the one-batch-per-slice
-    contract). Degenerate inputs thus chain the SAME number of
-    versions, each step an identity merge — pinned by
-    tests/test_streaming.py::test_stage_ordered_segments_empty_slice_fires_batch;
-    do not assume empty slices skip batches."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    stream_dir = track_staging_dir(tempfile.mkdtemp(prefix=prefix))
-    for i, sl in enumerate(slices):
-        tmp = track_staging_dir(tempfile.mkdtemp(prefix=f"{prefix}seg_"))
-        sl.coalesce(1).write.mode("overwrite").parquet(tmp)
-        parts = glob.glob(f"{tmp}/part-*.parquet")
-        if len(parts) != 1:
-            raise AssertionError(
-                f"slice {i}: expected exactly one part file, got {parts}")
-        target = f"{stream_dir}/seg{i}.parquet"
-        shutil.move(parts[0], target)
-        os.utime(target, (1_000_000_000 + i * 100,) * 2)
-    return stream_dir
 
 # Memory-sink table names must be unique per execution within a session.
 _run_seq = itertools.count()
@@ -81,18 +91,7 @@ def _unique(name: str) -> str:
     return f"{name}_{next(_run_seq)}"
 
 
-STREAM_TUMBLE_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type,
-       count(*) AS n,
-       round(sum(value), 4) AS total_value
-FROM events
-GROUP BY 1, 2
-ORDER BY window_start, event_type
-"""
-
-
-@register("streaming_tumbling_hour", sql=STREAM_TUMBLE_SQL,
+@register("streaming_tumbling_hour", sql=TUMBLE_SQL,
           tags=("streaming", "events"))
 def streaming_tumbling_hour(spark, sf_dir):
     """Tumbling 1h/event_type aggregation executed BY the streaming engine
@@ -210,32 +209,7 @@ def streaming_sessionize(spark, sf_dir):
     return out.orderBy("user_id", "session_start")
 
 
-# Keep in sync with pipeline_queries.ANOMALY_SQL (not imported: a module-
-# scope import would run pipeline_queries' registrations early and shift
-# the harness's registration-order window — see all_queries()).
-STREAM_ANOMALY_SQL = """
-WITH hourly AS (
-  SELECT event_type,
-         strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-         count(*) AS n
-  FROM events
-  GROUP BY 1, 2
-),
-stats AS (
-  SELECT event_type, hour_start, n,
-         avg(n)         OVER (PARTITION BY event_type) AS mu,
-         stddev_samp(n) OVER (PARTITION BY event_type) AS sigma
-  FROM hourly
-)
-SELECT event_type, hour_start, n,
-       round((n - mu) / sigma, 4) AS z
-FROM stats
-WHERE sigma > 0 AND abs((n - mu) / sigma) >= 2.0
-ORDER BY event_type, hour_start
-"""
-
-
-@register("streaming_volume_anomaly", sql=STREAM_ANOMALY_SQL,
+@register("streaming_volume_anomaly", sql=ANOMALY_SQL,
           tags=("streaming", "events"))
 def streaming_volume_anomaly(spark, sf_dir):
     """Streaming ingest monitor: hourly per-type counts aggregate IN the
@@ -246,8 +220,6 @@ def streaming_volume_anomaly(spark, sf_dir):
     per-batch sink, so a replayed batch never duplicates alerts. Over the
     finite source the final snapshot equals the batch
     ``events_volume_anomaly`` — the shared oracle."""
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     events = read_event_stream(spark, sf_dir)
     hourly = (
@@ -277,32 +249,15 @@ def streaming_volume_anomaly(spark, sf_dir):
                    F.round(z, 4).alias("z"))
            .write.mode("overwrite").parquet(out_dir))
 
-    q = (hourly.writeStream.outputMode("complete")
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    await_stream(hourly.writeStream.outputMode("complete")
+                 .foreachBatch(write_batch)
+                 .option("checkpointLocation", ckpt)
+                 .trigger(availableNow=True).start())
     return (spark.read.parquet(out_dir)
             .orderBy("event_type", "hour_start"))
 
 
-# Keep in sync with pipeline_queries.HEADERS_SQL (not imported — see the
-# STREAM_ANOMALY_SQL note above on registration-order hygiene).
-STREAM_HEADERS_SQL = """
-SELECT doc_id,
-       CASE CAST(doc_id % 3 AS INTEGER)
-            WHEN 0 THEN 'png' WHEN 1 THEN 'wav' ELSE 'mp4' END AS container,
-       CASE WHEN doc_id % 3 = 0 THEN 64 + doc_id % 512 END AS width,
-       CASE WHEN doc_id % 3 = 0 THEN 48 + doc_id % 256 END AS height,
-       CASE WHEN doc_id % 3 = 1 THEN 1 + doc_id % 2 END AS channels,
-       CASE WHEN doc_id % 3 = 1 THEN 8000 + (doc_id % 5) * 8000 END
-         AS sample_rate
-FROM documents
-ORDER BY doc_id
-"""
-
-
-@register("streaming_multimodal_headers", sql=STREAM_HEADERS_SQL,
+@register("streaming_multimodal_headers", sql=HEADERS_SQL,
           tags=("streaming", "multimodal"))
 def streaming_multimodal_headers(spark, sf_dir):
     """Media-ingest streaming ETL: the multimodal container construction +
@@ -312,10 +267,6 @@ def streaming_multimodal_headers(spark, sf_dir):
     a media firehose. Append mode, no state, so throughput is scan-bound;
     the oracle is the same arithmetic twin as the batch
     ``multimodal_headers``."""
-    from spark_sentiment_spark.operators.multimodal import (
-        attach_media_content, header_metadata)
-    from spark_sentiment_spark.streaming.streams import _stage_dir
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/documents.parquet"
     static = spark.read.parquet(path)
@@ -354,9 +305,6 @@ def streaming_conversions(spark, sf_dir):
     the DuckDB interval-join twin is exact. Completes the
     driver-routed streaming surface: windows, sessions, stream–static,
     stateful, dedup-by-watermark, anomaly, and now stream–stream."""
-    from spark_sentiment_spark.streaming.streams import (
-        read_event_stream, run_to_memory, stream_stream_conversions)
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = stream_stream_conversions(read_event_stream(spark, sf_dir))
     out = run_to_memory(stream, _unique("stream_conv"),
@@ -397,9 +345,6 @@ def streaming_dedup(spark, sf_dir):
     of the original table (exactly-once emission). The streaming stage
     is the dedup itself; the batch agg over the finite sink output keeps
     the plan to one stateful operator."""
-    from spark_sentiment_spark.streaming.streams import (
-        dedup_stream, read_event_stream, run_to_memory)
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     doubled = read_event_stream(spark, sf_dir).unionByName(
         read_event_stream(spark, sf_dir))
@@ -415,27 +360,7 @@ def streaming_dedup(spark, sf_dir):
 
 # --- Sliding windows on the streaming engine --------------------------------
 
-# Same oracle as the batch twin (events_queries.SLIDE_SQL) — duplicated
-# literal for the registration-order reason documented at
-# STREAM_ANOMALY_SQL; tests pin the two strings together.
-STREAM_SLIDE_SQL = """
-WITH grid AS (
-  SELECT unnest(generate_series(
-    date_trunc('hour', (SELECT min(ts) FROM events)) - INTERVAL 30 MINUTE,
-    (SELECT max(ts) FROM events),
-    INTERVAL 30 MINUTE)) AS w_start
-)
-SELECT strftime(g.w_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-       count(*) AS n,
-       round(sum(e.value), 4) AS total_value
-FROM grid g
-JOIN events e ON e.ts >= g.w_start AND e.ts < g.w_start + INTERVAL 1 HOUR
-GROUP BY g.w_start
-ORDER BY window_start
-"""
-
-
-@register("streaming_sliding_hour", sql=STREAM_SLIDE_SQL,
+@register("streaming_sliding_hour", sql=SLIDE_SQL,
           tags=("streaming", "events"))
 def streaming_sliding_hour(spark, sf_dir):
     """1h window sliding by 30min executed BY the streaming engine
@@ -443,9 +368,6 @@ def streaming_sliding_hour(spark, sf_dir):
     mode, memory sink — each event lands in two windows, the overlap
     bookkeeping the tumbling query doesn't exercise. Oracle = the batch
     twin's grid-join SQL (`events_sliding_hour`)."""
-    from spark_sentiment_spark.streaming.streams import (
-        read_event_stream, run_to_memory, sliding_hourly)
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = sliding_hourly(read_event_stream(spark, sf_dir))
     out = run_to_memory(stream, _unique("stream_slide"))
@@ -454,31 +376,24 @@ def streaming_sliding_hour(spark, sf_dir):
 
 # --- Streaming HLL distinct sketch ------------------------------------------
 
-# Shared md5-HLL fragments from the batch sketch family: the streaming
-# engine maintains the 256 bucket maxima as its (bounded, mergeable)
-# aggregation state; the fold to an estimate is a 256-row batch step.
-from spark_sentiment_spark.plans.sketch_queries import (_HLL_A, _HLL_BITS,
-                                                        _HLL_BUCKET, _HLL_M,
-                                                        _HLL_POW2, _HLL_RHO)
-
 STREAM_HLL_SQL = f"""
 WITH keyed AS (
   SELECT event_id AS k, md5(CAST(event_id AS VARCHAR)) AS h FROM events
 ), buckets AS (
-  SELECT {_HLL_BUCKET} AS bucket, max({_HLL_RHO}) AS mj
+  SELECT {HLL_BUCKET} AS bucket, max({HLL_RHO}) AS mj
   FROM keyed GROUP BY 1
 ), sketch AS (
-  SELECT CAST(sum({_HLL_POW2}) AS BIGINT)
-         + ({_HLL_M} - count(*)) * {2 ** (_HLL_BITS + 1)} AS s,
+  SELECT CAST(sum({HLL_POW2}) AS BIGINT)
+         + ({HLL_M} - count(*)) * {2 ** (HLL_BITS + 1)} AS s,
          CAST(count(*) AS BIGINT) AS n_buckets
   FROM buckets
 ), exact AS (
   SELECT CAST(count(DISTINCT k) AS BIGINT) AS n_exact FROM keyed
 )
 SELECT n_exact,
-       round({_HLL_A} / CAST(s AS DOUBLE), 2) AS n_est,
+       round({HLL_A} / CAST(s AS DOUBLE), 2) AS n_est,
        n_buckets,
-       round(abs(round({_HLL_A} / CAST(s AS DOUBLE), 2) - n_exact)
+       round(abs(round({HLL_A} / CAST(s AS DOUBLE), 2) - n_exact)
              / n_exact, 4) AS rel_err
 FROM sketch CROSS JOIN exact
 """
@@ -502,19 +417,17 @@ def streaming_hll_distinct(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir)
     keyed = ev.select(F.md5(F.col("event_id").cast("string")).alias("h"))
-    buckets = (keyed.select(F.expr(_HLL_BUCKET).alias("bucket"),
-                           F.expr(_HLL_RHO).alias("rho"))
+    buckets = (keyed.select(F.expr(HLL_BUCKET).alias("bucket"),
+                           F.expr(HLL_RHO).alias("rho"))
                .groupBy("bucket").agg(F.max("rho").alias("mj")))
     mem = run_to_memory(buckets, _unique("stream_hll"))
     sketch = mem.agg(
-        (F.sum(F.expr(_HLL_POW2)).cast("bigint")
-         + (F.lit(_HLL_M) - F.count(F.lit(1)))
-         * F.lit(2 ** (_HLL_BITS + 1))).alias("s"),
+        hll_sum().alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"))
     exact = (load(spark, sf_dir, "events")
              .agg(F.countDistinct("event_id").cast("bigint")
                   .alias("n_exact")))
-    est = F.round(F.lit(float(_HLL_A)) / F.col("s").cast("double"), 2)
+    est = F.round(F.lit(float(HLL_A)) / F.col("s").cast("double"), 2)
     return (sketch.crossJoin(F.broadcast(exact))
             .select("n_exact", est.alias("n_est"), "n_buckets",
                     F.round(F.abs(est - F.col("n_exact"))
@@ -552,9 +465,6 @@ def streaming_topk_types(spark, sf_dir):
     split is exactly this: incremental windowed counts in the stream,
     cheap top-k on the bounded (windows × types) result downstream.
     State is bounded by the watermark horizon × type vocabulary."""
-    from spark_sentiment_spark.streaming.streams import (read_event_stream,
-                                                         tumbling_hourly)
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = tumbling_hourly(read_event_stream(spark, sf_dir))
     out = run_to_memory(stream, _unique("stream_topk"))
@@ -566,11 +476,7 @@ def streaming_topk_types(spark, sf_dir):
             .orderBy("window_start", "rn"))
 
 
-from spark_sentiment_spark.plans.dedup_queries import \
-    _probe_minhash_oracle_sql  # noqa: E402  (shared batch-twin oracle)
-
-
-@register("streaming_minhash_probe", sql=_probe_minhash_oracle_sql(),
+@register("streaming_minhash_probe", sql=probe_minhash_oracle_sql(),
           tags=("streaming", "dedup", "join"))
 def streaming_minhash_probe(spark, sf_dir):
     """Streaming incremental NEAR-dup ingest — the stream twin completing
@@ -586,7 +492,7 @@ def streaming_minhash_probe(spark, sf_dir):
     computed row-wise, filtered at est >= 0.5 BEFORE the stateful
     pair-dedup aggregation, so streaming state is near-dup-pairs-sized,
     never collision-sized. Oracle = the bucketed batch twin's SQL
-    (`_probe_minhash_oracle_sql`): over the finite availableNow source,
+    (`probe_minhash_oracle_sql`): over the finite availableNow source,
     stream output == batch probe output exactly.
 
     Scale: per micro-batch work is O(batch bands × bucket occupancy) —
@@ -594,12 +500,7 @@ def streaming_minhash_probe(spark, sf_dir):
     the stream; the 100 TB posture is the bucketed index layout of
     `dedup_minhash_bucketed_probe` with this query as its continuous
     consumer."""
-    from spark_sentiment_spark.plans.dedup_queries import (
-        _band_buckets, _minhash_signatures)
-    from spark_sentiment_spark.streaming.streams import read_document_stream
-
     n_hashes, n_bands = 32, 8
-    rpb = n_hashes // n_bands
 
     # Static probe index: corpus (old) band keys with signatures
     # denormalized — the persisted artifact a deployment would maintain.
@@ -613,9 +514,8 @@ def streaming_minhash_probe(spark, sf_dir):
     # consumer (the r18 A/B precedent: cache the signatures, never the
     # n_bands× exploded frame).
     sig_old = track_persist(
-        _minhash_signatures(docs.where(~is_new), n_hashes),
-        level=PER_CORPUS)  # 33 longs per corpus doc
-    index = (_band_buckets(sig_old, n_hashes, n_bands)
+        minhash_signatures(docs.where(~is_new), n_hashes))
+    index = (band_buckets(sig_old, n_hashes, n_bands)
              .join(sig_old, "doc_id")
              .select(F.col("doc_id").alias("old_id"), "band_id", "bh",
                      *[F.col(f"mh{i}").alias(f"omh{i}")
@@ -625,23 +525,16 @@ def streaming_minhash_probe(spark, sf_dir):
     # the new doc's signature carried along.
     stream_docs = (read_document_stream(spark, sf_dir)
                    .where(is_new & F.col("text").isNotNull()))
-    sig_new = _minhash_signatures(stream_docs, n_hashes)
-    band_hashes = F.array(*[
-        F.concat_ws("-", *[F.col(f"mh{band * rpb + r}")
-                           for r in range(rpb)])
-        for band in range(n_bands)])
+    sig_new = minhash_signatures(stream_docs, n_hashes)
     bands_new = sig_new.select(
         F.col("doc_id").alias("new_id"),
         *[F.col(f"mh{i}").alias(f"nmh{i}") for i in range(n_hashes)],
-        F.posexplode(band_hashes).alias("band_id", "bh"))
+        F.posexplode(band_keys(n_hashes, n_bands)).alias("band_id", "bh"))
 
-    agree = sum(
-        F.when(F.col(f"nmh{i}") == F.col(f"omh{i}"), 1).otherwise(0)
-        for i in range(n_hashes))
     hits = (bands_new.join(index, ["band_id", "bh"])
             .select(F.least("new_id", "old_id").alias("doc_a"),
                     F.greatest("new_id", "old_id").alias("doc_b"),
-                    F.round(agree / F.lit(float(n_hashes)), 4)
+                    est_jaccard("nmh", "omh", n_hashes)
                     .alias("est"))
             .where(F.col("est") >= 0.5)
             .groupBy("doc_a", "doc_b")
@@ -650,9 +543,6 @@ def streaming_minhash_probe(spark, sf_dir):
     return out.orderBy("doc_a", "doc_b")
 
 
-
-from spark_sentiment_spark.plans.events_queries import (  # noqa: E402
-    SCD2_SQL, _scd2_dim, _scd2_merge)
 
 
 @register("streaming_scd2_merge", sql=SCD2_SQL,
@@ -664,7 +554,7 @@ def streaming_scd2_merge(spark, sf_dir):
     minhash probe did for dedup: the existing dimension (built from the
     pre-cutoff 70% of the corpus) is materialized to a versioned lake
     path, the delta arrives as a file-source stream, and each
-    micro-batch applies `_scd2_merge` against the CURRENT dimension
+    micro-batch applies `scd2_merge` against the CURRENT dimension
     version and writes the merged dimension as the NEXT version —
     overwrite-per-version, so a replayed batch rewrites its own output
     instead of corrupting the chain (the write_exactly_once contract,
@@ -682,14 +572,12 @@ def streaming_scd2_merge(spark, sf_dir):
     in-order arrival (per-key ordering is what a CDC log gives you;
     the merge itself handles any order WITHIN a batch via its windows).
 
-    Scale: per batch, work is `_scd2_merge`'s — delta-sized windows, a
+    Scale: per batch, work is `scd2_merge`'s — delta-sized windows, a
     broadcast-sized open-row join, and the closed-dimension
     pass-through (which a lakehouse MERGE INTO would not rewrite);
     streaming state is the checkpoint offsets only, since the dimension
     itself IS the sink. Reference parity: witlox/spark_sentiment has no
     temporal surface; extension per SURVEY §7.4."""
-    import tempfile
-
     ev = load(spark, sf_dir, "events")
     lo, hi = ev.agg(F.min(F.unix_millis("ts")),
                     F.max(F.unix_millis("ts"))).first()
@@ -700,7 +588,7 @@ def streaming_scd2_merge(spark, sf_dir):
     cuts = [lo + (hi - lo) * k // 10 for k in (7, 8, 9)]
     cutoff = F.timestamp_millis(F.lit(cuts[0]))
 
-    hist_dim = _scd2_dim(ev.where(F.col("ts") < cutoff))
+    hist_dim = scd2_dim(ev.where(F.col("ts") < cutoff))
     dim_base = track_staging_dir(tempfile.mkdtemp(prefix="scd2stream_dim_"))
     ckpt = track_staging_dir(tempfile.mkdtemp(prefix="scd2stream_ckpt_"))
     state = {"latest": f"{dim_base}/v0"}
@@ -708,7 +596,7 @@ def streaming_scd2_merge(spark, sf_dir):
     dim_schema = hist_dim.schema
 
     # Three event-time-ordered delta segments, one micro-batch each
-    # (_stage_ordered_segments carries the mtime-ordering contract and
+    # (stage_ordered_segments carries the mtime-ordering contract and
     # the empty-slice behavior).
     delta = ev.where(F.col("ts") >= cutoff)
     segs, seg_lo = [], cuts[0]
@@ -716,39 +604,26 @@ def streaming_scd2_merge(spark, sf_dir):
         segs.append(delta.where((F.unix_millis("ts") >= seg_lo)
                                 & (F.unix_millis("ts") < seg_hi)))
         seg_lo = seg_hi
-    stream_dir = _stage_ordered_segments(segs, "scd2stream_delta_")
+    stream_dir = stage_ordered_segments(segs, "scd2stream_delta_")
 
     def merge_batch(df, batch_id):
         cur = spark.read.schema(dim_schema).parquet(state["latest"])
         nxt = f"{dim_base}/v{batch_id + 1}"
-        _scd2_merge(cur, df).write.mode("overwrite").parquet(nxt)
+        scd2_merge(cur, df).write.mode("overwrite").parquet(nxt)
         state["latest"] = nxt
 
     delta_stream = (spark.readStream.schema(delta.schema)
                     .option("maxFilesPerTrigger", 1)
                     .parquet(stream_dir))
-    q = (delta_stream.writeStream
-         .foreachBatch(merge_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    dim = spark.read.schema(dim_schema).parquet(state["latest"])
-    return (dim.select("user_id", "state",
-                       F.date_format("valid_from", "yyyy-MM-dd HH:mm:ss")
-                       .alias("valid_from"),
-                       F.date_format("valid_to", "yyyy-MM-dd HH:mm:ss")
-                       .alias("valid_to"),
-                       "version",
-                       F.col("valid_to").isNull().cast("long")
-                       .alias("is_current"))
-            .orderBy("user_id", "version"))
+    await_stream(delta_stream.writeStream
+                 .foreachBatch(merge_batch)
+                 .option("checkpointLocation", ckpt)
+                 .trigger(availableNow=True).start())
+    return scd2_formatted(
+        spark.read.schema(dim_schema).parquet(state["latest"]))
 
 
-from spark_sentiment_spark.plans.corpus_queries import (  # noqa: E402
-    _WINNOW_CTE, _winnow_selected)
-
-WINNOW_STREAM_SQL = _WINNOW_CTE + """
+WINNOW_STREAM_SQL = WINNOW_CTE + """
 , fp AS (
   SELECT DISTINCT doc_id, h FROM sel WHERE s = 1
 ), fp_old AS (
@@ -792,7 +667,7 @@ def streaming_winnowing_probe(spark, sf_dir):
     Winnowing selection uses lag/lead windows, which Structured
     Streaming cannot run inside a streaming plan — `foreachBatch` gives
     each micro-batch full batch semantics, the same route as
-    `streaming_scd2_merge`. Oracle: the shared `_WINNOW_CTE` chain with
+    `streaming_scd2_merge`. Oracle: the shared `WINNOW_CTE` chain with
     index-side cap and the new-vs-old restriction, replayed bit-for-bit
     over the finite availableNow source regardless of how the delta was
     batched.
@@ -802,9 +677,6 @@ def streaming_winnowing_probe(spark, sf_dir):
     state on disk, never streaming state. Reference parity:
     witlox/spark_sentiment has no streaming surface; extension per
     SURVEY §7.4."""
-    import glob
-    import tempfile
-
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_new = F.col("doc_id") % 5 == 4
     # Round-18 optimization (guide §2.4): fp_old feeds the hot-list agg
@@ -812,63 +684,37 @@ def streaming_winnowing_probe(spark, sf_dir):
     # corpus twice (explode + 6 windows per pass). Persist the narrow
     # (doc_id, h) frame so the corpus pass runs once.
     fp_old = track_persist(
-        _winnow_selected(docs.where(~is_new))
-        .where(F.col("s") == 1).select("doc_id", "h").distinct(),
-        level=PER_CORPUS)  # per (corpus doc, fingerprint)
+        winnow_selected(docs.where(~is_new))
+        .where(F.col("s") == 1).select("doc_id", "h").distinct())
     hot = (fp_old.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
            .where(F.col("df") > 50).select("h"))
-    index = track_persist(fp_old.join(hot, "h", "left_anti"),
-                          level=PER_CORPUS)  # per (doc, fingerprint)
+    index = track_persist(fp_old.join(hot, "h", "left_anti"))
 
     # Stage the delta as two files (split by doc_id mod 10) delivered
     # one per trigger — two genuine micro-batches, pinning that batch
     # boundaries cannot change the pair set.
     new_docs = docs.where(is_new)
-    stream_dir = _stage_ordered_segments(
-        (new_docs.where(F.col("doc_id") % 10 == 4),
-         new_docs.where(F.col("doc_id") % 10 == 9)), "winnow_delta_")
 
-    out_dir = track_staging_dir(tempfile.mkdtemp(prefix="winnow_hits_"))
-    ckpt = track_staging_dir(tempfile.mkdtemp(prefix="winnow_ckpt_"))
-
-    def probe_batch(df, batch_id):
-        fp_new = (_winnow_selected(df)
+    def probe(df):
+        fp_new = (winnow_selected(df)
                   .where(F.col("s") == 1).select("doc_id", "h").distinct())
-        hits = (fp_new.alias("nw")
+        return (fp_new.alias("nw")
                 .join(index.alias("od"), "h")
                 .select(F.least("nw.doc_id", "od.doc_id").alias("doc_a"),
                         F.greatest("nw.doc_id", "od.doc_id").alias("doc_b"))
                 .groupBy("doc_a", "doc_b")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
                 .where(F.col("n_shared") >= 2))
-        hits.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}")
-
-    stream = (spark.readStream.schema(new_docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(stream_dir))
-    q = (stream.writeStream
-         .foreachBatch(probe_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
 
     doc_id_t = docs.schema["doc_id"].dataType.simpleString()
-    out_schema = (f"doc_a {doc_id_t}, doc_b {doc_id_t}, n_shared bigint")
-    if not glob.glob(f"{out_dir}/batch_id=*/part-*.parquet"):
-        return spark.createDataFrame([], out_schema)  # empty source
-    return (spark.read.schema(out_schema + ", batch_id int")
-            .parquet(out_dir)
-            .select("doc_a", "doc_b", "n_shared")
-            .orderBy("doc_a", "doc_b"))
+    return run_probe_stream(
+        spark, [new_docs.where(F.col("doc_id") % 10 == 4),
+                new_docs.where(F.col("doc_id") % 10 == 9)], probe,
+        f"doc_a {doc_id_t}, doc_b {doc_id_t}, n_shared bigint",
+        "winnow").orderBy("doc_a", "doc_b")
 
 
 # --- Streaming IVF probe (the vector index triad's streaming leg) -----------
-
-from spark_sentiment_spark.plans.similarity_queries import (  # noqa: E402
-    ANN_IVF_SQL, ANN_IVFPQ_SQL, ANN_PQ_SQL, IVF_ASSIGN, IVF_K, IVF_PROBE,
-    IVF_TOPK, IVFPQ_RERANK, PQ_RERANK, _as_double, _dot, _ivfpq_probe,
-    _ivfpq_stage_index, _norm, _pq_adc_tables, _pq_adc_topk,
-    _pq_read_codebook, _pq_stage_index)
 
 
 @register("streaming_ivf_probe", sql=ANN_IVF_SQL,
@@ -901,49 +747,22 @@ def streaming_ivf_probe(spark, sf_dir):
     bucketed layout of `ann_ivf_bucketed_probe`), never streaming
     state. Reference parity: witlox/spark_sentiment has no streaming
     surface; extension per SURVEY §7.4."""
-    import glob
-    import tempfile
-
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", "label", unit.alias("u")),
-                         level=PER_CORPUS)  # one row per vector
-
-    seeds = (vecs
-             .select("vec_id", "u",
-                     F.md5(F.col("vec_id").cast("string")).alias("h"))
-             .orderBy("h", "vec_id").limit(IVF_K))
-    cent = track_persist(seeds.select(
-        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cell"),
-        F.col("u").alias("cu")))
-
-    sim = F.round(_dot(F.col("u"), F.col("cu")), 6)
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
+    vecs = unit_vector_frame(emb, "u", "label")
+    cent = track_persist(ivf_centroids(vecs))
     assigned = track_persist(
-        vecs.crossJoin(F.broadcast(cent))
-        .select("vec_id", "label", "u", "cell", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(wa))
-        .where(F.col("rn") <= IVF_ASSIGN)
-        .select("vec_id", "label", "u", "cell"),
-        level=PER_CORPUS)  # IVF_ASSIGN rows per vector
+        ivf_ranked(vecs, cent).where(F.col("rn") <= IVF_ASSIGN)
+        .select("vec_id", "label", "u", "cell"))
 
     # Queries arrive as TWO micro-batches (split by vec_id) — one file
     # per trigger, pinning that batch boundaries cannot change any
     # query's top-k.
     q_src = emb.where(F.col("vec_id") < 5)
-    stream_dir = _stage_ordered_segments(
-        (q_src.where(F.col("vec_id") < 3),
-         q_src.where(F.col("vec_id") >= 3)), "ivf_queries_")
 
-    out_dir = track_staging_dir(tempfile.mkdtemp(prefix="ivf_hits_"))
-    ckpt = track_staging_dir(tempfile.mkdtemp(prefix="ivf_ckpt_"))
-
-    def probe_batch(df, batch_id):
-        be = _as_double("embedding")
-        bunit = F.transform(be, lambda x: x / _norm(be))
-        qv = df.select(F.col("vec_id").alias("qid"), bunit.alias("qu"))
-        qsim = F.round(_dot(F.col("qu"), F.col("cu")), 6)
+    def probe(df):
+        qv = df.select(F.col("vec_id").alias("qid"),
+                       unit_vector("embedding").alias("qu"))
+        qsim = F.round(dot(F.col("qu"), F.col("cu")), 6)
         wq = Window.partitionBy("qid").orderBy(F.desc("qsim"),
                                                F.asc("cell"))
         probes = (qv.crossJoin(F.broadcast(cent))
@@ -951,10 +770,10 @@ def streaming_ivf_probe(spark, sf_dir):
                   .withColumn("prn", F.row_number().over(wq))
                   .where(F.col("prn") <= IVF_PROBE)
                   .select("qid", "qu", "cell"))
-        cos = F.round(_dot(F.col("qu"), F.col("u")), 6)
+        cos = F.round(dot(F.col("qu"), F.col("u")), 6)
         wk = Window.partitionBy("qid").orderBy(F.desc("cos"),
                                                F.asc("vec_id"))
-        topk = (assigned.join(F.broadcast(probes), "cell")
+        return (assigned.join(F.broadcast(probes), "cell")
                 .where(F.col("vec_id") != F.col("qid"))
                 .select("qid", "vec_id",
                         F.col("label").cast("long").alias("label"),
@@ -964,24 +783,12 @@ def streaming_ivf_probe(spark, sf_dir):
                 .where(F.col("rn") <= IVF_TOPK)
                 .select("qid", "vec_id", "label",
                         F.col("cos").alias("cosine"), "rn"))
-        topk.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    stream = (spark.readStream.schema(q_src.schema)
-              .option("maxFilesPerTrigger", 1).parquet(stream_dir))
-    q = (stream.writeStream
-         .foreachBatch(probe_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    out_schema = "qid bigint, vec_id bigint, label bigint, " \
-                 "cosine double, rn bigint"
-    if not glob.glob(f"{out_dir}/batch_id=*/part-*.parquet"):
-        return spark.createDataFrame([], out_schema)  # empty source
-    return (spark.read.schema(out_schema + ", batch_id int")
-            .parquet(out_dir)
-            .select("qid", "vec_id", "label", "cosine", "rn")
-            .orderBy("qid", "rn"))
+    return run_probe_stream(
+        spark, [q_src.where(F.col("vec_id") < 3),
+                q_src.where(F.col("vec_id") >= 3)], probe,
+        "qid bigint, vec_id bigint, label bigint, cosine double, rn bigint",
+        "ivf").orderBy("qid", "rn")
 
 
 # --- Streaming PQ probe (the quantized index triad's streaming leg) ---------
@@ -996,12 +803,12 @@ def streaming_pq_probe(spark, sf_dir, topk: int = 10,
     (`ann_pq_topk` → `ann_pq_persisted_probe` → this), matching the arc
     the IVF, MinHash and winnowing families already walk. The corpus's
     code table + codebook are staged ONCE by the shared builder
-    (`_pq_stage_index`, plans/similarity_queries.py); QUERY vectors
+    (`operators.vectors.pq_stage_index`); QUERY vectors
     arrive as a file stream staged as TWO files at one file per
     trigger. Each micro-batch builds ITS queries' fixed-point ADC
     tables from the PERSISTED codebook (a bounded M×K read, no corpus
     access), integer-scans the stored codes, and exact-re-ranks — the
-    scan + re-rank chain is `_pq_adc_topk`, the SAME function the batch
+    scan + re-rank chain is `pq_adc_topk`, the SAME function the batch
     probe runs, so streamed-equals-batch is structural, not incidental.
 
     Each micro-batch appends its top-k to a batch_id-partitioned sink
@@ -1023,59 +830,34 @@ def streaming_pq_probe(spark, sf_dir, topk: int = 10,
     batches — the same append contract as the MinHash band and IVF
     cell indexes. Reference parity: witlox/spark_sentiment has no
     streaming surface; extension per SURVEY §7.4."""
-    import glob
-    import tempfile
-
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")),
-                         level=PER_CORPUS)  # one row per vector
+    vecs = unit_vector_frame(emb, "e")
 
     # ---- static side: the persisted quantized index (built ONCE) -------
-    base, n_codes = _pq_stage_index(spark, vecs)
+    base, n_codes = pq_stage_index(spark, vecs)
     out_schema = "qid long, vec_id long, cosine double, rn long"
     if n_codes == 0:
         return spark.createDataFrame([], out_schema)  # empty corpus
 
-    cb = _pq_read_codebook(spark, base, n_codes)  # bounded M×K artifact read
+    cb = pq_read_codebook(spark, base, n_codes)  # bounded M×K artifact read
     codes = spark.read.parquet(base + "/codes")
 
     # Queries arrive as TWO micro-batches (split by vec_id) — one file
     # per trigger, pinning that batch boundaries cannot change any
     # query's top-k.
     q_src = emb.where(F.col("vec_id") < 5)
-    stream_dir = _stage_ordered_segments(
-        (q_src.where(F.col("vec_id") < 3),
-         q_src.where(F.col("vec_id") >= 3)), "pq_queries_")
 
-    out_dir = track_staging_dir(tempfile.mkdtemp(prefix="pq_hits_"))
-    ckpt = track_staging_dir(tempfile.mkdtemp(prefix="pq_ckpt_"))
-
-    def probe_batch(df, batch_id):
-        be = _as_double("embedding")
-        bunit = F.transform(be, lambda x: x / _norm(be))
+    def probe(df):
         batch_queries = (df.select(F.col("vec_id").alias("qid"),
-                                   bunit.alias("qe")).collect())
-        probes = _pq_adc_tables(spark, batch_queries, cb, n_codes)
-        topk_df = _pq_adc_topk(codes, probes, vecs, n_codes, rerank, topk)
-        topk_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}")
+                                   unit_vector("embedding").alias("qe"))
+                         .collect())
+        probes = pq_adc_tables(spark, batch_queries, cb, n_codes)
+        return pq_adc_topk(codes, probes, vecs, n_codes, rerank, topk)
 
-    stream = (spark.readStream.schema(q_src.schema)
-              .option("maxFilesPerTrigger", 1).parquet(stream_dir))
-    q = (stream.writeStream
-         .foreachBatch(probe_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    if not glob.glob(f"{out_dir}/batch_id=*/part-*.parquet"):
-        return spark.createDataFrame([], out_schema)  # empty source
-    return (spark.read.schema(out_schema + ", batch_id int")
-            .parquet(out_dir)
-            .select("qid", "vec_id", "cosine", "rn")
-            .orderBy("qid", "rn"))
+    return run_probe_stream(
+        spark, [q_src.where(F.col("vec_id") < 3),
+                q_src.where(F.col("vec_id") >= 3)], probe, out_schema,
+        "pq").orderBy("qid", "rn")
 
 
 # --- Streaming IVF+PQ probe (the composed index's streaming leg) ------------
@@ -1089,9 +871,9 @@ def streaming_ivfpq_probe(spark, sf_dir, topk: int = 10,
     round-14 composition the same persisted / streaming pair the flat
     PQ and IVF halves already have: the three artifacts (cell-
     partitioned codes, centroids, codebook) are staged ONCE by the
-    shared `_ivfpq_stage_index` builder, query vectors arrive as a
+    shared `ivfpq_stage_index` builder, query vectors arrive as a
     file stream staged as TWO files at one file per trigger, and each
-    micro-batch runs `_ivfpq_probe` — the SAME function the batch
+    micro-batch runs `ivfpq_probe` — the SAME function the batch
     probe runs — with ITS queries: routing against the persisted
     centroids, the batch's visited-cell list pruning the code
     partitions at the directory level, candidate dedupe, integer ADC,
@@ -1113,59 +895,30 @@ def streaming_ivfpq_probe(spark, sf_dir, topk: int = 10,
     as every other persisted index. Reference parity:
     witlox/spark_sentiment has no streaming surface; extension per
     SURVEY §7.4."""
-    import glob
-    import tempfile
-
     emb = load(spark, sf_dir, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
-    vecs = track_persist(emb.select("vec_id", unit.alias("e")),
-                         level=PER_CORPUS)  # one row per vector
+    vecs = unit_vector_frame(emb, "e")
 
     # ---- static side: the persisted composed index (built ONCE) --------
-    base, n_codes = _ivfpq_stage_index(spark, vecs)
+    base, n_codes = ivfpq_stage_index(spark, vecs)
     out_schema = "qid long, vec_id long, cosine double, rn long"
     if n_codes == 0:
         return spark.createDataFrame([], out_schema)  # empty corpus
 
     q_src = emb.where(F.col("vec_id") < 5)
-    stream_dir = _stage_ordered_segments(
-        (q_src.where(F.col("vec_id") < 3),
-         q_src.where(F.col("vec_id") >= 3)), "ivfpq_queries_")
 
-    out_dir = track_staging_dir(tempfile.mkdtemp(prefix="ivfpq_hits_"))
-    ckpt = track_staging_dir(tempfile.mkdtemp(prefix="ivfpq_ckpt_"))
-
-    def probe_batch(df, batch_id):
-        be = _as_double("embedding")
-        bunit = F.transform(be, lambda x: x / _norm(be))
+    def probe(df):
         batch_queries = df.select(F.col("vec_id").alias("qid"),
-                                  bunit.alias("qe"))
-        topk_df = _ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
-                               queries=batch_queries)
-        topk_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}")
+                                  unit_vector("embedding").alias("qe"))
+        return ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
+                           queries=batch_queries)
 
-    stream = (spark.readStream.schema(q_src.schema)
-              .option("maxFilesPerTrigger", 1).parquet(stream_dir))
-    q = (stream.writeStream
-         .foreachBatch(probe_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    if not glob.glob(f"{out_dir}/batch_id=*/part-*.parquet"):
-        return spark.createDataFrame([], out_schema)  # empty source
-    return (spark.read.schema(out_schema + ", batch_id int")
-            .parquet(out_dir)
-            .select("qid", "vec_id", "cosine", "rn")
-            .orderBy("qid", "rn"))
+    return run_probe_stream(
+        spark, [q_src.where(F.col("vec_id") < 3),
+                q_src.where(F.col("vec_id") >= 3)], probe, out_schema,
+        "ivfpq").orderBy("qid", "rn")
 
 
 # --- Streaming BM25 probe (the retrieval family's streaming leg) ------------
-
-from spark_sentiment_spark.plans.text_queries import (  # noqa: E402
-    _BM25_QUERIES, _bm25_score_topk, _bm25_stage_index, BM25_SQL)
 
 
 @register("streaming_bm25_probe", sql=BM25_SQL,
@@ -1178,7 +931,7 @@ def streaming_bm25_probe(spark, sf_dir):
     production-literal of all of them: a search engine builds its index
     once and serves a continuous QUERY stream against it. The postings
     (term-sorted) + doclens artifacts are staged ONCE by the shared
-    builder (`_bm25_stage_index`, plans/text_queries.py); query terms
+    builder (`operators.bm25.bm25_stage_index`); query terms
     arrive as a file stream staged as TWO files (q1 | q2+q3) at one
     file per trigger.
 
@@ -1186,7 +939,7 @@ def streaming_bm25_probe(spark, sf_dir):
     pushes the batch's `w IN (terms)` predicate into the postings scan
     (row-group seeks on the sorted layout), derives df from the matched
     slice and the (n_docs, avgdl) scalar from doclens, and scores via
-    `_bm25_score_topk` — the SAME chain both batch forms run, so
+    `bm25_score_topk` — the SAME chain both batch forms run, so
     streamed-equals-batch is structural. Top-k appends to a
     batch_id-partitioned sink (exactly-once by overwrite-per-batch);
     df/stats derive only from the static artifacts and each qid lives
@@ -1203,52 +956,23 @@ def streaming_bm25_probe(spark, sf_dir):
     batch, never streaming state. Reference parity:
     witlox/spark_sentiment has no streaming surface; extension per
     SURVEY §7.4."""
-    import glob
-    import tempfile
-
-    postings, dl = _bm25_stage_index(spark, sf_dir)
-    stats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
-                   F.avg("dl").alias("avgdl"))
+    postings, dl = bm25_stage_index(spark, sf_dir)
 
     # Query terms arrive as TWO micro-batches (q1 | q2+q3) — one file
     # per trigger, pinning that batch boundaries cannot change rankings.
-    term_rows = [(qid, t) for qid, terms in _BM25_QUERIES for t in terms]
+    term_rows = [(qid, t) for qid, terms in BM25_QUERIES for t in terms]
     q_all = spark.createDataFrame(term_rows, "qid string, term string")
-    stream_dir = _stage_ordered_segments(
-        (q_all.where(F.col("qid") == "q1"),
-         q_all.where(F.col("qid") != "q1")), "bm25_queries_")
-
-    out_dir = track_staging_dir(tempfile.mkdtemp(prefix="bm25_hits_"))
-    ckpt = track_staging_dir(tempfile.mkdtemp(prefix="bm25_ckpt_"))
-
-    def probe_batch(df_batch, batch_id):
-        rows = df_batch.collect()  # the tiny query side
-        if rows:
-            q = spark.createDataFrame(
-                [(r["qid"], r["term"]) for r in rows],
-                "qid string, term string")
-            terms = sorted({r["term"] for r in rows})
-            matched = postings.where(F.col("w").isin(terms))
-            df = matched.groupBy("w").agg(
-                F.countDistinct("doc_id").alias("df"))
-            topk = _bm25_score_topk(q, matched, df, dl, stats)
-        else:  # empty micro-batch: emit an empty, schema-stable slice
-            topk = spark.createDataFrame(
-                [], "qid string, doc_id bigint, score double, rn bigint")
-        topk.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    stream = (spark.readStream.schema(q_all.schema)
-              .option("maxFilesPerTrigger", 1).parquet(stream_dir))
-    q = (stream.writeStream
-         .foreachBatch(probe_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
     out_schema = "qid string, doc_id bigint, score double, rn bigint"
-    if not glob.glob(f"{out_dir}/batch_id=*/part-*.parquet"):
-        return spark.createDataFrame([], out_schema)  # empty source
-    return (spark.read.schema(out_schema + ", batch_id int")
-            .parquet(out_dir)
-            .select("qid", "doc_id", "score", "rn")
-            .orderBy("qid", "rn"))
+
+    def probe(df_batch):
+        rows = df_batch.collect()  # the tiny query side
+        if not rows:  # empty micro-batch: an empty, schema-stable slice
+            return spark.createDataFrame([], out_schema)
+        q = spark.createDataFrame([(r["qid"], r["term"]) for r in rows],
+                                  "qid string, term string")
+        return bm25_probe(postings, dl, q, sorted({r["term"] for r in rows}))
+
+    return run_probe_stream(
+        spark, [q_all.where(F.col("qid") == "q1"),
+                q_all.where(F.col("qid") != "q1")], probe, out_schema,
+        "bm25").orderBy("qid", "rn")

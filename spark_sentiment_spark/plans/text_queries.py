@@ -9,8 +9,22 @@ from pyspark.sql.window import Window
 
 from spark_sentiment_spark.functions.lexicon import LEXICON_CSV
 from spark_sentiment_spark.functions.text import clean_text_col, clean_text_sql
-from spark_sentiment_spark.plans.registry import (PER_CORPUS, load,
-                                                  register, track_persist)
+from spark_sentiment_spark.operators.bm25 import (BM25_SQL, BM25_TERMS,
+                                                  bm25_probe,
+                                                  bm25_query_frame,
+                                                  bm25_score_topk,
+                                                  bm25_stage_index,
+                                                  bm25_tokens)
+from spark_sentiment_spark.operators.quality import (C4_FEATS_SQL,
+                                                     C4_KEEP_SQL,
+                                                     C4_REASON_SQL,
+                                                     GOPHER_FEATS_SQL,
+                                                     GOPHER_KEEP_SQL,
+                                                     GOPHER_REASON_SQL,
+                                                     c4_feats, gopher_feats,
+                                                     stopword_langid)
+from spark_sentiment_spark.plans.registry import (load, register,
+                                                  track_persist)
 
 # --- Cleaning (native regexp chain, F4-F7 / U1) -----------------------------
 
@@ -442,36 +456,10 @@ ORDER BY doc_id
 @register("langid_stopword", sql=LANGID_SQL, tags=("text",))
 def langid_stopword(spark, sf_dir):
     """Language ID by stop-word voting — the n-gram-heuristic family,
-    deterministic and fully native (no Python).
-
-    Two projection layers like the oracle's `scored` CTE: each
-    language's stop-word filter is aliased once in an inner select and
-    the vote chain references the COUNTS by name — inlined, the
-    when-chain evaluated each of the three token-array filters up to
-    three times per row (CollapseProject inlines single-layer aliases;
-    interpreted mode has no subexpression elimination — the
-    `_composite_gate` fix class, 9 filter nodes → 3 in the executed
-    plan). Shared by `langid_confusion` and `langid_kappa`."""
-    docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ", -1)
-
-    def hits(words):
-        arr = F.array(*[F.lit(w) for w in words])
-        return F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).cast("long")
-
-    scored = docs.select(
-        "doc_id", "lang",
-        hits(["the", "a", "of", "and", "is"]).alias("__en"),
-        hits(["der", "die", "das", "und", "ist"]).alias("__de"),
-        hits(["le", "la", "et", "est", "les"]).alias("__fr"))
-    en, de, fr = F.col("__en"), F.col("__de"), F.col("__fr")
-    pred = (
-        F.when((en >= de) & (en >= fr) & (en > 0), "en")
-        .when((de >= fr) & (de > 0), "de")
-        .when(fr > 0, "fr")
-        .otherwise("unknown")
-    )
-    return (scored.select("doc_id", "lang", pred.alias("predicted_lang"))
+    deterministic and fully native (no Python). The classifier
+    (`operators.quality.stopword_langid`) also feeds `langid_confusion`
+    and `langid_kappa`."""
+    return (stopword_langid(load(spark, sf_dir, "documents"))
             .orderBy("doc_id"))
 
 
@@ -655,7 +643,7 @@ def text_tfidf_topk(spark, sf_dir):
     # rows, so doc-frequency is a plain count over tf — no second pass over
     # the token stream and no two-phase countDistinct.
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = track_persist(tf, level=PER_CORPUS)  # per (doc, term) row
+    tf = track_persist(tf)  # per (doc, term) row
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
@@ -969,8 +957,7 @@ def langid_char_ngram(spark, sf_dir):
     ).otherwise(F.array(F.col("s")))
     tri = track_persist(
         base.select("doc_id", "lang", F.explode(grams).alias("g"))
-        .distinct(),
-        level=PER_CORPUS)  # per distinct (doc, trigram) — text-sized
+        .distinct())  # per distinct (doc, trigram) — text-sized
     wprof = Window.partitionBy("plang").orderBy(F.col("c").desc(), "g")
     profk = (tri.where(F.col("doc_id") % 2 == 0)
              .groupBy(F.col("lang").alias("plang"), "g")
@@ -1184,8 +1171,7 @@ def search_phrase(spark, sf_dir):
     pos = track_persist(
         docs.select("doc_id", F.posexplode(
             F.split(F.lower("text"), " ", -1)).alias("i", "w"))
-        .select("doc_id", (F.col("i") + 1).alias("i"), "w"),
-        level=PER_CORPUS)  # per (doc, position) row — text-sized
+        .select("doc_id", (F.col("i") + 1).alias("i"), "w"))
     ph = None
     for w1, w2 in _PHRASES:
         row = spark.range(1).select(
@@ -1366,8 +1352,7 @@ def dedup_tfidf_cosine(spark, sf_dir):
     # the weighted-postings join — persist it so the corpus explodes once
     # instead of twice.
     tf = track_persist(
-        tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf")),
-        level=PER_CORPUS)  # per (doc, term) row
+        tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf")))
     df = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
     dec = lambda c: F.col(c).cast("decimal(18,0)")
@@ -1377,14 +1362,12 @@ def dedup_tfidf_cosine(spark, sf_dir):
         .select("doc_id", "w",
                 F.floor(F.col("tf") * F.log((F.col("n_docs") + 1.0)
                                             / (F.col("df") + 1.0))
-                        * F.lit(1_000_000.0)).cast("bigint").alias("wti")),
-        level=PER_CORPUS)  # per (doc, kept term) row
+                        * F.lit(1_000_000.0)).cast("bigint").alias("wti")))
     # Round-18 optimization (guide §2.4): norms feeds both final join
     # sides (na, nb) — persist the narrow per-doc sum-of-squares so the
     # aggregation over the cached weights frame runs once.
     norms = track_persist(wts.groupBy("doc_id").agg(
-        F.sum(dec("wti") * dec("wti")).alias("ss")),
-        level=PER_CORPUS)  # 2 cols per doc
+        F.sum(dec("wti") * dec("wti")).alias("ss")))  # 2 cols per doc
     a, b = wts.alias("a"), wts.alias("b")
     dots = (a.join(b, (F.col("a.w") == F.col("b.w"))
                    & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1408,55 +1391,6 @@ def dedup_tfidf_cosine(spark, sf_dir):
 
 # --- BM25 ranked retrieval ---------------------------------------------------
 
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-_BM25_TOPK = 10
-_BM25_QUERIES = [("q1", ["spark", "join", "window"]),
-                 ("q2", ["batch", "stream"]),
-                 ("q3", ["customer", "filter", "data"])]
-
-_BM25_TERMS_SEL = "\nUNION ALL\n".join(
-    f"SELECT '{qid}' AS qid, '{t}' AS term"
-    for qid, terms in _BM25_QUERIES for t in terms)
-
-BM25_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, w FROM (
-    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-    FROM documents WHERE text IS NOT NULL AND trim(text) <> '')
-  WHERE w <> ''
-), dl AS (
-  SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id
-), tf AS (
-  SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY 1, 2
-), df AS (
-  SELECT w, count(DISTINCT doc_id) AS df FROM tok GROUP BY w
-), stats AS (
-  SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl
-), q AS ({_BM25_TERMS_SEL}
-), scored AS (
-  SELECT q.qid, tf.doc_id,
-         sum(ln(1.0 + (s.n_docs - df.df + 0.5) / (df.df + 0.5))
-             * tf.tf * ({_BM25_K1} + 1.0)
-             / (tf.tf + {_BM25_K1}
-                * (1.0 - {_BM25_B} + {_BM25_B} * dl.dl / s.avgdl)))
-           AS score
-  FROM q
-  JOIN tf ON tf.w = q.term
-  JOIN df ON df.w = q.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-  GROUP BY q.qid, tf.doc_id
-)
-SELECT qid, doc_id, round(score, 6) AS score,
-       CAST(row_number() OVER (PARTITION BY qid
-                               ORDER BY round(score, 6) DESC, doc_id)
-            AS BIGINT) AS rn
-FROM scored
-QUALIFY rn <= {_BM25_TOPK}
-ORDER BY qid, rn
-"""
-
 
 @register("search_bm25", sql=BM25_SQL, tags=("text", "search"))
 def search_bm25(spark, sf_dir):
@@ -1475,58 +1409,13 @@ def search_bm25(spark, sf_dir):
     matched postings only, and top-k is a window partitioned by qid.
     This IS the inverted-index query plan — nothing touches
     non-matching documents."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
-    tok = track_persist(
-        docs.select("doc_id", F.explode(
-            F.split(F.lower("text"), " ", -1)).alias("w"))
-        .where(F.col("w") != ""),
-        level=PER_CORPUS)  # per (doc, token) row — text-sized
+    tok = bm25_tokens(spark, sf_dir)
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     tf = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
                    F.avg("dl").alias("avgdl"))
-    q = _bm25_query_frame(spark)
-    return _bm25_score_topk(q, tf, df, dl, stats)
-
-
-def _bm25_query_frame(spark):
-    """The fixture query-term list as a tiny broadcastable frame —
-    shared by the inline ranking and the persisted-index probe."""
-    q = None
-    for qid, terms in _BM25_QUERIES:
-        for t in terms:
-            row = spark.range(1).select(F.lit(qid).alias("qid"),
-                                        F.lit(t).alias("term"))
-            q = row if q is None else q.union(row)
-    return q
-
-
-def _bm25_score_topk(q, tf, df, dl, stats):
-    """The BM25 scoring + per-query top-k chain shared verbatim by
-    `search_bm25` (inline-built postings) and
-    `search_bm25_persisted_probe` (postings read from the staged
-    index), so probe-equals-inline is structural."""
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5))
-    gain = (idf * F.col("tf") * (_BM25_K1 + 1.0)
-            / (F.col("tf") + _BM25_K1
-               * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))))
-    scored = (F.broadcast(q).join(tf, F.col("term") == F.col("w"))
-              .join(df, "w")
-              .join(dl, "doc_id")
-              .crossJoin(F.broadcast(stats))
-              .groupBy("qid", "doc_id")
-              .agg(F.sum(gain).alias("score")))
-    w_rank = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("score", 6)), F.asc("doc_id"))
-    return (scored
-            .withColumn("rn", F.row_number().over(w_rank).cast("long"))
-            .where(F.col("rn") <= _BM25_TOPK)
-            .select("qid", "doc_id", F.round("score", 6).alias("score"),
-                    "rn")
-            .orderBy("qid", "rn"))
+    return bm25_score_topk(bm25_query_frame(spark), tf, df, dl, stats)
 
 
 @register("search_bm25_persisted_probe", sql=BM25_SQL,
@@ -1554,7 +1443,7 @@ def search_bm25_persisted_probe(spark, sf_dir):
     tests/test_round13_queries.py) — selects only matching postings;
     df comes from that slice (identical values: the slice holds every
     posting of each matched term), and scoring + top-k is
-    `_bm25_score_topk`, the SAME chain the inline form runs. The probe
+    `bm25_score_topk`, the SAME chain the inline form runs. The probe
     plan touches the documents table zero times (pinned).
 
     Oracle: BM25_SQL verbatim — the staging is a pure physical split,
@@ -1565,57 +1454,8 @@ def search_bm25_persisted_probe(spark, sf_dir):
     only the row groups containing its terms (posting-list seeks, the
     inverted-index access pattern) plus one narrow doclens pass for
     the scalar."""
-    postings, dl = _bm25_stage_index(spark, sf_dir)
-    return _bm25_probe(spark, postings, dl)
-
-
-def _bm25_probe(spark, postings, dl):
-    """Phase-2 of the inverted index — the recurring per-batch cost,
-    callable on its own against pre-staged artifacts (scripts/
-    scale_probe.py times it separately from the build): the term
-    IN-filter seeks the sorted postings, df falls out of the matched
-    slice, and scoring is the shared `_bm25_score_topk` chain."""
-    all_terms = sorted({t for _, terms in _BM25_QUERIES for t in terms})
-    matched = postings.where(F.col("w").isin(all_terms))
-    df = matched.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
-    stats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
-                   F.avg("dl").alias("avgdl"))
-    return _bm25_score_topk(_bm25_query_frame(spark), matched, df, dl, stats)
-
-
-def _bm25_stage_index(spark, sf_dir):
-    """Phase-1 inverted-index builder shared by
-    `search_bm25_persisted_probe` and `streaming_bm25_probe`
-    (plans/streaming_queries.py): postings (doc_id, w, tf) written
-    repartitioned + SORTED on the term (row-group stats make the index
-    seekable) and doclens (doc_id, dl), in exactly two corpus scans.
-    Returns the two artifact frames read back with explicit schemas (an
-    empty corpus writes part-less directories that schema inference
-    cannot read back)."""
-    import tempfile
-
-    from spark_sentiment_spark.plans.registry import track_staging_dir
-
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
-    tok = track_persist(
-        docs.select("doc_id", F.explode(
-            F.split(F.lower("text"), " ", -1)).alias("w"))
-        .where(F.col("w") != ""),
-        level=PER_CORPUS)  # per (doc, token) row — text-sized
-
-    base = track_staging_dir(tempfile.mkdtemp(prefix="bm25_index_"))
-    postings_src = (tok.groupBy("doc_id", "w")
-                    .agg(F.count(F.lit(1)).alias("tf"))
-                    .repartition("w").sortWithinPartitions("w"))
-    postings_src.write.mode("overwrite").parquet(base + "/postings")
-    dl_src = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    dl_src.write.mode("overwrite").parquet(base + "/doclens")
-
-    postings = spark.read.schema(postings_src.schema) \
-        .parquet(base + "/postings")
-    dl = spark.read.schema(dl_src.schema).parquet(base + "/doclens")
-    return postings, dl
+    postings, dl = bm25_stage_index(spark, sf_dir)
+    return bm25_probe(postings, dl, bm25_query_frame(spark), BM25_TERMS)
 
 
 # --- Gopher quality rules -----------------------------------------------------
@@ -1624,55 +1464,6 @@ def _bm25_stage_index(spark, sf_dir):
 # distinct from `quality_gate` (this repo's composite gate): these are the
 # SPECIFIC published thresholds, each rule reported as its measured feature
 # so filter-rate dashboards can tune per-rule.
-
-GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
-
-_GOPHER_W = "string_split_regex(trim(text), '\\s+')"
-_GOPHER_LN = "string_split(text, chr(10))"
-_GOPHER_STOP_SQL = " + ".join(
-    f"CAST(list_contains(list_transform({_GOPHER_W}, x -> lower(x)), "
-    f"'{s}') AS INTEGER)" for s in GOPHER_STOPWORDS)
-
-# Split into CTE body + verdict expressions so the composed curation
-# pass (`curate_corpus_gopher`, plans/pipeline_queries.py) reuses the
-# EXACT same SQL for its gate stage instead of a paraphrase.
-GOPHER_FEATS_SQL = f"""
-  SELECT doc_id, text,
-         CAST(len({_GOPHER_W}) AS BIGINT) AS n_words,
-         CAST(list_sum(list_transform({_GOPHER_W}, x -> length(x)))
-              AS DOUBLE) / len({_GOPHER_W}) AS mean_wl,
-         CAST(length(text) - length(replace(text, '#', ''))
-              AS DOUBLE) / len({_GOPHER_W}) AS hash_r,
-         CAST((length(text) - length(replace(text, '...', ''))) / 3
-              + length(text) - length(replace(text, '…', ''))
-              AS DOUBLE) / len({_GOPHER_W}) AS ell_r,
-         CAST(len(list_filter({_GOPHER_LN},
-                x -> ltrim(x) LIKE '•%' OR ltrim(x) LIKE '-%'
-                     OR ltrim(x) LIKE '*%')) AS DOUBLE)
-           / len({_GOPHER_LN}) AS bullet_r,
-         CAST(len(list_filter({_GOPHER_LN},
-                x -> rtrim(x) LIKE '%...' OR rtrim(x) LIKE '%…'))
-              AS DOUBLE) / len({_GOPHER_LN}) AS ellipsis_r,
-         CAST(len(list_filter({_GOPHER_W},
-                x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-           / len({_GOPHER_W}) AS alpha_r,
-         CAST({_GOPHER_STOP_SQL} AS BIGINT) AS n_stop
-  FROM documents WHERE text IS NOT NULL"""
-
-GOPHER_KEEP_SQL = """(n_words BETWEEN 50 AND 100000) AND mean_wl BETWEEN 3 AND 10
-         AND hash_r <= 0.1 AND ell_r <= 0.1
-         AND bullet_r <= 0.9 AND ellipsis_r <= 0.3
-         AND alpha_r >= 0.8 AND n_stop >= 2"""
-
-GOPHER_REASON_SQL = """CASE WHEN n_words < 50 THEN 'too_few_words'
-            WHEN n_words > 100000 THEN 'too_many_words'
-            WHEN mean_wl < 3 OR mean_wl > 10 THEN 'word_length'
-            WHEN hash_r > 0.1 OR ell_r > 0.1 THEN 'symbol_ratio'
-            WHEN bullet_r > 0.9 THEN 'bullet_lines'
-            WHEN ellipsis_r > 0.3 THEN 'ellipsis_lines'
-            WHEN alpha_r < 0.8 THEN 'non_alpha_words'
-            WHEN n_stop < 2 THEN 'stopwords'
-            ELSE 'ok' END"""
 
 GOPHER_SQL = f"""
 WITH feats AS (
@@ -1711,68 +1502,12 @@ def quality_gopher_rules(spark, sf_dir):
     return _gopher_rules(docs)
 
 
-def _gopher_feats(docs):
-    """Raw Gopher features + verdict over any (doc_id, text) frame —
-    the unformatted core shared by `quality_gopher_rules` (which rounds
-    and orders it) and the composed curation pass `curate_corpus_gopher`
-    (plans/pipeline_queries.py), which consumes only (doc_id, keep,
-    reason) as its gate stage."""
-    w = F.split(F.trim(F.col("text")), r"\s+")
-    ln = F.split(F.col("text"), "\n", -1)
-    stop_hits = sum(F.array_contains(F.col("__lw"), s).cast("int")
-                    for s in GOPHER_STOPWORDS)
-    feats = (docs.select(
-        "doc_id", "text", w.alias("__w"), ln.alias("__ln"))
-        .withColumn("__lw", F.expr("transform(__w, x -> lower(x))"))
-        .select(
-            "doc_id", "text",
-            F.size("__w").cast("bigint").alias("n_words"),
-            (F.expr("aggregate(transform(__w, x -> length(x)), 0,"
-                    " (a, x) -> a + x)").cast("double")
-             / F.size("__w")).alias("mean_wl"),
-            ((F.length("text")
-              - F.length(F.expr("replace(text, '#', '')")))
-             .cast("double") / F.size("__w")).alias("hash_r"),
-            (((F.length("text")
-               - F.length(F.expr("replace(text, '...', '')"))) / 3
-              + F.length("text")
-              - F.length(F.expr("replace(text, '…', '')")))
-             .cast("double") / F.size("__w")).alias("ell_r"),
-            (F.expr("size(filter(__ln, x -> ltrim(x) LIKE '•%'"
-                    " OR ltrim(x) LIKE '-%' OR ltrim(x) LIKE '*%'))")
-             .cast("double") / F.size("__ln")).alias("bullet_r"),
-            (F.expr("size(filter(__ln, x -> rtrim(x) LIKE '%...'"
-                    " OR rtrim(x) LIKE '%…'))")
-             .cast("double") / F.size("__ln")).alias("ellipsis_r"),
-            (F.expr("size(filter(__w, x -> x rlike '[A-Za-z]'))")
-             .cast("double") / F.size("__w")).alias("alpha_r"),
-            stop_hits.cast("bigint").alias("n_stop")))
-    keep = (F.col("n_words").between(50, 100000)
-            & F.col("mean_wl").between(3, 10)
-            & (F.col("hash_r") <= 0.1) & (F.col("ell_r") <= 0.1)
-            & (F.col("bullet_r") <= 0.9)
-            & (F.col("ellipsis_r") <= 0.3) & (F.col("alpha_r") >= 0.8)
-            & (F.col("n_stop") >= 2))
-    reason = (F.when(F.col("n_words") < 50, "too_few_words")
-              .when(F.col("n_words") > 100000, "too_many_words")
-              .when((F.col("mean_wl") < 3) | (F.col("mean_wl") > 10),
-                    "word_length")
-              .when((F.col("hash_r") > 0.1) | (F.col("ell_r") > 0.1),
-                    "symbol_ratio")
-              .when(F.col("bullet_r") > 0.9, "bullet_lines")
-              .when(F.col("ellipsis_r") > 0.3, "ellipsis_lines")
-              .when(F.col("alpha_r") < 0.8, "non_alpha_words")
-              .when(F.col("n_stop") < 2, "stopwords")
-              .otherwise("ok"))
-    return feats.withColumn("keep", keep).withColumn("reason", reason)
-
-
 def _gopher_rules(docs):
     """Formatted `quality_gopher_rules` output over any (doc_id, text)
     frame — split out so tests can exercise the bullet/ellipsis line
     rules on constructed multi-line corpora (the fixture is
     single-line)."""
-    feats = _gopher_feats(docs)
+    feats = gopher_feats(docs)
     return (feats.select(
         "doc_id", "n_words",
         F.round("mean_wl", 6).alias("mean_word_len"),
@@ -1796,36 +1531,6 @@ def _gopher_rules(docs):
 # sentence splitter — here sentences are approximated as terminal-mark
 # ('.', '!', '?') occurrences in the RETAINED lines, the regex-level
 # approximation; thresholds themselves are the published ones.
-
-_C4_LINES = "string_split(text, chr(10))"
-_C4_KEPT = (f"list_filter({_C4_LINES}, l -> "
-            "regexp_matches(rtrim(l), '[.!?\"]$') "
-            "AND len(list_filter(string_split_regex(trim(l), '\\s+'), "
-            "w -> w <> '')) >= 5 "
-            "AND NOT contains(lower(l), 'javascript'))")
-
-# Split into CTE body + verdict expressions so the composed curation
-# pass (`curate_corpus_c4`, plans/pipeline_queries.py) reuses the EXACT
-# same SQL for its gate stage instead of a paraphrase (the Gopher-gate
-# pattern).
-C4_FEATS_SQL = f"""
-  SELECT doc_id, text,
-         CAST(len({_C4_LINES}) AS BIGINT) AS n_lines,
-         CAST(len({_C4_KEPT}) AS BIGINT) AS n_kept,
-         CAST(length(coalesce(array_to_string({_C4_KEPT}, chr(10)), ''))
-              - length(replace(replace(replace(
-                  coalesce(array_to_string({_C4_KEPT}, chr(10)), ''),
-                  '.', ''), '!', ''), '?', '')) AS BIGINT) AS n_sent,
-         contains(lower(text), 'lorem ipsum') AS has_lorem,
-         contains(text, '{{') AS has_brace
-  FROM documents WHERE text IS NOT NULL"""
-
-C4_KEEP_SQL = "NOT has_lorem AND NOT has_brace AND n_sent >= 3"
-
-C4_REASON_SQL = """CASE WHEN has_lorem THEN 'lorem_ipsum'
-            WHEN has_brace THEN 'curly_brace'
-            WHEN n_sent < 3 THEN 'too_few_sentences'
-            ELSE 'ok' END"""
 
 C4_SQL = f"""
 WITH feats AS (
@@ -1860,45 +1565,12 @@ def quality_c4_rules(spark, sf_dir):
     return _c4_rules(docs)
 
 
-def _c4_feats(docs):
-    """Raw C4 features + verdict over any (doc_id, text) frame — the
-    unformatted core shared by `quality_c4_rules` (which orders it) and
-    the composed curation pass `curate_corpus_c4`
-    (plans/pipeline_queries.py), which consumes only (doc_id, text,
-    keep, reason) as its gate stage."""
-    kept = F.expr(
-        "filter(split(text, '\\n', -1), l -> "
-        "rtrim(l) rlike '[.!?\"]$' "
-        "AND size(filter(split(trim(l), '\\\\s+'), w -> w != '')) >= 5 "
-        "AND NOT contains(lower(l), 'javascript'))")
-    feats = (docs.select("doc_id", "text", kept.alias("__kept"))
-             .withColumn("__kt", F.array_join("__kept", "\n"))
-             .select(
-                 "doc_id", "text",
-                 F.size(F.split("text", "\n", -1)).cast("bigint")
-                 .alias("n_lines"),
-                 F.size("__kept").cast("bigint").alias("n_kept"),
-                 (F.length("__kt") - F.length(F.expr(
-                     "replace(replace(replace(__kt, '.', ''),"
-                     " '!', ''), '?', '')"))).cast("bigint")
-                 .alias("n_sent"),
-                 F.lower("text").contains("lorem ipsum").alias("has_lorem"),
-                 F.col("text").contains("{").alias("has_brace")))
-    keep = (~F.col("has_lorem") & ~F.col("has_brace")
-            & (F.col("n_sent") >= 3))
-    reason = (F.when(F.col("has_lorem"), "lorem_ipsum")
-              .when(F.col("has_brace"), "curly_brace")
-              .when(F.col("n_sent") < 3, "too_few_sentences")
-              .otherwise("ok"))
-    return feats.withColumn("keep", keep).withColumn("reason", reason)
-
-
 def _c4_rules(docs):
     """Formatted `quality_c4_rules` output over any (doc_id, text)
     frame — split out so tests can exercise the line-retention rules on
     constructed multi-line corpora (the fixture is single-line prose
     with no terminal punctuation, honestly rejected wholesale)."""
-    feats = _c4_feats(docs)
+    feats = c4_feats(docs)
     return (feats.select(
         "doc_id", "n_lines",
         F.col("n_kept").alias("n_kept_lines"),

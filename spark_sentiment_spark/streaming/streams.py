@@ -18,9 +18,31 @@ downstream.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from spark_sentiment_spark.plans.registry import track_staging_dir
+
+#: The longest any streaming run here may take, in seconds. A run still
+#: going then is stopped and raises TimeoutError instead of hanging.
+STREAM_TIMEOUT_S = 600
+
+
+def await_stream(query) -> None:
+    """Wait for a started streaming ``query`` to finish, at most
+    STREAM_TIMEOUT_S seconds; a query still running then is stopped and
+    TimeoutError raised. A failed query raises its own error."""
+    if not query.awaitTermination(STREAM_TIMEOUT_S):
+        query.stop()
+        raise TimeoutError(
+            f"streaming query {query.name or query.id} did not finish "
+            f"within {STREAM_TIMEOUT_S} s and was stopped")
 
 
 def _stage_dir(path: str) -> str:
@@ -30,9 +52,6 @@ def _stage_dir(path: str) -> str:
     standard Spark table layout) streams as-is — real deployments stream a
     directory or a Kafka topic and skip this shim entirely."""
     import hashlib
-    import os
-    import shutil
-    import tempfile
 
     if os.path.isdir(path):
         return path
@@ -158,9 +177,9 @@ def run_to_memory(stream_df: DataFrame, name: str,
     ``trigger(availableNow)`` into an in-memory sink; returns the result
     table. This is the test/benchmark harness — production sinks swap in
     ``format("parquet")``/``foreachBatch`` with checkpointing."""
-    q = (stream_df.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode).trigger(availableNow=True).start())
-    q.awaitTermination()
+    await_stream(stream_df.writeStream.format("memory").queryName(name)
+                 .outputMode(output_mode).trigger(availableNow=True)
+                 .start())
     return stream_df.sparkSession.table(name)
 
 
@@ -249,6 +268,64 @@ def write_exactly_once(stream_df: DataFrame, out_dir: str,
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start())
+
+
+def stage_ordered_segments(slices, prefix: str) -> str:
+    """Stage each DataFrame slice as ONE parquet file with ascending
+    names AND mtimes in a fresh tracked staging dir: the file stream
+    source (latestFirst=false) admits oldest-mtime files first, so a
+    reader capped at one file per trigger replays the slices in order,
+    one micro-batch each — the in-order delivery a CDC log gives.
+
+    An EMPTY slice still stages a schema-only part file and therefore
+    still fires an (empty) micro-batch: Spark's coalesce(1) parquet
+    write always emits one part file (asserted below — a multi-part or
+    zero-part write would silently break the one-batch-per-slice
+    contract). Degenerate inputs thus chain the SAME number of
+    versions, each step an identity merge — pinned by
+    tests/test_streaming.py::test_stage_ordered_segments_empty_slice_fires_batch;
+    do not assume empty slices skip batches."""
+    stream_dir = track_staging_dir(tempfile.mkdtemp(prefix=prefix))
+    for i, sl in enumerate(slices):
+        tmp = track_staging_dir(tempfile.mkdtemp(prefix=f"{prefix}seg_"))
+        sl.coalesce(1).write.mode("overwrite").parquet(tmp)
+        parts = glob.glob(f"{tmp}/part-*.parquet")
+        if len(parts) != 1:
+            raise AssertionError(
+                f"slice {i}: expected exactly one part file, got {parts}")
+        target = f"{stream_dir}/seg{i}.parquet"
+        shutil.move(parts[0], target)
+        os.utime(target, (1_000_000_000 + i * 100,) * 2)
+    return stream_dir
+
+
+def run_probe_stream(spark: SparkSession, segments, probe, out_schema: str,
+                     prefix: str) -> DataFrame:
+    """Replay ``segments`` (DataFrames of one schema) as a file stream,
+    one micro-batch per segment in order, and run ``probe(batch)`` on each
+    under ``foreachBatch`` — batch semantics (windows, collects) inside a
+    stream. Each batch's result is written to its own ``batch_id=<n>``
+    directory in overwrite mode, so a replayed batch rewrites its own
+    output (exactly-once, as in `write_exactly_once`). Returns the union
+    of the batch results as ``out_schema`` (empty if no batch wrote a
+    file); ``prefix`` names the staging dirs."""
+    stream_dir = stage_ordered_segments(segments, f"{prefix}_stream_")
+    out_dir = track_staging_dir(tempfile.mkdtemp(prefix=f"{prefix}_hits_"))
+    ckpt = track_staging_dir(tempfile.mkdtemp(prefix=f"{prefix}_ckpt_"))
+
+    def write_batch(df, batch_id):
+        probe(df).write.mode("overwrite").parquet(
+            f"{out_dir}/batch_id={batch_id}")
+
+    stream = (spark.readStream.schema(segments[0].schema)
+              .option("maxFilesPerTrigger", 1).parquet(stream_dir))
+    await_stream(stream.writeStream.foreachBatch(write_batch)
+                 .option("checkpointLocation", ckpt)
+                 .trigger(availableNow=True).start())
+    if not glob.glob(f"{out_dir}/batch_id=*/part-*.parquet"):
+        return spark.createDataFrame([], out_schema)
+    return (spark.read.schema(out_schema + ", batch_id int")
+            .parquet(out_dir).drop("batch_id"))
 
 
 def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

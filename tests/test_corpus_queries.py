@@ -120,8 +120,8 @@ def test_vocab_growth_curve_invariants(spark):
     vocabulary (every type is first-seen exactly once)."""
     from pyspark.sql import functions as F
 
-    from spark_sentiment_spark.plans.corpus_queries import (
-        _tokens_col, vocab_growth_curve)
+    from spark_sentiment_spark.functions.text import ws_tokens
+    from spark_sentiment_spark.plans.corpus_queries import vocab_growth_curve
     from spark_sentiment_spark.plans.registry import load, release_caches
     from tests.conftest import SF_DIR
 
@@ -133,7 +133,7 @@ def test_vocab_growth_curve_invariants(spark):
 
     docs = (load(spark, SF_DIR, "documents")
             .where("text IS NOT NULL AND trim(text) <> ''"))
-    tok = docs.select(F.explode(_tokens_col()).alias("w"))
+    tok = docs.select(F.explode(ws_tokens()).alias("w"))
     n_tokens = tok.count()
     n_types = tok.distinct().count()
     assert rows[-1]["cum_tokens"] == n_tokens

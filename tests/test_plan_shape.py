@@ -354,7 +354,7 @@ def test_streaming_hll_state_bounded_and_jvm(spark):
     the 1-row exact twin broadcast."""
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       release_caches)
-    from spark_sentiment_spark.plans.sketch_queries import _HLL_M
+    from spark_sentiment_spark.operators.sketch import HLL_M
 
     all_queries()
     out = REGISTRY["streaming_hll_distinct"].fn(spark, SF_DIR)
@@ -367,7 +367,7 @@ def test_streaming_hll_state_bounded_and_jvm(spark):
     sink_rows = spark.table([t for t in spark.catalog.listTables()
                              if t.name.startswith("stream_hll")][-1].name) \
         .count()
-    assert sink_rows <= _HLL_M
+    assert sink_rows <= HLL_M
 
 
 def test_round7_queries_stay_jvm_native(spark):
@@ -724,7 +724,7 @@ def test_ivfpq_probe_prunes_to_visited_cells_no_python(spark):
     import glob
 
     from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.similarity_queries import PQ_K
+    from spark_sentiment_spark.operators.vectors import PQ_K
 
     plan = _plan(spark, "ann_ivfpq_persisted_probe")
     assert "Python" not in plan            # no re-encode in the probe
@@ -767,7 +767,7 @@ def test_compacted_ivfpq_layout_still_directory_prunes(spark):
     import glob
 
     from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.similarity_queries import PQ_K
+    from spark_sentiment_spark.operators.vectors import PQ_K
 
     plan = _plan(spark, "ann_ivfpq_compacted_probe")
     assert "Python" not in plan            # no re-encode in the probe
@@ -792,7 +792,7 @@ def test_tombstone_probe_broadcast_anti_join_still_prunes(spark):
     visited-cell partition filter survives the added join, and the
     probe plan keeps zero Python nodes."""
     from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.similarity_queries import PQ_K
+    from spark_sentiment_spark.operators.vectors import PQ_K
 
     plan = _plan(spark, "ann_ivfpq_tombstone_probe")
     assert "Python" not in plan
@@ -815,7 +815,7 @@ def test_refresh_probe_serves_rebuilt_index_pruned_no_python(spark):
     stay Python-free with no sort-merge join — the same probe-plan
     contract every other index leg pins."""
     from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.similarity_queries import PQ_K
+    from spark_sentiment_spark.operators.vectors import PQ_K
 
     plan = _plan(spark, "ann_ivfpq_refresh_probe")
     assert "Python" not in plan

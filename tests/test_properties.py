@@ -928,14 +928,14 @@ def test_mixture_upsample_invariants_on_generated_corpora(spark, rows,
     import hashlib
     from collections import Counter
 
-    from spark_sentiment_spark.plans.corpus_queries import (
-        _md5_ranked, _mixture_quotas)
+    from spark_sentiment_spark.operators.mixture import (md5_ranked,
+                                                         mixture_quotas)
     from spark_sentiment_spark.plans.pipeline_queries import _n_tokens_col
 
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
     live = (df.where(F.col("text").isNotNull() & (F.trim("text") != ""))
             .select("doc_id", "source", _n_tokens_col().alias("n_tokens")))
-    quota = _mixture_quotas(live, budget)
+    quota = mixture_quotas(live, budget)
     ks = (quota.where(F.col("q") >= 1)
           .select("source", "n_docs",
                   F.explode(F.sequence(F.lit(1).cast("long"),
@@ -943,7 +943,7 @@ def test_mixture_upsample_invariants_on_generated_corpora(spark, rows,
     slots = ks.select(
         "source", "n_docs", "k",
         (((F.col("k") - 1) % F.col("n_docs")) + 1).alias("pick_t"))
-    out = (_md5_ranked(live).withColumnRenamed("pick", "pick_t")
+    out = (md5_ranked(live).withColumnRenamed("pick", "pick_t")
            .join(F.broadcast(slots), ["source", "pick_t"])
            .select("doc_id", "source", F.col("k").alias("pick"),
                    F.floor((F.col("k") - 1) / F.col("n_docs"))

@@ -276,7 +276,7 @@ def test_rfm_distributed_seeded_fuzz(spark, seed):
 
 def test_streaming_scd2_intermediate_versions_equal_rebuilds(spark):
     """The strongest chaining property: EVERY intermediate dimension
-    version vK (K = 1..3) must equal a full `_scd2_dim` rebuild over all
+    version vK (K = 1..3) must equal a full `scd2_dim` rebuild over all
     events before that batch's upper cutoff — merge(merge(v0, Δ1), Δ2)
     can only equal rebuild(<cut2) if batch 2 really consumed batch 1's
     output. Version directories are read back with the writer schema
@@ -286,7 +286,7 @@ def test_streaming_scd2_intermediate_versions_equal_rebuilds(spark):
     from pyspark.sql import functions as F
 
     from spark_sentiment_spark.plans import registry
-    from spark_sentiment_spark.plans.events_queries import _scd2_dim
+    from spark_sentiment_spark.operators.scd2 import scd2_dim
     from spark_sentiment_spark.plans.registry import load
     from spark_sentiment_spark.plans.streaming_queries import (
         streaming_scd2_merge)
@@ -304,10 +304,10 @@ def test_streaming_scd2_intermediate_versions_equal_rebuilds(spark):
                     F.max(F.unix_millis("ts"))).first()
     cuts = [lo + (hi - lo) * k // 10 for k in (7, 8, 9)] + [hi + 1]
     cols = ["user_id", "state", "valid_from", "valid_to", "version"]
-    schema = _scd2_dim(ev.limit(0)).schema
+    schema = scd2_dim(ev.limit(0)).schema
     for k in (1, 2, 3):
         got = _rows(spark.read.schema(schema).parquet(f"{dim_dir}/v{k}"),
                     cols)
-        want = _rows(_scd2_dim(ev.where(
+        want = _rows(scd2_dim(ev.where(
             F.unix_millis("ts") < cuts[k])), cols)
         assert got == want, f"v{k} != rebuild at cutoff {k}"

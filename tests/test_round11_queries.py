@@ -67,9 +67,9 @@ def test_stickiness_hll_window_merge_is_exact(spark):
     property that makes the partials reusable across window lengths,
     rollups, and micro-batches. Pinned on the synthetic corpus where
     windows genuinely overlap and drift."""
-    from spark_sentiment_spark.plans.sketch_queries import (
-        _HLL_BITS, _HLL_BUCKET, _HLL_M, _HLL_RHO, _HLL_POW2,
-        _stickiness_hll_core)
+    from spark_sentiment_spark.operators.sketch import (
+        HLL_BITS, HLL_BUCKET, HLL_M, HLL_POW2, HLL_RHO)
+    from spark_sentiment_spark.plans.sketch_queries import _stickiness_hll_core
 
     ud = _synthetic_ud(spark, 20, 500, 100)
     merged = {r["day"]: r["mau_est_cents"]
@@ -83,17 +83,17 @@ def test_stickiness_hll_window_merge_is_exact(spark):
         & (F.col("ud_d") > F.col("g.d") - F.expr("INTERVAL 28 DAY")))
     keyed = g.select(F.col("g.d").alias("d"), "user_id").distinct() \
         .withColumn("h", F.md5(F.col("user_id").cast("string")))
-    buckets = (keyed.select("d", F.expr(_HLL_BUCKET).alias("bucket"),
-                            F.expr(_HLL_RHO).alias("rho"))
+    buckets = (keyed.select("d", F.expr(HLL_BUCKET).alias("bucket"),
+                            F.expr(HLL_RHO).alias("rho"))
                .groupBy("d", "bucket").agg(F.max("rho").alias("mj")))
-    from spark_sentiment_spark.plans.sketch_queries import _HLL_A
+    from spark_sentiment_spark.operators.sketch import HLL_A
     direct = {r["day"]: r["mau_direct_cents"] for r in (
         buckets.groupBy("d").agg(
-            (F.sum(F.expr(_HLL_POW2)).cast("bigint")
-             + (F.lit(_HLL_M) - F.count(F.lit(1)))
-             * F.lit(2 ** (_HLL_BITS + 1))).alias("s"))
+            (F.sum(F.expr(HLL_POW2)).cast("bigint")
+             + (F.lit(HLL_M) - F.count(F.lit(1)))
+             * F.lit(2 ** (HLL_BITS + 1))).alias("s"))
         .select(F.date_format("d", "yyyy-MM-dd").alias("day"),
-                F.floor(F.lit(float(_HLL_A))
+                F.floor(F.lit(float(HLL_A))
                         / F.col("s").cast("double") * 100)
                 .cast("bigint").alias("mau_direct_cents"))).collect()}
     assert merged == direct
@@ -217,7 +217,7 @@ def test_streaming_winnowing_probe_two_batches_boundary_free(spark):
     import glob
 
     from spark_sentiment_spark.plans import registry
-    from spark_sentiment_spark.plans.corpus_queries import _winnow_selected
+    from spark_sentiment_spark.operators.winnow import winnow_selected
     from spark_sentiment_spark.plans.registry import load
     from spark_sentiment_spark.plans.streaming_queries import (
         streaming_winnowing_probe)
@@ -233,7 +233,7 @@ def test_streaming_winnowing_probe_two_batches_boundary_free(spark):
 
     docs = load(spark, SF_DIR, "documents").where(F.col("text").isNotNull())
     is_new = F.col("doc_id") % 5 == 4
-    fp = lambda d: (_winnow_selected(d).where(F.col("s") == 1)  # noqa: E731
+    fp = lambda d: (winnow_selected(d).where(F.col("s") == 1)  # noqa: E731
                     .select("doc_id", "h").distinct())
     fp_old = fp(docs.where(~is_new))
     hot = (fp_old.groupBy("h").agg(F.count(F.lit(1)).alias("df"))

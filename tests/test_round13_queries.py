@@ -40,7 +40,7 @@ def test_pq_index_artifacts_are_staged(spark):
     M x K codebook (so a probe replays with no corpus access)."""
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       release_caches)
-    from spark_sentiment_spark.plans.similarity_queries import PQ_K, PQ_M
+    from spark_sentiment_spark.operators.vectors import PQ_K, PQ_M
 
     all_queries()
     df = REGISTRY["ann_pq_persisted_probe"].fn(spark, SF_DIR)
@@ -68,7 +68,7 @@ def test_streaming_pq_probe_two_batches_equals_inline(spark):
     (b) produce exactly the inline `ann_pq_topk` result — batch
     boundaries cannot matter because ADC tables are per-query, the code
     table is static, and each qid lives in exactly one batch. The probe
-    chain is `_pq_adc_topk` — the same function the persisted batch
+    chain is `pq_adc_topk` — the same function the persisted batch
     probe runs — so this pins the STAGING plumbing, not a re-derivation
     of the math."""
     from spark_sentiment_spark.plans import registry
@@ -132,7 +132,7 @@ def test_curate_corpus_staged_matches_inline_and_never_rescans(spark):
 
 def test_bm25_persisted_probe_matches_inline_and_prunes(spark):
     """The persisted inverted index must (a) return EXACTLY the inline
-    `search_bm25` ranking (scoring chain shared via `_bm25_score_topk`,
+    `search_bm25` ranking (scoring chain shared via `bm25_score_topk`,
     so this pins the index staging, not a re-derivation), (b) assemble
     the probe from the artifacts with ZERO documents-table scans, and
     (c) push the term IN-filter into the postings scan — the row-group
@@ -169,7 +169,7 @@ def test_streaming_bm25_probe_two_batches_equals_inline(spark):
     produce exactly the inline `search_bm25` ranking — batch boundaries
     cannot matter because df/stats derive only from the static
     artifacts and each qid lives in exactly one batch. The per-batch
-    scoring is `_bm25_score_topk` — the same chain both batch forms
+    scoring is `bm25_score_topk` — the same chain both batch forms
     run — so this pins the staging plumbing, not a re-derivation."""
     from spark_sentiment_spark.plans import registry
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,

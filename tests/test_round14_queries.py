@@ -17,8 +17,7 @@ def test_ivfpq_index_artifacts_are_staged(spark):
     tables replay from the artifact)."""
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       release_caches)
-    from spark_sentiment_spark.plans.similarity_queries import (IVF_ASSIGN,
-                                                                PQ_K, PQ_M)
+    from spark_sentiment_spark.operators.vectors import IVF_ASSIGN, PQ_K, PQ_M
 
     all_queries()
     df = REGISTRY["ann_ivfpq_persisted_probe"].fn(spark, SF_DIR)
@@ -76,13 +75,9 @@ def test_prepare_training_set_stage_consistency(spark):
     universe differs — kept-only vs all docs — but md5 rank is a stable
     total order). The fixture's quota is fully consumable, so the
     budget must be exactly consumed."""
-    from spark_sentiment_spark.plans.pipeline_queries import (
-        PREP_BUDGET, PREP_TEMP_ALPHA)
-    from spark_sentiment_spark.plans.corpus_queries import TEMP_ALPHA
+    from spark_sentiment_spark.plans.pipeline_queries import PREP_BUDGET
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       release_caches)
-
-    assert PREP_TEMP_ALPHA == TEMP_ALPHA  # the keep-in-sync pin
 
     all_queries()
     prep = REGISTRY["prepare_training_set"].fn(spark, SF_DIR).collect()
@@ -144,7 +139,7 @@ def test_streaming_ivfpq_probe_two_batches_equals_batch_form(spark):
     exactly the batch probe's result — batch boundaries cannot matter
     because routing, probe cells, ADC tables, and the per-qid windows
     are per-query and the artifacts are static. The per-batch chain is
-    `_ivfpq_probe` — the same function the batch probe runs — so this
+    `ivfpq_probe` — the same function the batch probe runs — so this
     pins the STAGING plumbing, not a re-derivation of the math."""
     import glob
 
@@ -270,17 +265,17 @@ def test_ivfpq_index_append_contract(spark):
 
     from spark_sentiment_spark.plans.registry import (load, release_caches,
                                                       track_staging_dir)
-    from spark_sentiment_spark.plans.similarity_queries import (
-        IVFPQ_RERANK, _as_double, _ivfpq_probe, _ivfpq_stage_index, _norm)
+    from spark_sentiment_spark.operators.vectors import (
+        IVFPQ_RERANK, as_double, ivfpq_probe, ivfpq_stage_index, norm)
 
     emb = load(spark, SF_DIR, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
+    e = as_double("embedding")
+    unit = F.transform(e, lambda x: x / norm(e))
     vecs = emb.select("vec_id", unit.alias("e"))
 
-    base, n_codes = _ivfpq_stage_index(spark, vecs)
+    base, n_codes = ivfpq_stage_index(spark, vecs)
     full = [tuple(r) for r in
-            _ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, 10)
+            ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, 10)
             .collect()]
 
     base2 = track_staging_dir(tempfile.mkdtemp(prefix="ivfpq_append_"))
@@ -294,7 +289,7 @@ def test_ivfpq_index_append_contract(spark):
             .parquet(base2 + "/codes")
 
     incr = [tuple(r) for r in
-            _ivfpq_probe(spark, vecs, base2, n_codes, IVFPQ_RERANK, 10)
+            ivfpq_probe(spark, vecs, base2, n_codes, IVFPQ_RERANK, 10)
             .collect()]
     release_caches()
     assert incr == full and full

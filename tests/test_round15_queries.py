@@ -97,9 +97,11 @@ def test_fragmented_write_rule_when_a_batch_misses_cells(spark):
 
     from pyspark.sql import functions as F
 
+    from spark_sentiment_spark.operators.vectors import (
+        IVFPQ_RERANK, ivfpq_probe, ivfpq_stage_index)
     from spark_sentiment_spark.plans.registry import release_caches
     from spark_sentiment_spark.plans.similarity_queries import (
-        IVFPQ_RERANK, N_COMPACT_BATCHES, _ivfpq_probe, _ivfpq_stage_index)
+        N_COMPACT_BATCHES)
 
     def vec(i):
         # deterministic unit vector per id (md5-derived, engine-free)
@@ -111,9 +113,9 @@ def test_fragmented_write_rule_when_a_batch_misses_cells(spark):
     vecs = spark.createDataFrame([(i, vec(i)) for i in range(24)],
                                  "vec_id long, e array<double>")
 
-    base, n_codes = _ivfpq_stage_index(spark, vecs,
-                                       code_batches=N_COMPACT_BATCHES,
-                                       prefix="ivfpq_edge_")
+    base, n_codes = ivfpq_stage_index(spark, vecs,
+                                      code_batches=N_COMPACT_BATCHES,
+                                      prefix="ivfpq_edge_")
     assert n_codes == 16
     codes = spark.read.parquet(base + "/codes")
     expect_before = (codes.select(
@@ -131,13 +133,13 @@ def test_fragmented_write_rule_when_a_batch_misses_cells(spark):
     assert len(glob.glob(base + "/codes_compact/cell=*/*.parquet")) \
         == n_cells
 
-    frag = [tuple(r) for r in _ivfpq_probe(
+    frag = [tuple(r) for r in ivfpq_probe(
         spark, vecs, base, n_codes, IVFPQ_RERANK, 10).collect()]
-    comp = [tuple(r) for r in _ivfpq_probe(
+    comp = [tuple(r) for r in ivfpq_probe(
         spark, vecs, base, n_codes, IVFPQ_RERANK, 10,
         codes_subdir="codes_compact").collect()]
-    one_shot_base, _ = _ivfpq_stage_index(spark, vecs)
-    one = [tuple(r) for r in _ivfpq_probe(
+    one_shot_base, _ = ivfpq_stage_index(spark, vecs)
+    one = [tuple(r) for r in ivfpq_probe(
         spark, vecs, one_shot_base, n_codes, IVFPQ_RERANK, 10).collect()]
     release_caches()
     assert frag == comp == one and one
@@ -158,20 +160,21 @@ def test_compaction_hot_cell_splits_by_max_records_per_file(spark):
 
     from pyspark.sql import functions as F
 
+    from spark_sentiment_spark.operators.vectors import (
+        IVFPQ_RERANK, as_double, ivfpq_probe, ivfpq_stage_index, norm)
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       release_caches)
     from spark_sentiment_spark.plans.similarity_queries import (
-        IVFPQ_RERANK, _as_double, _ivfpq_probe, _ivfpq_stage_index, _norm,
         N_COMPACT_BATCHES)
 
     all_queries()
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
+    e = as_double("embedding")
+    unit = F.transform(e, lambda x: x / norm(e))
     vecs = emb.select("vec_id", unit.alias("e"))
-    base, n_codes = _ivfpq_stage_index(spark, vecs,
-                                       code_batches=N_COMPACT_BATCHES,
-                                       prefix="ivfpq_split_")
+    base, n_codes = ivfpq_stage_index(spark, vecs,
+                                      code_batches=N_COMPACT_BATCHES,
+                                      prefix="ivfpq_split_")
     codes = spark.read.parquet(base + "/codes")
     per_cell = {r["cell"]: r["n"] for r in
                 codes.groupBy("cell").agg(F.count("*").alias("n")).collect()}
@@ -189,10 +192,10 @@ def test_compaction_hot_cell_splits_by_max_records_per_file(spark):
     (codes.repartition(F.col("cell"))
      .write.mode("overwrite").partitionBy("cell")
      .parquet(base + "/codes_compact"))
-    split = [tuple(r) for r in _ivfpq_probe(
+    split = [tuple(r) for r in ivfpq_probe(
         spark, vecs, base, n_codes, IVFPQ_RERANK, 10,
         codes_subdir="codes_split").collect()]
-    single = [tuple(r) for r in _ivfpq_probe(
+    single = [tuple(r) for r in ivfpq_probe(
         spark, vecs, base, n_codes, IVFPQ_RERANK, 10,
         codes_subdir="codes_compact").collect()]
     release_caches()
@@ -210,11 +213,12 @@ def test_tombstone_probe_equals_physical_purge(spark):
     gone from the purged table and never appear in either result."""
     from pyspark.sql import functions as F
 
+    from spark_sentiment_spark.operators.vectors import (
+        IVFPQ_RERANK, as_double, ivfpq_probe, ivfpq_stage_index, norm)
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       release_caches)
-    from spark_sentiment_spark.plans.similarity_queries import (
-        IVFPQ_RERANK, TOMB_MOD, TOMB_RES, _as_double, _ivfpq_probe,
-        _ivfpq_stage_index, _norm)
+    from spark_sentiment_spark.plans.similarity_queries import (TOMB_MOD,
+                                                                TOMB_RES)
 
     all_queries()
     tomb_rows = _probe_rows(
@@ -223,10 +227,10 @@ def test_tombstone_probe_equals_physical_purge(spark):
                              for _, v, _, _ in tomb_rows)
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
+    e = as_double("embedding")
+    unit = F.transform(e, lambda x: x / norm(e))
     vecs = emb.select("vec_id", unit.alias("e"))
-    base, n_codes = _ivfpq_stage_index(spark, vecs, prefix="ivfpq_purge_")
+    base, n_codes = ivfpq_stage_index(spark, vecs, prefix="ivfpq_purge_")
     tomb = (vecs.where((F.col("vec_id") % TOMB_MOD) == TOMB_RES)
             .select("vec_id"))
     codes = spark.read.parquet(base + "/codes")
@@ -242,7 +246,7 @@ def test_tombstone_probe_equals_physical_purge(spark):
     assert purged.count() == codes.count() - codes.where(
         (F.col("vec_id") % TOMB_MOD) == TOMB_RES).count()
 
-    purge_rows = [tuple(r) for r in _ivfpq_probe(
+    purge_rows = [tuple(r) for r in ivfpq_probe(
         spark, vecs, base, n_codes, IVFPQ_RERANK, 10,
         codes_subdir="codes_purged").collect()]
     release_caches()

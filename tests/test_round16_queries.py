@@ -145,8 +145,8 @@ def test_refresh_rebalances_drifted_occupancy(spark):
     from pyspark.sql.window import Window
 
     from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.similarity_queries import (
-        IVF_ASSIGN, _dot, _ivfpq_stage_index)
+    from spark_sentiment_spark.operators.vectors import (
+        IVF_ASSIGN, dot, ivfpq_stage_index)
 
     modes = [_unit_md5(f"mode{m}") for m in range(16)]
     new_mode = _unit_md5("newmode")
@@ -159,10 +159,10 @@ def test_refresh_rebalances_drifted_occupancy(spark):
 
     # stale: quantizer trained on the original corpus only; the appended
     # batch is assigned with the FROZEN centroids (the append contract)
-    base, n_codes = _ivfpq_stage_index(spark, orig, prefix="ivfpq_drift_")
+    base, n_codes = ivfpq_stage_index(spark, orig, prefix="ivfpq_drift_")
     assert n_codes == 16
     cent = spark.read.parquet(base + "/centroids")
-    sim = F.round(_dot(F.col("e"), F.col("cu")), 6)
+    sim = F.round(dot(F.col("e"), F.col("cu")), 6)
     wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
 
     def assign(vecs):
@@ -178,8 +178,8 @@ def test_refresh_rebalances_drifted_occupancy(spark):
 
     # refreshed: retrain on the full current corpus (what the triggered
     # branch of ann_ivfpq_refresh_probe does for its delete-set rule)
-    base2, n2 = _ivfpq_stage_index(spark, orig.union(appended),
-                                   prefix="ivfpq_drift_fresh_")
+    base2, n2 = ivfpq_stage_index(spark, orig.union(appended),
+                                  prefix="ivfpq_drift_fresh_")
     assert n2 == 16
     occ2 = (spark.read.parquet(base2 + "/codes")
             .groupBy("cell").count().collect())

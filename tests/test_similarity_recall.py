@@ -334,8 +334,8 @@ def test_ann_ivfpq_probe_knob_monotone_and_degenerates_to_flat_pq(spark):
 
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       load, release_caches)
-    from spark_sentiment_spark.plans.similarity_queries import (
-        PQ_K, _as_double, _ivfpq_probe, _ivfpq_stage_index, _norm)
+    from spark_sentiment_spark.operators.vectors import (
+        PQ_K, as_double, ivfpq_probe, ivfpq_stage_index, norm)
 
     all_queries()
     exact_by_q: dict = {}
@@ -345,10 +345,10 @@ def test_ann_ivfpq_probe_knob_monotone_and_degenerates_to_flat_pq(spark):
             REGISTRY["ann_pq_topk"].fn(spark, SF_DIR).collect()]
 
     emb = load(spark, SF_DIR, "embeddings")
-    e = _as_double("embedding")
-    unit = F.transform(e, lambda x: x / _norm(e))
+    e = as_double("embedding")
+    unit = F.transform(e, lambda x: x / norm(e))
     vecs = emb.select("vec_id", unit.alias("e"))
-    base, n_codes = _ivfpq_stage_index(spark, vecs)
+    base, n_codes = ivfpq_stage_index(spark, vecs)
 
     def recall(rows):
         by_q: dict = {}
@@ -357,7 +357,7 @@ def test_ann_ivfpq_probe_knob_monotone_and_degenerates_to_flat_pq(spark):
         return sum(len(exact_by_q[q] & by_q.get(q, set()))
                    / len(exact_by_q[q]) for q in exact_by_q) / len(exact_by_q)
 
-    got = {p: _ivfpq_probe(spark, vecs, base, n_codes, 200, 10, n_probe=p)
+    got = {p: ivfpq_probe(spark, vecs, base, n_codes, 200, 10, n_probe=p)
            .collect() for p in (3, 6, PQ_K)}
     release_caches()
     assert recall(got[3]) <= recall(got[6]) <= recall(got[PQ_K])

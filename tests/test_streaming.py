@@ -283,38 +283,6 @@ def test_exactly_once_sink_idempotent_across_restart(spark, tmp_path):
     assert spark.read.parquet(out).count() == batch
 
 
-def test_anomaly_oracle_twins_stay_in_sync():
-    """streaming_volume_anomaly duplicates events_volume_anomaly's oracle
-    SQL (a module-scope import would shift the registration-order window);
-    this pins the two strings together so they cannot drift."""
-    from spark_sentiment_spark.plans.pipeline_queries import ANOMALY_SQL
-    from spark_sentiment_spark.plans.streaming_queries import \
-        STREAM_ANOMALY_SQL
-
-    assert STREAM_ANOMALY_SQL == ANOMALY_SQL
-
-
-def test_headers_oracle_twins_stay_in_sync():
-    """streaming_multimodal_headers duplicates multimodal_headers' oracle
-    SQL for the same registration-order reason; pin the literals together
-    so only one can't silently drift (ADVICE r4)."""
-    from spark_sentiment_spark.plans.pipeline_queries import HEADERS_SQL
-    from spark_sentiment_spark.plans.streaming_queries import \
-        STREAM_HEADERS_SQL
-
-    assert STREAM_HEADERS_SQL == HEADERS_SQL
-
-
-def test_sliding_oracle_twins_stay_in_sync():
-    """streaming_sliding_hour duplicates events_sliding_hour's oracle SQL
-    (registration-order hygiene); pin the literals together."""
-    from spark_sentiment_spark.plans.events_queries import SLIDE_SQL
-    from spark_sentiment_spark.plans.streaming_queries import \
-        STREAM_SLIDE_SQL
-
-    assert STREAM_SLIDE_SQL == SLIDE_SQL
-
-
 def test_streaming_hll_state_equals_batch(spark):
     """The streaming engine's 256-row HLL state (max rho per bucket) must
     equal the batch groupBy over the same finite source — the
@@ -322,8 +290,7 @@ def test_streaming_hll_state_equals_batch(spark):
     final estimate must match agg_hll-style folding of that state."""
     from pyspark.sql import functions as F
 
-    from spark_sentiment_spark.plans.sketch_queries import (_HLL_BUCKET,
-                                                            _HLL_RHO)
+    from spark_sentiment_spark.operators.sketch import HLL_BUCKET, HLL_RHO
     from spark_sentiment_spark.plans.registry import load
     from spark_sentiment_spark.plans.streaming_queries import (
         streaming_hll_distinct)
@@ -334,8 +301,8 @@ def test_streaming_hll_state_equals_batch(spark):
 
     batch = (load(spark, SF_DIR, "events")
              .select(F.md5(F.col("event_id").cast("string")).alias("h"))
-             .select(F.expr(_HLL_BUCKET).alias("bucket"),
-                     F.expr(_HLL_RHO).alias("rho"))
+             .select(F.expr(HLL_BUCKET).alias("bucket"),
+                     F.expr(HLL_RHO).alias("rho"))
              .groupBy("bucket").agg(F.max("rho").alias("mj")))
     n_buckets = batch.count()
     assert row["n_buckets"] == n_buckets
@@ -345,7 +312,7 @@ def test_streaming_hll_state_equals_batch(spark):
 
 
 def test_stage_ordered_segments_empty_slice_fires_batch(spark, tmp_path):
-    """The empty-slice contract _stage_ordered_segments asserts (round-11
+    """The empty-slice contract stage_ordered_segments asserts (round-11
     ADVICE: it was claimed, Spark-version-dependent, and untested): an
     empty slice still stages a schema-only part file, the file stream
     source still admits it, and at maxFilesPerTrigger=1 it still fires
@@ -354,14 +321,13 @@ def test_stage_ordered_segments_empty_slice_fires_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.streaming_queries import (
-        _stage_ordered_segments)
+    from spark_sentiment_spark.streaming.streams import stage_ordered_segments
 
     base = spark.range(3).select(F.col("id").alias("k"))
     slices = [base.where(F.col("k") < 2),
               base.where(F.lit(False)),          # EMPTY middle slice
               base.where(F.col("k") >= 2)]
-    stream_dir = _stage_ordered_segments(slices, "empty_slice_test_")
+    stream_dir = stage_ordered_segments(slices, "empty_slice_test_")
     import glob
     staged = sorted(glob.glob(f"{stream_dir}/seg*.parquet"))
     assert len(staged) == 3, staged
@@ -377,3 +343,24 @@ def test_stage_ordered_segments_empty_slice_fires_batch(spark, tmp_path):
     q.awaitTermination(120)
     release_caches()
     assert [c for _, c in sorted(batches)] == [2, 0, 1], batches
+
+
+def test_stream_wait_is_bounded(spark, monkeypatch):
+    """A streaming run that outlives STREAM_TIMEOUT_S raises TimeoutError
+    and leaves no query running, instead of hanging its caller."""
+    import time
+
+    from spark_sentiment_spark.plans.registry import release_caches
+    from spark_sentiment_spark.streaming import streams
+
+    monkeypatch.setattr(streams, "STREAM_TIMEOUT_S", 1)
+
+    def slow(df):
+        time.sleep(4)
+        return df
+
+    with pytest.raises(TimeoutError):
+        streams.run_probe_stream(spark, [spark.range(3)], slow, "id long",
+                                 "timeout_test")
+    release_caches()
+    assert spark.streams.active == []
