@@ -18,8 +18,7 @@ of the large-star/small-star MapReduce formulation (Kiveris et al.,
 alone needs diameter rounds (an adversarial N-node chain = N rounds,
 silently truncated by ``max_iter``), while propagate+jump doubles the
 compressed distance per round — measured on chains: 12 rounds for 4k
-nodes, and scripts/scale_probe.py pins the ×8 slope (~log growth in
-rounds, linear time per round).
+nodes; tests/test_components.py pins the ~log growth in rounds.
 
 Scale posture:
 

@@ -62,8 +62,8 @@ def scd2_merge(hist_dim, delta_ev):
     (the scd2_dim shape): open rows close at the delta's first
     retained change, runs continue across the boundary, versions number
     onward per user, closed rows pass through untouched. Split out so
-    scripts/merge_probe.py can time the merge against a MATERIALIZED
-    history dimension — the production nightly cost, which must scale
+    the merge can be timed against a MATERIALIZED history dimension
+    (scripts/merge_probe.py) — the production nightly cost, which must scale
     with the delta, never the history (the registered query rebuilds
     hist_dim inline because the demo owns no persistent state)."""
     open_rows = (hist_dim.where(F.col("valid_to").isNull())

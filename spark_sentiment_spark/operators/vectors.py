@@ -233,8 +233,7 @@ ANN_PQ_SQL = pq_sql()
 
 def pq_probe(spark, vecs, base: str, n_codes: int, rerank: int, topk: int):
     """Phase-2 of the flat PQ index — the recurring per-batch cost,
-    callable on its own against pre-staged artifacts (scripts/
-    scale_probe.py times it separately from the build): ADC tables from
+    callable on its own against pre-staged artifacts: ADC tables from
     the PERSISTED codebook, integer ADC scan over the stored codes,
     exact re-rank."""
     cb = pq_read_codebook(spark, base, n_codes)
@@ -563,8 +562,7 @@ def ivfpq_probe(spark, vecs, base: str, n_codes: int, rerank: int,
                 codes_subdir: str = "codes", tombstones=None):
     """Phase-2 of the composed IVF+PQ index — the recurring per-batch
     cost, callable on its own against pre-staged artifacts
-    (scripts/scale_probe.py times it separately from the build;
-    `streaming_ivfpq_probe` runs it per micro-batch with that batch's
+    (`streaming_ivfpq_probe` runs it per micro-batch with that batch's
     ``queries`` frame (qid, qe) — default is the standard 5-query
     batch). ``n_probe`` (visited cells per query) and ``rerank`` are
     the two knobs of the recall/cost tradeoff — more probes read more

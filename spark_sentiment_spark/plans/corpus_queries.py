@@ -1544,10 +1544,10 @@ def dedup_winnowing_pairs(spark, sf_dir):
     fan out quadratically on the join key), and (2) pairing joins on
     the 48-bit fingerprint value, so work is Σ per-fingerprint df² over
     the capped df <= 50 — linear in selected fingerprints with a
-    constant factor, never corpus-quadratic. NOT probed by
-    scale_probe's identical-text replication (pair output grows ×k² by
-    construction — the documented artifact class); its scale posture is
-    the cap plus doc_winnowing's linear selection slope.
+    constant factor, never corpus-quadratic. Time it under
+    `bench.py --scale --disjoint`: identical-text replicas grow the pair
+    output ×k² by construction; its scale posture is the cap plus
+    doc_winnowing's linear selection slope.
 
     Oracle: the shared `WINNOW_CTE` chain extended with the same cap,
     distinct, pair join and integer ppm — fingerprint sets replay

@@ -393,8 +393,8 @@ def dedup_clusters(spark, sf_dir):
     k(k-1)/2 pairs — to the pair stage while adding nothing to the
     clustering answer. On a web corpus exact boilerplate groups run to
     10^5 copies, making the pair graph quadratic in the hottest groups
-    (scripts/deep_probe.py measured the blowup: ×32 identical-text
-    replication OOMs an 8g driver without the collapse). So the pair
+    (measured: ×32 identical-text replication OOMs an 8g driver
+    without the collapse). So the pair
     computation runs on one REPRESENTATIVE per md5(lower(text)) group
     (the group's min doc_id), and members expand back afterward. The
     output is provably unchanged: members share their rep's component

@@ -735,9 +735,7 @@ CURATE_SQL = _curate_sql(_COMPOSITE_GATE_CTES)
 
 def _composite_gate(docs):
     """Stage 2 of `curate_corpus`: the composite `quality_gate` rules as
-    a gate frame (doc_id, text, q_keep, q_reason). Factored out so the
-    stage-attribution probe (`curation_stage_frames`) times exactly the
-    plan the pass runs.
+    a gate frame (doc_id, text, q_keep, q_reason).
 
     TWO projection layers on purpose (the `gopher_feats` shape): the
     heuristics are aliased in an inner select and the verdict/reason
@@ -967,32 +965,6 @@ def curate_corpus_c4(spark, sf_dir):
         "doc_id", "text", F.col("keep").alias("q_keep"),
         F.col("reason").alias("q_reason"))
     return _curation_verdicts(docs, gate)
-
-
-def curation_stage_frames(spark, sf_dir, kind="composite"):
-    """Stage-ISOLATED sub-plans of a curation pass, for profiling only
-    (scripts/deep_probe.py's stage attribution, round-12 VERDICT item
-    5): which stage owns the pass's ×8→×32 marginal slope. Returns
-    {'gate': …, 'dedup': …, 'decon': …} built from exactly the builders
-    the composed pass runs (`_composite_gate`/`gopher_feats`/
-    `c4_feats`, `_dedup_ranked`, `_contaminated`) — NOT a catalog
-    query; the composed single-plan pass stays the product."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    if kind == "composite":
-        gate = _composite_gate(docs)
-    elif kind == "gopher":
-        gate = gopher_feats(docs).select(
-            "doc_id", "text", F.col("keep").alias("q_keep"),
-            F.col("reason").alias("q_reason"))
-    elif kind == "c4":
-        gate = c4_feats(docs).select(
-            "doc_id", "text", F.col("keep").alias("q_keep"),
-            F.col("reason").alias("q_reason"))
-    else:
-        raise ValueError(f"unknown curation gate kind: {kind}")
-    return {"gate": gate,
-            "dedup": _dedup_ranked(gate),
-            "decon": _contaminated(docs)}
 
 
 # --- Snapshot merge / upsert (SCD-1 "MERGE INTO" as a plain plan) -----------
@@ -3244,9 +3216,8 @@ def _curate_stage(spark, docs):
 
 def _curate_assemble(v, g):
     """Phase-2 of the staged curation pass — the recurring nightly cost,
-    callable on its own against pre-staged artifacts (scripts/
-    scale_probe.py times it separately from the builds): verdict
-    assembly from the artifacts only, no corpus access."""
+    callable on its own against pre-staged artifacts: verdict assembly
+    from the artifacts only, no corpus access."""
     w = (Window.partitionBy("prefix_hash")
          .orderBy(F.desc("n_chars"), "doc_id"))
     ranked = (v.where(F.col("q_keep") & (F.col("doc_id") >= 5))

@@ -133,12 +133,12 @@ def register(name: str, sql: str | None = None, bench: bool = False,
 #     exchange instead of adding their own (events_sessionize's user_id
 #     window, text explode→(doc_id, term) aggregations, …).
 # Dimension tables stay unrepartitioned so they remain broadcast candidates.
-_FACT_TABLES = {"lineitem", "orders", "events", "documents", "embeddings"}
-
+#
 # Natural fan-out keys: high-cardinality (well above 32 partitions at every
 # SF), uniform in the fixtures, and chosen to match the dominant downstream
 # clustering (l_orderkey joins, per-user windows, per-doc / per-vector aggs).
-_FACT_KEYS = {
+# bench.replicate re-keys the same columns when it grows the facts ×K.
+FACT_KEYS = {
     "lineitem": "l_orderkey",
     "orders": "o_orderkey",
     "events": "user_id",
@@ -174,9 +174,9 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # UTC the cast is a pure type change, wall-clock identical to the
         # (timezone-naive) DuckDB oracle's read.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if table in _FACT_TABLES and _fanout_needed(spark):
+    if table in FACT_KEYS and _fanout_needed(spark):
         df = df.repartition(spark.sparkContext.defaultParallelism,
-                            F.col(_FACT_KEYS[table]))
+                            F.col(FACT_KEYS[table]))
     return df
 
 

@@ -452,20 +452,9 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
         .distinct()  # a close pair collides in several tables
     )
     va, vb = vecs.alias("va"), vecs.alias("vb")
-    # Round-19 rejected probe (guide §4.2 / §1.2; VERDICT r18 item 5): an
-    # Arrow-batched pair cosine (order-preserving dimension-wise sum, same
-    # fold order as dot, oracle-verified bit-identical at both SFs) was
-    # A/B'd against this expression re-rank with an INTERLEAVED min-of-8
-    # in one session so host noise cancels, twice: expr 2.270 min /
-    # 2.405 med vs arrow 2.248 / 2.506, then expr 2.365 / 2.458 vs arrow
-    # 2.233 / 2.548 (raw runs: plans/r19/ann_rerank_ab_interleaved.txt) —
-    # min-of-N within noise of each other, expr faster on median both times.
-    # The ~200k-pair re-rank moves 2x64 doubles per pair through the Arrow
-    # boundary (~200 MB serialized), cancelling the vectorization win at
-    # dim=64; unlike the signature matmul (72 dots/row, input already
-    # crossing the boundary once), the pair re-rank is serialization-bound.
-    # Kept native; re-rank cost scales with candidate pairs, which the
-    # n_planes scale rule above bounds per bucket as the corpus grows.
+    # Native, not an Arrow-batched cosine: the pair re-rank moves 2x64
+    # doubles per pair through the Arrow boundary, which measured no
+    # faster at dim=64 (serialization-bound, unlike the signature matmul).
     cos = dot(F.col("va.e"), F.col("vb.e"))
     pairs = (
         cand.join(va, F.col("vec_a") == F.col("va.vec_id"))

@@ -40,18 +40,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``shuffle_partitions`` defaults to ``SPARK_GRAFT_CPUS`` (or 32) in local
-    mode; on a real cluster leave it unset and let AQE coalesce from a high
-    initial value.
+    ``master`` defaults to ``local[SPARK_GRAFT_CPUS]``, or to the CPUs this
+    process may run on when the variable is unset; ``shuffle_partitions``
+    defaults to the same count. On a real cluster pass ``master`` and a
+    high ``shuffle_partitions`` and let AQE coalesce from there.
     """
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     builder = SparkSession.builder.appName(app_name)
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    builder = builder.master(master)
+    builder = builder.master(master or f"local[{cpus}]")
     conf = dict(_SCALE_DEFAULTS)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = cpus
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)

@@ -22,8 +22,8 @@ from tests.conftest import SF_DIR
 
 
 def test_load_fanout_is_hash_keyed(spark):
-    from spark_sentiment_spark.plans.registry import (_FACT_KEYS,
-                                                      _FACT_TABLES, load)
+    from spark_sentiment_spark.plans.registry import (
+        FACT_KEYS as _FACT_KEYS, FACT_KEYS as _FACT_TABLES, load)
 
     for table in sorted(_FACT_TABLES):
         df = load(spark, SF_DIR, table)
