@@ -192,9 +192,8 @@ def site_inventory() -> list[dict]:
     site: [{query, alias, idiom, digits}], sorted. Snapshotted to
     scripts/money_sites.json by --snapshot; tests/test_oracle.py
     compares the live inventory to the snapshot so a NEW rounded-sum site
-    (or an idiom downgrade on an existing one) fails the fast loop with a
-    pointer to run the full distance audit — the gate runs continuously,
-    not only at round close."""
+    (or an idiom downgrade on an existing one) fails every test run with
+    a pointer to run the full distance audit."""
     from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
     all_queries()
     inv = []

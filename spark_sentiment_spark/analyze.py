@@ -19,7 +19,6 @@ is the stemmer/tokenizer/NLP pandas UDFs where semantics require it.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 CLEANED_COL = "converted_text"   # Helper.cleanSource's output column name
 SCORE_COL = "computed"           # Sentiment.scala:141,151 output column
@@ -117,11 +116,8 @@ def _model_input_col(model) -> str | None:
 
 
 def _word_score(df: DataFrame) -> DataFrame:
-    """M13 on the cleaned column via the native explode/broadcast-join/agg
-    plan (operators.wordscore), keyed on a generated row id."""
+    """M13 on the cleaned column: one narrow Arrow pandas UDF that adds
+    the score column row by row (operators.wordscore.score_documents)."""
     from spark_sentiment_spark.operators.wordscore import score_documents
 
-    with_id = df.withColumn("_row_id", F.monotonically_increasing_id())
-    out = score_documents(with_id, id_col="_row_id", text_col=CLEANED_COL,
-                          output_col=SCORE_COL)
-    return out.drop("_row_id")
+    return score_documents(df, text_col=CLEANED_COL, output_col=SCORE_COL)

@@ -35,8 +35,16 @@ def shingled(docs, id_col: str = "doc_id", text_col: str = "text"):
 
 MINHASH_P = (1 << 31) - 1  # Mersenne prime: a*h+b < 2^62, safe in int64
 
+# The catalog's MinHash-LSH shape: 32 permutations in 8 bands of 4 rows,
+# seeded so both engines draw the same constants; a candidate pair is a
+# near-dup when at least half of its minhashes agree.
+N_HASHES = 32
+N_BANDS = 8
+SEED = 42
+THRESHOLD = 0.5
 
-def perm_constants(n_hashes: int = 32, seed: int = 42):
+
+def perm_constants(n_hashes: int = N_HASHES, seed: int = SEED):
     """The (a_i, b_i) permutation constants — shared by the Spark signature
     stage AND the generated DuckDB oracle SQL, so both engines compute the
     *identical* signatures."""
@@ -47,7 +55,7 @@ def perm_constants(n_hashes: int = 32, seed: int = 42):
             for _ in range(n_hashes)]
 
 
-def minhash_signatures(docs, n_hashes: int = 32, seed: int = 42,
+def minhash_signatures(docs, n_hashes: int = N_HASHES, seed: int = SEED,
                        id_col: str = "doc_id", text_col: str = "text"):
     """(id, mh0..mh{n-1}) MinHash signature rows via ``mapInPandas``: each
     document's 3-word shingle set and all n mins are computed LOCALLY
@@ -141,7 +149,8 @@ def band_pairs(bands):
             .distinct())
 
 
-def scored_pairs(cand, sigs, n_hashes: int, *extra, threshold: float = 0.5):
+def scored_pairs(cand, sigs, n_hashes: int, *extra,
+                 threshold: float = THRESHOLD):
     """The (doc_a, doc_b) candidates whose signatures in ``sigs``
     (doc_id, mh0..) agree on at least ``threshold`` of the minhashes, as
     (doc_a, doc_b, est_jaccard, *extra)."""
@@ -154,8 +163,8 @@ def scored_pairs(cand, sigs, n_hashes: int, *extra, threshold: float = 0.5):
             .where(F.col("est_jaccard") >= threshold))
 
 
-def lsh_cand_sql(tail: str, cand_where: str = "", n_hashes: int = 32,
-                 n_bands: int = 8, seed: int = 42) -> str:
+def lsh_cand_sql(tail: str, cand_where: str = "", n_hashes: int = N_HASHES,
+                 n_bands: int = N_BANDS, seed: int = SEED) -> str:
     """DuckDB twin of the MinHash-LSH candidate stage, generated from the
     SAME permutation constants as the Spark signature stage: md5-derived
     31-bit shingle hashes → (a*h+b) mod p mins (``sig``) → '-'-joined band
@@ -204,7 +213,7 @@ WITH toks AS (
 ){tail}"""
 
 
-def est_jaccard_sql(n_hashes: int = 32) -> str:
+def est_jaccard_sql(n_hashes: int = N_HASHES) -> str:
     """Signature-agreement Jaccard estimate of a ``cand`` pair joined to
     ``sig`` as ``sa``/``sb``, rounded like the Spark side."""
     agree = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
@@ -212,8 +221,8 @@ def est_jaccard_sql(n_hashes: int = 32) -> str:
     return f"round(({agree}) / {float(n_hashes)}, 4)"
 
 
-def minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
-                       seed: int = 42, threshold: float = 0.5,
+def minhash_oracle_sql(n_hashes: int = N_HASHES, n_bands: int = N_BANDS,
+                       seed: int = SEED, threshold: float = THRESHOLD,
                        cand_where: str = "", extra_cols: str = "") -> str:
     """DuckDB twin of the full MinHash-LSH pipeline: every candidate pair
     (narrowed by ``cand_where``) whose estimate clears ``threshold``."""
@@ -229,13 +238,10 @@ ORDER BY doc_a, doc_b
 """, cand_where, n_hashes, n_bands, seed)
 
 
-def probe_minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
-                             seed: int = 42,
-                             threshold: float = 0.5) -> str:
+def probe_minhash_oracle_sql() -> str:
     """DuckDB twin of the BUCKETED band-index probe: the full-corpus LSH
     pipeline restricted to pairs with EXACTLY ONE side in the incoming
     batch (doc_id%5=4) — the new-vs-old probe set; new-vs-new pairs belong
     to the batch self-join, old-vs-old to earlier batches."""
     return minhash_oracle_sql(
-        n_hashes, n_bands, seed, threshold,
         cand_where="(a.doc_id % 5 = 4) <> (b.doc_id % 5 = 4)")

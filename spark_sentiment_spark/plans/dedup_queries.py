@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.operators.minhash import (band_buckets,
+from spark_sentiment_spark.operators.minhash import (N_BANDS, N_HASHES,
+                                                     THRESHOLD, band_buckets,
                                                      band_pairs,
                                                      est_jaccard_sql,
                                                      lsh_cand_sql,
@@ -153,28 +154,25 @@ def dedup_minhash_lsh(spark, sf_dir):
     additionally pins candidate recall against the exact Jaccard query.
     """
     docs = load(spark, sf_dir, "documents")
-    n_hashes, n_bands = 32, 8
-    mins = track_persist(minhash_signatures(docs, n_hashes))
+    mins = track_persist(minhash_signatures(docs))
     # NOT persisted (round-18 A/B): both self-join sides re-derive the
     # band explode from the cached signatures, but that derivation is a
     # cheap projection over cached rows — a min-of-10 A/B measured the
     # persist's cache-fill barrier at +9% min / +7% median on this bench
     # query, so the recompute wins.
-    cand = band_pairs(band_buckets(mins, n_hashes, n_bands))
+    cand = band_pairs(band_buckets(mins, N_HASHES, N_BANDS))
     # Estimate similarity = fraction of agreeing minhashes, read off the
     # cached signatures.
-    return scored_pairs(cand, mins, n_hashes).orderBy("doc_a", "doc_b")
+    return scored_pairs(cand, mins, N_HASHES).orderBy("doc_a", "doc_b")
 
 
-def _incr_minhash_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
-                             seed: int = 42, threshold: float = 0.5) -> str:
+def _incr_minhash_oracle_sql() -> str:
     """DuckDB twin of the INCREMENTAL MinHash query: the full-corpus LSH
     pipeline restricted to candidate pairs that TOUCH the incoming batch
     (doc_id % 5 = 4) — exactly the pair set the incremental plan
     generates, since pairs entirely inside the already-indexed corpus were
     emitted by earlier batches."""
     return minhash_oracle_sql(
-        n_hashes, n_bands, seed, threshold,
         cand_where="a.doc_id % 5 = 4 OR b.doc_id % 5 = 4",
         extra_cols=""",
        CAST(CASE WHEN doc_a % 5 = 4 AND doc_b % 5 = 4
@@ -210,7 +208,6 @@ def dedup_incremental_minhash(spark, sf_dir):
     as the full build (no token-stream shuffle). Appending the batch's
     bands+signatures to the index afterward is a partitioned append, so
     the index grows without rewrites."""
-    n_hashes, n_bands = 32, 8
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_new = F.col("doc_id") % 5 == 4
     # Production: corpus signatures/bands are read from the persisted
@@ -220,7 +217,7 @@ def dedup_incremental_minhash(spark, sf_dir):
     # sig(slice) ≡ sig(corpus) filtered — ONE corpus scan + signature
     # pass fills one cache and both sides are filters over it, instead of
     # two full passes each paying the md5-shingle fold.
-    sig = track_persist(minhash_signatures(docs, n_hashes))  # 33 longs per doc
+    sig = track_persist(minhash_signatures(docs))  # 33 longs per doc
     sig_new = sig.where(is_new)
     sig_old = sig.where(~is_new)
     # NOT persisted (round-18 A/B): bands_new feeds three branches, but
@@ -229,8 +226,8 @@ def dedup_incremental_minhash(spark, sf_dir):
     # (n_bands× rows) frame behind a cache-fill barrier. Min-of-10 A/B:
     # persist +18% min (2.327 → 2.740 s at sf0.1), same verdict as
     # dedup_minhash_lsh's identical pattern. Recompute wins.
-    bands_new = band_buckets(sig_new, n_hashes, n_bands)
-    bands_old = band_buckets(sig_old, n_hashes, n_bands)
+    bands_new = band_buckets(sig_new, N_HASHES, N_BANDS)
+    bands_old = band_buckets(sig_old, N_HASHES, N_BANDS)
     nb, ob = bands_new.alias("nb"), bands_old.alias("ob")
     cross = (nb.join(ob, (F.col("nb.bh") == F.col("ob.bh"))
                      & (F.col("nb.band_id") == F.col("ob.band_id")))
@@ -246,7 +243,7 @@ def dedup_incremental_minhash(spark, sf_dir):
                      F.lit(0).cast("long").alias("vs_corpus")))
     cand = cross.unionByName(intra).distinct()
     # the fused cache IS new ∪ old
-    return (scored_pairs(cand, sig, n_hashes, "vs_corpus")
+    return (scored_pairs(cand, sig, N_HASHES, "vs_corpus")
             .orderBy("doc_a", "doc_b"))
 
 
@@ -1156,8 +1153,7 @@ def dedup_sentence_exact(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-def _cross_source_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
-                             seed: int = 42, threshold: float = 0.5) -> str:
+def _cross_source_oracle_sql() -> str:
     """DuckDB twin of the provenance-matrix query: the full MinHash-LSH
     pair pipeline joined back to each side's ``source`` and rolled up per
     unordered source pair."""
@@ -1165,7 +1161,7 @@ def _cross_source_oracle_sql(n_hashes: int = 32, n_bands: int = 8,
   SELECT doc_a, doc_b FROM cand
   JOIN sig sa ON doc_a = sa.doc_id
   JOIN sig sb ON doc_b = sb.doc_id
-  WHERE {est_jaccard_sql(n_hashes)} >= {threshold}
+  WHERE {est_jaccard_sql()} >= {THRESHOLD}
 )
 SELECT least(da.source, db.source) AS source_a,
        greatest(da.source, db.source) AS source_b,
@@ -1177,7 +1173,7 @@ JOIN documents da ON doc_a = da.doc_id
 JOIN documents db ON doc_b = db.doc_id
 GROUP BY 1, 2
 ORDER BY source_a, source_b
-""", "", n_hashes, n_bands, seed)
+""")
 
 
 @register("dedup_cross_source_pairs", sql=_cross_source_oracle_sql(),
@@ -1197,8 +1193,7 @@ def dedup_cross_source_pairs(spark, sf_dir):
     the rollup is bounded by sources². The doc→source map would be a
     broadcast dimension at any corpus size where sources matter."""
     docs = load(spark, sf_dir, "documents")
-    n_hashes, n_bands = 32, 8
-    mins = track_persist(minhash_signatures(docs, n_hashes))
+    mins = track_persist(minhash_signatures(docs))
     # NOT persisted (round-18 A/B): both self-join sides re-derive the
     # band explode from the CACHED signatures — a cheap projection —
     # while persisting materializes the exploded (n_bands× rows) frame
@@ -1206,7 +1201,7 @@ def dedup_cross_source_pairs(spark, sf_dir):
     # (1.534 → 1.921 s at sf0.1, median +54%), same verdict as
     # dedup_minhash_lsh's identical pattern. Recompute wins.
     pairs = scored_pairs(
-        band_pairs(band_buckets(mins, n_hashes, n_bands)), mins, n_hashes)
+        band_pairs(band_buckets(mins, N_HASHES, N_BANDS)), mins, N_HASHES)
     da = docs.select(F.col("doc_id").alias("doc_a"),
                      F.col("source").alias("sa"))
     db = docs.select(F.col("doc_id").alias("doc_b"),
@@ -1259,14 +1254,14 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
                                                       track_temp_table)
     from spark_sentiment_spark.sources.bucketing import save_bucketed
 
-    n_hashes, n_bands, nb = 32, 8, 8
+    nb = 8
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_new = F.col("doc_id") % 5 == 4
     # Round-19 optimization (guide §2.4, the winnowing-incremental
     # class): signatures are per-doc (mapInPandas, doc-local), so ONE
     # corpus signature pass fills one cache and both sides are filters
     # over it — instead of two full md5-shingle passes.
-    sig = track_persist(minhash_signatures(docs, n_hashes))  # 33 longs per doc
+    sig = track_persist(minhash_signatures(docs))  # 33 longs per doc
     sig_new = sig.where(is_new)
     sig_old = sig.where(~is_new)
 
@@ -1279,10 +1274,10 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
     suffix = os.path.basename(base)
     t_idx = track_temp_table(spark, f"mh_band_index_{suffix}")
     t_bat = track_temp_table(spark, f"mh_band_batch_{suffix}")
-    save_bucketed(keyed(band_buckets(sig_old, n_hashes, n_bands), "old_id")
+    save_bucketed(keyed(band_buckets(sig_old, N_HASHES, N_BANDS), "old_id")
                   .repartition(nb, F.col("bkey")),
                   t_idx, ["bkey"], nb, ["bkey"], base + "/index")
-    save_bucketed(keyed(band_buckets(sig_new, n_hashes, n_bands), "new_id")
+    save_bucketed(keyed(band_buckets(sig_new, N_HASHES, N_BANDS), "new_id")
                   .repartition(nb, F.col("bkey")),
                   t_bat, ["bkey"], nb, ["bkey"], base + "/batch")
 
@@ -1292,4 +1287,4 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
                     F.greatest("new_id", "old_id").alias("doc_b"))
             .distinct())
     # the fused cache IS new ∪ old
-    return scored_pairs(cand, sig, n_hashes).orderBy("doc_a", "doc_b")
+    return scored_pairs(cand, sig, N_HASHES).orderBy("doc_a", "doc_b")

@@ -31,7 +31,8 @@ from spark_sentiment_spark.operators.bm25 import (BM25_QUERIES, BM25_SQL,
 from spark_sentiment_spark.operators.event_windows import (ANOMALY_SQL,
                                                            SLIDE_SQL,
                                                            TUMBLE_SQL)
-from spark_sentiment_spark.operators.minhash import (band_buckets,
+from spark_sentiment_spark.operators.minhash import (N_BANDS, N_HASHES,
+                                                     THRESHOLD, band_buckets,
                                                      band_keys, est_jaccard,
                                                      minhash_signatures,
                                                      probe_minhash_oracle_sql)
@@ -500,8 +501,6 @@ def streaming_minhash_probe(spark, sf_dir):
     the stream; the 100 TB posture is the bucketed index layout of
     `dedup_minhash_bucketed_probe` with this query as its continuous
     consumer."""
-    n_hashes, n_bands = 32, 8
-
     # Static probe index: corpus (old) band keys with signatures
     # denormalized — the persisted artifact a deployment would maintain.
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
@@ -513,30 +512,29 @@ def streaming_minhash_probe(spark, sf_dir):
     # corpus fold total; the band explode re-derives from the cache per
     # consumer (the r18 A/B precedent: cache the signatures, never the
     # n_bands× exploded frame).
-    sig_old = track_persist(
-        minhash_signatures(docs.where(~is_new), n_hashes))
-    index = (band_buckets(sig_old, n_hashes, n_bands)
+    sig_old = track_persist(minhash_signatures(docs.where(~is_new)))
+    index = (band_buckets(sig_old, N_HASHES, N_BANDS)
              .join(sig_old, "doc_id")
              .select(F.col("doc_id").alias("old_id"), "band_id", "bh",
                      *[F.col(f"mh{i}").alias(f"omh{i}")
-                       for i in range(n_hashes)]))
+                       for i in range(N_HASHES)]))
 
     # Stream side: same signature stage, band keys exploded per row with
     # the new doc's signature carried along.
     stream_docs = (read_document_stream(spark, sf_dir)
                    .where(is_new & F.col("text").isNotNull()))
-    sig_new = minhash_signatures(stream_docs, n_hashes)
+    sig_new = minhash_signatures(stream_docs)
     bands_new = sig_new.select(
         F.col("doc_id").alias("new_id"),
-        *[F.col(f"mh{i}").alias(f"nmh{i}") for i in range(n_hashes)],
-        F.posexplode(band_keys(n_hashes, n_bands)).alias("band_id", "bh"))
+        *[F.col(f"mh{i}").alias(f"nmh{i}") for i in range(N_HASHES)],
+        F.posexplode(band_keys(N_HASHES, N_BANDS)).alias("band_id", "bh"))
 
     hits = (bands_new.join(index, ["band_id", "bh"])
             .select(F.least("new_id", "old_id").alias("doc_a"),
                     F.greatest("new_id", "old_id").alias("doc_b"),
-                    est_jaccard("nmh", "omh", n_hashes)
+                    est_jaccard("nmh", "omh", N_HASHES)
                     .alias("est"))
-            .where(F.col("est") >= 0.5)
+            .where(F.col("est") >= THRESHOLD)
             .groupBy("doc_a", "doc_b")
             .agg(F.max("est").alias("est_jaccard")))
     out = run_to_memory(hits, _unique("stream_mh_probe"))

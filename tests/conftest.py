@@ -14,16 +14,6 @@ def spark():
              # Whole-stage codegen compile time dominates at sf0.001;
              # interpreted mode keeps the suite fast (see bench.py).
              "spark.sql.codegen.wholeStage": "false"}
-    # scripts/fast_loop.py runs several pytest PROCESSES concurrently
-    # (round-12 VERDICT item 4 — no xdist in this environment). Embedded
-    # Derby allows ONE metastore per directory, so each shard gets its
-    # own warehouse + derby home; unset (the default, and the driver's
-    # full-suite run) leaves the stock layout untouched.
-    shard_dir = os.environ.get("SPARK_GRAFT_TEST_SHARD_DIR")
-    if shard_dir:
-        extra["spark.sql.warehouse.dir"] = f"{shard_dir}/warehouse"
-        extra["spark.driver.extraJavaOptions"] = (
-            f"-Dderby.system.home={shard_dir}/derby")
     spark = get_spark(
         app_name="tests",
         master="local[4]",

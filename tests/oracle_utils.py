@@ -5,8 +5,11 @@ on Spark and its oracle SQL on DuckDB, compare row count, column names, and
 from __future__ import annotations
 
 import math
+import tempfile
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -19,6 +22,28 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con
+
+
+def stage_documents(rows, sf_dir: str) -> str:
+    """Write a constructed documents table from (doc_id, text, lang,
+    source, n_chars) rows as one parquet FILE (duck_connection's
+    contract), plus empty slices of every other table of ``sf_dir``;
+    returns the staging dir (the caller removes it)."""
+    tmp = tempfile.mkdtemp(prefix="oracle_corpus_")
+    cols = list(zip(*rows))
+    pq.write_table(pa.table(
+        {"doc_id": pa.array(cols[0], pa.int64()),
+         "text": pa.array(cols[1], pa.string()),
+         "lang": pa.array(cols[2], pa.string()),
+         "source": pa.array(cols[3], pa.string()),
+         "n_chars": pa.array(cols[4], pa.int64())}),
+        f"{tmp}/documents.parquet")
+    for t in TABLES:
+        if t != "documents":
+            pq.write_table(
+                pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, 0),
+                f"{tmp}/{t}.parquet")
+    return tmp
 
 
 def _norm_cell(v):

@@ -31,6 +31,22 @@ def test_analyze_word_score(spark, tweet_csv):
     assert all(-1.0 <= v <= 1.0 for v in rows.values())
 
 
+def test_analyze_word_score_keeps_input_row_id(spark, tmp_path):
+    """word-score adds its score column and leaves every input column,
+    one named _row_id included, as it was."""
+    from spark_sentiment_spark.analyze import analyze
+
+    p = tmp_path / "ids.csv"
+    p.write_text("_row_id,text\n"
+                 "7,what a great happy wonderful day\n"
+                 "9,an awful terrible sad day\n")
+    out = analyze(spark, str(p), method="word-score", column="text")
+    assert "_row_id" in out.columns
+    rows = {int(r["_row_id"]): r["computed"] for r in out.collect()}
+    assert set(rows) == {7, 9}
+    assert rows[7] > 0 > rows[9]
+
+
 def test_analyze_nlp(spark, tweet_csv):
     from spark_sentiment_spark.analyze import analyze
 

@@ -3,7 +3,6 @@ schema names, and values at sf0.001; rows-only queries must run; the
 catalog's order, driver entry points and doc counters stay in step with
 the registry."""
 
-import hashlib
 import json
 import os
 import subprocess
@@ -23,20 +22,6 @@ ORACLE_NAMES = [n for n, q in REGISTRY.items() if q.sql is not None]
 ROWS_ONLY_NAMES = [n for n, q in REGISTRY.items() if q.sql is None]
 
 
-def _in_shard(name: str) -> bool:
-    """scripts/fast_loop.py splits the sweep across concurrent pytest
-    processes via SPARK_GRAFT_ORACLE_SHARD="i/n" (md5-deterministic).
-    Unset → everything (any plain `pytest tests/`)."""
-    spec = os.environ.get("SPARK_GRAFT_ORACLE_SHARD")
-    if not spec:
-        return True
-    i, n = (int(x) for x in spec.split("/"))
-    return int(hashlib.md5(name.encode()).hexdigest(), 16) % n == i
-
-
-_SWEEP = [n for n in ORACLE_NAMES if _in_shard(n)]
-
-
 @pytest.fixture(scope="module")
 def duck():
     con = duck_connection(SF_DIR)
@@ -44,7 +29,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", _SWEEP)
+@pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_match(spark, duck, name):
     q = REGISTRY[name]
     ok, msg = compare(q.fn(spark, SF_DIR), duck, q.sql, name)
@@ -52,8 +37,7 @@ def test_oracle_match(spark, duck, name):
     assert ok, msg
 
 
-@pytest.mark.parametrize("name", [n for n in ROWS_ONLY_NAMES
-                                  if _in_shard(n)])
+@pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
 def test_rows_only_runs(spark, name):
     q = REGISTRY[name]
     df = q.fn(spark, SF_DIR)
@@ -132,9 +116,8 @@ def test_catalog_order_is_registration_order():
 
 
 def test_doc_counters_match_registry():
-    """Round-9 VERDICT (repeat nit): README/COVERAGE carried a stale
-    catalog count two rounds running. Pin the literal counters in both
-    docs to the live registry so growth without a doc bump fails here."""
+    """The catalog counters written in README, COVERAGE and SURVEY
+    match the live registry, so growth without a doc bump fails here."""
     from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
 
     all_queries()
@@ -148,8 +131,6 @@ def test_doc_counters_match_registry():
     assert f"FOUR of the {total}" in coverage or (
         rows_only != 4 and f"of the {total}" in coverage), (
         f"COVERAGE.md rows-only counter != {total}")
-    # round-12 VERDICT: the SURVEY §7.4 realized-surface note drifted twice;
-    # pin its literal counters to the live registry like README/COVERAGE.
     survey = open(os.path.join(REPO, "SURVEY.md")).read()
     assert (f"({total} queries, {total - rows_only} oracle-backed"
             in survey), (
@@ -157,13 +138,10 @@ def test_doc_counters_match_registry():
 
 
 def test_money_sites_match_audited_snapshot():
-    """Round-15 money gate, continuous form: the full boundary-distance
-    audit (scripts/money_audit.py, PLANS.md table) runs at round close;
-    this pin makes the inventory part run every fast loop. A NEW
-    round(sum(...)) oracle site, or an idiom change on an existing one
-    (e.g. an exact decimal sum downgraded to a raw double sum), fails
-    here until the distance audit is re-run and the snapshot rewritten
-    (`python scripts/money_audit.py` — must exit 0 — then `--snapshot`)."""
+    """The round(sum(...)) oracle sites equal the snapshot that the
+    boundary-distance audit last passed on: a new site or a changed idiom
+    fails here until `python scripts/money_audit.py` exits 0 and
+    `--snapshot` rewrites it."""
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     from money_audit import SNAPSHOT_PATH, site_inventory
 

@@ -502,9 +502,8 @@ def test_gopher_rules_oracle_parity_on_symbol_heavy_corpus(spark):
     ellipsis and mixed whitespace) and run the REAL oracle comparison —
     Spark plan vs DuckDB SQL — on it."""
     import shutil
-    import tempfile
 
-    from tests.oracle_utils import TABLES, compare, duck_connection
+    from tests.oracle_utils import compare, duck_connection, stage_documents
     from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
 
     all_queries()
@@ -520,25 +519,8 @@ def test_gopher_rules_oracle_parity_on_symbol_heavy_corpus(spark):
         (5, " ".join(["123456"] * 60) + " the of and", "xx", "news", 10),
         (6, None, "en", "web", 0),
     ]
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="gopher_oracle_")
+    tmp = stage_documents(rows, SF_DIR)
     try:
-        # single-FILE parquet (duck_connection's read_parquet contract)
-        cols = list(zip(*rows))
-        pq.write_table(pa.table(
-            {"doc_id": pa.array(cols[0], pa.int64()),
-             "text": pa.array(cols[1], pa.string()),
-             "lang": pa.array(cols[2], pa.string()),
-             "source": pa.array(cols[3], pa.string()),
-             "n_chars": pa.array(cols[4], pa.int64())}),
-            f"{tmp}/documents.parquet")
-        for t in TABLES:
-            if t != "documents":
-                pq.write_table(
-                    pq.read_table(f"{SF_DIR}/{t}.parquet").slice(0, 0),
-                    f"{tmp}/{t}.parquet")
         q = REGISTRY["quality_gopher_rules"]
         ok, msg = compare(q.fn(spark, tmp), duck_connection(tmp), q.sql,
                           "gopher@constructed")
@@ -583,11 +565,8 @@ def test_dsir_weights_oracle_parity_on_unicode_corpus(spark):
     comparison for the DSIR weights (md5 over raw gram text, the
     hashing-heaviest new query)."""
     import shutil
-    import tempfile
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from tests.oracle_utils import TABLES, compare, duck_connection
+    from tests.oracle_utils import compare, duck_connection, stage_documents
     from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
 
     all_queries()
@@ -601,21 +580,8 @@ def test_dsir_weights_oracle_parity_on_unicode_corpus(spark):
     ]
     rows = [(i, t, "en" if i % 2 == 0 else "xx", "web", len(t))
             for i, t in enumerate(texts)]
-    tmp = tempfile.mkdtemp(prefix="dsir_unicode_")
+    tmp = stage_documents(rows, SF_DIR)
     try:
-        cols = list(zip(*rows))
-        pq.write_table(pa.table(
-            {"doc_id": pa.array(cols[0], pa.int64()),
-             "text": pa.array(cols[1], pa.string()),
-             "lang": pa.array(cols[2], pa.string()),
-             "source": pa.array(cols[3], pa.string()),
-             "n_chars": pa.array(cols[4], pa.int64())}),
-            f"{tmp}/documents.parquet")
-        for t in TABLES:
-            if t != "documents":
-                pq.write_table(
-                    pq.read_table(f"{SF_DIR}/{t}.parquet").slice(0, 0),
-                    f"{tmp}/{t}.parquet")
         q = REGISTRY["corpus_dsir_weights"]
         ok, msg = compare(q.fn(spark, tmp), duck_connection(tmp), q.sql,
                           "dsir@unicode")

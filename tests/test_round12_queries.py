@@ -7,37 +7,12 @@ there), with a REAL cross-engine oracle comparison on the constructed
 corpus."""
 
 import shutil
-import tempfile
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-
-
-def _stage_documents(rows):
-    """Write a constructed documents table (single parquet FILE, the
-    duck_connection contract) plus empty slices of every other table;
-    returns the staging dir (caller removes)."""
-    from tests.oracle_utils import TABLES
-
-    tmp = tempfile.mkdtemp(prefix="round12_oracle_")
-    cols = list(zip(*rows))
-    pq.write_table(pa.table(
-        {"doc_id": pa.array(cols[0], pa.int64()),
-         "text": pa.array(cols[1], pa.string()),
-         "lang": pa.array(cols[2], pa.string()),
-         "source": pa.array(cols[3], pa.string()),
-         "n_chars": pa.array(cols[4], pa.int64())}),
-        f"{tmp}/documents.parquet")
-    for t in TABLES:
-        if t != "documents":
-            pq.write_table(
-                pq.read_table(f"{SF_DIR}/{t}.parquet").slice(0, 0),
-                f"{tmp}/{t}.parquet")
-    return tmp
+from tests.oracle_utils import stage_documents
 
 
 GOOD = ("the quick brown fox and that dog have fun with it " * 6).strip()
@@ -71,7 +46,7 @@ def test_curate_gopher_all_stages_fire_with_oracle(spark):
         (9, ("#### " * 60).strip() + " the of and have with",
          "en", "web", 10),                                  # symbol_ratio
     ]
-    tmp = _stage_documents(rows)
+    tmp = stage_documents(rows, SF_DIR)
     try:
         q = REGISTRY["curate_corpus_gopher"]
         out = {r["doc_id"]: r["reason"]
@@ -146,7 +121,7 @@ def test_sample_dsir_matches_hashlib_replay(spark):
 def test_dsir_weights_score_featureless_docs_neutrally(spark):
     """Docs with fewer than 2 tokens have no bigram features — they must
     appear with the neutral score (n_grams = 0, log_weight = 0.0), not
-    vanish (round-11 ADVICE: the resampler would silently drop them),
+    vanish (the resampler would silently drop them),
     and the constructed corpus runs the REAL cross-engine oracle."""
     from tests.oracle_utils import compare, duck_connection
     from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
@@ -159,7 +134,7 @@ def test_dsir_weights_score_featureless_docs_neutrally(spark):
         (3, "zwei wörter", "de", "web", 11),
         (4, None, "en", "web", 0),           # null text: excluded
     ]
-    tmp = _stage_documents(rows)
+    tmp = stage_documents(rows, SF_DIR)
     try:
         q = REGISTRY["corpus_dsir_weights"]
         out = {r["doc_id"]: (r["n_grams"], r["log_weight"])
@@ -263,7 +238,7 @@ def test_c4_rules_oracle_parity_on_multiline_corpus(spark):
         (5, "", "en", "web", 0),
         (6, None, "en", "web", 0),
     ]
-    tmp = _stage_documents(rows)
+    tmp = stage_documents(rows, SF_DIR)
     try:
         q = REGISTRY["quality_c4_rules"]
         ok, msg = compare(q.fn(spark, tmp), duck_connection(tmp), q.sql,
@@ -306,7 +281,7 @@ def test_curate_c4_all_stages_fire_with_oracle(spark):
         (8, "no terminal punctuation at all here", "en", "web", 10),
         (9, goodc4 + "\nvar x = {a: 1}", "en", "web", 10),  # curly_brace
     ]
-    tmp = _stage_documents(rows)
+    tmp = stage_documents(rows, SF_DIR)
     try:
         q = REGISTRY["curate_corpus_c4"]
         out = {r["doc_id"]: r["reason"]
