@@ -11,9 +11,11 @@ reference's CoreNLP paths; ``our-nlp`` defaults to the shipped trained
 model artifact in ``operators.nlp_model``, the others to the lexicon
 scorer, and any backend can be swapped via ``sentence_scorer_factory=``).
 
-Everything stays one lazy DataFrame plan per input: no collect, no
-driver-side loops; cleaning is native Column expressions; the only Python
-is the stemmer/tokenizer/NLP pandas UDFs where semantics require it.
+The data path is one lazy DataFrame plan per input: cleaning is native
+Column expressions, and the only Python is the stemmer/tokenizer/NLP pandas
+UDFs where semantics require it. The driver collects bounded samples only:
+text-column detection reads up to ``limit`` rows, CSV dialect sniffing at
+most 20.
 """
 
 from __future__ import annotations

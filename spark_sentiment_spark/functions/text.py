@@ -10,6 +10,9 @@ DuckDB SQL for the correctness oracle.
 
 from __future__ import annotations
 
+import json
+from functools import lru_cache
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -76,17 +79,17 @@ def emoji_to_word_col(col: Column | str, mapping: dict | None = None) -> Column:
     documented in quirks.md).
 
     Implemented natively: split on single spaces, map each token through a
-    literal ``map<string,string>``, reassemble. The map is a bounded literal
-    (≤1k entries) evaluated JVM-side — no shuffle, no Python.
+    literal ``map<string,string>``, reassemble. The map travels to the JVM as
+    one JSON string literal parsed by ``from_json``: one py4j call instead of
+    one per key and value, and no SQL string literal, so keys holding ``'``
+    or ``\\`` (``:'(``, ``:\\``) mean the same under every parser conf
+    (``spark.sql.parser.escapedStringLiterals`` included). Catalyst folds the
+    parse into a map literal, so rows never run ``from_json``.
     """
     from spark_sentiment_spark.functions.lexicon import emoji_dict
 
     mapping = mapping if mapping is not None else emoji_dict()
-    pairs: list = []
-    for k, v in sorted(mapping.items()):
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    m = F.create_map(*pairs)
+    m = F.from_json(F.lit(json.dumps(mapping)), "map<string,string>")
     c = F.col(col) if isinstance(col, str) else col
     return F.array_join(
         F.transform(F.split(c, " ", -1), lambda t: F.coalesce(m[t], t)), " "
@@ -108,17 +111,27 @@ def stem_tokens_col(col: Column | str) -> Column:
     return _stem(F.col(col) if isinstance(col, str) else col)
 
 
-def remove_stopwords_col(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Drop (case-insensitively) the default English stop words from a
-    space-tokenized string, natively via array_except on lowered tokens
-    (StopWordsRemover with caseSensitive=false, SRC/utils/Helper.scala:58-62).
-    """
+@lru_cache(maxsize=1)
+def _default_stopwords() -> tuple[str, ...]:
+    """Spark ML's default English stop words, read from the JVM once per
+    process (the JVM returns them one py4j call per word)."""
     from pyspark.ml.feature import StopWordsRemover
 
-    stopwords = stopwords or StopWordsRemover.loadDefaultStopWords("english")
+    return tuple(StopWordsRemover.loadDefaultStopWords("english"))
+
+
+def remove_stopwords_col(col: Column | str, stopwords: list[str] | None = None) -> Column:
+    """Drop (case-insensitively) the default English stop words from a
+    space-tokenized string, keeping the order and duplicates of the other
+    tokens: ``filter`` with ``array_contains`` on each lowered token
+    (StopWordsRemover with caseSensitive=false, SRC/utils/Helper.scala:58-62).
+    The stop-word array travels as one JSON literal, for the reasons
+    ``emoji_to_word_col`` gives.
+    """
+    stopwords = stopwords or _default_stopwords()
     c = F.col(col) if isinstance(col, str) else col
     toks = F.split(c, " ", -1)
-    sw = F.array(*[F.lit(w) for w in stopwords])
+    sw = F.from_json(F.lit(json.dumps(stopwords)), "array<string>")
     return F.array_join(
         F.filter(toks, lambda t: ~F.array_contains(sw, F.lower(t))), " "
     )

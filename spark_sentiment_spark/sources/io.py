@@ -40,10 +40,7 @@ def _first_two_lines(spark: SparkSession, path: str) -> list[str]:
     return [r[0] for r in rows]
 
 
-def find_delimiter(spark: SparkSession, path: str) -> str:
-    """S3: pick the first candidate whose count matches across the first two
-    lines and is non-zero; fall back to ';' (intended IO.findDelimiter)."""
-    lines = _first_two_lines(spark, path)
+def _delimiter_of(lines: list[str]) -> str:
     if len(lines) < 2:
         return ","
     l1, l2 = lines[0], lines[1]
@@ -53,10 +50,7 @@ def find_delimiter(spark: SparkSession, path: str) -> str:
     return ";"
 
 
-def detect_escape(spark: SparkSession, path: str, delim: str) -> str | None:
-    """S5: longest multi-word field of line 2; a leading quote char means the
-    file quotes free-text fields with it (IO.detectEscape:19-30)."""
-    lines = _first_two_lines(spark, path)
+def _escape_of(lines: list[str], delim: str) -> str | None:
     if len(lines) < 2:
         return None
     fields = [p for p in lines[1].split(delim) if len(p.split(" ")) > 3]
@@ -68,6 +62,18 @@ def detect_escape(spark: SparkSession, path: str, delim: str) -> str | None:
     if longest[:1] == "'":
         return "'"
     return None
+
+
+def find_delimiter(spark: SparkSession, path: str) -> str:
+    """S3: pick the first candidate whose count matches across the first two
+    lines and is non-zero; fall back to ';' (intended IO.findDelimiter)."""
+    return _delimiter_of(_first_two_lines(spark, path))
+
+
+def detect_escape(spark: SparkSession, path: str, delim: str) -> str | None:
+    """S5: longest multi-word field of line 2; a leading quote char means the
+    file quotes free-text fields with it (IO.detectEscape:19-30)."""
+    return _escape_of(_first_two_lines(spark, path), delim)
 
 
 def has_header(spark: SparkSession, path: str, delim: str) -> bool:
@@ -112,10 +118,13 @@ def has_header(spark: SparkSession, path: str, delim: str) -> bool:
 
 def load_csv(spark: SparkSession, path: str, *, delimiter: str | None = None,
              header: bool | None = None, escape: str | None = None) -> DataFrame:
-    """S2: CSV scan with dialect sniffing for any unspecified option."""
-    delim = delimiter if delimiter is not None else find_delimiter(spark, path)
+    """S2: CSV scan with dialect sniffing for any unspecified option. The
+    delimiter and escape sniffs share one read of the first two lines."""
+    lines = (_first_two_lines(spark, path)
+             if delimiter is None or escape is None else [])
+    delim = delimiter if delimiter is not None else _delimiter_of(lines)
     hdr = header if header is not None else has_header(spark, path, delim)
-    esc = escape if escape is not None else detect_escape(spark, path, delim)
+    esc = escape if escape is not None else _escape_of(lines, delim)
     reader = (spark.read.option("sep", delim).option("header", str(hdr).lower())
               .option("inferSchema", "true"))
     if esc is not None:
