@@ -29,6 +29,10 @@ from pyspark.sql import functions as F
 
 SCORE = "score"   # MlLibSentimentAnalyser.scala:14
 TFIDF = "tfidf"   # MlLibSentimentAnalyser.scala:15
+#: The classifiers train on and predict dense class indices 0..k-1; the
+#: fitted pipeline's last stage maps the predicted index back to the label.
+CLASS = "class_index"
+CLASS_PREDICTION = "class_prediction"
 
 #: sweep grids (Regression.scala:36, Bayes.scala:32, MaximumEntropy.scala:31)
 LR_GRID = {"regParam": [0.0, 0.01, 0.02], "elasticNetParam": [0.0, 0.2, 0.4]}
@@ -57,24 +61,36 @@ def _classifier(name: str):
     from pyspark.ml.classification import (LogisticRegression, NaiveBayes,
                                            RandomForestClassifier)
 
+    cols = dict(labelCol=CLASS, featuresCol=TFIDF,
+                predictionCol=CLASS_PREDICTION)
     if name == "logistic":      # Regression.scala:18-22
-        return LogisticRegression(labelCol=SCORE, featuresCol=TFIDF,
-                                  regParam=0.02, maxIter=100,
+        return LogisticRegression(**cols, regParam=0.02, maxIter=100,
                                   elasticNetParam=0.3), LR_GRID
     if name == "naivebayes":    # Bayes.scala:18-19
-        return NaiveBayes(labelCol=SCORE, featuresCol=TFIDF,
-                          smoothing=1.0, modelType="multinomial"), NB_GRID
+        return NaiveBayes(**cols, smoothing=1.0,
+                          modelType="multinomial"), NB_GRID
     if name == "maxentropy":    # MaximumEntropy.scala:18
-        return RandomForestClassifier(labelCol=SCORE, featuresCol=TFIDF,
-                                      impurity="gini", maxDepth=3,
+        return RandomForestClassifier(**cols, impurity="gini", maxDepth=3,
                                       numTrees=20,
                                       featureSubsetStrategy="auto",
                                       seed=5043), RF_GRID
     raise ValueError(f"unknown classifier {name!r}")
 
 
+def _to_labels(labels: list[float]):
+    """The stage that maps a predicted class index back to its label, so a
+    model trained on Sentiment140's 0/4 polarity predicts 0 or 4."""
+    from pyspark.ml.feature import SQLTransformer
+
+    values = ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in labels)
+    return SQLTransformer(statement=(
+        f"SELECT *, element_at(array({values}), "
+        f"CAST({CLASS_PREDICTION} AS INT) + 1) AS prediction FROM __THIS__"))
+
+
 def accuracy(df: DataFrame) -> float:
-    """A2/F14: avg(double(prediction = score)) (Regression.scala:30)."""
+    """A2/F14: avg(double(prediction = score)) (Regression.scala:30); both
+    columns hold label values."""
     return df.agg(
         F.avg((F.col("prediction") == F.col(SCORE)).cast("double"))
     ).first()[0]
@@ -138,7 +154,12 @@ def train(df: DataFrame, text_col: str, classifier: str = "all",
     from pyspark.ml import Pipeline
 
     data, _ = prepare_labels(df, limit)
+    labels = sorted(r[0] for r in data.select(SCORE).distinct().collect()
+                    if r[0] is not None)
+    data = data.withColumn(CLASS, (F.array_position(
+        F.array(*map(F.lit, labels)), F.col(SCORE)) - 1).cast("double"))
     features = feature_pipeline(text_col).fit(data)
+    to_labels = _to_labels(labels)
     training_df, validation_df, testing_df = data.randomSplit(
         [0.7, 0.2, 0.1], seed=0)
     # The feature model and both split sides are reused by up to 18 fits.
@@ -151,13 +172,14 @@ def train(df: DataFrame, text_col: str, classifier: str = "all",
     fit_log: list[tuple[str, str, float]] = []
     for name in names:
         est, grid = _classifier(name)
-        static_model = Pipeline(stages=[features, est]).fit(training_df)
+        static_model = Pipeline(
+            stages=[features, est, to_labels]).fit(training_df)
         static_prec = accuracy(static_model.transform(validation_df))
         fit_log.append((name, "static", static_prec))
         best_model, best_prec = static_model, static_prec
         if sweep:
             swept_model, swept_prec, scored = _sweep(
-                features, est, grid, training_df, validation_df,
+                features, est, to_labels, grid, training_df, validation_df,
                 parallelism)
             fit_log.extend((name, params, prec) for prec, params in scored)
             # sweep wins only when strictly better (Regression.scala:49-56)
@@ -171,8 +193,8 @@ def train(df: DataFrame, text_col: str, classifier: str = "all",
     return best
 
 
-def _sweep(features, est, grid: dict, training_df, validation_df,
-           parallelism: int):
+def _sweep(features, est, to_labels, grid: dict, training_df,
+           validation_df, parallelism: int):
     """Exact-semantics grid sweep: fit every grid point, score on the
     validation split, keep the max — the reference's manual loop
     (Regression.scala:39-46) expressed through TrainValidationSplit would
@@ -188,7 +210,8 @@ def _sweep(features, est, grid: dict, training_df, validation_df,
     param_maps = builder.build()
 
     def fit_one(pm):
-        model = Pipeline(stages=[features, est.copy(pm)]).fit(training_df)
+        model = Pipeline(
+            stages=[features, est.copy(pm), to_labels]).fit(training_df)
         desc = ",".join(f"{p.name}={v}" for p, v in sorted(
             pm.items(), key=lambda kv: kv[0].name))
         return accuracy(model.transform(validation_df)), model, desc
@@ -218,5 +241,6 @@ def score_model(df: DataFrame, model, text_col: str | None = None,
     output (Sentiment.scala:145-148,190)."""
     out = model.transform(df)
     if drop_intermediate:
-        out = out.drop("words", "tf", TFIDF, "rawPrediction", "probability")
+        out = out.drop("words", "tf", TFIDF, "rawPrediction", "probability",
+                       CLASS, CLASS_PREDICTION)
     return out

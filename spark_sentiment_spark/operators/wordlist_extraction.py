@@ -57,13 +57,8 @@ def extract_wordlists(df: DataFrame, text_col: str, label_col: str,
                          F.explode("_toks").alias("word"))
     tf = (tokens.groupBy("category", "_doc", "word")
           .agg(F.count(F.lit(1)).alias("tf")))
-    # Round-18 optimization (guide §2.4): vocab feeds the overlap build
-    # AND the anti-join left side — without a persist the corpus explode
-    # + tf/df aggregation chain executes once per consumer (the before
-    # plan shows 4 parquet scans, zero ReusedExchange). Persist the
-    # vocabulary-bounded (category, word, counts) frame so the corpus
-    # pass runs once; as a side benefit the monotonically_increasing_id
-    # doc ids are materialized once instead of re-derived per branch.
+    # vocab feeds both the overlap build and the anti-join, so it is
+    # persisted to run the corpus pass once.
     from spark_sentiment_spark.plans.registry import track_persist
 
     vocab = track_persist(

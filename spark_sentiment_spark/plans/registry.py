@@ -119,19 +119,8 @@ def register(name: str, sql: str | None = None, bench: bool = False,
 # scan. The testdata ships one single-row-group file per table, so the scan
 # is a single input split — without this, every narrow CPU-heavy stage
 # (regex cleaning, explode, partial aggregation) runs on ONE core.
-# Round-18 optimization (guide §2.4/§2.5): the fan-out is HASH-keyed on the
-# table's natural key instead of round-robin. Two measured effects:
-# (1) keyless repartition(n) pays a local sort of its input before the
-#     exchange (spark.sql.execution.sortBeforeRepartition, on by default so
-#     retried tasks reproduce the same row→partition assignment) — on the
-#     single 600k-row lineitem split that sort is single-threaded and cost
-#     0.58s/scan vs 0.25s for the hash shuffle (min-of-7, sf0.1; see
-#     OPTIMIZATION_r18.md);
-# (2) the hash partitioning is visible to Catalyst, so downstream joins,
-#     aggregations and windows keyed on the same column (or a superset —
-#     HashPartitioning(k) satisfies ClusteredDistribution(k, …)) reuse this
-#     exchange instead of adding their own (events_sessionize's user_id
-#     window, text explode→(doc_id, term) aggregations, …).
+# The fan-out is hash-keyed on the table's natural key, so downstream joins,
+# aggregations and windows on that key reuse this exchange.
 # Dimension tables stay unrepartitioned so they remain broadcast candidates.
 #
 # Natural fan-out keys: high-cardinality (well above 32 partitions at every
@@ -151,18 +140,9 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
-    # The harness runs these queries on ITS OWN SparkSession, which may not
-    # carry our session defaults. Timestamp rendering/parsing must agree
-    # with the (timezone-naive) DuckDB oracle, so pin UTC here — a runtime-
-    # settable SQL conf, idempotent.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    except Exception:
-        # TIMESTAMP(NANOS) parquet columns need the legacy nanos-as-long read
-        # path (driver-owned sessions may not have it set at build time).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    from spark_sentiment_spark.sources.io import load_parquet_utc
+
+    df = load_parquet_utc(spark, f"{sf_dir}/{table}.parquet")
     if table == "events" and isinstance(df.schema["ts"].dataType, LongType):
         # nanos → micros (floor), matching DuckDB's nanos→TIMESTAMP cast.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -67,7 +67,6 @@ from spark_sentiment_spark.plans.registry import (load, register,
                                                   track_persist,
                                                   track_staging_dir)
 from spark_sentiment_spark.streaming.streams import (
-    _stage_dir,
     await_stream,
     dedup_stream,
     read_document_stream,
@@ -268,10 +267,7 @@ def streaming_multimodal_headers(spark, sf_dir):
     a media firehose. Append mode, no state, so throughput is scan-bound;
     the oracle is the same arithmetic twin as the batch
     ``multimodal_headers``."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/documents.parquet"
-    static = spark.read.parquet(path)
-    stream = spark.readStream.schema(static.schema).parquet(_stage_dir(path))
+    stream = read_document_stream(spark, sf_dir)
     out = run_to_memory(header_metadata(attach_media_content(stream)),
                         _unique("stream_headers"), output_mode="append")
     return out.orderBy("doc_id")

@@ -15,13 +15,20 @@ reproduced):
 * Writers use ``mode("overwrite")``, subsuming the reference's manual
   output-path deletion (``Helper.clean``, SRC/utils/Helper.scala:104-141).
 
-Everything driver-side touches only ``limit(2)`` samples; data-path reads
-stay fully distributed and schema inference is delegated to Spark.
+Driver-side sniffing reads samples: the first two lines for the delimiter
+and the escape, the first 20 rows for the header. Schema inference is
+Spark's own (a full pass over a CSV or JSON file, footers for parquet and
+ORC); its answer, and a CSV's sniffed dialect with it, is reused for as
+long as the file is unchanged (``_resolve``). Data-path reads stay fully
+distributed.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import stat
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,6 +40,94 @@ DELIMITER_CANDIDATES = (",", "|", ":", "\t", ";")
 _EXTENSION_DISPATCH = ((".json", "json"), (".txt", "txt"),
                        (".csv", "csv"), (".par", "parquet"),
                        (".orc", "orc"))
+
+
+#: SQL confs that change what schema inference returns from the same bytes.
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.timestampType",
+    "spark.sql.legacy.timeParserPolicy",
+    "spark.sql.session.timeZone",
+)
+
+#: (kind, absolute path, reader options) → (file version, conf values,
+#: inferred answer). A new version or conf value replaces the entry, so
+#: the map holds one entry per distinct read.
+_RESOLVED: dict[tuple, tuple[tuple, tuple, Any]] = {}
+
+
+def _file_version(path: str) -> tuple | None:
+    """``(st_ino, st_mtime_ns, st_size)`` of a local file, or of every leaf
+    file under a local directory; None where no cheap exact version
+    exists (a URI scheme, a glob, a missing path). A rewrite that keeps
+    the inode and size within one mtime tick of the filesystem is not
+    seen."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path) or any(
+            c in path for c in "*?[{"):
+        return None
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_mtime_ns, st.st_size)
+        leaves = []
+        for root, dirs, files in os.walk(path, followlinks=True):
+            dirs.sort()
+            for name in sorted(files):
+                f = os.path.join(root, name)
+                st = os.stat(f)
+                leaves.append((os.path.relpath(f, path), st.st_ino,
+                               st.st_mtime_ns, st.st_size))
+        return tuple(leaves)
+    except OSError:
+        return None
+
+
+def _resolve(spark: SparkSession, kind: str, path: str, options: tuple,
+             infer: Callable[[], tuple[DataFrame, Any]],
+             reuse: Callable[[Any], DataFrame]) -> DataFrame:
+    """Read ``path``, running Spark's inference at most once per file version.
+
+    ``infer()`` reads with inference and returns ``(df, answer)``, where
+    the answer (a schema, plus a CSV's sniffed dialect) is everything a
+    later read needs; ``reuse(answer)`` builds the same frame from it
+    without a Spark job. The answer is reused while the file's version
+    and the inference confs are unchanged; the version is taken before
+    inference, so a rewrite during it only costs a re-inference. A read
+    that raises stores nothing."""
+    version = _file_version(path)
+    if version is None:
+        return infer()[0]
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    key = (kind, os.path.abspath(path), options)
+    hit = _RESOLVED.get(key)
+    if hit is not None and hit[:2] == (version, confs):
+        return reuse(hit[2])
+    df, answer = infer()
+    _RESOLVED[key] = (version, confs, answer)
+    return df
+
+
+def _read_inferred(spark: SparkSession, fmt: str, path: str,
+                   **options: str) -> DataFrame:
+    """``spark.read.options(**options).format(fmt).load(path)``, with the
+    inferred schema reused per file version (``_resolve``)."""
+    def read(schema=None):
+        reader = spark.read.options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.format(fmt).load(path)
+
+    def infer():
+        df = read()
+        return df, df.schema
+    return _resolve(spark, fmt, path, tuple(sorted(options.items())),
+                    infer, read)
 
 
 def _first_two_lines(spark: SparkSession, path: str) -> list[str]:
@@ -119,17 +214,28 @@ def has_header(spark: SparkSession, path: str, delim: str) -> bool:
 def load_csv(spark: SparkSession, path: str, *, delimiter: str | None = None,
              header: bool | None = None, escape: str | None = None) -> DataFrame:
     """S2: CSV scan with dialect sniffing for any unspecified option. The
-    delimiter and escape sniffs share one read of the first two lines."""
-    lines = (_first_two_lines(spark, path)
-             if delimiter is None or escape is None else [])
-    delim = delimiter if delimiter is not None else _delimiter_of(lines)
-    hdr = header if header is not None else has_header(spark, path, delim)
-    esc = escape if escape is not None else _escape_of(lines, delim)
-    reader = (spark.read.option("sep", delim).option("header", str(hdr).lower())
-              .option("inferSchema", "true"))
-    if esc is not None:
-        reader = reader.option("quote", esc).option("escape", esc)
-    return reader.csv(path)
+    delimiter and escape sniffs share one read of the first two lines; the
+    sniffed dialect is reused with the inferred schema (``_resolve``)."""
+    def read(delim, hdr, esc, schema=None):
+        reader = (spark.read.option("sep", delim)
+                  .option("header", str(hdr).lower())
+                  .option("inferSchema", "true"))
+        if esc is not None:
+            reader = reader.option("quote", esc).option("escape", esc)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.csv(path)
+
+    def infer():
+        lines = (_first_two_lines(spark, path)
+                 if delimiter is None or escape is None else [])
+        delim = delimiter if delimiter is not None else _delimiter_of(lines)
+        hdr = header if header is not None else has_header(spark, path, delim)
+        esc = escape if escape is not None else _escape_of(lines, delim)
+        df = read(delim, hdr, esc)
+        return df, (delim, hdr, esc, df.schema)
+    return _resolve(spark, "csv", path, (delimiter, header, escape),
+                    infer, lambda answer: read(*answer))
 
 
 def infer_filetype(path: str) -> str | None:
@@ -159,17 +265,33 @@ def load(spark: SparkSession, path: str,
     ftype = (filetype or infer_filetype(path) or "").lower()
     ms = str(bool(merge_schema)).lower()
     if ftype == "json":
-        return spark.read.json(path), "json"
+        return _read_inferred(spark, "json", path), "json"
     if ftype == "csv":
         return load_csv(spark, path, **csv_opts), "csv"
     if ftype == "txt":
         return spark.read.text(path), "txt"
     if ftype in ("parquet", "par"):
-        return spark.read.option("mergeSchema", ms).parquet(path), "parquet"
+        return (_read_inferred(spark, "parquet", path, mergeSchema=ms),
+                "parquet")
     if ftype == "orc":
-        return spark.read.option("mergeSchema", ms).orc(path), "orc"
+        return _read_inferred(spark, "orc", path, mergeSchema=ms), "orc"
     raise ValueError(f"cannot determine filetype for {path!r}; "
                      f"pass filetype= one of json/csv/txt/parquet/orc")
+
+
+def load_parquet_utc(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet read for timestamps compared against timezone-naive readers
+    (the DuckDB oracles): pins the session to UTC, a runtime-settable and
+    idempotent SQL conf, since a caller's own session may not carry this
+    package's defaults. TIMESTAMP(NANOS) columns fail inference unless
+    read as longs, so a failed read sets nanos-as-long and retries; the
+    retry infers under a new conf value (``_resolve``)."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        return _read_inferred(spark, "parquet", path)
+    except Exception:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return _read_inferred(spark, "parquet", path)
 
 
 def save(df: DataFrame, path: str, filetype: str = "parquet",

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
 from spark_sentiment_spark.plans.registry import track_staging_dir
+from spark_sentiment_spark.sources.io import load_parquet_utc
 
 #: The longest any streaming run here may take, in seconds. A run still
 #: going then is stopped and raises TimeoutError instead of hanging.
@@ -73,17 +74,9 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader)."""
     path = f"{sf_dir}/events.parquet"
     # The NTZ→TIMESTAMP normalization below is wall-clock-identical to the
-    # batch loader only when the session timezone is UTC; pin it here so a
-    # direct caller with a non-UTC session can't get epoch-shifted ts
-    # (mirrors plans.registry.load).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = spark.read.parquet(path)
-    except Exception:
-        # TIMESTAMP(NANOS) parquet needs the legacy nanos-as-long read path
-        # (mirrors plans.registry.load for driver-owned sessions).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        static = spark.read.parquet(path)
+    # batch loader only when the session timezone is UTC, which this read
+    # pins.
+    static = load_parquet_utc(spark, path)
     stream = (spark.readStream.schema(static.schema)
               .parquet(_stage_dir(path)))
     if isinstance(static.schema["ts"].dataType, LongType):
@@ -333,5 +326,5 @@ def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     static read; no timestamp normalization needed — the table carries
     no temporal columns)."""
     path = f"{sf_dir}/documents.parquet"
-    static = spark.read.parquet(path)
+    static = load_parquet_utc(spark, path)
     return spark.readStream.schema(static.schema).parquet(_stage_dir(path))

@@ -107,6 +107,47 @@ def test_sentiment140_label_detection(sentiment140_corpus):
     assert vals == {0.0, 4.0}
 
 
+@pytest.mark.parametrize("family", ["logistic", "naivebayes", "maxentropy"])
+def test_predicts_in_the_trained_label_space(sentiment140_corpus, family,
+                                             tmp_path):
+    """Every family predicts Sentiment140's own 0/4 polarity, and a
+    saved-then-loaded model predicts the same."""
+    from spark_sentiment_spark.operators.mllib_pipeline import (
+        accuracy, load_model, score_model, train)
+
+    t = train(sentiment140_corpus, "text", classifier=family, sweep=False)
+    out = score_model(t.test_df, t.model)
+    assert {r[0] for r in out.select("prediction").distinct().collect()} \
+        <= {0.0, 4.0}
+    assert t.precision >= 0.65
+    assert accuracy(out) >= 0.65
+    path = str(tmp_path / "model")
+    t.save(path)
+    back = score_model(sentiment140_corpus, load_model(path))
+    here = score_model(sentiment140_corpus, t.model)
+    assert back.select("id", "prediction").exceptAll(
+        here.select("id", "prediction")).count() == 0
+
+
+def test_analyze_mlib_predicts_the_trained_labels(spark, sentiment140_corpus,
+                                                  tmp_path):
+    from spark_sentiment_spark.analyze import analyze
+    from spark_sentiment_spark.operators.mllib_pipeline import train
+
+    model = str(tmp_path / "model")
+    train(sentiment140_corpus, "text", classifier="naivebayes",
+          sweep=False).save(model)
+    csv = str(tmp_path / "tweets")
+    sentiment140_corpus.coalesce(1).write.option("header", "true").csv(csv)
+    out = analyze(spark, csv, method="mlib", model_path=model,
+                  filetype="csv", column="text")
+    agree = out.agg(F.avg((F.col("computed") == F.col("polarity"))
+                          .cast("double"))).first()[0]
+    assert {r[0] for r in out.select("computed").distinct().collect()} \
+        <= {0.0, 4.0}
+    assert agree >= 0.65
+
+
 @pytest.mark.slow
 def test_train_all_full_sweep_selects_argmax(sentiment140_corpus):
     """M10/M11 end-to-end at reference semantics on the reference's input
