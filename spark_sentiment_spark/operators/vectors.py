@@ -231,20 +231,6 @@ ORDER BY qid, rn
 ANN_PQ_SQL = pq_sql()
 
 
-def pq_probe(spark, vecs, base: str, n_codes: int, rerank: int, topk: int):
-    """Phase-2 of the flat PQ index — the recurring per-batch cost,
-    callable on its own against pre-staged artifacts: ADC tables from
-    the PERSISTED codebook, integer ADC scan over the stored codes,
-    exact re-rank."""
-    cb = pq_read_codebook(spark, base, n_codes)
-    queries = vecs.where(F.col("vec_id") < 5) \
-        .select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")).collect()
-    probes = pq_adc_tables(spark, queries, cb, n_codes)
-
-    codes = spark.read.parquet(base + "/codes")
-    return pq_adc_topk(codes, probes, vecs, n_codes, rerank, topk)
-
-
 def pq_seed_codebooks(vecs):
     """Content-addressed seed fetch shared by every staged quantizer
     build: the PQ_K md5-smallest unit vectors (a 16-row bounded driver

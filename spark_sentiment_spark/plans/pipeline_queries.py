@@ -436,18 +436,8 @@ def dedup_incremental(spark, sf_dir):
     table on `h` (sources/bucketing.py), making the corpus side shuffle-free
     on every nightly batch.
 
-    Round-18 optimization (guide §2.4/§8): the corpus-index side and the
-    incoming-batch side slice the same hashed frame — left unpersisted
-    they were two independent corpus scans, each paying the md5 prefix
-    hash over the full text. The narrow (doc_id, hash, slice) frame is
-    persisted: one scan, one hash pass.
-
-    Round-19 adjudication (VERDICT r18 item 2 — the driver bench read
-    this persist as a +26% regression, the one persist never probed):
-    min-of-10 A/B on the r19 host, persist 0.645 min / 0.90 med vs
-    no-persist 0.735 min / 0.861 med — the persist WINS on the protocol
-    metric locally too (0.88x min), so the driver delta was host noise,
-    not the cache-fill barrier. Kept; ledger entry in OPTIMIZATION_r19.
+    The narrow (doc_id, hash, slice) frame is persisted because both
+    sides slice it: one corpus scan and one hash pass instead of two.
     """
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     hashed = track_persist(docs.select(
@@ -801,26 +791,16 @@ def _dedup_ranked(gate):
             .select("doc_id", "rn"))
 
 
-def _doc_grams(docs):
-    """The curation pass's 3-gram table (doc_id, g) — factored out so
-    `curate_corpus_staged` can persist exactly the gram stream the
-    inline `_contaminated` probe consumes."""
-    toks = F.split(F.col("text"), " ", -1)
-    return (docs.select("doc_id", toks.alias("__t"))
-            .where(F.size("__t") >= 3)
-            .select("doc_id", F.explode(F.expr(
-                "transform(sequence(0, size(__t) - 3),"
-                " i -> concat(__t[i], ' ', __t[i+1], ' ', __t[i+2]))"
-            )).alias("g")))
-
-
-def _contaminated(docs, grams=None):
+def _contaminated(docs):
     """Stage 4 of the curation pass: 3-gram explode → broadcast
-    benchmark-gram probe → distinct contaminated doc ids. Pass a
-    prebuilt `grams` frame (the staged artifact) to skip the corpus
-    explode; default rebuilds it inline from `docs`."""
-    if grams is None:
-        grams = _doc_grams(docs)
+    benchmark-gram probe → distinct contaminated doc ids."""
+    toks = F.split(F.col("text"), " ", -1)
+    grams = (docs.select("doc_id", toks.alias("__t"))
+             .where(F.size("__t") >= 3)
+             .select("doc_id", F.explode(F.expr(
+                 "transform(sequence(0, size(__t) - 3),"
+                 " i -> concat(__t[i], ' ', __t[i+1], ' ', __t[i+2]))"
+             )).alias("g")))
     bench = grams.where(F.col("doc_id") < 5).select("g").distinct()
     return (grams.where(F.col("doc_id") >= 5)
             .join(F.broadcast(bench), "g")
@@ -828,35 +808,22 @@ def _contaminated(docs, grams=None):
             .withColumn("is_cont", F.lit(True)))
 
 
-def _curation_verdicts(docs, gate, ranked=None, cont=None):
+def _curation_verdicts(docs, gate, ranked=None):
     """Stages 1+3+4 of the curation pass (benchmark exclusion, prefix
     keep-best dedup among gate survivors, 3-gram decontamination) over
     any gate frame (doc_id, text, q_keep, q_reason) — shared by
     `curate_corpus` (composite `quality_gate` rules) and
     `curate_corpus_gopher` (the published Gopher thresholds), so the
-    two passes differ ONLY in their gate stage. `curate_corpus_staged`
-    passes prebuilt `ranked`/`cont` frames assembled from its persisted
-    artifacts (its gate frame then carries no text column and `docs` is
-    unused); the defaults build both inline.
+    two passes differ ONLY in their gate stage. A prebuilt `ranked`
+    (doc_id, rn) frame replaces the inline dedup rank.
 
-    Round-18 optimization (guide §2.4/§4.4-adjacent): the inline dedup
-    rank is ONE window over the gate frame itself, not a separate
-    `_dedup_ranked` branch joined back on doc_id. The old two-branch
-    shape made Catalyst push the `q_keep` filter of the rank branch down
-    to a SECOND scan of `documents` as a filter over the raw feature
-    expressions — the entire gate feature tree (split/trim/transform
-    per rule) re-evaluated per row, with no subexpression elimination in
-    interpreted mode (captured in plans/r18/curate_corpus_gopher_before
-    .txt, operator (9)). Partitioning the window by (prefix_hash,
-    qualifies) instead of filtering gives every gate-surviving doc the
-    exact rank it had among survivors of its prefix group (row_number
-    within the qualifies=true slice is unaffected by the false slice),
-    while non-survivors' ranks are never consulted — the verdict CASE
-    decides those rows on q_keep before reaching the rank test. One
-    scan, one feature evaluation, one narrow window shuffle
-    (doc_id, flags, hash, length), no join-back."""
-    if cont is None:
-        cont = _contaminated(docs)
+    The inline dedup rank is one window over the gate frame partitioned
+    by (prefix_hash, qualifies), not a `_dedup_ranked` branch joined
+    back on doc_id: that branch made Catalyst re-evaluate the whole gate
+    feature tree on a second documents scan. Ranks within the
+    qualifies=true slice equal the ranks among survivors, and the
+    verdict CASE never consults a non-survivor's rank."""
+    cont = _contaminated(docs)
 
     if ranked is None:
         qual = F.col("q_keep") & (F.col("doc_id") >= 5)
@@ -1288,89 +1255,6 @@ def events_volume_anomaly(spark, sf_dir):
             .select("event_type", "hour_start", "n",
                     F.round(zraw, 4).alias("z"))
             .orderBy("event_type", "hour_start"))
-
-
-# --- Bloom-prefiltered incremental dedup ------------------------------------
-
-BLOOM_M = 1 << 16          # bits (power of two so pmod+mask agree)
-BLOOM_SEEDS = (11, 23, 37, 53, 71)
-
-
-def _bloom_positions(col):
-    return [F.pmod(F.xxhash64(col, F.lit(s)), F.lit(BLOOM_M))
-            for s in BLOOM_SEEDS]
-
-
-def bloom_build(keys_df, col: str) -> list[int]:
-    """Fold a DataFrame column into a bloom bitmap: k xxhash64 probes per
-    key → distinct set-bit positions (≤ m rows cross the driver, never the
-    keys themselves) → word array of m/64 signed longs."""
-    pos_rows = (keys_df.select(F.explode(F.array(
-        *_bloom_positions(F.col(col)))).alias("p"))
-        .distinct().collect())
-    words = [0] * (BLOOM_M >> 6)
-    for r in pos_rows:
-        words[r.p >> 6] |= 1 << (r.p & 63)
-    return [wd - (1 << 64) if wd >= (1 << 63) else wd for wd in words]
-
-
-def bloom_might_contain(col, words: list[int]):
-    """Native membership probe: conjunction of k unrolled shift-and-mask
-    bit tests against the broadcast bitmap literal. No false negatives."""
-    bitmap = F.lit(words)
-    might = F.lit(True)
-    for p in _bloom_positions(col):
-        word = F.element_at(bitmap, F.shiftright(p, 6).cast("int") + F.lit(1))
-        # the python shiftright wrapper only takes int bit counts — the SQL
-        # function itself accepts a column, so call it by name
-        shifted = F.call_function(
-            "shiftright", word, F.pmod(p, F.lit(64)).cast("int"))
-        might = might & (F.pmod(shifted, F.lit(2)) != F.lit(0))
-    return might
-
-
-@register("dedup_incremental_bloom", sql=INCREMENTAL_SQL,
-          tags=("dedup", "pipeline"))
-def dedup_incremental_bloom(spark, sf_dir):
-    """`dedup_incremental` with a bloom pre-filter on the corpus hash
-    index: incoming docs whose hash misses the bloom are *definitely* new
-    and bypass the anti-join entirely; only the might-match slice (true
-    dups + false positives) pays the shuffle. False negatives are
-    impossible, so the result — and the SQL oracle — is exactly
-    `dedup_incremental`'s.
-
-    The bloom is built natively (k xxhash64 probes → distinct bit
-    positions → driver fold into a word array, bounded by m/64 longs) and
-    probed natively (unrolled per-seed shift-and-mask conjunction; no
-    Python, no HOF lambdas). At this m=2^16 the bitmap literal is 8 KiB;
-    at 100 TB you size m to the corpus (1.2 GiB/10^9 keys at 1% fpp) and
-    shard the bloom by hash prefix once it outgrows a comfortable
-    broadcast — the bypass fraction is what keeps nightly ingest from
-    re-shuffling the whole corpus index."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # Round-18 optimization, same as dedup_incremental: persist the
-    # narrow hashed frame (2 corpus scans -> 1). `incoming` is also
-    # persisted — the bloom split consumes it twice (~might / might).
-    hashed = track_persist(docs.select(
-        "doc_id", _prefix_hash_col().alias("prefix_hash"),
-        (F.col("doc_id") % 5).alias("__m")))
-    corpus = (hashed.where(F.col("__m") != 4)
-              .select("prefix_hash").distinct())
-    w = Window.partitionBy("prefix_hash").orderBy("doc_id")
-    incoming = track_persist(
-        hashed.where(F.col("__m") == 4)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1))
-
-    might = bloom_might_contain(
-        F.col("prefix_hash"), bloom_build(corpus, "prefix_hash"))
-    definite_new = incoming.where(~might)
-    survivors = (incoming.where(might)
-                 .join(corpus, "prefix_hash", "left_anti"))
-    return (definite_new.unionByName(survivors)
-            .select("doc_id", "prefix_hash")
-            .orderBy("doc_id"))
-
 
 
 # --- Semantic dedup (SemDeDup-style cluster-scoped near-dup removal) --------
@@ -3154,80 +3038,6 @@ def io_orc_roundtrip(spark, sf_dir):
             .orderBy("source"))
 
 
-# --- Staged curation pass (the nightly production form) ----------------------
-
-
-@register("curate_corpus_staged", sql=CURATE_SQL,
-          tags=("pipeline", "quality", "dedup", "layout"))
-def curate_corpus_staged(spark, sf_dir):
-    """`curate_corpus` with its two corpus-derived intermediates staged
-    as parquet artifacts — the nightly production form of the pass. The
-    inline single-plan pass re-derives the gate features and the 3-gram
-    stream inside every consuming branch, which executes as FOUR scans
-    of the documents table (verdict gate, dedup-survivor gate, benchmark
-    grams, corpus grams); at 100 TB that is 4× the I/O of one pass.
-    Here the corpus is touched exactly TWICE, once per artifact build:
-
-      1. verdicts/ — per-doc (doc_id, q_keep, q_reason, prefix_hash,
-         n_chars): `_composite_gate` run ONCE plus the two keys the
-         keep-best dedup window ranks on, so dedup never needs text;
-      2. grams/ — the (doc_id, g) 3-gram stream `_doc_grams` builds,
-         exactly what the inline `_contaminated` probe explodes.
-
-    Verdict assembly then reads ONLY the artifacts (plan pinned to
-    contain zero documents-table scans in tests/test_round13_queries.py):
-    the keep-best window runs on (prefix_hash, n_chars) from verdicts/,
-    the decontamination probe joins grams/ against its own broadcast
-    benchmark slice, and the final first-failing-stage verdict is
-    `_curation_verdicts` — the SAME function the inline passes run,
-    fed the prebuilt frames. Nightly re-runs re-rank and re-probe the
-    artifacts without re-scanning the corpus, and newly ingested docs
-    append to both artifacts — the same append contract as the MinHash
-    band, IVF cell, and PQ code indexes.
-
-    Oracle: CURATE_SQL verbatim — the staging is a pure physical split
-    of the inline plan, so the manifest is byte-identical to
-    `curate_corpus`'s (equality pinned at two SFs)."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    v, g = _curate_stage(spark, docs)
-    return _curate_assemble(v, g)
-
-
-def _curate_stage(spark, docs):
-    """Phase-1 of the staged curation pass: the two artifact builds —
-    the only corpus scans — returning the artifacts read back with
-    explicit schemas (an empty corpus writes part-less directories that
-    schema inference cannot read back)."""
-    import tempfile
-
-    base = track_staging_dir(tempfile.mkdtemp(prefix="curate_stage_"))
-    verdicts_src = _composite_gate(docs).select(
-        "doc_id", "q_keep", "q_reason",
-        _prefix_hash_col().alias("prefix_hash"),
-        F.length("text").cast("bigint").alias("n_chars"))
-    verdicts_src.write.mode("overwrite").parquet(base + "/verdicts")
-    grams_src = _doc_grams(docs)
-    grams_src.write.mode("overwrite").parquet(base + "/grams")
-
-    v = spark.read.schema(verdicts_src.schema).parquet(base + "/verdicts")
-    g = spark.read.schema(grams_src.schema).parquet(base + "/grams")
-    return v, g
-
-
-def _curate_assemble(v, g):
-    """Phase-2 of the staged curation pass — the recurring nightly cost,
-    callable on its own against pre-staged artifacts: verdict assembly
-    from the artifacts only, no corpus access."""
-    w = (Window.partitionBy("prefix_hash")
-         .orderBy(F.desc("n_chars"), "doc_id"))
-    ranked = (v.where(F.col("q_keep") & (F.col("doc_id") >= 5))
-              .withColumn("rn", F.row_number().over(w))
-              .select("doc_id", "rn"))
-    cont = _contaminated(None, grams=g)
-    return _curation_verdicts(None, v.select("doc_id", "q_keep", "q_reason"),
-                              ranked=ranked, cont=cont)
-
-
 # --- The composed training-set build (curate → mix → pack → shuffle) --------
 
 PREP_BUDGET = 150  # mixture budget over the curated survivors: ~260 of 500
@@ -3314,7 +3124,7 @@ ORDER BY shard, pos
 
 @register("prepare_training_set", sql=PREP_SQL,
           tags=("pipeline", "quality", "dedup"))
-def prepare_training_set(spark, sf_dir, manifest=None):
+def prepare_training_set(spark, sf_dir):
     """The pipeline TAIL composed end-to-end — the one-manifest
     training-set build downstream of everything else in the catalog,
     mirroring how `curate_corpus` composed its four stages:
@@ -3338,23 +3148,15 @@ def prepare_training_set(spark, sf_dir, manifest=None):
     tests/test_round14_queries.py (selected ⊆ kept, shard equality vs
     `shuffle_shards`, per-source pick order vs `mixture_apply`).
 
-    ``manifest`` defaults to the inline curation plan; pass a prebuilt
-    (doc_id, keep, reason) frame — e.g. `_curate_assemble` over
-    `curate_corpus_staged`'s persisted artifacts — to build the
-    training set from staged verdicts without re-running curation
-    (identity pinned in tests/test_round14_queries.py).
-
     Scale: the curation stages keep their audited shapes (scan-speed
     gate, bounded-key windows, broadcast benchmark probe); the manifest
-    join is one linear doc_id-equi shuffle (at 100 TB the staged-
-    artifact path makes it an ids-only join against the text store);
-    the quota table is per-source bounded (broadcast); packing windows
-    partition on the bounded source key; the shard window on the
-    16-value nibble key. Nothing quadratic, no global ordering until
-    the final bounded output sort."""
+    join is one linear doc_id-equi shuffle; the quota table is
+    per-source bounded (broadcast); packing windows partition on the
+    bounded source key; the shard window on the 16-value nibble key.
+    Nothing quadratic, no global ordering until the final bounded output
+    sort."""
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    if manifest is None:
-        manifest = _curation_verdicts(docs, _composite_gate(docs))
+    manifest = _curation_verdicts(docs, _composite_gate(docs))
     # The survivor frame is PERSISTED, narrow (3 columns, no text):
     # every reference to `kept` would otherwise re-expand the whole
     # curation DAG — measured 15 documents scans unpersisted vs the

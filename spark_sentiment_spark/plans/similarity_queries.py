@@ -25,9 +25,7 @@ from spark_sentiment_spark.operators.vectors import (ANN_IVF_SQL,
                                                      ivfpq_stage_index, norm,
                                                      pq_adc_tables,
                                                      pq_adc_topk, pq_encoder,
-                                                     pq_probe,
                                                      pq_seed_codebooks,
-                                                     pq_stage_index,
                                                      row_count, unit_vector,
                                                      unit_vector_frame)
 from spark_sentiment_spark.plans.registry import (load, register,
@@ -162,81 +160,6 @@ def ann_ivf_topk(spark, sf_dir):
                        F.col("u").alias("qu"), "cell"))
 
     cand = (assigned.join(F.broadcast(qprobes), "cell")
-            .where(F.col("vec_id") != F.col("qid")))
-    cos = F.round(dot(F.col("qu"), F.col("u")), 6)
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cand.select("qid", "vec_id",
-                    F.col("label").cast("long").alias("label"),
-                    cos.alias("cos"))
-        .distinct()
-        .withColumn("rn", F.row_number().over(w).cast("long"))
-        .where(F.col("rn") <= IVF_TOPK)
-        .select("qid", "vec_id", "label", F.col("cos").alias("cosine"),
-                "rn")
-        .orderBy("qid", "rn")
-    )
-
-
-@register("ann_ivf_bucketed_probe", sql=ANN_IVF_SQL,
-          tags=("similarity", "layout", "pipeline"))
-def ann_ivf_bucketed_probe(spark, sf_dir):
-    """`ann_ivf_topk` routed through a PERSISTED vector index — the
-    MinHash-family production treatment (`dedup_minhash_bucketed_probe`)
-    applied to the embedding side, closing the one missing scale shape
-    in the similarity family: `ann_ivf_topk` rebuilds cell assignments
-    inside every query, but at 100 TB you build the IVF index ONCE and
-    probe it. Here the multi-assignment cell table (vec_id, label, u,
-    cell — rn<=2 home cells per vector) is written as a bucketed+sorted
-    parquet layout on `cell`, the query batch's probe cells (rn<=3) are
-    written bucketed the same way, and the candidate join is a
-    co-located SortMergeJoin with NO Exchange on the probe key (pinned
-    in tests/test_plan_shape.py — no `Exchange hashpartitioning(cell`
-    anywhere in the plan). Exact-cosine re-rank touches only the probed
-    candidates, exactly as in the inline form.
-
-    Exact oracle: the SAME SQL as `ann_ivf_topk` — content-addressed
-    seed centroids make cell assignment pure arithmetic, so the
-    persisted index holds byte-identical cells and the probe returns
-    the identical top-k; only the physical layout differs.
-
-    Scale: at 100 TB the cell index is written ONCE (one corpus-sized
-    shuffle, amortized across every future query batch); each query
-    batch writes only ITS probe rows bucketed the same way
-    (batch-sized), and the probe join reads co-located buckets —
-    corpus-side shuffle is ZERO per batch. Appending newly indexed
-    vectors bucketed on cell keeps the layout valid for the next batch,
-    the same append contract as the MinHash band index."""
-    import os
-    import tempfile
-
-    from spark_sentiment_spark.plans.registry import (track_staging_dir,
-                                                      track_temp_table)
-    from spark_sentiment_spark.sources.bucketing import save_bucketed
-
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = unit_vector_frame(emb, "u", "label")
-    cent = ivf_centroids(vecs)
-    scored = track_persist(ivf_ranked(vecs, cent))  # n_cells rows per vector
-
-    nb = 8
-    base = track_staging_dir(tempfile.mkdtemp(prefix="ivf_probe_"))
-    suffix = os.path.basename(base)
-    t_idx = track_temp_table(spark, f"ivf_cell_index_{suffix}")
-    t_bat = track_temp_table(spark, f"ivf_query_batch_{suffix}")
-    save_bucketed(scored.where(F.col("rn") <= IVF_ASSIGN)
-                  .select("cell", "vec_id", "label", "u")
-                  .repartition(nb, F.col("cell")),
-                  t_idx, ["cell"], nb, ["cell"], base + "/index")
-    save_bucketed(scored.where((F.col("vec_id") < 5)
-                               & (F.col("rn") <= IVF_PROBE))
-                  .select("cell", F.col("vec_id").alias("qid"),
-                          F.col("u").alias("qu"))
-                  .repartition(nb, F.col("cell")),
-                  t_bat, ["cell"], nb, ["cell"], base + "/batch")
-
-    cand = (spark.table(t_bat).hint("merge")
-            .join(spark.table(t_idx), "cell")
             .where(F.col("vec_id") != F.col("qid")))
     cos = F.round(dot(F.col("qu"), F.col("u")), 6)
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -562,60 +485,6 @@ def ann_pq_topk(spark, sf_dir, topk: int = 10, rerank: int = PQ_RERANK):
     return pq_adc_topk(encoded, probes, vecs, n_codes, rerank, topk)
 
 
-@register("ann_pq_persisted_probe", sql=ANN_PQ_SQL,
-          tags=("similarity", "layout", "pipeline"))
-def ann_pq_persisted_probe(spark, sf_dir, topk: int = 10,
-                           rerank: int = PQ_RERANK):
-    """`ann_pq_topk` routed through a PERSISTED quantized index — the
-    `ann_ivf_bucketed_probe` treatment applied to the PQ path, removing
-    the last inline-only asymmetry in the similarity family:
-    `ann_pq_topk` re-encodes the whole corpus inside every query, but at
-    100 TB you encode ONCE and ADC-probe the stored codes.
-
-    Index build (phase 1, written once): content-addressed codebooks
-    (the 16 md5-smallest vectors, replayable by any engine), the corpus
-    encoded to M 4-bit codes via the same Arrow-batched sequential-dim
-    argmin as the inline form, then TWO parquet artifacts staged — the
-    code table (vec_id, codes; 8 ints vs 64 floats = the 32× compression
-    that lets the store fit in RAM) and the 16-row codebook (so a probe
-    replays with no corpus access at all).
-
-    Probe (phase 2, the recurring per-batch cost): the batch's ADC
-    tables come from the PERSISTED codebook (16-row bounded read), the
-    integer ADC scan reads the code parquet — the probe plan contains
-    ZERO Python nodes (no re-encode; pinned in tests/test_plan_shape.py)
-    — and exact re-rank joins the broadcast candidate list back to the
-    embedding store. Unlike the IVF probe there is no bucketing: ADC
-    without a coarse quantizer is BY DESIGN a full linear scan of the
-    compressed codes (lookup tables, never the floats), so the persisted
-    artifact removes the re-encode, not a shuffle — there is no probe
-    key to co-locate on.
-
-    Exact oracle: the SAME SQL as `ann_pq_topk` — fixed-point integer
-    ADC plus content-addressed codebooks make the persisted codes
-    byte-identical to the inline encode, so only the physical phase
-    split differs.
-
-    Scale: the encode (the only Python and the only corpus-sized write)
-    is paid once and amortized across every future batch; each batch
-    then costs one codes-parquet scan (1/32nd the float bytes) + a
-    broadcast of queries×(M·K) integer tables + a rerank×queries exact
-    re-rank. Appending newly encoded vectors to the code parquet keeps
-    the artifact valid for the next batch — same append contract as the
-    MinHash band index and the IVF cell index."""
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = unit_vector_frame(emb, "e")
-
-    # ---- phase 1: build + persist the quantized index (ONCE) -----------
-    base, n_codes = pq_stage_index(spark, vecs)
-    if n_codes == 0:
-        return spark.createDataFrame(
-            [], "qid long, vec_id long, cosine double, rn long")
-
-    # ---- phase 2: per-batch probe of the stored index -------------------
-    return pq_probe(spark, vecs, base, n_codes, rerank, topk)
-
-
 # --- Composed IVF+PQ persisted index (the FAISS-IVFPQ production shape) -----
 
 # The compaction oracle: the probe result verbatim (compaction moves
@@ -642,10 +511,9 @@ def ann_ivfpq_persisted_probe(spark, sf_dir, topk: int = 10,
                               rerank: int = IVFPQ_RERANK):
     """The COMPOSED persisted vector index — per-cell PQ codes under the
     bucketed IVF cell layout, the FAISS-IVFPQ production shape (Jégou
-    et al., "Product Quantization for Nearest Neighbor Search", §V) and
-    the direct answer to `ann_pq_persisted_probe`'s documented full
-    linear ADC scan: a probe now reads ONLY the visited cells'
-    compressed codes instead of every vector's.
+    et al., "Product Quantization for Nearest Neighbor Search", §V): a
+    flat PQ index is a full linear ADC scan, and this probe reads ONLY
+    the visited cells' compressed codes instead of every vector's.
 
     Index build (phase 1, written once): one corpus pass assigns every
     vector to its IVF_ASSIGN=2 nearest coarse cells AND encodes it to M
@@ -663,13 +531,13 @@ def ann_ivfpq_persisted_probe(spark, sf_dir, topk: int = 10,
     composition: expected I/O is probe/K of the (already 32×-compressed)
     codes. Candidates join the probe-cell list, dedupe the
     multi-assignment overlap, ADC-score via the same `pq_adc_topk`
-    integer tables as the flat PQ probe, and exact-re-rank the top
+    integer tables as `ann_pq_topk`, and exact-re-rank the top
     ``rerank`` against the embedding store. Zero Python nodes in the
     probe plan (the Arrow encode lives in the build phase).
 
     Exact oracle: ANN_IVF_SQL's coarse CTE chain composed with
     pq_sql's fine chain — candidates restricted to probed cells before
-    ADC. rerank=50 (vs the flat probe's 200) keeps the ADC cut ACTIVE
+    ADC. rerank=50 (vs `ann_pq_topk`'s 200) keeps the ADC cut ACTIVE
     on the test fixtures (a probed-cell candidate set is ~6/16 of the
     corpus, so 200 would cover it entirely and reduce the query to pure
     IVF).

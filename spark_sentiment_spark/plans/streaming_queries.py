@@ -543,28 +543,27 @@ def streaming_minhash_probe(spark, sf_dir):
           tags=("streaming", "events", "cdc"))
 def streaming_scd2_merge(spark, sf_dir):
     """The STREAMING consumer of the nightly SCD2 merge — the
-    foreachBatch twin of `events_scd2_merge_delta`, completing the CDC
-    family's batch / incremental / streaming triad the same way the
-    minhash probe did for dedup: the existing dimension (built from the
-    pre-cutoff 70% of the corpus) is materialized to a versioned lake
-    path, the delta arrives as a file-source stream, and each
-    micro-batch applies `scd2_merge` against the CURRENT dimension
+    incremental form of `events_scd2_history`: the existing dimension
+    (built from the pre-cutoff 70% of the corpus) is materialized to a
+    versioned lake path, the delta arrives as a file-source stream, and
+    each micro-batch applies `scd2_merge` against the CURRENT dimension
     version and writes the merged dimension as the NEXT version —
     overwrite-per-version, so a replayed batch rewrites its own output
     instead of corrupting the chain (the write_exactly_once contract,
     applied to a full-snapshot dimension instead of an append sink).
     Oracle = the full rebuild (`SCD2_SQL` verbatim): over the finite
-    availableNow source the final version must equal rebuilding from
-    all events — the same equivalence `events_scd2_merge_delta` pins,
-    now through the streaming engine's trigger plumbing. The delta is
-    staged as THREE single-file segments in event-time order with
-    `maxFilesPerTrigger=1`, so availableNow delivers three ordered
-    micro-batches and batch N+1 genuinely reads the dimension version
-    batch N wrote — the version-chaining property is exercised, not
-    asserted by construction (tests/test_round10_queries.py pins the
-    version count). A multi-batch deployment requires exactly this
-    in-order arrival (per-key ordering is what a CDC log gives you;
-    the merge itself handles any order WITHIN a batch via its windows).
+    availableNow source the final version must equal rebuilding from all
+    events, through the streaming engine's trigger plumbing
+    (tests/test_events_semantics.py pins the same equivalence for a
+    direct `scd2_merge` call). The delta is staged as THREE single-file
+    segments in event-time order with `maxFilesPerTrigger=1`, so
+    availableNow delivers three ordered micro-batches and batch N+1
+    genuinely reads the dimension version batch N wrote — the
+    version-chaining property is exercised, not asserted by construction
+    (tests/test_round10_queries.py pins the version count). A
+    multi-batch deployment requires exactly this in-order arrival
+    (per-key ordering is what a CDC log gives you; the merge itself
+    handles any order WITHIN a batch via its windows).
 
     Scale: per batch, work is `scd2_merge`'s — delta-sized windows, a
     broadcast-sized open-row join, and the closed-dimension
@@ -708,26 +707,24 @@ def streaming_winnowing_probe(spark, sf_dir):
         "winnow").orderBy("doc_a", "doc_b")
 
 
-# --- Streaming IVF probe (the vector index triad's streaming leg) -----------
+# --- Streaming IVF probe (the vector index's streaming leg) -----------------
 
 
 @register("streaming_ivf_probe", sql=ANN_IVF_SQL,
           tags=("similarity", "streaming", "pipeline"))
 def streaming_ivf_probe(spark, sf_dir):
-    """Streaming consumer of the persisted IVF cell index — completes
-    the vector family's inline / persisted / streaming triad
-    (`ann_ivf_topk` → `ann_ivf_bucketed_probe` → this), the same arc
-    the MinHash and winnowing families walked: the corpus's
-    multi-assignment cell table is the static side, and QUERY vectors
-    arrive as a file stream staged as TWO files at one file per
-    trigger. Each micro-batch routes ITS queries to their probe cells
-    (routing is row-local given the broadcast centroids, so any batch
-    split is safe), joins the static index on the cell, exact-cosine
-    re-ranks per query, and appends its top-k to a batch_id-partitioned
-    sink (exactly-once by overwrite-per-batch; each qid lives in
-    exactly one batch, so no result spans batches and the union needs
-    no dedup — batch-boundary independence is pinned in
-    tests/test_round12_queries.py against the inline form).
+    """Streaming consumer of the persisted IVF cell index — the
+    streaming form of `ann_ivf_topk`: the corpus's multi-assignment cell
+    table is the static side, and QUERY vectors arrive as a file stream
+    staged as TWO files at one file per trigger. Each micro-batch routes
+    ITS queries to their probe cells (routing is row-local given the
+    broadcast centroids, so any batch split is safe), joins the static
+    index on the cell, exact-cosine re-ranks per query, and appends its
+    top-k to a batch_id-partitioned sink (exactly-once by
+    overwrite-per-batch; each qid lives in exactly one batch, so no
+    result spans batches and the union needs no dedup — batch-boundary
+    independence is pinned in tests/test_round12_queries.py against the
+    inline form).
 
     The per-qid top-k window needs batch semantics, so the probe runs
     under `foreachBatch` — the `streaming_winnowing_probe` /
@@ -737,10 +734,10 @@ def streaming_ivf_probe(spark, sf_dir):
     same top-k regardless of how the query batch was split.
 
     Scale: per batch, work is |batch queries| × probe cells × mean cell
-    occupancy; the index is table-sized state on disk (at 100 TB the
-    bucketed layout of `ann_ivf_bucketed_probe`), never streaming
-    state. Reference parity: witlox/spark_sentiment has no streaming
-    surface; extension per SURVEY §7.4."""
+    occupancy; the index is table-sized state on disk (at 100 TB a
+    layout bucketed on the cell), never streaming state. Reference
+    parity: witlox/spark_sentiment has no streaming surface; extension
+    per SURVEY §7.4."""
     emb = load(spark, sf_dir, "embeddings")
     vecs = unit_vector_frame(emb, "u", "label")
     cent = track_persist(ivf_centroids(vecs))
@@ -785,25 +782,23 @@ def streaming_ivf_probe(spark, sf_dir):
         "ivf").orderBy("qid", "rn")
 
 
-# --- Streaming PQ probe (the quantized index triad's streaming leg) ---------
+# --- Streaming PQ probe (the quantized index's streaming leg) ---------------
 
 
 @register("streaming_pq_probe", sql=ANN_PQ_SQL,
           tags=("similarity", "streaming", "pipeline"))
 def streaming_pq_probe(spark, sf_dir, topk: int = 10,
                        rerank: int = PQ_RERANK):
-    """Streaming consumer of the persisted PQ index — completes the
-    quantized index's inline / persisted / streaming triad
-    (`ann_pq_topk` → `ann_pq_persisted_probe` → this), matching the arc
-    the IVF, MinHash and winnowing families already walk. The corpus's
-    code table + codebook are staged ONCE by the shared builder
-    (`operators.vectors.pq_stage_index`); QUERY vectors
-    arrive as a file stream staged as TWO files at one file per
-    trigger. Each micro-batch builds ITS queries' fixed-point ADC
-    tables from the PERSISTED codebook (a bounded M×K read, no corpus
-    access), integer-scans the stored codes, and exact-re-ranks — the
-    scan + re-rank chain is `pq_adc_topk`, the SAME function the batch
-    probe runs, so streamed-equals-batch is structural, not incidental.
+    """Streaming consumer of the persisted PQ index — the streaming
+    form of `ann_pq_topk`. The corpus's code table + codebook are staged
+    ONCE by the shared builder (`operators.vectors.pq_stage_index`);
+    QUERY vectors arrive as a file stream staged as TWO files at one
+    file per trigger. Each micro-batch builds ITS queries' fixed-point
+    ADC tables from the PERSISTED codebook (a bounded M×K read, no
+    corpus access), integer-scans the stored codes, and exact-re-ranks —
+    the scan + re-rank chain is `pq_adc_topk`, the SAME function
+    `ann_pq_topk` runs, so streamed-equals-batch is structural, not
+    incidental.
 
     Each micro-batch appends its top-k to a batch_id-partitioned sink
     (exactly-once by overwrite-per-batch); ADC tables are per-query and
@@ -918,22 +913,19 @@ def streaming_ivfpq_probe(spark, sf_dir, topk: int = 10,
 @register("streaming_bm25_probe", sql=BM25_SQL,
           tags=("text", "search", "streaming", "pipeline"))
 def streaming_bm25_probe(spark, sf_dir):
-    """Streaming consumer of the persisted inverted index — completes
-    the retrieval family's inline / persisted / streaming triad
-    (`search_bm25` → `search_bm25_persisted_probe` → this), the arc the
-    IVF, PQ, MinHash and winnowing families already walk, and the most
-    production-literal of all of them: a search engine builds its index
-    once and serves a continuous QUERY stream against it. The postings
-    (term-sorted) + doclens artifacts are staged ONCE by the shared
-    builder (`operators.bm25.bm25_stage_index`); query terms
-    arrive as a file stream staged as TWO files (q1 | q2+q3) at one
-    file per trigger.
+    """Streaming consumer of the persisted inverted index — the
+    streaming form of `search_bm25`, and the most production-literal
+    streaming probe: a search engine builds its index once and serves a
+    continuous QUERY stream against it. The postings (term-sorted) +
+    doclens artifacts are staged ONCE by the shared builder
+    (`operators.bm25.bm25_stage_index`); query terms arrive as a file
+    stream staged as TWO files (q1 | q2+q3) at one file per trigger.
 
     Each micro-batch collects ITS (qid, term) rows — the tiny side —
     pushes the batch's `w IN (terms)` predicate into the postings scan
     (row-group seeks on the sorted layout), derives df from the matched
     slice and the (n_docs, avgdl) scalar from doclens, and scores via
-    `bm25_score_topk` — the SAME chain both batch forms run, so
+    `bm25_score_topk` — the SAME chain `search_bm25` runs, so
     streamed-equals-batch is structural. Top-k appends to a
     batch_id-partitioned sink (exactly-once by overwrite-per-batch);
     df/stats derive only from the static artifacts and each qid lives

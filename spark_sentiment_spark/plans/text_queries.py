@@ -9,11 +9,9 @@ from pyspark.sql.window import Window
 
 from spark_sentiment_spark.functions.lexicon import LEXICON_CSV
 from spark_sentiment_spark.functions.text import clean_text_col, clean_text_sql
-from spark_sentiment_spark.operators.bm25 import (BM25_SQL, BM25_TERMS,
-                                                  bm25_probe,
+from spark_sentiment_spark.operators.bm25 import (BM25_SQL,
                                                   bm25_query_frame,
                                                   bm25_score_topk,
-                                                  bm25_stage_index,
                                                   bm25_tokens)
 from spark_sentiment_spark.operators.quality import (C4_FEATS_SQL,
                                                      C4_KEEP_SQL,
@@ -579,7 +577,7 @@ ORDER BY doc_id
 def quality_zscore_by_lang(spark, sf_dir):
     """Per-language token-count z-score via plain grouped applyInPandas —
     the remaining cell of the pandas-API matrix (mapInPandas: multimodal;
-    cogrouped: as-of twin; withState: streaming). Within-group
+    cogrouped: operators.asof; withState: streaming). Within-group
     normalization is the canonical use: each language's docs meet as one
     Arrow batch, pandas normalizes against the group's own mean/std
     (sample std, ddof=1 — matches stddev_samp). A native window twin
@@ -1416,46 +1414,6 @@ def search_bm25(spark, sf_dir):
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
                    F.avg("dl").alias("avgdl"))
     return bm25_score_topk(bm25_query_frame(spark), tf, df, dl, stats)
-
-
-@register("search_bm25_persisted_probe", sql=BM25_SQL,
-          tags=("text", "search", "layout", "pipeline"))
-def search_bm25_persisted_probe(spark, sf_dir):
-    """`search_bm25` routed through a PERSISTED inverted index — the
-    staged-artifact treatment (ann_pq_persisted_probe,
-    curate_corpus_staged) applied to the retrieval family: the inline
-    ranking re-tokenizes the corpus and rebuilds postings inside every
-    query, but a search engine builds the index ONCE and serves every
-    query batch from it.
-
-    Index build (phase 1, two artifacts, the only corpus scans):
-    postings/ (doc_id, w, tf) written repartitioned + SORTED on the
-    term so parquet row-group min/max stats on `w` make the index
-    seekable, and doclens/ (doc_id, dl). df and the (n_docs, avgdl)
-    scalar are NOT materialized: df for exactly the probe's terms falls
-    out of the matched postings slice, and the scalar is one bounded
-    aggregate over doclens — so the index stays two append-friendly
-    tables.
-
-    Probe (phase 2, the recurring cost): an explicit `w IN (terms)`
-    predicate — pushed to the postings scan and row-group-prunable
-    thanks to the sorted layout (PushedFilters pinned in
-    tests/test_round13_queries.py) — selects only matching postings;
-    df comes from that slice (identical values: the slice holds every
-    posting of each matched term), and scoring + top-k is
-    `bm25_score_topk`, the SAME chain the inline form runs. The probe
-    plan touches the documents table zero times (pinned).
-
-    Oracle: BM25_SQL verbatim — the staging is a pure physical split,
-    equality to `search_bm25` pinned at two SFs.
-
-    Scale: the index build is one tokenize + two hash aggs, paid once
-    and append-extended per ingest batch; each query batch then reads
-    only the row groups containing its terms (posting-list seeks, the
-    inverted-index access pattern) plus one narrow doclens pass for
-    the scalar."""
-    postings, dl = bm25_stage_index(spark, sf_dir)
-    return bm25_probe(postings, dl, bm25_query_frame(spark), BM25_TERMS)
 
 
 # --- Gopher quality rules -----------------------------------------------------

@@ -31,6 +31,7 @@ import stat
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 #: Sniffing candidates in reference preference order (IO.scala:12-16).
 DELIMITER_CANDIDATES = (",", "|", ":", "\t", ";")
@@ -171,14 +172,35 @@ def detect_escape(spark: SparkSession, path: str, delim: str) -> str | None:
     return _escape_of(_first_two_lines(spark, path), delim)
 
 
+def _csv_sample(spark: SparkSession, path: str,
+                delim: str) -> list[list[str | None]]:
+    """The first 20 records of a headerless CSV read with inference off, in
+    one Spark job instead of two: a text scan takes the lines the reader
+    would not skip (it skips those Java's ``trim`` empties, hence the
+    character class), and Spark's own CSV tokenizer, set up from the
+    reader's options, splits them on the driver. As in the reader, an
+    empty field is null and every record is padded or cut to the width of
+    the first."""
+    lines = [r[0] for r in spark.read.text(path)
+             .where(F.col("value").rlike("[^\\x00-\\x20]"))
+             .limit(20).collect()]
+    if not lines:
+        return []
+    jvm = spark._jvm
+    opts = jvm.org.apache.spark.sql.catalyst.csv.CSVOptions(
+        jvm.org.apache.spark.api.python.PythonUtils.toScalaMap({"sep": delim}),
+        False, spark.conf.get("spark.sql.session.timeZone"))
+    parser = jvm.com.univocity.parsers.csv.CsvParser(opts.asParserSettings())
+    rows = [[c or None for c in parser.parseLine(line)] for line in lines]
+    width = len(rows[0])
+    return [(r + [None] * width)[:width] for r in rows]
+
+
 def has_header(spark: SparkSession, path: str, delim: str) -> bool:
-    """S4 with working semantics: load two sample frames, one headerless with
-    inference off and one from row 2 onward with inference on; row 1 is a
-    header iff any of its cells does not cast to the type inferred for the
-    data rows (and the file has at least 2 lines)."""
-    sample = (spark.read.option("sep", delim).option("header", "false")
-              .option("inferSchema", "false").csv(path).limit(20))
-    rows = sample.collect()
+    """S4 with working semantics: row 1 of the first 20 records is a header
+    iff any of its cells does not parse like the values under it (and the
+    file has at least 2 records)."""
+    rows = _csv_sample(spark, path, delim)
     if len(rows) < 2:
         return False
     header_cells = list(rows[0])

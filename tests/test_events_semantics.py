@@ -205,17 +205,37 @@ def test_sessionize_equal_ts_first_rows_agree_with_oracle(spark, tmp_path):
     assert ok, msg
 
 
-def test_scd2_merge_delta_boundary_semantics(spark, tmp_path):
-    """events_scd2_merge_delta on a corpus built around its 70%-of-span
-    cutoff (06:18 here): a delta observation equal to the open row's
-    state appends NOTHING (the run continues across the boundary), a
-    genuine delta change closes the open row at ITS ts and numbers
-    onward from the open version, a delta-only user starts at version 1,
-    and an untouched history user's open row passes through. Plus the
-    full-rebuild oracle equivalence on the same corpus."""
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
+def _scd2_merged_at_cutoff(ev):
+    """`scd2_merge` of the events at or after 70% of the corpus time span
+    into the `scd2_dim` built from the events before it, formatted like
+    `events_scd2_history` — the nightly incremental form of the build."""
+    from spark_sentiment_spark.operators.scd2 import (scd2_dim,
+                                                      scd2_formatted,
+                                                      scd2_merge)
 
-    all_queries()
+    lo, hi = ev.agg(F.min(F.unix_millis("ts")),
+                    F.max(F.unix_millis("ts"))).first()
+    cutoff = F.timestamp_millis(F.lit(lo + (hi - lo) * 7 // 10))
+    return scd2_formatted(scd2_merge(scd2_dim(ev.where(F.col("ts") < cutoff)),
+                                     ev.where(F.col("ts") >= cutoff)))
+
+
+def test_scd2_merge_delta_boundary_semantics(spark, tmp_path):
+    """`scd2_merge` on a corpus built around its 70%-of-span cutoff
+    (06:18 here): a delta observation equal to the open row's state
+    appends NOTHING (the run continues across the boundary), a genuine
+    delta change closes the open row at ITS ts and numbers onward from
+    the open version, a delta-only user starts at version 1, and an
+    untouched history user's open row passes through. Plus the
+    full-rebuild oracle (`SCD2_SQL`) equivalence on the same corpus and
+    on the sf fixture."""
+    import duckdb
+
+    from spark_sentiment_spark.operators.scd2 import SCD2_SQL
+    from spark_sentiment_spark.plans.registry import load
+    from tests.conftest import SF_DIR
+    from tests.oracle_utils import compare, duck_connection
+
     rows = [((1, 0, 0), 1, "A"), ((1, 2, 0), 1, "B"),   # u1 history
             ((1, 8, 0), 1, "B"),                        # u1 delta: run cont.
             ((1, 9, 0), 1, "C"),                        # u1 delta: change
@@ -223,14 +243,22 @@ def test_scd2_merge_delta_boundary_semantics(spark, tmp_path):
             ((1, 1, 0), 3, "A")]                        # u3 history-only
     _events(spark, rows).write.mode("overwrite").parquet(
         f"{tmp_path}/events.parquet")
+    merged = _scd2_merged_at_cutoff(
+        spark.read.parquet(f"{tmp_path}/events.parquet"))
     out = [(r.user_id, r.state, r.version, r.valid_to, r.is_current)
-           for r in REGISTRY["events_scd2_merge_delta"]
-           .fn(spark, str(tmp_path)).collect()]
+           for r in merged.collect()]
     assert out == [
         (1, "A", 1, "2024-01-01 02:00:00", 0),
         (1, "B", 2, "2024-01-01 09:00:00", 0),
         (1, "C", 3, None, 1),
         (2, "X", 1, None, 1),
         (3, "A", 1, None, 1)]
-    ok, msg = _oracle_ok(spark, tmp_path, "events_scd2_merge_delta")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/events.parquet/*.parquet')")
+    ok, msg = compare(merged, con, SCD2_SQL, "scd2_merge")
+    assert ok, msg
+
+    ok, msg = compare(_scd2_merged_at_cutoff(load(spark, SF_DIR, "events")),
+                      duck_connection(SF_DIR), SCD2_SQL, "scd2_merge")
     assert ok, msg

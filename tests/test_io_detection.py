@@ -44,6 +44,20 @@ def test_has_header(spark, tmpdata):
     assert has_header(spark, str(tmpdata / "nohead.csv"), ",") is False
 
 
+def test_has_header_runs_one_job(spark, tmpdata):
+    """The 20-record sample is one text scan; Spark's CSV tokenizer splits
+    it on the driver, so no second job counts the columns."""
+    from spark_sentiment_spark.sources.io import has_header
+
+    sc = spark.sparkContext
+    sc.setJobGroup("has_header_jobs", "has_header")
+    try:
+        assert has_header(spark, str(tmpdata / "comma.csv"), ",") is True
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("has_header_jobs")) == 1
+
+
 def test_detect_escape(spark, tmpdata):
     from spark_sentiment_spark.sources.io import detect_escape
 

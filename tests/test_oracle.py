@@ -137,6 +137,25 @@ def test_doc_counters_match_registry():
         f"SURVEY.md §7.4 note != {total}/{total - rows_only}")
 
 
+#: Queries that share an oracle on purpose: one round trip through two
+#: file formats.
+SHARED_ORACLE_OK = [{"io_json_roundtrip", "io_orc_roundtrip"}]
+
+
+def test_one_batch_query_per_oracle():
+    """No two batch queries answer the same oracle SQL. A second plan for
+    one answer belongs inside the query (a strategy it picks) or in a test
+    (a differential check), not in the catalog. Streaming twins are exempt:
+    each is the only check of its source and sink path."""
+    groups = {}
+    for name, q in REGISTRY.items():
+        if q.sql is not None and "streaming" not in q.tags:
+            groups.setdefault(" ".join(q.sql.split()), set()).add(name)
+    shared = sorted(sorted(g) for g in groups.values()
+                    if len(g) > 1 and g not in SHARED_ORACLE_OK)
+    assert not shared, f"batch queries share an oracle: {shared}"
+
+
 def test_money_sites_match_audited_snapshot():
     """The round(sum(...)) oracle sites equal the snapshot that the
     boundary-distance audit last passed on: a new site or a changed idiom

@@ -197,14 +197,6 @@ def test_hybrid_rrf_broadcasts_queries_and_caches_index(spark):
     assert plan.count("InMemoryTableScan") >= 3   # sizes + qside + corpus
 
 
-def test_bloom_dedup_probe_is_native(spark):
-    """The bloom probe compiles to shift/mask expressions — no Python, no
-    extra corpus scan beyond the two branch reads."""
-    plan = _plan(spark, "dedup_incremental_bloom")
-    assert "Python" not in plan
-    assert "shiftright" in plan
-
-
 def test_corpus_stats_queries_native_no_smj(spark):
     """Round-4 corpus-stats family: fully JVM-side, no sort-merge joins
     (every join side here is genuinely bounded — vocab/label-sized count
@@ -477,58 +469,6 @@ def test_minhash_bucketed_probe_no_bkey_shuffle(spark):
     assert "Exchange hashpartitioning(bkey" not in plan
 
 
-def test_ivf_bucketed_probe_no_cell_shuffle(spark):
-    """ann_ivf_bucketed_probe: the persisted IVF cell index and the query
-    batch's probe rows are same-bucketed on `cell`, so the candidate
-    join is a co-located SortMergeJoin with NO hash Exchange on the
-    probe key — the corpus-side index is read in place, which is the
-    whole claim of persisting the vector index. The re-rank
-    distinct/window may shuffle on (qid, vec_id); the cell key must
-    not."""
-    from spark_sentiment_spark.plans.registry import release_caches
-
-    plan = _plan(spark, "ann_ivf_bucketed_probe")
-    release_caches()
-    assert "SortMergeJoin" in plan
-    assert plan.count("Bucketed: true") >= 2
-    assert "Exchange hashpartitioning(cell" not in plan
-
-
-def test_pq_persisted_probe_no_python_no_reencode(spark):
-    """ann_pq_persisted_probe: after the index build writes the code +
-    codebook parquet, the returned PROBE plan must contain zero Python
-    nodes — the Arrow encode lives entirely in the build phase, so the
-    recurring per-batch cost never re-encodes the corpus. The ADC scan
-    reads the staged code parquet (not the embedding floats), the query
-    batch is the broadcast side of the cross probe, and both top-k
-    windows stay inside WindowGroupLimit."""
-    from spark_sentiment_spark.plans.registry import release_caches
-
-    plan = _plan(spark, "ann_pq_persisted_probe")
-    release_caches()
-    assert "Python" not in plan            # no re-encode in the probe
-    assert "pq_index_" in plan             # ADC scans the persisted codes
-    # Round-19 (batch 7): the unit-vector frame is persisted at the entry
-    # point, so the probe's query side and exact re-rank read the CACHE —
-    # the embedding floats are scanned at fill time (build phase), never
-    # per probe. The dump therefore shows the code table's FileScan plus
-    # the cache's stored embeddings subtree; the executed probe-side
-    # float scan count is ZERO (every embeddings FileScan ref sits under
-    # an InMemoryRelation).
-    assert "InMemoryTableScan" in plan
-    # the code table (ADC) is still exactly one direct file scan
-    assert sum(1 for seg in plan.split("FileScan parquet")[1:]
-               if "pq_index_" in seg[:300]) == 1
-    # both embedding FileScan refs are the ONE cache's fill subtree,
-    # printed twice by the AQE dump (== Final Plan == / == Initial Plan
-    # ==); a third ref would mean a per-probe float scan leaked back in
-    assert sum(1 for seg in plan.split("FileScan parquet")[1:]
-               if "embeddings" in seg[:300]) == 2
-    assert plan.count("InMemoryRelation") == 1
-    assert "BroadcastNestedLoopJoin" in plan   # batch broadcast, corpus streams
-    assert plan.count("WindowGroupLimit") >= 2  # rerank + topk both limited
-
-
 def test_sample_dsir_topk_never_global_sorts(spark):
     """sample_dsir's corpus-wide Gumbel-top-k must stay inside
     TakeOrderedAndProject (per-partition heaps, k rows to the driver
@@ -560,56 +500,6 @@ def test_partitioned_prune_filter_in_partition_filters(spark):
     assert "DataFilters: []" in scan
     pf = scan.split("PartitionFilters: [", 1)[1]
     assert "2024-01-05" in pf and "2024-01-12" in pf
-
-
-def test_rfm_distributed_no_single_partition_window(spark):
-    """events_rfm_distributed exists to kill the single-partition ntile
-    sort: every Window in its plan must partition on the materialized
-    range-partition id (__pid) — the ntile twin's giveaway shape is a
-    Window with an EMPTY partition spec, which drags all users onto one
-    task. The only SinglePartition exchanges allowed are the 1-row
-    corpus-horizon scalar's broadcast feed (IdentityBroadcastMode), and
-    the three persisted range-partitioned frames must actually serve
-    the plan (InMemoryTableScan), or the lineage would re-sample range
-    boundaries between the count pass and the rank pass."""
-    from spark_sentiment_spark.plans.registry import release_caches
-
-    plan = _plan(spark, "events_rfm_distributed")
-    release_caches()
-    windows = [l for l in plan.splitlines() if "Window [" in l]
-    assert windows, "expected per-partition row_number windows"
-    for line in windows:
-        assert "__pid" in line, line
-    assert plan.count("InMemoryTableScan") >= 3
-    # every SinglePartition exchange is the 1-row horizon scalar: it must
-    # sit INSIDE an IdentityBroadcastMode broadcast subtree. Checked by
-    # walking the tree-art indentation up to the exchange's ancestors —
-    # a plan-wide substring test was vacuous (any broadcast anywhere
-    # satisfied it), letting a rogue global-window exchange slip through.
-    lines = plan.splitlines()
-
-    def _indent(s):
-        # depth = first char past the tree art (spaces, ':', '+', '-').
-        # NOT "first alphabetic char": whole-stage-codegen nodes print a
-        # '*(N) ' prefix before the node name, which would rank a
-        # codegen'd parent DEEPER than its plain child and break the
-        # ancestor walk.
-        m = re.search(r"[^ :+\-]", s)
-        return m.start() if m else len(s)
-
-    for i, line in enumerate(lines):
-        if "Exchange SinglePartition" not in line:
-            continue
-        cur = _indent(line)
-        in_broadcast = False
-        for j in range(i - 1, -1, -1):
-            if _indent(lines[j]) < cur:   # next ancestor up the tree
-                cur = _indent(lines[j])
-                if "BroadcastExchange IdentityBroadcastMode" in lines[j]:
-                    in_broadcast = True
-                    break
-        assert in_broadcast, f"single-partition exchange outside any " \
-                             f"scalar broadcast subtree: {line.strip()}"
 
 
 def test_winnowing_single_doc_shuffle(spark):

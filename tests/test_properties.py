@@ -155,34 +155,6 @@ def test_split_by_hash_is_stable_and_partition(spark, ids):
         assert out[i] == expect
 
 
-def test_bloom_membership_no_false_negatives_and_bypasses(spark):
-    """The bloom probe must admit every real member (no false negatives —
-    the correctness contract that lets misses bypass the anti-join), and
-    at fixture scale the miss side must be non-empty (the optimization
-    actually fires) with a low false-positive rate on non-members."""
-    from spark_sentiment_spark.plans.pipeline_queries import (
-        bloom_build, bloom_might_contain)
-    from tests.conftest import SF_DIR
-
-    docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .where(F.col("text").isNotNull())
-            .select(F.md5("text").alias("h"), (F.col("doc_id") % 5)
-                    .alias("m")))
-    members = docs.where(F.col("m") != 4).select("h").distinct()
-    words = bloom_build(members, "h")
-    probe = bloom_might_contain(F.col("h"), words)
-
-    n_members = members.count()
-    hits = members.where(probe).count()
-    assert hits == n_members, "bloom dropped a real member (false negative)"
-
-    non = (docs.select("h").distinct()
-           .join(members, "h", "left_anti"))
-    n_non, fp = non.count(), non.where(probe).count()
-    assert n_non > 0
-    assert fp / n_non <= 0.05, f"bloom FP rate {fp}/{n_non}"
-
-
 def test_embedding_pca_matches_numpy(spark):
     """The distributed Gram accumulation + eigensolve must reproduce a
     direct numpy PCA of the same vectors to float precision."""

@@ -1,15 +1,10 @@
-"""Round-10 additions: the distributed-ntile RFM twin, small-file
-compaction, and the streaming SCD2 merge consumer. Each query also has
-a DuckDB oracle (driver-routed); these tests pin the properties the
-oracle can't see — in-Spark differential equality against the
-single-partition twin (tie-heavy constructed corpora included), actual
-part-file counts, and stream==batch dimension equality."""
+"""Round-10 additions: small-file compaction and the streaming SCD2
+merge consumer. Each query also has a DuckDB oracle (driver-routed);
+these tests pin the properties the oracle can't see — actual part-file
+counts and stream==batch dimension equality."""
 
 import os
-import shutil
-import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -17,75 +12,6 @@ from tests.conftest import SF_DIR
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
-
-
-RFM_COLS = ["user_id", "r_days", "f_events", "m_e4",
-            "r_score", "f_score", "m_score"]
-
-
-def test_rfm_distributed_equals_ntile_twin_on_fixture(spark):
-    from spark_sentiment_spark.plans.events_queries import (
-        events_rfm_distributed, events_rfm_scores)
-
-    a = _rows(events_rfm_scores(spark, SF_DIR), RFM_COLS)
-    b = _rows(events_rfm_distributed(spark, SF_DIR), RFM_COLS)
-    assert a == b
-
-
-def test_rfm_distributed_equals_ntile_twin_on_tie_corpus(spark):
-    """Adversarial ties: every axis value collides across many users
-    (identical day, identical event counts, identical value mass), so
-    quintile membership is decided ENTIRELY by the user_id tiebreak —
-    the case where naive percentile-cutpoint scoring diverges and the
-    rank-recovery form must still match ntile exactly. 103 users keeps
-    n % 5 != 0 so the unequal-bucket-size closed form is exercised."""
-    from spark_sentiment_spark.plans.events_queries import (
-        events_rfm_distributed, events_rfm_scores)
-
-    tmp = tempfile.mkdtemp(prefix="rfm_ties_")
-    try:
-        rows = []
-        for u in range(103):
-            for i in range(3):  # identical f_events and m_e4 for all users
-                rows.append((u * 3 + i, u, "click",
-                             f"2024-01-01 12:{i:02d}:00", 1.5))
-        (spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string,"
-                  " ts_s string, value double")
-         .select("event_id", "user_id", "event_type",
-                 F.to_timestamp("ts_s").alias("ts"), "value")
-         .write.mode("overwrite").parquet(f"{tmp}/events.parquet"))
-        a = _rows(events_rfm_scores(spark, tmp), RFM_COLS)
-        b = _rows(events_rfm_distributed(spark, tmp), RFM_COLS)
-        assert a == b
-        # ties split across buckets: all five quintiles occupied per axis
-        assert {r[4] for r in b} == {1, 2, 3, 4, 5}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.mark.parametrize("n_users", [1, 4, 7])
-def test_rfm_distributed_small_n(spark, n_users):
-    """n < 5 and n % 5 != 0 exercise the q=0 and ragged-bucket branches
-    of the closed-form ntile recovery."""
-    from spark_sentiment_spark.plans.events_queries import (
-        events_rfm_distributed, events_rfm_scores)
-
-    tmp = tempfile.mkdtemp(prefix="rfm_small_")
-    try:
-        rows = [(u, u, "buy", f"2024-01-{u + 1:02d} 00:00:00", float(u))
-                for u in range(n_users)]
-        (spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string,"
-                  " ts_s string, value double")
-         .select("event_id", "user_id", "event_type",
-                 F.to_timestamp("ts_s").alias("ts"), "value")
-         .write.mode("overwrite").parquet(f"{tmp}/events.parquet"))
-        a = _rows(events_rfm_scores(spark, tmp), RFM_COLS)
-        b = _rows(events_rfm_distributed(spark, tmp), RFM_COLS)
-        assert a == b
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_compact_small_files_counts_and_content(spark):
@@ -235,43 +161,6 @@ def test_winnowing_pairs_invariants(spark):
         union = r["n_fp_a"] + r["n_fp_b"] - r["n_shared"]
         assert r["overlap_ppm"] == r["n_shared"] * 1_000_000 // union
         assert 0 < r["overlap_ppm"] <= 1_000_000
-
-
-@pytest.mark.parametrize("seed", [11, 23, 47])
-def test_rfm_distributed_seeded_fuzz(spark, seed):
-    """Seeded random corpora with heavy duplicate mass on every axis
-    (few distinct days/counts/values over many users) — broad-spectrum
-    insurance that the rank-recovery closed form equals ntile beyond
-    the hand-constructed shapes."""
-    import numpy as np
-
-    from spark_sentiment_spark.plans.events_queries import (
-        events_rfm_distributed, events_rfm_scores)
-
-    rng = np.random.default_rng(seed)
-    n_users = int(rng.integers(20, 200))
-    rows = []
-    eid = 0
-    for u in range(n_users):
-        for _ in range(int(rng.integers(1, 4))):
-            day = int(rng.integers(1, 6))            # ~5 distinct days
-            val = float(rng.integers(1, 4)) / 2.0    # ~3 distinct values
-            rows.append((eid, u, "e",
-                         f"2024-01-{day:02d} 08:00:00", val))
-            eid += 1
-    tmp = tempfile.mkdtemp(prefix=f"rfm_fuzz_{seed}_")
-    try:
-        (spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string,"
-                  " ts_s string, value double")
-         .select("event_id", "user_id", "event_type",
-                 F.to_timestamp("ts_s").alias("ts"), "value")
-         .write.mode("overwrite").parquet(f"{tmp}/events.parquet"))
-        a = _rows(events_rfm_scores(spark, tmp), RFM_COLS)
-        b = _rows(events_rfm_distributed(spark, tmp), RFM_COLS)
-        assert a == b
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_streaming_scd2_intermediate_versions_equal_rebuilds(spark):

@@ -1,52 +1,25 @@
-"""Round-13 additions. `ann_pq_persisted_probe` has an exact DuckDB
-oracle (driver-routed); these tests pin what the driver row can't see:
-byte-equality to the INLINE form (the phase split must be a pure
-physical refactor) and the persisted artifacts themselves (codes +
-codebook parquet exist, codes carry the 32x-compressed schema)."""
+"""Round-13 additions: the persisted PQ and BM25 indexes the streaming
+probes serve from. These tests pin what an oracle row can't see: the
+persisted artifacts themselves (codes + codebook parquet exist, codes
+carry the 32x-compressed schema), the probe's pruning, and byte-equality
+of each probe to its INLINE query."""
 
 import glob
 
 from tests.conftest import SF_DIR
 
 
-def test_pq_persisted_probe_matches_oracle_and_inline(spark):
-    """The persisted-index probe must return EXACTLY the inline
-    `ann_pq_topk` result (same content-addressed codebooks, same
-    fixed-point ADC, only the physical phase split differs) and match
-    the shared DuckDB oracle cross-engine."""
-    from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                      release_caches)
-    from tests.oracle_utils import compare, duck_connection
-
-    all_queries()
-    q = REGISTRY["ann_pq_persisted_probe"]
-    persisted = q.fn(spark, SF_DIR)
-    inline = REGISTRY["ann_pq_topk"].fn(spark, SF_DIR)
-    rows_p = [tuple(r) for r in persisted.collect()]
-    rows_i = [tuple(r) for r in inline.collect()]
-    release_caches()
-    assert rows_p == rows_i
-
-    con = duck_connection(SF_DIR)
-    ok, msg = compare(q.fn(spark, SF_DIR), con, q.sql,
-                      "ann_pq_persisted_probe")
-    release_caches()
-    assert ok, msg
-
-
 def test_pq_index_artifacts_are_staged(spark):
     """The build phase must leave BOTH artifacts on disk — the code
     table (vec_id + M small-int codes, the 32x compression) and the
     M x K codebook (so a probe replays with no corpus access)."""
-    from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                      release_caches)
-    from spark_sentiment_spark.operators.vectors import PQ_K, PQ_M
+    from spark_sentiment_spark.operators.vectors import (PQ_K, PQ_M,
+                                                         pq_stage_index,
+                                                         unit_vector_frame)
+    from spark_sentiment_spark.plans.registry import load, release_caches
 
-    all_queries()
-    df = REGISTRY["ann_pq_persisted_probe"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    base = next(seg for seg in plan.split("file:")[1:]
-                if "pq_index_" in seg).split("/codes", 1)[0]
+    vecs = unit_vector_frame(load(spark, SF_DIR, "embeddings"), "e")
+    base, _ = pq_stage_index(spark, vecs)
     codes = spark.read.parquet(base + "/codes")
     assert [f.name for f in codes.schema] == ["vec_id", "codes"]
     n = codes.count()
@@ -63,13 +36,13 @@ def test_pq_index_artifacts_are_staged(spark):
 
 
 def test_streaming_pq_probe_two_batches_equals_inline(spark):
-    """The streaming leg of the quantized index triad must (a) actually
+    """The streaming leg of the quantized index must (a) actually
     run as TWO micro-batches (one staged query file per trigger) and
     (b) produce exactly the inline `ann_pq_topk` result — batch
     boundaries cannot matter because ADC tables are per-query, the code
     table is static, and each qid lives in exactly one batch. The probe
-    chain is `pq_adc_topk` — the same function the persisted batch
-    probe runs — so this pins the STAGING plumbing, not a re-derivation
+    chain is `pq_adc_topk` — the same function `ann_pq_topk` runs — so
+    this pins the STAGING plumbing, not a re-derivation
     of the math."""
     from spark_sentiment_spark.plans import registry
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
@@ -93,57 +66,29 @@ def test_streaming_pq_probe_two_batches_equals_inline(spark):
     assert streamed, "fixture produced no top-k rows"
 
 
-def test_curate_corpus_staged_matches_inline_and_never_rescans(spark):
-    """The staged curation pass must (a) emit the inline pass's manifest
-    byte-identically (the staging is a pure physical split — same gate,
-    same window keys, same gram stream, same `_curation_verdicts`
-    assembly), (b) assemble its verdict from the persisted artifacts
-    with ZERO documents-table scans in the executed plan (the 4-scan →
-    2-scan I/O claim), and (c) stage BOTH artifacts."""
-    from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                      release_caches)
-    from tests.oracle_utils import compare, duck_connection
-
-    all_queries()
-    q = REGISTRY["curate_corpus_staged"]
-    df = q.fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "documents.parquet" not in plan, "assembly re-scanned the corpus"
-    base = next(seg for seg in plan.split("file:")[1:]
-                if "curate_stage_" in seg and "/verdicts" in seg
-                ).split("/verdicts", 1)[0]
-    verdicts = spark.read.parquet(base + "/verdicts")
-    assert [f.name for f in verdicts.schema] == [
-        "doc_id", "q_keep", "q_reason", "prefix_hash", "n_chars"]
-    assert glob.glob(base + "/grams/part-*")
-
-    staged = [tuple(r) for r in df.collect()]
-    inline = [tuple(r) for r in REGISTRY["curate_corpus"].fn(spark, SF_DIR)
-              .collect()]
-    assert staged == inline and staged
-
-    ok, msg = compare(q.fn(spark, SF_DIR), duck_connection(SF_DIR), q.sql,
-                      "curate_corpus_staged")
-    release_caches()
-    assert ok, msg
-    # track_staging_dir cleanup must reclaim the artifacts (no leaks)
-    assert not glob.glob(base + "/verdicts/part-*")
-
-
 def test_bm25_persisted_probe_matches_inline_and_prunes(spark):
-    """The persisted inverted index must (a) return EXACTLY the inline
-    `search_bm25` ranking (scoring chain shared via `bm25_score_topk`,
-    so this pins the index staging, not a re-derivation), (b) assemble
-    the probe from the artifacts with ZERO documents-table scans, and
-    (c) push the term IN-filter into the postings scan — the row-group
-    seek the sorted layout exists for."""
+    """A probe of the persisted inverted index (`bm25_stage_index` +
+    `bm25_probe`, what `streaming_bm25_probe` runs per batch) must (a)
+    return EXACTLY the inline `search_bm25` ranking (scoring chain
+    shared via `bm25_score_topk`, so this pins the index staging, not a
+    re-derivation), (b) assemble the probe from the artifacts with ZERO
+    documents-table scans, and (c) push the term IN-filter into the
+    postings scan — the row-group seek the sorted layout exists for."""
+    from spark_sentiment_spark.operators.bm25 import (BM25_SQL, BM25_TERMS,
+                                                      bm25_probe,
+                                                      bm25_query_frame,
+                                                      bm25_stage_index)
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       release_caches)
     from tests.oracle_utils import compare, duck_connection
 
     all_queries()
-    q = REGISTRY["search_bm25_persisted_probe"]
-    df = q.fn(spark, SF_DIR)
+
+    def probe_df():
+        postings, dl = bm25_stage_index(spark, SF_DIR)
+        return bm25_probe(postings, dl, bm25_query_frame(spark), BM25_TERMS)
+
+    df = probe_df()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "documents.parquet" not in plan, "probe re-scanned the corpus"
     postings_scans = [l for l in plan.splitlines()
@@ -157,8 +102,8 @@ def test_bm25_persisted_probe_matches_inline_and_prunes(spark):
               .collect()]
     assert probe == inline and probe
 
-    ok, msg = compare(q.fn(spark, SF_DIR), duck_connection(SF_DIR), q.sql,
-                      "search_bm25_persisted_probe")
+    ok, msg = compare(probe_df(), duck_connection(SF_DIR), BM25_SQL,
+                      "bm25_probe")
     release_caches()
     assert ok, msg
 
@@ -169,8 +114,8 @@ def test_streaming_bm25_probe_two_batches_equals_inline(spark):
     produce exactly the inline `search_bm25` ranking — batch boundaries
     cannot matter because df/stats derive only from the static
     artifacts and each qid lives in exactly one batch. The per-batch
-    scoring is `bm25_score_topk` — the same chain both batch forms
-    run — so this pins the staging plumbing, not a re-derivation."""
+    scoring is `bm25_score_topk` — the same chain `search_bm25` runs —
+    so this pins the staging plumbing, not a re-derivation."""
     from spark_sentiment_spark.plans import registry
     from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
                                                       release_caches)

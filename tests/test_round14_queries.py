@@ -108,31 +108,6 @@ def test_prepare_training_set_stage_consistency(spark):
                               key=lambda d: mix_rank[(source, d)]), source
 
 
-def test_prepare_training_set_from_staged_manifest(spark):
-    """Feeding the composed build a manifest assembled from
-    `curate_corpus_staged`'s persisted artifacts must yield the
-    IDENTICAL training set — the staged path is a drop-in for the
-    inline curation stage because `_curation_verdicts` is shared."""
-    from pyspark.sql import functions as F
-
-    from spark_sentiment_spark.plans.pipeline_queries import (
-        _curate_assemble, _curate_stage, prepare_training_set)
-    from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                      load, release_caches)
-
-    all_queries()
-    inline = [tuple(r) for r in
-              REGISTRY["prepare_training_set"].fn(spark, SF_DIR).collect()]
-    docs = load(spark, SF_DIR, "documents").where(F.col("text").isNotNull())
-    v, g = _curate_stage(spark, docs)
-    staged = [tuple(r) for r in
-              prepare_training_set(spark, SF_DIR,
-                                   manifest=_curate_assemble(v, g))
-              .collect()]
-    release_caches()
-    assert staged == inline and inline
-
-
 def test_streaming_ivfpq_probe_two_batches_equals_batch_form(spark):
     """The composed index's streaming leg must (a) actually run as TWO
     micro-batches (one staged query file per trigger) and (b) produce
