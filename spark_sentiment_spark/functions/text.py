@@ -64,6 +64,12 @@ def ws_tokens() -> Column:
     return F.split(F.trim(F.col("text")), r"\s+")
 
 
+def has_text() -> Column:
+    """``text`` is present and not blank: the SQL twins' ``text IS NOT
+    NULL AND trim(text) <> ''``."""
+    return F.col("text").isNotNull() & (F.trim("text") != "")
+
+
 def token_bigrams(tokens: str) -> Column:
     """Adjacent pairs of the token array column ``tokens`` as an array of
     struct<w1, w2> (empty for fewer than two tokens; explode for rows)."""

@@ -1,6 +1,12 @@
-"""DuckDB oracles of the event-window aggregations that run both as
-batch queries over ``events`` and under Structured Streaming: over a finite
-source the two forms return the same rows, so they share one oracle."""
+"""Event-window aggregations that run both as batch queries over
+``events`` and under Structured Streaming: over a finite source the two
+forms return the same rows, so they share one oracle and, where the plan
+is the same, one stage."""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 # Tumbling 1h windows per event_type.
 TUMBLE_SQL = """
@@ -30,6 +36,19 @@ JOIN events e ON e.ts >= g.w_start AND e.ts < g.w_start + INTERVAL 1 HOUR
 GROUP BY g.w_start
 ORDER BY window_start
 """
+
+
+def sliding_hour_counts(events: DataFrame) -> DataFrame:
+    """Event count and value per 1h window sliding by 30min
+    (window_start, n, total_value); unordered, so a stream can run it."""
+    return (
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.round(F.sum("value"), 4).alias("total_value"))
+        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
+                .alias("window_start"), "n", "total_value")
+    )
+
 
 # Hourly per-type counts z-scored against their type's distribution;
 # |z| >= 2 is flagged.

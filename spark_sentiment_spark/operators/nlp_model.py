@@ -110,19 +110,31 @@ _FILLERS = ("the a an it this that is was were be been to of in on at for "
             "number item note file page line door road city water light").split()
 
 
+def _polarity_pools(seed: int):
+    """(rng, pos, neg): a seeded RNG and the sorted positive and negative
+    lexicon words the synthetic sentences draw from."""
+    import random
+
+    from spark_sentiment_spark.functions.lexicon import raw_lexicon_dict
+
+    lex = raw_lexicon_dict()
+    return (random.Random(seed),
+            sorted(w for w, s in lex.items() if s > 0),
+            sorted(w for w, s in lex.items() if s < 0))
+
+
+def _shuffled(rng, data):
+    """(sentences, labels) of ``data`` after one seeded shuffle."""
+    rng.shuffle(data)
+    return [s for s, _ in data], [y for _, y in data]
+
+
 def _synth_examples(seed: int = 7, per_class: int = 600):
     """Deterministic labeled sentences by uniform sampling: polarity-word
     density maps onto the CoreNLP 0..4 scale (0 = dense negative ... 4 =
     dense positive). Used for held-out evaluation (train uses the
     full-coverage synthesis below)."""
-    import random
-
-    from spark_sentiment_spark.functions.lexicon import raw_lexicon_dict
-
-    rng = random.Random(seed)
-    lex = raw_lexicon_dict()
-    pos = sorted(w for w, s in lex.items() if s > 0)
-    neg = sorted(w for w, s in lex.items() if s < 0)
+    rng, pos, neg = _polarity_pools(seed)
 
     def sentence(n_sent: int, sent_words: list, n_fill: int) -> str:
         words = rng.sample(sent_words, n_sent) + \
@@ -137,8 +149,7 @@ def _synth_examples(seed: int = 7, per_class: int = 600):
         data.append((sentence(0, pos, rng.randint(5, 10)), 2))
         data.append((sentence(rng.randint(1, 2), pos, rng.randint(5, 9)), 3))
         data.append((sentence(rng.randint(4, 7), pos, rng.randint(1, 3)), 4))
-    rng.shuffle(data)
-    return [s for s, _ in data], [y for _, y in data]
+    return _shuffled(rng, data)
 
 
 def _synth_coverage(seed: int = 7, cycles: int = 4):
@@ -147,15 +158,7 @@ def _synth_coverage(seed: int = 7, cycles: int = 4):
     polarity, extreme class) and ``cycles/2`` mild examples (one word
     among 6-8 fillers, mild class). Sampling-only synthesis leaves rare
     words unseen, which measured as 0<->4 flips on held-out data."""
-    import random
-
-    from spark_sentiment_spark.functions.lexicon import raw_lexicon_dict
-
-    rng = random.Random(seed)
-    lex = raw_lexicon_dict()
-    pos = sorted(w for w, s in lex.items() if s > 0)
-    neg = sorted(w for w, s in lex.items() if s < 0)
-
+    rng, pos, neg = _polarity_pools(seed)
     data: list[tuple[str, int]] = []
     for _ in range(cycles):
         for pool, dense_cls, mild_cls in ((neg, 0, 1), (pos, 4, 3)):
@@ -177,8 +180,7 @@ def _synth_coverage(seed: int = 7, cycles: int = 4):
     for _ in range(n_neutral):
         k = rng.randint(5, 10)
         data.append((" ".join(rng.choice(_FILLERS) for _ in range(k)), 2))
-    rng.shuffle(data)
-    return [s for s, _ in data], [y for _, y in data]
+    return _shuffled(rng, data)
 
 
 def train_default_model() -> dict:

@@ -9,7 +9,7 @@ bit-identical and the DuckDB oracle replays the estimate exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -57,3 +57,24 @@ def hll_sum() -> Column:
     return (F.sum(F.expr(HLL_POW2)).cast("bigint")
             + (F.lit(HLL_M) - F.count(F.lit(1)))
             * F.lit(2 ** (HLL_BITS + 1)))
+
+
+def hll_registers(keyed: DataFrame, *keys) -> DataFrame:
+    """HLL registers (keys..., bucket, mj) of the md5 column ``h``: the
+    max rho per bucket within each group of ``keys``."""
+    return (keyed.select(*keys, F.expr(HLL_BUCKET).alias("bucket"),
+                         F.expr(HLL_RHO).alias("rho"))
+            .groupBy(*keys, "bucket").agg(F.max("rho").alias("mj")))
+
+
+def hll_estimate(registers: DataFrame, exact: DataFrame) -> DataFrame:
+    """(n_exact, n_est, n_buckets, rel_err): the estimate of one register
+    set against the 1-row exact count ``exact`` (n_exact)."""
+    sketch = registers.agg(
+        hll_sum().alias("s"),
+        F.count(F.lit(1)).cast("bigint").alias("n_buckets"))
+    est = F.round(F.lit(float(HLL_A)) / F.col("s").cast("double"), 2)
+    return (sketch.crossJoin(F.broadcast(exact))
+            .select("n_exact", est.alias("n_est"), "n_buckets",
+                    F.round(F.abs(est - F.col("n_exact"))
+                            / F.col("n_exact"), 4).alias("rel_err")))

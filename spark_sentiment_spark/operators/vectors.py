@@ -288,12 +288,18 @@ def pq_stage_index(spark, vecs):
     base = track_staging_dir(tempfile.mkdtemp(prefix="pq_index_"))
     vecs.select("vec_id", _encode("e").alias("codes")) \
         .write.mode("overwrite").parquet(base + "/codes")
+    _stage_codebook(spark, codebooks, n_codes, base)
+    return base, n_codes
+
+
+def _stage_codebook(spark, codebooks, n_codes: int, base: str) -> None:
+    """Write the M×K codewords as base/codebook (m, code, cw), the
+    artifact `pq_read_codebook` replays."""
     spark.createDataFrame(
         [(int(m), int(k), [float(x) for x in codebooks[m, k]])
          for m in range(PQ_M) for k in range(n_codes)],
         "m int, code int, cw array<double>") \
         .write.mode("overwrite").parquet(base + "/codebook")
-    return base, n_codes
 
 
 def pq_read_codebook(spark, base: str, n_codes: int):
@@ -535,11 +541,7 @@ def ivfpq_stage_index(spark, vecs, code_batches: int = 1,
              .write.mode("overwrite" if b == 0 else "append")
              .partitionBy("cell").parquet(base + "/codes"))
     cent.write.mode("overwrite").parquet(base + "/centroids")
-    spark.createDataFrame(
-        [(int(m), int(k), [float(x) for x in codebooks[m, k]])
-         for m in range(PQ_M) for k in range(n_codes)],
-        "m int, code int, cw array<double>") \
-        .write.mode("overwrite").parquet(base + "/codebook")
+    _stage_codebook(spark, codebooks, n_codes, base)
     return base, n_codes
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.functions.text import (WS_TOKENS_SQL,
+from spark_sentiment_spark.functions.text import (WS_TOKENS_SQL, has_text,
                                                   token_bigrams, ws_tokens)
 from spark_sentiment_spark.operators.mixture import (TEMP_ALPHA, md5_ranked,
                                                      mixture_quota_pick,
@@ -23,6 +23,53 @@ from spark_sentiment_spark.operators.winnow import (WINNOW_CTE,
                                                     winnow_selected)
 from spark_sentiment_spark.plans.registry import (load, register,
                                                   track_persist)
+
+def _doc_tokens(spark, sf_dir):
+    """Whitespace token list ``l`` of every non-blank document."""
+    return (load(spark, sf_dir, "documents").where(has_text())
+            .select(ws_tokens().alias("l")))
+
+
+def _bigrams(t):
+    """Adjacent token pairs (w1, w2) of the token lists ``t.l``."""
+    return (t.where(F.size("l") > 1)
+            .select(F.explode(token_bigrams("l")).alias("bg"))
+            .select("bg.w1", "bg.w2"))
+
+
+def _cooccurrence_graph(spark, sf_dir):
+    """(ed, deg, da, db) of the token co-occurrence graph: the persisted
+    distinct undirected edges (a, b) without self-loops, the persisted
+    node degrees (v, d), and the degrees keyed as endpoint a and b."""
+    bg = _bigrams(_doc_tokens(spark, sf_dir)).where(
+        F.col("w1") != F.col("w2"))
+    ed = track_persist(
+        bg.select(F.least("w1", "w2").alias("a"),
+                  F.greatest("w1", "w2").alias("b")).distinct())
+    deg = track_persist(
+        ed.select(F.col("a").alias("v"))
+        .unionByName(ed.select(F.col("b").alias("v")))
+        .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d")))
+    da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
+    db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
+    return ed, deg, da, db
+
+
+def _live_docs(spark, sf_dir):
+    """(doc_id, source, n_tokens) of every non-blank document."""
+    return (load(spark, sf_dir, "documents").where(has_text())
+            .select("doc_id", "source",
+                    F.size(ws_tokens()).alias("n_tokens")))
+
+
+def _distinct_token_ratio():
+    """Distinct-token ratio of ``text`` split on single spaces, rounded to
+    6 dp before any ranking or binning."""
+    toks = F.split(F.col("text"), " ", -1)
+    return F.round(
+        F.size(F.array_distinct(toks)).cast("double")
+        / F.greatest(F.size(toks), F.lit(1)), 6)
+
 
 # --- Temperature-scaled mixture weights ------------------------------------
 
@@ -53,9 +100,8 @@ def mixture_temperature(spark, sf_dir):
     for a token budget equal to the corpus size. The corpus reduces to
     one row per source before the (bounded-partition) global window, so
     the window never sees unbounded data."""
-    docs = load(spark, sf_dir, "documents")
     src = (
-        docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
+        load(spark, sf_dir, "documents").where(has_text())
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"),
              F.sum(F.size(ws_tokens())).alias("n_tokens"))
@@ -103,11 +149,8 @@ def corpus_token_entropy(spark, sf_dir):
     sources score low). One explode + vocabulary-sized agg; the per-source
     totals come from a window over the *aggregated* (vocab-sized) table,
     so the corpus itself shuffles once."""
-    docs = load(spark, sf_dir, "documents")
-    tok = (
-        docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-        .select("source", F.explode(ws_tokens()).alias("w"))
-    )
+    tok = (load(spark, sf_dir, "documents").where(has_text())
+           .select("source", F.explode(ws_tokens()).alias("w")))
     cnt = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
     t = F.sum("c").over(Window.partitionBy("source"))
     p = F.col("c") / t
@@ -168,24 +211,11 @@ def token_pmi_bigrams(spark, sf_dir):
     left to size estimates + AQE — broadcast at small SF, shuffle join
     (the correct linear plan) when the vocabulary outgrows the
     threshold at scale."""
-    docs = load(spark, sf_dir, "documents")
-    t = (
-        docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-        .select(ws_tokens().alias("l"))
-    )
-    # Round-18 optimization (guide §2.4): both count tables are persisted.
-    # `bg` feeds the n_bi scalar and the main projection, `uni` feeds the
-    # n_uni scalar and BOTH probe sides — unpersisted that was five plan
-    # branches, each re-scanning and re-exploding the corpus. The tables
-    # are vocabulary-sized (bounded on a web corpus relative to the token
-    # stream), so the cache is cheap and the corpus tokenizes exactly
-    # twice (bigram pass + unigram pass) instead of five times.
+    t = _doc_tokens(spark, sf_dir)
+    # Both vocabulary-sized count tables are persisted: unpersisted, their
+    # five consumers re-scanned and re-exploded the corpus each.
     bg = track_persist(
-        t.where(F.size("l") > 1)
-        .select(F.explode(token_bigrams("l")).alias("bg"))
-        .select("bg.w1", "bg.w2")
-        .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    )
+        _bigrams(t).groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")))
     uni = track_persist(
         t.select(F.explode("l").alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
@@ -435,20 +465,14 @@ def preference_pairs(spark, sf_dir):
     the per-source count; the best↔worst join runs on (source, rank) —
     linear, no self-product. Top/bottom halves are disjoint by the
     r <= n/2 bound, so no document appears on both sides of a pair."""
-    docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ", -1)
-    score = F.round(
-        F.size(F.array_distinct(toks)).cast("double")
-        / F.greatest(F.size(toks), F.lit(1)), 6)
-    q = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-         .select("doc_id", "source", score.alias("score")))
+    q = (load(spark, sf_dir, "documents").where(has_text())
+         .select("doc_id", "source", _distinct_token_ratio().alias("score")))
     wb = Window.partitionBy("source").orderBy(F.desc("score"), "doc_id")
     ww = Window.partitionBy("source").orderBy(F.asc("score"),
                                               F.desc("doc_id"))
     wn = Window.partitionBy("source")
-    # Round-18 optimization (guide §2.4): both join sides read the same
-    # ranked frame — persist the narrow ranking so the corpus is scanned
-    # and window-ranked once, not twice.
+    # Both join sides read the narrow ranking: persisted, the corpus is
+    # scanned and window-ranked once.
     ranked = track_persist(q.select(
         "doc_id", "source", "score",
         F.row_number().over(wb).alias("r_best"),
@@ -525,13 +549,9 @@ def drift_psi(spark, sf_dir):
     Scale: one scan → bounded (≤10-row) bin table; the totals and the
     PSI sum are windows over that bounded table, so nothing corpus-sized
     crosses a single partition."""
-    docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ", -1)
-    score = F.round(
-        F.size(F.array_distinct(toks)).cast("double")
-        / F.greatest(F.size(toks), F.lit(1)), 6)
+    score = _distinct_token_ratio()
     scored = (
-        docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
+        load(spark, sf_dir, "documents").where(has_text())
         .select((F.col("doc_id") % 2).alias("cohort"),
                 F.least(F.floor(score * PSI_BINS).cast("bigint"),
                         F.lit(PSI_BINS - 1)).alias("bin")))
@@ -628,11 +648,7 @@ def mixture_apply(spark, sf_dir):
     Scale: one bounded per-source agg for quotas (broadcast), one
     source-partition ranking window over (doc_id, source) pairs — the
     corpus shuffles once and the text column never moves."""
-    docs = load(spark, sf_dir, "documents")
-    live = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-            .select("doc_id", "source",
-                    F.size(ws_tokens()).alias("n_tokens")))
-    return (mixture_quota_pick(live, MIXTURE_BUDGET)
+    return (mixture_quota_pick(_live_docs(spark, sf_dir), MIXTURE_BUDGET)
             .select("doc_id", "source", "pick")
             .orderBy("source", "pick"))
 
@@ -712,14 +728,9 @@ def mixture_upsample(spark, sf_dir):
     broadcast-side (budget rows, not corpus rows); the only
     corpus-sized work is the same md5 rank window `mixture_apply`
     pays, and the slot join probes it with a broadcast."""
-    docs = load(spark, sf_dir, "documents")
-    # Round-18 optimization (guide §2.4): the quota table and the md5
-    # rank window both read `live` — persist the narrow frame so the
-    # corpus is scanned and tokenized once.
-    live = track_persist(
-        docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-        .select("doc_id", "source",
-                F.size(ws_tokens()).alias("n_tokens")))
+    # The quota table and the md5 rank window both read `live`: persisted,
+    # the corpus is scanned and tokenized once.
+    live = track_persist(_live_docs(spark, sf_dir))
     quota = mixture_quotas(live, UPSAMPLE_BUDGET)
     # guard q >= 1 before sequence(): Spark's sequence(1, 0) yields a
     # DESCENDING [1, 0] rather than the empty series DuckDB produces
@@ -841,23 +852,14 @@ def token_pagerank(spark, sf_dir, iters: int = PAGERANK_ITERS,
     `token_pmi_bigrams` dropped its unigram hints: a web-scale token
     vocabulary is not broadcast-safe, so join strategy is left to size
     estimates + AQE."""
-    docs = load(spark, sf_dir, "documents")
-    t = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-         .select(ws_tokens().alias("l")))
-    bg = (t.where(F.size("l") > 1)
-          .select(F.explode(token_bigrams("l")).alias("bg"))
-          .select("bg.w1", "bg.w2")
-          .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")))
+    t = _doc_tokens(spark, sf_dir)
+    bg = _bigrams(t).groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     # top-V vocabulary cap: distributed TakeOrdered on the aggregated
     # unigram counts (V rows of (token, freq) — never the corpus), then a
     # semi-join drops tail-touching edges. Inactive when vocab <= cap.
-    # NOT persisted (round-18 A/B): keep feeds both semi-joins and edges
-    # unions bg with itself, but the executed plan already deduplicates
-    # both — ReusedExchange covers the bigram-count exchange across the
-    # union sides and the keep broadcast across the semi-joins — so
-    # persisting them only added cache-fill barriers (min-of-10 A/B:
-    # +9% min on the pair). The wout/e persists below remain the frames
-    # the iteration loop actually re-reads.
+    # keep and bg are not persisted: ReusedExchange already shares the
+    # bigram-count exchange and the keep broadcast, so a cache only adds
+    # a fill barrier. wout and e are what the loop re-reads.
     keep = (t.select(F.explode("l").alias("w"))
             .groupBy("w").agg(F.count(F.lit(1)).alias("f"))
             .orderBy(F.desc("f"), "w").limit(vocab_cap)
@@ -870,42 +872,25 @@ def token_pagerank(spark, sf_dir, iters: int = PAGERANK_ITERS,
                                     F.col("w1").alias("dst"), "c"))
              .groupBy("src", "dst").agg(F.sum("c").alias("w")))
     wout = track_persist(edges.groupBy("src").agg(F.sum("w").alias("wt")))
-    # Round-19 optimization (guide §2.4, VERDICT r18 item 1): the edge
-    # frame the loop re-reads every iteration is cached HASH-PARTITIONED
-    # ON src (the edges agg leaves it partitioned by (src, dst), which
-    # does NOT satisfy the join's src clustering). Caveat discovered
-    # this round: an AQE-wrapped InMemoryRelation reports unknown
-    # partitioning to consumers planned BEFORE the cache materializes —
-    # but each power iteration here is its own eager-checkpoint action
-    # planned AFTER the fill ran, which is exactly the case where the
-    # cache's src clustering stays visible, so a non-broadcast iteration
-    # join reshuffles ranks only, never the edge table.
+    # The edge frame the loop re-reads is cached hash-partitioned on src
+    # (the edges agg leaves it on (src, dst)). Each iteration is planned
+    # after the cache fill, so the src clustering stays visible and a
+    # non-broadcast iteration join reshuffles ranks only.
     p = spark.sparkContext.defaultParallelism
     e = track_persist(edges.join(wout, "src")
                       .repartition(p, "src")
                       .select("src", "dst", "w", "wt"))
 
     base = (15 * PAGERANK_SCALE) // 100
-    # Round-19 optimization (guide §2.4): the per-iteration
-    # nodes-LEFT-JOIN-agg re-attachment is GONE. The graph is symmetrized
-    # (edges = bg ∪ reverse(bg)), so {src} = {dst}: every node receives
-    # at least one contribution row each iteration, the left join matched
-    # every node, and coalesce(s, 0) never fired — the aggregation's key
-    # set IS the node set. Dropping the join removes a per-iteration
-    # sort-merge join (2 Exchanges + 2 Sorts, ×10 iterations) from the
-    # plan; rank arithmetic is unchanged, so the fixed-point ranks are
-    # bit-identical (equivalence pinned in tests/test_r19_optimizations
-    # .py and by the unchanged DuckDB oracle hash). The initial ranks
-    # frame distincts src straight off the src-clustered cache (no
-    # exchange) and each checkpoint preserves its hash(v) partitioning,
-    # so one iteration = cache scan + join + ONE exchange (the dst agg).
+    # The graph is symmetrized, so {src} = {dst}: every node receives a
+    # contribution each iteration and the aggregation's key set is the
+    # node set, with no re-attaching join. The initial ranks distinct src
+    # off the src-clustered cache and each checkpoint keeps its hash(v)
+    # partitioning: one iteration = cache scan + join + one exchange.
     ranks = (e.select(F.col("src").alias("v")).distinct()
              .select("v", F.lit(PAGERANK_SCALE).cast("bigint").alias("r"))
              .localCheckpoint(eager=True))
-    # Checkpoint cadence A/B (round 19): checkpointing every 2nd
-    # iteration (halving the eager materializations, doubling lineage
-    # depth per checkpoint) measured WORSE — min-of-10 4.445 vs 3.967 —
-    # so the per-iteration checkpoint stays.
+    # A checkpoint every iteration: every second one measured slower.
     for _ in range(iters):
         contrib = (e.join(ranks, e.src == ranks.v)
                    .select(F.col("dst").alias("cv"),
@@ -985,16 +970,14 @@ def vocab_growth_curve(spark, sf_dir):
     first-shard is a min — mergeable, so the curve maintains
     incrementally as new shards arrive (the events_rollup_incremental
     pattern applied to vocabulary state)."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
+    docs = load(spark, sf_dir, "documents").where(has_text())
     shard = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1),
                     16, 10).cast("int"))
     tok = docs.select(shard.alias("shard"),
                       F.explode(ws_tokens()).alias("w"))
-    # Round-18 optimization (guide §2.3/§2.4): one persisted (shard, type)
-    # count table feeds both outputs — token mass per shard is sum(c),
-    # first-seen types are min(shard) per type — instead of two
-    # independent corpus explodes. The table is ≤ 16×|vocabulary| rows.
+    # One persisted (shard, type) count table feeds both outputs — token
+    # mass per shard is sum(c), first-seen types are min(shard) per type —
+    # so the corpus explodes once. The table is ≤ 16×|vocabulary| rows.
     sw = track_persist(tok.groupBy("shard", "w")
                        .agg(F.count(F.lit(1)).alias("c")))
     occ = sw.groupBy("shard").agg(
@@ -1140,8 +1123,7 @@ def token_hapax_rate(spark, sf_dir):
     Scale: one explode → (source, token) hash agg (vocabulary-bounded
     per source, with map-side combine) → source-sized final agg. Nothing
     global, no window; the same two-agg shape as corpus_token_entropy."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
+    docs = load(spark, sf_dir, "documents").where(has_text())
     tf = (docs.select("source", F.explode(ws_tokens()).alias("w"))
           .groupBy("source", "w").agg(F.count(F.lit(1)).alias("c")))
     hapax = F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
@@ -1221,22 +1203,7 @@ def graph_triangle_count(spark, sf_dir):
     case instead of Σ deg² — the hot-token explosion never happens. Both
     joins (wedge build, wedge close) hash-partition on token keys of the
     vocabulary-bounded edge table; the corpus itself is touched once."""
-    docs = load(spark, sf_dir, "documents")
-    t = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-         .select(ws_tokens().alias("l")))
-    bg = (t.where(F.size("l") > 1)
-          .select(F.explode(token_bigrams("l")).alias("bg"))
-          .select("bg.w1", "bg.w2")
-          .where(F.col("w1") != F.col("w2")))
-    ed = track_persist(
-        bg.select(F.least("w1", "w2").alias("a"),
-                  F.greatest("w1", "w2").alias("b")).distinct())
-    deg = track_persist(
-        ed.select(F.col("a").alias("v"))
-        .unionByName(ed.select(F.col("b").alias("v")))
-        .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d")))
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
+    ed, deg, da, db = _cooccurrence_graph(spark, sf_dir)
     fwd = ((F.col("da") < F.col("db"))
            | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))))
     oriented = track_persist(
@@ -1316,8 +1283,7 @@ def token_burstiness(spark, sf_dir):
     global top-k via TakeOrdered. The same two-agg shape as
     token_hapax_rate with one extra power sum; no window, nothing
     quadratic, per-term state is three integers."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
+    docs = load(spark, sf_dir, "documents").where(has_text())
     per_doc = (docs.select("doc_id", F.explode(ws_tokens()).alias("w"))
                .groupBy("w", "doc_id")
                .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
@@ -1396,27 +1362,9 @@ def graph_degree_assortativity(spark, sf_dir):
     2m rows — the corpus is scanned once; no join touches fact-table
     cardinality. Degree-ordered orientation is not needed here (no
     wedge blowup: the join fan-out is exactly 2 rows per edge)."""
-    docs = load(spark, sf_dir, "documents")
-    t = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-         .select(ws_tokens().alias("l")))
-    bg = (t.where(F.size("l") > 1)
-          .select(F.explode(token_bigrams("l")).alias("bg"))
-          .select("bg.w1", "bg.w2")
-          .where(F.col("w1") != F.col("w2")))
-    ed = track_persist(
-        bg.select(F.least("w1", "w2").alias("a"),
-                  F.greatest("w1", "w2").alias("b")).distinct())
-    deg = track_persist(
-        ed.select(F.col("a").alias("v"))
-        .unionByName(ed.select(F.col("b").alias("v")))
-        .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d")))
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
-    # NOT persisted (round-18 A/B): edd feeds both symmetrization union
-    # sides, but its subtree is two joins over the ALREADY-CACHED ed/deg
-    # frames — recompute is two cache scans, and a min-of-10 A/B measured
-    # the persist at +12% min / +23% median. Recompute wins (the Change-5
-    # rule: memoizing derivations of cached frames loses its barrier).
+    ed, deg, da, db = _cooccurrence_graph(spark, sf_dir)
+    # Not persisted: both union sides re-read it as two joins over the
+    # cached ed/deg, which measured faster than a cache-fill barrier.
     edd = ed.join(da, "a").join(db, "b")
     sym = (edd.select(F.col("da").alias("x"), F.col("db").alias("y"))
            .unionByName(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spark_sentiment_spark.functions.text import has_text
 from spark_sentiment_spark.operators.minhash import (N_BANDS, N_HASHES,
                                                      THRESHOLD, band_buckets,
                                                      band_pairs,
@@ -20,6 +21,7 @@ from spark_sentiment_spark.operators.minhash import (N_BANDS, N_HASHES,
                                                      minhash_signatures,
                                                      probe_minhash_oracle_sql,
                                                      scored_pairs, shingled)
+from spark_sentiment_spark.operators.postings import term_pairs
 from spark_sentiment_spark.plans.registry import (load, register,
                                                   track_persist)
 
@@ -99,21 +101,11 @@ def _jaccard_pair_frame(docs):
     """The >= 0.9 Jaccard pair computation over an arbitrary document
     frame (factored so dedup_clusters can run it on exact-dup
     representatives instead of the raw corpus)."""
-    # Round-18 optimization (guide §2.4): tok feeds the sizes agg plus
-    # both self-join sides — persist the distinct shingle table so the
-    # shingling (explode + distinct shuffle over full text) runs once,
-    # the same shape decontaminate_minhash persists.
+    # tok feeds the sizes agg and both self-join sides: persisted, the
+    # shingling (explode + distinct shuffle over full text) runs once.
     tok = track_persist(shingled(docs).distinct())  # per (doc, shingle) row
     sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = tok.alias("a")
-    b = tok.alias("b")
-    inter = (
-        a.join(b, (F.col("a.w") == F.col("b.w"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"),
-                 F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
+    inter = term_pairs(tok, F.count(F.lit(1)).alias("i"))
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     jac = F.col("i") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
@@ -179,6 +171,17 @@ def _incr_minhash_oracle_sql() -> str:
                  THEN 0 ELSE 1 END AS BIGINT) AS vs_corpus""")
 
 
+def _batch_signatures(spark, sf_dir):
+    """(sig, sig_new, sig_old): persisted MinHash signatures of every
+    document, and their incoming-batch (doc_id % 5 == 4) and corpus
+    slices. Signatures are doc-local, so one signature pass serves both
+    sides as filters over one cache."""
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    is_new = F.col("doc_id") % 5 == 4
+    sig = track_persist(minhash_signatures(docs))  # 33 longs per doc
+    return sig, sig.where(is_new), sig.where(~is_new)
+
+
 @register("dedup_incremental_minhash", sql=_incr_minhash_oracle_sql(),
           tags=("dedup", "pipeline"))
 def dedup_incremental_minhash(spark, sf_dir):
@@ -208,24 +211,12 @@ def dedup_incremental_minhash(spark, sf_dir):
     as the full build (no token-stream shuffle). Appending the batch's
     bands+signatures to the index afterward is a partitioned append, so
     the index grows without rewrites."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    is_new = F.col("doc_id") % 5 == 4
     # Production: corpus signatures/bands are read from the persisted
     # index; here both sides derive from the same table, split by batch.
-    # Round-19 optimization (guide §2.4, the winnowing-incremental class):
-    # signatures are per-doc (mapInPandas, doc-local by construction), so
-    # sig(slice) ≡ sig(corpus) filtered — ONE corpus scan + signature
-    # pass fills one cache and both sides are filters over it, instead of
-    # two full passes each paying the md5-shingle fold.
-    sig = track_persist(minhash_signatures(docs))  # 33 longs per doc
-    sig_new = sig.where(is_new)
-    sig_old = sig.where(~is_new)
-    # NOT persisted (round-18 A/B): bands_new feeds three branches, but
-    # each re-derives the band explode from the CACHED signatures — a
-    # cheap projection — while persisting materializes the exploded
-    # (n_bands× rows) frame behind a cache-fill barrier. Min-of-10 A/B:
-    # persist +18% min (2.327 → 2.740 s at sf0.1), same verdict as
-    # dedup_minhash_lsh's identical pattern. Recompute wins.
+    sig, sig_new, sig_old = _batch_signatures(spark, sf_dir)
+    # bands_new is not persisted: its three consumers re-derive the band
+    # explode from the cached signatures, which measured faster than
+    # caching the n_bands× wider frame.
     bands_new = band_buckets(sig_new, N_HASHES, N_BANDS)
     bands_old = band_buckets(sig_old, N_HASHES, N_BANDS)
     nb, ob = bands_new.alias("nb"), bands_old.alias("ob")
@@ -752,12 +743,16 @@ def _simjoin_grams(docs):
     return toks.select("doc_id", F.explode(grams).alias("w")).distinct()
 
 
-def _simjoin_candidates(tok):
-    """PPJoin prefix-filter candidate pairs: rank each doc's grams by
-    global rarity (df asc, gram asc), keep the first
-    L - ceil(t*L) + 1, and self-join the prefixes. Lossless for
-    Jaccard >= _SIMJOIN_NUM/_SIMJOIN_DEN; prefix length is integer-exact
-    (ceil as (num*L + den - 1) div den)."""
+def _simjoin_tok(spark, sf_dir):
+    """The persisted `_simjoin_grams` of the non-blank documents."""
+    docs = load(spark, sf_dir, "documents").where(has_text())
+    return track_persist(_simjoin_grams(docs))  # per (doc, gram) row
+
+
+def _rarity_prefix(tok, num: int, den: int):
+    """(doc_id, w) prefix of each doc's grams ranked by global rarity
+    (df asc, gram asc): the first L - ceil(num/den * L) + 1 of its L
+    grams, the integer-exact PPJoin prefix length."""
     dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     # one doc_id-partitioned window pass yields rank AND set size
     wdoc = Window.partitionBy("doc_id").orderBy("df", "w")
@@ -766,9 +761,30 @@ def _simjoin_candidates(tok):
               .select("doc_id", "w",
                       F.row_number().over(wdoc).alias("rn"),
                       F.count(F.lit(1)).over(wall).alias("n")))
-    plen = F.expr(f"n - (({_SIMJOIN_NUM} * n + {_SIMJOIN_DEN} - 1)"
-                  f" div {_SIMJOIN_DEN}) + 1")
-    prefix = ranked.where(F.col("rn") <= plen).select("doc_id", "w")
+    plen = F.expr(f"n - (({num} * n + {den} - 1) div {den}) + 1")
+    return ranked.where(F.col("rn") <= plen).select("doc_id", "w")
+
+
+def _shared_counts(tok, cand, a: str, b: str):
+    """(inter, sizes): the exact shared-gram count i of every candidate
+    pair (a, b), and each doc's gram count n (doc_id, n)."""
+    ta = tok.select(F.col("doc_id").alias(a), "w")
+    tb = tok.select(F.col("doc_id").alias(b), "w")
+    inter = (cand.join(ta, a).join(tb, [b, "w"])
+             .groupBy(a, b)
+             .agg(F.count(F.lit(1)).cast("bigint").alias("i")))
+    sizes = tok.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"))
+    return inter, sizes
+
+
+def _simjoin_candidates(tok):
+    """PPJoin prefix-filter candidate pairs: rank each doc's grams by
+    global rarity (df asc, gram asc), keep the first
+    L - ceil(t*L) + 1, and self-join the prefixes. Lossless for
+    Jaccard >= _SIMJOIN_NUM/_SIMJOIN_DEN; prefix length is integer-exact
+    (ceil as (num*L + den - 1) div den)."""
+    prefix = _rarity_prefix(tok, _SIMJOIN_NUM, _SIMJOIN_DEN)
     return (prefix.alias("pa")
             .join(prefix.alias("pb"),
                   (F.col("pa.w") == F.col("pb.w"))
@@ -799,17 +815,9 @@ def dedup_simjoin_prefix(spark, sf_dir):
     100 TB. Prefix length stays integer-exact (ceil as (num*L + den - 1)
     div den); the final threshold is the same cross-multiplication the
     oracle uses."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
-    tok = track_persist(_simjoin_grams(docs))  # per (doc, gram) row
+    tok = _simjoin_tok(spark, sf_dir)
     cand = _simjoin_candidates(tok)
-    ta = tok.select(F.col("doc_id").alias("doc_a"), "w")
-    tb = tok.select(F.col("doc_id").alias("doc_b"), "w")
-    inter = (cand.join(ta, "doc_a").join(tb, ["doc_b", "w"])
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("i")))
-    sizes = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"))
+    inter, sizes = _shared_counts(tok, cand, "doc_a", "doc_b")
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     union = F.col("sa.n") + F.col("sb.n") - F.col("i")
@@ -878,31 +886,14 @@ def dedup_containment_prefix(spark, sf_dir):
     Scale: src prefixes shrink the probe stream by 1/t-ish; the full-set
     side stays an inverted index as in any posting-list join, and the
     rarity order again drops stopword-grade grams from every prefix."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
-    tok = track_persist(_simjoin_grams(docs))  # per (doc, gram) row
-    dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "w")
-    wall = Window.partitionBy("doc_id")
-    ranked = (tok.join(dfreq, "w")
-              .select("doc_id", "w",
-                      F.row_number().over(wdoc).alias("rn"),
-                      F.count(F.lit(1)).over(wall).alias("n")))
-    plen = F.expr(f"n - (({_CONT_NUM} * n + {_CONT_DEN} - 1)"
-                  f" div {_CONT_DEN}) + 1")
-    prefix = ranked.where(F.col("rn") <= plen).select(
+    tok = _simjoin_tok(spark, sf_dir)
+    prefix = _rarity_prefix(tok, _CONT_NUM, _CONT_DEN).select(
         F.col("doc_id").alias("src"), "w")
     full = tok.select(F.col("doc_id").alias("dst"), "w")
     cand = (prefix.join(full, "w")
             .where(F.col("src") != F.col("dst"))
             .select("src", "dst").distinct())
-    ts = tok.select(F.col("doc_id").alias("src"), "w")
-    td = tok.select(F.col("doc_id").alias("dst"), "w")
-    inter = (cand.join(ts, "src").join(td, ["dst", "w"])
-             .groupBy("src", "dst")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("i")))
-    sizes = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"))
+    inter, sizes = _shared_counts(tok, cand, "src", "dst")
     return (inter.join(sizes.withColumnRenamed("doc_id", "src"), "src")
             .where(F.lit(_CONT_DEN) * F.col("i")
                    >= F.lit(_CONT_NUM) * F.col("n"))
@@ -1255,15 +1246,7 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
     from spark_sentiment_spark.sources.bucketing import save_bucketed
 
     nb = 8
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    is_new = F.col("doc_id") % 5 == 4
-    # Round-19 optimization (guide §2.4, the winnowing-incremental
-    # class): signatures are per-doc (mapInPandas, doc-local), so ONE
-    # corpus signature pass fills one cache and both sides are filters
-    # over it — instead of two full md5-shingle passes.
-    sig = track_persist(minhash_signatures(docs))  # 33 longs per doc
-    sig_new = sig.where(is_new)
-    sig_old = sig.where(~is_new)
+    sig, sig_new, sig_old = _batch_signatures(spark, sf_dir)
 
     def keyed(bands, id_alias):
         return bands.select(

@@ -7,8 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.operators.event_windows import (SLIDE_SQL,
-                                                           TUMBLE_SQL)
+from spark_sentiment_spark.operators.event_windows import (
+    SLIDE_SQL, TUMBLE_SQL, sliding_hour_counts)
 from spark_sentiment_spark.operators.scd2 import (SCD2_SQL, scd2_dim,
                                                   scd2_formatted)
 from spark_sentiment_spark.plans.registry import (load, register,
@@ -34,18 +34,8 @@ def events_sliding_hour(spark, sf_dir):
     """Sliding window (1h window, 30min slide) — F.window produces the
     overlapping assignment natively; the oracle reconstructs the same grid
     with generate_series."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.sum("value"), 4).alias("total_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss")
-            .alias("window_start"),
-            "n", "total_value",
-        )
-        .orderBy("window_start")
-    )
+    return (sliding_hour_counts(load(spark, sf_dir, "events"))
+            .orderBy("window_start"))
 
 
 SESSION_SQL = """
@@ -71,26 +61,29 @@ ORDER BY user_id
 """
 
 
+def _sessionized(ev):
+    """``ev`` with new_session (1 after a gap of more than an hour, or on
+    a user's first event) and its running sum session_id per user in
+    (ts, event_id) order."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    wrun = (Window.partitionBy("user_id").orderBy("ts", "event_id")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    lag_ms = F.unix_millis(F.lag("ts").over(w))
+    return (ev.withColumn(
+        "new_session",
+        F.when(lag_ms.isNull()
+               | ((F.unix_millis("ts") - lag_ms) > 3_600_000), 1)
+        .otherwise(0))
+        .withColumn("session_id", F.sum("new_session").over(wrun)))
+
+
 @register("events_sessionize", sql=SESSION_SQL, bench=True, tags=("events",))
 def events_sessionize(spark, sf_dir):
     """Sessionization with a 1-hour inactivity gap — lag + cumulative-sum
     windows, one shuffle on user_id (the streaming twin uses
     session_window/applyInPandasWithState)."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wrun = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    lag_ms = F.unix_millis(F.lag("ts").over(w))
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            lag_ms.isNull()
-            | ((F.unix_millis(F.col("ts")) - lag_ms) > 3_600_000), 1
-        ).otherwise(0),
-    )
-    sess = flagged.withColumn("session_id", F.sum("new_session").over(wrun))
     return (
-        sess.groupBy("user_id")
+        _sessionized(load(spark, sf_dir, "events")).groupBy("user_id")
         .agg(F.countDistinct("session_id").alias("n_sessions"),
              F.count(F.lit(1)).alias("n_events"))
         .orderBy("user_id")
@@ -351,6 +344,32 @@ SELECT (SELECT count(*) FROM s1) AS n_signup,
 """
 
 
+def _first_after(ev, prev, etype, prev_ts, out_ts, within_ms=None):
+    """Earliest ``etype`` event per user after their ``prev_ts`` step
+    (and at most ``within_ms`` later, when given), as ``out_ts``."""
+    step = ev.where(F.col("event_type") == etype)
+    cond = (step["user_id"] == prev["user_id"]) & (step["ts"] > prev[prev_ts])
+    if within_ms is not None:
+        cond = cond & (F.unix_millis(step["ts"])
+                       - F.unix_millis(prev[prev_ts]) <= within_ms)
+    return (step.join(prev, cond)
+            .groupBy(step["user_id"])
+            .agg(F.min(step["ts"]).alias(out_ts)))
+
+
+def _funnel_steps(ev, click_within_ms=None, purchase_within_ms=None):
+    """(s1, s2, s3): per user, the first signup (t1), the first click
+    after it (t2) and the first purchase after that (t3). s1 and s2 are
+    persisted: each feeds the next step and its own count, so each
+    type-filtered scan runs once."""
+    s1 = track_persist(ev.where(F.col("event_type") == "signup")
+                       .groupBy("user_id").agg(F.min("ts").alias("t1")))
+    s2 = track_persist(_first_after(ev, s1, "click", "t1", "t2",
+                                    click_within_ms))
+    s3 = _first_after(ev, s2, "purchase", "t2", "t3", purchase_within_ms)
+    return s1, s2, s3
+
+
 @register("events_funnel", sql=FUNNEL_SQL, tags=("events", "funnel"))
 def events_funnel(spark, sf_dir):
     """Ordered 3-step funnel (signup → click → purchase): each step keeps
@@ -359,29 +378,7 @@ def events_funnel(spark, sf_dir):
     100 TB the same hash partitioning is reused across all three shuffles
     (no re-partitioning between steps); step outputs are one row per
     surviving user, shrinking monotonically."""
-    ev = load(spark, sf_dir, "events")
-
-    def first_after(prev, etype, prev_ts, out_ts):
-        step = ev.where(F.col("event_type") == etype)
-        cond = (step["user_id"] == prev["user_id"]) & (
-            step["ts"] > prev[prev_ts]
-        )
-        return (
-            step.join(prev, cond)
-            .groupBy(step["user_id"])
-            .agg(F.min(step["ts"]).alias(out_ts))
-        )
-
-    # Round-18 optimization (guide §2.4): persist the bounded step frames
-    # — unpersisted, s3's branch re-ran s1's and s2's whole subtrees
-    # (the signup scan evaluated three times). One scan per step now.
-    s1 = track_persist(
-        ev.where(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = track_persist(first_after(s1, "click", "t1", "t2"))
-    s3 = first_after(s2, "purchase", "t2", "t3")
+    s1, s2, s3 = _funnel_steps(load(spark, sf_dir, "events"))
     return (
         s1.agg(F.count(F.lit(1)).alias("n_signup"))
         .crossJoin(s2.agg(F.count(F.lit(1)).alias("n_click_after")))
@@ -967,24 +964,11 @@ def events_peak_concurrency(spark, sf_dir):
     by daily traffic, not history), and days parallelize. A hot single
     day sub-partitions by hour with carry-in prefix sums — the standard
     two-pass scan — without changing semantics."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wrun = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    lag_ms = F.unix_millis(F.lag("ts").over(w))
-    sess = (ev.withColumn(
-        "new_session",
-        F.when(lag_ms.isNull()
-               | ((F.unix_millis("ts") - lag_ms) > 3_600_000), 1)
-        .otherwise(0))
-        .withColumn("session_id", F.sum("new_session").over(wrun)))
-    # Round-18 optimization (guide §2.4): the session-bounds table feeds
-    # three branches (+1 deltas, -1 deltas, per-day session counts) —
-    # unpersisted, each re-ran the full two-window sessionization over
-    # the fact table. Persist the bounded per-session frame: one
-    # sessionization pass.
+    # The session-bounds table feeds three branches (+1 deltas, -1
+    # deltas, per-day counts): persisted, events are sessionized once.
     bounds = track_persist(
-        sess.groupBy("user_id", "session_id")
+        _sessionized(load(spark, sf_dir, "events"))
+        .groupBy("user_id", "session_id")
         .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end")))
     day = F.date_format(F.date_trunc("day", F.col("s_start")), "yyyy-MM-dd")
     deltas = (bounds.select(day.alias("day"), F.col("s_start").alias("t"),
@@ -1125,18 +1109,8 @@ def events_type_affinity(spark, sf_dir):
     per-type and total-session tables are vocabulary/1-row sized
     broadcasts. The classic trap (pairing raw events, length² per
     session) never materializes."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wrun = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    lag_ms = F.unix_millis(F.lag("ts").over(w))
     st = track_persist(
-        ev.withColumn(
-            "new_session",
-            F.when(lag_ms.isNull()
-                   | ((F.unix_millis("ts") - lag_ms) > 3_600_000), 1)
-            .otherwise(0))
-        .withColumn("session_id", F.sum("new_session").over(wrun))
+        _sessionized(load(spark, sf_dir, "events"))
         .select("user_id", "session_id", "event_type")
         .distinct())
     totals = st.select("user_id", "session_id").distinct() \
@@ -1275,6 +1249,26 @@ ORDER BY user_id
 """
 
 
+def _rfm_per_user(spark, sf_dir):
+    """(user_id, r_days, f_events, m_e4): one row per user, the RFM axes
+    every RFM query scores. The per-user aggregate is persisted and the
+    corpus horizon is the max of its per-user maxima, so events are
+    scanned once."""
+    per_user = track_persist(
+        load(spark, sf_dir, "events").groupBy("user_id")
+        .agg(F.max("ts").alias("umax"),
+             F.count(F.lit(1)).cast("bigint").alias("f_events"),
+             F.sum(F.floor(F.col("value") * 10000).cast("bigint"))
+             .cast("bigint").alias("m_e4")))
+    mx = per_user.agg(F.max("umax").alias("tmax"))
+    return (per_user.crossJoin(F.broadcast(mx))
+            .withColumn("r_days",
+                        F.expr("(unix_millis(tmax) - unix_millis(umax))"
+                               " div 86400000"))
+            .select("user_id", F.col("r_days").cast("bigint")
+                    .alias("r_days"), "f_events", "m_e4"))
+
+
 @register("events_rfm_scores", sql=RFM_SQL, tags=("events",))
 def events_rfm_scores(spark, sf_dir):
     """RFM segmentation — the classic behavioral-cohort scoring: per
@@ -1294,25 +1288,11 @@ def events_rfm_scores(spark, sf_dir):
     percentile cut points (4 values per axis from the digest agg)
     broadcast against the per-user table, which changes no output for
     distinct-valued axes. The corpus horizon is a 1-row broadcast."""
-    ev = load(spark, sf_dir, "events")
-    # The corpus horizon is the max of the per-user maxima: no second scan.
-    per_user = track_persist(
-        ev.groupBy("user_id")
-        .agg(F.max("ts").alias("umax"),
-             F.count(F.lit(1)).cast("bigint").alias("f_events"),
-             F.sum(F.floor(F.col("value") * 10000).cast("bigint"))
-             .cast("bigint").alias("m_e4")))
-    mx = per_user.agg(F.max("umax").alias("tmax"))
-    scored = (per_user.crossJoin(F.broadcast(mx))
-              .withColumn("r_days",
-                          F.expr("(unix_millis(tmax) - unix_millis(umax))"
-                                 " div 86400000")))
     w_r = Window.orderBy("r_days", "user_id")
     w_f = Window.orderBy(F.desc("f_events"), F.asc("user_id"))
     w_m = Window.orderBy(F.desc("m_e4"), F.asc("user_id"))
-    return (scored.select(
-        "user_id", F.col("r_days").cast("bigint").alias("r_days"),
-        "f_events", "m_e4",
+    return (_rfm_per_user(spark, sf_dir).select(
+        "user_id", "r_days", "f_events", "m_e4",
         F.ntile(5).over(w_r).cast("long").alias("r_score"),
         F.ntile(5).over(w_f).cast("long").alias("f_score"),
         F.ntile(5).over(w_m).cast("long").alias("m_score"))
@@ -1431,26 +1411,10 @@ def events_rfm_cutpoints(spark, sf_dir):
     frequency table approaches |users| and the right move is to
     pre-bucket m_e4 (losing sub-bucket boundaries) or use the exact
     ntile of `events_rfm_scores` — the documented trade of this family.
-    Per-user aggregation is restated rather than shared with the other
-    RFM forms, so no certified source drifts when another changes."""
-    ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.4): the corpus horizon is the max
-    # over the per-user maxima, so it derives from the persisted
-    # per-user aggregate instead of a second full scan.
-    per_user = track_persist(
-        ev.groupBy("user_id")
-        .agg(F.max("ts").alias("umax"),
-             F.count(F.lit(1)).cast("bigint").alias("f_events"),
-             F.sum(F.floor(F.col("value") * 10000).cast("bigint"))
-             .cast("bigint").alias("m_e4")))
-    mx = per_user.agg(F.max("umax").alias("tmax"))
-    scored = (per_user.crossJoin(F.broadcast(mx))
-              .withColumn("r_days",
-                          F.expr("(unix_millis(tmax) - unix_millis(umax))"
-                                 " div 86400000"))
-              .select("user_id", F.col("r_days").cast("bigint")
-                      .alias("r_days"), "f_events", "m_e4"))
-    out = _cutpoint_quintile(scored, "r_days", "r_score")
+    The per-user frame is `_rfm_per_user`, shared by all three RFM
+    forms."""
+    out = _cutpoint_quintile(_rfm_per_user(spark, sf_dir), "r_days",
+                             "r_score")
     out = _cutpoint_quintile(out, "f_events", "f_score", descending=True)
     out = _cutpoint_quintile(out, "m_e4", "m_score", descending=True)
     return (out.select("user_id", "r_days", "f_events", "m_e4",
@@ -1515,25 +1479,8 @@ def events_rfm_cutpoints_bucketed(spark, sf_dir):
     Scale: identical shape to the parent — one hash agg per axis, a cum
     window over distinct values (now provably bounded for money too),
     4-row broadcast joins back. Nothing ranks users."""
-    ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.4): the corpus horizon is the max
-    # over the per-user maxima, so it derives from the persisted
-    # per-user aggregate instead of a second full scan.
-    per_user = track_persist(
-        ev.groupBy("user_id")
-        .agg(F.max("ts").alias("umax"),
-             F.count(F.lit(1)).cast("bigint").alias("f_events"),
-             F.sum(F.floor(F.col("value") * 10000).cast("bigint"))
-             .cast("bigint").alias("m_e4")))
-    mx = per_user.agg(F.max("umax").alias("tmax"))
-    scored = (per_user.crossJoin(F.broadcast(mx))
-              .withColumn("r_days",
-                          F.expr("(unix_millis(tmax) - unix_millis(umax))"
-                                 " div 86400000"))
-              .select("user_id", F.col("r_days").cast("bigint")
-                      .alias("r_days"), "f_events", "m_e4",
-                      F.expr(f"m_e4 div {M_CELL_W}").cast("bigint")
-                      .alias("m_cell")))
+    scored = _rfm_per_user(spark, sf_dir).withColumn(
+        "m_cell", F.expr(f"m_e4 div {M_CELL_W}").cast("bigint"))
     out = _cutpoint_quintile(scored, "r_days", "r_score")
     out = _cutpoint_quintile(out, "f_events", "f_score", descending=True)
     out = _cutpoint_quintile(out, "m_cell", "m_score", descending=True)
@@ -1711,27 +1658,8 @@ def events_funnel_windowed(spark, sf_dir):
     aggregates on user_id so one hash partitioning serves all shuffles,
     step outputs shrink monotonically, and the deadline predicate
     tightens each join before aggregation (less state, never more)."""
-    ev = load(spark, sf_dir, "events")
-
-    def first_within(prev, etype, prev_ts, out_ts, limit_ms):
-        step = ev.where(F.col("event_type") == etype)
-        cond = ((step["user_id"] == prev["user_id"])
-                & (step["ts"] > prev[prev_ts])
-                & (F.unix_millis(step["ts"]) - F.unix_millis(prev[prev_ts])
-                   <= limit_ms))
-        return (step.join(prev, cond)
-                .groupBy(step["user_id"])
-                .agg(F.min(step["ts"]).alias(out_ts)))
-
-    # Round-18 optimization (guide §2.4): each step output feeds the next
-    # step AND its own count — unpersisted, s3's branch re-ran s1's and
-    # s2's whole subtrees (the signup scan evaluated three times).
-    # Persisting the bounded per-user step frames makes each type-
-    # filtered scan run exactly once.
-    s1 = track_persist(ev.where(F.col("event_type") == "signup")
-                       .groupBy("user_id").agg(F.min("ts").alias("t1")))
-    s2 = track_persist(first_within(s1, "click", "t1", "t2", 3_600_000))
-    s3 = first_within(s2, "purchase", "t2", "t3", 86_400_000)
+    s1, s2, s3 = _funnel_steps(load(spark, sf_dir, "events"),
+                               3_600_000, 86_400_000)
     counts = (s1.agg(F.count(F.lit(1)).alias("n_signup"))
               .crossJoin(s2.agg(F.count(F.lit(1)).alias("n_click_1h")))
               .crossJoin(s3.agg(F.count(F.lit(1)).alias("n_purchase_24h"))))

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.functions.text import (WS_TOKENS_SQL,
+from spark_sentiment_spark.functions.text import (WS_TOKENS_SQL, has_text,
                                                   token_bigrams, ws_tokens)
 from spark_sentiment_spark.operators.event_windows import ANOMALY_SQL
 from spark_sentiment_spark.operators.mixture import (TEMP_ALPHA,
@@ -331,6 +331,20 @@ def _prefix_hash_col():
     return F.md5(pref.cast("binary"))
 
 
+def _prefix_group_first(spark, sf_dir, order, *cols):
+    """The first document by ``order`` of each prefix-hash group, with
+    the group's size n_dups and ``cols``: rank and count share one window
+    partitioning, a single exchange."""
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    w = Window.partitionBy("prefix_hash").orderBy(*order)
+    wc = Window.partitionBy("prefix_hash")
+    return (docs.select("doc_id", _prefix_hash_col().alias("prefix_hash"),
+                        *cols)
+            .withColumn("rn", F.row_number().over(w))
+            .withColumn("n_dups", F.count("*").over(wc).cast("bigint"))
+            .where(F.col("rn") == 1))
+
+
 @register("dedup_prefix", sql=PREFIX_SQL, tags=("dedup", "pipeline",))
 def dedup_prefix(spark, sf_dir):
     """Keep-first dedup on the first K tokens — the prefix-dedup pass that
@@ -342,13 +356,7 @@ def dedup_prefix(spark, sf_dir):
     One hash shuffle on the prefix hash; rank + group-count share the same
     window partitioning, so it is a single exchange end-to-end.
     """
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    w = Window.partitionBy("prefix_hash").orderBy("doc_id")
-    wc = Window.partitionBy("prefix_hash")
-    return (docs.select("doc_id", _prefix_hash_col().alias("prefix_hash"))
-            .withColumn("rn", F.row_number().over(w))
-            .withColumn("n_dups", F.count("*").over(wc).cast("bigint"))
-            .where(F.col("rn") == 1)
+    return (_prefix_group_first(spark, sf_dir, ("doc_id",))
             .select("doc_id", "prefix_hash", "n_dups")
             .orderBy("doc_id"))
 
@@ -389,14 +397,9 @@ def dedup_keep_best(spark, sf_dir):
     Same single-exchange shape as `dedup_prefix`: rank and group-count
     share one window partitioning on the prefix hash; the ranking key is
     (doc_len DESC, doc_id), computed before the shuffle."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    w = Window.partitionBy("prefix_hash").orderBy(F.desc("doc_len"), "doc_id")
-    wc = Window.partitionBy("prefix_hash")
-    return (docs.select("doc_id", _prefix_hash_col().alias("prefix_hash"),
-                        F.length("text").cast("bigint").alias("doc_len"))
-            .withColumn("rn", F.row_number().over(w))
-            .withColumn("n_dups", F.count("*").over(wc).cast("bigint"))
-            .where(F.col("rn") == 1)
+    return (_prefix_group_first(
+        spark, sf_dir, (F.desc("doc_len"), "doc_id"),
+        F.length("text").cast("bigint").alias("doc_len"))
             .select("doc_id", "prefix_hash", "n_dups", "doc_len")
             .orderBy("doc_id"))
 
@@ -571,6 +574,15 @@ ORDER BY shard, pos
 """
 
 
+def _md5_shard(h):
+    """Shard of an md5 hex column: its first nibble / 2 (N_SHARDS
+    shards). floor() on both sides: DuckDB's CAST(double AS BIGINT)
+    rounds while Spark's truncates."""
+    return F.floor(
+        (F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1)) - 1) / 2
+    ).cast("bigint")
+
+
 @register("shuffle_shards", sql=SHUFFLE_SQL, tags=("pipeline",))
 def shuffle_shards(spark, sf_dir):
     """Reproducible global shuffle for training order: shard = first md5
@@ -584,11 +596,7 @@ def shuffle_shards(spark, sf_dir):
     """
     docs = load(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
-    # floor() on BOTH sides: DuckDB's CAST(double AS BIGINT) rounds while
-    # Spark's truncates — an explicit floor keeps the twins identical.
-    shard = F.floor(
-        (F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1)) - 1) / 2
-    ).cast("bigint")
+    shard = _md5_shard(h)
     w = Window.partitionBy("shard").orderBy("h", "doc_id")
     return (docs.select("doc_id", h.alias("h"), shard.alias("shard"))
             .withColumn("pos", F.row_number().over(w).cast("bigint"))
@@ -723,6 +731,23 @@ gate AS (
 CURATE_SQL = _curate_sql(_COMPOSITE_GATE_CTES)
 
 
+def _gate_features():
+    """(alpha ratio, distinct-token ratio, token count) of ``text``: the
+    composite quality gate's three heuristics."""
+    toks = F.split(F.col("text"), " ", -1)
+    alpha = (F.length(F.regexp_replace("text", "[^a-zA-Z ]", ""))
+             .cast("double") / F.greatest(F.length("text"), F.lit(1)))
+    distinct = (F.size(F.array_distinct(toks)).cast("double")
+                / F.greatest(F.size(toks), F.lit(1)))
+    return alpha, distinct, F.size(toks)
+
+
+def _gate_keep(alpha, distinct, n_tok):
+    """The composite gate's keep verdict over its three heuristics."""
+    return ((n_tok >= 16) & (n_tok <= 4096)
+            & (alpha >= 0.6) & (distinct >= 0.3))
+
+
 def _composite_gate(docs):
     """Stage 2 of `curate_corpus`: the composite `quality_gate` rules as
     a gate frame (doc_id, text, q_keep, q_reason).
@@ -732,19 +757,13 @@ def _composite_gate(docs):
     reference them by NAME. CollapseProject refuses to inline expensive
     multi-referenced aliases, so the regexp alpha ratio and the
     array_distinct run once per row instead of once per referencing
-    branch — interpreted mode has no subexpression elimination, and this
-    stage owned `curate_corpus`'s ×8→×32 marginal in the round-12 deep
-    probe (13.8s → measured 1.9× faster restructured)."""
-    toks = F.split(F.col("text"), " ", -1)
-    alpha = (F.length(F.regexp_replace("text", "[^a-zA-Z ]", ""))
-             .cast("double") / F.greatest(F.length("text"), F.lit(1)))
-    distinct = (F.size(F.array_distinct(toks)).cast("double")
-                / F.greatest(F.size(toks), F.lit(1)))
+    branch — interpreted mode has no subexpression elimination (measured
+    1.9× faster than one layer on `curate_corpus` at ×8-×32)."""
+    alpha, distinct, n_tok = _gate_features()
     feats = docs.select("doc_id", "text", alpha.alias("__alpha"),
-                        distinct.alias("__distinct"),
-                        F.size(toks).alias("__ntok"))
+                        distinct.alias("__distinct"), n_tok.alias("__ntok"))
     a, d, n = F.col("__alpha"), F.col("__distinct"), F.col("__ntok")
-    q_keep = ((n >= 16) & (n <= 4096) & (a >= 0.6) & (d >= 0.3))
+    q_keep = _gate_keep(a, d, n)
     q_reason = (F.when(n < 16, "too_short")
                 .when(n > 4096, "too_long")
                 .when(a < 0.6, "low_alpha")
@@ -1056,14 +1075,7 @@ def quality_gate_rates(spark, sf_dir):
     scan-speed heuristics as `quality_gate`, one partial+final agg on the
     bounded source key."""
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = F.split(F.col("text"), " ", -1)
-    alpha = (F.length(F.regexp_replace("text", "[^a-zA-Z ]", ""))
-             .cast("double") / F.greatest(F.length("text"), F.lit(1)))
-    distinct = (F.size(F.array_distinct(toks)).cast("double")
-                / F.greatest(F.size(toks), F.lit(1)))
-    n_tok = F.size(toks)
-    keep = ((n_tok >= 16) & (n_tok <= 4096)
-            & (alpha >= 0.6) & (distinct >= 0.3)).cast("int")
+    keep = _gate_keep(*_gate_features()).cast("int")
     return (docs.select("source", keep.alias("keep"))
             .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -1577,6 +1589,15 @@ ORDER BY t.doc_id
 """
 
 
+def _ws_lower_tokens(spark, sf_dir):
+    """(doc_id, tok): one row per lowercased whitespace token of every
+    document with text."""
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    return docs.select(
+        "doc_id",
+        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"))
+
+
 @register("quality_perplexity", bench=True, sql=PPL_SQL,
           tags=("pipeline", "text"))
 def quality_perplexity(spark, sf_dir):
@@ -1590,10 +1611,7 @@ def quality_perplexity(spark, sf_dir):
     size, never corpus size. The exploded token table is persisted — the
     train side (vocab counts) and the score side both read it, so the
     corpus is scanned and regex-tokenized once, not three times."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = track_persist(docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")))
+    toks = track_persist(_ws_lower_tokens(spark, sf_dir))
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = vocab.agg(F.sum("cnt").cast("double").alias("n"))
     bits = -F.log2(F.col("cnt") / F.col("n"))
@@ -1807,22 +1825,12 @@ def hybrid_search_rrf(spark, sf_dir):
     buckets) at 100 TB without touching the fusion. The distinct token
     table (the inverted index) is persisted: doc sizes, the query side,
     and the candidate join all read it, so the corpus is tokenized once.
-
-    Round-19 re-probe of the FullOuter fusion SMJ (min-of-10, baseline
-    0.96/1.06): AQE maxShuffledHashJoinLocalMapThreshold=64m =
-    0.936/1.053 (flat); preferSortMergeJoin=false = 1.336/1.552 (+39%
-    min). Full-outer cannot broadcast, the sides are per-query top-50
-    lists (hundreds of rows), and both knobs re-measured negative-to-flat
-    on the r19 host — the SMJ stays."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = track_persist(docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"))
-        .where(F.length("tok") > 0).distinct())
-    # NOT persisted (round-18 A/B): sizes feeds both lex join sides, but
-    # each re-aggregates from the CACHED token table — a min-of-10 A/B
-    # measured the persist's cache-fill barrier at +27% min / +30% median
-    # on this bench query, so the dual agg over cache wins.
+    The full-outer fusion stays a sort-merge join: it cannot broadcast,
+    and a shuffled hash join measured no faster on top-50 lists."""
+    toks = track_persist(_ws_lower_tokens(spark, sf_dir)
+                         .where(F.length("tok") > 0).distinct())
+    # sizes is not persisted: both lex join sides re-aggregate it from
+    # the cached token table, which measured faster than a cache fill.
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     q = (toks.where(F.col("doc_id") < 3)
          .select(F.col("doc_id").alias("qid"), "tok"))
@@ -2561,14 +2569,9 @@ def shard_balance(spark, sf_dir):
     pre-flight check that content-addressed sharding didn't produce a
     straggler shard (ratios should sit near 1.0; a hot shard slows every
     epoch). One scan → bounded shard agg → window over ≤8 rows."""
-    docs = load(spark, sf_dir, "documents")
-    h = F.md5(F.col("doc_id").cast("string"))
-    shard = F.floor(
-        (F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1)) - 1) / 2
-    ).cast("bigint")
-    nt = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    agg = (docs.where(F.col("text").isNotNull() & (F.trim("text") != ""))
-           .select(shard.alias("shard"), nt.alias("nt"))
+    shard = _md5_shard(F.md5(F.col("doc_id").cast("string")))
+    agg = (load(spark, sf_dir, "documents").where(has_text())
+           .select(shard.alias("shard"), F.size(ws_tokens()).alias("nt"))
            .groupBy("shard")
            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
                 F.sum("nt").cast("bigint").alias("n_tokens")))
@@ -2835,18 +2838,33 @@ def io_json_roundtrip(spark, sf_dir):
     see io_schema_evolution). The guard returns the stable empty output
     instead of failing resolution, which is what a nightly pipeline
     needs on a quiet source."""
+    return _io_roundtrip(spark, sf_dir, "json")
+
+
+def _io_roundtrip(spark, sf_dir, fmt: str):
+    """Per-source aggregate of the documents table after a round trip
+    through `sources.io.save` and `sources.io.load` in format ``fmt``.
+    A zero-row write leaves nothing to infer a schema from (the load
+    raises, or returns no columns): the stable empty output is returned
+    instead."""
     import tempfile
+
+    from pyspark.errors import AnalysisException
 
     from spark_sentiment_spark.sources import io as sio
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars")
     out = track_staging_dir(
-        tempfile.mkdtemp(prefix="io_json_rt_")) + "/docs.json"
-    sio.save(docs, out, "json")
-    back, ftype = sio.load(spark, out)
-    assert ftype == "json"
-    if not {"source", "lang", "n_chars", "text"} <= set(back.columns):
+        tempfile.mkdtemp(prefix=f"io_{fmt}_rt_")) + f"/docs.{fmt}"
+    sio.save(docs, out, fmt)
+    try:
+        back, ftype = sio.load(spark, out)
+        assert ftype == fmt
+        cols = set(back.columns)
+    except AnalysisException:
+        cols = set()
+    if not {"source", "lang", "n_chars", "text"} <= cols:
         return spark.createDataFrame(
             [], "source string, n_docs bigint, n_langs bigint, "
                 "sum_chars bigint, sum_text_len bigint")
@@ -2976,16 +2994,8 @@ def io_schema_evolution(spark, sf_dir):
             .orderBy("lang"))
 
 
-IO_ORC_SQL = """
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-       CAST(sum(length(text)) AS BIGINT) AS sum_text_len
-FROM documents
-GROUP BY source
-ORDER BY source
-"""
+# The ORC round trip must return the JSON one's rows: the same oracle.
+IO_ORC_SQL = IO_JSON_SQL
 
 
 @register("io_orc_roundtrip", sql=IO_ORC_SQL, tags=("io", "pipeline"))
@@ -3011,31 +3021,7 @@ def io_orc_roundtrip(spark, sf_dir):
     behavior; the parquet queries solve this with writer-side schemas,
     but the extension-dispatched `sio.load` path is schema-on-read by
     design)."""
-    import tempfile
-
-    from pyspark.errors import AnalysisException
-
-    from spark_sentiment_spark.sources import io as sio
-
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars")
-    out = track_staging_dir(
-        tempfile.mkdtemp(prefix="io_orc_rt_")) + "/docs.orc"
-    sio.save(docs, out, "orc")
-    try:
-        back, ftype = sio.load(spark, out)
-    except AnalysisException:
-        return spark.createDataFrame(
-            [], "source string, n_docs bigint, n_langs bigint, "
-                "sum_chars bigint, sum_text_len bigint")
-    assert ftype == "orc"
-    return (back.groupBy("source")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                 F.countDistinct("lang").cast("bigint").alias("n_langs"),
-                 F.sum("n_chars").cast("bigint").alias("sum_chars"),
-                 F.sum(F.length("text")).cast("bigint")
-                 .alias("sum_text_len"))
-            .orderBy("source"))
+    return _io_roundtrip(spark, sf_dir, "orc")
 
 
 # --- The composed training-set build (curate → mix → pack → shuffle) --------
@@ -3183,11 +3169,7 @@ def _prep_training_set(kept):
                       .cast("bigint").alias("window_id")))
 
     h = F.md5(F.col("doc_id").cast("string"))
-    # floor() on BOTH sides, as in shuffle_shards: DuckDB's CAST rounds
-    # while Spark's truncates
-    shard = F.floor(
-        (F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1)) - 1) / 2
-    ).cast("bigint")
+    shard = _md5_shard(h)
     ws = Window.partitionBy("shard").orderBy("h", "doc_id")
     return (packed.withColumn("h", h).withColumn("shard", shard)
             .withColumn("pos", F.row_number().over(ws).cast("bigint"))

@@ -120,6 +120,26 @@ def embedding_centroids(spark, sf_dir):
     )
 
 
+def _ivf_candidates(spark, sf_dir, n_queries, *query_cols):
+    """IVF probe candidates: each query vector (vec_id < n_queries, with
+    ``query_cols``) as (qid, qu, cell) joined to the members (vec_id,
+    label, u) multi-assigned to its IVF_PROBE nearest cells, itself
+    excluded. The per-vector cell ranking is persisted: assignment and
+    routing both read it."""
+    emb = load(spark, sf_dir, "embeddings")
+    vecs = unit_vector_frame(emb, "u", "label")
+    cent = ivf_centroids(vecs)
+    scored = track_persist(ivf_ranked(vecs, cent))  # n_cells rows per vector
+    assigned = scored.where(F.col("rn") <= IVF_ASSIGN) \
+        .select("vec_id", "label", "u", "cell")
+    qprobes = (scored.where((F.col("vec_id") < n_queries)
+                            & (F.col("rn") <= IVF_PROBE))
+               .select(F.col("vec_id").alias("qid"), *query_cols,
+                       F.col("u").alias("qu"), "cell"))
+    return (assigned.join(F.broadcast(qprobes), "cell")
+            .where(F.col("vec_id") != F.col("qid")))
+
+
 @register("ann_ivf_topk", sql=ANN_IVF_SQL, tags=("similarity",))
 def ann_ivf_topk(spark, sf_dir):
     """Multi-assignment IVF (inverted-file) ANN: a coarse quantizer
@@ -128,16 +148,14 @@ def ann_ivf_topk(spark, sf_dir):
     cells, and exact-cosine re-rank touches only the probed candidates —
     a bounded 6/16 expected scan fraction instead of the corpus.
 
-    Round 5 swapped the MLlib-KMeans coarse layer for content-addressed
-    seed centroids (the 16 vectors with smallest md5(vec_id) —
-    sampled-centroid IVF with 0 Lloyd iterations, the same upgrade that
-    earned `dedup_semantic` its exact twin): cell assignment, probe
-    routing, and re-rank are now pure arithmetic any engine reproduces,
-    so the check went rows-only → EXACT DuckDB oracle. Query routing
-    reuses the SAME per-vector cell ranking as indexing (rn<=2 = home
-    cells, rn<=3 = query probes) — no driver-side routing at all, where
-    the KMeans version collected centroids. Sampled centroids recall
-    less per probe than Lloyd-trained ones, so the assignment side is
+    The coarse layer is content-addressed seed centroids (the 16 vectors
+    with smallest md5(vec_id) — sampled-centroid IVF with 0 Lloyd
+    iterations, as in `dedup_semantic`): cell assignment, probe routing,
+    and re-rank are pure arithmetic any engine reproduces, so the DuckDB
+    oracle is exact. Query routing reuses the SAME per-vector cell
+    ranking as indexing (rn<=2 = home cells, rn<=3 = query probes), so
+    routing stays inside the plan (`_ivf_candidates`). Sampled centroids
+    recall less per probe than Lloyd-trained ones, so the assignment side is
     probed too (deterministic recall@10 = 0.56 vs brute on the fixture,
     floor 0.5 pinned by tests/test_similarity_recall.py — exact
     reproducibility means that number cannot drift).
@@ -148,19 +166,7 @@ def ann_ivf_topk(spark, sf_dir):
     broadcasts are genuinely bounded (k rows / queries×probe rows) —
     unlike vocab-sized tables these stay hint-safe at any corpus
     size."""
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = unit_vector_frame(emb, "u", "label")
-    cent = ivf_centroids(vecs)
-    scored = track_persist(ivf_ranked(vecs, cent))  # n_cells rows per vector
-    assigned = scored.where(F.col("rn") <= IVF_ASSIGN) \
-        .select("vec_id", "label", "u", "cell")
-    qprobes = (scored.where((F.col("vec_id") < 5)
-                            & (F.col("rn") <= IVF_PROBE))
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("u").alias("qu"), "cell"))
-
-    cand = (assigned.join(F.broadcast(qprobes), "cell")
-            .where(F.col("vec_id") != F.col("qid")))
+    cand = _ivf_candidates(spark, sf_dir, 5)
     cos = F.round(dot(F.col("qu"), F.col("u")), 6)
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
@@ -296,6 +302,36 @@ LIMIT 200
 """
 
 
+def _adaptive_planes(spark, sf_dir, floor: int) -> int:
+    """Hyperplanes per LSH table, max(floor, ceil(log2(n / 16))): bucket
+    occupancy, and so the in-bucket join, stays bounded as the corpus
+    grows. n is counted on the raw parquet scan (row-group counts,
+    memoized per path), not on the normalized frame, whose repartition
+    would be paid just to size an integer."""
+    import math
+
+    n = row_count(spark, f"{sf_dir}/embeddings.parquet")
+    return max(floor, math.ceil(math.log2(max(n, 1) / 16 or 1)))
+
+
+def _hyperplanes(seed: str, dim: int, n_tables: int, n_planes: int):
+    """(planes_t, radix): the dim × (T·P) md5-derived dyadic hyperplanes
+    of md5(f"{seed}{j}:{d}") that the SQL twins rebuild, and the per-table
+    bit weights that pack P sign bits into a bucket id."""
+    import hashlib
+
+    import numpy as np
+
+    planes_t = np.array(
+        [[int(hashlib.md5(f"{seed}{j}:{d}".encode()).hexdigest()[:6], 16)
+          / 16777216.0 - 0.5
+          for d in range(dim)]
+         for j in range(n_tables * n_planes)],
+        dtype=np.float64).T                      # dim × (T·P)
+    radix = (1 << np.arange(n_planes - 1, -1, -1)).astype(np.int64)
+    return planes_t, radix
+
+
 @register("ann_lsh_topk", sql=ANN_LSH_SQL, bench=True, tags=("similarity",))
 def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
                  n_planes: int | None = None):
@@ -304,25 +340,13 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
     pairs share any table's bucket (posexplode + bucket-local self-join,
     no all-pairs) → exact cosine re-rank of the deduped candidates →
     global top-200 pairs. Brute force (`dedup_embedding_cosine` /
-    `knn_cosine_topk`) stays as the recall oracle; since round 5 the
-    hyperplanes are md5-derived dyadic rationals (see ANN_LSH_SQL note),
-    which upgraded the driver check from rows-only to an exact DuckDB
-    twin reproducing buckets, candidates, and the re-ranked top-200."""
+    `knn_cosine_topk`) stays as the recall oracle; the hyperplanes are
+    md5-derived dyadic rationals (see ANN_LSH_SQL note), so the DuckDB
+    twin reproduces buckets, candidates, and the re-ranked top-200
+    exactly."""
     emb = load(spark, sf_dir, "embeddings")
-    dim = ANN_LSH_DIM
     if n_planes is None:
-        # The scale rule made executable: candidate pairs grow as n²/2^P
-        # per table, so P tracks log2(n / bucket_target) and per-bucket
-        # occupancy — hence the in-bucket join — stays bounded as the
-        # corpus grows. Counted on the RAW scan (zero-column parquet read,
-        # row-group counts) and memoized per path: counting the
-        # width-normalized `emb` would pay its repartition shuffle — a
-        # measured 0.8s/run at sf0.1 — just to size an integer.
-        import math
-
-        n = row_count(spark, f"{sf_dir}/embeddings.parquet")
-        n_planes = max(ANN_LSH_PLANES,
-                       math.ceil(math.log2(max(n, 1) / 16 or 1)))
+        n_planes = _adaptive_planes(spark, sf_dir, ANN_LSH_PLANES)
 
     e = as_double("embedding")
     # The T×P signature is one Arrow-batched matmul per partition:
@@ -332,18 +356,10 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
     # measured ~2s per run on 500 rows (boxed per-element lambda eval,
     # with or without codegen), while the BLAS-backed batch matmul is
     # sub-millisecond and scales per Arrow batch on executors.
-    import hashlib
-
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    planes_t = np.array(
-        [[int(hashlib.md5(f"{j}:{d}".encode()).hexdigest()[:6], 16)
-          / 16777216.0 - 0.5
-          for d in range(dim)]
-         for j in range(n_tables * n_planes)],
-        dtype=np.float64).T                      # dim × (T·P)
-    radix = (1 << np.arange(n_planes - 1, -1, -1)).astype(np.int64)
+    planes_t, radix = _hyperplanes("", ANN_LSH_DIM, n_tables, n_planes)
 
     @pandas_udf("array<long>")
     def _buckets(embs: pd.Series) -> pd.Series:
@@ -438,13 +454,12 @@ def embedding_quantize(spark, sf_dir):
 def ann_pq_topk(spark, sf_dir, topk: int = 10, rerank: int = PQ_RERANK):
     """Product-quantization ANN (the IVF-PQ memory-compression path):
 
-    1. L2-normalize; codebooks are CONTENT-ADDRESSED since round 5: per
-       subspace m, the 16 codewords are the m-th sub-vectors of the 16
-       corpus vectors with smallest md5(vec_id) (sampled codebooks, 0
-       Lloyd iterations) — the same upgrade that made `dedup_semantic`
-       and `ann_ivf_topk` exactly oracle-checkable. Encoding, ADC
-       scoring, and re-rank are pure arithmetic any engine reproduces,
-       so the check went rows-only → EXACT DuckDB oracle.
+    1. L2-normalize; codebooks are CONTENT-ADDRESSED: per subspace m,
+       the 16 codewords are the m-th sub-vectors of the 16 corpus
+       vectors with smallest md5(vec_id) (sampled codebooks, 0 Lloyd
+       iterations), as in `dedup_semantic` and `ann_ivf_topk`. Encoding,
+       ADC scoring, and re-rank are pure arithmetic any engine
+       reproduces, so the DuckDB oracle is exact.
     2. Encode every vector to M 4-bit codes via one Arrow-batched argmin
        per partition. The per-code distance accumulates over subspace
        dims SEQUENTIALLY (a dim-loop of vectorized +=, not np.sum, whose
@@ -474,8 +489,7 @@ def ann_pq_topk(spark, sf_dir, topk: int = 10, rerank: int = PQ_RERANK):
     if n_codes == 0:
         # empty corpus: no quantizer exists — empty result, stable schema
         # (tests/test_empty_tables.py).
-        return spark.createDataFrame(
-            [], "qid long, vec_id long, cosine double, rn long")
+        return spark.createDataFrame([], _TOPK_COLS)
     encode = pq_encoder(codebooks, n_codes)
     encoded = track_persist(
         vecs.select("vec_id", encode("e").alias("codes")))  # row per vector
@@ -503,6 +517,24 @@ ANN_IVFPQ_COMPACT_SQL = ivfpq_sql(extra_cols=f""",
           SELECT DISTINCT vec_id % {N_COMPACT_BATCHES} AS b, cell
           FROM assigned) fb) AS files_before,
        (SELECT count(DISTINCT cell) FROM assigned) AS files_after""")
+
+
+#: Output schema of the top-k probes, for their empty-corpus result.
+_TOPK_COLS = "qid long, vec_id long, cosine double, rn long"
+
+
+def _ivfpq_index(spark, sf_dir, **stage_kw):
+    """(vecs, base, n_codes): the unit-normalized embeddings (vec_id, e)
+    and the composed IVFPQ index `ivfpq_stage_index` stages over them;
+    n_codes == 0 marks an empty corpus."""
+    vecs = unit_vector_frame(load(spark, sf_dir, "embeddings"), "e")
+    return (vecs, *ivfpq_stage_index(spark, vecs, **stage_kw))
+
+
+def _tombstones(vecs):
+    """The deterministic delete set (vec_id % TOMB_MOD == TOMB_RES)."""
+    return (vecs.where((F.col("vec_id") % TOMB_MOD) == TOMB_RES)
+            .select("vec_id"))
 
 
 @register("ann_ivfpq_persisted_probe", sql=ANN_IVFPQ_SQL,
@@ -552,14 +584,10 @@ def ann_ivfpq_persisted_probe(spark, sf_dir, topk: int = 10,
     their cells' partitions keeps the layout valid for the next batch —
     the same append contract as the IVF cell index and the MinHash band
     index."""
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = unit_vector_frame(emb, "e")
-
     # ---- phase 1: build + persist the composed index (ONCE) ------------
-    base, n_codes = ivfpq_stage_index(spark, vecs)
+    vecs, base, n_codes = _ivfpq_index(spark, sf_dir)
     if n_codes == 0:
-        return spark.createDataFrame(
-            [], "qid long, vec_id long, cosine double, rn long")
+        return spark.createDataFrame([], _TOPK_COLS)
 
     # ---- phase 2: per-batch probe ---------------------------------------
     return ivfpq_probe(spark, vecs, base, n_codes, rerank, topk)
@@ -615,18 +643,11 @@ def ann_ivfpq_tombstone_probe(spark, sf_dir, topk: int = 10,
     the probe's pruned scan — zero shuffle of the code table; the purge
     is one linear anti-join pass over the compressed codes, per-cell
     independent like compaction. No Python anywhere."""
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = unit_vector_frame(emb, "e")
-
-    base, n_codes = ivfpq_stage_index(spark, vecs)
+    vecs, base, n_codes = _ivfpq_index(spark, sf_dir)
     if n_codes == 0:
-        return spark.createDataFrame(
-            [], "qid long, vec_id long, cosine double, rn long")
-
-    tomb = (vecs.where((F.col("vec_id") % TOMB_MOD) == TOMB_RES)
-            .select("vec_id"))
+        return spark.createDataFrame([], _TOPK_COLS)
     return ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
-                       tombstones=tomb)
+                       tombstones=_tombstones(vecs))
 
 
 def _count_cell_parts(codes_dir: str) -> int:
@@ -668,7 +689,7 @@ def ann_ivfpq_compacted_probe(spark, sf_dir, topk: int = 10,
     SQL verbatim plus the two file counts — computed by the writer's
     own rule (distinct (batch, cell) pairs before; distinct cells
     after) from the oracle's assignment CTE, never static literals
-    (the round-14 adaptive-rule lesson), and cross-checked against the
+    (they must follow the data at every SF), and cross-checked against the
     ACTUAL directory listings on the Spark side, so a writer producing
     any other fragmentation hash-mismatches. Production picks files per
     cell as ceil(cell_bytes / target_file_size); the demo's corpus
@@ -684,17 +705,13 @@ def ann_ivfpq_compacted_probe(spark, sf_dir, topk: int = 10,
     maintenance service compacts only cells whose file count crossed a
     threshold. Probe cost afterwards returns to the one-shot-index
     baseline: probe/K of the cells, one file each."""
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = unit_vector_frame(emb, "e")
-
     # ---- build + append: the fragmented micro-batch layout -------------
-    base, n_codes = ivfpq_stage_index(spark, vecs,
-                                      code_batches=N_COMPACT_BATCHES,
-                                      prefix="ivfpq_compact_")
+    vecs, base, n_codes = _ivfpq_index(spark, sf_dir,
+                                       code_batches=N_COMPACT_BATCHES,
+                                       prefix="ivfpq_compact_")
     if n_codes == 0:
         return spark.createDataFrame(
-            [], "qid long, vec_id long, cosine double, rn long, "
-                "files_before long, files_after long")
+            [], _TOPK_COLS + ", files_before long, files_after long")
     files_before = _count_cell_parts(base + "/codes")
 
     # ---- compact: rewrite each cell's fragments, keep the layout --------
@@ -723,6 +740,8 @@ def ann_ivfpq_compacted_probe(spark, sf_dir, topk: int = 10,
 # (serve the stale index with tombstones) is pinned on the same corpus
 # with a raised threshold in tests/test_round16_queries.py.
 REFRESH_PCT = 10
+_REFRESH_COLS = (_TOPK_COLS
+                 + ", tomb_rows long, indexed_rows long, refreshed long")
 
 ANN_IVFPQ_REFRESH_SQL = ivfpq_sql(
     base_pred=f" WHERE vec_id % {TOMB_MOD} <> {TOMB_RES}",
@@ -767,7 +786,7 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
       counts because every indexed vector holds exactly one distinct
       vec_id in the code table — an assumption the decision pass PINS
       by comparing against the corpus row count and failing loudly on
-      a duplicate vec_id or non-encodable row; round-16 ADVICE).
+      a duplicate vec_id or non-encodable row).
     * SERVE STALE when not triggered: the unmodified tombstone-probe
       path (broadcast LEFT ANTI on the pruned scan). Pinned on the same
       corpus with a raised threshold in tests/test_round16_queries.py:
@@ -794,17 +813,12 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
     so amortized over many delete batches); probes never stop serving —
     the stale index answers (tombstone-correct) until the refreshed
     artifacts are staged. No Python on any data path."""
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = unit_vector_frame(emb, "e")
-
     # ---- the standing index + accumulated deletes -----------------------
-    base, n_codes = ivfpq_stage_index(spark, vecs, prefix="ivfpq_refresh_")
+    vecs, base, n_codes = _ivfpq_index(spark, sf_dir,
+                                       prefix="ivfpq_refresh_")
     if n_codes == 0:
-        return spark.createDataFrame(
-            [], "qid long, vec_id long, cosine double, rn long, "
-                "tomb_rows long, indexed_rows long, refreshed long")
-    tomb = (vecs.where((F.col("vec_id") % TOMB_MOD) == TOMB_RES)
-            .select("vec_id"))
+        return spark.createDataFrame([], _REFRESH_COLS)
+    tomb = _tombstones(vecs)
 
     # ---- decide: one column-pruned pass over the persisted codes --------
     stats = (spark.read.parquet(base + "/codes")
@@ -814,7 +828,7 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
                                  True)).alias("d"))
              .first())
     indexed_rows, tomb_rows = int(stats["n"]), int(stats["d"])
-    # Round-16 ADVICE: the decision counts distinct vec_id in the staged
+    # The decision counts distinct vec_id in the staged
     # code table while the oracle's scalar subqueries count raw embeddings
     # rows — equal ONLY if vec_id is unique in the corpus and every row is
     # indexed. Pin that assumption loudly instead of letting a duplicate
@@ -841,9 +855,7 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
             # full takedown: every indexed vector deleted — nothing to
             # retrain on and nothing to probe (engine-grade degenerate
             # contract, pinned in tests/test_round16_queries.py)
-            return spark.createDataFrame(
-                [], "qid long, vec_id long, cosine double, rn long, "
-                    "tomb_rows long, indexed_rows long, refreshed long")
+            return spark.createDataFrame([], _REFRESH_COLS)
         res = ivfpq_probe(spark, survivors, base2, n_codes2, rerank, topk)
     else:
         res = ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
@@ -954,19 +966,10 @@ def multiprobe_candidates(emb, n_tables: int = MP_TABLES,
     the home-bucket-only baseline. Returns the DISTINCT unordered pairs
     whose home bucket matches any of the other side's probed buckets
     (home + ``n_flips`` lowest-|margin| bit flips) in any table."""
-    import hashlib
-
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    dim = MP_DIM
-    planes_t = np.array(
-        [[int(hashlib.md5(f"mp:{j}:{d}".encode()).hexdigest()[:6], 16)
-          / 16777216.0 - 0.5
-          for d in range(dim)]
-         for j in range(n_tables * n_planes)],
-        dtype=np.float64).T                      # dim × (T·P)
-    radix = (1 << np.arange(n_planes - 1, -1, -1)).astype(np.int64)
+    planes_t, radix = _hyperplanes("mp:", MP_DIM, n_tables, n_planes)
     per_probe = n_flips + 1
 
     @pandas_udf("array<long>")
@@ -1033,21 +1036,23 @@ def dedup_embedding_multiprobe(spark, sf_dir):
     get P=7 in both engines. Against `dedup_embedding_cosine` (exact
     all-pairs twin) the fixture recall is pinned in
     tests/test_similarity_recall.py; candidate growth vs corpus growth is
-    pinned ~linear there too (round-6 VERDICT ask b)."""
-    import math
-
+    pinned ~linear there too."""
     emb = load(spark, sf_dir, "embeddings")
-    n = row_count(spark, f"{sf_dir}/embeddings.parquet")
-    n_planes = max(MP_PLANES, math.ceil(math.log2(max(n, 1) / 16 or 1)))
-    cand = multiprobe_candidates(emb, n_planes=n_planes)
+    pairs, cos = _cosine_verified(emb, multiprobe_candidates(
+        emb, n_planes=_adaptive_planes(spark, sf_dir, MP_PLANES)))
+    return (pairs.select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
+            .orderBy("vec_a", "vec_b"))
+
+
+def _cosine_verified(emb, cand):
+    """Candidate pairs (vec_a, vec_b) joined to both unit vectors and kept
+    at cosine >= MP_TAU, with the cosine Column."""
     vecs = unit_vector_frame(emb, "u")
     va, vb = vecs.alias("va"), vecs.alias("vb")
     cos = dot(F.col("va.u"), F.col("vb.u"))
     return (cand.join(va, F.col("vec_a") == F.col("va.vec_id"))
             .join(vb, F.col("vec_b") == F.col("vb.vec_id"))
-            .where(cos >= MP_TAU)
-            .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
-            .orderBy("vec_a", "vec_b"))
+            .where(cos >= MP_TAU)), cos
 
 
 # --- Semantic train/eval decontamination -------------------------------------
@@ -1087,21 +1092,13 @@ def decontaminate_semantic(spark, sf_dir):
     (1+flips) while the stored index stays T rows per vector, candidates
     bounded by probed-bucket occupancy, exact verify touches candidates
     only — never |train| × |eval|."""
-    import math
-
     emb = load(spark, sf_dir, "embeddings")
-    n = row_count(spark, f"{sf_dir}/embeddings.parquet")
-    n_planes = max(MP_PLANES, math.ceil(math.log2(max(n, 1) / 16 or 1)))
     is_eval_a = F.col("vec_a") % 11 == 0
     is_eval_b = F.col("vec_b") % 11 == 0
-    cand = (multiprobe_candidates(emb, n_planes=n_planes)
-            .where(is_eval_a != is_eval_b))
-    vecs = unit_vector_frame(emb, "u")
-    va, vb = vecs.alias("va"), vecs.alias("vb")
-    cos = dot(F.col("va.u"), F.col("vb.u"))
-    return (cand.join(va, F.col("vec_a") == F.col("va.vec_id"))
-            .join(vb, F.col("vec_b") == F.col("vb.vec_id"))
-            .where(cos >= MP_TAU)
+    pairs, cos = _cosine_verified(emb, multiprobe_candidates(
+        emb, n_planes=_adaptive_planes(spark, sf_dir, MP_PLANES))
+        .where(is_eval_a != is_eval_b))
+    return (pairs
             .select(F.when(is_eval_a, F.col("vec_b"))
                     .otherwise(F.col("vec_a")).alias("train_vec"),
                     F.when(is_eval_a, F.col("vec_a"))
@@ -1165,10 +1162,9 @@ def knn_classify(spark, sf_dir):
     argmax are two windows partitioned by qid (bounded occupancy: corpus
     then k rows per query). At 100 TB you swap the exact scoring pass
     for the IVF/PQ candidate generators in this module and keep the
-    vote/argmax stages unchanged — the classification layer is index-
-    agnostic by construction. That swap is IMPLEMENTED as
-    `knn_classify_ivf` below (round-8), with the agreement pin in
-    tests/test_similarity_recall.py."""
+    vote/argmax stages unchanged: `knn_classify_ivf` below does, and
+    both call the one `_knn_vote`; tests/test_similarity_recall.py pins
+    their agreement."""
     emb = load(spark, sf_dir, "embeddings")
     q = (emb.where(F.col("vec_id") < KNN_CLASSIFY_NQ)
          .select(F.col("vec_id").alias("qid"),
@@ -1177,26 +1173,10 @@ def knn_classify(spark, sf_dir):
     c = emb.select("vec_id", "label", as_double("embedding").alias("ce"))
     cos = (dot(F.col("qe"), F.col("ce"))
            / (norm(F.col("qe")) * norm(F.col("ce"))))
-    w_rank = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    topk = (c.crossJoin(F.broadcast(q))
-            .where(F.col("qid") != F.col("vec_id"))
-            .select("qid", "true_label", "vec_id", "label",
-                    cos.alias("cos"))
-            .withColumn("rn", F.row_number().over(w_rank))
-            .where(F.col("rn") <= KNN_CLASSIFY_K))
-    votes = (topk.groupBy("qid", "true_label", "label")
-             .agg(F.count(F.lit(1)).alias("n_votes")))
-    w_vote = Window.partitionBy("qid").orderBy(F.desc("n_votes"),
-                                               F.asc("label"))
-    return (votes.withColumn("vr", F.row_number().over(w_vote))
-            .where(F.col("vr") == 1)
-            .select("qid",
-                    F.col("label").cast("long").alias("pred_label"),
-                    F.col("n_votes").cast("long").alias("n_votes"),
-                    F.col("true_label").cast("long").alias("true_label"),
-                    (F.col("label") == F.col("true_label"))
-                    .cast("long").alias("correct"))
-            .orderBy("qid"))
+    return _knn_vote(c.crossJoin(F.broadcast(q))
+                     .where(F.col("qid") != F.col("vec_id"))
+                     .select("qid", "true_label", "vec_id", "label",
+                             cos.alias("cos")))
 
 
 KNN_IVF_SQL = f"""
@@ -1263,7 +1243,7 @@ def knn_classify_ivf(spark, sf_dir):
     query vectors probe their 3 nearest coarse cells, candidates are the
     probed cells' multi-assigned members (bounded by probe × assign ×
     mean cell occupancy, never the corpus), and the 10-NN majority vote
-    runs unchanged on top (round-7 VERDICT item 4). Content-addressed
+    runs unchanged on top (the shared `_knn_vote`). Content-addressed
     seed centroids keep the whole pipeline engine-reproducible, so this
     carries a full exact oracle, and tests/test_similarity_recall.py
     pins prediction agreement with the exact classifier.
@@ -1272,25 +1252,21 @@ def knn_classify_ivf(spark, sf_dir):
     100 TB the scored/assigned index is the persisted artifact, queries
     join only their probed cells, and per-query work is cell-occupancy-
     bounded; the vote stays a (query × labels-in-topk) hash agg."""
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = unit_vector_frame(emb, "u", "label")
-    cent = ivf_centroids(vecs)
-    scored = track_persist(ivf_ranked(vecs, cent))  # n_cells rows per vector
-    assigned = scored.where(F.col("rn") <= IVF_ASSIGN) \
-        .select("vec_id", "label", "u", "cell")
-    qprobes = (scored.where((F.col("vec_id") < KNN_CLASSIFY_NQ)
-                            & (F.col("rn") <= IVF_PROBE))
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("label").alias("true_label"),
-                       F.col("u").alias("qu"), "cell"))
     cos = F.round(dot(F.col("qu"), F.col("u")), 6)
-    cand = (assigned.join(F.broadcast(qprobes), "cell")
-            .where(F.col("vec_id") != F.col("qid"))
+    cand = (_ivf_candidates(spark, sf_dir, KNN_CLASSIFY_NQ,
+                            F.col("label").alias("true_label"))
             .select("qid", "true_label", "vec_id", "label",
                     cos.alias("cos"))
             .distinct())
+    return _knn_vote(cand)
+
+
+def _knn_vote(scored):
+    """The kNN majority vote over candidate rows (qid, true_label, vec_id,
+    label, cos): the top KNN_CLASSIFY_K by (cos desc, vec_id) per query,
+    then the label with the most votes (ties to the smaller label)."""
     w_rank = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    topk = (cand.withColumn("rn", F.row_number().over(w_rank))
+    topk = (scored.withColumn("rn", F.row_number().over(w_rank))
             .where(F.col("rn") <= KNN_CLASSIFY_K))
     votes = (topk.groupBy("qid", "true_label", "label")
              .agg(F.count(F.lit(1)).alias("n_votes")))

@@ -16,16 +16,20 @@ oracle replays the sketch, it does not merely approve an approximation.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_sentiment_spark.functions.text import WS_TOKENS_SQL
+from spark_sentiment_spark.functions.text import WS_TOKENS_SQL, has_text
 from spark_sentiment_spark.operators.sketch import (HLL_A, HLL_BITS,
                                                     HLL_BUCKET, HLL_M,
                                                     HLL_POW2, HLL_RHO,
-                                                    hexpoly, hll_sum)
+                                                    hexpoly, hll_estimate,
+                                                    hll_registers, hll_sum)
 from spark_sentiment_spark.plans.registry import (load, register,
-                                                  track_persist)
+                                                  track_persist,
+                                                  track_staging_dir)
 
 
 HLL_SQL = f"""
@@ -67,28 +71,15 @@ def agg_hll_sketch(spark, sf_dir):
     O(1) state per executor, mergeable across 1000 nodes; at 100 TB you
     keep only that branch and drop the exact COUNT(DISTINCT) twin (a
     full shuffle) that exists here to measure the sketch's error."""
-    # Round-18 optimization (guide §2.4): sketch side and exact twin both
-    # derive from ONE persisted distinct-key frame instead of two
-    # independent scans of the fact table (max(rho) over duplicate keys
-    # equals max(rho) over distinct keys; countDistinct(k) equals
-    # count(*) over the distinct frame). md5 is computed on distinct
-    # keys only.
+    # Sketch and exact twin both read one persisted distinct-key frame:
+    # max(rho) and the distinct count are duplicate-invariant, so the
+    # fact table is scanned once and md5 runs on distinct keys only.
     dk = track_persist(
         load(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("k")).distinct())
     keyed = dk.withColumn("h", F.md5(F.col("k").cast("string")))
-    buckets = (keyed.select(F.expr(HLL_BUCKET).alias("bucket"),
-                            F.expr(HLL_RHO).alias("rho"))
-               .groupBy("bucket").agg(F.max("rho").alias("mj")))
-    sketch = buckets.agg(
-        hll_sum().alias("s"),
-        F.count(F.lit(1)).cast("bigint").alias("n_buckets"))
     exact = dk.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-    est = F.round(F.lit(float(HLL_A)) / F.col("s").cast("double"), 2)
-    return (sketch.crossJoin(F.broadcast(exact))
-            .select("n_exact", est.alias("n_est"), "n_buckets",
-                    F.round(F.abs(est - F.col("n_exact"))
-                            / F.col("n_exact"), 4).alias("rel_err")))
+    return hll_estimate(hll_registers(keyed), exact)
 
 
 # --- Count-min sketch heavy hitters -----------------------------------------
@@ -141,8 +132,7 @@ def token_cms_topk(spark, sf_dir):
     stream without materializing the vocabulary. The exact tf table and
     top-k exist here as the error-measurement twin; at scale the candidate
     set comes from per-partition top-k merge and tf is never built."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
+    docs = load(spark, sf_dir, "documents").where(has_text())
     tf = track_persist(
         docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c")))
@@ -489,40 +479,56 @@ def quantile_histogram_sketch(spark, sf_dir):
     plan changes at 100 TB; contrast with exact percentiles, whose
     value-ranked cumulative window grows with the distinct-value
     count."""
-    # Round-18 optimization (guide §2.4/§8): the bounds pass and the
-    # binning pass both read the same single-column projection, and the
-    # 1-row bounds frame feeds three consumers (bin expr, rank targets,
-    # final edges) — persist both so the table is scanned once and the
-    # min/max/count aggregate runs once instead of three times.
-    docs = track_persist(load(spark, sf_dir, "documents").select("n_chars"))
-    bounds = track_persist(
-        docs.agg(F.min("n_chars").alias("min_v"),
-                 F.max("n_chars").alias("max_v"),
-                 F.count(F.lit(1)).cast("bigint").alias("n_rows")))
+    docs, bounds = _qh_bounds(spark, sf_dir)
     hist = (docs.crossJoin(F.broadcast(bounds))
             .select(F.expr(_QH_BIN).alias("bin"))
             .groupBy("bin").agg(F.count(F.lit(1)).cast("bigint").alias("c")))
     wcum = (Window.orderBy("bin")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = hist.select("bin", "c", F.sum("c").over(wcum).alias("cum_c"))
+    targets = _qh_targets(bounds, _QH_QUANTILES)
+    hit = (targets.join(cum, F.col("cum_c") >= F.col("target"))
+           .groupBy("quantile", "target").agg(F.min("bin").alias("bin")))
+    return (hit.join(cum, "bin")
+            .crossJoin(F.broadcast(bounds.select("min_v", "max_v")))
+            .select("quantile", "target", _qh_interpolated())
+            .orderBy("quantile"))
+
+
+def _qh_bounds(spark, sf_dir, *keys):
+    """(docs, bounds): the persisted documents projection (keys...,
+    n_chars) and its persisted per-``keys`` min_v, max_v and n_rows. The
+    binning pass and the bounds' three consumers (bin expression, rank
+    targets, final edges) read them: one scan, one bounds aggregate."""
+    docs = track_persist(
+        load(spark, sf_dir, "documents").select(*keys, "n_chars"))
+    bounds = track_persist(docs.groupBy(*keys).agg(
+        F.min("n_chars").alias("min_v"), F.max("n_chars").alias("max_v"),
+        F.count(F.lit(1)).cast("bigint").alias("n_rows")))
+    return docs, bounds
+
+
+def _qh_targets(bounds, quantiles, *keys):
+    """(keys..., quantile, target) rows: the integer-exact rank target
+    ceil(q * n_rows) of every quantile (label, num, den)."""
     targets = None
-    for lbl, num, den in _QH_QUANTILES:
+    for lbl, num, den in quantiles:
         t = bounds.select(
-            F.lit(lbl).alias("quantile"),
+            *keys, F.lit(lbl).alias("quantile"),
             F.expr(f"({num} * n_rows + {den - 1}) div {den}")
             .cast("bigint").alias("target"))
         targets = t if targets is None else targets.union(t)
-    hit = (targets.join(cum, F.col("cum_c") >= F.col("target"))
-           .groupBy("quantile", "target").agg(F.min("bin").alias("bin")))
+    return targets
+
+
+def _qh_interpolated():
+    """est_value: the target rank interpolated linearly inside its hit
+    bin, one IEEE division over integer operands each."""
     width = (F.col("max_v") - F.col("min_v") + 1).cast("double") / _QH_BINS
     frac = ((F.col("target") - (F.col("cum_c") - F.col("c"))).cast("double")
             / F.col("c"))
-    return (hit.join(cum, "bin")
-            .crossJoin(F.broadcast(bounds.select("min_v", "max_v")))
-            .select("quantile", "target",
-                    F.round(F.col("min_v") + (F.col("bin") + frac) * width, 4)
-                    .alias("est_value"))
-            .orderBy("quantile"))
+    return (F.round(F.col("min_v") + (F.col("bin") + frac) * width, 4)
+            .alias("est_value"))
 
 
 # --- Join-key skew profiler -------------------------------------------------
@@ -657,18 +663,14 @@ def events_daily_uniques_hll(spark, sf_dir):
     Scale: a (day, bucket) aggregate — group count x 256 rows — then a
     day-level fold; no distinct-key shuffle on the sketch path."""
     ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.4): one persisted distinct
-    # (day, user) frame feeds both the per-day registers and the exact
-    # per-day twin — the old two-branch shape scanned the events table
-    # twice and re-shuffled raw keys for the grouped countDistinct.
+    # One persisted distinct (day, user) frame feeds both the per-day
+    # registers and the exact per-day twin: events are scanned once and
+    # no raw keys are re-shuffled for a grouped countDistinct.
     ud = track_persist(ev.select(
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
         F.col("user_id").alias("k")).distinct())
     keyed = ud.withColumn("h", F.md5(F.col("k").cast("string")))
-    buckets = (keyed.select("day", F.expr(HLL_BUCKET).alias("bucket"),
-                            F.expr(HLL_RHO).alias("rho"))
-               .groupBy("day", "bucket").agg(F.max("rho").alias("mj")))
-    sketch = buckets.groupBy("day").agg(
+    sketch = hll_registers(keyed, "day").groupBy("day").agg(
         hll_sum().alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"))
     exact = ud.groupBy("day").agg(
@@ -737,14 +739,7 @@ def quantile_histogram_by_lang(spark, sf_dir):
     Scale: one bounded per-lang bounds aggregate joined back (broadcast
     at any realistic language count), one (lang, bin) aggregate, windows
     partitioned by lang over <=128 rows each."""
-    # Round-18 optimization: same persist treatment as
-    # quantile_histogram_sketch — one table scan, one bounded per-lang
-    # bounds aggregate shared by its three consumers.
-    docs = track_persist(
-        load(spark, sf_dir, "documents").select("lang", "n_chars"))
-    bounds = track_persist(docs.groupBy("lang").agg(
-        F.min("n_chars").alias("min_v"), F.max("n_chars").alias("max_v"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows")))
+    docs, bounds = _qh_bounds(spark, sf_dir, "lang")
     hist = (docs.join(F.broadcast(bounds), "lang")
             .select("lang", F.expr(_QH_BIN).alias("bin"))
             .groupBy("lang", "bin")
@@ -753,27 +748,16 @@ def quantile_histogram_by_lang(spark, sf_dir):
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = hist.select("lang", "bin", "c",
                       F.sum("c").over(wcum).alias("cum_c"))
-    targets = None
-    for lbl, num, den in _QHG_QUANTILES:
-        t = bounds.select(
-            "lang", F.lit(lbl).alias("quantile"),
-            F.expr(f"({num} * n_rows + {den - 1}) div {den}")
-            .cast("bigint").alias("target"))
-        targets = t if targets is None else targets.union(t)
+    targets = _qh_targets(bounds, _QHG_QUANTILES, "lang")
     hit = (targets.join(cum.withColumnRenamed("lang", "lang_c"),
                         (F.col("lang") == F.col("lang_c"))
                         & (F.col("cum_c") >= F.col("target")))
            .groupBy("lang", "quantile", "target")
            .agg(F.min("bin").alias("bin")))
-    width = (F.col("max_v") - F.col("min_v") + 1).cast("double") / _QH_BINS
-    frac = ((F.col("target") - (F.col("cum_c") - F.col("c"))).cast("double")
-            / F.col("c"))
     return (hit.join(cum, ["lang", "bin"])
             .join(F.broadcast(bounds.select("lang", "min_v", "max_v")),
                   "lang")
-            .select("lang", "quantile", "target",
-                    F.round(F.col("min_v") + (F.col("bin") + frac) * width, 4)
-                    .alias("est_value"))
+            .select("lang", "quantile", "target", _qh_interpolated())
             .orderBy("lang", "quantile"))
 
 
@@ -862,23 +846,18 @@ def events_sliding_users_hll(spark, sf_dir):
     grid, each minute/event explodes into its two covering windows) —
     no engine-specific window-function semantics anywhere."""
     ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.3/§2.4): both tiers — the HLL
-    # partials AND the exact error side — derive from the distinct
-    # (minute, user) pairs, persisted once. Before, the exact side
-    # re-scanned the raw events table and exploded EVERY EVENT into its
-    # two covering windows; minutes are whole and windows are 30-min
-    # aligned, so ts-windowing and minute-windowing select identical
-    # user sets (ts ∈ [w, w+1h) ⟺ minute(ts) ∈ [w, w+1h)), and max(rho)
-    # over duplicate user-minutes equals max(rho) over raw events. One
-    # fact scan instead of two, and the window fan-out runs over
-    # |minute×user| pairs instead of raw event volume.
+    # Both tiers — the HLL partials AND the exact error side — derive
+    # from the distinct (minute, user) pairs, persisted once. Minutes are
+    # whole and windows are 30-min aligned, so ts-windowing and
+    # minute-windowing select identical user sets (ts ∈ [w, w+1h) ⟺
+    # minute(ts) ∈ [w, w+1h)), and max(rho) over duplicate user-minutes
+    # equals max(rho) over raw events. One fact scan, and the window
+    # fan-out runs over |minute×user| pairs, not raw event volume.
     um = track_persist(ev.select(
         F.expr("timestamp_seconds((unix_seconds(ts) div 60) * 60)")
         .alias("minute"), "user_id").distinct())
     keyed = um.withColumn("h", F.md5(F.col("user_id").cast("string")))
-    mp = (keyed.select("minute", F.expr(HLL_BUCKET).alias("bucket"),
-                       F.expr(HLL_RHO).alias("rho"))
-          .groupBy("minute", "bucket").agg(F.max("rho").alias("mj")))
+    mp = hll_registers(keyed, "minute")
 
     def two_windows(tcol):
         base = (f"timestamp_seconds((unix_seconds({tcol}) div {_SLIDE_STEP})"
@@ -979,26 +958,18 @@ def agg_hll_merge_shards(spark, sf_dir):
     the same two-tier shape as `events_sliding_users_hll`'s minute
     partials. Everything after the scan is constant-size."""
     ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.4): the shard registers, the direct
-    # registers AND the exact twin all derive from one persisted distinct
-    # (shard, user) frame — the old three-branch shape scanned the events
-    # table three times. max(rho) is duplicate-invariant, and the exact
+    # The shard registers, the direct registers AND the exact twin all
+    # derive from one persisted distinct (shard, user) frame, so events
+    # are scanned once: max(rho) is duplicate-invariant, and the exact
     # distinct-user count over (shard, user) pairs equals the one over
     # raw events.
     su = track_persist(ev.select(
         (F.col("event_id") % 8).alias("shard"), "user_id").distinct())
     keyed = su.withColumn("h", F.md5(F.col("user_id").cast("string")))
-    shard_buckets = (keyed
-                     .select("shard", F.expr(HLL_BUCKET).alias("bucket"),
-                             F.expr(HLL_RHO).alias("rho"))
-                     .groupBy("shard", "bucket")
-                     .agg(F.max("rho").alias("mj")))
+    shard_buckets = hll_registers(keyed, "shard")
     merged_buckets = (shard_buckets.groupBy("bucket")
                       .agg(F.max("mj").alias("mj")))
-    direct_buckets = (keyed
-                      .select(F.expr(HLL_BUCKET).alias("bucket"),
-                              F.expr(HLL_RHO).alias("rho"))
-                      .groupBy("bucket").agg(F.max("rho").alias("mj")))
+    direct_buckets = hll_registers(keyed)
 
     def estimate(buckets):
         return buckets.agg(
@@ -1058,10 +1029,6 @@ def io_partitioned_prune(spark, sf_dir):
     partitions. The demo write shuffles once on day (30 output dirs,
     repartitioned by the partition column so each directory is written
     by one task, not torn across all of them)."""
-    import tempfile
-
-    from spark_sentiment_spark.plans.registry import track_staging_dir
-
     ev = load(spark, sf_dir, "events")
     base = track_staging_dir(tempfile.mkdtemp(prefix="part_prune_"))
     staged = ev.withColumn("day", F.date_format(F.date_trunc("day", "ts"),
@@ -1078,13 +1045,17 @@ def io_partitioned_prune(spark, sf_dir):
     back = (spark.read.schema(staged.schema)
             .parquet(base + "/events_by_day")
             .where(F.col("day").isin("2024-01-05", "2024-01-12")))
-    return (back
-            .groupBy("day", "event_type")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                 F.countDistinct("user_id").cast("bigint").alias("n_users"),
-                 F.sum(F.floor(F.col("value") * 10000).cast("bigint"))
-                 .cast("bigint").alias("val_e4"))
+    return (back.groupBy("day", "event_type").agg(*_event_mass())
             .orderBy("day", "event_type"))
+
+
+def _event_mass():
+    """Per-group n, distinct n_users and the value mass val_e4 on the
+    integer 1e-4 grid of an events frame."""
+    return (F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.countDistinct("user_id").cast("bigint").alias("n_users"),
+            F.sum(F.floor(F.col("value") * 10000).cast("bigint"))
+            .cast("bigint").alias("val_e4"))
 
 
 COMPACT_SQL = """
@@ -1131,9 +1102,6 @@ def io_compact_small_files(spark, sf_dir):
     the promised layout; either way nothing grows faster than the data
     being compacted, and the exchange IS the rewrite."""
     import os as _os
-    import tempfile
-
-    from spark_sentiment_spark.plans.registry import track_staging_dir
 
     ev = load(spark, sf_dir, "events")
     base = track_staging_dir(tempfile.mkdtemp(prefix="compact_"))
@@ -1148,11 +1116,7 @@ def io_compact_small_files(spark, sf_dir):
     n_before, n_after = _n_parts(frag_dir), _n_parts(comp_dir)
 
     back = spark.read.schema(ev.schema).parquet(comp_dir)
-    return (back.groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                 F.countDistinct("user_id").cast("bigint").alias("n_users"),
-                 F.sum(F.floor(F.col("value") * 10000).cast("bigint"))
-                 .cast("bigint").alias("val_e4"))
+    return (back.groupBy("event_type").agg(*_event_mass())
             .withColumn("files_before", F.lit(n_before).cast("bigint"))
             .withColumn("files_after", F.lit(n_after).cast("bigint"))
             .orderBy("event_type"))

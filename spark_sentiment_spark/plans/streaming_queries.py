@@ -44,7 +44,8 @@ from spark_sentiment_spark.operators.scd2 import (SCD2_SQL, scd2_dim,
 from spark_sentiment_spark.operators.sketch import (HLL_A, HLL_BITS,
                                                     HLL_BUCKET, HLL_M,
                                                     HLL_POW2, HLL_RHO,
-                                                    hll_sum)
+                                                    hll_estimate,
+                                                    hll_registers)
 from spark_sentiment_spark.operators.vectors import (ANN_IVF_SQL,
                                                      ANN_IVFPQ_SQL,
                                                      ANN_PQ_SQL, IVF_ASSIGN,
@@ -414,21 +415,11 @@ def streaming_hll_distinct(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir)
     keyed = ev.select(F.md5(F.col("event_id").cast("string")).alias("h"))
-    buckets = (keyed.select(F.expr(HLL_BUCKET).alias("bucket"),
-                           F.expr(HLL_RHO).alias("rho"))
-               .groupBy("bucket").agg(F.max("rho").alias("mj")))
-    mem = run_to_memory(buckets, _unique("stream_hll"))
-    sketch = mem.agg(
-        hll_sum().alias("s"),
-        F.count(F.lit(1)).cast("bigint").alias("n_buckets"))
+    mem = run_to_memory(hll_registers(keyed), _unique("stream_hll"))
     exact = (load(spark, sf_dir, "events")
              .agg(F.countDistinct("event_id").cast("bigint")
                   .alias("n_exact")))
-    est = F.round(F.lit(float(HLL_A)) / F.col("s").cast("double"), 2)
-    return (sketch.crossJoin(F.broadcast(exact))
-            .select("n_exact", est.alias("n_est"), "n_buckets",
-                    F.round(F.abs(est - F.col("n_exact"))
-                            / F.col("n_exact"), 4).alias("rel_err")))
+    return hll_estimate(mem, exact)
 
 
 # --- Windowed top-k on the streaming engine ---------------------------------

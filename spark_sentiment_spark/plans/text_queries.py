@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_sentiment_spark.functions.lexicon import LEXICON_CSV
-from spark_sentiment_spark.functions.text import clean_text_col, clean_text_sql
+from spark_sentiment_spark.functions.text import (clean_text_col,
+                                                  clean_text_sql, has_text)
 from spark_sentiment_spark.operators.bm25 import (BM25_SQL,
                                                   bm25_query_frame,
                                                   bm25_score_topk,
@@ -21,6 +22,7 @@ from spark_sentiment_spark.operators.quality import (C4_FEATS_SQL,
                                                      GOPHER_REASON_SQL,
                                                      c4_feats, gopher_feats,
                                                      stopword_langid)
+from spark_sentiment_spark.operators.postings import term_pairs
 from spark_sentiment_spark.plans.registry import (load, register,
                                                   track_persist)
 
@@ -185,6 +187,17 @@ def _word_ngrams(w, n: int):
     )
 
 
+def _doc_ngrams(spark, sf_dir, n: int, per_doc=lambda grams: grams):
+    """(doc_id, g): one row per word n-gram (space-split tokens) of every
+    document with at least n tokens; ``per_doc`` maps each document's
+    n-gram array before the explode."""
+    w = F.split(F.col("text"), " ", -1)
+    return (load(spark, sf_dir, "documents")
+            .where(F.col("text").isNotNull() & (F.size(w) >= n))
+            .select("doc_id", F.explode(per_doc(_word_ngrams(w, n)))
+                    .alias("g")))
+
+
 REPETITION_SQL = """
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS w
@@ -212,14 +225,8 @@ def quality_repetition(spark, sf_dir):
     aggregation on doc_id — linear, single shuffle; countDistinct is
     partial-aggregated, so the wire carries (doc, gram) groups, not the
     token stream."""
-    docs = load(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ", -1)
-    grams = (
-        docs.where(F.col("text").isNotNull() & (F.size(w) >= 3))
-        .select("doc_id", F.explode(_word_ngrams(w, 3)).alias("g"))
-    )
     return (
-        grams.groupBy("doc_id")
+        _doc_ngrams(spark, sf_dir, 3).groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_grams"),
              F.countDistinct("g").alias("n_distinct"))
         .select(
@@ -259,12 +266,7 @@ def decontaminate_ngram(spark, sf_dir):
     and broadcast; the corpus explodes once and aggregates on doc_id — one
     shuffle, no benchmark-side scan of the corpus. Returns (doc_id,
     n_hits) per contaminated document."""
-    docs = load(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ", -1)
-    grams = (
-        docs.where(F.col("text").isNotNull() & (F.size(w) >= 3))
-        .select("doc_id", F.explode(_word_ngrams(w, 3)).alias("g"))
-    )
+    grams = _doc_ngrams(spark, sf_dir, 3)
     bench = (grams.where(F.col("doc_id") < 5)
              .select("g").distinct())
     return (
@@ -318,13 +320,7 @@ def ngram_novelty(spark, sf_dir):
     shuffle on the high-cardinality gram key, one on doc_id for the final
     agg. No driver state; gram keys are near-uniform so the window
     partitioning has no skew at web scale."""
-    docs = load(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ", -1)
-    grams = (
-        docs.where(F.col("text").isNotNull() & (F.size(w) >= 5))
-        .select("doc_id",
-                F.explode(F.array_distinct(_word_ngrams(w, 5))).alias("g"))
-    )
+    grams = _doc_ngrams(spark, sf_dir, 5, F.array_distinct)
     wg = Window.partitionBy("g")
     novel = (F.col("first_doc") == F.col("doc_id")).cast("long")
     return (
@@ -945,8 +941,7 @@ def langid_char_ngram(spark, sf_dir):
     window partitions by doc_id. Char trigrams need no tokenizer, which
     is why this family is the standard cheap first-pass filter before
     any model-based language ID at web scale."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
+    docs = load(spark, sf_dir, "documents").where(has_text())
     base = docs.select("doc_id", "lang", F.lower("text").alias("s"))
     grams = F.when(
         F.length("s") >= 3,
@@ -1041,8 +1036,7 @@ def fuzzy_lexicon_match(spark, sf_dir):
     from spark_sentiment_spark.operators.wordscore import (
         fuzzy_lexicon_scores)
 
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
+    docs = load(spark, sf_dir, "documents").where(has_text())
     tok = (docs.select(F.explode(F.split(F.lower("text"), " ", -1))
                        .alias("t"))
            .where((F.length("t") >= 3) & F.col("t").rlike("^[a-z]+$"))
@@ -1099,8 +1093,7 @@ def token_counts_regex(spark, sf_dir):
 
     Scale: a pure per-row projection into a bounded per-lang aggregate —
     scan-speed, zero joins, zero windows."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
+    docs = load(spark, sf_dir, "documents").where(has_text())
     sub = F.size(F.regexp_extract_all("text", F.lit(TOKEN_REGEX), 0))
     ws = F.size(F.split(F.trim("text"), r"\s+"))
     return (docs.groupBy("lang")
@@ -1164,8 +1157,7 @@ def search_phrase(spark, sf_dir):
     rarer word's postings, join on (doc_id, adjacent position); no
     corpus-wide product. At index-build time positions ride along the
     same explode the inverted index already pays."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
+    docs = load(spark, sf_dir, "documents").where(has_text())
     pos = track_persist(
         docs.select("doc_id", F.posexplode(
             F.split(F.lower("text"), " ", -1)).alias("i", "w"))
@@ -1221,6 +1213,12 @@ ORDER BY s.qid
 """
 
 
+def _lower_terms(docs):
+    """(doc_id, w): one row per lowercased single-space-split token."""
+    return docs.select("doc_id", F.explode(
+        F.split(F.lower("text"), " ", -1)).alias("w"))
+
+
 @register("search_boolean_and", sql=BOOL_SEARCH_SQL, tags=("text", "search"))
 def search_boolean_and(spark, sf_dir):
     """Boolean AND retrieval over the inverted index: a doc matches a
@@ -1238,11 +1236,8 @@ def search_boolean_and(spark, sf_dir):
     count; everything downstream is query-count-sized. The
     rarest-term-first ordering classic engines use is implicit — docs
     missing any term simply fail the count equality."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
-    tok = (docs.select("doc_id", F.explode(
-        F.split(F.lower("text"), " ", -1)).alias("w"))
-        .distinct())
+    tok = _lower_terms(
+        load(spark, sf_dir, "documents").where(has_text())).distinct()
     q = None
     for qid, terms in _BOOL_QUERIES:
         for t in terms:
@@ -1339,16 +1334,11 @@ def dedup_tfidf_cosine(spark, sf_dir):
     identical doubles agrees across engines) and dot/norm sums
     accumulate as exact DECIMAL, so the >= tau threshold compares
     identical values in both engines regardless of summation order —
-    the token_zipf_fit recipe, applied here after round-7 ADVICE
-    flagged the float-sum boundary."""
-    docs = load(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim("text") != ""))
-    tok = (docs.select("doc_id", F.explode(
-        F.split(F.lower("text"), " ", -1)).alias("w"))
-        .where(F.col("w") != ""))
-    # Round-18 optimization (guide §2.4): tf feeds both the df rollup and
-    # the weighted-postings join — persist it so the corpus explodes once
-    # instead of twice.
+    the token_zipf_fit recipe."""
+    docs = load(spark, sf_dir, "documents").where(has_text())
+    tok = _lower_terms(docs).where(F.col("w") != "")
+    # tf feeds the df rollup and the weighted-postings join: persisted,
+    # the corpus explodes once.
     tf = track_persist(
         tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf")))
     df = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
@@ -1361,17 +1351,11 @@ def dedup_tfidf_cosine(spark, sf_dir):
                 F.floor(F.col("tf") * F.log((F.col("n_docs") + 1.0)
                                             / (F.col("df") + 1.0))
                         * F.lit(1_000_000.0)).cast("bigint").alias("wti")))
-    # Round-18 optimization (guide §2.4): norms feeds both final join
-    # sides (na, nb) — persist the narrow per-doc sum-of-squares so the
-    # aggregation over the cached weights frame runs once.
+    # norms feeds both final join sides: persisted, the aggregation over
+    # the cached weights runs once.
     norms = track_persist(wts.groupBy("doc_id").agg(
         F.sum(dec("wti") * dec("wti")).alias("ss")))  # 2 cols per doc
-    a, b = wts.alias("a"), wts.alias("b")
-    dots = (a.join(b, (F.col("a.w") == F.col("b.w"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"))
-            .agg(F.sum(dec("a.wti") * dec("b.wti")).alias("dp")))
+    dots = term_pairs(wts, F.sum(dec("a.wti") * dec("b.wti")).alias("dp"))
     na = norms.select(F.col("doc_id").alias("doc_a"),
                       F.col("ss").alias("ssa"))
     nb = norms.select(F.col("doc_id").alias("doc_b"),

@@ -15,8 +15,9 @@ reproduced):
 * Writers use ``mode("overwrite")``, subsuming the reference's manual
   output-path deletion (``Helper.clean``, SRC/utils/Helper.scala:104-141).
 
-Driver-side sniffing reads samples: the first two lines for the delimiter
-and the escape, the first 20 rows for the header. Schema inference is
+Dialect sniffing reads one sample, the first 20 lines the CSV reader
+does not skip: its first two give the delimiter and the escape, all of
+them the header, in one Spark job. Schema inference is
 Spark's own (a full pass over a CSV or JSON file, footers for parquet and
 ORC); its answer, and a CSV's sniffed dialect with it, is reused for as
 long as the file is unchanged (``_resolve``). Data-path reads stay fully
@@ -131,9 +132,13 @@ def _read_inferred(spark: SparkSession, fmt: str, path: str,
                     infer, read)
 
 
-def _first_two_lines(spark: SparkSession, path: str) -> list[str]:
-    rows = spark.read.text(path).take(2)
-    return [r[0] for r in rows]
+def _head_lines(spark: SparkSession, path: str) -> list[str]:
+    """The first 20 lines of ``path`` that the CSV reader would not skip
+    (it skips those Java's ``trim`` empties, hence the character class),
+    in one Spark job: the sample every sniff reads."""
+    return [r[0] for r in spark.read.text(path)
+            .where(F.col("value").rlike("[^\\x00-\\x20]"))
+            .limit(20).collect()]
 
 
 def _delimiter_of(lines: list[str]) -> str:
@@ -160,30 +165,12 @@ def _escape_of(lines: list[str], delim: str) -> str | None:
     return None
 
 
-def find_delimiter(spark: SparkSession, path: str) -> str:
-    """S3: pick the first candidate whose count matches across the first two
-    lines and is non-zero; fall back to ';' (intended IO.findDelimiter)."""
-    return _delimiter_of(_first_two_lines(spark, path))
-
-
-def detect_escape(spark: SparkSession, path: str, delim: str) -> str | None:
-    """S5: longest multi-word field of line 2; a leading quote char means the
-    file quotes free-text fields with it (IO.detectEscape:19-30)."""
-    return _escape_of(_first_two_lines(spark, path), delim)
-
-
-def _csv_sample(spark: SparkSession, path: str,
-                delim: str) -> list[list[str | None]]:
-    """The first 20 records of a headerless CSV read with inference off, in
-    one Spark job instead of two: a text scan takes the lines the reader
-    would not skip (it skips those Java's ``trim`` empties, hence the
-    character class), and Spark's own CSV tokenizer, set up from the
-    reader's options, splits them on the driver. As in the reader, an
-    empty field is null and every record is padded or cut to the width of
-    the first."""
-    lines = [r[0] for r in spark.read.text(path)
-             .where(F.col("value").rlike("[^\\x00-\\x20]"))
-             .limit(20).collect()]
+def _records(spark: SparkSession, lines: list[str],
+             delim: str) -> list[list[str | None]]:
+    """``lines`` split in this process by Spark's own CSV tokenizer, set up
+    from the reader's options, so they read as a headerless read with
+    inference off reads them: an empty field is null and every record is
+    padded or cut to the width of the first."""
     if not lines:
         return []
     jvm = spark._jvm
@@ -196,11 +183,9 @@ def _csv_sample(spark: SparkSession, path: str,
     return [(r + [None] * width)[:width] for r in rows]
 
 
-def has_header(spark: SparkSession, path: str, delim: str) -> bool:
-    """S4 with working semantics: row 1 of the first 20 records is a header
-    iff any of its cells does not parse like the values under it (and the
-    file has at least 2 records)."""
-    rows = _csv_sample(spark, path, delim)
+def _header_of(rows: list[list[str | None]]) -> bool:
+    """Record 1 is a header iff any of its cells does not parse like the
+    values under it (and there are at least 2 records)."""
     if len(rows) < 2:
         return False
     header_cells = list(rows[0])
@@ -233,11 +218,32 @@ def has_header(spark: SparkSession, path: str, delim: str) -> bool:
     return False
 
 
+def find_delimiter(spark: SparkSession, path: str) -> str:
+    """S3: pick the first candidate whose count matches across the first two
+    lines the reader does not skip and is non-zero; fall back to ';'
+    (intended IO.findDelimiter)."""
+    return _delimiter_of(_head_lines(spark, path))
+
+
+def detect_escape(spark: SparkSession, path: str, delim: str) -> str | None:
+    """S5: longest multi-word field of the second line the reader does not
+    skip; a leading quote char means the file quotes free-text fields with
+    it (IO.detectEscape:19-30)."""
+    return _escape_of(_head_lines(spark, path), delim)
+
+
+def has_header(spark: SparkSession, path: str, delim: str) -> bool:
+    """S4 with working semantics: row 1 of the first 20 records is a header
+    iff any of its cells does not parse like the values under it (and the
+    file has at least 2 records)."""
+    return _header_of(_records(spark, _head_lines(spark, path), delim))
+
+
 def load_csv(spark: SparkSession, path: str, *, delimiter: str | None = None,
              header: bool | None = None, escape: str | None = None) -> DataFrame:
     """S2: CSV scan with dialect sniffing for any unspecified option. The
-    delimiter and escape sniffs share one read of the first two lines; the
-    sniffed dialect is reused with the inferred schema (``_resolve``)."""
+    three sniffs share one read of the head (``_head_lines``); the sniffed
+    dialect is reused with the inferred schema (``_resolve``)."""
     def read(delim, hdr, esc, schema=None):
         reader = (spark.read.option("sep", delim)
                   .option("header", str(hdr).lower())
@@ -249,10 +255,11 @@ def load_csv(spark: SparkSession, path: str, *, delimiter: str | None = None,
         return reader.csv(path)
 
     def infer():
-        lines = (_first_two_lines(spark, path)
-                 if delimiter is None or escape is None else [])
+        lines = (_head_lines(spark, path)
+                 if None in (delimiter, header, escape) else [])
         delim = delimiter if delimiter is not None else _delimiter_of(lines)
-        hdr = header if header is not None else has_header(spark, path, delim)
+        hdr = (header if header is not None
+               else _header_of(_records(spark, lines, delim)))
         esc = escape if escape is not None else _escape_of(lines, delim)
         df = read(delim, hdr, esc)
         return df, (delim, hdr, esc, df.schema)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from spark_sentiment_spark.operators.event_windows import sliding_hour_counts
 from spark_sentiment_spark.plans.registry import track_staging_dir
 from spark_sentiment_spark.sources.io import load_parquet_utc
 
@@ -105,14 +106,7 @@ def tumbling_hourly(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 
 def sliding_hourly(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """1h window sliding by 30min — streaming twin of ``events_sliding_hour``."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.sum("value"), 4).alias("total_value"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-                .alias("window_start"), "n", "total_value")
-    )
+    return sliding_hour_counts(events.withWatermark("ts", watermark))
 
 
 def session_windows(events: DataFrame, gap: str = "1 hour",

@@ -58,6 +58,42 @@ def test_has_header_runs_one_job(spark, tmpdata):
     assert len(sc.statusTracker().getJobIdsForGroup("has_header_jobs")) == 1
 
 
+def test_cold_sniffed_load_reads_the_head_once(spark, tmp_path):
+    """A sniffed load of a new file is one read of the head, which serves
+    the delimiter, header and escape sniffs, plus inferSchema's two
+    jobs."""
+    from spark_sentiment_spark.sources.io import load
+
+    path = tmp_path / "cold.csv"
+    path.write_text("id,label,text\n"
+                    "1,0,the quick brown fox jumps over the dog\n"
+                    "2,1,a completely different longer sentence here\n")
+    sc = spark.sparkContext
+    sc.setJobGroup("cold_sniffed_load", "io.load")
+    try:
+        df, _ = load(spark, str(path))
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert df.columns == ["id", "label", "text"]
+    assert len(sc.statusTracker().getJobIdsForGroup("cold_sniffed_load")) == 3
+
+
+def test_sniffs_skip_blank_lines_like_the_reader(spark, tmp_path):
+    """The reader skips blank lines, so the sniffs do too: a leading blank
+    line still gives the delimiter the reader's columns need."""
+    from spark_sentiment_spark.sources.io import find_delimiter, load
+
+    path = tmp_path / "blank_head.csv"
+    path.write_text("\n   \nid,label,text\n"
+                    "1,0,the quick brown fox jumps over the dog\n"
+                    "2,1,a completely different longer sentence here\n")
+    assert find_delimiter(spark, str(path)) == ","
+    df, _ = load(spark, str(path))
+    assert df.columns == ["id", "label", "text"]
+    assert df.count() == 2
+
+
 def test_detect_escape(spark, tmpdata):
     from spark_sentiment_spark.sources.io import detect_escape
 
