@@ -16,8 +16,8 @@ contains a `sum(`, classifies the idiom —
     order-independent by construction; boundary proximity is harmless because
     both engines round the same exact value with the same half-up rule;
   * DOUBLE: a double-typed aggregate — order-sensitive; needs distance >>
-    summation noise (PLANS.md documents ~1e-4 in last-digit units for the
-    TPC-H money sums; the flag threshold is 20x that);
+    summation noise (~1e-4 in last-digit units for the TPC-H money sums,
+    measured on q1 at sf0.1; the flag threshold is 20x that);
 — then rewrites the site IN PLACE to the distance expression
 `abs((t - floor(t)) - 0.5)` with `t = (X) * 10^d` (distance 0.5 = mid-bucket,
 0 = exactly on a rounding boundary), strips the top-level LIMIT so cut-masked
@@ -31,7 +31,7 @@ measured min could miss the risky group. EXACT-idiom MANUAL sites are safe
 by construction anyway; a DOUBLE MANUAL site must be audited by hand.
 
 Usage:
-  python scripts/money_audit.py            # audit, print PLANS.md table
+  python scripts/money_audit.py            # audit, print the site table
   python scripts/money_audit.py --flagged  # print only FLAG/MANUAL-DOUBLE
 Exit 1 if any DOUBLE site has min distance < FLAG_DIST or is MANUAL.
 """
@@ -47,7 +47,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Flag thresholds in last-digit units (distance in [0, 0.5]; 0 = on
 # boundary). Summation noise in these units scales as 10^d x eps x N x
-# magnitude: for the d<=4 money sums PLANS.md measured ~1e-4 (flag at 20x
+# magnitude: for the d<=4 money sums it measured ~1e-4 (flag at 20x
 # that); the d>=5 sites are O(1)-magnitude ratios/entropies whose noise in
 # 1e-6 units stays below ~1e-5 (flag at 10x that).
 def flag_dist(digits: int) -> float:

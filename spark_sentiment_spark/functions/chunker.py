@@ -26,9 +26,10 @@ from pyspark.sql.functions import udtf
 @udtf(returnType="chunk_id int, chunk_text string, n_tokens int")
 class ChunkDocs:
     """Split space-separated text into consecutive ``chunk_size``-token
-    chunks. Tokenization is ``split(' ')`` — exact parity with the
-    oracle's ``string_split(text, ' ')`` (empty text yields one empty
-    token, hence one empty chunk, on both sides)."""
+    chunks (32 from :func:`chunk_documents`). Tokenization is
+    ``split(' ')`` — exact parity with the oracle's
+    ``string_split(text, ' ')`` (empty text yields one empty token, hence
+    one empty chunk, on both sides)."""
 
     def eval(self, text, chunk_size: int):
         toks = (text if text is not None else "").split(" ")
@@ -37,10 +38,7 @@ class ChunkDocs:
             yield i // chunk_size, " ".join(chunk), len(chunk)
 
 
-def chunk_documents(df: DataFrame, text_col: str = "text",
-                    chunk_size: int = 32) -> DataFrame:
-    """All columns of ``df`` joined laterally with the chunks of
-    ``text_col``. Narrow plan: chunking happens where the rows already
-    are."""
-    return df.lateralJoin(
-        ChunkDocs(F.col(text_col).outer(), F.lit(chunk_size)))
+def chunk_documents(df: DataFrame) -> DataFrame:
+    """All columns of ``df`` joined laterally with the 32-token chunks of
+    ``text``. Narrow plan: chunking happens where the rows already are."""
+    return df.lateralJoin(ChunkDocs(F.col("text").outer(), F.lit(32)))

@@ -79,23 +79,23 @@ def token_bigrams(tokens: str) -> Column:
         " (a, b) -> struct(a AS w1, b AS w2))")
 
 
-def emoji_to_word_col(col: Column | str, mapping: dict | None = None) -> Column:
+def emoji_to_word_col(col: Column | str) -> Column:
     """Per-token emoji→word substitution (SRC/utils/Helper.scala:91-93,
     intended semantics — the reference emits the literal ``Some(word)``, a bug
     documented in quirks.md).
 
-    Implemented natively: split on single spaces, map each token through a
-    literal ``map<string,string>``, reassemble. The map travels to the JVM as
-    one JSON string literal parsed by ``from_json``: one py4j call instead of
-    one per key and value, and no SQL string literal, so keys holding ``'``
-    or ``\\`` (``:'(``, ``:\\``) mean the same under every parser conf
-    (``spark.sql.parser.escapedStringLiterals`` included). Catalyst folds the
-    parse into a map literal, so rows never run ``from_json``.
+    Implemented natively: split on single spaces, map each token through
+    ``emoji_dict()`` as a literal ``map<string,string>``, reassemble. The
+    map travels to the JVM as one JSON string literal parsed by
+    ``from_json``: one py4j call instead of one per key and value, and no
+    SQL string literal, so keys holding ``'`` or ``\\`` (``:'(``, ``:\\``)
+    mean the same under every parser conf
+    (``spark.sql.parser.escapedStringLiterals`` included). Catalyst folds
+    the parse into a map literal, so rows never run ``from_json``.
     """
     from spark_sentiment_spark.functions.lexicon import emoji_dict
 
-    mapping = mapping if mapping is not None else emoji_dict()
-    m = F.from_json(F.lit(json.dumps(mapping)), "map<string,string>")
+    m = F.from_json(F.lit(json.dumps(emoji_dict())), "map<string,string>")
     c = F.col(col) if isinstance(col, str) else col
     return F.array_join(
         F.transform(F.split(c, " ", -1), lambda t: F.coalesce(m[t], t)), " "
@@ -126,7 +126,7 @@ def _default_stopwords() -> tuple[str, ...]:
     return tuple(StopWordsRemover.loadDefaultStopWords("english"))
 
 
-def remove_stopwords_col(col: Column | str, stopwords: list[str] | None = None) -> Column:
+def remove_stopwords_col(col: Column | str) -> Column:
     """Drop (case-insensitively) the default English stop words from a
     space-tokenized string, keeping the order and duplicates of the other
     tokens: ``filter`` with ``array_contains`` on each lowered token
@@ -134,10 +134,9 @@ def remove_stopwords_col(col: Column | str, stopwords: list[str] | None = None) 
     The stop-word array travels as one JSON literal, for the reasons
     ``emoji_to_word_col`` gives.
     """
-    stopwords = stopwords or _default_stopwords()
     c = F.col(col) if isinstance(col, str) else col
     toks = F.split(c, " ", -1)
-    sw = F.from_json(F.lit(json.dumps(stopwords)), "array<string>")
+    sw = F.from_json(F.lit(json.dumps(_default_stopwords())), "array<string>")
     return F.array_join(
         F.filter(toks, lambda t: ~F.array_contains(sw, F.lower(t))), " "
     )

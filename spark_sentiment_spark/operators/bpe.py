@@ -49,11 +49,11 @@ WS_CLASS = "[ \\t\\n\\x0B\\f\\r]+"
 _WS_RE = re.compile(WS_CLASS)
 
 
-def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """The one corpus-scale pass: whitespace tokens, lowercased, counted.
-    Returns the vocabulary-bounded (word, freq) table."""
-    return (docs.where(F.col(text_col).isNotNull())
-            .select(F.explode(F.split(F.lower(F.trim(F.col(text_col))),
+def word_frequencies(docs: DataFrame) -> DataFrame:
+    """The one corpus-scale pass: whitespace tokens of ``text``, lowercased,
+    counted. Returns the vocabulary-bounded (word, freq) table."""
+    return (docs.where(F.col("text").isNotNull())
+            .select(F.explode(F.split(F.lower(F.trim(F.col("text"))),
                                       WS_CLASS)).alias("word"))
             .where(F.length("word") > 0)
             .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
@@ -93,11 +93,11 @@ def _merge_loop(word_freq: dict[str, int],
 
 
 def bpe_train(spark: SparkSession, docs: DataFrame, n_merges: int = 40,
-              text_col: str = "text", min_count: int = 2,
+              min_count: int = 2,
               vocab_cap: int | None = 1_000_000) -> DataFrame:
-    """Train BPE merges: one distributed word-count pass, then the bounded
-    driver-side merge loop. Returns (rank, left, right, merged, pair_count)
-    in merge order.
+    """Train BPE merges on ``docs.text``: one distributed word-count pass,
+    then the bounded driver-side merge loop. Returns (rank, left, right,
+    merged, pair_count) in merge order.
 
     ``min_count`` floors the collected vocabulary (words seen fewer times
     never reach the driver); ``vocab_cap`` truncates it to the top-K by
@@ -105,7 +105,7 @@ def bpe_train(spark: SparkSession, docs: DataFrame, n_merges: int = 40,
     module docstring. ``min_count=1, vocab_cap=None`` recovers the exact
     unbounded trainer (tests pin that the defaults leave the fixture-corpus
     merge sequence unchanged)."""
-    wf_df = (word_frequencies(docs, text_col)
+    wf_df = (word_frequencies(docs)
              .where(F.col("freq") >= min_count))
     if vocab_cap is not None:
         # orderBy+limit compiles to TakeOrdered — executors keep per-
@@ -134,9 +134,10 @@ def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> tuple:
     return tuple(s)
 
 
-def bpe_token_count_col(merges: list[tuple[str, str]], text_col: str = "text"):
-    """Arrow-batched token counter under a learned merge table: per-batch
-    word→len(segmentation) memo, so repeated words cost a dict hit. The
+def bpe_token_count_col(merges: list[tuple[str, str]]):
+    """Arrow-batched token counter of ``text`` under a learned merge
+    table: per-batch word→len(segmentation) memo, so repeated words cost
+    a dict hit. The
     merge table rides to executors inside the UDF closure (vocabulary-
     bounded — the same object a production tokenizer broadcasts)."""
     from pyspark.sql.functions import pandas_udf
@@ -165,4 +166,4 @@ def bpe_token_count_col(merges: list[tuple[str, str]], text_col: str = "text"):
 
         return texts.map(doc_tokens)
 
-    return _count(F.col(text_col))
+    return _count(F.col("text"))

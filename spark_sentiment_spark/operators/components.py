@@ -16,7 +16,7 @@ The jump step is the Shiloach-Vishkin (1982) shortcut also at the heart
 of the large-star/small-star MapReduce formulation (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14): propagation
 alone needs diameter rounds (an adversarial N-node chain = N rounds,
-silently truncated by ``max_iter``), while propagate+jump doubles the
+silently truncated by ``MAX_ROUNDS``), while propagate+jump doubles the
 compressed distance per round — measured on chains: 12 rounds for 4k
 nodes; tests/test_components.py pins the ~log growth in rounds.
 
@@ -39,10 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Safety bound on propagate+jump rounds; pointer jumping converges in
+#: ~log(diameter) rounds, far below it.
+MAX_ROUNDS = 50
+
 
 def connected_components(
-    edges: DataFrame, src: str, dst: str, max_iter: int = 50,
-    return_rounds: bool = False,
+    edges: DataFrame, src: str, dst: str, return_rounds: bool = False,
 ):
     """Return ``(node, component)`` for every node appearing in ``edges``,
     where ``component`` is the smallest node id in its connected component
@@ -50,17 +53,9 @@ def connected_components(
     ``return_rounds=True`` returns ``(labels, rounds)`` — the round count
     the scale probe records."""
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    # Round-19 optimization (guide §2.4, same class as token_pagerank's
-    # batch-1 fix): the loop re-reads ``e`` every round through an
-    # s-keyed join, but distinct() leaves it clustered on (s, d), which
-    # does NOT satisfy the join's s clustering — so each round used to
-    # re-shuffle the whole edge table. Cache it hash-partitioned ON s:
-    # one edge shuffle total, at fill time. Each round is its own
-    # action planned after the fill, which is exactly the case where
-    # the cache's clustering stays visible to the planner (the
-    # pre-materialization AQE-unknown-partitioning caveat documented at
-    # token_pagerank does not bite here). The initial node frame's
-    # distinct() reuses the same clustering for free.
+    # Every round joins ``e`` on s, and distinct() leaves it clustered on
+    # (s, d): cached hash-partitioned on s, the edges shuffle once, at
+    # fill time, instead of once a round.
     p = e.sparkSession.sparkContext.defaultParallelism
     e = e.unionByName(
         e.select(F.col("d").alias("s"), F.col("s").alias("d"))
@@ -72,21 +67,17 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         rounds += 1
         neigh = (
             e.join(labels, e["s"] == labels["node"])
             .groupBy(F.col("d").alias("node"))
             .agg(F.min("comp").alias("ncomp"))
         )
-        # Round-19 (guide §2.4): ``prop`` feeds BOTH sides of the jump
-        # join below, and Catalyst does not share subtrees across plan
-        # branches — un-checkpointed, the e⋈labels join + aggregation
-        # above executed TWICE per round. The eager checkpoint
-        # materializes it once (and truncates its lineage, same role as
-        # the end-of-round checkpoint). ``ocomp`` rides along so the
-        # convergence check at the bottom is a filter over the final
-        # checkpoint instead of a third (node-keyed) join per round.
+        # ``prop`` feeds both sides of the jump join and Catalyst shares
+        # no subtree across branches: the eager checkpoint runs the
+        # e⋈labels join once a round, not twice. ``ocomp`` rides along so
+        # the convergence check is a filter, not a third join.
         prop = (
             labels.alias("o")
             .join(neigh.alias("n"), "node", "left")

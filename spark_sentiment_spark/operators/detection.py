@@ -160,21 +160,24 @@ def extract_categories(df: DataFrame, column: str) -> list:
     )
 
 
-def convert_categorical_column(df: DataFrame, column: str,
-                               output_col: str = "converted_categorical"
+CONVERTED = "converted_categorical"
+
+
+def convert_categorical_column(df: DataFrame, column: str
                                ) -> tuple[DataFrame, str]:
-    """Dense int codes for a categorical column. Integer columns pass
-    through (Detection.scala:108-109); string columns go through
-    StringIndexer (alphabetic order for determinism), fixing §1.4.5."""
+    """Dense int codes for a categorical column, and the column that holds
+    them. Integer columns pass through (Detection.scala:108-109); string
+    columns go through StringIndexer (alphabetic order for determinism,
+    fixing §1.4.5) into ``CONVERTED``."""
     if column in integer_columns(df):
         return df, column
     from pyspark.ml.feature import StringIndexer
 
-    idx = StringIndexer(inputCol=column, outputCol=output_col,
+    idx = StringIndexer(inputCol=column, outputCol=CONVERTED,
                         stringOrderType="alphabetAsc",
                         handleInvalid="keep")
     out = idx.fit(df).transform(df)
-    return out.withColumn(output_col, out[output_col].cast("int")), output_col
+    return out.withColumn(CONVERTED, out[CONVERTED].cast("int")), CONVERTED
 
 
 def detect_roles(df: DataFrame, limit: int = DEFAULT_LIMIT) -> dict:

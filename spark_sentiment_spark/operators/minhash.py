@@ -13,13 +13,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def shingled(docs, id_col: str = "doc_id", text_col: str = "text"):
-    """(id, shingle) rows: 3-word shingles over the lowercased text (whole
+def shingled(docs):
+    """(doc_id, shingle) rows: 3-word shingles over the lowercased text (whole
     text as a single shingle when shorter than 3 tokens) — the unit set for
     Jaccard/MinHash. The token array is projected ONCE and indexed inside the
     transform lambda (t[i..i+2]); slicing a freshly re-split array per
     position would be O(len²) per document."""
-    toks = F.split(F.lower(F.col(text_col)), " ", -1)
+    toks = F.split(F.lower(F.col("text")), " ", -1)
     sh = F.when(
         F.size(F.col("__t")) >= 3,
         F.expr(
@@ -28,8 +28,8 @@ def shingled(docs, id_col: str = "doc_id", text_col: str = "text"):
         ),
     ).otherwise(F.array(F.array_join(F.col("__t"), " ")))
     return (
-        docs.select(id_col, toks.alias("__t"))
-        .select(id_col, F.explode(F.array_distinct(sh)).alias("w"))
+        docs.select("doc_id", toks.alias("__t"))
+        .select("doc_id", F.explode(F.array_distinct(sh)).alias("w"))
     )
 
 
@@ -44,20 +44,19 @@ SEED = 42
 THRESHOLD = 0.5
 
 
-def perm_constants(n_hashes: int = N_HASHES, seed: int = SEED):
-    """The (a_i, b_i) permutation constants — shared by the Spark signature
-    stage AND the generated DuckDB oracle SQL, so both engines compute the
-    *identical* signatures."""
+def perm_constants(n_hashes: int = N_HASHES):
+    """The first ``n_hashes`` (a_i, b_i) permutation constants — shared by
+    the Spark signature stage AND the generated DuckDB oracle SQL, so both
+    engines compute the *identical* signatures."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(SEED)
     return [(rng.randrange(1, MINHASH_P), rng.randrange(0, MINHASH_P))
             for _ in range(n_hashes)]
 
 
-def minhash_signatures(docs, n_hashes: int = N_HASHES, seed: int = SEED,
-                       id_col: str = "doc_id", text_col: str = "text"):
-    """(id, mh0..mh{n-1}) MinHash signature rows via ``mapInPandas``: each
+def minhash_signatures(docs, n_hashes: int = N_HASHES):
+    """(doc_id, mh0..mh{n-1}) MinHash signature rows via ``mapInPandas``: each
     document's 3-word shingle set and all n mins are computed LOCALLY
     inside its Arrow batch (one k×n numpy outer-product min per doc), so
     the token stream is never materialized as rows and never SHUFFLED —
@@ -71,17 +70,17 @@ def minhash_signatures(docs, n_hashes: int = N_HASHES, seed: int = SEED,
     import numpy as np
 
     p = MINHASH_P
-    perms = perm_constants(n_hashes, seed)
+    perms = perm_constants(n_hashes)
     A = np.array([a for a, _ in perms], dtype=np.int64)
     B = np.array([b for _, b in perms], dtype=np.int64)
 
-    sig_schema = f"{id_col} long, " + ", ".join(
+    sig_schema = "doc_id long, " + ", ".join(
         f"mh{i} long" for i in range(n_hashes))
 
     def _signatures(batches):
         for pdf in batches:
             ids, sigs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
                 toks = text.lower().split(" ")
@@ -98,33 +97,33 @@ def minhash_signatures(docs, n_hashes: int = N_HASHES, seed: int = SEED,
                 ids.append(doc_id)
             S = np.vstack(sigs) if sigs else np.empty((0, n_hashes), np.int64)
             yield pd.DataFrame(
-                {id_col: ids,
+                {"doc_id": ids,
                  **{f"mh{i}": S[:, i] for i in range(n_hashes)}})
 
-    return docs.select(id_col, text_col).mapInPandas(_signatures, sig_schema)
+    return docs.select("doc_id", "text").mapInPandas(_signatures, sig_schema)
 
 
-def band_keys(n_hashes: int, n_bands: int, prefix: str = "mh") -> Column:
+def band_keys(n_hashes: int, n_bands: int) -> Column:
     """The per-band bucket keys of a signature row (columns
-    ``{prefix}0..``) as an array, band i at index i. The key is the
+    ``mh0..``) as an array, band i at index i. The key is the
     '-'-joined minhash tuple itself (exact band equality, zero collision
     risk) rather than a second-level hash — and, being plain decimal
     strings, it is engine-independent, so the DuckDB oracle reproduces
     the buckets bit-for-bit."""
     rpb = n_hashes // n_bands
     return F.array(*[
-        F.concat_ws("-", *[F.col(f"{prefix}{band * rpb + r}")
+        F.concat_ws("-", *[F.col(f"mh{band * rpb + r}")
                            for r in range(rpb)])
         for band in range(n_bands)])
 
 
-def band_buckets(mins, n_hashes: int, n_bands: int, id_col: str = "doc_id"):
-    """(id, band_id, bh) LSH banding rows via a single posexplode — no
+def band_buckets(mins, n_hashes: int, n_bands: int):
+    """(doc_id, band_id, bh) LSH banding rows via a single posexplode — no
     n_bands-way union. Docs sharing any (band_id, bh) bucket are
     candidate pairs; the bucket join is the LSH scale path (no all-pairs
     product)."""
     return mins.select(
-        id_col, F.posexplode(band_keys(n_hashes, n_bands))
+        "doc_id", F.posexplode(band_keys(n_hashes, n_bands))
         .alias("band_id", "bh"))
 
 
@@ -149,10 +148,9 @@ def band_pairs(bands):
             .distinct())
 
 
-def scored_pairs(cand, sigs, n_hashes: int, *extra,
-                 threshold: float = THRESHOLD):
+def scored_pairs(cand, sigs, n_hashes: int, *extra):
     """The (doc_a, doc_b) candidates whose signatures in ``sigs``
-    (doc_id, mh0..) agree on at least ``threshold`` of the minhashes, as
+    (doc_id, mh0..) agree on at least ``THRESHOLD`` of the minhashes, as
     (doc_a, doc_b, est_jaccard, *extra)."""
     am, bm = sigs.alias("am"), sigs.alias("bm")
     return (cand.join(am, F.col("doc_a") == F.col("am.doc_id"))
@@ -160,11 +158,10 @@ def scored_pairs(cand, sigs, n_hashes: int, *extra,
             .select("doc_a", "doc_b",
                     est_jaccard("am.mh", "bm.mh", n_hashes)
                     .alias("est_jaccard"), *extra)
-            .where(F.col("est_jaccard") >= threshold))
+            .where(F.col("est_jaccard") >= THRESHOLD))
 
 
-def lsh_cand_sql(tail: str, cand_where: str = "", n_hashes: int = N_HASHES,
-                 n_bands: int = N_BANDS, seed: int = SEED) -> str:
+def lsh_cand_sql(tail: str, cand_where: str = "") -> str:
     """DuckDB twin of the MinHash-LSH candidate stage, generated from the
     SAME permutation constants as the Spark signature stage: md5-derived
     31-bit shingle hashes → (a*h+b) mod p mins (``sig``) → '-'-joined band
@@ -173,16 +170,16 @@ def lsh_cand_sql(tail: str, cand_where: str = "", n_hashes: int = N_HASHES,
     follows ``cand``'s closing paren: further CTEs or the final SELECT,
     scoring pairs with `est_jaccard_sql`."""
     p = MINHASH_P
-    perms = perm_constants(n_hashes, seed)
+    perms = perm_constants()
     mh_cols = ",\n         ".join(
         f"min((h * {a} + {b}) % {p}) AS mh{i}"
         for i, (a, b) in enumerate(perms))
-    rpb = n_hashes // n_bands
+    rpb = N_HASHES // N_BANDS
     band_selects = "\nUNION ALL\n".join(
         f"SELECT doc_id, {band} AS band_id, concat_ws('-', "
         + ", ".join(f"mh{band * rpb + r}" for r in range(rpb))
         + ") AS bh FROM sig"
-        for band in range(n_bands))
+        for band in range(N_BANDS))
     where = f"\n  WHERE {cand_where}" if cand_where else ""
     return f"""
 WITH toks AS (
@@ -213,29 +210,27 @@ WITH toks AS (
 ){tail}"""
 
 
-def est_jaccard_sql(n_hashes: int = N_HASHES) -> str:
+def est_jaccard_sql() -> str:
     """Signature-agreement Jaccard estimate of a ``cand`` pair joined to
     ``sig`` as ``sa``/``sb``, rounded like the Spark side."""
     agree = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
-                       for i in range(n_hashes))
-    return f"round(({agree}) / {float(n_hashes)}, 4)"
+                       for i in range(N_HASHES))
+    return f"round(({agree}) / {float(N_HASHES)}, 4)"
 
 
-def minhash_oracle_sql(n_hashes: int = N_HASHES, n_bands: int = N_BANDS,
-                       seed: int = SEED, threshold: float = THRESHOLD,
-                       cand_where: str = "", extra_cols: str = "") -> str:
+def minhash_oracle_sql(cand_where: str = "", extra_cols: str = "") -> str:
     """DuckDB twin of the full MinHash-LSH pipeline: every candidate pair
-    (narrowed by ``cand_where``) whose estimate clears ``threshold``."""
-    est = est_jaccard_sql(n_hashes)
+    (narrowed by ``cand_where``) whose estimate clears ``THRESHOLD``."""
+    est = est_jaccard_sql()
     return lsh_cand_sql(f"""
 SELECT doc_a, doc_b,
        {est} AS est_jaccard{extra_cols}
 FROM cand
 JOIN sig sa ON doc_a = sa.doc_id
 JOIN sig sb ON doc_b = sb.doc_id
-WHERE {est} >= {threshold}
+WHERE {est} >= {THRESHOLD}
 ORDER BY doc_a, doc_b
-""", cand_where, n_hashes, n_bands, seed)
+""", cand_where)
 
 
 def probe_minhash_oracle_sql() -> str:

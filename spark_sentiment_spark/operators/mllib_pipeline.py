@@ -40,8 +40,6 @@ NB_GRID = {"smoothing": [0.85, 0.90, 0.95, 1.05, 1.1, 1.15]}
 RF_GRID = {"maxBins": [25, 28, 31], "maxDepth": [4, 6, 8],
            "impurity": ["entropy", "gini"]}
 
-ACCURACY_GATES = (0.65, 0.75, 0.8)  # MlLibSentimentAnalyser.scala:78-81
-
 
 def feature_pipeline(text_col: str):
     """M3+M4+M5+M6: the nested idf pipeline, exact reference params."""
@@ -224,18 +222,7 @@ def _sweep(features, est, to_labels, grid: dict, training_df,
     return best_model, best_prec, [(prec, desc) for prec, _, desc in fits]
 
 
-def random_sample(df: DataFrame, n: int) -> DataFrame:
-    """W4 — the reference's ``getRandom`` display sampler: bootstrap sample
-    capped at ``n`` rows (MlLibSentimentAnalyser.scala:63-67). The count()
-    is unavoidable (the reference does the same); callers cache ``df``."""
-    count = df.count()
-    if count == 0:
-        return df
-    fraction = min(1.0, float(n) / count)
-    return df.sample(withReplacement=True, fraction=fraction).limit(n)
-
-
-def score_model(df: DataFrame, model, text_col: str | None = None,
+def score_model(df: DataFrame, model,
                 drop_intermediate: bool = True) -> DataFrame:
     """M12 + P3: model.transform, dropping feature intermediates before
     output (Sentiment.scala:145-148,190)."""

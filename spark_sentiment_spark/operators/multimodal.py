@@ -7,11 +7,15 @@ dimensions and canonical-WAV rate/channels as native JVM expressions
 (:func:`header_metadata`), plus JPEG SOF marker scan and WAV chunk walk on
 the Arrow path (:func:`parse_container_header`) — all pinned against
 hand-constructed real headers in tests/test_multimodal.py. Only the
-pixel/sample *decode* behind the headers is a deterministic fake behind
-``_FAKE_CODEC`` (the container has no image/audio codecs; swap in
-PIL/ffmpeg per-batch inside the same ``mapInPandas`` loop in a real
-deployment — schema, partitioning, UDF signature, and Arrow batch shape
-are the real, tested part).
+pixel/sample *decode* of compressed formats in :func:`decode_features` is
+a deterministic fake (byte statistics; no image/audio codec is a
+dependency — a real deployment decodes with PIL/ffmpeg per batch inside
+the same ``mapInPandas`` loop; schema, partitioning, UDF signature, and
+Arrow batch shape are the real, tested part). Uncompressed P6 PPM and
+PCM WAV are decoded for real.
+
+Every operator reads and writes the catalog's fixed column names:
+``doc_id`` and ``text`` from ``documents``, ``content`` for the payload.
 
 Scale posture: binary payloads stay columnar end-to-end (Arrow batches in,
 Arrow batches out — no per-row Python calls); metadata extraction that
@@ -34,19 +38,19 @@ MAGIC_BYTES = (
     (b"\x00\x00\x00", "video/mp4"),
 )
 
-_FAKE_CODEC = True  # no PIL/ffmpeg in this container — deterministic stub
+STUB_FRAMES = 4   # byte slices per payload in frame_sample_stub
+THUMB = 4         # decode_ppm_features' thumbnail is THUMB×THUMB
 
 
-def attach_binary_content(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def attach_binary_content(df: DataFrame) -> DataFrame:
     """Build a multimodal table from ``documents``: the text bytes stand in
     for an opaque media payload (deterministic), with typed metadata."""
-    content = F.encode(F.col(text_col), "UTF-8")
+    content = F.encode(F.col("text"), "UTF-8")
     modality = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col(id_col) % 3 + 1).cast("int"))
+        (F.col("doc_id") % 3 + 1).cast("int"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         modality.alias("modality"),
         content.alias("content"),
         F.struct(
@@ -56,11 +60,10 @@ def attach_binary_content(df: DataFrame, text_col: str = "text",
     )
 
 
-def binary_fingerprints(df: DataFrame, content_col: str = "content",
-                        id_col: str = "doc_id") -> DataFrame:
+def binary_fingerprints(df: DataFrame) -> DataFrame:
     """Codec-free metadata: byte length, sha256, magic-byte mime sniff —
     all JVM-native Column expressions over the binary column."""
-    content = F.col(content_col)
+    content = F.col("content")
     mime = F.lit("application/octet-stream")
     for magic, label in reversed(MAGIC_BYTES):
         hexpat = magic.hex()
@@ -69,16 +72,14 @@ def binary_fingerprints(df: DataFrame, content_col: str = "content",
             == F.lit(hexpat), label
         ).otherwise(mime)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.length(content).cast("long").alias("n_bytes"),
         F.lower(F.sha2(content, 256)).alias("sha256"),
         mime.alias("sniffed_mime"),
     )
 
 
-def decode_features(df: DataFrame, content_col: str = "content",
-                    id_col: str = "doc_id", batch_hint: int = 1000
-                    ) -> DataFrame:
+def decode_features(df: DataFrame) -> DataFrame:
     """Decode + feature-extract over ``mapInPandas``: Arrow batches of
     binary payloads → fixed-width feature rows. Container-header metadata
     (PNG/GIF/BMP/JPEG dimensions, WAV rate — `parse_container_header`) is
@@ -87,7 +88,7 @@ def decode_features(df: DataFrame, content_col: str = "content",
     content); a real deployment decodes inside the same loop."""
     import pandas as pd
 
-    schema = (f"{id_col} long, n_bytes long, container string, "
+    schema = ("doc_id long, n_bytes long, container string, "
               "mean_byte double, entropy_bits double, width int, height int")
 
     def extract(batches):
@@ -95,76 +96,71 @@ def decode_features(df: DataFrame, content_col: str = "content",
 
         for pdf in batches:
             rows = []
-            for did, buf in zip(pdf[id_col], pdf[content_col]):
+            for did, buf in zip(pdf["doc_id"], pdf["content"]):
                 b = bytes(buf)
                 n = len(b)
                 hdr = parse_container_header(b) or {}
-                if _FAKE_CODEC:
-                    # deterministic fake decode: byte stats; fake geometry
-                    # ONLY where no real container header supplied one
-                    counts = [0] * 256
-                    for byte in b:
-                        counts[byte] += 1
-                    mean = sum(i * c for i, c in enumerate(counts)) / n if n else 0.0
-                    ent = -sum((c / n) * math.log2(c / n)
-                               for c in counts if c) if n else 0.0
-                    width = hdr.get("width", 1 + (n % 640))
-                    height = hdr.get("height", 1 + ((n * 7919) % 480))
-                else:  # pragma: no cover - real codec path
-                    raise NotImplementedError("install PIL/ffmpeg and decode here")
+                # deterministic fake decode: byte stats; fake geometry ONLY
+                # where no real container header supplied one
+                counts = [0] * 256
+                for byte in b:
+                    counts[byte] += 1
+                mean = sum(i * c for i, c in enumerate(counts)) / n if n else 0.0
+                ent = -sum((c / n) * math.log2(c / n)
+                           for c in counts if c) if n else 0.0
+                width = hdr.get("width", 1 + (n % 640))
+                height = hdr.get("height", 1 + ((n * 7919) % 480))
                 rows.append((did, n, hdr.get("container"), mean, ent,
                              width, height))
             yield pd.DataFrame(
-                rows, columns=[id_col, "n_bytes", "container", "mean_byte",
+                rows, columns=["doc_id", "n_bytes", "container", "mean_byte",
                                "entropy_bits", "width", "height"])
 
-    return df.select(id_col, content_col).mapInPandas(extract, schema)
+    return df.select("doc_id", "content").mapInPandas(extract, schema)
 
 
-def resize_stub(df: DataFrame, content_col: str = "content",
-                id_col: str = "doc_id", max_dim: int = 256) -> DataFrame:
+def resize_stub(df: DataFrame, max_dim: int = 256) -> DataFrame:
     """Resize plumbing: binary in → binary out, same partitioning. The fake
     'resize' truncates payloads to max_dim² bytes (a real codec decodes,
     resizes, re-encodes inside the same Arrow batch loop)."""
     import pandas as pd
 
-    schema = f"{id_col} long, content binary, resized boolean"
+    schema = "doc_id long, content binary, resized boolean"
 
     def resize(batches):
         limit = max_dim * max_dim
         for pdf in batches:
             out = pd.DataFrame({
-                id_col: pdf[id_col],
-                "content": [bytes(b)[:limit] for b in pdf[content_col]],
-                "resized": [len(bytes(b)) > limit for b in pdf[content_col]],
+                "doc_id": pdf["doc_id"],
+                "content": [bytes(b)[:limit] for b in pdf["content"]],
+                "resized": [len(bytes(b)) > limit for b in pdf["content"]],
             })
             yield out
 
-    return df.select(id_col, content_col).mapInPandas(resize, schema)
+    return df.select("doc_id", "content").mapInPandas(resize, schema)
 
 
-def frame_sample_stub(df: DataFrame, content_col: str = "content",
-                      id_col: str = "doc_id", n_frames: int = 4) -> DataFrame:
+def frame_sample_stub(df: DataFrame) -> DataFrame:
     """Frame-sampling plumbing for video payloads: one row per sampled
     frame (posexplode shape). Fake codec: evenly-spaced byte slices."""
     import pandas as pd
 
-    schema = f"{id_col} long, frame_idx int, frame binary"
+    schema = "doc_id long, frame_idx int, frame binary"
 
     def sample(batches):
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for did, buf in zip(pdf[id_col], pdf[content_col]):
+            for did, buf in zip(pdf["doc_id"], pdf["content"]):
                 b = bytes(buf)
-                step = max(1, len(b) // n_frames)
-                for i in range(n_frames):
+                step = max(1, len(b) // STUB_FRAMES)
+                for i in range(STUB_FRAMES):
                     ids.append(did)
                     idxs.append(i)
                     frames.append(b[i * step:(i + 1) * step])
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs,
+            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
                                 "frame": frames})
 
-    return df.select(id_col, content_col).mapInPandas(sample, schema)
+    return df.select("doc_id", "content").mapInPandas(sample, schema)
 
 
 # --- Container-header metadata (REAL parsing, no codec required) ------------
@@ -200,15 +196,14 @@ def _prefix_is(c, pos: int, magic: bytes):
     return F.lower(F.hex(F.substring(c, pos, len(magic)))) == magic.hex()
 
 
-def header_metadata(df: DataFrame, content_col: str = "content",
-                    id_col: str = "doc_id") -> DataFrame:
+def header_metadata(df: DataFrame) -> DataFrame:
     """Real container-header metadata, fully JVM-native: container label,
     image width/height (PNG/GIF/BMP), audio channels/sample-rate (canonical
     WAV). No Python, no codec — just fixed-offset byte fields, so this runs
     at scan speed over a 100 TB binary column. JPEG needs a marker scan →
     width/height null here, parsed on the Arrow path (`decode_features`);
     non-canonical WAV chunk order likewise falls back to the Arrow path."""
-    c = F.col(content_col)
+    c = F.col("content")
     is_png = _prefix_is(c, 1, b"\x89PNG\r\n\x1a\n")
     is_gif = _prefix_is(c, 1, b"GIF87a") | _prefix_is(c, 1, b"GIF89a")
     is_bmp = _prefix_is(c, 1, b"BM")
@@ -231,7 +226,7 @@ def header_metadata(df: DataFrame, content_col: str = "content",
     channels = F.when(is_wav & canonical_fmt, _le(c, 23, 2))
     sample_rate = F.when(is_wav & canonical_fmt, _le(c, 25, 4))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         container.alias("container"),
         width.alias("width"),
         height.alias("height"),
@@ -330,8 +325,7 @@ def _int_le(col, nbytes: int):
         for i in range(nbytes)])
 
 
-def attach_media_content(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def attach_media_content(df: DataFrame) -> DataFrame:
     """Wrap each document's bytes in a REAL media container header —
     PNG / canonical WAV / ISO-BMFF(mp4) round-robin by id — with
     deterministic geometry derived from the id:
@@ -344,8 +338,8 @@ def attach_media_content(df: DataFrame, text_col: str = "text",
     synthesizing a 100 TB multimodal table is a scan-speed projection. The
     point: `header_metadata` must parse back exactly the values constructed
     here — checked arithmetically by the `multimodal_headers` oracle."""
-    id_c = F.col(id_col)
-    payload = F.encode(F.col(text_col), "UTF-8")
+    id_c = F.col("doc_id")
+    payload = F.encode(F.col("text"), "UTF-8")
     n = F.length(payload)
     w = 64 + id_c % 512
     h = 48 + id_c % 256
@@ -385,13 +379,13 @@ def attach_media_content(df: DataFrame, text_col: str = "text",
 PPM_BLOCKS = 48  # 48 md5 blocks × 16 bytes ≥ the max 15×11×3 pixel buffer
 
 
-def attach_ppm_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_ppm_content(df: DataFrame) -> DataFrame:
     """Synthesize REAL binary P6 PPM images natively: geometry from the id
     (width 8+id%8, height 8+id%4, maxval 255), pixel bytes from an md5
     chain keyed by the id — every byte is reproducible by an independent
     implementation, and the whole construction is a scan-speed projection
     (hex/md5/concat/substr, no Python)."""
-    id_c = F.col(id_col)
+    id_c = F.col("doc_id")
     w = (8 + id_c % 8).cast("int")
     h = (8 + id_c % 4).cast("int")
     npix = (w * h * 3).cast("int")
@@ -407,11 +401,10 @@ def attach_ppm_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_c, F.concat(header, pixels).alias("content"))
 
 
-def decode_ppm_features(df: DataFrame, content_col: str = "content",
-                        id_col: str = "doc_id", thumb: int = 4) -> DataFrame:
+def decode_ppm_features(df: DataFrame) -> DataFrame:
     """REAL pixel decode via mapInPandas: parse the P6 header, reinterpret
     the payload as an (h, w, 3) uint8 raster, emit true per-channel means
-    and a ``thumb``×``thumb`` block-mean thumbnail (the resize kernel). One
+    and a ``THUMB``×``THUMB`` block-mean thumbnail (the resize kernel). One
     Arrow batch in, one out — the same plumbing shape as the codec-blocked
     paths, but with nothing faked."""
     import re
@@ -419,13 +412,13 @@ def decode_ppm_features(df: DataFrame, content_col: str = "content",
     import numpy as np
     import pandas as pd
 
-    schema = (f"{id_col} long, width int, height int, "
+    schema = ("doc_id long, width int, height int, "
               "mean_r double, mean_g double, mean_b double, thumb binary")
 
     def run(batches):
         for pdf in batches:
             out = []
-            for did, buf in zip(pdf[id_col], pdf[content_col]):
+            for did, buf in zip(pdf["doc_id"], pdf["content"]):
                 b = bytes(buf)
                 m = re.match(rb"P6\s+(\d+)\s+(\d+)\s+(\d+)\s", b)
                 w, h, maxval = (int(g) for g in m.groups())
@@ -433,14 +426,14 @@ def decode_ppm_features(df: DataFrame, content_col: str = "content",
                                     offset=m.end())
                       .reshape(h, w, 3).astype(np.float64))
                 means = px.mean(axis=(0, 1))
-                hh, ww = (h // thumb) * thumb, (w // thumb) * thumb
+                hh, ww = (h // THUMB) * THUMB, (w // THUMB) * THUMB
                 pool = (px[:hh, :ww]
-                        .reshape(thumb, hh // thumb, thumb, ww // thumb, 3)
+                        .reshape(THUMB, hh // THUMB, THUMB, ww // THUMB, 3)
                         .mean(axis=(1, 3)))
                 out.append((int(did), w, h, means[0], means[1], means[2],
                             pool.round().clip(0, 255).astype(np.uint8)
                             .tobytes()))
-            yield pd.DataFrame(out, columns=[id_col, "width", "height",
+            yield pd.DataFrame(out, columns=["doc_id", "width", "height",
                                              "mean_r", "mean_g", "mean_b",
                                              "thumb"])
 
@@ -452,8 +445,7 @@ def decode_ppm_features(df: DataFrame, content_col: str = "content",
 # the data payload and a dtype reinterpret — so this decode is real too.
 
 
-def decode_wav_features(df: DataFrame, content_col: str = "content",
-                        id_col: str = "doc_id") -> DataFrame:
+def decode_wav_features(df: DataFrame) -> DataFrame:
     """REAL audio decode via mapInPandas: chunk-walk to ``fmt ``/``data``,
     reinterpret the payload as int16 LE PCM, and emit true sample count,
     duration, RMS, and peak. Non-WAV (or truncated) content yields nulls —
@@ -461,13 +453,13 @@ def decode_wav_features(df: DataFrame, content_col: str = "content",
     import numpy as np
     import pandas as pd
 
-    schema = (f"{id_col} long, channels int, sample_rate int, "
+    schema = ("doc_id long, channels int, sample_rate int, "
               "n_samples long, duration_s double, rms double, peak int")
 
     def run(batches):
         for pdf in batches:
             out = []
-            for did, buf in zip(pdf[id_col], pdf[content_col]):
+            for did, buf in zip(pdf["doc_id"], pdf["content"]):
                 b = bytes(buf)
                 row = (int(did), None, None, None, None, None, None)
                 if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
@@ -493,7 +485,7 @@ def decode_wav_features(df: DataFrame, content_col: str = "content",
                         peak = int(np.abs(pcm).max()) if len(pcm) else 0
                         row = (int(did), ch, rate, n, n / rate, rms, peak)
                 out.append(row)
-            yield pd.DataFrame(out, columns=[id_col, "channels",
+            yield pd.DataFrame(out, columns=["doc_id", "channels",
                                              "sample_rate", "n_samples",
                                              "duration_s", "rms", "peak"])
 
@@ -508,11 +500,11 @@ VIDEO_H = 8
 _FRAME_BLOCKS = (VIDEO_W * VIDEO_H * 3 + 15) // 16  # md5 blocks per frame
 
 
-def attach_ppm_video(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_ppm_video(df: DataFrame) -> DataFrame:
     """Synthesize a REAL uncompressed frame stream natively: ``PPMV`` +
     big-endian frame count + ``VIDEO_FRAMES`` concatenated 8×8 P6 frames,
     every pixel byte reproducible from an md5 chain keyed (id, frame)."""
-    id_c = F.col(id_col)
+    id_c = F.col("doc_id")
     npix = VIDEO_W * VIDEO_H * 3
     header = F.lit(b"P6\n" + f"{VIDEO_W} {VIDEO_H}".encode() + b"\n255\n")
     frames = []
@@ -527,24 +519,22 @@ def attach_ppm_video(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_c, content.alias("content"))
 
 
-def sample_video_frames(df: DataFrame, stride: int = 2,
-                        content_col: str = "content",
-                        id_col: str = "doc_id") -> DataFrame:
+def sample_video_frames(df: DataFrame) -> DataFrame:
     """REAL frame sampling via mapInPandas: walk the PPMV stream, decode
-    every ``stride``-th frame's pixels, emit per-frame channel means —
+    every 2nd frame's pixels, emit per-frame channel means —
     the uncompressed-stream version of ffmpeg's `select=not(mod(n,k))`."""
     import re
 
     import numpy as np
     import pandas as pd
 
-    schema = (f"{id_col} long, frame int, "
+    schema = ("doc_id long, frame int, "
               "mean_r double, mean_g double, mean_b double")
 
     def run(batches):
         for pdf in batches:
             out = []
-            for did, buf in zip(pdf[id_col], pdf[content_col]):
+            for did, buf in zip(pdf["doc_id"], pdf["content"]):
                 b = bytes(buf)
                 if b[:4] != b"PPMV":
                     continue
@@ -555,14 +545,14 @@ def sample_video_frames(df: DataFrame, stride: int = 2,
                     w, h, _ = (int(g) for g in m.groups())
                     start = off + m.end()
                     end = start + w * h * 3
-                    if fr % stride == 0:
+                    if fr % 2 == 0:
                         px = (np.frombuffer(b[start:end], np.uint8)
                               .reshape(h, w, 3).astype(np.float64))
                         means = px.mean(axis=(0, 1))
                         out.append((int(did), fr,
                                     means[0], means[1], means[2]))
                     off = end
-            yield pd.DataFrame(out, columns=[id_col, "frame", "mean_r",
+            yield pd.DataFrame(out, columns=["doc_id", "frame", "mean_r",
                                              "mean_g", "mean_b"])
 
     return df.mapInPandas(run, schema)
@@ -575,8 +565,7 @@ PHASH_PERTURB = 40  # per-member shift of the first pixel byte (mod 256)
 PHASH_BLOCKS = 12  # 12 md5 blocks x 16 bytes = the exact 8*8*3 buffer
 
 
-def attach_ppm_group_content(df: DataFrame,
-                             id_col: str = "doc_id") -> DataFrame:
+def attach_ppm_group_content(df: DataFrame) -> DataFrame:
     """Synthesize 8x8 P6 PPM images with PLANTED near-duplicates: the
     pixel chain is keyed by gid = id div PHASH_GROUP (so group members
     share a base image) and member m = id % PHASH_GROUP shifts the first
@@ -584,8 +573,8 @@ def attach_ppm_group_content(df: DataFrame,
     leaves perceptual hashes within a few bits of each other. Same
     native construction discipline as attach_ppm_content: every byte is
     md5-reproducible, the whole thing a scan-speed projection."""
-    id_c = F.col(id_col)
-    gid = F.expr(f"{id_col} div {PHASH_GROUP}")
+    id_c = F.col("doc_id")
+    gid = F.expr(f"doc_id div {PHASH_GROUP}")
     m = (id_c % PHASH_GROUP).cast("int")
     blocks = F.concat(*[
         F.unhex(F.md5(F.concat(F.lit("g:"), gid.cast("string"),
@@ -599,8 +588,7 @@ def attach_ppm_group_content(df: DataFrame,
     return df.select(id_c, F.concat(header, pixels).alias("content"))
 
 
-def decode_ppm_ahash(df: DataFrame, content_col: str = "content",
-                     id_col: str = "doc_id") -> DataFrame:
+def decode_ppm_ahash(df: DataFrame) -> DataFrame:
     """REAL decode to a 64-bit average hash: parse the P6 header,
     reinterpret the raster, integer grayscale (r+g+b) div 3 per pixel,
     bit_p = [64*gray_p > sum(gray)] (integer cross-multiplication — no
@@ -612,12 +600,12 @@ def decode_ppm_ahash(df: DataFrame, content_col: str = "content",
     import numpy as np
     import pandas as pd
 
-    schema = f"{id_col} long, b0 long, b1 long, b2 long, b3 long"
+    schema = "doc_id long, b0 long, b1 long, b2 long, b3 long"
 
     def run(batches):
         for pdf in batches:
             out = []
-            for did, buf in zip(pdf[id_col], pdf[content_col]):
+            for did, buf in zip(pdf["doc_id"], pdf["content"]):
                 b = bytes(buf)
                 m = re.match(rb"P6\s+(\d+)\s+(\d+)\s+(\d+)\s", b)
                 w, h, _ = (int(g) for g in m.groups())
@@ -630,6 +618,6 @@ def decode_ppm_ahash(df: DataFrame, content_col: str = "content",
                 bands = [int((bits[16 * i:16 * (i + 1)]
                               << np.arange(16)).sum()) for i in range(4)]
                 out.append((int(did), *bands))
-            yield pd.DataFrame(out, columns=[id_col, "b0", "b1", "b2", "b3"])
+            yield pd.DataFrame(out, columns=["doc_id", "b0", "b1", "b2", "b3"])
 
     return df.mapInPandas(run, schema)

@@ -152,15 +152,15 @@ def _synth_examples(seed: int = 7, per_class: int = 600):
     return _shuffled(rng, data)
 
 
-def _synth_coverage(seed: int = 7, cycles: int = 4):
-    """Training synthesis with guaranteed lexicon coverage: every lexicon
-    word appears in ``cycles`` dense examples (5-word chunks of its
-    polarity, extreme class) and ``cycles/2`` mild examples (one word
+def _synth_coverage():
+    """Training synthesis with guaranteed lexicon coverage (seed 7): every
+    lexicon word appears in 4 dense examples (5-word chunks of its
+    polarity, extreme class) and on average 2 mild examples (one word
     among 6-8 fillers, mild class). Sampling-only synthesis leaves rare
     words unseen, which measured as 0<->4 flips on held-out data."""
-    rng, pos, neg = _polarity_pools(seed)
+    rng, pos, neg = _polarity_pools(7)
     data: list[tuple[str, int]] = []
-    for _ in range(cycles):
+    for _ in range(4):
         for pool, dense_cls, mild_cls in ((neg, 0, 1), (pos, 4, 3)):
             words = pool[:]
             rng.shuffle(words)

@@ -20,12 +20,12 @@ from pyspark.sql import functions as F
 def point_in_interval_join(
     points: DataFrame, intervals: DataFrame, on: list[str],
     point_ts: str, start_ts: str, end_ts: str,
-    bucket_seconds: int = 3600, how: str = "inner",
+    bucket_seconds: int = 3600,
 ) -> DataFrame:
-    """Join each point row to every interval row (same ``on`` keys) with
-    ``start <= point < end``. ``bucket_seconds`` should be ≥ the typical
-    interval width for minimal fan-out (any value is correct, only the
-    per-interval bucket count differs)."""
+    """Inner-join each point row to every interval row (same ``on`` keys)
+    with ``start <= point < end``. ``bucket_seconds`` should be ≥ the
+    typical interval width for minimal fan-out (any value is correct, only
+    the per-interval bucket count differs)."""
     step = F.lit(bucket_seconds).cast("long")
     # sub-second precision: work in microseconds before bucketing
     us = 1_000_000
@@ -37,7 +37,7 @@ def point_in_interval_join(
     i = intervals.withColumn(
         "_b", F.explode(F.sequence(i_first.cast("long"),
                                    i_last.cast("long"))))
-    joined = p.join(i, on + ["_b"], how)
+    joined = p.join(i, on + ["_b"])
     exact = ((F.col(point_ts) >= F.col(start_ts))
              & (F.col(point_ts) < F.col(end_ts)))
     return joined.where(exact).drop("_b")

@@ -13,10 +13,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_agg(df: DataFrame, keys: list[str], aggs: dict[str, Column],
-               n_salts: int = 16) -> DataFrame:
+def salted_agg(df: DataFrame, keys: list[str], aggs: dict[str, Column]
+               ) -> DataFrame:
     """Two-phase aggregation: partial agg on (keys..., salt) spreads a hot
-    key over ``n_salts`` reducers, final agg on keys merges the partials.
+    key over 16 reducers, final agg on keys merges the partials.
 
     ``aggs`` maps output name → *re-aggregable* expression builder applied
     twice; supported: sum, count (expressed as sum at phase 2), min, max.
@@ -25,7 +25,7 @@ def salted_agg(df: DataFrame, keys: list[str], aggs: dict[str, Column],
         salted_agg(df, ["k"], {"n": F.count(F.lit(1)), "s": F.sum("v")})
     """
     salt = (F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                   F.lit(n_salts))).alias("_salt")
+                   F.lit(16))).alias("_salt")
     phase1 = (df.withColumn("_salt", salt)
               .groupBy(*keys, "_salt")
               .agg(*[expr.alias(f"_p_{name}") for name, expr in aggs.items()]))
@@ -44,17 +44,17 @@ def salted_agg(df: DataFrame, keys: list[str], aggs: dict[str, Column],
 
 
 def salted_join(left: DataFrame, right: DataFrame, on: list[str],
-                n_salts: int = 8, how: str = "inner") -> DataFrame:
-    """Skewed-key equi-join: left rows get a deterministic-per-row salt in
-    [0, n_salts); the (small-ish) right side is replicated once per salt
-    value. The join key becomes (key..., salt) so a hot key's rows spread
-    over ``n_salts`` reducers. Semantics identical to ``left.join(right,
-    on, how)`` for inner/left joins."""
+                n_salts: int = 8) -> DataFrame:
+    """Skewed-key inner equi-join: left rows get a deterministic-per-row
+    salt in [0, n_salts); the (small-ish) right side is replicated once per
+    salt value. The join key becomes (key..., salt) so a hot key's rows
+    spread over ``n_salts`` reducers. Semantics identical to
+    ``left.join(right, on)``."""
     lsalt = F.pmod(F.xxhash64(F.monotonically_increasing_id()),
                    F.lit(n_salts))
     l = left.withColumn("_salt", lsalt)
     r = (right.withColumn(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
          .withColumn("_salt", F.col("_salt").cast("long")))
-    out = l.join(r, on + ["_salt"], how)
+    out = l.join(r, on + ["_salt"])
     return out.drop("_salt")

@@ -34,41 +34,40 @@ from spark_sentiment_spark.functions.lexicon import raw_lexicon_df
 from spark_sentiment_spark.functions.text import clean_text_col
 
 
-def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    cleaned = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col), clean_text_col(text_col).alias("_clean")
+def _tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, token) rows of the cleaned, space-split ``text``."""
+    cleaned = docs.where(F.col("text").isNotNull()).select(
+        F.col("doc_id"), clean_text_col("text").alias("_clean")
     )
     return cleaned.select(
-        id_col, F.explode(F.split(F.col("_clean"), " ", -1)).alias("token")
+        "doc_id", F.explode(F.split(F.col("_clean"), " ", -1)).alias("token")
     )
 
 
-def score_documents_raw(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Mean lexicon score over matched tokens; 0.0 when nothing matches.
+def score_documents_raw(docs: DataFrame) -> DataFrame:
+    """Per ``doc_id``, the mean lexicon score of ``text`` over matched
+    tokens; 0.0 when nothing matches.
 
     Semantics (PlainTextAnalyser.getValue, raw stream only): numerator =
     sum of matched scores; denominator = count of tokens whose score ≠ 0.
     """
     spark = docs.sparkSession
     lex = raw_lexicon_df(spark).where(F.col("score") != 0)
-    toks = _tokens(docs, id_col, text_col)
+    toks = _tokens(docs)
     scored = toks.join(F.broadcast(lex), toks.token == lex.word, "left")
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         (F.coalesce(F.sum("score"), F.lit(0.0))
          / F.when(F.count("score") > 0, F.count("score"))).alias("_ratio")
     )
-    out = docs.select(id_col, text_col).join(per_doc, id_col, "left")
+    out = docs.select("doc_id", "text").join(per_doc, "doc_id", "left")
     return out.select(
-        id_col,
+        "doc_id",
         F.round(F.coalesce(F.col("_ratio"), F.lit(0.0)), 6).alias("sentiment"),
     )
 
 
 def score_documents(
     docs: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     output_col: str = "sentiment",
 ) -> DataFrame:
@@ -129,16 +128,12 @@ def score_documents(
         F.coalesce(_score_text(cleaned), F.lit(0.0)))
 
 
-def score_documents_exploded(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    output_col: str = "sentiment",
-) -> DataFrame:
+def score_documents_exploded(docs: DataFrame) -> DataFrame:
     """The explode/score-vocabulary/join-back formulation of
-    ``score_documents`` — kept as a differential twin (both must agree to
-    1e-9; see tests) and as the template for cases where the per-token
-    value is NOT memoizable (e.g. context-dependent scoring)."""
+    ``score_documents`` over ``doc_id``/``text`` — kept as a differential
+    twin (both must agree to 1e-9; see tests) and as the template for
+    cases where the per-token value is NOT memoizable (e.g.
+    context-dependent scoring)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -156,7 +151,7 @@ def score_documents_exploded(
             lambda t: word_value(stem(t)) if t is not None else 0.0
         )
 
-    toks = _tokens(docs, id_col, text_col)
+    toks = _tokens(docs)
     # Score each *distinct* token once, then join back: the Python hop runs
     # over the vocabulary, not the corpus.
     vocab = toks.select("token").distinct()
@@ -169,7 +164,7 @@ def score_documents_exploded(
     # small; at 100 TB the distinct-token set may exceed broadcast limits, so
     # we must not force a broadcast here.
     scored = toks.join(vocab, "token", "left")
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.sum("v_raw").alias("raw_sum"),
         F.count(F.when(F.col("v_raw") != 0, 1)).alias("raw_n"),
         F.sum("v_stem").alias("stem_sum"),
@@ -183,9 +178,9 @@ def score_documents_exploded(
         .when(stm.isNotNull(), stm)
         .otherwise(F.lit(0.0))
     )
-    per_doc = per_doc.select(id_col, combined.alias(output_col))
-    out = docs.join(per_doc, id_col, "left")
-    return out.withColumn(output_col, F.coalesce(F.col(output_col), F.lit(0.0)))
+    per_doc = per_doc.select("doc_id", combined.alias("sentiment"))
+    out = docs.join(per_doc, "doc_id", "left")
+    return out.withColumn("sentiment", F.coalesce(F.col("sentiment"), F.lit(0.0)))
 
 
 def fuzzy_lexicon_scores(tokens: DataFrame, token_col: str = "token",

@@ -759,15 +759,14 @@ PAGERANK_VOCAB_CAP = 100_000  # top-V tokens kept in the graph (TextRank
 #   overflow the int64 rank-mass bound V*SCALE*wmax < 2^63)
 
 
-def _pagerank_sql(iters: int = PAGERANK_ITERS,
-                  scale: int = PAGERANK_SCALE) -> str:
+def _pagerank_sql() -> str:
     """Generated chained-CTE oracle: one CTE per power iteration (the
     SimHash generated-twin trick — recursive CTEs cannot aggregate in the
     recursive term, but a FIXED iteration count unrolls). All arithmetic
     is BIGINT with floor division (`//` in DuckDB == `div` in Spark for
     the non-negative values here), so both engines produce bit-identical
     ranks — no float summation order anywhere."""
-    base = (15 * scale) // 100
+    base = (15 * PAGERANK_SCALE) // 100
     sql = f"""
 WITH t AS (
   SELECT {WS_TOKENS_SQL} AS l
@@ -791,8 +790,8 @@ WITH t AS (
   SELECT edges.src, edges.dst, edges.w, wout.wt
   FROM edges JOIN wout ON edges.src = wout.src
 ), nodes AS (SELECT DISTINCT src AS v FROM edges),
-pr0 AS (SELECT v, CAST({scale} AS BIGINT) AS r FROM nodes)"""
-    for i in range(1, iters + 1):
+pr0 AS (SELECT v, CAST({PAGERANK_SCALE} AS BIGINT) AS r FROM nodes)"""
+    for i in range(1, PAGERANK_ITERS + 1):
         sql += f""",
 pr{i} AS (
   SELECT n.v,
@@ -806,7 +805,7 @@ pr{i} AS (
 )"""
     sql += f"""
 SELECT p.v AS token, w.wt AS w_out, p.r AS rank_fp
-FROM pr{iters} p JOIN wout w ON p.v = w.src
+FROM pr{PAGERANK_ITERS} p JOIN wout w ON p.v = w.src
 ORDER BY token
 """
     return sql
@@ -816,8 +815,7 @@ PAGERANK_SQL = _pagerank_sql()
 
 
 @register("token_pagerank", sql=PAGERANK_SQL, tags=("pipeline", "text"))
-def token_pagerank(spark, sf_dir, iters: int = PAGERANK_ITERS,
-                   vocab_cap: int = PAGERANK_VOCAB_CAP):
+def token_pagerank(spark, sf_dir, vocab_cap: int = PAGERANK_VOCAB_CAP):
     """TextRank (Mihalcea & Tarau 2004) centrality of the token
     co-occurrence graph — the keyword-importance signal behind extractive
     keyword/keyphrase mining, here over the symmetrized adjacent-bigram
@@ -891,7 +889,7 @@ def token_pagerank(spark, sf_dir, iters: int = PAGERANK_ITERS,
              .select("v", F.lit(PAGERANK_SCALE).cast("bigint").alias("r"))
              .localCheckpoint(eager=True))
     # A checkpoint every iteration: every second one measured slower.
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contrib = (e.join(ranks, e.src == ranks.v)
                    .select(F.col("dst").alias("cv"),
                            F.expr("r * w div wt").alias("c")))

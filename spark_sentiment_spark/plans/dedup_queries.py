@@ -673,14 +673,15 @@ def char_ngram_stats(docs, n: int = CHAR_NGRAM_LEN):
 
 
 @register("dedup_char_ngrams", sql=CHAR_NGRAM_SQL, tags=("dedup", "text"))
-def dedup_char_ngrams(spark, sf_dir, n: int = CHAR_NGRAM_LEN):
+def dedup_char_ngrams(spark, sf_dir):
     """Per-document verbatim-span duplication signal: the fraction of a
-    doc's distinct character ``n``-grams that also appear in at least one
-    other document. High ``shared_ratio`` flags boilerplate/template/
-    quoted-passage duplication that token-level shingles miss because the
-    repeated span crosses token boundaries or sits inside otherwise
-    unique text; pipelines threshold it (or feed the flagged spans to an
-    exact suffix-array pass, Lee et al. 2021) before training.
+    doc's distinct character ``CHAR_NGRAM_LEN``-grams that also appear in at
+    least one other document. High ``shared_ratio`` flags
+    boilerplate/template/quoted-passage duplication that token-level
+    shingles miss because the repeated span crosses token boundaries or
+    sits inside otherwise unique text; pipelines threshold it (or feed the
+    flagged spans to an exact suffix-array pass, Lee et al. 2021) before
+    training.
 
     Scale: the gram table is corpus-length × n bytes, but it collapses
     through two map-side-combined hash aggregations (gram counts, then
@@ -688,7 +689,7 @@ def dedup_char_ngrams(spark, sf_dir, n: int = CHAR_NGRAM_LEN):
     here; no self-join, no all-pairs. At web scale raise the stride
     (sample every s-th offset) to trade recall for an s× smaller
     explode; the fixture runs stride 1."""
-    return char_ngram_stats(load(spark, sf_dir, "documents"), n)
+    return char_ngram_stats(load(spark, sf_dir, "documents"))
 
 
 # --- Prefix-filtered exact similarity join (PPJoin-style) -------------------
@@ -960,28 +961,30 @@ ORDER BY doc_id
 """
 
 
-def span_excise(docs, n: int = CHAR_NGRAM_LEN):
+def span_excise(docs):
     """Core of dedup_span_excise over any (doc_id, text) DataFrame — split
     out so tests can pin excision semantics on hand-built corpora.
 
-    A character position is DUPLICATED if any length-``n`` gram covering it
-    also occurs in at least one other document (the same shared-gram
-    definition `dedup_char_ngrams` scores). Flagged gram starts are merged
-    into islands (gaps-and-islands window; adjacent islands coalesce) and
-    the kept text is rebuilt from the complement gaps with one
+    A character position is DUPLICATED if any length-``CHAR_NGRAM_LEN`` gram
+    covering it also occurs in at least one other document (the same
+    shared-gram definition `dedup_char_ngrams` scores). Flagged gram starts
+    are merged into islands (gaps-and-islands window; adjacent islands
+    coalesce) and the kept text is rebuilt from the complement gaps with one
     ``aggregate()`` higher-order fold over the sorted island array — no
     per-character explode anywhere."""
-    live = docs.where(F.col("text").isNotNull() & (F.length("text") >= n))
+    live = docs.where(F.col("text").isNotNull()
+                      & (F.length("text") >= CHAR_NGRAM_LEN))
     # NOT persisted, deliberately: both consumers (shared-gram count and
     # flag join) re-run the explode, but a measured A/B at sf0.1 showed
     # identical wall time (3.4s) — the cost lives in the two gram-keyed
-    # shuffles, and caching a corpus×n-byte gram table would spend
+    # shuffles, and caching a corpus-sized gram table would spend
     # executor memory for nothing
     pos = live.select(
         "doc_id",
         F.explode(F.expr(
-            f"transform(sequence(1, length(text) - {n} + 1),"
-            f" i -> struct(i AS s, substring(text, i, {n}) AS gram))"))
+            f"transform(sequence(1, length(text) - {CHAR_NGRAM_LEN} + 1),"
+            f" i -> struct(i AS s,"
+            f" substring(text, i, {CHAR_NGRAM_LEN}) AS gram))"))
         .alias("g")).select("doc_id", "g.s", "g.gram")
     counts = (pos.select("doc_id", "gram").distinct()
               .groupBy("gram").agg(F.count(F.lit(1)).alias("nd")))
@@ -994,7 +997,7 @@ def span_excise(docs, n: int = CHAR_NGRAM_LEN):
     w_run = (Window.partitionBy("doc_id").orderBy("s")
              .rowsBetween(Window.unboundedPreceding, 0))
     isl = (flagged
-           .withColumn("prev_e", F.max("s").over(w_prev) + n - 1)
+           .withColumn("prev_e", F.max("s").over(w_prev) + CHAR_NGRAM_LEN - 1)
            .withColumn("new_island",
                        F.when(F.col("prev_e").isNull()
                               | (F.col("s") > F.col("prev_e") + 1), 1)
@@ -1002,7 +1005,7 @@ def span_excise(docs, n: int = CHAR_NGRAM_LEN):
            .withColumn("island", F.sum("new_island").over(w_run)))
     merged = (isl.groupBy("doc_id", "island")
               .agg(F.min("s").alias("s"),
-                   (F.max("s") + n - 1).alias("e")))
+                   (F.max("s") + CHAR_NGRAM_LEN - 1).alias("e")))
     ivs = (merged.groupBy("doc_id")
            .agg(F.array_sort(F.collect_list(F.struct("s", "e")))
                 .alias("ivs"),
@@ -1035,18 +1038,18 @@ def span_excise(docs, n: int = CHAR_NGRAM_LEN):
 @register("dedup_span_excise", sql=SPAN_EXCISE_SQL, tags=("dedup", "text"))
 def dedup_span_excise(spark, sf_dir):
     """Duplicated-span EXCISION — the transform `dedup_char_ngrams` only
-    scores: every character covered by a cross-document-shared ``n``-gram
-    is removed and the surviving text emitted (Lee et al. 2021,
-    arXiv:2107.06499 — their ExactSubstr dedup deletes the repeated spans
-    rather than dropping whole documents). Output per kept doc: the
-    cleaned text, original length, characters removed, and the count of
-    merged excised spans.
+    scores: every character covered by a cross-document-shared
+    ``CHAR_NGRAM_LEN``-gram is removed and the surviving text emitted (Lee
+    et al. 2021, arXiv:2107.06499 — their ExactSubstr dedup deletes the
+    repeated spans rather than dropping whole documents). Output per kept
+    doc: the cleaned text, original length, characters removed, and the
+    count of merged excised spans.
 
     Scale: gram emission is the same corpus-length explode as
     `dedup_char_ngrams` (two map-side-combined hash aggs for the shared
     set); flagged starts shuffle once on gram and once on doc_id; island
     merging is a per-doc window over flagged starts only (bounded by
-    text length / n per doc, not corpus size); the rebuild is one
+    text length / CHAR_NGRAM_LEN per doc, not corpus size); the rebuild is one
     higher-order fold over each doc's sorted island array — never a
     per-character row. At web scale raise the gram stride exactly as the
     scorer documents; thresholds (shared-in-≥2-docs) ride the same

@@ -1337,28 +1337,25 @@ ORDER BY a.vec_id
 
 @register("dedup_semantic", sql=SEMDEDUP_SQL, bench=True,
           tags=("dedup", "similarity"))
-def dedup_semantic(spark, sf_dir, k: int | None = None,
-                   tau: float = SEMDEDUP_TAU, probe: int = SEMDEDUP_PROBE):
+def dedup_semantic(spark, sf_dir):
     """Semantic dedup à la SemDeDup (Abbas et al. 2023, arXiv:2303.09540):
     a coarse quantizer scopes the quadratic pair search to within cells,
     then a deterministic greedy keep-policy drops any vector with a
-    smaller-id co-cell neighbor at cosine >= tau.
+    smaller-id co-cell neighbor at cosine >= SEMDEDUP_TAU.
 
     The quantizer is IVF-style with content-addressed seeds — the k
     vectors with smallest md5(vec_id) are the cell centroids (the
     standard sampled-centroid IVF coarse layer, 0 Lloyd iterations) —
-    and each vector PROBES its `probe` nearest cells for the pair
+    and each vector PROBES its SEMDEDUP_PROBE nearest cells for the pair
     search (multi-probe compensates unrefined seeds; measured on the
-    fixture: probe=1 recall 0.26, probe=2 recall 0.74 vs the exact
+    fixture: 1 probe recall 0.26, 2 probes recall 0.74 vs the exact
     all-pairs oracle, against >= 0.5 pinned). Reported cell membership
     is the top-1 cell; cosine-to-centroid ranks round to 6 dp with ties
-    to the lower cell id. Round 5 swapped this in for MLlib KMeans:
-    assignment is now pure arithmetic any engine reproduces, which is
-    what upgraded the driver check from rows-only to an exact DuckDB
-    twin. Guarantees are unchanged and still pinned in
-    tests/test_dedup_recall.py: no two KEPT vectors sharing a probed
-    cell are within tau of each other; cross-cell pairs are the
-    accepted miss.
+    to the lower cell id. Assignment is pure arithmetic any engine
+    reproduces (not MLlib KMeans), which is what makes the exact DuckDB
+    twin possible. Pinned in tests/test_dedup_recall.py: no two KEPT
+    vectors sharing a probed cell are within SEMDEDUP_TAU of each other;
+    cross-cell pairs are the accepted miss.
 
     Scale posture (100 TB): seeds are a TakeOrdered (k rows to the
     driver), assignment is one broadcast-k cross join (the classic IVF
@@ -1366,31 +1363,26 @@ def dedup_semantic(spark, sf_dir, k: int | None = None,
     k AUTO-SCALES as n / SEMDEDUP_CELL_TARGET past the k=8 floor
     (SemDeDup runs k ~ n/100k), so mean cell occupancy — and with it
     the per-cell pair search — stays bounded as the corpus grows; the
-    scale probe pins the resulting slope. probe multiplies pair-search
-    cost by at most probe². Known limit: the explicit F.broadcast on the
-    centroid table is honored regardless of its size, so past k ~ 10^5
+    scale probe pins the resulting slope. Probing multiplies pair-search
+    cost by at most SEMDEDUP_PROBE². Known limit: the explicit F.broadcast
+    on the centroid table is honored regardless of its size, so past k ~ 10^5
     cells (where the table outgrows broadcast range) drop the hint and
     let the assignment run as a shuffle join or swap in a hierarchical
     quantizer.
 
-    Round-19 re-probe of the two remaining SMJs (the in-cell pair join
-    and the final dropped left join; min-of-10, this host, baseline
-    1.298/1.38): SHUFFLE_HASH hints on both = 4.22 min (3.3x WORSE —
-    SHJ's per-partition build dominates at this scale); AQE
-    maxShuffledHashJoinLocalMapThreshold=64m = 1.247/1.505 (min -4%,
-    median +9% — noise); preferSortMergeJoin=false = 1.459/1.634
-    (+12% min). All three rejected again; join strategy stays with the
-    planner + AQE, which keeps the at-scale freedom too."""
-    if k is None:
-        n = row_count(spark, f"{sf_dir}/embeddings.parquet")
-        k = max(SEMDEDUP_K, n // SEMDEDUP_CELL_TARGET)
+    The two sort-merge joins (in-cell pairs, final dropped left join)
+    keep the planner's and AQE's choice: shuffle-hash hints measured
+    3.3x slower and the other join settings no faster."""
+    n = row_count(spark, f"{sf_dir}/embeddings.parquet")
+    k = max(SEMDEDUP_K, n // SEMDEDUP_CELL_TARGET)
 
     emb = load(spark, sf_dir, "embeddings")
     vecs = unit_vector_frame(emb, "u")
     cent = ivf_centroids(vecs, k, "cluster")  # bounded: k rows
     probes = track_persist(
-        ivf_ranked(vecs, cent, "cluster").where(F.col("rn") <= probe)
-        .select("vec_id", "cluster", "u", "rn"))  # `probe` rows per vector
+        ivf_ranked(vecs, cent, "cluster")
+        .where(F.col("rn") <= SEMDEDUP_PROBE)
+        .select("vec_id", "cluster", "u", "rn"))  # SEMDEDUP_PROBE rows/vec
     assigned = probes.where(F.col("rn") == 1).select("vec_id", "cluster", "u")
 
     x, y = probes.alias("x"), probes.alias("y")
@@ -1399,7 +1391,7 @@ def dedup_semantic(spark, sf_dir, k: int | None = None,
     dropped = (
         x.join(y, (F.col("x.cluster") == F.col("y.cluster"))
                & (F.col("x.vec_id") < F.col("y.vec_id")))
-        .where(cos >= tau)
+        .where(cos >= SEMDEDUP_TAU)
         .select(F.col("y.vec_id").alias("vec_id"))
         .distinct()
     )
@@ -2224,14 +2216,14 @@ def multimodal_frame_sample(spark, sf_dir):
     uncompressed 8×8 frames per doc), every 2nd frame decoded to true
     channel means — the uncompressed-stream frame-sample path with nothing
     faked. Byte-exact construction and decode pinned in
-    tests/test_multimodal.py; (round 5) exact DuckDB twin replays the
+    tests/test_multimodal.py; the exact DuckDB twin replays the
     sampled frames' channel means from the same md5 pixel chains."""
     from spark_sentiment_spark.operators.multimodal import (
         attach_ppm_video, sample_video_frames)
 
     docs = load(spark, sf_dir, "documents")
     vid = attach_ppm_video(docs)
-    return (sample_video_frames(vid, stride=2)
+    return (sample_video_frames(vid)
             .select("doc_id", "frame",
                     F.round("mean_r", 4).alias("mean_r"),
                     F.round("mean_g", 4).alias("mean_g"),
@@ -2400,13 +2392,13 @@ def sample_weighted(spark, sf_dir):
 
 
 @register("embedding_pca", tags=("pipeline", "similarity"))
-def embedding_pca(spark, sf_dir, topk: int = 8):
+def embedding_pca(spark, sf_dir):
     """PCA over the embedding store — the whitening/compaction step before
     large-scale retrieval or semantic dedup. Distributed shape: each Arrow
     batch folds to ONE (d, d²+...) partial — count, per-dim sum, and Gram
     matrix XᵀX via BLAS — so the driver reduces #partitions tiny matrices,
     never rows (the treeAggregate pattern); the d×d covariance
-    eigendecomposition is O(d³) driver-side math. Emits the top-k
+    eigendecomposition is O(d³) driver-side math. Emits the top 8
     components' explained-variance profile. Rows-only driver check;
     numpy-differential test in tests/test_properties.py."""
     import numpy as np
@@ -2453,7 +2445,7 @@ def embedding_pca(spark, sf_dir, topk: int = 8):
     evals = np.linalg.eigvalsh(cov)[::-1]
     total = float(evals.sum())
     rows = [(i + 1, float(evals[i]), float(evals[: i + 1].sum() / total))
-            for i in range(min(topk, d))]
+            for i in range(min(8, d))]
     out = spark.createDataFrame(
         rows, "component long, eigenvalue double, cum_explained double")
     return out.select(

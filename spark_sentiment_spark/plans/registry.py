@@ -166,16 +166,7 @@ def _fanout_needed(spark: SparkSession) -> bool:
     The repartition exists to width-normalize the SINGLE-split local
     testdata files; on a real multi-file 100 TB table the scan already
     yields thousands of splits and a repartition there would shuffle the
-    whole table for nothing (a constant tuned for local mode — the exact
-    anti-pattern guide §2 warns about). Default: fan out only under a
-    local[*] master; override with spark.spark_sentiment.load.fanout =
-    always|never|auto for clusters that do want it (e.g. few-large-file
-    inputs)."""
-    mode = spark.conf.get("spark.spark_sentiment.load.fanout", "auto")
-    if mode == "always":
-        return True
-    if mode == "never":
-        return False
+    whole table for nothing. So fan out only under a local[*] master."""
     return spark.sparkContext.master.startswith("local")
 
 

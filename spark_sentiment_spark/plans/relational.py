@@ -815,16 +815,6 @@ def agg_pivot(spark, sf_dir):
     )
 
 
-ACD_SQL = """
-SELECT l_returnflag,
-       CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-       CAST(count(*) AS BIGINT)                  AS n
-FROM lineitem
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-"""
-
-
 @register("agg_approx_distinct", tags=("agg",))
 def agg_approx_distinct(spark, sf_dir):
     """approx_count_distinct (HyperLogLog++) next to the exact count —

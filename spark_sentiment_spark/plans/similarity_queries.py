@@ -14,7 +14,8 @@ from pyspark.sql.window import Window
 
 from spark_sentiment_spark.operators.vectors import (ANN_IVF_SQL,
                                                      ANN_IVFPQ_SQL,
-                                                     ANN_PQ_SQL, IVF_ASSIGN,
+                                                     ANN_PQ_SQL, ANN_TOPK,
+                                                     IVF_ASSIGN,
                                                      IVF_K, IVF_PROBE,
                                                      IVF_TOPK, IVFPQ_RERANK,
                                                      PQ_RERANK,
@@ -333,10 +334,10 @@ def _hyperplanes(seed: str, dim: int, n_tables: int, n_planes: int):
 
 
 @register("ann_lsh_topk", sql=ANN_LSH_SQL, bench=True, tags=("similarity",))
-def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
-                 n_planes: int | None = None):
+def ann_lsh_topk(spark, sf_dir):
     """Approximate NN via multi-table random-hyperplane LSH, fully native:
-    T independent P-plane tables → T bucket ids per vector → candidate
+    T = ANN_LSH_TABLES independent P-plane tables (P adaptive, at least
+    ANN_LSH_PLANES) → T bucket ids per vector → candidate
     pairs share any table's bucket (posexplode + bucket-local self-join,
     no all-pairs) → exact cosine re-rank of the deduped candidates →
     global top-200 pairs. Brute force (`dedup_embedding_cosine` /
@@ -345,8 +346,7 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
     twin reproduces buckets, candidates, and the re-ranked top-200
     exactly."""
     emb = load(spark, sf_dir, "embeddings")
-    if n_planes is None:
-        n_planes = _adaptive_planes(spark, sf_dir, ANN_LSH_PLANES)
+    n_planes = _adaptive_planes(spark, sf_dir, ANN_LSH_PLANES)
 
     e = as_double("embedding")
     # The T×P signature is one Arrow-batched matmul per partition:
@@ -359,13 +359,13 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = ANN_LSH_TABLES,
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    planes_t, radix = _hyperplanes("", ANN_LSH_DIM, n_tables, n_planes)
+    planes_t, radix = _hyperplanes("", ANN_LSH_DIM, ANN_LSH_TABLES, n_planes)
 
     @pandas_udf("array<long>")
     def _buckets(embs: pd.Series) -> pd.Series:
         V = np.asarray(embs.tolist(), dtype=np.float64)      # batch × dim
         bits = (V @ planes_t) > 0                            # batch × T·P
-        per_table = bits.reshape(len(V), n_tables, n_planes) @ radix
+        per_table = bits.reshape(len(V), ANN_LSH_TABLES, n_planes) @ radix
         return pd.Series(per_table.tolist())
 
     buckets = _buckets(e)
@@ -451,7 +451,7 @@ def embedding_quantize(spark, sf_dir):
 
 
 @register("ann_pq_topk", sql=ANN_PQ_SQL, tags=("similarity",))
-def ann_pq_topk(spark, sf_dir, topk: int = 10, rerank: int = PQ_RERANK):
+def ann_pq_topk(spark, sf_dir):
     """Product-quantization ANN (the IVF-PQ memory-compression path):
 
     1. L2-normalize; codebooks are CONTENT-ADDRESSED: per subspace m,
@@ -470,9 +470,9 @@ def ann_pq_topk(spark, sf_dir, topk: int = 10, rerank: int = PQ_RERANK):
        INTEGERS (floor(ip·1e6)): candidate ADC scores are then integer
        sums, immune to aggregation order on both engines. Corpus cost is
        M table lookups per vector — never touching the original floats.
-    4. Exact re-rank of the ADC top-``rerank`` from the uncompressed
-       vectors; emit top-``topk``. Sampled codebooks quantize worse than
-       Lloyd-trained ones, so the default re-rank depth doubled to 200:
+    4. Exact re-rank of the ADC top-``PQ_RERANK`` from the uncompressed
+       vectors; emit top-``ANN_TOPK``. Sampled codebooks quantize worse
+       than Lloyd-trained ones, so the re-rank depth is 200:
        measured recall@10 vs brute force is a DETERMINISTIC 0.86 (0.64
        at 100) on the near-uniform-similarity fixture (PQ's hardest
        regime), pinned >= 0.7 in tests/test_similarity_recall.py —
@@ -481,8 +481,8 @@ def ann_pq_topk(spark, sf_dir, topk: int = 10, rerank: int = PQ_RERANK):
 
     Scale: codebook fetch is a 16-row TakeOrdered (bounded control
     plane); encode is Arrow-batched and embarrassingly parallel; the ADC
-    scan is linear with a per-qid top-``rerank`` window; re-rank touches
-    rerank×queries rows."""
+    scan is linear with a per-qid top-``PQ_RERANK`` window; re-rank
+    touches PQ_RERANK×queries rows."""
     emb = load(spark, sf_dir, "embeddings")
     vecs = unit_vector_frame(emb, "e")
     n_codes, _, codebooks = pq_seed_codebooks(vecs)
@@ -496,15 +496,15 @@ def ann_pq_topk(spark, sf_dir, topk: int = 10, rerank: int = PQ_RERANK):
     queries = vecs.where(F.col("vec_id") < 5) \
         .select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")).collect()
     probes = pq_adc_tables(spark, queries, codebooks, n_codes)
-    return pq_adc_topk(encoded, probes, vecs, n_codes, rerank, topk)
+    return pq_adc_topk(encoded, probes, vecs, n_codes, PQ_RERANK, ANN_TOPK)
 
 
 # --- Composed IVF+PQ persisted index (the FAISS-IVFPQ production shape) -----
 
 # The compaction oracle: the probe result verbatim (compaction moves
 # bytes, never rows) PLUS the layout's part-file counts computed by the
-# same rule the writer follows — round-14 lesson: counts are a prm-style
-# adaptive rule over the data, never static literals. Each append batch
+# same rule the writer follows — an adaptive rule over the data, never
+# static literals, so they hold at every SF. Each append batch
 # (vec_id % N_COMPACT_BATCHES) hash-clusters on cell before the
 # partitionBy-cell write, so a cell directory gains exactly ONE file per
 # batch that contains >=1 row assigned to it: files_before = distinct
@@ -539,8 +539,7 @@ def _tombstones(vecs):
 
 @register("ann_ivfpq_persisted_probe", sql=ANN_IVFPQ_SQL,
           tags=("similarity", "layout", "pipeline"))
-def ann_ivfpq_persisted_probe(spark, sf_dir, topk: int = 10,
-                              rerank: int = IVFPQ_RERANK):
+def ann_ivfpq_persisted_probe(spark, sf_dir):
     """The COMPOSED persisted vector index — per-cell PQ codes under the
     bucketed IVF cell layout, the FAISS-IVFPQ production shape (Jégou
     et al., "Product Quantization for Nearest Neighbor Search", §V): a
@@ -564,7 +563,7 @@ def ann_ivfpq_persisted_probe(spark, sf_dir, topk: int = 10,
     codes. Candidates join the probe-cell list, dedupe the
     multi-assignment overlap, ADC-score via the same `pq_adc_topk`
     integer tables as `ann_pq_topk`, and exact-re-rank the top
-    ``rerank`` against the embedding store. Zero Python nodes in the
+    ``IVFPQ_RERANK`` against the embedding store. Zero Python nodes in the
     probe plan (the Arrow encode lives in the build phase).
 
     Exact oracle: ANN_IVF_SQL's coarse CTE chain composed with
@@ -590,7 +589,7 @@ def ann_ivfpq_persisted_probe(spark, sf_dir, topk: int = 10,
         return spark.createDataFrame([], _TOPK_COLS)
 
     # ---- phase 2: per-batch probe ---------------------------------------
-    return ivfpq_probe(spark, vecs, base, n_codes, rerank, topk)
+    return ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, ANN_TOPK)
 
 
 # Deterministic delete set for the tombstone demo: every 7th vector by
@@ -605,8 +604,7 @@ ANN_IVFPQ_TOMBSTONE_SQL = ivfpq_sql(
 
 @register("ann_ivfpq_tombstone_probe", sql=ANN_IVFPQ_TOMBSTONE_SQL,
           tags=("similarity", "layout", "pipeline"))
-def ann_ivfpq_tombstone_probe(spark, sf_dir, topk: int = 10,
-                              rerank: int = IVFPQ_RERANK):
+def ann_ivfpq_tombstone_probe(spark, sf_dir):
     """DELETES for the composed IVFPQ index — the lifecycle leg after
     build → append → compact: takedowns (rights removal, dedup purges,
     contamination pulls) must leave the index without a rebuild, and a
@@ -646,7 +644,7 @@ def ann_ivfpq_tombstone_probe(spark, sf_dir, topk: int = 10,
     vecs, base, n_codes = _ivfpq_index(spark, sf_dir)
     if n_codes == 0:
         return spark.createDataFrame([], _TOPK_COLS)
-    return ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
+    return ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, ANN_TOPK,
                        tombstones=_tombstones(vecs))
 
 
@@ -661,8 +659,7 @@ def _count_cell_parts(codes_dir: str) -> int:
 
 @register("ann_ivfpq_compacted_probe", sql=ANN_IVFPQ_COMPACT_SQL,
           tags=("similarity", "layout", "pipeline"))
-def ann_ivfpq_compacted_probe(spark, sf_dir, topk: int = 10,
-                              rerank: int = IVFPQ_RERANK):
+def ann_ivfpq_compacted_probe(spark, sf_dir):
     """Index MAINTENANCE for the composed IVFPQ layout — the pass that
     completes the artifact lifecycle build → append → COMPACT → probe.
     The append contract (pinned in test_round14_queries) lets newly
@@ -722,7 +719,7 @@ def ann_ivfpq_compacted_probe(spark, sf_dir, topk: int = 10,
     files_after = _count_cell_parts(base + "/codes_compact")
 
     # ---- probe the compacted index --------------------------------------
-    res = ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
+    res = ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, ANN_TOPK,
                       codes_subdir="codes_compact")
     return (res
             .withColumn("files_before",
@@ -757,18 +754,17 @@ ANN_IVFPQ_REFRESH_SQL = ivfpq_sql(
 
 @register("ann_ivfpq_refresh_probe", sql=ANN_IVFPQ_REFRESH_SQL,
           tags=("similarity", "layout", "pipeline"))
-def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
-                            rerank: int = IVFPQ_RERANK,
-                            refresh_pct: int = REFRESH_PCT):
-    """Quantizer REFRESH for the composed IVFPQ index — the decision
-    pass that closes the maintenance loop: build → append → compact →
-    delete → REFRESH. Tombstones keep probes correct (the r15 delete
-    leg), but the quantizers stay trained on the pre-delete corpus;
-    as deletes accumulate, cells empty out and codebook geometry drifts
-    from the surviving distribution, degrading recall-per-probe. The
-    production answer (FAISS keeps the trained quantizer across
-    remove_ids and retrains only on material drift) is a THRESHOLD
-    decision, not a per-takedown rebuild — demonstrated end-to-end:
+def ann_ivfpq_refresh_probe(spark, sf_dir, refresh_pct: int = REFRESH_PCT):
+    """Quantizer REFRESH for the composed IVFPQ index — the decision pass
+    that closes the maintenance loop: build → append → compact → delete →
+    REFRESH. Tombstones keep probes correct (the delete leg,
+    `ann_ivfpq_tombstone_probe`), but the quantizers stay trained on the
+    pre-delete corpus; as deletes accumulate, cells empty out and codebook
+    geometry drifts from the surviving distribution, degrading
+    recall-per-probe. The production answer (FAISS keeps the trained
+    quantizer across remove_ids and retrains only on material drift) is a
+    THRESHOLD decision, not a per-takedown rebuild — demonstrated
+    end-to-end:
 
     * DECIDE from the index, not the corpus: the pass scans ONLY the
       vec_id column of the persisted cell-partitioned code table
@@ -856,9 +852,10 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, topk: int = 10,
             # retrain on and nothing to probe (engine-grade degenerate
             # contract, pinned in tests/test_round16_queries.py)
             return spark.createDataFrame([], _REFRESH_COLS)
-        res = ivfpq_probe(spark, survivors, base2, n_codes2, rerank, topk)
+        res = ivfpq_probe(spark, survivors, base2, n_codes2, IVFPQ_RERANK,
+                          ANN_TOPK)
     else:
-        res = ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
+        res = ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, ANN_TOPK,
                           tombstones=tomb)
     return (res
             .withColumn("tomb_rows", F.lit(tomb_rows).cast("bigint"))
@@ -958,32 +955,32 @@ ORDER BY vec_a, vec_b
 """
 
 
-def multiprobe_candidates(emb, n_tables: int = MP_TABLES,
-                          n_planes: int = MP_PLANES,
+def multiprobe_candidates(emb, n_planes: int = MP_PLANES,
                           n_flips: int = MP_FLIPS):
-    """(vec_a, vec_b) candidate pairs from multi-probe hyperplane LSH —
-    split out so tests can measure the candidate bound and recall against
-    the home-bucket-only baseline. Returns the DISTINCT unordered pairs
-    whose home bucket matches any of the other side's probed buckets
-    (home + ``n_flips`` lowest-|margin| bit flips) in any table."""
+    """(vec_a, vec_b) candidate pairs from MP_TABLES-table multi-probe
+    hyperplane LSH — split out so tests can measure the candidate bound
+    and recall against the home-bucket-only baseline. Returns the
+    DISTINCT unordered pairs whose home bucket matches any of the other
+    side's probed buckets (home + ``n_flips`` lowest-|margin| bit flips)
+    in any table."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    planes_t, radix = _hyperplanes("mp:", MP_DIM, n_tables, n_planes)
+    planes_t, radix = _hyperplanes("mp:", MP_DIM, MP_TABLES, n_planes)
     per_probe = n_flips + 1
 
     @pandas_udf("array<long>")
     def _probe_buckets(embs: pd.Series) -> pd.Series:
         V = np.asarray(embs.tolist(), dtype=np.float64)       # b × dim
         dp = V @ planes_t                                     # b × T·P
-        bits = (dp > 0).reshape(len(V), n_tables, n_planes)
+        bits = (dp > 0).reshape(len(V), MP_TABLES, n_planes)
         home = bits @ radix                                   # b × T
         margins = np.round(np.abs(dp), 6).reshape(
-            len(V), n_tables, n_planes)
+            len(V), MP_TABLES, n_planes)
         # stable argsort: equal rounded margins break on plane position,
         # matching the oracle's (round(abs(dp),6), pos) ordering
         order = np.argsort(margins, axis=2, kind="stable")
-        out = np.empty((len(V), n_tables * per_probe), dtype=np.int64)
+        out = np.empty((len(V), MP_TABLES * per_probe), dtype=np.int64)
         out[:, 0::per_probe] = home
         for f in range(n_flips):
             mask = 1 << (n_planes - 1 - order[:, :, f])

@@ -763,7 +763,6 @@ def quantile_histogram_by_lang(spark, sf_dir):
 
 # --- Sliding distinct users from mergeable minute-level HLL partials --------
 
-_SLIDE_W = 3600       # window seconds
 _SLIDE_STEP = 1800    # slide seconds
 
 SLIDING_USERS_HLL_SQL = f"""

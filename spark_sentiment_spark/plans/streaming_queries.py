@@ -48,7 +48,8 @@ from spark_sentiment_spark.operators.sketch import (HLL_A, HLL_BITS,
                                                     hll_registers)
 from spark_sentiment_spark.operators.vectors import (ANN_IVF_SQL,
                                                      ANN_IVFPQ_SQL,
-                                                     ANN_PQ_SQL, IVF_ASSIGN,
+                                                     ANN_PQ_SQL, ANN_TOPK,
+                                                     IVF_ASSIGN,
                                                      IVF_PROBE, IVF_TOPK,
                                                      IVFPQ_RERANK,
                                                      PQ_RERANK, dot,
@@ -778,8 +779,7 @@ def streaming_ivf_probe(spark, sf_dir):
 
 @register("streaming_pq_probe", sql=ANN_PQ_SQL,
           tags=("similarity", "streaming", "pipeline"))
-def streaming_pq_probe(spark, sf_dir, topk: int = 10,
-                       rerank: int = PQ_RERANK):
+def streaming_pq_probe(spark, sf_dir):
     """Streaming consumer of the persisted PQ index — the streaming
     form of `ann_pq_topk`. The corpus's code table + codebook are staged
     ONCE by the shared builder (`operators.vectors.pq_stage_index`);
@@ -804,7 +804,7 @@ def streaming_pq_probe(spark, sf_dir, topk: int = 10,
     the same top-k regardless of the query batch split.
 
     Scale: per batch, work is one codes-parquet scan (1/32nd the float
-    bytes) × |batch queries| table lookups + a rerank×queries exact
+    bytes) × |batch queries| table lookups + a PQ_RERANK×queries exact
     re-rank; the index is table-sized state on disk, never streaming
     state. Newly encoded vectors append to the code parquet between
     batches — the same append contract as the MinHash band and IVF
@@ -832,7 +832,7 @@ def streaming_pq_probe(spark, sf_dir, topk: int = 10,
                                    unit_vector("embedding").alias("qe"))
                          .collect())
         probes = pq_adc_tables(spark, batch_queries, cb, n_codes)
-        return pq_adc_topk(codes, probes, vecs, n_codes, rerank, topk)
+        return pq_adc_topk(codes, probes, vecs, n_codes, PQ_RERANK, ANN_TOPK)
 
     return run_probe_stream(
         spark, [q_src.where(F.col("vec_id") < 3),
@@ -845,10 +845,9 @@ def streaming_pq_probe(spark, sf_dir, topk: int = 10,
 
 @register("streaming_ivfpq_probe", sql=ANN_IVFPQ_SQL,
           tags=("similarity", "streaming", "pipeline"))
-def streaming_ivfpq_probe(spark, sf_dir, topk: int = 10,
-                          rerank: int = IVFPQ_RERANK):
+def streaming_ivfpq_probe(spark, sf_dir):
     """Streaming consumer of the COMPOSED IVF+PQ index — gives the
-    round-14 composition the same persisted / streaming pair the flat
+    composition the same persisted / streaming pair the flat
     PQ and IVF halves already have: the three artifacts (cell-
     partitioned codes, centroids, codebook) are staged ONCE by the
     shared `ivfpq_stage_index` builder, query vectors arrive as a
@@ -889,8 +888,8 @@ def streaming_ivfpq_probe(spark, sf_dir, topk: int = 10,
     def probe(df):
         batch_queries = df.select(F.col("vec_id").alias("qid"),
                                   unit_vector("embedding").alias("qe"))
-        return ivfpq_probe(spark, vecs, base, n_codes, rerank, topk,
-                           queries=batch_queries)
+        return ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK,
+                           ANN_TOPK, queries=batch_queries)
 
     return run_probe_stream(
         spark, [q_src.where(F.col("vec_id") < 3),

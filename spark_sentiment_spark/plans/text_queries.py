@@ -549,7 +549,7 @@ def doc_chunks(spark, sf_dir):
     from spark_sentiment_spark.functions.chunker import chunk_documents
 
     docs = load(spark, sf_dir, "documents")
-    return (chunk_documents(docs.select("doc_id", "text"), "text", 32)
+    return (chunk_documents(docs.select("doc_id", "text"))
             .select("doc_id", "chunk_id", "chunk_text", "n_tokens")
             .orderBy("doc_id", "chunk_id"))
 

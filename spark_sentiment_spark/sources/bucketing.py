@@ -28,7 +28,7 @@ def save_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  on: list[str], how: str = "inner") -> DataFrame:
-    """Join two same-bucketed tables; with matching bucketing Catalyst
-    plans a zero-exchange sort-merge join."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+                  on: list[str]) -> DataFrame:
+    """Inner-join two same-bucketed tables; with matching bucketing
+    Catalyst plans a zero-exchange sort-merge join."""
+    return spark.table(left_table).join(spark.table(right_table), on)

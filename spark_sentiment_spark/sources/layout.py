@@ -1,7 +1,7 @@
 """Data-layout writers: the storage-side half of 100 TB query speed.
 
-Predicate pushdown (PLANS.md) only pays off if the files are laid out so
-pruning can skip I/O. Two layouts:
+Predicate pushdown (pinned in tests/test_plan_shape.py) only pays off if
+the files are laid out so pruning can skip I/O. Two layouts:
 
 * ``write_partitioned`` — hive-style directory partitioning on a
   low-cardinality column; equality/IN predicates on it become
@@ -22,28 +22,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      fmt: str = "parquet", mode: str = "overwrite") -> None:
-    """Hive-partitioned write. Keep ``partition_cols`` low-cardinality
-    (lang, date, source bucket): each distinct tuple becomes a directory,
-    and small-file explosion at high cardinality is the classic failure
-    mode. At 100 TB, partition on the columns every query filters by."""
-    writer = df.write.mode(mode).partitionBy(*partition_cols)
-    getattr(writer, fmt)(path)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]
+                      ) -> None:
+    """Hive-partitioned parquet write, replacing ``path``. Keep
+    ``partition_cols`` low-cardinality (lang, date, source bucket): each
+    distinct tuple becomes a directory, and small-file explosion at high
+    cardinality is the classic failure mode. At 100 TB, partition on the
+    columns every query filters by."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_clustered(df: DataFrame, path: str, sort_cols: list[str],
-                    num_files: int | None = None,
-                    mode: str = "overwrite") -> None:
-    """Range-clustered write: globally range-partition on ``sort_cols``
-    (sampled range boundaries — one shuffle), then sort within each
-    partition so every output file covers a tight key range. Range scans
-    then read only the files whose footer [min,max] intersects the
-    predicate — the poor man's clustered index, and the layout that makes
-    `l_shipdate BETWEEN …` queries cheap at 100 TB."""
+                    num_files: int | None = None) -> None:
+    """Range-clustered parquet write, replacing ``path``: globally
+    range-partition on ``sort_cols`` (sampled range boundaries — one
+    shuffle), then sort within each partition so every output file covers a
+    tight key range. Range scans then read only the files whose footer
+    [min,max] intersects the predicate — the poor man's clustered index, and
+    the layout that makes `l_shipdate BETWEEN …` queries cheap at 100 TB."""
     out = (df.repartitionByRange(num_files, *sort_cols) if num_files
            else df.repartitionByRange(*sort_cols))
-    out.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+    out.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(path)
 
 
 def file_stats(spark, path: str):
@@ -89,18 +88,21 @@ def compact(spark, src: str, dest: str,
     return n
 
 
+#: Bits per column in write_zordered's Morton key: 256 cells per column.
+ZORDER_BITS = 8
+
+
 def write_zordered(df: DataFrame, path: str, cols: list[str],
-                   num_files: int, bits: int = 8,
-                   mode: str = "overwrite") -> None:
-    """Z-order (Morton-curve) clustered write on two or more numeric
-    columns: bucket each column to ``2**bits`` equal-width cells from its
-    global [min,max], interleave the bucket bits into one Morton key, then
-    range-partition + sort on that key. Each output file then covers a
-    small hyper-rectangle of the key space, so footer min/max statistics
-    prune range predicates on ANY of the clustered columns — the
-    multi-dimensional generalization of ``write_clustered``, which keeps
-    only its first sort column selective (Delta/Iceberg's OPTIMIZE ZORDER
-    does exactly this at 100 TB).
+                   num_files: int) -> None:
+    """Z-order (Morton-curve) clustered parquet write, replacing ``path``,
+    on two or more numeric columns: bucket each column to ``2**ZORDER_BITS``
+    equal-width cells from its global [min,max], interleave the bucket bits
+    into one Morton key, then range-partition + sort on that key. Each
+    output file then covers a small hyper-rectangle of the key space, so
+    footer min/max statistics prune range predicates on ANY of the clustered
+    columns — the multi-dimensional generalization of ``write_clustered``,
+    which keeps only its first sort column selective (Delta/Iceberg's
+    OPTIMIZE ZORDER does exactly this at 100 TB).
 
     All native: one tiny min/max agg drives the bucketing literals; the
     interleave is an unrolled shift-and-mask expression; the only shuffle
@@ -112,7 +114,7 @@ def write_zordered(df: DataFrame, path: str, cols: list[str],
         aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
     b = df.agg(*aggs).collect()[0]
 
-    n_cells = 1 << bits
+    n_cells = 1 << ZORDER_BITS
     buckets = []
     for c in cols:
         mn, mx = float(b[f"mn_{c}"]), float(b[f"mx_{c}"])
@@ -125,7 +127,7 @@ def write_zordered(df: DataFrame, path: str, cols: list[str],
 
     k = len(cols)
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         for j, bc in enumerate(buckets):
             bit = F.shiftright(bc, i).bitwiseAND(F.lit(1))
             z = z + F.shiftleft(bit, i * k + j)
@@ -134,4 +136,4 @@ def write_zordered(df: DataFrame, path: str, cols: list[str],
        .repartitionByRange(num_files, "__z")
        .sortWithinPartitions("__z")
        .drop("__z")
-       .write.mode(mode).parquet(path))
+       .write.mode("overwrite").parquet(path))

@@ -35,6 +35,15 @@ from spark_sentiment_spark.sources.io import load_parquet_utc
 #: going then is stopped and raises TimeoutError instead of hanging.
 STREAM_TIMEOUT_S = 600
 
+#: Late-data delay of every event-time stream: an event further than this
+#: behind the latest event time seen may be dropped, which bounds window,
+#: dedup and join state.
+WATERMARK = "2 hours"
+#: Inactivity gap that closes a user's session (as in ``events_sessionize``).
+SESSION_GAP = "1 hour"
+#: How long after a signup a purchase still counts as its conversion.
+CONVERSION_HORIZON = "1 hour"
+
 
 def await_stream(query) -> None:
     """Wait for a started streaming ``query`` to finish, at most
@@ -91,11 +100,11 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def tumbling_hourly(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def tumbling_hourly(events: DataFrame) -> DataFrame:
     """Tumbling 1h window per event_type with a late-data watermark —
     streaming twin of ``events_tumbling_hour``."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"),
              F.round(F.sum("value"), 4).alias("total_value"))
@@ -104,19 +113,18 @@ def tumbling_hourly(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def sliding_hourly(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def sliding_hourly(events: DataFrame) -> DataFrame:
     """1h window sliding by 30min — streaming twin of ``events_sliding_hour``."""
-    return sliding_hour_counts(events.withWatermark("ts", watermark))
+    return sliding_hour_counts(events.withWatermark("ts", WATERMARK))
 
 
-def session_windows(events: DataFrame, gap: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
+def session_windows(events: DataFrame) -> DataFrame:
     """Per-user session windows with an inactivity gap — the native
     incremental-merge sessionization (``F.session_window``); twin of the
     lag/cumsum batch plan in ``events_sessionize``."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id",
                 F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
@@ -170,14 +178,14 @@ def run_to_memory(stream_df: DataFrame, name: str,
     return stream_df.sparkSession.table(name)
 
 
-def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup on event_id with bounded state:
     ``dropDuplicatesWithinWatermark`` keeps each key only until the
     watermark passes it, so state size is O(events per watermark window),
     not O(stream history) — the property that makes streaming ingest dedup
     viable at 100 TB/day. Twin of the batch ``dedup_exact`` operator."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
 
@@ -190,7 +198,7 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
     seg = dim.select(F.col("c_custkey").alias("user_id"),
                      F.col("c_mktsegment").alias("segment"))
     return (
-        events.withWatermark("ts", "2 hours")
+        events.withWatermark("ts", WATERMARK)
         .join(F.broadcast(seg), "user_id")
         .groupBy("segment")
         .agg(F.count(F.lit(1)).alias("n"),
@@ -198,30 +206,31 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def stream_stream_conversions(events: DataFrame,
-                              horizon: str = "1 hour") -> DataFrame:
-    """Stream–stream time-interval join: purchases within ``horizon`` after
-    a signup by the same user. Both sides carry watermarks and the join
-    condition bounds the event-time range, so Spark can expire buffered
-    rows once the watermark passes ``signup.ts + horizon`` — bounded state,
+def stream_stream_conversions(events: DataFrame) -> DataFrame:
+    """Stream–stream time-interval join: purchases within
+    ``CONVERSION_HORIZON`` after a signup by the same user. Both sides carry
+    watermarks and the join condition bounds the event-time range, so Spark
+    can expire buffered rows once the watermark passes ``signup.ts +
+    CONVERSION_HORIZON`` — bounded state,
     the streaming analogue of the batch as-of/range joins."""
     signups = (
         events.where(F.col("event_type") == "signup")
         .select(F.col("user_id").alias("s_user"),
                 F.col("ts").alias("s_ts"))
-        .withWatermark("s_ts", "2 hours")
+        .withWatermark("s_ts", WATERMARK)
     )
     purchases = (
         events.where(F.col("event_type") == "purchase")
         .select(F.col("user_id").alias("p_user"),
                 F.col("ts").alias("p_ts"),
                 F.col("value").alias("p_value"))
-        .withWatermark("p_ts", "2 hours")
+        .withWatermark("p_ts", WATERMARK)
     )
     cond = (
         (F.col("s_user") == F.col("p_user"))
         & (F.col("p_ts") > F.col("s_ts"))
-        & (F.col("p_ts") <= F.col("s_ts") + F.expr(f"INTERVAL {horizon}"))
+        & (F.col("p_ts")
+           <= F.col("s_ts") + F.expr(f"INTERVAL {CONVERSION_HORIZON}"))
     )
     return (
         signups.join(purchases, cond)

@@ -10,7 +10,9 @@ registers nothing. The layers below ``plans/`` may use the registry's
 lifetime tracking, and nothing else from ``plans/``.
 
 Shared code is also written once: no two top-level functions in the
-package may repeat the same plan stage token for token.
+package may repeat the same plan stage token for token. And a setting
+exists only where some caller uses it: a defaulted parameter that no call
+ever sets to another value is a constant.
 """
 
 from __future__ import annotations
@@ -132,3 +134,127 @@ def test_no_copied_plan_stages():
         + "\n".join(f"{a}  <->  {b}" for a, b in copied))
     stale = sorted(CLONE_ALLOWED.keys() - pairs)
     assert not stale, f"allow-listed pairs no longer cloned: {stale}"
+
+
+# --- Settings guard: a default that never varies is a constant ---------------
+
+REPO = ROOT.parent
+
+#: Defaulted parameters that keep their setting although no call in the
+#: repo passes another value, keyed "module.py::function.param" (module path
+#: relative to the package), each with its one-line reason.
+SETTINGS_ALLOWED: dict[str, str] = {
+    "analyze.py::analyze.sentence_scorer_factory":
+        "public API (__all__): the our-nlp scorer plug-point",
+    "functions/text.py::clean_source.tweet_tokenize":
+        "public API (__all__): skips the tweet tokenizer for plain text",
+    "operators/detection.py::detect_roles.limit":
+        "public API (__all__): detection sample size",
+    "operators/mllib_pipeline.py::score_model.drop_intermediate":
+        "public API (__all__): keep the feature columns for inspection",
+    "operators/nlp_model.py::model_scorer_factory.path":
+        "path setting: which saved model to serve",
+    "operators/nlp_model.py::save_model.path":
+        "path setting: where to write the model",
+    "plans/similarity_queries.py::ann_ivfpq_refresh_probe.refresh_pct":
+        "varied through REGISTRY[name].fn(..., refresh_pct=50) in "
+        "tests/test_round16_queries.py to reach the stale-index branch",
+}
+
+
+def _call_sources() -> list[Path]:
+    """Every ``.py`` file whose calls count: the package, tests, scripts,
+    the benchmarks (not their run output) and the driver entry point."""
+    files = sorted(ROOT.rglob("*.py"))
+    files += sorted((REPO / "tests").rglob("*.py"))
+    files += sorted((REPO / "scripts").rglob("*.py"))
+    files += [p for p in sorted((REPO / "perfbench").rglob("*.py"))
+              if "_work" not in p.relative_to(REPO).parts]
+    return files + [REPO / "bench.py", REPO / "__spark_entry__.py"]
+
+
+def _source_of(src: str):
+    """``ast.get_source_segment`` for ``src``, splitting it once (AST
+    offsets count UTF-8 bytes)."""
+    lines = src.encode().splitlines(keepends=True)
+
+    def segment(node) -> str:
+        first, last = node.lineno - 1, node.end_lineno - 1
+        if first == last:
+            return lines[first][node.col_offset:node.end_col_offset].decode()
+        return b"".join([lines[first][node.col_offset:],
+                         *lines[first + 1:last],
+                         lines[last][:node.end_col_offset]]).decode()
+    return segment
+
+
+def _defaulted_params() -> dict[str, tuple[str, list[str], dict[str, str]]]:
+    """name -> (module path, positional parameter names, {param: default
+    source}) for every ``def`` under the package whose name is defined
+    once."""
+    defs: dict[str, list] = {}
+    for path in sorted(ROOT.rglob("*.py")):
+        src = path.read_text()
+        tree = ast.parse(src, str(path))
+        segment = _source_of(src)
+        parents = {c: n for n in ast.walk(tree)
+                   for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            if isinstance(parents.get(node), ast.ClassDef) and pos \
+                    and pos[0] in ("self", "cls"):
+                pos = pos[1:]
+            defaults = dict(zip(pos[len(pos) - len(a.defaults):],
+                                map(segment, a.defaults))
+                            ) if a.defaults else {}
+            defaults.update({p.arg: segment(d)
+                             for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                             if d is not None})
+            defs.setdefault(node.name, []).append(
+                (path.relative_to(ROOT).as_posix(), pos, defaults))
+    return {name: found[0] for name, found in defs.items() if len(found) == 1}
+
+
+def unvaried_settings() -> list[str]:
+    """``module.py::function.param`` for every defaulted parameter that no
+    call in the repo sets to anything but its default's source text. A
+    call with ``*args`` or ``**kwargs`` varies every parameter."""
+    funcs = _defaulted_params()
+    varied: set[tuple[str, str]] = set()
+    for path in _call_sources():
+        src = path.read_text()
+        segment = _source_of(src)
+        for node in ast.walk(ast.parse(src, str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else \
+                f.attr if isinstance(f, ast.Attribute) else None
+            if name not in funcs:
+                continue
+            _, pos, defaults = funcs[name]
+            if any(isinstance(a, ast.Starred) for a in node.args) or \
+                    any(k.arg is None for k in node.keywords):
+                varied.update((name, p) for p in defaults)
+                continue
+            passed = list(zip(pos, node.args)) + \
+                [(k.arg, k.value) for k in node.keywords]
+            varied.update((name, p) for p, v in passed if p in defaults
+                          and segment(v) != defaults[p])
+    return sorted(f"{mod}::{name}.{p}"
+                  for name, (mod, _, defaults) in funcs.items()
+                  for p in defaults if (name, p) not in varied)
+
+
+def test_every_default_is_varied():
+    unvaried = unvaried_settings()
+    fixed = [k for k in unvaried if k not in SETTINGS_ALLOWED]
+    assert not fixed, (
+        f"{len(fixed)} defaulted parameters never take a second value; "
+        "make each the constant it is (or allow-list it with its "
+        "reason):\n" + "\n".join(fixed))
+    stale = sorted(SETTINGS_ALLOWED.keys() - set(unvaried))
+    assert not stale, f"allow-listed settings now varied or gone: {stale}"

@@ -85,7 +85,7 @@ def test_resize_stub(mm):
 def test_frame_sample_stub(mm):
     from spark_sentiment_spark.operators.multimodal import frame_sample_stub
 
-    out = frame_sample_stub(mm, n_frames=4)
+    out = frame_sample_stub(mm)
     assert out.count() == mm.count() * 4
     idx = {r[0] for r in out.select("frame_idx").distinct().collect()}
     assert idx == {0, 1, 2, 3}
@@ -356,7 +356,7 @@ def test_video_frame_sampling_matches_independent_decode(spark):
                            for fr in range(VIDEO_FRAMES)))
         assert content == want, did
 
-    sampled = sample_video_frames(vid, stride=2).collect()
+    sampled = sample_video_frames(vid).collect()
     by_key = {(r.doc_id, r.frame): r for r in sampled}
     assert set(fr for _, fr in by_key) == {0, 2, 4}
     for did in built:

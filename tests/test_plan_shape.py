@@ -25,14 +25,14 @@ def test_tpch_joins_broadcast_dims(spark, name):
     assert "SortMergeJoin" not in plan     # dims are bounded → BHJ only
 
 
-def test_q6_pushdown_and_pruning(spark):
+def test_q6_pushdown_and_pruning(spark, monkeypatch):
     # Production shape (fanout skipped, as on any non-local master): the
     # scan must read exactly q6's 4 columns out of the 16-column lineitem.
-    spark.conf.set("spark.spark_sentiment.load.fanout", "never")
-    try:
+    from spark_sentiment_spark.plans import registry
+
+    with monkeypatch.context() as m:
+        m.setattr(registry, "_fanout_needed", lambda spark: False)
         plan = _plan(spark, "q6_forecast_revenue")
-    finally:
-        spark.conf.unset("spark.spark_sentiment.load.fanout")
     # NB: plan strings truncate long lists ("...") — match within the line.
     m = re.search(r"PushedFilters: \[[^\n]*l_shipdate", plan)
     assert m, "shipdate filter not pushed to the parquet scan"

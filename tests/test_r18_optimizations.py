@@ -1,11 +1,11 @@
-"""Focused pins for the round-18 optimization restructures — each test
-locks the EQUIVALENCE the optimization relies on, so a future edit that
-breaks the restructured plan's semantics fails here, not at the oracle.
+"""Focused pins for plan restructures — each test locks the EQUIVALENCE
+the restructure relies on, so a future edit that breaks the restructured
+plan's semantics fails here, not at the oracle.
 
-Covered (see OPTIMIZATION_r18.md for the measurements):
+Covered (ENGINE_NOTES.md has the load fan-out measurement):
   * load(): fact scans fan out via a HASH repartition on the natural key
-    (round-robin's determinism pre-sort removed; partitioning reusable
-    downstream), skippable off-local via spark.spark_sentiment.load.fanout;
+    (no round-robin determinism pre-sort; partitioning reusable
+    downstream), skipped off-local (``registry._fanout_needed``);
   * _curation_verdicts: the inline dedup rank became one window over the
     gate frame partitioned by (prefix_hash, qualifies) — must equal the
     old filter-then-rank-then-join-back shape exactly;
@@ -34,17 +34,14 @@ def test_load_fanout_is_hash_keyed(spark):
         assert "RoundRobinPartitioning" not in plan, table
 
 
-def test_load_fanout_conf_override(spark):
-    from spark_sentiment_spark.plans.registry import load
+def test_load_fanout_conf_override(spark, monkeypatch):
+    from spark_sentiment_spark.plans import registry
 
-    spark.conf.set("spark.spark_sentiment.load.fanout", "never")
-    try:
-        df = load(spark, SF_DIR, "lineitem")
-        plan = df._jdf.queryExecution().toString()
-        assert "hashpartitioning(l_orderkey" not in plan
-        assert "RoundRobinPartitioning" not in plan
-    finally:
-        spark.conf.set("spark.spark_sentiment.load.fanout", "auto")
+    monkeypatch.setattr(registry, "_fanout_needed", lambda spark: False)
+    df = registry.load(spark, SF_DIR, "lineitem")
+    plan = df._jdf.queryExecution().toString()
+    assert "hashpartitioning(l_orderkey" not in plan
+    assert "RoundRobinPartitioning" not in plan
 
 
 def test_curation_inline_rank_matches_join_path(spark):

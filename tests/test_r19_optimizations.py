@@ -1,8 +1,8 @@
-"""Focused pins for the round-19 optimization restructures — each test
-locks the EQUIVALENCE the optimization relies on, so a future edit that
-breaks the restructured plan's semantics fails here, not at the oracle.
+"""Focused pins for iterative-loop restructures — each test locks the
+EQUIVALENCE the restructure relies on, so a future edit that breaks the
+restructured plan's semantics fails here, not at the oracle.
 
-Covered (see OPTIMIZATION_r19.md for the measurements):
+Covered:
   * token_pagerank: the per-iteration nodes-LEFT-JOIN re-attachment was
     dropped (the symmetrized graph has {src} = {dst}, so the contribution
     aggregation's key set IS the node set) and the edge frame is cached
@@ -75,9 +75,9 @@ def test_pagerank_matches_leftjoin_recurrence(spark, tmp_path):
 
 
 def test_components_round_accounting_and_convergence(spark):
-    """Round-19 restructure of connected_components (see
-    OPTIMIZATION_r19.md batch 4): the per-round changed-count join was
-    replaced by an `ocomp` column carried through the pointer jump, and
+    """The connected_components loop restructure: the per-round
+    changed-count join was replaced by an `ocomp` column carried through
+    the pointer jump, and
     `prop` is checkpointed once per round to feed both jump sides. The
     recurrence is untouched, so on a graph that settles in one
     propagation the loop must still take EXACTLY 2 rounds (one change
