@@ -44,7 +44,7 @@ END = "</w>"
 # engines' `\s` classes disagree (Java includes \x0B, RE2 doesn't; Python
 # str.split() adds NBSP/thin-space and every other Unicode space), so a
 # bare `\s+`/.split() can tokenize the same non-ASCII text three different
-# ways (round-6 ADVICE). [ \t\n\x0B\f\r] is Java's \s, spelled out.
+# ways. [ \t\n\x0B\f\r] is Java's \s, spelled out.
 WS_CLASS = "[ \\t\\n\\x0B\\f\\r]+"
 _WS_RE = re.compile(WS_CLASS)
 

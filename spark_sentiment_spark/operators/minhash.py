@@ -148,7 +148,7 @@ def band_pairs(bands):
             .distinct())
 
 
-def scored_pairs(cand, sigs, n_hashes: int, *extra):
+def scored_pairs(cand, sigs, *extra):
     """The (doc_a, doc_b) candidates whose signatures in ``sigs``
     (doc_id, mh0..) agree on at least ``THRESHOLD`` of the minhashes, as
     (doc_a, doc_b, est_jaccard, *extra)."""
@@ -156,7 +156,7 @@ def scored_pairs(cand, sigs, n_hashes: int, *extra):
     return (cand.join(am, F.col("doc_a") == F.col("am.doc_id"))
             .join(bm, F.col("doc_b") == F.col("bm.doc_id"))
             .select("doc_a", "doc_b",
-                    est_jaccard("am.mh", "bm.mh", n_hashes)
+                    est_jaccard("am.mh", "bm.mh", N_HASHES)
                     .alias("est_jaccard"), *extra)
             .where(F.col("est_jaccard") >= THRESHOLD))
 

@@ -335,13 +335,12 @@ def pq_adc_tables(spark, queries, cb, n_codes: int):
         probe_rows, "qid long, tbl array<long>, qe array<double>")
 
 
-def pq_adc_topk(codes, probes, vecs, n_codes: int, rerank: int, topk: int,
-                cand=None):
+def pq_adc_topk(codes, probes, vecs, n_codes: int, rerank: int, cand=None):
     """The ADC scan + exact re-rank shared verbatim by the persisted
     batch probe, each streaming micro-batch, and the composed IVF+PQ
     probe: integer table-lookup scores over the stored codes (never the
     floats), per-qid top-``rerank`` window, exact cosine re-rank against
-    the embedding store, top-``topk`` out. By default every (query,
+    the embedding store, top-``ANN_TOPK`` out. By default every (query,
     code-row) pair is scored (the full linear ADC scan of the flat PQ
     index); a caller that already narrowed the candidate set — the
     IVF+PQ probe joins probe cells to the cell-partitioned code table —
@@ -367,7 +366,7 @@ def pq_adc_topk(codes, probes, vecs, n_codes: int, rerank: int, topk: int,
     return (vecs.join(F.broadcast(cand), "vec_id")
             .select("qid", "vec_id", cos.alias("cos"))
             .withColumn("rn", F.row_number().over(w2).cast("long"))
-            .where(F.col("rn") <= topk)
+            .where(F.col("rn") <= ANN_TOPK)
             .select("qid", "vec_id", F.round("cos", 6).alias("cosine"), "rn")
             .orderBy("qid", "rn"))
 
@@ -549,7 +548,7 @@ def ivfpq_stage_index(spark, vecs, code_batches: int = 1,
 
 
 def ivfpq_probe(spark, vecs, base: str, n_codes: int, rerank: int,
-                topk: int, queries=None, n_probe: int = IVF_PROBE,
+                queries=None, n_probe: int = IVF_PROBE,
                 codes_subdir: str = "codes", tombstones=None):
     """Phase-2 of the composed IVF+PQ index — the recurring per-batch
     cost, callable on its own against pre-staged artifacts
@@ -597,7 +596,7 @@ def ivfpq_probe(spark, vecs, base: str, n_codes: int, rerank: int,
         # against the (small) delete set — the deletion-vector pattern;
         # the code table itself is never shuffled or rewritten here
         # (the physical rewrite is the purge pass, pinned identical in
-        # tests/test_round15_queries.py).
+        # tests/test_ivfpq_index.py).
         codes = codes.join(F.broadcast(tombstones.select("vec_id")),
                            "vec_id", "left_anti")
     cand = (codes.join(F.broadcast(qcells), "cell")
@@ -606,5 +605,4 @@ def ivfpq_probe(spark, vecs, base: str, n_codes: int, rerank: int,
             # two cells — dedupe before ADC or rn double-counts it
             .dropDuplicates(["qid", "vec_id"])
             .join(F.broadcast(probes), "qid"))
-    return pq_adc_topk(codes, probes, vecs, n_codes, rerank, topk,
-                       cand=cand)
+    return pq_adc_topk(codes, probes, vecs, n_codes, rerank, cand=cand)

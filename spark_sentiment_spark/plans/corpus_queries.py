@@ -379,11 +379,11 @@ def contrastive_pairs(spark, sf_dir):
     wl = Window.partitionBy("label").orderBy("h", "vec_id")
     wl_full = wl.rowsBetween(Window.unboundedPreceding,
                              Window.unboundedFollowing)
-    # Round-18 optimization (guide §2.4): `ranked` is consumed twice (the
+    # `ranked` is consumed twice (the
     # anchor side and the rank-matched negative side) and `sizes` twice
     # (the next-label window and the s2 modulus side) — as four plan
     # branches that each re-scanned the embeddings table and re-ran the
-    # fan-out exchange (plans/r18/contrastive_pairs_before.txt: 4 scans,
+    # fan-out exchange (measured: 4 scans,
     # 4 fan-out exchanges, 2 label-window exchanges). Persisting the
     # narrow ranked frame (vec_id, label, r, pos_id) collapses that to
     # ONE scan + ONE window pass; `sizes` is a bounded per-label count
@@ -1423,7 +1423,7 @@ def doc_winnowing(spark, sf_dir):
     lags and three leads of ONE doc-partitioned window evaluate the
     whole algorithm; equivalence to the window-by-window definition is
     pinned against a brute-force reference in
-    tests/test_round10_queries.py. The 48-bit k-gram hash is the
+    tests/test_corpus_queries.py. The 48-bit k-gram hash is the
     engine-shared md5/instr polynomial (`operators.sketch.hexpoly`), so
     the DuckDB twin replays fingerprint SETS bit-for-bit (count, min,
     sum per doc), not just counts.
@@ -1510,7 +1510,7 @@ def dedup_winnowing_pairs(spark, sf_dir):
     # (it does at every test SF) and falls back to a shuffled anti-join
     # beyond that, which is the correct degradation.
     keep = track_persist(fp.join(hot, "h", "left_anti"))
-    # Round-18 optimization (guide §2.4): nd feeds both final join sides
+    # nd feeds both final join sides
     # (na, nb) — persist the narrow per-doc count so the aggregation over
     # the cached keep frame runs once instead of twice.
     nd = track_persist(
@@ -1575,7 +1575,7 @@ def dedup_winnowing_incremental(spark, sf_dir):
     (production keeps per-fingerprint df counts with the index and
     updates them on append), so the incremental pair set provably
     equals `dedup_winnowing_pairs`' full-corpus output restricted to
-    batch-touching pairs — pinned in tests/test_round11_queries.py and
+    batch-touching pairs — pinned in tests/test_corpus_queries.py and
     replayed bit-for-bit by the shared `WINNOW_CTE` oracle with the
     same restriction. No broadcast hint on the hot list (it grows
     linearly with the corpus; AQE broadcasts while it fits).
@@ -1586,7 +1586,7 @@ def dedup_winnowing_incremental(spark, sf_dir):
     per fingerprint, and appends never rewrite the index."""
     docs = load(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 5 == 4
-    # Round-19 optimization (guide §2.4): the batch and index sides used
+    # the batch and index sides used
     # to run winnow_selected on complementary doc slices — TWO corpus
     # scans, each paying the k-gram explode + two window passes.
     # Selection is doc-local (every window in winnow_selected is
@@ -1604,7 +1604,7 @@ def dedup_winnowing_incremental(spark, sf_dir):
     hot = track_persist(
         fp.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") > 50).select("h"))
-    # Round-18 optimization (guide §2.4): keep_new feeds three branches
+    # keep_new feeds three branches
     # (the cross probe and both intra sides) — persist it so the hot-list
     # anti-join runs once instead of three times.
     keep = fp.join(hot, "h", "left_anti")
@@ -1700,8 +1700,8 @@ def corpus_dsir_weights(spark, sf_dir):
     have no bigram features, so they carry the neutral score
     (n_grams = 0, log_weight = 0.0 — an even likelihood ratio) rather
     than vanishing, and the downstream resampler sees the full corpus
-    (round-11 ADVICE: the silent exclusion broke the 'score every raw
-    document' contract).
+    (excluding them would break the 'score every raw document'
+    contract).
 
     Scale shape: bigrams never leave their document ungrouped — the
     explode feeds an immediate (doc_id, bucket) partial+final count, so
@@ -1785,13 +1785,13 @@ ORDER BY rn
 @register("sample_dsir", sql=SAMPLE_DSIR_SQL, tags=("corpus", "pipeline"))
 def sample_dsir(spark, sf_dir):
     """The MATERIALIZED DSIR resample — `corpus_dsir_weights` driven
-    through the Gumbel-top-k draw the weights exist for (round-11
-    verdict item 5): sampling k docs without replacement proportionally
+    through the Gumbel-top-k draw the weights exist for: sampling k docs
+    without replacement proportionally
     to softmax(log_weight) equals taking the top-k of
     log_weight + Gumbel(0,1), and the Gumbel uses the catalog's
     content-addressed uniforms (u = (md5('gmb:'||doc_id) 12-hex + 1)
     / 2^48) so BOTH engines draw the identical sample — the composition
-    tests/test_round11_queries.py pins against a hashlib replay is now
+    tests/test_corpus_queries.py pins against a hashlib replay is now
     a driver-checked catalog query. Rank order uses the ROUNDED key
     (6 dp) then doc_id, the BM25 precedent, so engines summing float
     terms in different orders cannot disagree at the boundary.

@@ -139,7 +139,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     emits one 33-column row per document straight into the banding step.
     Banding, bucket join, and Jaccard-agreement estimation stay native.
 
-    Exact-hash oracle (round 4, was rows-only): the base hash is
+    Exact-hash oracle: the base hash is
     md5-derived and the permutation constants are shared with the
     generated DuckDB SQL twin, so both engines compute identical
     signatures, buckets, and estimates. tests/test_dedup_recall.py
@@ -147,7 +147,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     """
     docs = load(spark, sf_dir, "documents")
     mins = track_persist(minhash_signatures(docs))
-    # NOT persisted (round-18 A/B): both self-join sides re-derive the
+    # NOT persisted (measured A/B): both self-join sides re-derive the
     # band explode from the cached signatures, but that derivation is a
     # cheap projection over cached rows — a min-of-10 A/B measured the
     # persist's cache-fill barrier at +9% min / +7% median on this bench
@@ -155,7 +155,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     cand = band_pairs(band_buckets(mins, N_HASHES, N_BANDS))
     # Estimate similarity = fraction of agreeing minhashes, read off the
     # cached signatures.
-    return scored_pairs(cand, mins, N_HASHES).orderBy("doc_a", "doc_b")
+    return scored_pairs(cand, mins).orderBy("doc_a", "doc_b")
 
 
 def _incr_minhash_oracle_sql() -> str:
@@ -234,7 +234,7 @@ def dedup_incremental_minhash(spark, sf_dir):
                      F.lit(0).cast("long").alias("vs_corpus")))
     cand = cross.unionByName(intra).distinct()
     # the fused cache IS new ∪ old
-    return (scored_pairs(cand, sig, N_HASHES, "vs_corpus")
+    return (scored_pairs(cand, sig, "vs_corpus")
             .orderBy("doc_a", "doc_b"))
 
 
@@ -285,7 +285,7 @@ def dedup_simhash(spark, sf_dir):
     Near-dups share Hamming-close signatures; here we emit
     (doc_id, simhash, band15s) so a banded self-join can find candidates.
 
-    Exact-hash oracle (round 4, was rows-only): the token hash is the
+    Exact-hash oracle: the token hash is the
     first 15 hex chars of md5 (60 bits — clear of the int64 sign bit, so
     shifts/packs behave identically in both engines), which DuckDB
     reproduces as ('0x'||substr(md5(w),1,15))::BIGINT."""
@@ -376,7 +376,7 @@ def dedup_clusters(spark, sf_dir):
     Spark; the DuckDB oracle expresses it as a recursive-CTE transitive
     closure over the identical pair graph.
 
-    EXACT-DUPLICATE COLLAPSE (round 6): identical texts are pairwise
+    EXACT-DUPLICATE COLLAPSE: identical texts are pairwise
     Jaccard 1.0, so a group of k exact copies contributes a k-clique —
     k(k-1)/2 pairs — to the pair stage while adding nothing to the
     clustering answer. On a web corpus exact boilerplate groups run to
@@ -467,7 +467,7 @@ def decontaminate_minhash(spark, sf_dir):
     is_eval = F.col("doc_id") % 11 == 0
 
     mins = track_persist(minhash_signatures(docs, n_hashes))
-    # Round-18 optimization (guide §2.4): the train and eval sides each
+    # the train and eval sides each
     # re-derived the band explode from the cached signatures — persist the
     # narrow (doc_id, band_id, bh) frame so the banding runs once.
     buckets = track_persist(band_buckets(mins, n_hashes, n_bands))
@@ -482,11 +482,11 @@ def decontaminate_minhash(spark, sf_dir):
     # Exact Jaccard verify on candidates only. The shingle inverted index
     # is reused from the exact formulation; the semi-join-shaped candidate
     # restriction keeps the intersect-count join bounded by |candidates|.
-    # Round-18 optimization (guide §2.4): the distinct shingle table
+    # the distinct shingle table
     # feeds three branches (sizes + both intersect sides) — persist it
     # so the corpus is shingled once instead of three times.
     tok = track_persist(shingled(docs).distinct())  # per (doc, shingle) row
-    # Round-18 optimization (guide §2.4): sizes feeds both final join
+    # sizes feeds both final join
     # sides (st, se) — persist the narrow per-doc count so the aggregation
     # over the cached shingle table runs once.
     sizes = track_persist(
@@ -650,7 +650,7 @@ def char_ngram_stats(docs, n: int = CHAR_NGRAM_LEN):
     """Core of dedup_char_ngrams over any (doc_id, text) DataFrame —
     split out so tests can pin the semantics on hand-built corpora."""
     live = docs.where(F.col("text").isNotNull() & (F.length("text") >= n))
-    # Round-18 optimization (guide §2.4): grams feeds the document-
+    # grams feeds the document-
     # frequency agg AND the final per-doc join side — persist the
     # distinct char-gram table so the explode + distinct shuffle over
     # full text runs once, not twice.
@@ -1188,14 +1188,14 @@ def dedup_cross_source_pairs(spark, sf_dir):
     broadcast dimension at any corpus size where sources matter."""
     docs = load(spark, sf_dir, "documents")
     mins = track_persist(minhash_signatures(docs))
-    # NOT persisted (round-18 A/B): both self-join sides re-derive the
+    # NOT persisted (measured A/B): both self-join sides re-derive the
     # band explode from the CACHED signatures — a cheap projection —
     # while persisting materializes the exploded (n_bands× rows) frame
     # behind a cache-fill barrier. Min-of-10 A/B: persist +25% min
     # (1.534 → 1.921 s at sf0.1, median +54%), same verdict as
     # dedup_minhash_lsh's identical pattern. Recompute wins.
     pairs = scored_pairs(
-        band_pairs(band_buckets(mins, N_HASHES, N_BANDS)), mins, N_HASHES)
+        band_pairs(band_buckets(mins, N_HASHES, N_BANDS)), mins)
     da = docs.select(F.col("doc_id").alias("doc_a"),
                      F.col("source").alias("sa"))
     db = docs.select(F.col("doc_id").alias("doc_b"),
@@ -1273,4 +1273,4 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
                     F.greatest("new_id", "old_id").alias("doc_b"))
             .distinct())
     # the fused cache IS new ∪ old
-    return scored_pairs(cand, sig, N_HASHES).orderBy("doc_a", "doc_b")
+    return scored_pairs(cand, sig).orderBy("doc_a", "doc_b")

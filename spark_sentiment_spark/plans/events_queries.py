@@ -291,7 +291,7 @@ def events_gap_fill(spark, sf_dir):
     ev = load(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
-    # Round-18 optimization (guide §2.4): the hourly rollup feeds three
+    # the hourly rollup feeds three
     # branches (bounds, user grid, fill join) — persist the bounded
     # user×hour frame so the fact aggregation runs once.
     hourly = track_persist(
@@ -446,8 +446,8 @@ def events_rolling_1h(spark, sf_dir):
     original whole-second key (unix_timestamp vs DuckDB's fractional
     epoch()) made the two engines disagree on membership for gaps in
     (3600, 3601) s — truncation admitted a row the fractional key
-    excludes. Caught by the round-14 full-catalog sf0.1 sweep (one
-    collision at 100k events; sf0.01's 10k never hit the boundary).
+    excludes (one collision at sf0.1's 100k events; sf0.01's 10k never
+    hit the boundary).
     One shuffle on user_id + one sort; at 100 TB the
     frame evaluation is streaming within each sorted partition, state
     bounded by the hour of data per user."""
@@ -498,7 +498,7 @@ def events_retention_cohorts(spark, sf_dir):
     so AQE plans it shuffle- or broadcast-side by its actual size (user
     cardinality is unbounded at scale — no broadcast hint)."""
     ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.4): first_ts is a per-user window
+    # first_ts is a per-user window
     # minimum over the stream itself instead of a separate aggregate
     # joined back — one fact scan instead of two, and with the user-keyed
     # fan-out the window needs no additional exchange.
@@ -715,7 +715,7 @@ def events_rollup_incremental(spark, sf_dir):
          + F.expr("INTERVAL 12 HOURS")).alias("split_ts"))
     tagged = ev.crossJoin(F.broadcast(split))
 
-    # Round-18 optimization (guide §2.4): one rollup aggregation with the
+    # one rollup aggregation with the
     # side flag as an extra group key, persisted (bounded: days × types
     # × 2 rows), then sliced — the old per-side rollups each re-scanned
     # the fact table. Per-side aggregates are identical because grouping
@@ -895,7 +895,7 @@ def events_scd2_history(spark, sf_dir):
     ts break on event_id in EVERY window here — change detection,
     version numbering, and the lead() interval close — so version
     numbers and valid_to assignment are deterministic even when two
-    retained changes share (user_id, ts) (round-7 ADVICE). The build
+    retained changes share (user_id, ts). The build
     itself is `operators.scd2.scd2_dim`, which the streaming SCD2 merge
     shares, so the full rebuild and the incremental merge are equivalent
     by construction."""
@@ -1029,7 +1029,7 @@ def events_cumulative_users(spark, sf_dir):
     window's single partition holds days, not users — bounded state by
     construction."""
     ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.4/§8): first-seen attribution and
+    # first-seen attribution and
     # DAU both reduce over the distinct (user, day) pairs — persist that
     # narrow frame once instead of scanning the fact table twice (the
     # DAU side's countDistinct also becomes a plain count).
@@ -1201,7 +1201,7 @@ def events_temporal_join(spark, sf_dir):
            .select("user_id", "event_id",
                    F.col("event_type").alias("state"),
                    F.col("ts").alias("valid_from"))
-           # lead ties break on event_id too (round-7 ADVICE): two
+           # lead ties break on event_id too: two
            # retained changes at one (user_id, ts) otherwise get
            # nondeterministic valid_to in both engines.
            .withColumn("valid_to", F.lead("valid_from").over(
@@ -1365,7 +1365,7 @@ def _cutpoint_quintile(scored, colname, score_name, descending=False):
     tiebreak), which is the semantics most RFM dashboards actually
     want; on distinct-valued axes this is provably identical to
     ntile(5) with the same targets
-    (tests/test_round11_queries.py pins both properties)."""
+    (tests/test_events_semantics.py pins both properties)."""
     spark = scored.sparkSession
     freq = scored.groupBy(F.col(colname).alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -1400,7 +1400,7 @@ def events_rfm_cutpoints(spark, sf_dir):
     be tie-stable instead of exactly-equal-sized (equal values always
     share a score; ntile splits tie runs by its tiebreak to equalize
     bucket counts). On distinct-valued axes the two semantics coincide
-    exactly — pinned in tests/test_round11_queries.py on seeded
+    exactly — pinned in tests/test_events_semantics.py on seeded
     corpora, with the tie-stability property pinned separately.
 
     Scale: the user table is never rank-sorted — per axis the heavy
@@ -1473,7 +1473,7 @@ def events_rfm_cutpoints_bucketed(spark, sf_dir):
     the cell column keeps every certified property (equals ntile(5) on
     distinct cells across every n mod 5 residue, tie-stable otherwise
     — the parent's seeded sweeps apply verbatim since the cell axis is
-    just another long column; tests/test_round12_queries.py pins the
+    just another long column; tests/test_events_semantics.py pins the
     cell-level collapse and the r/f invariance on the fixture).
 
     Scale: identical shape to the parent — one hash agg per axis, a cum
@@ -1740,7 +1740,7 @@ def events_seasonal_anomaly(spark, sf_dir):
     that bounded cell table, so the anomaly pass costs one scan plus
     cell-sized work regardless of event volume."""
     ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.4/§8): the day grid and the type
+    # the day grid and the type
     # grid derive from the bounded cell table instead of two extra full
     # events scans, and `cells`/`filled` (both |types|×|days|×24-bounded)
     # are persisted because each feeds two branches (grid + fill;
@@ -1812,7 +1812,7 @@ def events_stickiness(spark, sf_dir):
     counts the sketch swap is `events_sliding_users_hll` (mergeable
     28-day HLL per day) with this exact form as its oracle."""
     ev = load(spark, sf_dir, "events")
-    # Round-18 optimization (guide §2.4/§8): the user-day frame feeds
+    # the user-day frame feeds
     # three branches (day grid, DAU, the MAU range join) — unpersisted,
     # each was its own full events scan + distinct. Persist the narrow
     # (user, day) pairs: one scan, one distinct.

@@ -74,8 +74,8 @@ def multimodal_decode_features(spark, sf_dir):
     """Arrow-batched decode/feature-extract via mapInPandas. The decode is
     the deterministic fake codec (byte-histogram mean/entropy, length-
     derived fake geometry — `operators/multimodal.py::decode_features`),
-    which makes every output column pure byte arithmetic: round 5 added
-    the exact DuckDB twin that replays it from hex(blob) pairs (the
+    which makes every output column pure byte arithmetic: an exact
+    DuckDB twin that replays it from hex(blob) pairs (the
     `multimodal_headers` strategy), upgrading this from a rows-only
     check. The mapInPandas plumbing (schema, batching, binary transport)
     is exactly what a real PIL/ffmpeg decode would ride."""

@@ -133,7 +133,7 @@ def pack_sequences_spans(spark, sf_dir):
 
     Same per-source running sum as `pack_sequences` (its window_id ==
     this query's FIRST segment's window_id per doc — pinned in
-    tests/test_round14_queries.py along with the wall-to-wall
+    tests/test_pipeline_queries.py along with the wall-to-wall
     invariants: per-doc seg_len sums to n_tokens, every non-final
     window sums to exactly {PACK_BUDGET} tokens with no gaps), then one
     native `sequence()` explode over the occupied window range — pure
@@ -279,10 +279,10 @@ def vocab_coverage(spark, sf_dir):
     corpus-sized ever passes through a single partition.
     """
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # Round-18 optimization (guide §2.4): `counts` feeds BOTH the corpus
+    # `counts` feeds BOTH the corpus
     # total and the top-k — unpersisted, those were two independent plan
     # branches, each re-scanning and re-exploding the whole corpus
-    # (plans/r18/vocab_coverage_before.txt: 2 scans, 2 Generates, 2 count
+    # (measured: 2 scans, 2 Generates, 2 count
     # aggs). The term-count table is |vocabulary| narrow rows (bounded —
     # vocab << corpus at any scale), so persisting it halves the token
     # pass at 100 TB for a trivially bounded cache.
@@ -886,9 +886,9 @@ gate AS (
 def curate_corpus_gopher(spark, sf_dir):
     """`curate_corpus` with the PUBLISHED Gopher gate (Rae et al. 2021,
     arXiv:2112.11446 A1.1 — `quality_gopher_rules`' exact thresholds and
-    first-failing-rule sub-reasons) as stage 2, closing the round-11
-    verdict gap that the end-to-end curation pass could not run the
-    published rule set: benchmark exclusion → Gopher gate → prefix
+    first-failing-rule sub-reasons) as stage 2, so the end-to-end
+    curation pass runs the published rule set: benchmark exclusion →
+    Gopher gate → prefix
     keep-best dedup among gate survivors → 3-gram decontamination, one
     declarative plan with first-failing-stage verdicts. The gate stage
     reuses `gopher_feats` verbatim (Spark) and the GOPHER_*_SQL pieces
@@ -899,7 +899,7 @@ def curate_corpus_gopher(spark, sf_dir):
     nearly every document (10–99-word docs, ≤1 English stopword), so the
     dedup/decontamination stages are additionally exercised on a
     constructed Gopher-passing corpus with a real cross-engine oracle in
-    tests/test_round12_queries.py.
+    tests/test_pipeline_queries.py.
 
     Scale: identical to `curate_corpus` — the gate folds over token/line
     arrays inside one codegen projection; three bounded-key shuffles
@@ -941,7 +941,7 @@ def curate_corpus_c4(spark, sf_dir):
     document (single-line prose with no terminal punctuation), so the
     dedup/decontamination stages are additionally exercised on a
     constructed C4-passing corpus with a real cross-engine oracle in
-    tests/test_round12_queries.py.
+    tests/test_pipeline_queries.py.
 
     Scale: identical to its siblings — the gate folds over the line
     array inside one codegen projection; three bounded-key shuffles
@@ -985,7 +985,7 @@ def merge_upsert(spark, sf_dir):
     One shuffle per side on the key; with both sides bucketed on the key
     (sources/bucketing.py) the nightly upsert is shuffle-free, which is
     the 100 TB snapshot-maintenance pattern."""
-    # Round-18 optimization (guide §2.4): base and both update slices
+    # base and both update slices
     # project the same two columns — persist the narrow frame so the
     # table is scanned once instead of three times.
     docs = track_persist(
@@ -1201,7 +1201,7 @@ def langid_kappa(spark, sf_dir):
     Scale: one bounded (|langs|²) confusion agg (the langid_confusion
     shape), then constant-size marginal joins — scan-speed at any
     corpus size."""
-    # Round-18 optimization (guide §2.4): cm is consumed by FOUR plan
+    # cm is consumed by FOUR plan
     # branches (total, agree, row marginals, column marginals) and its
     # subtree is a full corpus scan through the stop-word classifier
     # with NO physical-plan reuse (the before plan has zero
@@ -1284,10 +1284,9 @@ SEMDEDUP_CELL_TARGET = 64
 # The seed count is NOT a literal: the prm CTE computes the same adaptive
 # rule the Spark plan uses — k = max(SEMDEDUP_K, n // SEMDEDUP_CELL_TARGET)
 # — from the table's own row count, so plan and oracle agree at EVERY sf
-# (the round-7 adaptive-planes fix applied here: the static k=8 twin was
-# valid only for n <= 8*64 and silently diverged at sf0.1's 2000
-# embeddings, where the plan auto-scales to k=31 — caught by the round-14
-# full-catalog sf0.1 sweep). Integer floor-division on both sides.
+# (a static k=8 twin would be valid only for n <= 8*64 and silently
+# diverge at sf0.1's 2000 embeddings, where the plan auto-scales to
+# k=31). Integer floor-division on both sides.
 SEMDEDUP_SQL = f"""
 WITH prm AS (
   SELECT GREATEST({SEMDEDUP_K},
@@ -1435,7 +1434,7 @@ _SEP2 = f"{_US}||{_US}"
 
 # The oracle splits text with the SAME explicit whitespace class as the
 # trainer and the encoder UDF (operators/bpe.py::WS_CLASS) — Java/RE2/Python
-# `\s` disagree on \x0B and Unicode spaces (round-6 ADVICE). Character
+# `\s` disagree on \x0B and Unicode spaces. Character
 # segmentation: DuckDB 1.0's string_split(word, '') yields CODE POINTS
 # (probe-verified on combining marks and emoji+modifier), matching the
 # trainer's tuple(w); lower() remains the one engine-specific surface, so
@@ -1693,7 +1692,7 @@ def quality_bigram_backoff(spark, sf_dir):
     bg_expr = token_bigrams("l")
     is_train = F.col("doc_id") % 5 != 4
 
-    # Round-18 optimization (guide §2.4): the unigram table feeds three
+    # the unigram table feeds three
     # consumers (the (N,V) scalar and both probe sides) — persist the
     # vocab-bounded counts so the unigram explode+aggregate over the
     # cached token arrays runs once instead of three times.
@@ -2010,7 +2009,7 @@ def snapshot_diff(spark, sf_dir):
              .otherwise(F.col("lang"))
     h2 = F.md5(F.concat(lang2, F.lit("|"),
                         F.coalesce(F.col("text"), F.lit(""))))
-    # Round-18 optimization (guide §2.4/§8): both snapshots slice one
+    # both snapshots slice one
     # persisted (doc_id, h1, h2) frame — the old three-branch shape
     # scanned the table three times and ran the content md5 over the
     # full text in each branch. One scan, both hashes in one pass,
@@ -2102,7 +2101,7 @@ def multimodal_ppm_decode(spark, sf_dir):
     emits true channel means + a 4×4 block-mean thumbnail. Unlike the
     codec-blocked PNG/JPEG path this decodes actual pixels — pinned
     byte-exact against an independent pure-Python construction+decode in
-    tests/test_multimodal.py, and (round 5) against an exact DuckDB twin
+    tests/test_multimodal.py, and against an exact DuckDB twin
     that replays the decode from the same md5 pixel chain. The thumbnail
     is reported as md5 of its lowercase-hex encoding (engine-portable;
     DuckDB lacks md5 over blobs)."""
@@ -2166,7 +2165,7 @@ def multimodal_wav_decode(spark, sf_dir):
     (`attach_media_content`): WAV rows chunk-walk to their PCM payload and
     report true sample counts/duration/RMS/peak; PNG/mp4 rows yield nulls
     (the mixed-modality shape). Pinned against an independent decode in
-    tests/test_multimodal.py, and (round 5) against an exact DuckDB twin
+    tests/test_multimodal.py, and against an exact DuckDB twin
     that replays the PCM reinterpret + RMS/peak from hex pairs of the
     same payload bytes."""
     from spark_sentiment_spark.operators.multimodal import (
@@ -2483,7 +2482,7 @@ def events_heatmap(spark, sf_dir):
             .orderBy("dow", "hour_of_day"))
 
 
-# --- Cross-source provenance overlap (round 4) ------------------------------
+# --- Cross-source provenance overlap ----------------------------------------
 
 OVERLAP_SQL = f"""
 WITH hs AS (
@@ -2515,7 +2514,7 @@ def source_overlap(spark, sf_dir):
     — pair counts come from c_a*c_b arithmetic, not row products), and
     the output is bounded by n_sources²."""
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # Round-18 optimization (guide §2.4): both self-join sides read the
+    # both self-join sides read the
     # same bounded (hash, source, count) aggregate — persist it so the
     # corpus is scanned and prefix-hashed once.
     hs = track_persist(
@@ -2534,7 +2533,7 @@ def source_overlap(spark, sf_dir):
     )
 
 
-# --- Shard token-balance report (round 4) -----------------------------------
+# --- Shard token-balance report ---------------------------------------------
 
 BALANCE_SQL = r"""
 WITH s AS (
@@ -3123,7 +3122,7 @@ def prepare_training_set(spark, sf_dir):
     n_tokens, window_id, shard, pos), ordered by (shard, pos): exactly
     the manifest a trainer consumes. Every stage keeps its standalone
     query's published semantics; stage-consistency is pinned in
-    tests/test_round14_queries.py (selected ⊆ kept, shard equality vs
+    tests/test_pipeline_queries.py (selected ⊆ kept, shard equality vs
     `shuffle_shards`, per-source pick order vs `mixture_apply`).
 
     Scale: the curation stages keep their audited shapes (scan-speed

@@ -54,7 +54,7 @@ def track_persist(df: DataFrame) -> DataFrame:
 # DataFrame*, so the query function cannot delete them itself; harnesses
 # call release_caches() after consuming the result. An atexit sweep
 # catches one-shot processes that never call it, so repeated runs can't
-# accumulate unbounded /tmp usage (round-8 ADVICE).
+# accumulate unbounded /tmp usage.
 _STAGED_DIRS: list[str] = []
 _TEMP_TABLES: list[tuple[SparkSession, str]] = []
 

@@ -24,15 +24,15 @@ from spark_sentiment_spark.plans.registry import (load, register,
 
 # --- TPC-H-style aggregations ----------------------------------------------
 
-# Money sums in this module are EXACT fixed-point (round-14 class fix):
+# Money sums in this module are EXACT fixed-point (one fix for the class):
 # the fixture's prices/discounts/taxes are exact 2-dp decimals, so each
 # row's disc_price is an exact 4-dp and charge an exact 6-dp decimal —
 # per-row decimal/integer quantization followed by an exact sum makes
 # group totals order-INDEPENDENT. The old round(sum(double), 2) was
 # order-sensitive: a ~2.8e9 total accumulates ~1e-4 of summation-order
 # noise, and when the true total sits within that band of a half-cent
-# the two engines round a cent apart (hit once by the round-14
-# full-catalog sf0.1 sweep in q1, with q5 measured 6.4e-4 from its
+# the two engines round a cent apart (hit once by a full-catalog
+# sf0.1 sweep in q1, with q5 measured 6.4e-4 from its
 # boundary and one q3 order-group landing EXACTLY on one — ~3% odds per
 # 1e9-scale group). q1 uses explicit integer scaling (DuckDB sums to
 # HUGEINT, Spark to DECIMAL(38,0)); the other money queries use the
@@ -1219,7 +1219,7 @@ def join_bucketed(spark, sf_dir):
     # two invocations sharing a metastore can't clobber each other's
     # catalog entries mid-query; the dir and both tables are tracked for
     # release_caches() so repeated runs don't accumulate /tmp or
-    # metastore garbage (round-8 ADVICE).
+    # metastore garbage.
     base = track_staging_dir(tempfile.mkdtemp(prefix="bkt_join_"))
     suffix = os.path.basename(base)
     t_orders = track_temp_table(spark, f"bkt_orders_{suffix}")

@@ -206,7 +206,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     100 TB path. Norms are computed once per side before the join so the
     pair loop is one dot product, not three."""
     emb = load(spark, sf_dir, "embeddings")
-    # Round-18 optimization (guide §2.4): both pair-join sides consumed
+    # both pair-join sides consumed
     # the normalize projection — persist the (vec_id, unit-vector) frame
     # so the per-vector norm+divide runs once, not once per side.
     sides = unit_vector_frame(emb, "u")  # one row per vector
@@ -235,7 +235,7 @@ ANN_LSH_TABLES = 12
 ANN_LSH_PLANES = 6
 ANN_LSH_DIM = 64
 
-# Exact twin (round 5): hyperplane entries are md5-derived dyadic
+# Exact twin: hyperplane entries are md5-derived dyadic
 # rationals — w(j, d) = int(md5("j:d")[:6], 16) / 2^24 - 0.5 — so BOTH
 # engines build bit-identical planes without an RNG or libm, the same
 # engine-independence trick that oracled minhash/simhash. Uniform-cube
@@ -244,14 +244,14 @@ ANN_LSH_DIM = 64
 # the family tolerates non-spherical directions). Sign(dot) parity
 # across engines holds because a flip needs |dot| within last-ulp of 0
 # (~1e-15 against typical |dot| ≈ 0.3). The plane count is NOT a
-# literal (round-14 fix, the same prm treatment _MP_CANDIDATE_CTE got
-# in round 7): the prm CTE computes the SAME adaptive rule the Spark
+# literal (the same prm treatment as _MP_CANDIDATE_CTE): the prm CTE
+# computes the SAME adaptive rule the Spark
 # plan uses — P = max(ANN_LSH_PLANES, ceil(log2(n/16))) — from the
 # table's own row count, so plan and oracle agree at EVERY sf. The old
 # P=6 literal was valid only for n <= 16·2^6 = 1024 and silently
 # diverged at sf0.1's 2000 embeddings (P=7 in the plan vs 6 in the
-# twin — different buckets, different candidates), caught by the
-# round-14 full-catalog sf0.1 sweep. The ceil boundary is engine-safe
+# twin — different buckets, different candidates). The ceil boundary is
+# engine-safe
 # because it lands only on exact powers of two, where double log2 is
 # exact in both engines.
 ANN_LSH_SQL = f"""
@@ -496,7 +496,7 @@ def ann_pq_topk(spark, sf_dir):
     queries = vecs.where(F.col("vec_id") < 5) \
         .select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")).collect()
     probes = pq_adc_tables(spark, queries, codebooks, n_codes)
-    return pq_adc_topk(encoded, probes, vecs, n_codes, PQ_RERANK, ANN_TOPK)
+    return pq_adc_topk(encoded, probes, vecs, n_codes, PQ_RERANK)
 
 
 # --- Composed IVF+PQ persisted index (the FAISS-IVFPQ production shape) -----
@@ -589,7 +589,7 @@ def ann_ivfpq_persisted_probe(spark, sf_dir):
         return spark.createDataFrame([], _TOPK_COLS)
 
     # ---- phase 2: per-batch probe ---------------------------------------
-    return ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, ANN_TOPK)
+    return ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK)
 
 
 # Deterministic delete set for the tombstone demo: every 7th vector by
@@ -620,7 +620,7 @@ def ann_ivfpq_tombstone_probe(spark, sf_dir):
       The rest of the probe is the unmodified `ivfpq_probe` chain —
       routing from persisted centroids, directory-pruned code scan,
       integer-ADC, exact re-rank.
-    * PHYSICAL purge (pinned in tests/test_round15_queries.py): the
+    * PHYSICAL purge (pinned in tests/test_ivfpq_index.py): the
       code table anti-join-rewritten without the deleted rows, same
       partitionBy-cell layout, same quantizers — and the probe over the
       purged layout is row-identical to the tombstone probe, which is
@@ -644,7 +644,7 @@ def ann_ivfpq_tombstone_probe(spark, sf_dir):
     vecs, base, n_codes = _ivfpq_index(spark, sf_dir)
     if n_codes == 0:
         return spark.createDataFrame([], _TOPK_COLS)
-    return ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, ANN_TOPK,
+    return ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK,
                        tombstones=_tombstones(vecs))
 
 
@@ -662,7 +662,7 @@ def _count_cell_parts(codes_dir: str) -> int:
 def ann_ivfpq_compacted_probe(spark, sf_dir):
     """Index MAINTENANCE for the composed IVFPQ layout — the pass that
     completes the artifact lifecycle build → append → COMPACT → probe.
-    The append contract (pinned in test_round14_queries) lets newly
+    The append contract (pinned in tests/test_ivfpq_index.py) lets newly
     indexed vectors land in their cells' partitions batch after batch,
     but every micro-batch leaves one more small file per touched cell —
     the classic lake-layout failure mode: at 100 TB a hot cell
@@ -694,7 +694,7 @@ def ann_ivfpq_compacted_probe(spark, sf_dir):
     repartition(4) — and the hot-cell case (a skewed cell too big for
     one file) is demonstrated with `maxRecordsPerFile` on the same
     write, ceil-rule file counts and probe identity pinned in
-    tests/test_round15_queries.py.
+    tests/test_ivfpq_index.py.
 
     Scale: compaction is one linear pass over the code table (already
     32x-compressed vs the embeddings), shuffling on the cell key it is
@@ -719,7 +719,7 @@ def ann_ivfpq_compacted_probe(spark, sf_dir):
     files_after = _count_cell_parts(base + "/codes_compact")
 
     # ---- probe the compacted index --------------------------------------
-    res = ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, ANN_TOPK,
+    res = ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK,
                       codes_subdir="codes_compact")
     return (res
             .withColumn("files_before",
@@ -735,7 +735,7 @@ def ann_ivfpq_compacted_probe(spark, sf_dir):
 # ~14.3% mod-7 delete set sits safely above it at every SF, so the
 # oracle-replayed branch is the triggered one; the not-triggered branch
 # (serve the stale index with tombstones) is pinned on the same corpus
-# with a raised threshold in tests/test_round16_queries.py.
+# with a raised threshold in tests/test_ivfpq_index.py.
 REFRESH_PCT = 10
 _REFRESH_COLS = (_TOPK_COLS
                  + ", tomb_rows long, indexed_rows long, refreshed long")
@@ -785,7 +785,7 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, refresh_pct: int = REFRESH_PCT):
       a duplicate vec_id or non-encodable row).
     * SERVE STALE when not triggered: the unmodified tombstone-probe
       path (broadcast LEFT ANTI on the pruned scan). Pinned on the same
-      corpus with a raised threshold in tests/test_round16_queries.py:
+      corpus with a raised threshold in tests/test_ivfpq_index.py:
       rows identical to `ann_ivfpq_tombstone_probe`, refreshed = 0.
 
     What refresh actually buys — measured, not assumed: on the shipped
@@ -793,13 +793,13 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, refresh_pct: int = REFRESH_PCT):
     retraining is recall-neutral (brute-force-vs-survivors recall@10
     measured 0.34 refreshed / 0.40 stale at sf0.001 AND sf0.1 — fewer
     effective cells at fixed n_probe covers a larger survivor fraction;
-    floors pinned in tests/test_round16_queries.py). The pass exists
+    floors pinned in tests/test_ivfpq_index.py). The pass exists
     for the BALANCE contract under real drift: a frozen quantizer maps
     a drifted append into a handful of hot cells, so probes touching
     the new mode read an unbounded index fraction — on a constructed
     16-mode corpus plus one tight appended mode, the stale quantizer's
     max cell share measures 0.31 vs 0.10 refreshed (3.2x; pinned with
-    2x slack in tests/test_round16_queries.py). The trigger is on
+    2x slack in tests/test_ivfpq_index.py). The trigger is on
     accumulated CHANGE (deletes here; a production rule adds occupancy
     skew), and the decision machinery is what this query certifies.
 
@@ -850,12 +850,11 @@ def ann_ivfpq_refresh_probe(spark, sf_dir, refresh_pct: int = REFRESH_PCT):
         if n_codes2 == 0:
             # full takedown: every indexed vector deleted — nothing to
             # retrain on and nothing to probe (engine-grade degenerate
-            # contract, pinned in tests/test_round16_queries.py)
+            # contract, pinned in tests/test_ivfpq_index.py)
             return spark.createDataFrame([], _REFRESH_COLS)
-        res = ivfpq_probe(spark, survivors, base2, n_codes2, IVFPQ_RERANK,
-                          ANN_TOPK)
+        res = ivfpq_probe(spark, survivors, base2, n_codes2, IVFPQ_RERANK)
     else:
-        res = ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK, ANN_TOPK,
+        res = ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK,
                           tombstones=tomb)
     return (res
             .withColumn("tomb_rows", F.lit(tomb_rows).cast("bigint"))
@@ -881,8 +880,8 @@ MP_DIM = 64
 # residual ties break on plane position. The plane count is NOT a literal:
 # the prm CTE computes the same adaptive rule the Spark plan uses —
 # P = max(MP_PLANES, ceil(log2(n/16))) — from the table's own row count,
-# so plan and oracle agree at EVERY sf (round-7 ADVICE: a static P=6 twin
-# silently diverged once n > 1024, e.g. sf0.1's 2000 embeddings). The
+# so plan and oracle agree at EVERY sf (a static P=6 twin silently
+# diverges once n > 1024, e.g. sf0.1's 2000 embeddings). The
 # ceil boundary is engine-safe because it lands only on exact powers of
 # two, where double log2 is exact in both engines.
 # The candidate-generation CTE chain (prm → … → cand → un) is shared by
@@ -1335,7 +1334,7 @@ def embedding_outliers(spark, sf_dir):
     with zero spread (sd = 0, e.g. a single-member label) emits
     z = 0 / is_outlier = 0 explicitly in BOTH engines — Spark's
     non-ANSI division would return NULL there while DuckDB returns
-    inf/NaN (round-7 ADVICE).
+    inf/NaN.
 
     Scale: centroids are one posexplode + (label, dim) hash agg (output
     labels×64 rows — broadcasts); scoring is a broadcast join + one

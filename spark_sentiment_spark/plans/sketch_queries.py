@@ -323,7 +323,7 @@ def zorder_probe(spark, sf_dir):
     floor-division arithmetic on the global min/max, identical in both
     engines."""
     li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    # Round-18 optimization (guide §2.4): `bounds` feeds the zkey map AND
+    # `bounds` feeds the zkey map AND
     # the box derivation, `filed` feeds the footer and match aggregates —
     # unpersisted, each consumer re-scanned lineitem (3 scans). Persist
     # the 1-row bounds and the narrow (x, y, file_id) map: one scan.
@@ -1166,19 +1166,18 @@ def _stickiness_hll_core(ud):
     """(day, dau, dau_est_cents, mau_est_cents, stickiness_est_ppm) from a
     distinct (d: timestamp day, user_id) frame — split out so the accuracy
     pin can drive it with a constructed HLL-range corpus
-    (tests/test_round11_queries.py) while the registered query feeds it
+    (tests/test_sketch.py) while the registered query feeds it
     the events table."""
     keyed = ud.withColumn("h", F.md5(F.col("user_id").cast("string")))
-    # Round-18 optimization (guide §2.4): the partials carry a per-bucket
+    # the partials carry a per-bucket
     # distinct-user count (nb) alongside max-rho. Each distinct (d, user)
     # row lands in exactly one (d, bucket) group, so sum(nb) per day IS
     # the exact DAU — the exact tier below reads the persisted
     # |days|×256-row partials instead of re-scanning the events table and
     # re-running the (d, user) distinct (one full fact scan + a
-    # round-robin exchange + a 2-exchange distinct removed; see
-    # plans/r18/events_stickiness_hll_*).
-    # (A fill-side repartition(d) of the cache was tried in round 19 and
-    # REMOVED: every consumer here plans in the same action BEFORE the
+    # round-robin exchange + a 2-exchange distinct removed).
+    # (A fill-side repartition(d) of the cache does not help: every
+    # consumer here plans in the same action BEFORE the
     # cache materializes, and an AQE-wrapped InMemoryRelation reports
     # unknown partitioning at that point — the captured plan kept an
     # ENSURE_REQUIREMENTS hash(d) exchange directly over the hash(d)
@@ -1194,7 +1193,7 @@ def _stickiness_hll_core(ud):
     def _sk(name):
         return hll_sum().alias(name)
 
-    # Round-19 (guide §2.4): exact DAU and the DAU sketch are BOTH
+    # exact DAU and the DAU sketch are BOTH
     # groupBy(d) aggregates over the same cached partials — one fused agg
     # replaces two aggregation passes plus their re-attachment join.
     day_stats = daypart.groupBy("d").agg(
@@ -1255,7 +1254,7 @@ def events_stickiness_hll(spark, sf_dir):
     2.5m knee, so estimates there are in the documented biased-high
     range — the driver check is the exact replay; ACCURACY of the swap
     (est within tolerance of the exact range-join stickiness) is pinned
-    in tests/test_round11_queries.py on a constructed corpus with
+    in tests/test_sketch.py on a constructed corpus with
     HLL-range cardinalities (thousands of users/day), where the shared
     partials also correlate the DAU/MAU errors and tighten the ratio.
 

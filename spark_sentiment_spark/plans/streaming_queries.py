@@ -69,6 +69,7 @@ from spark_sentiment_spark.plans.registry import (load, register,
                                                   track_persist,
                                                   track_staging_dir)
 from spark_sentiment_spark.streaming.streams import (
+    WATERMARK,
     await_stream,
     dedup_stream,
     read_document_stream,
@@ -225,7 +226,7 @@ def streaming_volume_anomaly(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     events = read_event_stream(spark, sf_dir)
     hourly = (
-        events.withWatermark("ts", "2 hours")
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
@@ -493,13 +494,13 @@ def streaming_minhash_probe(spark, sf_dir):
     # denormalized — the persisted artifact a deployment would maintain.
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_new = F.col("doc_id") % 5 == 4
-    # Round-19 optimization (guide §2.4): the index denormalizes bands
+    # the index denormalizes bands
     # against signatures — un-persisted, BOTH subtrees of that self-join
     # re-ran the corpus signature fold, and every micro-batch re-derived
     # the whole index again. Persist the narrow signature frame: one
     # corpus fold total; the band explode re-derives from the cache per
-    # consumer (the r18 A/B precedent: cache the signatures, never the
-    # n_bands× exploded frame).
+    # consumer (as measured for dedup_minhash_lsh: cache the signatures,
+    # never the n_bands× exploded frame).
     sig_old = track_persist(minhash_signatures(docs.where(~is_new)))
     index = (band_buckets(sig_old, N_HASHES, N_BANDS)
              .join(sig_old, "doc_id")
@@ -552,7 +553,7 @@ def streaming_scd2_merge(spark, sf_dir):
     availableNow delivers three ordered micro-batches and batch N+1
     genuinely reads the dimension version batch N wrote — the
     version-chaining property is exercised, not asserted by construction
-    (tests/test_round10_queries.py pins the version count). A
+    (tests/test_streaming.py pins the version count). A
     multi-batch deployment requires exactly this in-order arrival
     (per-key ordering is what a CDC log gives you; the merge itself
     handles any order WITHIN a batch via its windows).
@@ -664,7 +665,7 @@ def streaming_winnowing_probe(spark, sf_dir):
     SURVEY §7.4."""
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     is_new = F.col("doc_id") % 5 == 4
-    # Round-18 optimization (guide §2.4): fp_old feeds the hot-list agg
+    # fp_old feeds the hot-list agg
     # AND the anti-join — unpersisted, materializing `index` winnowed the
     # corpus twice (explode + 6 windows per pass). Persist the narrow
     # (doc_id, h) frame so the corpus pass runs once.
@@ -715,7 +716,7 @@ def streaming_ivf_probe(spark, sf_dir):
     top-k to a batch_id-partitioned sink (exactly-once by
     overwrite-per-batch; each qid lives in exactly one batch, so no
     result spans batches and the union needs no dedup — batch-boundary
-    independence is pinned in tests/test_round12_queries.py against the
+    independence is pinned in tests/test_streaming.py against the
     inline form).
 
     The per-qid top-k window needs batch semantics, so the probe runs
@@ -796,7 +797,7 @@ def streaming_pq_probe(spark, sf_dir):
     the code table is static, so any batch split yields the same
     result — each qid lives in exactly one batch and no result spans
     batches (pinned against the inline form in
-    tests/test_round13_queries.py).
+    tests/test_streaming.py).
 
     Oracle: `ann_pq_topk`'s SQL verbatim — content-addressed codebooks
     + fixed-point integer ADC make the persisted codes byte-identical
@@ -832,7 +833,7 @@ def streaming_pq_probe(spark, sf_dir):
                                    unit_vector("embedding").alias("qe"))
                          .collect())
         probes = pq_adc_tables(spark, batch_queries, cb, n_codes)
-        return pq_adc_topk(codes, probes, vecs, n_codes, PQ_RERANK, ANN_TOPK)
+        return pq_adc_topk(codes, probes, vecs, n_codes, PQ_RERANK)
 
     return run_probe_stream(
         spark, [q_src.where(F.col("vec_id") < 3),
@@ -861,7 +862,7 @@ def streaming_ivfpq_probe(spark, sf_dir):
     Batch boundaries cannot change any query's top-k: routing, probe
     cells, ADC tables, and the per-qid windows are all per-query, the
     artifacts are static, and each qid lives in exactly one batch
-    (pinned against the batch form in tests/test_round14_queries.py).
+    (pinned against the batch form in tests/test_streaming.py).
 
     Oracle: ANN_IVFPQ_SQL verbatim — the finite availableNow source
     replays the same composed top-k regardless of the query split.
@@ -889,7 +890,7 @@ def streaming_ivfpq_probe(spark, sf_dir):
         batch_queries = df.select(F.col("vec_id").alias("qid"),
                                   unit_vector("embedding").alias("qe"))
         return ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK,
-                           ANN_TOPK, queries=batch_queries)
+                           queries=batch_queries)
 
     return run_probe_stream(
         spark, [q_src.where(F.col("vec_id") < 3),
@@ -921,7 +922,7 @@ def streaming_bm25_probe(spark, sf_dir):
     df/stats derive only from the static artifacts and each qid lives
     in exactly one batch, so batch boundaries cannot change any
     ranking (pinned against the inline form in
-    tests/test_round13_queries.py).
+    tests/test_streaming.py).
 
     Oracle: BM25_SQL verbatim — the finite availableNow source replays
     the same top-k regardless of the query batch split.

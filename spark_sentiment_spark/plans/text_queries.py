@@ -482,7 +482,7 @@ def doc_rolling_hash(spark, sf_dir):
     fingerprint differently (unlike the bag-of-words hash above). One
     narrow aggregate per row via F.aggregate; no shuffle, no Python.
 
-    Exact-hash oracle (round 4, was rows-only): the per-token hash is the
+    Exact-hash oracle: the per-token hash is the
     first 8 md5 hex chars mod p — engine-independent — and DuckDB folds
     the identical sequence with list_reduce, so the driver's value-hash
     check covers the full fold, replacing the old engine-specific
@@ -708,8 +708,8 @@ def sample_stratified(spark, sf_dir):
     (en 0.5, others 0.25) decided by comparing an md5 prefix of
     ``lang:doc_id`` against the stratum's hex threshold, map-side during
     the scan. Salting the hash with the stratum makes each stratum's draw
-    independent. Round 5 upgraded this from seeded ``sampleBy`` (engine-
-    private RNG stream → rows-only check) to content-addressed membership:
+    independent. Content-addressed membership, unlike seeded ``sampleBy``
+    (an engine-private RNG stream, checkable by row count only), is
     stable across runs, engines, and repartitioning, so the DuckDB twin
     is exact — same trick as ``mixture_sample``.
     tests/test_sampling.py pins determinism and per-stratum rates."""
@@ -771,8 +771,8 @@ def boilerplate_ngrams(spark, sf_dir):
 
 
 # --- PII redaction over deterministically injected spans --------------------
-# The synthetic corpus carries no PII-like patterns (zero digits/@/http —
-# why functions/redact.py shipped unit-only until round 5), so the query
+# The synthetic corpus carries no PII-like patterns (zero digits/@/http),
+# so the query
 # INJECTS deterministic doc_id-derived spans first: every output is then a
 # real differential of the two engines' regex pipelines. The patterns stay
 # inside the Java-regex/RE2 agreement subset (no lookaround/backrefs), as
@@ -830,7 +830,7 @@ ORDER BY doc_id
 @register("pii_redaction", sql=PII_SQL, bench=True,
           tags=("text", "quality", "pii"))
 def pii_redaction(spark, sf_dir):
-    """PII scrub as a driver-checked differential (round 5): inject
+    """PII scrub as a driver-checked differential: inject
     deterministic doc_id-derived email/URL/IPv4/phone spans into the
     (PII-free) corpus, then run the native regexp_replace redaction chain
     and the per-category audit counts (`functions/redact.py`). The DuckDB
@@ -1430,7 +1430,7 @@ def quality_gopher_rules(spark, sf_dir):
     50–100k words, mean word length 3–10, symbol-to-word ratio ≤ 0.1
     for EACH symbol separately ('#' chars; '...' or '…' ellipses — the
     published rule drops when EITHER ratio exceeds 0.1, so the two are
-    measured and thresholded independently, round-11 ADVICE), ≤ 90%
+    measured and thresholded independently), ≤ 90%
     bullet-led lines, ≤ 30% ellipsis-ended lines (both ellipsis forms),
     ≥ 80% words containing an alphabetic character, ≥ 2 of the 8 English
     stop words. Emits every measured feature next to the verdict and a

@@ -394,7 +394,7 @@ def q15_top_supplier(spark, sf_dir):
 
     # Rounding BEFORE the max comparison keeps the tie test deterministic
     # across summation orders (Spark partial aggs vs DuckDB single-threaded).
-    # Round-18 optimization (guide §2.4): `revenue` feeds both the join
+    # `revenue` feeds both the join
     # and the scalar max — unpersisted, each branch re-scanned and
     # re-aggregated lineitem. The per-supplier aggregate is bounded
     # (|suppliers| rows), so persisting it halves the fact work.
@@ -672,7 +672,7 @@ def q21_waiting_suppliers(spark, sf_dir):
     orders = load(spark, sf_dir, "orders").where(
         F.col("o_orderstatus") == "F")
     supp = load(spark, sf_dir, "supplier")
-    # Round-18 optimization (guide §2.4): `late` feeds the sole-supplier
+    # `late` feeds the sole-supplier
     # aggregate AND the final semi-join chain — persist the narrow
     # (orderkey, suppkey) frame so the lineitem⋈orders pass runs once.
     from spark_sentiment_spark.plans.registry import track_persist

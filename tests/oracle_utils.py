@@ -4,7 +4,9 @@ on Spark and its oracle SQL on DuckDB, compare row count, column names, and
 
 from __future__ import annotations
 
+import contextlib
 import math
+import shutil
 import tempfile
 
 import duckdb
@@ -24,26 +26,30 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def stage_documents(rows, sf_dir: str) -> str:
+@contextlib.contextmanager
+def staged_documents(rows, sf_dir: str):
     """Write a constructed documents table from (doc_id, text, lang,
     source, n_chars) rows as one parquet FILE (duck_connection's
     contract), plus empty slices of every other table of ``sf_dir``;
-    returns the staging dir (the caller removes it)."""
+    yields the staging dir and removes it on exit."""
     tmp = tempfile.mkdtemp(prefix="oracle_corpus_")
-    cols = list(zip(*rows))
-    pq.write_table(pa.table(
-        {"doc_id": pa.array(cols[0], pa.int64()),
-         "text": pa.array(cols[1], pa.string()),
-         "lang": pa.array(cols[2], pa.string()),
-         "source": pa.array(cols[3], pa.string()),
-         "n_chars": pa.array(cols[4], pa.int64())}),
-        f"{tmp}/documents.parquet")
-    for t in TABLES:
-        if t != "documents":
-            pq.write_table(
-                pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, 0),
-                f"{tmp}/{t}.parquet")
-    return tmp
+    try:
+        cols = list(zip(*rows))
+        pq.write_table(pa.table(
+            {"doc_id": pa.array(cols[0], pa.int64()),
+             "text": pa.array(cols[1], pa.string()),
+             "lang": pa.array(cols[2], pa.string()),
+             "source": pa.array(cols[3], pa.string()),
+             "n_chars": pa.array(cols[4], pa.int64())}),
+            f"{tmp}/documents.parquet")
+        for t in TABLES:
+            if t != "documents":
+                pq.write_table(
+                    pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, 0),
+                    f"{tmp}/{t}.parquet")
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _norm_cell(v):
@@ -90,3 +96,12 @@ def compare(spark_df, con, sql, name="query"):
             return False, (f"{name}: value mismatch at sorted-row {i}:\n"
                            f"  spark={a}\n  duck ={b}")
     return False, f"{name}: rows differ (same length, no aligned diff?)"
+
+
+def assert_oracle_match(df, name: str, sf_dir: str) -> None:
+    """``df``, catalog query ``name`` run over the tables of ``sf_dir``,
+    equals the query's DuckDB oracle over the same tables."""
+    from spark_sentiment_spark.plans.registry import REGISTRY
+
+    ok, msg = compare(df, duck_connection(sf_dir), REGISTRY[name].sql, name)
+    assert ok, msg

@@ -5,10 +5,8 @@ from collections import Counter
 
 import pyarrow.parquet as pq
 
-from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
 from tests.conftest import SF_DIR
 
-all_queries()
 
 N_MERGES = 15
 
@@ -65,8 +63,8 @@ def test_bpe_train_matches_naive_reference(spark):
 
 
 def test_default_floor_preserves_merge_sequence(spark):
-    """The default min_count=2 hapax floor and 1M vocab cap (the round-5
-    bound on the driver-side collect) must not perturb the merge sequence
+    """The default min_count=2 hapax floor and 1M vocab cap (the bound on
+    the driver-side collect) must not perturb the merge sequence
     on the fixture corpus: the bound is a scale guard, not a semantic
     change at test scale."""
     from spark_sentiment_spark.operators.bpe import bpe_train
@@ -112,10 +110,10 @@ def test_encoder_reproduces_training_segmentation():
         assert list(_encode_word(w, ranks)) == final_segs[w], w
 
 
-def test_token_counts_bounded(spark):
+def test_token_counts_bounded(spark, query):
     """Each word encodes to between 1 and len(word)+1 symbols, so a doc's
     BPE token count lies in [n_words, n_chars + n_words]."""
-    q = REGISTRY["bpe_token_counts"].fn(spark, SF_DIR)
+    q = query("bpe_token_counts")
     counts = {r.doc_id: r.n_bpe_tokens for r in q.collect()}
     tbl = pq.read_table(f"{SF_DIR}/documents.parquet",
                         columns=["doc_id", "text"])

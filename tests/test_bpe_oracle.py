@@ -16,8 +16,8 @@ Hypothesis hammers both with tiny two-letter-alphabet corpora (maximally
 tie- and overlap-prone) — pure Python + DuckDB, no Spark session needed.
 
 The chain generator's ONE parameter is the unroll bound, so each
-differential runs at two distinct merge counts (round-6 VERDICT item 7:
-a single N cannot catch an off-by-one-round in the generated chain).
+differential runs at two distinct merge counts (a single N cannot catch
+an off-by-one-round in the generated chain).
 """
 
 from __future__ import annotations
@@ -61,7 +61,7 @@ def _python_merges(texts: list[list[str]],
 @pytest.mark.parametrize("n_merges,max_examples", [
     # the 40-example sweep is the deep fuzz — slow-marked so the fast
     # path keeps one 10-example differential per operator (plus the
-    # round-8 driver-window oracles for bpe_merges/bpe_token_counts)
+    # catalog oracles for bpe_merges/bpe_token_counts)
     pytest.param(8, 40, marks=pytest.mark.slow),
     (25, 10),
 ])
@@ -84,7 +84,7 @@ def test_merges_sql_matches_python_trainer(n_merges, max_examples):
 @pytest.mark.parametrize("n_merges,max_examples", [
     # the 40-example sweep is the deep fuzz — slow-marked so the fast
     # path keeps one 10-example differential per operator (plus the
-    # round-8 driver-window oracles for bpe_merges/bpe_token_counts)
+    # catalog oracles for bpe_merges/bpe_token_counts)
     pytest.param(8, 40, marks=pytest.mark.slow),
     (25, 10),
 ])
@@ -107,7 +107,7 @@ def test_token_counts_sql_matches_gpt2_encoder(n_merges, max_examples):
 
 
 def test_whitespace_class_aligns_python_and_duckdb():
-    """Round-6 ADVICE: Java/RE2/Python `\\s` disagree on \\x0B and Unicode
+    """Java/RE2/Python `\\s` disagree on \\x0B and Unicode
     spaces, so plan+oracle+UDF now share one explicit class. Pin that the
     Python UDF regex and the DuckDB oracle regex tokenize a nasty mixed-
     whitespace text identically: \\x0B IS a separator on both sides,

@@ -49,18 +49,16 @@ def test_adversarial_chain_logarithmic_rounds(spark):
     assert rounds <= 2 * int(math.log2(n)) + 4, rounds
 
 
-def test_cluster_canonical_quality_overrides_crawl_order(spark):
+def test_cluster_canonical_quality_overrides_crawl_order(spark, query):
     """dedup_cluster_canonical must (a) cover the whole non-null corpus
     exactly once per component, and (b) actually exercise keep-best: at
     the sf0.001 fixture some multi-member component's longest doc is NOT
     its min-doc_id member (10 such components in DuckDB), so keep-first
     would pick a different survivor."""
     from tests.conftest import SF_DIR
-    from spark_sentiment_spark.plans.dedup_queries import (
-        dedup_cluster_canonical, dedup_clusters)
     from spark_sentiment_spark.plans.registry import load
 
-    rows = dedup_cluster_canonical(spark, SF_DIR).collect()
+    rows = query("dedup_cluster_canonical").collect()
     n_docs = (load(spark, SF_DIR, "documents")
               .where("text IS NOT NULL").count())
     assert sum(r.n_members for r in rows) == n_docs
@@ -72,15 +70,13 @@ def test_cluster_canonical_quality_overrides_crawl_order(spark):
         "keep-best never diverged from keep-first — vacuous fixture"
 
 
-def test_dedup_clusters_exact_dup_collapse_membership(spark, tmp_path):
-    """The round-6 exact-duplicate collapse in dedup_clusters must keep
+def test_dedup_clusters_exact_dup_collapse_membership(spark, query, tmp_path):
+    """The exact-duplicate collapse in dedup_clusters must keep
     the ORIGINAL membership/label semantics on every edge case: exact-dup
     groups with no outside partner (component = group min), a near-dup
     reaching a group only through its representative, singletons whose
     only partner is a group member, isolated docs (absent), and null
     texts (absent). Hand-built corpus, labels hand-derived."""
-    from spark_sentiment_spark.plans.dedup_queries import dedup_clusters
-    from spark_sentiment_spark.plans.registry import release_caches
 
     ta = " ".join(f"a{i}" for i in range(40))
     tb = " ".join(f"b{i}" for i in range(80))
@@ -98,8 +94,24 @@ def test_dedup_clusters_exact_dup_collapse_membership(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
     got = {r["doc_id"]: r["component"]
-           for r in dedup_clusters(spark, sf).collect()}
-    release_caches()
+           for r in query("dedup_clusters", sf).collect()}
     assert got == {1: 1, 2: 1, 3: 1,
                    10: 10, 11: 10, 12: 10,
                    21: 21, 22: 21, 30: 21}
+
+
+def test_components_round_accounting_and_convergence(spark):
+    """The loop carries an `ocomp` column through the pointer jump
+    instead of a per-round changed-count join, and checkpoints `prop`
+    once per round to feed both jump sides. On a graph that settles in
+    one propagation the loop must take EXACTLY 2 rounds (one change
+    round + the zero-change round that fires the filter-based
+    convergence check), with correct labels."""
+    df = spark.createDataFrame([(20, 21), (30, 31)], ["s", "d"])
+    labels, rounds = connected_components(df, "s", "d",
+                                          return_rounds=True)
+    got = {r["node"]: r["comp"] for r in labels.collect()}
+    assert got == {20: 20, 21: 20, 30: 30, 31: 30}
+    assert rounds == 2, rounds
+    # the returned frame must not leak the internal ocomp column
+    assert labels.columns == ["node", "comp"]

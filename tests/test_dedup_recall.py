@@ -2,17 +2,13 @@
 every true near-dup pair (exact 3-shingle Jaccard >= 0.9) must surface as
 an LSH candidate (estimated >= 0.5), and the estimates must track truth."""
 
-from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                  release_caches)
 from tests.conftest import SF_DIR
 
-all_queries()
 
 
-def test_minhash_lsh_full_recall_of_true_neardups(spark):
-    exact = REGISTRY["dedup_jaccard_pairs"].fn(spark, SF_DIR).collect()
-    cand = REGISTRY["dedup_minhash_lsh"].fn(spark, SF_DIR).collect()
-    release_caches()
+def test_minhash_lsh_full_recall_of_true_neardups(spark, query):
+    exact = query("dedup_jaccard_pairs").collect()
+    cand = query("dedup_minhash_lsh").collect()
     assert exact, "fixture has no true near-dup pairs — test is vacuous"
     exact_pairs = {(r.doc_a, r.doc_b): r.jaccard for r in exact}
     est = {(r.doc_a, r.doc_b): r.est_jaccard for r in cand}
@@ -24,7 +20,7 @@ def test_minhash_lsh_full_recall_of_true_neardups(spark):
         assert abs(est[pair] - j) <= 0.25, (pair, j, est[pair])
 
 
-def test_semantic_dedup_invariant_and_recall(spark):
+def test_semantic_dedup_invariant_and_recall(spark, query):
     """(a) No two KEPT vectors sharing ANY probed cell are within tau of
     each other — the keep-policy's hard guarantee at multi-probe
     strength (probe assignments recomputed independently here from the
@@ -39,12 +35,11 @@ def test_semantic_dedup_invariant_and_recall(spark):
     from spark_sentiment_spark.plans.pipeline_queries import (
         SEMDEDUP_K, SEMDEDUP_PROBE)
 
-    rows = REGISTRY["dedup_semantic"].fn(spark, SF_DIR).collect()
-    exact = REGISTRY["dedup_embedding_cosine"].fn(spark, SF_DIR).collect()
+    rows = query("dedup_semantic").collect()
+    exact = query("dedup_embedding_cosine").collect()
     emb = {r.vec_id: r.embedding
            for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
            .collect()}
-    release_caches()
     assert exact, "fixture has no true cosine near-dup pairs"
 
     def unit(v):

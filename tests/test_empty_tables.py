@@ -17,12 +17,10 @@ import tempfile
 
 import pytest
 
-from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                  release_caches)
+from spark_sentiment_spark.plans.registry import REGISTRY
 from tests.conftest import SF_DIR
 from tests.oracle_utils import TABLES
 
-all_queries()  # populate REGISTRY
 
 
 @pytest.fixture(scope="module", params=[0, 1], ids=["empty", "single-row"])
@@ -37,10 +35,7 @@ def degenerate_sf(request, spark):
 
 @pytest.mark.slow
 @pytest.mark.parametrize("name", list(REGISTRY))
-def test_query_survives_degenerate_tables(spark, degenerate_sf, name):
-    try:
-        df = REGISTRY[name].fn(spark, degenerate_sf)
-        df.count()
-        assert len(df.schema.fields) > 0
-    finally:
-        release_caches()
+def test_query_survives_degenerate_tables(query, degenerate_sf, name):
+    df = query(name, degenerate_sf)
+    df.count()
+    assert len(df.schema.fields) > 0

@@ -2,6 +2,8 @@
 
 import pytest
 
+from tests.plan_walk import has, nodes, python_nodes
+
 
 def test_fuzzy_scores_prefer_smallest_distance(spark):
     from spark_sentiment_spark.operators.wordscore import fuzzy_lexicon_scores
@@ -23,6 +25,6 @@ def test_fuzzy_plan_is_native_broadcast(spark):
     from spark_sentiment_spark.operators.wordscore import fuzzy_lexicon_scores
 
     toks = spark.createDataFrame([("happpy",)], "token string")
-    plan = fuzzy_lexicon_scores(toks)._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
-    assert "Python" not in plan.replace("PythonRDD", "")  # no python UDFs
+    ns = nodes(fuzzy_lexicon_scores(toks))
+    assert has(ns, "Broadcast")
+    assert not python_nodes(ns)  # no python UDFs

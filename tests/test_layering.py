@@ -12,14 +12,21 @@ lifetime tracking, and nothing else from ``plans/``.
 Shared code is also written once: no two top-level functions in the
 package may repeat the same plan stage token for token. And a setting
 exists only where some caller uses it: a defaulted parameter that no call
-ever sets to another value is a constant.
+ever sets to another value is a constant. And no catalog query loads the
+same table twice.
+
+The tests are named for what they check, never for the round that added
+them, and they read plans through the one walker in ``tests/plan_walk.py``
+rather than grepping plan strings.
 """
 
 from __future__ import annotations
 
 import ast
 import io
+import collections
 import itertools
+import re
 import tokenize
 from pathlib import Path
 
@@ -157,8 +164,8 @@ SETTINGS_ALLOWED: dict[str, str] = {
     "operators/nlp_model.py::save_model.path":
         "path setting: where to write the model",
     "plans/similarity_queries.py::ann_ivfpq_refresh_probe.refresh_pct":
-        "varied through REGISTRY[name].fn(..., refresh_pct=50) in "
-        "tests/test_round16_queries.py to reach the stale-index branch",
+        "varied through query(name, refresh_pct=50) in "
+        "tests/test_ivfpq_index.py to reach the stale-index branch",
 }
 
 
@@ -258,3 +265,67 @@ def test_every_default_is_varied():
         "reason):\n" + "\n".join(fixed))
     stale = sorted(SETTINGS_ALLOWED.keys() - set(unvaried))
     assert not stale, f"allow-listed settings now varied or gone: {stale}"
+
+
+def test_no_duplicate_table_loads_in_any_query():
+    """No query function calls load() twice for the same table: every
+    multi-branch consumer either persists the shared frame or derives
+    both branches from one load. A duplicate load re-scans the fact
+    table once per plan branch at 100 TB; new queries must share the
+    scan."""
+    offenders = []
+    for path in sorted((ROOT / "plans").glob("*_queries.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            loads = collections.Counter()
+            for sub in ast.walk(node):
+                if isinstance(sub, ast.Call):
+                    name = getattr(sub.func, "id",
+                                   getattr(sub.func, "attr", ""))
+                    if name == "load" and len(sub.args) >= 3:
+                        tbl = getattr(sub.args[2], "value", None)
+                        if isinstance(tbl, str):
+                            loads[tbl] += 1
+            dups = {t: c for t, c in loads.items() if c > 1}
+            if dups:
+                offenders.append(f"{path.name}:{node.name}: {dups}")
+    assert not offenders, offenders
+
+
+TESTS = REPO / "tests"
+ROUND_NAME = re.compile(r"round\d|_r\d\d_")
+
+
+def test_no_test_name_encodes_a_round():
+    bad = [p.name for p in sorted(TESTS.glob("*.py"))
+           if ROUND_NAME.search(p.stem + "_")]
+    for path in sorted(TESTS.glob("test_*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.FunctionDef) \
+                    and node.name.startswith("test_") \
+                    and ROUND_NAME.search(node.name + "_"):
+                bad.append(f"{path.name}::{node.name}")
+    assert not bad, bad
+
+
+def _reads_query_execution(node: ast.AST) -> bool:
+    return any(isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+               and n.func.attr == "queryExecution" for n in ast.walk(node))
+
+
+def test_tests_read_plans_through_the_walker():
+    """No test greps a plan string: ``toString()`` on anything reached
+    from a ``queryExecution()`` appears in no file under tests/ except
+    the walker."""
+    bad = []
+    for path in sorted(TESTS.rglob("*.py")):
+        if path.name == "plan_walk.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call) \
+                    and isinstance(node.func, ast.Attribute) \
+                    and node.func.attr == "toString" \
+                    and _reads_query_execution(node.func.value):
+                bad.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not bad, bad

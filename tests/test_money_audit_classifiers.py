@@ -1,5 +1,5 @@
 """Unit pins for scripts/money_audit.py's static SQL classifiers — the
-two round-15 ADVICE scenarios where the regex heuristics misread nesting:
+two scenarios where the regex heuristics misread nesting:
 
   * is_predicate_context: a scalar subquery's WHERE earlier in the same
     select list must not make the following select-list site look like

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
+from tests.plan_walk import nodes, python_nodes
 
 
 @pytest.fixture(scope="module")
@@ -35,8 +36,7 @@ def test_fingerprints_native(mm, spark):
     assert row["n_bytes"] > 0
     assert row["sniffed_mime"] == "application/octet-stream"
     # no Python in the plan: only project/scan nodes
-    plan = fp._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan
+    assert not python_nodes(nodes(fp))
 
 
 def test_magic_byte_sniffing(spark):
@@ -164,9 +164,7 @@ def test_header_metadata_native(spark):
 def test_header_metadata_is_pure_jvm(spark):
     from spark_sentiment_spark.operators.multimodal import header_metadata
 
-    plan = (header_metadata(_binary_df(spark))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Python" not in plan and "BatchEval" not in plan
+    assert not python_nodes(nodes(header_metadata(_binary_df(spark))))
 
 
 def test_parse_container_header_python_twin():
@@ -370,7 +368,7 @@ def test_video_frame_sampling_matches_independent_decode(spark):
             assert abs(r.mean_b - want[2]) < 1e-9
 
 
-def test_phash_dedup_matches_brute_force(spark):
+def test_phash_dedup_matches_brute_force(spark, query):
     """multimodal_phash_dedup (band-pruned) against an independent
     pure-Python construct→decode→hash→ALL-PAIRS hamming implementation:
     identical pair sets and distances. This doubles as the empirical
@@ -380,14 +378,8 @@ def test_phash_dedup_matches_brute_force(spark):
 
     import numpy as np
 
-    from spark_sentiment_spark.plans.pipeline_queries import (
-        multimodal_phash_dedup)
-    from spark_sentiment_spark.plans.registry import release_caches
-    from tests.conftest import SF_DIR
-
     got = {(r["doc_a"], r["doc_b"]): r["hamming"]
-           for r in multimodal_phash_dedup(spark, SF_DIR).collect()}
-    release_caches()
+           for r in query("multimodal_phash_dedup").collect()}
 
     ids = [r["doc_id"] for r in spark.read.parquet(
         f"{SF_DIR}/documents.parquet").select("doc_id").collect()]

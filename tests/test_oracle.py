@@ -10,14 +10,13 @@ import sys
 
 import pytest
 
-from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                  release_caches)
+from spark_sentiment_spark.plans import registry
+from spark_sentiment_spark.plans.registry import REGISTRY
 from tests.conftest import SF_DIR
 from tests.oracle_utils import compare, duck_connection
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-all_queries()  # populate REGISTRY
 ORACLE_NAMES = [n for n, q in REGISTRY.items() if q.sql is not None]
 ROWS_ONLY_NAMES = [n for n, q in REGISTRY.items() if q.sql is None]
 
@@ -30,33 +29,27 @@ def duck():
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_oracle_match(spark, duck, name):
-    q = REGISTRY[name]
-    ok, msg = compare(q.fn(spark, SF_DIR), duck, q.sql, name)
-    release_caches()  # full-catalog run in ONE session must not accumulate
+def test_oracle_match(query, duck, name):
+    ok, msg = compare(query(name), duck, REGISTRY[name].sql, name)
     assert ok, msg
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
-def test_rows_only_runs(spark, name):
-    q = REGISTRY[name]
-    df = q.fn(spark, SF_DIR)
+def test_rows_only_runs(query, name):
+    df = query(name)
     n = df.count()
-    release_caches()
     assert n >= 0
     assert len(df.schema.fields) > 0
 
 
-def test_release_caches_leaves_nothing_cached(spark):
+def test_release_caches_leaves_nothing_cached(spark, query):
     """After a consuming action + release_caches(), the query's cached
     RDDs are gone — the long-lived-session contract for plans that persist
     intermediates. Tracked by RDD *id set*, not count: the async
     ContextCleaner may concurrently free localCheckpoint RDDs left by
     earlier tests' iterative queries, so absolute counts flake — only the
     ids THIS query added must appear and then disappear."""
-    from spark_sentiment_spark.plans.registry import REGISTRY
-
-    release_caches()  # drain anything tracked by earlier tests
+    registry.release_caches()  # drain anything tracked by earlier tests
     jsc = spark.sparkContext._jsc.sc()
 
     def cached_ids():
@@ -67,10 +60,10 @@ def test_release_caches_leaves_nothing_cached(spark):
         return ids
 
     before = cached_ids()
-    REGISTRY["dedup_minhash_lsh"].fn(spark, SF_DIR).count()
+    query("dedup_minhash_lsh").count()
     added = cached_ids() - before
     assert added, "query persisted nothing"
-    assert release_caches() >= 1
+    assert registry.release_caches() >= 1
     assert not (added & cached_ids()), "tracked persists survived release"
 
 
@@ -118,9 +111,6 @@ def test_catalog_order_is_registration_order():
 def test_doc_counters_match_registry():
     """The catalog counters written in README, COVERAGE and SURVEY
     match the live registry, so growth without a doc bump fails here."""
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
-
-    all_queries()
     total = len(REGISTRY)
     rows_only = sum(1 for q in REGISTRY.values() if q.sql is None)
 

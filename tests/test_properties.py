@@ -155,17 +155,15 @@ def test_split_by_hash_is_stable_and_partition(spark, ids):
         assert out[i] == expect
 
 
-def test_embedding_pca_matches_numpy(spark):
+def test_embedding_pca_matches_numpy(spark, query):
     """The distributed Gram accumulation + eigensolve must reproduce a
     direct numpy PCA of the same vectors to float precision."""
     import numpy as np
     import pyarrow.parquet as pq
 
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
     from tests.conftest import SF_DIR
 
-    all_queries()
-    rows = REGISTRY["embedding_pca"].fn(spark, SF_DIR).collect()
+    rows = query("embedding_pca").collect()
 
     V = np.asarray(pq.read_table(f"{SF_DIR}/embeddings.parquet")
                    .column("embedding").to_pylist(), dtype=np.float64)
@@ -213,7 +211,7 @@ def test_char_ngram_stats_matches_naive(spark, texts, n):
         assert abs(g_ratio - ratio) < 1e-6, i
 
 
-def test_keep_best_prefers_longest_then_lowest_id(spark, tmp_path):
+def test_keep_best_prefers_longest_then_lowest_id(spark, query, tmp_path):
     """dedup_keep_best semantics on a constructed corpus: within a shared
     4-token-prefix cluster the LONGEST doc survives regardless of crawl
     order, and equal lengths tie to the lowest doc_id — exactly where it
@@ -230,9 +228,8 @@ def test_keep_best_prefers_longest_then_lowest_id(spark, tmp_path):
               "n_chars long")
     docs.write.parquet(str(tmp_path / "documents.parquet"))
 
-    from spark_sentiment_spark.plans.pipeline_queries import dedup_keep_best
     kept = {r.doc_id: r for r in
-            dedup_keep_best(spark, str(tmp_path)).collect()}
+            query("dedup_keep_best", str(tmp_path)).collect()}
     assert set(kept) == {2, 4}            # doc 2 beats 1 and 3 on length
     assert kept[2].n_dups == 3
     assert kept[2].doc_len == len(rows[1][1])
@@ -243,11 +240,11 @@ def test_keep_best_prefers_longest_then_lowest_id(spark, tmp_path):
         rows_tie, "doc_id long, text string, lang string, source string, "
                   "n_chars long"
     ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    kept = dedup_keep_best(spark, str(tmp_path)).collect()
+    kept = query("dedup_keep_best", str(tmp_path)).collect()
     assert [r.doc_id for r in kept] == [10]   # equal length -> lowest id
 
 
-def test_ngram_novelty_bounds_and_duplicate_collapse(spark, tmp_path):
+def test_ngram_novelty_bounds_and_duplicate_collapse(spark, query, tmp_path):
     """A verbatim duplicate of an earlier doc has novelty 0; a doc sharing
     nothing has novelty 1; and novel_grams over the whole corpus sums to
     the number of globally distinct 5-grams (each gram is 'novel' exactly
@@ -262,8 +259,7 @@ def test_ngram_novelty_bounds_and_duplicate_collapse(spark, tmp_path):
               "n_chars long"
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
-    from spark_sentiment_spark.plans.text_queries import ngram_novelty
-    out = {r.doc_id: r for r in ngram_novelty(spark, str(tmp_path)).collect()}
+    out = {r.doc_id: r for r in query("ngram_novelty", str(tmp_path)).collect()}
     assert out[1].novelty == 1.0
     assert out[2].novelty == 0.0 and out[2].novel_grams == 0
     assert out[3].novelty == 1.0
@@ -274,17 +270,15 @@ def test_ngram_novelty_bounds_and_duplicate_collapse(spark, tmp_path):
     assert sum(r.novel_grams for r in out.values()) == n_distinct
 
 
-def test_curate_corpus_composes_its_stage_queries(spark):
+def test_curate_corpus_composes_its_stage_queries(spark, query):
     """curate_corpus's verdicts must agree with the standalone stage
     queries it composes: quality sub-reasons match quality_gate's
     verdicts exactly, and every reason class fires on the fixture
     (benchmark, >=2 quality reasons, duplicate, contaminated, kept)."""
     from tests.conftest import SF_DIR
-    from spark_sentiment_spark.plans.pipeline_queries import (curate_corpus,
-                                                              quality_gate)
 
-    verdicts = {r.doc_id: r for r in curate_corpus(spark, SF_DIR).collect()}
-    gate = {r.doc_id: r for r in quality_gate(spark, SF_DIR).collect()}
+    verdicts = {r.doc_id: r for r in query("curate_corpus").collect()}
+    gate = {r.doc_id: r for r in query("quality_gate").collect()}
 
     q_reasons = {"too_short", "too_long", "low_alpha", "repetitive"}
     for doc_id, v in verdicts.items():
@@ -302,7 +296,7 @@ def test_curate_corpus_composes_its_stage_queries(spark):
     assert len(seen & q_reasons) >= 2, seen
 
 
-def test_token_pagerank_matches_naive_fixed_point(spark, tmp_path):
+def test_token_pagerank_matches_naive_fixed_point(spark, query, tmp_path):
     """token_pagerank vs an independent dict-based transcription of the
     same integer fixed-point iteration on a constructed corpus (star +
     chain + isolated doc). Also pins the TextRank ordering claim: the
@@ -321,7 +315,7 @@ def test_token_pagerank_matches_naive_fixed_point(spark, tmp_path):
                                                             PAGERANK_SCALE,
                                                             token_pagerank)
     got = {r.token: (r.w_out, r.rank_fp)
-           for r in token_pagerank(spark, str(tmp_path)).collect()}
+           for r in query("token_pagerank", str(tmp_path)).collect()}
 
     # independent naive implementation
     from collections import Counter
@@ -353,7 +347,7 @@ def test_token_pagerank_matches_naive_fixed_point(spark, tmp_path):
     assert all(got["hub"][1] > got[leaf][1] for leaf in "abcd")
 
 
-def test_bigram_backoff_branches_on_constructed_corpus(spark, tmp_path):
+def test_bigram_backoff_branches_on_constructed_corpus(spark, query, tmp_path):
     """All three Stupid-Backoff branches pinned by hand computation:
     seen bigram -> c12/c1; unseen bigram of seen unigrams ->
     a*(c2+1)/(N+V); unseen w2 entirely (OOV) -> a*1/(N+V). Train docs
@@ -371,10 +365,9 @@ def test_bigram_backoff_branches_on_constructed_corpus(spark, tmp_path):
               "n_chars long"
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
-    from spark_sentiment_spark.plans.pipeline_queries import (
-        BACKOFF_ALPHA, quality_bigram_backoff)
+    from spark_sentiment_spark.plans.pipeline_queries import BACKOFF_ALPHA
     got = {r.doc_id: r for r in
-           quality_bigram_backoff(spark, str(tmp_path)).collect()}
+           query("quality_bigram_backoff", str(tmp_path)).collect()}
 
     # train counts: unigrams a:2 b:2 c:2 (N=6, V=3); bigrams ab:2 ba:1 cc:1
     N, V = 6.0, 3.0
@@ -399,7 +392,7 @@ corpus_docs = st.lists(
 @PROP
 @given(docs=corpus_docs)
 @pytest.mark.slow
-def test_cluster_canonical_matches_naive_union_find(spark, docs, tmp_path):
+def test_cluster_canonical_matches_naive_union_find(spark, query, docs, tmp_path):
     """dedup_cluster_canonical vs an independent naive pipeline on random
     tiny-vocab corpora: exact shingle-set Jaccard >= 0.9 graph ->
     union-find -> keep longest (ties lowest id) per component, singletons
@@ -414,12 +407,8 @@ def test_cluster_canonical_matches_naive_union_find(spark, docs, tmp_path):
               "n_chars long"
     ).write.mode("overwrite").parquet(f"{out}/documents.parquet")
 
-    from spark_sentiment_spark.plans.dedup_queries import (
-        dedup_cluster_canonical)
-    from spark_sentiment_spark.plans.registry import release_caches
     got = {(r.component, r.canonical_doc, r.n_members, r.doc_len)
-           for r in dedup_cluster_canonical(spark, out).collect()}
-    release_caches()
+           for r in query("dedup_cluster_canonical", out).collect()}
 
     def shingles(toks):
         if len(toks) >= 3:
@@ -452,17 +441,16 @@ def test_cluster_canonical_matches_naive_union_find(spark, docs, tmp_path):
     assert got == expect, (sorted(got), sorted(expect))
 
 
-def test_token_pagerank_vocab_cap_bounds_the_graph(spark):
+def test_token_pagerank_vocab_cap_bounds_the_graph(spark, query):
     """vocab_cap must restrict the graph to the top-V tokens by corpus
     frequency (deterministic ties) and stay the identity above the
     vocabulary size."""
     from tests.conftest import SF_DIR
     from spark_sentiment_spark.plans.corpus_queries import token_pagerank
-    from spark_sentiment_spark.plans.registry import (load, release_caches)
+    from spark_sentiment_spark.plans.registry import load
     from pyspark.sql import functions as F
 
     capped = token_pagerank(spark, SF_DIR, vocab_cap=5).collect()
-    release_caches()
     assert 0 < len(capped) <= 5
 
     docs = load(spark, SF_DIR, "documents")
@@ -473,20 +461,17 @@ def test_token_pagerank_vocab_cap_bounds_the_graph(spark):
     top5 = {r.w for r in freq}
     assert {r.token for r in capped} <= top5
 
-    full = token_pagerank(spark, SF_DIR).collect()   # default cap 100k
-    release_caches()
+    full = query("token_pagerank").collect()   # default cap 100k
     assert len(full) > 5   # cap far above vocab -> identity
 
 
-def test_rollup_incremental_merge_semantics(spark, tmp_path):
+def test_rollup_incremental_merge_semantics(spark, query, tmp_path):
     """Constructed stream pinning the three merge paths the oracle can't
     isolate: a group updated by the delta (count+count, sum+sum), a
     base-only group passing through the outer join, a delta-only group
     inserted, and an all-NULL-value group staying NULL (not 0)."""
     from datetime import datetime
 
-    from spark_sentiment_spark.plans.events_queries import (
-        events_rollup_incremental)
 
     rows = [
         # (event_id, ts, user_id, event_type, value); split = Jan 2 noon
@@ -503,7 +488,7 @@ def test_rollup_incremental_merge_semantics(spark, tmp_path):
         .write.parquet(str(tmp_path / "events.parquet"))
     got = {(r["day"], r["event_type"]):
            (r["n_events"], r["total_value"], r["min_id"], r["max_id"])
-           for r in events_rollup_incremental(spark, str(tmp_path)).collect()}
+           for r in query("events_rollup_incremental", str(tmp_path)).collect()}
     assert got == {
         ("2024-01-01", "a"): (2, 4.0, 1, 2),     # base-only, passes through
         ("2024-01-01", "b"): (1, None, 3, 3),    # all-NULL sum stays NULL
@@ -512,14 +497,12 @@ def test_rollup_incremental_merge_semantics(spark, tmp_path):
     }
 
 
-def test_langid_char_ngram_separates_constructed_languages(spark, tmp_path):
+def test_langid_char_ngram_separates_constructed_languages(spark, query, tmp_path):
     """The synthetic corpus's lang labels are content-free, so the real
     check is on a constructed corpus with genuinely distinct character
     distributions: profiles trained on even doc_ids must classify every
     odd doc of each 'language' correctly (perfect diagonal), and a test
     doc sharing no trigram with any profile must fall back to 'unknown'."""
-    from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.text_queries import langid_char_ngram
 
     xx = "xqx qxq xqx qxq"
     zz = "zwz wzw zwz wzw"
@@ -533,12 +516,11 @@ def test_langid_char_ngram_separates_constructed_languages(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string, lang string") \
         .write.parquet(str(tmp_path / "documents.parquet"))
     got = {(r["lang"], r["predicted_lang"]): r["n"]
-           for r in langid_char_ngram(spark, str(tmp_path)).collect()}
-    release_caches()
+           for r in query("langid_char_ngram", str(tmp_path)).collect()}
     assert got == {("X", "X"): 2, ("Z", "Z"): 2, ("X", "unknown"): 1}
 
 
-def test_cdc_state_delete_and_order_semantics(spark, tmp_path):
+def test_cdc_state_delete_and_order_semantics(spark, query, tmp_path):
     """Constructed changelog pinning what the aggregate oracle can't
     isolate per user: the LAST op wins by (ts, event_id) — a user whose
     final event is 'error' is deleted even after earlier updates, a user
@@ -546,7 +528,6 @@ def test_cdc_state_delete_and_order_semantics(spark, tmp_path):
     untouched snapshot rows pass through."""
     from datetime import datetime
 
-    from spark_sentiment_spark.plans.events_queries import events_cdc_state
 
     t = datetime(2024, 1, 1, 12)
     t2 = datetime(2024, 1, 1, 13)
@@ -563,21 +544,19 @@ def test_cdc_state_delete_and_order_semantics(spark, tmp_path):
         .write.parquet(str(tmp_path / "customer.parquet"))
     got = {r["segment"]: (r["n_present"], r["n_deleted"], r["n_untouched"],
                           r["updated_value_sum"])
-           for r in events_cdc_state(spark, str(tmp_path)).collect()}
+           for r in query("events_cdc_state", str(tmp_path)).collect()}
     assert got == {
         "A": (1, 1, 0, 7.0),   # user 1 deleted; user 2 revived at 7.0
         "B": (2, 0, 1, 9.0),   # user 3 tie -> event 6 (9.0); user 4 untouched
     }
 
 
-def test_search_phrase_counts_overlaps_and_zero_hits(spark, tmp_path):
+def test_search_phrase_counts_overlaps_and_zero_hits(spark, query, tmp_path):
     """Positional semantics the aggregate output can't show on the real
     corpus: 'x x x' contains the phrase 'x x' TWICE (overlapping — a
     substring replace-count would say once), and probe phrases with no
     hits still report a zero row."""
-    from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.text_queries import (_PHRASES,
-                                                          search_phrase)
+    from spark_sentiment_spark.plans.text_queries import _PHRASES
 
     w1, w2 = _PHRASES[0]                      # ('table', 'scan')
     rows = [(1, f"{w1} {w1} {w1}" if w1 == w2 else f"{w1} {w2} junk"),
@@ -588,18 +567,15 @@ def test_search_phrase_counts_overlaps_and_zero_hits(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.parquet(str(tmp_path / "documents.parquet"))
     got = {r["phrase"]: (r["n_docs"], r["n_matches"])
-           for r in search_phrase(spark, str(tmp_path)).collect()}
-    release_caches()
+           for r in query("search_phrase", str(tmp_path)).collect()}
     assert got[f"{w1} {w2}"] == (3, 4)
     for a, b in _PHRASES[1:]:
         assert got[f"{a} {b}"] == (0, 0)      # zero-hit phrases report
 
 
-def test_search_boolean_requires_all_terms(spark, tmp_path):
+def test_search_boolean_requires_all_terms(spark, query, tmp_path):
     """AND semantics: a doc with all but one query term must not match."""
-    from spark_sentiment_spark.plans.registry import release_caches
-    from spark_sentiment_spark.plans.text_queries import (_BOOL_QUERIES,
-                                                          search_boolean_and)
+    from spark_sentiment_spark.plans.text_queries import _BOOL_QUERIES
 
     qid, terms = _BOOL_QUERIES[0]             # ('q1', [spark, join, window])
     rows = [(1, " ".join(terms)),             # all terms -> match
@@ -608,16 +584,14 @@ def test_search_boolean_requires_all_terms(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.parquet(str(tmp_path / "documents.parquet"))
     got = {r["qid"]: (r["n_docs"], r["first_doc"], r["last_doc"])
-           for r in search_boolean_and(spark, str(tmp_path)).collect()}
-    release_caches()
+           for r in query("search_boolean_and", str(tmp_path)).collect()}
     assert got[qid] == (2, 1, 3)
 
 
-def test_audit_referential_detects_orphans(spark, tmp_path):
+def test_audit_referential_detects_orphans(spark, query, tmp_path):
     """The testdata is referentially clean (all-zero orphans), so the
     detection path is pinned on a constructed broken schema: known
     orphan counts on two edges, zero on the rest."""
-    from spark_sentiment_spark.plans.relational import audit_referential
     from tests.conftest import SF_DIR
 
     # copy the small tables, then break two edges
@@ -635,7 +609,7 @@ def test_audit_referential_detects_orphans(spark, tmp_path):
     assert n_orphaned > 0
 
     got = {r["fk"]: (r["n_child"], r["n_orphans"])
-           for r in audit_referential(spark, str(tmp_path)).collect()}
+           for r in query("audit_referential", str(tmp_path)).collect()}
     assert got["lineitem->orders"] == (100, n_orphaned)
     assert got["lineitem->part"][1] == 0
     assert got["orders->customer"][1] == 0
@@ -647,23 +621,21 @@ _simjoin_texts = st.lists(st.text(alphabet="ab ", min_size=0, max_size=30),
 
 @PROP
 @given(texts=_simjoin_texts)
-def test_simjoin_prefix_matches_naive_on_random_corpora(spark, texts,
+def test_simjoin_prefix_matches_naive_on_random_corpora(spark, query, texts,
                                                         tmp_path_factory):
     """The prefix filter's losslessness THEOREM on generated corpora:
     dedup_simjoin_prefix (prefix-pruned candidates) must equal a naive
     python all-pairs bigram-set Jaccard join — including empty docs,
     single-token docs, duplicate texts, and document-frequency ties."""
     from spark_sentiment_spark.plans.dedup_queries import (
-        _SIMJOIN_DEN, _SIMJOIN_NUM, dedup_simjoin_prefix)
-    from spark_sentiment_spark.plans.registry import release_caches
+        _SIMJOIN_DEN, _SIMJOIN_NUM)
 
     tmp = tmp_path_factory.mktemp("simprop")
     rows = [(i, t) for i, t in enumerate(texts)]
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.mode("overwrite").parquet(str(tmp / "documents.parquet"))
     got = {(r["doc_a"], r["doc_b"]): (r["n_shared"], r["n_union"])
-           for r in dedup_simjoin_prefix(spark, str(tmp)).collect()}
-    release_caches()
+           for r in query("dedup_simjoin_prefix", str(tmp)).collect()}
 
     def bigrams(text):
         t = text.lower().split(" ")
@@ -693,14 +665,13 @@ _cdc_events = st.lists(
 
 @PROP
 @given(evs=_cdc_events)
-def test_cdc_state_matches_python_fold(spark, evs, tmp_path_factory):
+def test_cdc_state_matches_python_fold(spark, query, evs, tmp_path_factory):
     """events_cdc_state vs an independent per-user python fold over
     random changelogs: last op by (ts, event_id) wins, 'error' deletes,
     NULL values pass through the sum untouched, untouched snapshot rows
     count as present."""
     from datetime import datetime, timedelta
 
-    from spark_sentiment_spark.plans.events_queries import events_cdc_state
 
     tmp = tmp_path_factory.mktemp("cdcprop")
     base = datetime(2024, 1, 1)
@@ -717,7 +688,7 @@ def test_cdc_state_matches_python_fold(spark, evs, tmp_path_factory):
 
     got = {r["segment"]: (r["n_present"], r["n_deleted"], r["n_untouched"],
                           r["updated_value_sum"])
-           for r in events_cdc_state(spark, str(tmp)).collect()}
+           for r in query("events_cdc_state", str(tmp)).collect()}
 
     last = {}
     for eid, ts, u, ty, v in rows:
@@ -752,7 +723,7 @@ _rd_events = st.lists(
 
 @PROP
 @given(evs=_rd_events)
-def test_rolling_distinct_matches_python_windows(spark, evs,
+def test_rolling_distinct_matches_python_windows(spark, query, evs,
                                                  tmp_path_factory):
     """events_rolling_distinct vs per-event python set arithmetic on
     random streams: the trailing-hour distinct-type count is over ALL
@@ -760,8 +731,6 @@ def test_rolling_distinct_matches_python_windows(spark, evs,
     duplicate timestamps see each other regardless of row order."""
     from datetime import datetime, timedelta
 
-    from spark_sentiment_spark.plans.events_queries import (
-        events_rolling_distinct)
 
     tmp = tmp_path_factory.mktemp("rdprop")
     base = datetime(2024, 1, 1)
@@ -772,7 +741,7 @@ def test_rolling_distinct_matches_python_windows(spark, evs,
               " event_type string, value double, props string") \
         .write.mode("overwrite").parquet(str(tmp / "events.parquet"))
     got = {r["event_id"]: r["n_types_1h"]
-           for r in events_rolling_distinct(spark, str(tmp)).collect()}
+           for r in query("events_rolling_distinct", str(tmp)).collect()}
     want = {}
     for eid, ts, u, ty, _, _ in rows:
         want[eid] = len({t2 for _, ts2, u2, t2, _, _ in rows
@@ -780,7 +749,7 @@ def test_rolling_distinct_matches_python_windows(spark, evs,
     assert got == want
 
 
-# --- link_parts_fuzzy / token_burstiness invariants (round 8) ---------------
+# --- link_parts_fuzzy / token_burstiness invariants -------------------------
 
 _words = st.text(alphabet="abcde ", min_size=0, max_size=12)
 
@@ -820,10 +789,10 @@ def test_burstiness_integer_formula_matches_float_vmr(spark, counts):
         assert got == 0
 
 
-# --- curation-pass stage consistency (round 12) ------------------------------
+# --- curation-pass stage consistency -----------------------------------------
 
 
-def test_curate_gopher_gate_stage_agrees_with_quality_gopher_rules(spark):
+def test_curate_gopher_gate_stage_agrees_with_quality_gopher_rules(spark, query):
     """The composed Gopher curation pass and the standalone published
     gate must be the SAME gate: on the fixture, every non-benchmark doc
     the standalone gate rejects carries exactly the standalone reason as
@@ -832,13 +801,11 @@ def test_curate_gopher_gate_stage_agrees_with_quality_gopher_rules(spark):
     means the composed pass paraphrased the published thresholds instead
     of reusing them."""
     from tests.conftest import SF_DIR
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
 
-    all_queries()
     gate = {r["doc_id"]: r for r in
-            REGISTRY["quality_gopher_rules"].fn(spark, SF_DIR).collect()}
+            query("quality_gopher_rules").collect()}
     cur = {r["doc_id"]: r["reason"] for r in
-           REGISTRY["curate_corpus_gopher"].fn(spark, SF_DIR).collect()}
+           query("curate_corpus_gopher").collect()}
     assert set(cur) == set(gate) | {d for d in cur if d < 5}
     for doc_id, reason in cur.items():
         if doc_id < 5:

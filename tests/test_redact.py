@@ -5,6 +5,7 @@ no PII-like spans (no digits/@/http at any SF)."""
 from pyspark.sql import functions as F
 
 from spark_sentiment_spark.functions.redact import pii_counts, redact_pii
+from tests.plan_walk import nodes, python_nodes
 
 ROWS = [
     ("contact bob.smith+spam@example.co.uk for details", "<EMAIL>"),
@@ -51,9 +52,7 @@ def test_counts_match_tags(spark):
 
 def test_no_python_nodes(spark):
     df = spark.createDataFrame([(1, "a@b.co x")], "id long, text string")
-    plan = (df.select(redact_pii("text").alias("s"))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Python" not in plan and "BatchEval" not in plan
+    assert not python_nodes(nodes(df.select(redact_pii("text").alias("s"))))
 
 
 def test_mixed_document_all_categories(spark):

@@ -7,7 +7,7 @@ from tests.conftest import SF_DIR
 def _py_rolling(spark, texts):
     """Pure-Python reference of the same fold — the md5-derived per-token
     hash is engine-independent (no Spark hash involved), matching the
-    round-4 oracle-able formulation."""
+    oracle-able formulation."""
     import hashlib
 
     B, p = 1_000_003, (1 << 31) - 1
@@ -24,22 +24,18 @@ def _py_rolling(spark, texts):
     return out
 
 
-def test_rolling_hash_matches_python_fold(spark):
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
+def test_rolling_hash_matches_python_fold(spark, query):
 
-    all_queries()
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(20)
     texts = [r["text"] for r in docs.orderBy("doc_id").collect()]
     got = [r["rolling_hash"] for r in
-           REGISTRY["doc_rolling_hash"].fn(spark, SF_DIR).orderBy("doc_id")
+           query("doc_rolling_hash").orderBy("doc_id")
            .limit(20).collect()]
     assert got == _py_rolling(spark, texts)
 
 
-def test_rolling_hash_is_order_sensitive(spark):
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
+def test_rolling_hash_is_order_sensitive(spark, query):
 
-    all_queries()
     import os
     import tempfile
 
@@ -49,7 +45,7 @@ def test_rolling_hash_is_order_sensitive(spark):
          (1, "gamma beta alpha", "en", "s", 16)],
         "doc_id long, text string, lang string, source string, n_chars long")
     df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    out = REGISTRY["doc_rolling_hash"].fn(spark, d).collect()
+    out = query("doc_rolling_hash", d).collect()
     hashes = {r["doc_id"]: r["rolling_hash"] for r in out}
     assert hashes[0] != hashes[1]   # same bag of words, different order
 

@@ -5,22 +5,17 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 
 
-def test_stratified_sample_deterministic(spark):
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
-
-    all_queries()
-    fn = REGISTRY["sample_stratified"].fn
-    a = fn(spark, SF_DIR).collect()
-    b = fn(spark, SF_DIR).collect()
+def test_stratified_sample_deterministic(query):
+    a = query("sample_stratified").collect()
+    b = query("sample_stratified").collect()
     assert sorted(r.doc_id for r in a) == sorted(r.doc_id for r in b)
     assert len(a) > 0
 
 
-def test_stratified_sample_rates(spark):
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries, load
+def test_stratified_sample_rates(spark, query):
+    from spark_sentiment_spark.plans.registry import load
 
-    all_queries()
-    got = REGISTRY["sample_stratified"].fn(spark, SF_DIR)
+    got = query("sample_stratified")
     docs = load(spark, SF_DIR, "documents")
     totals = {r["lang"]: r["n"] for r in
               docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}

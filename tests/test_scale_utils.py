@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
+from tests.plan_walk import exchanges, nodes
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -23,8 +24,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = bucketed_join(spark, "li_b", "ord_b", ["l_orderkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan          # co-located buckets: no shuffle
+        # co-located buckets: no shuffle
+        assert not exchanges(nodes(joined))
         # same result as the plain join
         plain = li.join(orders, "l_orderkey")
         assert joined.count() == plain.count()
@@ -65,11 +66,9 @@ def test_salted_join_matches_plain(spark):
     assert got.exceptAll(want).count() == 0
 
 
-def test_approx_distinct_error_bound(spark):
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
+def test_approx_distinct_error_bound(spark, query):
 
-    all_queries()
-    out = REGISTRY["agg_approx_distinct"].fn(spark, SF_DIR).collect()
+    out = query("agg_approx_distinct").collect()
     for r in out:
         rel_err = abs(r["approx_parts"] - r["exact_parts"]) / max(r["exact_parts"], 1)
         assert rel_err < 0.1, f"{r['l_returnflag']}: {rel_err}"

@@ -5,10 +5,9 @@ import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
-from spark_sentiment_spark.plans.registry import REGISTRY, all_queries, release_caches
+from spark_sentiment_spark.plans.registry import REGISTRY
 from tests.conftest import SF_DIR
 
-all_queries()
 
 
 def _exact_top_pairs(k: int = 200) -> set:
@@ -25,26 +24,24 @@ def _exact_top_pairs(k: int = 200) -> set:
     }
 
 
-def test_ann_lsh_recall_floor(spark):
+def test_ann_lsh_recall_floor(spark, query):
     """recall@200 of the multi-table LSH vs brute-force top-200 pairs.
     The corpus' top pairs sit at cosine ~0.4 — LSH's hardest regime (the
     12x6 config catches such a pair w.p. ~0.54; at near-dup similarities
     >=0.8 the same config exceeds 0.99). The floor pins that the banding /
     OR-amplification machinery works; it is not a near-dup recall claim."""
-    got = REGISTRY["ann_lsh_topk"].fn(spark, SF_DIR).collect()
-    release_caches()
+    got = query("ann_lsh_topk").collect()
     lsh_pairs = {(min(r.vec_a, r.vec_b), max(r.vec_a, r.vec_b)) for r in got}
     exact = _exact_top_pairs(200)
     recall = len(exact & lsh_pairs) / len(exact)
     assert recall >= 0.45, f"LSH recall@200 degraded to {recall:.3f}"
 
 
-def test_ann_ivf_recall_floor(spark):
+def test_ann_ivf_recall_floor(spark, query):
     """Per-query recall@10 of the IVF (probe 2 of 16 cells) path vs the
     exact KNN query, averaged over the 5 query vectors."""
-    exact = REGISTRY["knn_cosine_topk"].fn(spark, SF_DIR).collect()
-    approx = REGISTRY["ann_ivf_topk"].fn(spark, SF_DIR).collect()
-    release_caches()
+    exact = query("knn_cosine_topk").collect()
+    approx = query("ann_ivf_topk").collect()
     exact_by_q: dict = {}
     for r in exact:
         exact_by_q.setdefault(r.qid, set()).add(r.vec_id)
@@ -59,7 +56,7 @@ def test_ann_ivf_recall_floor(spark):
     assert mean_recall >= 0.5, f"IVF recall@10 degraded to {mean_recall:.3f}"
 
 
-def test_knn_classify_ivf_agreement_floor(spark):
+def test_knn_classify_ivf_agreement_floor(spark, query):
     """The IVF-backed classifier must agree with the exact full-scan
     classifier on a pinned fraction of the 50 queries — the vote layer
     is identical, so disagreement measures only candidate-recall loss in
@@ -70,9 +67,8 @@ def test_knn_classify_ivf_agreement_floor(spark):
     at sf0.01 and plateaus ~0.52 even at probe 8, so the floor pins the
     machinery, not a semantic-recall claim. Deterministic
     (content-addressed seed centroids), so the number cannot drift."""
-    exact = REGISTRY["knn_classify"].fn(spark, SF_DIR).collect()
-    ivf = REGISTRY["knn_classify_ivf"].fn(spark, SF_DIR).collect()
-    release_caches()
+    exact = query("knn_classify").collect()
+    ivf = query("knn_classify_ivf").collect()
     exact_pred = {r.qid: r.pred_label for r in exact}
     ivf_pred = {r.qid: r.pred_label for r in ivf}
     assert set(ivf_pred) == set(exact_pred)   # every query still classified
@@ -81,12 +77,11 @@ def test_knn_classify_ivf_agreement_floor(spark):
         f"IVF classifier agreement degraded to {agree}/{len(exact_pred)}")
 
 
-def test_quantized_knn_recall_and_error(spark):
+def test_quantized_knn_recall_and_error(spark, query):
     """int8 quantization quality pinned: reconstruction cosine error tiny,
     and brute-force top-10 neighbors computed on dequantized vectors agree
     with float top-10 at recall >= 0.9 (averaged over 5 queries)."""
-    rows = REGISTRY["embedding_quantize"].fn(spark, SF_DIR).collect()
-    release_caches()
+    rows = query("embedding_quantize").collect()
     assert all(r.cos_err < 5e-4 for r in rows)
 
     t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
@@ -109,19 +104,14 @@ def test_quantized_knn_recall_and_error(spark):
     assert sum(recalls) / len(recalls) >= 0.9
 
 
-def test_pq_recall_floor_vs_brute(spark):
+def test_pq_recall_floor_vs_brute(spark, query):
     """PQ ADC + exact re-rank must recall >=0.7 of the brute-force top-10
     (measured 0.84 at sf0.01 with the default rerank depth; floor leaves
     margin for the codebook sample draw)."""
     from collections import defaultdict
 
-    from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                      release_caches)
-
-    all_queries()
-    brute = REGISTRY["knn_cosine_topk"].fn(spark, SF_DIR).collect()
-    pq = REGISTRY["ann_pq_topk"].fn(spark, SF_DIR).collect()
-    release_caches()
+    brute = query("knn_cosine_topk").collect()
+    pq = query("ann_pq_topk").collect()
     b, t = defaultdict(set), defaultdict(set)
     for r in brute:
         b[r["qid"]].add(r["vec_id"])
@@ -145,7 +135,7 @@ def _brute_pairs_at_tau(tau: float = 0.4) -> set:
     }
 
 
-def test_multiprobe_recall_beats_home_only(spark):
+def test_multiprobe_recall_beats_home_only(spark, query):
     """The POINT of multi-probe: flipping the lowest-|margin| bits must
     recover pairs the 4 home buckets alone miss, and the full query's
     recall vs the exact >=0.4 pair set clears a pinned floor. Both
@@ -156,8 +146,7 @@ def test_multiprobe_recall_beats_home_only(spark):
         multiprobe_candidates)
 
     exact = _brute_pairs_at_tau(0.4)
-    got = REGISTRY["dedup_embedding_multiprobe"].fn(spark, SF_DIR).collect()
-    release_caches()
+    got = query("dedup_embedding_multiprobe").collect()
     mp_pairs = {(r.vec_a, r.vec_b) for r in got}
     assert mp_pairs <= exact          # re-rank admits only true pairs
     recall = len(mp_pairs) / len(exact)
@@ -165,19 +154,18 @@ def test_multiprobe_recall_beats_home_only(spark):
     emb = load(spark, SF_DIR, "embeddings")
     home_cand = {(r.vec_a, r.vec_b)
                  for r in multiprobe_candidates(emb, n_flips=0).collect()}
-    release_caches()
     home_recall = len(exact & home_cand) / len(exact)
     assert recall > home_recall, (
         f"multi-probe {recall:.3f} <= home-only {home_recall:.3f}")
     assert recall >= 0.3, f"multiprobe recall degraded to {recall:.3f}"
 
 
+@pytest.mark.usefixtures("release_caches")
 def test_multiprobe_candidate_bound_scales_linearly(spark):
     """Candidate-pair growth under ×4 corpus replication with per-replica
     sign-flipped dimensions: within a replica all pairwise dots are
     preserved (s²=1), across replicas they are scrambled — so true pair
-    structure grows ×4 and candidate pairs must too. Round-6 VERDICT ask
-    (b). At FIXED planes the growth IS quadratic (bucket count constant →
+    structure grows ×4 and candidate pairs must too. At FIXED planes the growth IS quadratic (bucket count constant →
     occupancy ×4 → in-bucket pairs ×16; asserted below as the
     counter-example), which is exactly why the query applies the
     adaptive-planes rule: +log2(k) planes per ×k data holds the bound
@@ -208,15 +196,14 @@ def test_multiprobe_candidate_bound_scales_linearly(spark):
     n4_fixed = multiprobe_candidates(make_df(k)).count()
     # adaptive rule: ×4 data → +2 planes → bucket count ×4
     n4 = multiprobe_candidates(make_df(k), n_planes=8).count()
-    release_caches()
     assert n4_fixed > 8.0 * n1, "fixed-P counter-example vanished"
     assert n4 <= 5.0 * n1, (
         f"candidates grew {n4 / max(n1, 1):.1f}x for {k}x data "
         f"({n1} -> {n4}) under adaptive planes — super-linear occupancy")
 
 
-def test_knn_vote_tie_breaks_to_smaller_label(spark, tmp_path):
-    """Round-8 self-audit pattern (a) pin: the vote argmax orders by
+def test_knn_vote_tie_breaks_to_smaller_label(spark, query, tmp_path):
+    """Tie-order pin: the vote argmax orders by
     (n_votes DESC, label) — `label` is unique per (qid, label) vote row
     by construction, but when two labels TIE on votes the trailing key
     is the only separator, and the fixture corpus never produces an
@@ -235,17 +222,18 @@ def test_knn_vote_tie_breaks_to_smaller_label(spark, tmp_path):
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
     out = {r.qid: (r.pred_label, r.n_votes)
-           for r in REGISTRY["knn_classify"].fn(spark, str(tmp_path))
+           for r in query("knn_classify", str(tmp_path))
            .collect()}
     assert out[0] == (1, 5)  # 5/5 tie -> smaller label wins
     con = duckdb.connect()
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{tmp_path}/embeddings.parquet/*.parquet')")
-    ok, msg = compare(REGISTRY["knn_classify"].fn(spark, str(tmp_path)),
+    ok, msg = compare(query("knn_classify", str(tmp_path)),
                       con, REGISTRY["knn_classify"].sql, "knn_classify")
     assert ok, msg
 
 
+@pytest.mark.usefixtures("release_caches")
 @pytest.mark.slow
 def test_multiprobe_recall_at_real_neardup_thresholds(spark):
     """The LSH family's headline claim — 'at the cosine >= 0.8-0.9
@@ -280,13 +268,12 @@ def test_multiprobe_recall_at_real_neardup_thresholds(spark):
         npl = max(6, math.ceil(math.log2(len(rows) / 16)))
         cand = {(r.vec_a, r.vec_b)
                 for r in multiprobe_candidates(df, n_planes=npl).collect()}
-        release_caches()
         planted = {(2 * i, 2 * i + 1) for i in range(len(V))}
         recall = len(planted & cand) / len(planted)
         assert recall >= floor, (eps, recall)
 
 
-def test_ann_ivfpq_recall_floor(spark):
+def test_ann_ivfpq_recall_floor(spark, query):
     """Per-query recall@10 of the COMPOSED IVF+PQ persisted index vs the
     exact KNN query. Two approximation layers stack: the coarse probe
     (3 of 16 cells) bounds recall at the IVF layer's 0.56, and the
@@ -295,10 +282,9 @@ def test_ann_ivfpq_recall_floor(spark):
     a DETERMINISTIC 0.42 (content-addressed seeds: the number cannot
     drift). The floor pins both layers' machinery, not a semantic-recall
     claim."""
-    exact = REGISTRY["knn_cosine_topk"].fn(spark, SF_DIR).collect()
-    approx = REGISTRY["ann_ivfpq_persisted_probe"].fn(spark, SF_DIR).collect()
-    ivf = REGISTRY["ann_ivf_topk"].fn(spark, SF_DIR).collect()
-    release_caches()
+    exact = query("knn_cosine_topk").collect()
+    approx = query("ann_ivfpq_persisted_probe").collect()
+    ivf = query("ann_ivf_topk").collect()
     exact_by_q: dict = {}
     for r in exact:
         exact_by_q.setdefault(r.qid, set()).add(r.vec_id)
@@ -318,7 +304,7 @@ def test_ann_ivfpq_recall_floor(spark):
     assert sorted((r.qid, r.vec_id) for r in approx) != ivf_ids
 
 
-def test_ann_ivfpq_probe_knob_monotone_and_degenerates_to_flat_pq(spark):
+def test_ann_ivfpq_probe_knob_monotone_and_degenerates_to_flat_pq(spark, query):
     """The composed index's two knobs behave like the textbook says:
     with rerank deep enough to absorb the candidates (200), recall@10
     rises monotonically with probe width (measured 0.56 → 0.76 → 0.86
@@ -333,17 +319,15 @@ def test_ann_ivfpq_probe_knob_monotone_and_degenerates_to_flat_pq(spark):
     pin holds rerank at 200.)"""
     from pyspark.sql import functions as F
 
-    from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                      load, release_caches)
+    from spark_sentiment_spark.plans.registry import load
     from spark_sentiment_spark.operators.vectors import (
         PQ_K, as_double, ivfpq_probe, ivfpq_stage_index, norm)
 
-    all_queries()
     exact_by_q: dict = {}
-    for r in REGISTRY["knn_cosine_topk"].fn(spark, SF_DIR).collect():
+    for r in query("knn_cosine_topk").collect():
         exact_by_q.setdefault(r.qid, set()).add(r.vec_id)
     flat = [tuple(r) for r in
-            REGISTRY["ann_pq_topk"].fn(spark, SF_DIR).collect()]
+            query("ann_pq_topk").collect()]
 
     emb = load(spark, SF_DIR, "embeddings")
     e = as_double("embedding")
@@ -358,9 +342,8 @@ def test_ann_ivfpq_probe_knob_monotone_and_degenerates_to_flat_pq(spark):
         return sum(len(exact_by_q[q] & by_q.get(q, set()))
                    / len(exact_by_q[q]) for q in exact_by_q) / len(exact_by_q)
 
-    got = {p: ivfpq_probe(spark, vecs, base, n_codes, 200, 10, n_probe=p)
+    got = {p: ivfpq_probe(spark, vecs, base, n_codes, 200, n_probe=p)
            .collect() for p in (3, 6, PQ_K)}
-    release_caches()
     assert recall(got[3]) <= recall(got[6]) <= recall(got[PQ_K])
     assert recall(got[PQ_K]) >= 0.8
     assert [tuple(r) for r in got[PQ_K]] == flat  # full width == flat PQ

@@ -7,11 +7,8 @@ from itertools import combinations
 
 from pyspark.sql import functions as F
 
-from spark_sentiment_spark.plans.dedup_queries import (_SIMJOIN_DEN,
-                                                       _SIMJOIN_NUM,
-                                                       _simjoin_candidates,
-                                                       _simjoin_grams,
-                                                       dedup_simjoin_prefix)
+from spark_sentiment_spark.plans.dedup_queries import (
+    _SIMJOIN_DEN, _SIMJOIN_NUM, _simjoin_candidates, _simjoin_grams)
 from tests.conftest import SF_DIR
 
 
@@ -22,7 +19,7 @@ def _bigrams(text):
     return {f"{a} {b}" for a, b in zip(t, t[1:])}
 
 
-def test_simjoin_exact_at_threshold_boundary(spark, tmp_path):
+def test_simjoin_exact_at_threshold_boundary(spark, query, tmp_path):
     """A pair at exactly Jaccard 3/5 must be INCLUDED (>=), disjoint and
     sub-threshold pairs excluded, duplicates at 1.0 included — checked
     against an independent set-arithmetic reimplementation."""
@@ -36,7 +33,7 @@ def test_simjoin_exact_at_threshold_boundary(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.parquet(str(tmp_path / "documents.parquet"))
     got = {(r["doc_a"], r["doc_b"]): (r["n_shared"], r["n_union"])
-           for r in dedup_simjoin_prefix(spark, str(tmp_path)).collect()}
+           for r in query("dedup_simjoin_prefix", str(tmp_path)).collect()}
 
     sets = {i: _bigrams(t) for i, t in rows}
     want = {}
@@ -49,7 +46,7 @@ def test_simjoin_exact_at_threshold_boundary(spark, tmp_path):
     assert got == want
 
 
-def test_prefix_filter_shrinks_candidates(spark):
+def test_prefix_filter_shrinks_candidates(spark, query):
     """On the real corpus the prefix self-join must produce strictly
     fewer candidate pairs than the naive shared-gram self-join, while
     still containing every surviving pair (losslessness, checked against
@@ -69,23 +66,18 @@ def test_prefix_filter_shrinks_candidates(spark):
         n_cand, n_naive = cand.count(), naive.count()
         assert n_cand < n_naive, (n_cand, n_naive)
 
-        from spark_sentiment_spark.plans.registry import release_caches
-        out = dedup_simjoin_prefix(spark, SF_DIR).select("doc_a", "doc_b")
+        out = query("dedup_simjoin_prefix").select("doc_a", "doc_b")
         missing = out.join(cand, ["doc_a", "doc_b"], "left_anti").count()
-        release_caches()
         assert missing == 0
     finally:
         tok.unpersist()
         cand.unpersist()
 
 
-def test_containment_is_directional(spark, tmp_path):
+def test_containment_is_directional(spark, query, tmp_path):
     """A short doc quoted inside a long one must fire src=short -> dst=long
     (containment 1.0) but NOT the reverse (the long doc is mostly novel),
     and a doc overlapping below 3/4 fires in neither direction."""
-    from spark_sentiment_spark.plans.dedup_queries import (
-        dedup_containment_prefix)
-    from spark_sentiment_spark.plans.registry import release_caches
 
     rows = [
         (1, "a b c d"),                         # grams {ab,bc,cd}: the quote
@@ -95,6 +87,5 @@ def test_containment_is_directional(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.parquet(str(tmp_path / "documents.parquet"))
     got = {(r["src"], r["dst"]): r["containment"]
-           for r in dedup_containment_prefix(spark, str(tmp_path)).collect()}
-    release_caches()
+           for r in query("dedup_containment_prefix", str(tmp_path)).collect()}
     assert got == {(1, 2): 1.0}

@@ -95,7 +95,7 @@ def test_matches_duckdb_oracle_on_handbuilt_corpus(spark):
     assert ok, msg
 
 
-def test_sentence_dedup_keeps_global_first_occurrence(spark):
+def test_sentence_dedup_keeps_global_first_occurrence(spark, query):
     """dedup_sentence_exact on a hand-built corpus: the boilerplate
     sentence survives only in the earliest (doc_id, position); documents
     rebuild from survivors in order; an all-duplicate doc rebuilds to
@@ -115,13 +115,11 @@ def test_sentence_dedup_keeps_global_first_occurrence(spark):
     pdf = pd.DataFrame(rows)
     import tempfile
 
-    from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
-    all_queries()
     with tempfile.TemporaryDirectory() as d:
         spark.createDataFrame(pdf).write.mode("overwrite") \
             .parquet(f"{d}/documents.parquet")
         out = {r.doc_id: r.asDict()
-               for r in REGISTRY["dedup_sentence_exact"].fn(spark, d)
+               for r in query("dedup_sentence_exact", d)
                .collect()}
     assert out[1]["kept_text"] == f"{boiler}. Unique alpha. Unique beta"
     assert out[2]["kept_text"] == "Unique gamma. Unique delta"
@@ -131,11 +129,10 @@ def test_sentence_dedup_keeps_global_first_occurrence(spark):
 
     con = duckdb.connect()
     con.register("documents", pdf)
-    from spark_sentiment_spark.plans.dedup_queries import dedup_sentence_exact
     with tempfile.TemporaryDirectory() as d:
         spark.createDataFrame(pdf).write.mode("overwrite") \
             .parquet(f"{d}/documents.parquet")
-        ok, msg = compare(dedup_sentence_exact(spark, d), con,
+        ok, msg = compare(query("dedup_sentence_exact", d), con,
                           SENTENCE_DEDUP_SQL, "dedup_sentence_exact")
     con.close()
     assert ok, msg

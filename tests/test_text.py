@@ -11,6 +11,7 @@ from spark_sentiment_spark.functions.text import (
     emoji_to_word_col,
     remove_stopwords_col,
 )
+from tests.plan_walk import expressions, walk
 
 PARSER_CONFS = [
     {},
@@ -54,12 +55,15 @@ def test_emoji_to_word_matches_python_substitution(spark, parser_conf):
 
 def test_lexicon_literals_are_folded_out_of_the_row_path(spark):
     df = spark.createDataFrame([("x",)], "s string")
-    # Aliased, so the plan string holds no name derived from the
-    # unoptimized expression.
     plan = (df.select(emoji_to_word_col("s").alias("e"),
                       remove_stopwords_col("s").alias("w"))
-            ._jdf.queryExecution().optimizedPlan().toString())
-    assert "from_json" not in plan and "jsontostructs" not in plan.lower()
+            ._jdf.queryExecution().optimizedPlan())
+    # no JSON parse left: neither the expression nor an invoke of its
+    # evaluator
+    parsers = [e.nodeName() for n in walk(plan) for e in expressions(n)
+               if "JsonToStructs" in e.nodeName()
+               or "JsonToStructs" in e.dataType().toString()]
+    assert not parsers, parsers
 
 
 def test_remove_stopwords_matches_python_filter(spark, parser_conf):
@@ -81,22 +85,37 @@ def test_clean_source_build_stays_under_500_py4j_commands(spark,
     """Building the tweet-cleaning Column made about 8,800 py4j commands
     when every emoji and stop word was its own ``F.lit``. The first build in
     a process also reads the stop words from the JVM, once; the guard
-    counts a build after it. Earlier tests' unreachable py4j objects are
-    collected first: their detach messages would count in the window."""
+    counts a build after it.
+
+    The window counts the building thread's commands only, with the cyclic
+    garbage collector held off. A collection inside the window sends the
+    detach messages of earlier tests' unreachable py4j objects, and other
+    threads (a streaming query's foreachBatch callbacks, a progress
+    listener) send commands of their own; neither is the build's cost."""
+    import collections
     import gc
+    import threading
 
     df = spark.createDataFrame([("RT @a :) the best http://x",)], "t string")
     clean_source(df, "t", "out", stem=True)
     gc.collect()
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    builder = threading.get_ident()
     calls = []
 
-    def counting(*args, **kwargs):
-        calls.append(1)
-        return send(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        calls.append((threading.get_ident(), command.split("\n", 1)[0]))
+        return send(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
-    clean_source(df, "t", "out", stem=True)
-    monkeypatch.undo()
-    assert len(calls) < 500, len(calls)
+    gc.disable()
+    try:
+        clean_source(df, "t", "out", stem=True)
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+    own = [kind for thread, kind in calls if thread == builder]
+    others = collections.Counter(kind for thread, kind in calls
+                                 if thread != builder)
+    assert len(own) < 500, (len(own), collections.Counter(own), others)
