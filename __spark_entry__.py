@@ -15,11 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship on /root/testdata/sf0.001; driver checks rows>0.
 
-    Since round 5 this is the two-method comparison frame: the native
-    word-score plan joined with the MLlib model-scoring path
-    (train → save → analyze(method="mlib"), M12+S17), so the driver's
-    smoke run exercises BOTH analysis entry points every round —
-    (doc_id, sentiment, computed)."""
+    This is the two-method comparison frame: the native word-score plan
+    joined with the MLlib model-scoring path (train → save →
+    analyze(method="mlib"), M12+S17), so one smoke run of ``entry``
+    exercises BOTH analysis entry points — (doc_id, sentiment,
+    computed)."""
     from spark_sentiment_spark.plans.registry import all_queries
 
     qs = all_queries()

@@ -15,7 +15,8 @@ Modes:
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect), after one untimed warm-up, and timed --repeats times
-with release_caches() between runs. The headline line carries {"metric",
+in a registry run each, so what one run cached or staged is released
+before the next. The headline line carries {"metric",
 "value", "unit", "queries", "queries_median", "total_median", "sf"};
 every other timing line is {"query", "scale", "min", "median", "runs"}.
 For a core-scaling slope, run the same command under two
@@ -38,7 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from spark_sentiment_spark.plans.registry import (  # noqa: E402
-    FACT_KEYS, all_queries, bench_queries, release_caches)
+    FACT_KEYS, all_queries, bench_queries, run)
 
 #: Whole-stage codegen is off because at local bench scale (≤600k rows)
 #: Janino + HotSpot compilation of fused stage classes is fixed overhead
@@ -81,8 +82,8 @@ def warm_up(spark, build) -> None:
     forks one worker per core; pay that here too."""
     from pyspark.sql.functions import col, pandas_udf
 
-    force(build())
-    release_caches()
+    with run():
+        force(build())
     _warm = pandas_udf(lambda s: s, "double")
     spark.range(spark.sparkContext.defaultParallelism * 4).select(
         _warm(col("id").cast("double"))).collect()
@@ -96,10 +97,10 @@ def timed(build, repeats: int) -> dict:
     regression."""
     runs = []
     for _ in range(repeats):
-        t0 = time.perf_counter()
-        force(build())
-        runs.append(round(time.perf_counter() - t0, 3))
-        release_caches()  # one run's caches must not skew the next
+        with run():  # one run's caches must not skew the next
+            t0 = time.perf_counter()
+            force(build())
+            runs.append(round(time.perf_counter() - t0, 3))
     return {"min": min(runs), "median": round(statistics.median(runs), 3),
             "runs": runs}
 
@@ -167,10 +168,10 @@ def parser() -> argparse.ArgumentParser:
 def explain(spark, queries, names, sf_dir: str, out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        df = queries[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-        release_caches()
+        with run():
+            df = queries[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
         path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Boundary-proximity audit for rounded aggregates — round-14 verdict item 3.
+"""Boundary-proximity audit for rounded aggregates.
 
 The order-sensitive `round(sum(double), 2)` class diverged between Spark and
 DuckDB when an aggregate's pre-rounding value sat within summation noise of a
@@ -7,8 +7,8 @@ half-ulp rounding boundary (q1 at sf0.1; the hand audit then found one q3
 group EXACTLY on a half-cent boundary, masked only by its top-10 cut). The
 fix converted the money sums to the exact DECIMAL(27,s) per-row idiom. This
 script makes that hand audit permanent: a new money query that reintroduces
-the order-sensitive class gets flagged at round close instead of diverging at
-some future SF.
+the order-sensitive class gets flagged when it is added instead of diverging
+at some future SF.
 
 For every registered oracle, it finds each `round(X, d)` whose argument
 contains a `sum(`, classifies the idiom —
@@ -114,7 +114,7 @@ def classify(expr: str) -> str:
     BIGINT)) — the integer sum is exact and order-independent; the final
     divide+round sees the identical double on both engines, so even an
     on-boundary group (q1 sum_disc_price at sf0.1, dist 0.0) resolves
-    identically (verified green at sf0.001/0.01/0.1 since round 14).
+    identically (verified green at sf0.001/0.01/0.1).
     DOUBLE = a double accumulation — the order-sensitive class."""
     if re.search(r"AS\s+DECIMAL\s*\(", expr, re.I):
         return "EXACT-DEC"
@@ -135,10 +135,10 @@ def is_predicate_context(sql: str, start: int) -> bool:
     WHEN inside a select item is NOT a predicate (SQL clause order puts a
     select-list site before its own FROM/ON/WHERE text, so the
     nearest-keyword rule stays correct inside CTE chains). Keywords nested
-    DEEPER than the site are ignored (round-15 ADVICE: a scalar subquery's
-    WHERE earlier in the same select list — `(SELECT … WHERE …) AS x,
-    round(sum(…))` — misclassified the following select-list site as
-    predicate context, forcing a spurious MANUAL)."""
+    DEEPER than the site are ignored: a scalar subquery's WHERE earlier in
+    the same select list — `(SELECT … WHERE …) AS x, round(sum(…))` —
+    would otherwise classify the following select-list site as predicate
+    context, forcing a spurious MANUAL."""
     depths, depth = [0] * start, 0
     for i in range(start):
         depths[i] = depth
@@ -162,10 +162,10 @@ def alias_in_predicate(sql: str, alias: str) -> bool:
     """True when the site's alias feeds a comparison elsewhere — directly
     (`alias <op>`) or anywhere inside a comparison's scalar subquery
     (`<op> (SELECT … alias …)`, e.g. q15's `revenue = (SELECT
-    max(revenue)…)`). The subquery scan takes the balanced-paren extent
-    (round-15 ADVICE: the old `[^)]*` could not span nested parentheses,
-    so an alias after a nested closing paren — `= (SELECT max(round(…))
-    … alias)` — was missed: a false SAFE for a DOUBLE site)."""
+    max(revenue)…)`). The subquery scan takes the balanced-paren extent: a
+    `[^)]*` scan cannot span nested parentheses, so it would miss an alias
+    after a nested closing paren — `= (SELECT max(round(…)) … alias)` — a
+    false SAFE for a DOUBLE site."""
     if re.search(rf"\b{alias}\b\s*(=|<>|!=|>=|<=|>|<|\bIN\b)", sql, re.I):
         return True
     for m in re.finditer(r"(=|<>|!=|>=|<=|>|<|\bIN\b)\s*\(\s*SELECT\b",

@@ -26,8 +26,7 @@ sys.path.insert(0, REPO)
 
 from spark_sentiment_spark import get_spark  # noqa: E402
 from spark_sentiment_spark.plans.registry import (REGISTRY,  # noqa: E402
-                                                  all_queries,
-                                                  release_caches)
+                                                  all_queries, run)
 from tests.oracle_utils import compare, duck_connection  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -38,8 +37,7 @@ def main() -> None:
     ap.add_argument("--only", metavar="NAME,NAME",
                     help="comma-separated query names (default: all)")
     args = ap.parse_args()
-    all_queries()
-    names = list(REGISTRY)
+    names = list(all_queries())
     if args.only is not None:
         names = [n for n in args.only.split(",") if n]
         unknown = [n for n in names if n not in REGISTRY]
@@ -58,20 +56,20 @@ def main() -> None:
         q = REGISTRY[name]
         t0 = time.perf_counter()
         try:
-            if q.sql is None:
-                n = q.fn(spark, SF_DIR).count()
-                results[name] = {"err": "no_oracle", "spark_rows": n}
-                status = f"no_oracle rows={n}"
-            else:
-                ok, msg = compare(q.fn(spark, SF_DIR), con, q.sql, name)
-                results[name] = {"ok": ok, "msg": msg}
-                status = "OK" if ok else f"FAIL {msg}"
-                bad += not ok
+            with run():
+                if q.sql is None:
+                    n = q.fn(spark, SF_DIR).count()
+                    results[name] = {"err": "no_oracle", "spark_rows": n}
+                    status = f"no_oracle rows={n}"
+                else:
+                    ok, msg = compare(q.fn(spark, SF_DIR), con, q.sql, name)
+                    results[name] = {"ok": ok, "msg": msg}
+                    status = "OK" if ok else f"FAIL {msg}"
+                    bad += not ok
         except Exception as exc:  # noqa: BLE001
             results[name] = {"err": repr(exc)[:500]}
             status = f"ERROR {exc!r}"
             bad += 1
-        release_caches()
         print(f"{name:40s} {time.perf_counter() - t0:6.2f}s  {status[:160]}",
               flush=True)
     out = os.path.join(REPO, "correctness_local.json")

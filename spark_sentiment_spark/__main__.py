@@ -86,9 +86,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.list_queries:
         from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
 
-        all_queries()
         try:
-            for name, q in REGISTRY.items():
+            for name in all_queries():
+                q = REGISTRY[name]
                 tags = ",".join(q.tags)
                 oracle = "oracle" if q.sql else "rows-only"
                 print(f"{name}\t[{tags}]\t{oracle}")
@@ -115,22 +115,21 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def _run_catalog_query(spark, args) -> int:
-    from spark_sentiment_spark.plans.registry import (REGISTRY, all_queries,
-                                                      release_caches)
+    from spark_sentiment_spark.plans.registry import all_queries, run
 
-    all_queries()
-    if args.query not in REGISTRY:
+    queries = all_queries()
+    if args.query not in queries:
         print(f"unknown query {args.query!r} (see --list-queries)",
               file=sys.stderr)
         return 2
-    df = REGISTRY[args.query].fn(spark, args.sf_dir)
-    if args.output:
-        from spark_sentiment_spark.sources.io import save
+    with run():
+        df = queries[args.query](spark, args.sf_dir)
+        if args.output:
+            from spark_sentiment_spark.sources.io import save
 
-        save(df, args.output, args.output_type)
-    if args.show or not args.output:
-        df.show(args.show or 20, truncate=60)
-    release_caches()
+            save(df, args.output, args.output_type)
+        if args.show or not args.output:
+            df.show(args.show or 20, truncate=60)
     return 0
 
 

@@ -5,8 +5,6 @@ all three share."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -132,7 +130,7 @@ def bm25_stage_index(spark, sf_dir):
     empty corpus writes part-less directories that schema inference
     cannot read back)."""
     tok = bm25_tokens(spark, sf_dir)
-    base = track_staging_dir(tempfile.mkdtemp(prefix="bm25_index_"))
+    base = track_staging_dir("bm25_index_")
     postings_src = (tok.groupBy("doc_id", "w")
                     .agg(F.count(F.lit(1)).alias("tf"))
                     .repartition("w").sortWithinPartitions("w"))

@@ -11,8 +11,6 @@ rankings exactly.
 
 from __future__ import annotations
 
-import tempfile
-
 import numpy as np
 import pandas as pd  # module-level: pandas-UDF type hints resolve from here
 from pyspark.sql import functions as F
@@ -289,7 +287,7 @@ def pq_stage_index(spark, vecs):
         return None, 0
     _encode = pq_encoder(codebooks, n_codes)
 
-    base = track_staging_dir(tempfile.mkdtemp(prefix="pq_index_"))
+    base = track_staging_dir("pq_index_")
     vecs.select("vec_id", _encode("e").alias("codes")) \
         .write.mode("overwrite").parquet(base + "/codes")
     _stage_codebook(spark, codebooks, n_codes, base)
@@ -525,7 +523,7 @@ def ivfpq_stage_index(spark, vecs, code_batches: int = 1,
              .where(F.col("rn") <= IVF_ASSIGN)
              .select("vec_id", "cell"))
 
-    base = track_staging_dir(tempfile.mkdtemp(prefix=prefix))
+    base = track_staging_dir(prefix)
     coded = cells.join(vecs.select("vec_id", _encode("e").alias("codes")),
                        "vec_id")
     if code_batches == 1:

@@ -1242,7 +1242,6 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
     batch's bands into the index afterward keeps the layout for the
     next batch."""
     import os
-    import tempfile
 
     from spark_sentiment_spark.plans.registry import (track_staging_dir,
                                                       track_temp_table)
@@ -1256,7 +1255,7 @@ def dedup_minhash_bucketed_probe(spark, sf_dir):
             F.concat_ws(":", F.col("band_id"), F.col("bh")).alias("bkey"),
             F.col("doc_id").alias(id_alias))
 
-    base = track_staging_dir(tempfile.mkdtemp(prefix="mh_probe_"))
+    base = track_staging_dir("mh_probe_")
     suffix = os.path.basename(base)
     t_idx = track_temp_table(spark, f"mh_band_index_{suffix}")
     t_bat = track_temp_table(spark, f"mh_band_batch_{suffix}")

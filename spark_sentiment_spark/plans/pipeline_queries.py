@@ -2838,16 +2838,13 @@ def _io_roundtrip(spark, sf_dir, fmt: str):
     A zero-row write leaves nothing to infer a schema from (the load
     raises, or returns no columns): the stable empty output is returned
     instead."""
-    import tempfile
-
     from pyspark.errors import AnalysisException
 
     from spark_sentiment_spark.sources import io as sio
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars")
-    out = track_staging_dir(
-        tempfile.mkdtemp(prefix=f"io_{fmt}_rt_")) + f"/docs.{fmt}"
+    out = track_staging_dir(f"io_{fmt}_rt_") + f"/docs.{fmt}"
     sio.save(docs, out, fmt)
     try:
         back, ftype = sio.load(spark, out)
@@ -2903,14 +2900,11 @@ def io_csv_roundtrip(spark, sf_dir):
     positional `_c*` columns. The guard returns the stable empty output
     instead of failing resolution — the quiet-source behavior the
     empty-tables contract test pins."""
-    import tempfile
-
     from spark_sentiment_spark.sources import io as sio
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars")
-    out = track_staging_dir(
-        tempfile.mkdtemp(prefix="io_csv_rt_")) + "/docs.csv"
+    out = track_staging_dir("io_csv_rt_") + "/docs.csv"
     sio.save(docs, out, "csv")
     back, ftype = sio.load(spark, out)
     assert ftype == "csv"
@@ -2962,13 +2956,10 @@ def io_schema_evolution(spark, sf_dir):
     mergeSchema costs one footer pass (why it's opt-in, io.py:140),
     partition pruning on ``batch`` still works, and the aggregate is
     langs-sized. Staging is per-call tempdir."""
-    import tempfile
-
     from spark_sentiment_spark.sources import io as sio
 
     docs = load(spark, sf_dir, "documents")
-    root = track_staging_dir(
-        tempfile.mkdtemp(prefix="io_evolve_")) + "/docs.parquet"
+    root = track_staging_dir("io_evolve_") + "/docs.parquet"
     old = (docs.filter(F.col("doc_id") % 2 == 0)
            .select("doc_id", "lang", "n_chars"))
     new = (docs.filter(F.col("doc_id") % 2 == 1)

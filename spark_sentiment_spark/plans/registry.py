@@ -15,6 +15,11 @@ the value-hash comparison deterministic:
 from __future__ import annotations
 
 import atexit
+import importlib
+import shutil
+import tempfile
+from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -31,80 +36,91 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# Plans that persist() an intermediate (minhash signatures, LSH buckets,
-# tf counts) register it here: the cache must outlive the *returned lazy
-# DataFrame's* consumption, so the query function cannot unpersist it
-# itself. One-shot harnesses may ignore this (executor teardown frees the
-# blocks); long-lived sessions call release_caches() after consuming a
-# query's result to avoid accumulating cached RDDs.
-_PERSISTED: list[DataFrame] = []
+# A plan that persists an intermediate (minhash signatures, LSH buckets, tf
+# counts), stages files (bucketed tables, sink→scan round trips, streaming
+# checkpoints) or creates a catalog table beside them cannot free them: they
+# back the *returned lazy DataFrame*, which the caller consumes later. So
+# the plan hands each to its run, which frees it when the run ends; runs
+# sharing a SparkSession (threads, a serving loop, a foreachBatch consumer)
+# never free each other's inputs.
+class Run(list):
+    """What one query run holds: (kind, item) in the order acquired."""
+
+    def staged_dirs(self) -> list[str]:
+        return [x for kind, x in self if kind == "dir"]
+
+    def release(self) -> int:
+        """Free everything held, newest first; returns the number of
+        caches unpersisted."""
+        n = 0
+        while True:
+            try:  # pop, not test-then-pop: threads share the process scope
+                kind, x = self.pop()
+            except IndexError:
+                return n
+            try:
+                if kind == "dir":
+                    shutil.rmtree(x, ignore_errors=True)
+                elif kind == "persist":
+                    x.unpersist()
+                    n += 1
+                else:
+                    x[0].sql(f"DROP TABLE IF EXISTS `{x[1]}`")
+            except Exception:
+                pass  # session already stopped: nothing left to free
+
+
+# Tracking outside any run lands here: `__spark_entry__.py` callers and
+# perfbench call the query functions directly and release_caches().
+_PROCESS = Run()
+_CURRENT: ContextVar[Run] = ContextVar("registry_run", default=_PROCESS)
+
+
+@contextmanager
+def run():
+    """Scope one query run (per thread and context; runs nest): what its
+    plans track is released when the ``with`` block ends, on success or
+    on an exception. Consume the query's result inside the block."""
+    scope = Run()
+    token = _CURRENT.set(scope)
+    try:
+        yield scope
+    finally:
+        _CURRENT.reset(token)
+        scope.release()
 
 
 def track_persist(df: DataFrame) -> DataFrame:
-    """persist() a plan intermediate and track it for release_caches()."""
+    """persist() a plan intermediate, held until the current run ends."""
     df = df.persist()
-    _PERSISTED.append(df)
+    _CURRENT.get().append(("persist", df))
     return df
 
 
-# Queries that stage data on local disk (bucketed-table materialization,
-# sink→scan round-trips, streaming checkpoints) register the staging dir
-# here, and any catalog table they create alongside it. Same lifetime
-# contract as _PERSISTED: the staged files back the *returned lazy
-# DataFrame*, so the query function cannot delete them itself; harnesses
-# call release_caches() after consuming the result. An atexit sweep
-# catches one-shot processes that never call it, so repeated runs can't
-# accumulate unbounded /tmp usage.
-_STAGED_DIRS: list[str] = []
-_TEMP_TABLES: list[tuple[SparkSession, str]] = []
-
-
-def track_staging_dir(path: str) -> str:
-    """Register a staging dir for removal at the next release_caches()."""
-    _STAGED_DIRS.append(path)
+def track_staging_dir(prefix: str) -> str:
+    """A fresh staging dir, removed when the current run ends."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _CURRENT.get().append(("dir", path))
     return path
 
 
 def track_temp_table(spark: SparkSession, name: str) -> str:
-    """Register a catalog table for DROP at the next release_caches()."""
-    _TEMP_TABLES.append((spark, name))
+    """A catalog table name, dropped when the current run ends."""
+    _CURRENT.get().append(("table", (spark, name)))
     return name
 
 
 def release_caches() -> int:
-    """Unpersist every intermediate cached by catalog queries so far,
-    drop their temp catalog tables, and remove their staging dirs.
-    Returns the number of caches released. Safe to call at any time
-    AFTER the consuming action (collect/write) of the queries that
-    cached/staged them."""
-    import shutil
-
-    n = 0
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to free
-    while _TEMP_TABLES:
-        spark, name = _TEMP_TABLES.pop()
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        except Exception:
-            pass  # session already stopped — metastore entry is orphaned
-    while _STAGED_DIRS:
-        shutil.rmtree(_STAGED_DIRS.pop(), ignore_errors=True)
-    return n
+    """Release the current scope (outside a run: the process scope), only
+    AFTER the consuming action of the queries that tracked it."""
+    return _CURRENT.get().release()
 
 
 @atexit.register
 def _cleanup_staging_at_exit() -> None:
-    # Tables are skipped here (the JVM is usually gone by atexit time);
-    # only the disk footprint matters for leak prevention.
-    import shutil
-
-    while _STAGED_DIRS:
-        shutil.rmtree(_STAGED_DIRS.pop(), ignore_errors=True)
+    # Tables are skipped: the JVM is usually gone by atexit time.
+    for path in _PROCESS.staged_dirs():
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def register(name: str, sql: str | None = None, bench: bool = False,
@@ -171,26 +187,23 @@ def _fanout_needed(spark: SparkSession) -> bool:
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Import registration modules for their side effects; catalog order is
-    # registration order.
-    import spark_sentiment_spark.plans.dedup_queries  # noqa: F401
-    import spark_sentiment_spark.plans.similarity_queries  # noqa: F401
-    import spark_sentiment_spark.plans.events_queries  # noqa: F401
-    import spark_sentiment_spark.plans.text_queries  # noqa: F401
-    import spark_sentiment_spark.plans.multimodal_queries  # noqa: F401
-    import spark_sentiment_spark.plans.streaming_queries  # noqa: F401
-    import spark_sentiment_spark.plans.relational  # noqa: F401
-    import spark_sentiment_spark.plans.tpch_shapes  # noqa: F401
-    import spark_sentiment_spark.plans.pipeline_queries  # noqa: F401
-    import spark_sentiment_spark.plans.corpus_queries  # noqa: F401
-    import spark_sentiment_spark.plans.ml_queries  # noqa: F401
-    import spark_sentiment_spark.plans.sketch_queries  # noqa: F401
-    return {name: q.fn for name, q in REGISTRY.items()}
+    """The catalog by name, in the module order below and registration
+    order within a module, whichever catalog module was imported first.
+    Importing a module registers its queries."""
+    order = [f"spark_sentiment_spark.plans.{m}" for m in (
+        "dedup_queries", "similarity_queries", "events_queries",
+        "text_queries", "multimodal_queries", "streaming_queries",
+        "relational", "tpch_shapes", "pipeline_queries", "corpus_queries",
+        "ml_queries", "sketch_queries")]
+    for module in order:
+        importlib.import_module(module)
+    return {name: REGISTRY[name].fn for name in sorted(
+        REGISTRY, key=lambda n: order.index(REGISTRY[n].fn.__module__))}
 
 
 def all_oracles() -> dict[str, str]:
-    all_queries()
-    return {name: q.sql for name, q in REGISTRY.items() if q.sql is not None}
+    return {name: REGISTRY[name].sql for name in all_queries()
+            if REGISTRY[name].sql is not None}
 
 
 def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1208,7 +1208,6 @@ def join_bucketed(spark, sf_dir):
     the join because there is nothing to re-plan. The one-time write IS
     a shuffle — amortized across every downstream consumer."""
     import os
-    import tempfile
 
     nb = 8
     orders = load(spark, sf_dir, "orders").select(
@@ -1217,10 +1216,9 @@ def join_bucketed(spark, sf_dir):
         "l_orderkey", "l_quantity", "l_extendedprice")
     # Per-invocation table names (suffixed with the mkdtemp basename) so
     # two invocations sharing a metastore can't clobber each other's
-    # catalog entries mid-query; the dir and both tables are tracked for
-    # release_caches() so repeated runs don't accumulate /tmp or
-    # metastore garbage.
-    base = track_staging_dir(tempfile.mkdtemp(prefix="bkt_join_"))
+    # catalog entries mid-query; the dir and both tables belong to the
+    # run, so repeated runs don't accumulate /tmp or metastore garbage.
+    base = track_staging_dir("bkt_join_")
     suffix = os.path.basename(base)
     t_orders = track_temp_table(spark, f"bkt_orders_{suffix}")
     t_li = track_temp_table(spark, f"bkt_lineitem_{suffix}")

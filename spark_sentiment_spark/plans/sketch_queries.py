@@ -16,8 +16,6 @@ oracle replays the sketch, it does not merely approve an approximation.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1029,7 +1027,7 @@ def io_partitioned_prune(spark, sf_dir):
     repartitioned by the partition column so each directory is written
     by one task, not torn across all of them)."""
     ev = load(spark, sf_dir, "events")
-    base = track_staging_dir(tempfile.mkdtemp(prefix="part_prune_"))
+    base = track_staging_dir("part_prune_")
     staged = ev.withColumn("day", F.date_format(F.date_trunc("day", "ts"),
                                                 "yyyy-MM-dd"))
     (staged
@@ -1103,7 +1101,7 @@ def io_compact_small_files(spark, sf_dir):
     import os as _os
 
     ev = load(spark, sf_dir, "events")
-    base = track_staging_dir(tempfile.mkdtemp(prefix="compact_"))
+    base = track_staging_dir("compact_")
     frag_dir, comp_dir = base + "/frag", base + "/compact"
     ev.repartition(64).write.mode("overwrite").parquet(frag_dir)
 

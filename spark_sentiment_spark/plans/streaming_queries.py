@@ -20,7 +20,6 @@ landing exactly on the boundary.
 from __future__ import annotations
 
 import itertools
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -241,8 +240,8 @@ def streaming_volume_anomaly(spark, sf_dir):
         .agg(F.avg("n").alias("mu"), F.stddev_samp("n").alias("sigma"))
         .where(F.col("sigma") > 0))
 
-    out_dir = track_staging_dir(tempfile.mkdtemp(prefix="anomstream_out_"))
-    ckpt = track_staging_dir(tempfile.mkdtemp(prefix="anomstream_ckpt_"))
+    out_dir = track_staging_dir("anomstream_out_")
+    ckpt = track_staging_dir("anomstream_ckpt_")
 
     def write_batch(df, batch_id):
         z = (F.col("n") - F.col("mu")) / F.col("sigma")
@@ -575,8 +574,8 @@ def streaming_scd2_merge(spark, sf_dir):
     cutoff = F.timestamp_millis(F.lit(cuts[0]))
 
     hist_dim = scd2_dim(ev.where(F.col("ts") < cutoff))
-    dim_base = track_staging_dir(tempfile.mkdtemp(prefix="scd2stream_dim_"))
-    ckpt = track_staging_dir(tempfile.mkdtemp(prefix="scd2stream_ckpt_"))
+    dim_base = track_staging_dir("scd2stream_dim_")
+    ckpt = track_staging_dir("scd2stream_ckpt_")
     state = {"latest": f"{dim_base}/v0"}
     hist_dim.write.mode("overwrite").parquet(state["latest"])
     dim_schema = hist_dim.schema

@@ -59,22 +59,27 @@ def await_stream(query) -> None:
 def _stage_dir(path: str) -> str:
     """The file stream source requires a *directory*; the testdata ships one
     bare parquet file per table. Stage it into a per-source temp dir via
-    hardlink (fallback: copy). A path that already IS a directory (the
-    standard Spark table layout) streams as-is — real deployments stream a
-    directory or a Kafka topic and skip this shim entirely."""
+    hardlink (fallback: copy), anew once another file replaces the one at
+    ``path``. A path that already IS a directory (the standard Spark table
+    layout) streams as-is — real deployments stream a directory or a Kafka
+    topic and skip this shim entirely."""
     import hashlib
+    import uuid
 
     if os.path.isdir(path):
         return path
     key = hashlib.md5(path.encode()).hexdigest()[:12]
     d = os.path.join(tempfile.gettempdir(), f"evstream_{key}")
     target = os.path.join(d, os.path.basename(path))
-    if not os.path.exists(target):
+    if not (os.path.exists(target) and os.path.samefile(path, target)):
         os.makedirs(d, exist_ok=True)
+        # A hidden name the stream source skips, then one atomic rename.
+        tmp = os.path.join(d, f".{uuid.uuid4().hex}")
         try:
-            os.link(path, target)
+            os.link(path, tmp)
         except OSError:
-            shutil.copy2(path, target)
+            shutil.copy2(path, tmp)
+        os.replace(tmp, target)
     return d
 
 
@@ -281,9 +286,9 @@ def stage_ordered_segments(slices, prefix: str) -> str:
     versions, each step an identity merge — pinned by
     tests/test_streaming.py::test_stage_ordered_segments_empty_slice_fires_batch;
     do not assume empty slices skip batches."""
-    stream_dir = track_staging_dir(tempfile.mkdtemp(prefix=prefix))
+    stream_dir = track_staging_dir(prefix)
     for i, sl in enumerate(slices):
-        tmp = track_staging_dir(tempfile.mkdtemp(prefix=f"{prefix}seg_"))
+        tmp = track_staging_dir(f"{prefix}seg_")
         sl.coalesce(1).write.mode("overwrite").parquet(tmp)
         parts = glob.glob(f"{tmp}/part-*.parquet")
         if len(parts) != 1:
@@ -306,8 +311,8 @@ def run_probe_stream(spark: SparkSession, segments, probe, out_schema: str,
     of the batch results as ``out_schema`` (empty if no batch wrote a
     file); ``prefix`` names the staging dirs."""
     stream_dir = stage_ordered_segments(segments, f"{prefix}_stream_")
-    out_dir = track_staging_dir(tempfile.mkdtemp(prefix=f"{prefix}_hits_"))
-    ckpt = track_staging_dir(tempfile.mkdtemp(prefix=f"{prefix}_ckpt_"))
+    out_dir = track_staging_dir(f"{prefix}_hits_")
+    ckpt = track_staging_dir(f"{prefix}_ckpt_")
 
     def write_batch(df, batch_id):
         probe(df).write.mode("overwrite").parquet(

@@ -2,12 +2,6 @@ import os
 
 import pytest
 
-from spark_sentiment_spark.plans.registry import all_queries
-
-# Registry order is import order: register the whole catalog in its own
-# order before a test module imports one catalog module directly.
-all_queries()
-
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
@@ -36,28 +30,30 @@ def sf_dir():
 
 
 @pytest.fixture
-def release_caches():
-    """Release every cache, temp table and staging dir the test made, at
-    teardown, pass or fail — for tests that stage through the registry's
-    tracking without running a catalog query."""
+def run():
+    """The test body is one registry run: every cache, temp table and
+    staging dir it tracks is released at teardown, pass or fail. Yields
+    the run's scope."""
     from spark_sentiment_spark.plans import registry
 
-    yield
-    registry.release_caches()
+    with registry.run() as scope:
+        yield scope
 
 
 @pytest.fixture
-def query(spark, sf_dir, release_caches):
+def query(spark, sf_dir, run):
     """Run catalog queries by name: ``query(name)`` returns
     ``REGISTRY[name].fn(spark, sf_dir)``; ``query(name, other_dir)`` runs
     it over another table directory. What the queries cache, register or
-    stage is released at teardown (``release_caches``)."""
-    from spark_sentiment_spark.plans import registry
+    stage belongs to the test's ``run``."""
+    from spark_sentiment_spark.plans.registry import all_queries
 
-    def run(name, tables=sf_dir, **settings):
-        return registry.REGISTRY[name].fn(spark, tables, **settings)
+    queries = all_queries()
 
-    return run
+    def call(name, tables=sf_dir, **settings):
+        return queries[name](spark, tables, **settings)
+
+    return call
 
 
 def load(spark, table, sf_dir=SF_DIR):

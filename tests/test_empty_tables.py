@@ -17,7 +17,7 @@ import tempfile
 
 import pytest
 
-from spark_sentiment_spark.plans.registry import REGISTRY
+from spark_sentiment_spark.plans.registry import all_queries
 from tests.conftest import SF_DIR
 from tests.oracle_utils import TABLES
 
@@ -34,7 +34,7 @@ def degenerate_sf(request, spark):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("name", list(REGISTRY))
+@pytest.mark.parametrize("name", list(all_queries()))
 def test_query_survives_degenerate_tables(query, degenerate_sf, name):
     df = query(name, degenerate_sf)
     df.count()

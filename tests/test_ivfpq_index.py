@@ -91,7 +91,7 @@ def test_ivfpq_candidates_are_the_ivf_cells_pq_ranked(query):
             assert abs(r.cosine - exact_cos[(r.qid, r.vec_id)]) < 1e-9
 
 
-@pytest.mark.usefixtures("release_caches")
+@pytest.mark.usefixtures("run")
 def test_ivfpq_index_append_contract(spark):
     """The documented append contract, demonstrated: with the quantizer
     artifacts frozen (centroids + codebook copied from the original
@@ -99,8 +99,6 @@ def test_ivfpq_index_append_contract(spark):
     writes must serve a probe byte-identically to the one-shot index —
     newly indexed vectors really can land in their cells' partitions
     between batches without rebuilding anything."""
-    import tempfile
-
     from spark_sentiment_spark.plans.registry import track_staging_dir
     from spark_sentiment_spark.operators.vectors import (
         IVFPQ_RERANK, ivfpq_probe, ivfpq_stage_index)
@@ -111,7 +109,7 @@ def test_ivfpq_index_append_contract(spark):
             ivfpq_probe(spark, vecs, base, n_codes, IVFPQ_RERANK)
             .collect()]
 
-    base2 = track_staging_dir(tempfile.mkdtemp(prefix="ivfpq_append_"))
+    base2 = track_staging_dir("ivfpq_append_")
     for art in ("centroids", "codebook"):
         spark.read.parquet(f"{base}/{art}") \
             .write.parquet(f"{base2}/{art}")
@@ -185,7 +183,7 @@ def _unit_md5(tag):
     return [x / n for x in raw]
 
 
-@pytest.mark.usefixtures("release_caches")
+@pytest.mark.usefixtures("run")
 def test_fragmented_write_rule_when_a_batch_misses_cells(spark):
     """The file-count rule's non-trivial branch: at the shipped SFs every
     append batch happens to touch every cell (files_before = 4 x 16), so
@@ -238,7 +236,7 @@ def test_fragmented_write_rule_when_a_batch_misses_cells(spark):
     assert frag == comp == one and one
 
 
-@pytest.mark.usefixtures("release_caches")
+@pytest.mark.usefixtures("run")
 def test_compaction_hot_cell_splits_by_max_records_per_file(spark):
     """The 100 TB skew answer, demonstrated: one task per cell is right
     until a hot cell's codes outgrow a single right-sized file — then
@@ -415,7 +413,7 @@ def _vec(i, center, noise=0.05):
     return [x / n for x in v]
 
 
-@pytest.mark.usefixtures("release_caches")
+@pytest.mark.usefixtures("run")
 def test_refresh_rebalances_drifted_occupancy(spark):
     """The balance contract — the production reason for quantizer
     refresh: a quantizer frozen at build time maps a DRIFTED append (a

@@ -11,14 +11,15 @@ import sys
 import pytest
 
 from spark_sentiment_spark.plans import registry
-from spark_sentiment_spark.plans.registry import REGISTRY
+from spark_sentiment_spark.plans.registry import REGISTRY, all_queries
 from tests.conftest import SF_DIR
 from tests.oracle_utils import compare, duck_connection
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-ORACLE_NAMES = [n for n, q in REGISTRY.items() if q.sql is not None]
-ROWS_ONLY_NAMES = [n for n, q in REGISTRY.items() if q.sql is None]
+CATALOG = list(all_queries())
+ORACLE_NAMES = [n for n in CATALOG if REGISTRY[n].sql is not None]
+ROWS_ONLY_NAMES = [n for n in CATALOG if REGISTRY[n].sql is None]
 
 
 @pytest.fixture(scope="module")
@@ -49,7 +50,6 @@ def test_release_caches_leaves_nothing_cached(spark, query):
     ContextCleaner may concurrently free localCheckpoint RDDs left by
     earlier tests' iterative queries, so absolute counts flake — only the
     ids THIS query added must appear and then disappear."""
-    registry.release_caches()  # drain anything tracked by earlier tests
     jsc = spark.sparkContext._jsc.sc()
 
     def cached_ids():
@@ -71,7 +71,9 @@ def test_release_caches_leaves_nothing_cached(spark, query):
 # REGISTRY is swapped for a dict that logs each insert before any query
 # module is imported.
 _ORDER_PROBE = """
+import importlib
 import json
+import sys
 from spark_sentiment_spark.plans import registry
 
 class Log(dict):
@@ -82,6 +84,8 @@ class Log(dict):
         super().__setitem__(k, v)
 
 registry.REGISTRY = Log()
+for module in sys.argv[1:]:
+    importlib.import_module(module)
 import __spark_entry__ as entry
 print(json.dumps({
     "registered": Log.order,
@@ -94,18 +98,30 @@ print(json.dumps({
 """
 
 
-def test_catalog_order_is_registration_order():
-    """Catalog order is import order: nothing reorders the registry, and
-    the driver entry points expose exactly what was registered."""
+def _order_probe(*first_imports):
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
         filter(None, [REPO, os.environ.get("PYTHONPATH")])))
-    out = subprocess.run([sys.executable, "-c", _ORDER_PROBE], cwd=REPO,
-                         env=env, capture_output=True, text=True, check=True)
-    got = json.loads(out.stdout.strip().splitlines()[-1])
+    out = subprocess.run([sys.executable, "-c", _ORDER_PROBE,
+                          *first_imports], cwd=REPO, env=env,
+                         capture_output=True, text=True, check=True)
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_catalog_order_is_registration_order():
+    """In a fresh interpreter the catalog order is registration order:
+    nothing reorders the registry, and ``__spark_entry__`` exposes
+    exactly what was registered. A process that imports one catalog
+    module first still lists the catalog in that same order."""
+    got = _order_probe()
     assert got["registry"] == got["registered"]
     assert got["after"] == got["registered"]
     assert sorted(got["oracles"]) == sorted(got["oracle_backed"])
-    assert got["registered"] == list(REGISTRY)
+    assert got["registered"] == CATALOG
+
+    late = _order_probe("spark_sentiment_spark.plans.pipeline_queries")
+    assert late["registered"][0] == "pack_sequences"
+    assert late["after"] == got["registered"]
+    assert list(late["oracles"]) == list(got["oracles"])
 
 
 def test_doc_counters_match_registry():

@@ -16,9 +16,11 @@ TABLES = ("customer", "documents", "embeddings", "events", "lineitem",
 
 
 def _jobs(spark) -> int:
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    return sc.statusStore().jobsList(None).size()
+    """Jobs the context has started: job ids count up from 0, so this is
+    the next one. The status store's job list would not do: it is trimmed
+    by a tenth once it holds spark.ui.retainedJobs, so in a long session
+    its size can fall while jobs run."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
 def _with_jobs(spark, read):

@@ -51,25 +51,27 @@ def test_decontaminate_semantic_no_false_positives_and_recall(query):
 def test_pq_index_artifacts_are_staged(spark):
     """The build phase must leave BOTH artifacts on disk — the code
     table (vec_id + M small-int codes, the 32x compression) and the
-    M x K codebook (so a probe replays with no corpus access) — and
-    releasing the caches must reclaim them."""
+    M x K codebook (so a probe replays with no corpus access) — and the
+    end of the run must reclaim them."""
     from spark_sentiment_spark.operators.vectors import (PQ_K, PQ_M,
                                                          pq_stage_index,
                                                          unit_vector_frame)
     from spark_sentiment_spark.plans import registry
 
-    vecs = unit_vector_frame(registry.load(spark, SF_DIR, "embeddings"), "e")
-    base, _ = pq_stage_index(spark, vecs)
-    codes = spark.read.parquet(base + "/codes")
-    assert [f.name for f in codes.schema] == ["vec_id", "codes"]
-    n = codes.count()
-    assert n == spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
-    lens = codes.selectExpr("min(size(codes)) a", "max(size(codes)) b") \
-        .first()
-    assert lens["a"] == lens["b"] == PQ_M
-    cb = spark.read.parquet(base + "/codebook")
-    assert cb.count() == PQ_M * PQ_K
-    assert glob.glob(base + "/codes/part-*")
-    registry.release_caches()
-    # track_staging_dir cleanup must reclaim the index (no staging leaks)
+    with registry.run():
+        vecs = unit_vector_frame(
+            registry.load(spark, SF_DIR, "embeddings"), "e")
+        base, _ = pq_stage_index(spark, vecs)
+        codes = spark.read.parquet(base + "/codes")
+        assert [f.name for f in codes.schema] == ["vec_id", "codes"]
+        n = codes.count()
+        assert n == spark.read.parquet(
+            f"{SF_DIR}/embeddings.parquet").count()
+        lens = codes.selectExpr("min(size(codes)) a",
+                                "max(size(codes)) b").first()
+        assert lens["a"] == lens["b"] == PQ_M
+        cb = spark.read.parquet(base + "/codebook")
+        assert cb.count() == PQ_M * PQ_K
+        assert glob.glob(base + "/codes/part-*")
+    # the run's staging dirs are removed with it (no staging leaks)
     assert not glob.glob(base + "/codes/part-*")

@@ -160,7 +160,7 @@ def test_multiprobe_recall_beats_home_only(spark, query):
     assert recall >= 0.3, f"multiprobe recall degraded to {recall:.3f}"
 
 
-@pytest.mark.usefixtures("release_caches")
+@pytest.mark.usefixtures("run")
 def test_multiprobe_candidate_bound_scales_linearly(spark):
     """Candidate-pair growth under ×4 corpus replication with per-replica
     sign-flipped dimensions: within a replica all pairwise dots are
@@ -233,7 +233,7 @@ def test_knn_vote_tie_breaks_to_smaller_label(spark, query, tmp_path):
     assert ok, msg
 
 
-@pytest.mark.usefixtures("release_caches")
+@pytest.mark.usefixtures("run")
 @pytest.mark.slow
 def test_multiprobe_recall_at_real_neardup_thresholds(spark):
     """The LSH family's headline claim — 'at the cosine >= 0.8-0.9

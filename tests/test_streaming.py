@@ -309,7 +309,7 @@ def test_streaming_hll_state_equals_batch(spark, query):
     assert row["rel_err"] < 0.30, row
 
 
-@pytest.mark.usefixtures("release_caches")
+@pytest.mark.usefixtures("run")
 def test_stage_ordered_segments_empty_slice_fires_batch(spark, tmp_path):
     """The empty-slice contract stage_ordered_segments asserts (it is
     Spark-version-dependent, so it is pinned here): an empty slice still stages a schema-only part file, the file stream
@@ -338,7 +338,7 @@ def test_stage_ordered_segments_empty_slice_fires_batch(spark, tmp_path):
     assert [c for _, c in sorted(batches)] == [2, 0, 1], batches
 
 
-@pytest.mark.usefixtures("release_caches")
+@pytest.mark.usefixtures("run")
 def test_stream_wait_is_bounded(spark, monkeypatch):
     """A streaming run that outlives STREAM_TIMEOUT_S raises TimeoutError
     and leaves no query running, instead of hanging its caller."""
@@ -358,16 +358,40 @@ def test_stream_wait_is_bounded(spark, monkeypatch):
     assert spark.streams.active == []
 
 
+def test_event_stream_reads_a_replaced_source_file(spark, tmp_path,
+                                                  monkeypatch):
+    """A bare events file is staged for the stream source; when a new file
+    replaces it at the same path, the next stream reads the new rows, not
+    the staged copy of the old ones."""
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from spark_sentiment_spark.streaming.streams import (read_event_stream,
+                                                         run_to_memory)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # staged here
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    path = tmp_path / "events.parquet"
+    counts = []
+    for n in (10, 25):
+        pq.write_table(events.slice(0, n), tmp_path / "next.parquet")
+        os.replace(tmp_path / "next.parquet", path)
+        got = run_to_memory(read_event_stream(spark, str(tmp_path)),
+                            f"t_restaged_{n}", "append")
+        counts.append(got.count())
+    assert counts == [10, 25]
+
+
 # --- streaming catalog queries --------------------------------------------
 
-def _collect_staged(query, name, tag):
-    """Collect streaming catalog query ``name``; returns its rows and the
-    staging dir it made whose name contains ``tag``."""
-    from spark_sentiment_spark.plans import registry
-
-    before = set(registry._STAGED_DIRS)
+def _collect_staged(query, run, name, tag):
+    """Collect streaming catalog query ``name`` in the test's ``run``;
+    returns its rows and the staging dir it made whose name contains
+    ``tag``."""
+    before = set(run.staged_dirs())
     rows = query(name).collect()
-    dirs = [d for d in registry._STAGED_DIRS if d not in before and tag in d]
+    dirs = [d for d in run.staged_dirs() if d not in before and tag in d]
     assert dirs, f"{tag} staging dir not tracked"
     return rows, dirs[-1]
 
@@ -387,7 +411,8 @@ def test_streaming_scd2_merge_equals_batch_history(query):
     assert a == b
 
 
-def test_streaming_scd2_intermediate_versions_equal_rebuilds(spark, query):
+def test_streaming_scd2_intermediate_versions_equal_rebuilds(spark, query,
+                                                             run):
     """The sink contract AND the version chain: the delta is staged as
     three event-time-ordered files at one file per trigger, so the full
     fixture must produce exactly v0 (the pre-stream dimension) plus
@@ -403,7 +428,7 @@ def test_streaming_scd2_intermediate_versions_equal_rebuilds(spark, query):
     from spark_sentiment_spark.operators.scd2 import scd2_dim
     from spark_sentiment_spark.plans.registry import load
 
-    _, dim_dir = _collect_staged(query, "streaming_scd2_merge",
+    _, dim_dir = _collect_staged(query, run, "streaming_scd2_merge",
                                  "scd2stream_dim_")
     versions = sorted(os.path.basename(p) for p in glob.glob(dim_dir + "/v*"))
     assert versions == ["v0", "v1", "v2", "v3"], versions
@@ -422,7 +447,8 @@ def test_streaming_scd2_intermediate_versions_equal_rebuilds(spark, query):
         assert got == want, f"v{k} != rebuild at cutoff {k}"
 
 
-def test_streaming_winnowing_probe_two_batches_boundary_free(spark, query):
+def test_streaming_winnowing_probe_two_batches_boundary_free(spark, query,
+                                                             run):
     """The probe must (a) actually run as TWO micro-batches (one staged
     file per trigger) and (b) produce exactly the pair set a single
     all-at-once probe computes — batch boundaries cannot matter because
@@ -430,7 +456,7 @@ def test_streaming_winnowing_probe_two_batches_boundary_free(spark, query):
     from spark_sentiment_spark.operators.winnow import winnow_selected
     from spark_sentiment_spark.plans.registry import load
 
-    rows, hits = _collect_staged(query, "streaming_winnowing_probe",
+    rows, hits = _collect_staged(query, run, "streaming_winnowing_probe",
                                  "winnow_hits_")
     streamed = {(r["doc_a"], r["doc_b"]): r["n_shared"] for r in rows}
     batches = glob.glob(hits + "/batch_id=*")
@@ -455,13 +481,14 @@ def test_streaming_winnowing_probe_two_batches_boundary_free(spark, query):
     assert streamed, "fixture produced no new-vs-old pairs"
 
 
-def test_streaming_ivf_probe_two_batches_equals_inline(query):
+def test_streaming_ivf_probe_two_batches_equals_inline(query, run):
     """The streaming leg of the vector index triad must (a) actually run
     as TWO micro-batches (one staged query file per trigger) and (b)
     produce exactly the inline `ann_ivf_topk` result — batch boundaries
     cannot matter because query routing is row-local given the broadcast
     centroids and each qid lives in exactly one batch."""
-    rows, hits = _collect_staged(query, "streaming_ivf_probe", "ivf_hits_")
+    rows, hits = _collect_staged(query, run, "streaming_ivf_probe",
+                                 "ivf_hits_")
     streamed = [(r["qid"], r["rn"], r["vec_id"], r["label"], r["cosine"])
                 for r in rows]
     batches = glob.glob(hits + "/batch_id=*")
@@ -473,7 +500,7 @@ def test_streaming_ivf_probe_two_batches_equals_inline(query):
     assert streamed, "fixture produced no top-k rows"
 
 
-def test_streaming_pq_probe_two_batches_equals_inline(query):
+def test_streaming_pq_probe_two_batches_equals_inline(query, run):
     """The streaming leg of the quantized index must (a) actually
     run as TWO micro-batches (one staged query file per trigger) and
     (b) produce exactly the inline `ann_pq_topk` result — batch
@@ -482,7 +509,8 @@ def test_streaming_pq_probe_two_batches_equals_inline(query):
     chain is `pq_adc_topk` — the same function `ann_pq_topk` runs — so
     this pins the STAGING plumbing, not a re-derivation
     of the math."""
-    rows, hits = _collect_staged(query, "streaming_pq_probe", "pq_hits_")
+    rows, hits = _collect_staged(query, run, "streaming_pq_probe",
+                                 "pq_hits_")
     streamed = [(r["qid"], r["rn"], r["vec_id"], r["cosine"]) for r in rows]
     batches = glob.glob(hits + "/batch_id=*")
     assert len(batches) == 2, batches
@@ -493,7 +521,7 @@ def test_streaming_pq_probe_two_batches_equals_inline(query):
     assert streamed, "fixture produced no top-k rows"
 
 
-def test_streaming_bm25_probe_two_batches_equals_inline(query):
+def test_streaming_bm25_probe_two_batches_equals_inline(query, run):
     """The retrieval family's streaming leg must (a) actually run as TWO
     micro-batches (one staged query-term file per trigger) and (b)
     produce exactly the inline `search_bm25` ranking — batch boundaries
@@ -501,7 +529,7 @@ def test_streaming_bm25_probe_two_batches_equals_inline(query):
     artifacts and each qid lives in exactly one batch. The per-batch
     scoring is `bm25_score_topk` — the same chain `search_bm25` runs —
     so this pins the staging plumbing, not a re-derivation."""
-    rows, hits = _collect_staged(query, "streaming_bm25_probe",
+    rows, hits = _collect_staged(query, run, "streaming_bm25_probe",
                                  "bm25_hits_")
     streamed = [tuple(r) for r in rows]
     batches = glob.glob(hits + "/batch_id=*")
@@ -512,7 +540,7 @@ def test_streaming_bm25_probe_two_batches_equals_inline(query):
     assert streamed, "fixture produced no rankings"
 
 
-def test_streaming_ivfpq_probe_two_batches_equals_batch_form(query):
+def test_streaming_ivfpq_probe_two_batches_equals_batch_form(query, run):
     """The composed index's streaming leg must (a) actually run as TWO
     micro-batches (one staged query file per trigger) and (b) produce
     exactly the batch probe's result — batch boundaries cannot matter
@@ -520,7 +548,7 @@ def test_streaming_ivfpq_probe_two_batches_equals_batch_form(query):
     are per-query and the artifacts are static. The per-batch chain is
     `ivfpq_probe` — the same function the batch probe runs — so this
     pins the STAGING plumbing, not a re-derivation of the math."""
-    rows, hits = _collect_staged(query, "streaming_ivfpq_probe",
+    rows, hits = _collect_staged(query, run, "streaming_ivfpq_probe",
                                  "ivfpq_hits_")
     streamed = [(r["qid"], r["rn"], r["vec_id"], r["cosine"]) for r in rows]
     batches = glob.glob(hits + "/batch_id=*")
