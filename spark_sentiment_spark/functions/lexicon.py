@@ -8,7 +8,7 @@ SRC/utils/Emoji.scala:29-32) plus its 73 hardcoded emoticons → happy/sad
 (SRC/utils/Emoji.scala:9-17).
 
 The reference builds its lookup as ``stem(word) → mean(score)``
-(SRC/utils/WordList.scala:9-13); ``stemmed_lexicon*`` reproduces that. All
+(SRC/utils/WordList.scala:9-13); ``stemmed_lexicon_dict`` reproduces that. All
 lexicon structures are tiny (≤11k rows) — they ship to executors via broadcast
 joins or broadcast variables, never shuffles.
 """
@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 __all__ = ["lexicon_rows", "raw_lexicon_dict", "stemmed_lexicon_dict",
-           "emoji_dict", "raw_lexicon_df", "stemmed_lexicon_df", "emoji_df",
-           "word_value"]
+           "emoji_dict", "raw_lexicon_df", "word_value"]
 
 DATA_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data")
 LEXICON_CSV = os.path.join(DATA_DIR, "lexicon.csv")
@@ -85,57 +84,6 @@ def raw_lexicon_df(spark: SparkSession) -> DataFrame:
     into otherwise pure-JVM query plans."""
     raw = spark.read.schema(_LEX_SCHEMA).option("header", "true").csv(LEXICON_CSV)
     return raw.groupBy("word").agg(F.avg("score").alias("score"))
-
-
-def stemmed_lexicon_df(spark: SparkSession) -> DataFrame:
-    """DataFrame(word=stem, score=mean) mirroring WordList.getAll. The stems
-    are precomputed driver-side (the lexicon is ~7k words; stemming it once
-    on the driver beats shipping a stemmer UDF) and staged through a temp
-    CSV so the scan stays JVM-native.
-
-    The staging path is keyed by a content hash of the stemmed lexicon and
-    the writing user, and written atomically (mkstemp + rename): a stale
-    file from an older lexicon/stemmer version misses the key, concurrent
-    processes each rename a complete file, and other users on a shared
-    host cannot pre-create the path we read."""
-    import csv as _csv
-    import hashlib
-    import io
-    import os
-    import tempfile
-
-    items = sorted(stemmed_lexicon_dict().items())
-    buf = io.StringIO()
-    w = _csv.writer(buf)
-    w.writerow(["word", "score"])
-    for word, score in items:
-        w.writerow([word, score])
-    content = buf.getvalue()
-    key = hashlib.sha256(content.encode("utf-8")).hexdigest()[:16]
-    uid = getattr(os, "getuid", lambda: "na")()
-    path = os.path.join(tempfile.gettempdir(),
-                        f"stemmed_lexicon_{uid}_{key}.csv")
-    if not os.path.exists(path):
-        fd, tmp = tempfile.mkstemp(dir=tempfile.gettempdir(),
-                                   prefix="stemmed_lexicon_")
-        try:
-            with os.fdopen(fd, "w", newline="", encoding="utf-8") as f:
-                f.write(content)
-            os.replace(tmp, path)  # atomic on POSIX
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
-    return spark.read.schema(_LEX_SCHEMA).option("header", "true").csv(path)
-
-
-def emoji_df(spark: SparkSession) -> DataFrame:
-    rows = sorted(emoji_dict().items())
-    schema = StructType([
-        StructField("token", StringType(), False),
-        StructField("word", StringType(), False),
-    ])
-    return spark.createDataFrame(rows, schema)
 
 
 def word_value(word: str) -> float:

@@ -27,6 +27,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_sentiment_spark.operators.detection import extract_categories
+
 SCORE = "score"   # MlLibSentimentAnalyser.scala:14
 TFIDF = "tfidf"   # MlLibSentimentAnalyser.scala:15
 #: The classifiers train on and predict dense class indices 0..k-1; the
@@ -152,8 +154,7 @@ def train(df: DataFrame, text_col: str, classifier: str = "all",
     from pyspark.ml import Pipeline
 
     data, _ = prepare_labels(df, limit)
-    labels = sorted(r[0] for r in data.select(SCORE).distinct().collect()
-                    if r[0] is not None)
+    labels = extract_categories(data, SCORE)
     data = data.withColumn(CLASS, (F.array_position(
         F.array(*map(F.lit, labels)), F.col(SCORE)) - 1).cast("double"))
     features = feature_pipeline(text_col).fit(data)

@@ -1,6 +1,6 @@
 """Multimodal column support (SURVEY.md §7.4): image/audio/video as opaque
 ``binary`` columns with typed metadata, plus the Spark-side plumbing for
-decode / feature-extract / resize / frame-sample.
+decode and feature extraction.
 
 Container-header metadata is REAL parsing (no codec needed): PNG/GIF/BMP
 dimensions and canonical-WAV rate/channels as native JVM expressions
@@ -38,8 +38,7 @@ MAGIC_BYTES = (
     (b"\x00\x00\x00", "video/mp4"),
 )
 
-STUB_FRAMES = 4   # byte slices per payload in frame_sample_stub
-THUMB = 4         # decode_ppm_features' thumbnail is THUMB×THUMB
+THUMB = 4  # decode_ppm_features' thumbnail is THUMB×THUMB
 
 
 def attach_binary_content(df: DataFrame) -> DataFrame:
@@ -117,50 +116,6 @@ def decode_features(df: DataFrame) -> DataFrame:
                                "entropy_bits", "width", "height"])
 
     return df.select("doc_id", "content").mapInPandas(extract, schema)
-
-
-def resize_stub(df: DataFrame, max_dim: int = 256) -> DataFrame:
-    """Resize plumbing: binary in → binary out, same partitioning. The fake
-    'resize' truncates payloads to max_dim² bytes (a real codec decodes,
-    resizes, re-encodes inside the same Arrow batch loop)."""
-    import pandas as pd
-
-    schema = "doc_id long, content binary, resized boolean"
-
-    def resize(batches):
-        limit = max_dim * max_dim
-        for pdf in batches:
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "content": [bytes(b)[:limit] for b in pdf["content"]],
-                "resized": [len(bytes(b)) > limit for b in pdf["content"]],
-            })
-            yield out
-
-    return df.select("doc_id", "content").mapInPandas(resize, schema)
-
-
-def frame_sample_stub(df: DataFrame) -> DataFrame:
-    """Frame-sampling plumbing for video payloads: one row per sampled
-    frame (posexplode shape). Fake codec: evenly-spaced byte slices."""
-    import pandas as pd
-
-    schema = "doc_id long, frame_idx int, frame binary"
-
-    def sample(batches):
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for did, buf in zip(pdf["doc_id"], pdf["content"]):
-                b = bytes(buf)
-                step = max(1, len(b) // STUB_FRAMES)
-                for i in range(STUB_FRAMES):
-                    ids.append(did)
-                    idxs.append(i)
-                    frames.append(b[i * step:(i + 1) * step])
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
-                                "frame": frames})
-
-    return df.select("doc_id", "content").mapInPandas(sample, schema)
 
 
 # --- Container-header metadata (REAL parsing, no codec required) ------------

@@ -110,22 +110,3 @@ def score_nlp(df: DataFrame, text_col: str, output_col: str = "computed",
     udf_col = sentiment_udf(sentence_scorer_factory)
     return (df.where(F.col(text_col).isNotNull())
             .withColumn(output_col, udf_col(F.col(text_col))))
-
-
-def sentence_sentiments(df: DataFrame, text_col: str,
-                        id_col: str) -> DataFrame:
-    """extractSentiments as a UDTF-shaped plan (SURVEY §2.8): one row per
-    sentence with its class — explode over an Arrow-batched pandas UDF."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<struct<sentence:string,cls:int>>")
-    def _extract(texts: pd.Series) -> pd.Series:
-        extract = _worker_scorer(_lexicon_sentence_scorer)
-        return texts.map(lambda t: [
-            {"sentence": s, "cls": c} for s, c in (extract(t) if t else [])
-        ])
-
-    return (df.where(F.col(text_col).isNotNull())
-            .select(id_col, F.explode(_extract(F.col(text_col))).alias("sc"))
-            .select(id_col, F.col("sc.sentence").alias("sentence"),
-                    F.col("sc.cls").alias("cls")))

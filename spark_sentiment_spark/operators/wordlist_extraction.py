@@ -77,19 +77,6 @@ def extract_wordlists(df: DataFrame, text_col: str, label_col: str,
     return vocab.join(F.broadcast(overlap), "word", "left_anti")
 
 
-def extract_wordlists_dict(df: DataFrame, text_col: str, label_col: str,
-                           **kwargs) -> dict:
-    """CreateScoreList.score's return shape: {category: [words...]} —
-    driver-side materialization of the distributed plan (the word lists are
-    vocabulary-sized)."""
-    rows = (extract_wordlists(df, text_col, label_col, **kwargs)
-            .select("category", "word").collect())
-    out: dict = {}
-    for r in rows:
-        out.setdefault(r["category"], []).append(r["word"])
-    return {k: sorted(v) for k, v in out.items()}
-
-
 def save_wordlists(df: DataFrame, text_col: str, label_col: str,
                    dest: str, **kwargs) -> None:
     """S15: one single-file text output dir per category

@@ -82,10 +82,10 @@ def score_documents(
     Plan shape: native clean (Column expressions) → ONE Arrow pandas UDF
     ``text → double`` with a per-worker token-value memo — a fully narrow,
     zero-shuffle pipeline. The alternative (explode → score distinct
-    tokens → join back → re-aggregate, see ``score_documents_exploded``)
-    shuffles the corpus token stream three times; with a Zipfian token
-    distribution the memo does the same distinct-token-sized Python work
-    without any shuffle, so the narrow form wins at every scale.
+    tokens → join back → re-aggregate) shuffles the corpus token stream
+    three times; with a Zipfian token distribution the memo does the same
+    distinct-token-sized Python work without any shuffle, so the narrow
+    form wins at every scale.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -126,61 +126,6 @@ def score_documents(
     return docs.withColumn(
         output_col,
         F.coalesce(_score_text(cleaned), F.lit(0.0)))
-
-
-def score_documents_exploded(docs: DataFrame) -> DataFrame:
-    """The explode/score-vocabulary/join-back formulation of
-    ``score_documents`` over ``doc_id``/``text`` — kept as a differential
-    twin (both must agree to 1e-9; see tests) and as the template for
-    cases where the per-token value is NOT memoizable (e.g.
-    context-dependent scoring)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _value(tokens: pd.Series) -> pd.Series:
-        from spark_sentiment_spark.functions.lexicon import word_value
-
-        return tokens.map(lambda t: word_value(t) if t is not None else 0.0)
-
-    @pandas_udf("double")
-    def _value_of_stem(tokens: pd.Series) -> pd.Series:
-        from spark_sentiment_spark.functions.lexicon import word_value
-        from spark_sentiment_spark.functions.stemmer import stem
-
-        return tokens.map(
-            lambda t: word_value(stem(t)) if t is not None else 0.0
-        )
-
-    toks = _tokens(docs)
-    # Score each *distinct* token once, then join back: the Python hop runs
-    # over the vocabulary, not the corpus.
-    vocab = toks.select("token").distinct()
-    vocab = vocab.select(
-        "token",
-        _value("token").alias("v_raw"),
-        _value_of_stem("token").alias("v_stem"),
-    )
-    # Plain equi-join back on token: AQE broadcasts it when the vocabulary is
-    # small; at 100 TB the distinct-token set may exceed broadcast limits, so
-    # we must not force a broadcast here.
-    scored = toks.join(vocab, "token", "left")
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum("v_raw").alias("raw_sum"),
-        F.count(F.when(F.col("v_raw") != 0, 1)).alias("raw_n"),
-        F.sum("v_stem").alias("stem_sum"),
-        F.count(F.when(F.col("v_stem") != 0, 1)).alias("stem_n"),
-    )
-    raw = F.when(F.col("raw_n") > 0, F.col("raw_sum") / F.col("raw_n"))
-    stm = F.when(F.col("stem_n") > 0, F.col("stem_sum") / F.col("stem_n"))
-    combined = (
-        F.when(raw.isNotNull() & stm.isNotNull(), (raw + stm) / 2)
-        .when(raw.isNotNull(), raw)
-        .when(stm.isNotNull(), stm)
-        .otherwise(F.lit(0.0))
-    )
-    per_doc = per_doc.select("doc_id", combined.alias("sentiment"))
-    out = docs.join(per_doc, "doc_id", "left")
-    return out.withColumn("sentiment", F.coalesce(F.col("sentiment"), F.lit(0.0)))
 
 
 def fuzzy_lexicon_scores(tokens: DataFrame, token_col: str = "token",

@@ -154,22 +154,13 @@ FACT_KEYS = {
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
 
-    from spark_sentiment_spark.sources.io import load_parquet_utc
+    from spark_sentiment_spark.sources.io import (events_ts_utc,
+                                                  load_parquet_utc)
 
     df = load_parquet_utc(spark, f"{sf_dir}/{table}.parquet")
-    if table == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        # nanos → micros (floor), matching DuckDB's nanos→TIMESTAMP cast.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if table == "events" and isinstance(df.schema["ts"].dataType,
-                                        TimestampNTZType):
-        # Newer testdata writes TIMESTAMP(isAdjustedToUTC=false), which Spark
-        # reads as TIMESTAMP_NTZ. Downstream plans use epoch arithmetic
-        # (unix_millis) that requires TIMESTAMP; with the session pinned to
-        # UTC the cast is a pure type change, wall-clock identical to the
-        # (timezone-naive) DuckDB oracle's read.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if table == "events":
+        df = events_ts_utc(df)
     if table in FACT_KEYS and _fanout_needed(spark):
         df = df.repartition(spark.sparkContext.defaultParallelism,
                             F.col(FACT_KEYS[table]))

@@ -541,8 +541,9 @@ def streaming_scd2_merge(spark, sf_dir):
     each micro-batch applies `scd2_merge` against the CURRENT dimension
     version and writes the merged dimension as the NEXT version —
     overwrite-per-version, so a replayed batch rewrites its own output
-    instead of corrupting the chain (the write_exactly_once contract,
-    applied to a full-snapshot dimension instead of an append sink).
+    instead of corrupting the chain (the overwrite-per-batch contract of
+    `run_probe_stream`, applied to a full-snapshot dimension instead of
+    an append sink).
     Oracle = the full rebuild (`SCD2_SQL` verbatim): over the finite
     availableNow source the final version must equal rebuilding from all
     events, through the streaming engine's trigger plumbing

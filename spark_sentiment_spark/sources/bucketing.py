@@ -9,7 +9,7 @@ at 100 TB this removes the dominant shuffle of fact-to-fact joins, and at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def save_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
@@ -25,10 +25,3 @@ def save_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  on: list[str]) -> DataFrame:
-    """Inner-join two same-bucketed tables; with matching bucketing
-    Catalyst plans a zero-exchange sort-merge join."""
-    return spark.table(left_table).join(spark.table(right_table), on)

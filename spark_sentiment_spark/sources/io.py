@@ -33,6 +33,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, TimestampNTZType
 
 #: Sniffing candidates in reference preference order (IO.scala:12-16).
 DELIMITER_CANDIDATES = (",", "|", ":", "\t", ";")
@@ -321,6 +322,22 @@ def load_parquet_utc(spark: SparkSession, path: str) -> DataFrame:
     except Exception:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return _read_inferred(spark, "parquet", path)
+
+
+def events_ts_utc(df: DataFrame) -> DataFrame:
+    """The events frame (batch or stream) as read by ``load_parquet_utc``,
+    with ``ts`` a TIMESTAMP: nanos-as-long become micros (floor), matching
+    DuckDB's nanos→TIMESTAMP cast. Newer testdata writes TIMESTAMP
+    (isAdjustedToUTC=false), which Spark reads as TIMESTAMP_NTZ; plans use
+    epoch arithmetic (unix_millis, watermarks) that requires TIMESTAMP,
+    and with the session pinned to UTC the cast is a pure type change,
+    wall-clock identical to the timezone-naive DuckDB oracle's read."""
+    ts = df.schema["ts"].dataType
+    if isinstance(ts, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def save(df: DataFrame, path: str, filetype: str = "parquet",

@@ -21,15 +21,13 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
 
 from spark_sentiment_spark.operators.event_windows import sliding_hour_counts
 from spark_sentiment_spark.plans.registry import track_staging_dir
-from spark_sentiment_spark.sources.io import load_parquet_utc
+from spark_sentiment_spark.sources.io import events_ts_utc, load_parquet_utc
 
 #: The longest any streaming run here may take, in seconds. A run still
 #: going then is stopped and raises TimeoutError instead of hanging.
@@ -58,51 +56,32 @@ def await_stream(query) -> None:
 
 def _stage_dir(path: str) -> str:
     """The file stream source requires a *directory*; the testdata ships one
-    bare parquet file per table. Stage it into a per-source temp dir via
-    hardlink (fallback: copy), anew once another file replaces the one at
-    ``path``. A path that already IS a directory (the standard Spark table
-    layout) streams as-is — real deployments stream a directory or a Kafka
-    topic and skip this shim entirely."""
-    import hashlib
-    import uuid
-
+    bare parquet file per table. Stage it into a fresh staging dir of the
+    current run via hardlink (fallback: copy), so each read sees the file
+    now at ``path`` and the run's end removes the copy. A path that already
+    IS a directory (the standard Spark table layout) streams as-is — real
+    deployments stream a directory or a Kafka topic and skip this shim
+    entirely."""
     if os.path.isdir(path):
         return path
-    key = hashlib.md5(path.encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"evstream_{key}")
+    d = track_staging_dir("evstream_")
     target = os.path.join(d, os.path.basename(path))
-    if not (os.path.exists(target) and os.path.samefile(path, target)):
-        os.makedirs(d, exist_ok=True)
-        # A hidden name the stream source skips, then one atomic rename.
-        tmp = os.path.join(d, f".{uuid.uuid4().hex}")
-        try:
-            os.link(path, tmp)
-        except OSError:
-            shutil.copy2(path, tmp)
-        os.replace(tmp, target)
+    try:
+        os.link(path, target)
+    except OSError:
+        shutil.copy2(path, target)
     return d
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (schema from a static
-    read; ts normalized from TIMESTAMP(NANOS) exactly like the batch
-    loader)."""
+    read; ts normalized exactly like the batch loader, which is
+    wall-clock-identical only under the UTC session timezone this read
+    pins)."""
     path = f"{sf_dir}/events.parquet"
-    # The NTZ→TIMESTAMP normalization below is wall-clock-identical to the
-    # batch loader only when the session timezone is UTC, which this read
-    # pins.
     static = load_parquet_utc(spark, path)
-    stream = (spark.readStream.schema(static.schema)
-              .parquet(_stage_dir(path)))
-    if isinstance(static.schema["ts"].dataType, LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(static.schema["ts"].dataType, TimestampNTZType):
-        # TIMESTAMP(isAdjustedToUTC=false) parquet reads as TIMESTAMP_NTZ;
-        # normalize to TIMESTAMP (session tz pinned UTC → same wall clock)
-        # so watermarks/epoch arithmetic type-check like the batch loader.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return events_ts_utc(spark.readStream.schema(static.schema)
+                         .parquet(_stage_dir(path)))
 
 
 def tumbling_hourly(events: DataFrame) -> DataFrame:
@@ -246,31 +225,6 @@ def stream_stream_conversions(events: DataFrame) -> DataFrame:
     )
 
 
-def write_exactly_once(stream_df: DataFrame, out_dir: str,
-                       checkpoint_dir: str):
-    """Exactly-once file sink via ``foreachBatch``: each micro-batch lands
-    in its own ``batch_id=<n>`` partition directory with ``overwrite``
-    mode, so a batch replayed after a crash-restart overwrites its own
-    previous (possibly partial) output instead of appending duplicates —
-    idempotent writes + the checkpointed offset log = end-to-end
-    exactly-once for any sink Spark can overwrite atomically-enough
-    (object stores, HDFS, JDBC upserts with the batch id as key).
-
-    Returns the started query; callers ``awaitTermination()``. Reading the
-    result is a plain ``spark.read.parquet(out_dir)`` (the batch_id
-    partition column is pruned like any other)."""
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}")
-
-    return (stream_df.writeStream
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
 def stage_ordered_segments(slices, prefix: str) -> str:
     """Stage each DataFrame slice as ONE parquet file with ascending
     names AND mtimes in a fresh tracked staging dir: the file stream
@@ -307,9 +261,10 @@ def run_probe_stream(spark: SparkSession, segments, probe, out_schema: str,
     under ``foreachBatch`` — batch semantics (windows, collects) inside a
     stream. Each batch's result is written to its own ``batch_id=<n>``
     directory in overwrite mode, so a replayed batch rewrites its own
-    output (exactly-once, as in `write_exactly_once`). Returns the union
-    of the batch results as ``out_schema`` (empty if no batch wrote a
-    file); ``prefix`` names the staging dirs."""
+    output; with the checkpointed offset log that makes the sink
+    exactly-once. Returns the union of the batch results as
+    ``out_schema`` (empty if no batch wrote a file); ``prefix`` names the
+    staging dirs."""
     stream_dir = stage_ordered_segments(segments, f"{prefix}_stream_")
     out_dir = track_staging_dir(f"{prefix}_hits_")
     ckpt = track_staging_dir(f"{prefix}_ckpt_")

@@ -100,19 +100,6 @@ def test_unknown_method_raises(spark, tweet_csv):
         analyze(spark, tweet_csv, method="nope")
 
 
-def test_sentence_sentiments_udtf(spark):
-    from spark_sentiment_spark.operators.nlp_sentiment import (
-        sentence_sentiments)
-
-    df = spark.createDataFrame(
-        [(1, "this is great. this is awful. neutral words here.")],
-        "id int, text string")
-    out = sentence_sentiments(df, "text", "id").collect()
-    assert len(out) == 3
-    classes = [r["cls"] for r in out]
-    assert classes[0] >= 3 and classes[1] <= 1
-
-
 def test_compute_sentiment_longest_sentence_wins():
     from spark_sentiment_spark.operators.nlp_sentiment import (
         compute_sentiment)

@@ -25,6 +25,7 @@ from __future__ import annotations
 import ast
 import io
 import collections
+import functools
 import itertools
 import re
 import tokenize
@@ -36,11 +37,18 @@ LOWER = ("operators", "functions", "sources", "streaming")
 REGISTRY = f"{PKG}.plans.registry"
 
 
+@functools.cache
+def _parsed(path: Path) -> tuple[str, ast.Module]:
+    """(source, AST) of ``path``, read and parsed once for all guards."""
+    src = path.read_text()
+    return src, ast.parse(src, str(path))
+
+
 def _imported_modules(path: Path) -> list[tuple[int, str]]:
     """(line, dotted module) for every import in ``path``, at any depth;
     ``from <pkg>.plans import mod`` yields ``<pkg>.plans.mod``."""
     out = []
-    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+    for node in ast.walk(_parsed(path)[1]):
         if isinstance(node, ast.Import):
             out += [(node.lineno, a.name) for a in node.names]
         elif isinstance(node, ast.ImportFrom) and node.module == f"{PKG}.plans":
@@ -96,8 +104,7 @@ def _function_tokens(path: Path) -> dict[str, list[str]]:
     """Token strings of every top-level function in ``path`` (decorators
     excluded), without comments, docstrings or layout tokens; string
     literals stay."""
-    src = path.read_text()
-    tree = ast.parse(src, str(path))
+    src, tree = _parsed(path)
     docstrings = set()
     for node in ast.walk(tree):
         if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
@@ -201,8 +208,7 @@ def _defaulted_params() -> dict[str, tuple[str, list[str], dict[str, str]]]:
     once."""
     defs: dict[str, list] = {}
     for path in sorted(ROOT.rglob("*.py")):
-        src = path.read_text()
-        tree = ast.parse(src, str(path))
+        src, tree = _parsed(path)
         segment = _source_of(src)
         parents = {c: n for n in ast.walk(tree)
                    for c in ast.iter_child_nodes(n)}
@@ -232,9 +238,9 @@ def unvaried_settings() -> list[str]:
     funcs = _defaulted_params()
     varied: set[tuple[str, str]] = set()
     for path in _call_sources():
-        src = path.read_text()
+        src, tree = _parsed(path)
         segment = _source_of(src)
-        for node in ast.walk(ast.parse(src, str(path))):
+        for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
             f = node.func
@@ -267,6 +273,109 @@ def test_every_default_is_varied():
     assert not stale, f"allow-listed settings now varied or gone: {stale}"
 
 
+# --- Reach guard: every package definition has a caller ----------------------
+
+#: Top-level definitions kept although no root reaches them, keyed
+#: "module.py::name" (module path relative to the package), each with its
+#: one-line reason.
+REACH_ALLOWED: dict[str, str] = {
+    "operators/asof.py::asof_join_cogrouped":
+        "reference twin: tests/test_properties.py checks asof_join "
+        "against this cogrouped form",
+    "plans/pipeline_queries.py::_dedup_ranked":
+        "reference twin: the join-back form the inline curation rank "
+        "replaced, kept to compare against",
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _names(*nodes: ast.AST) -> set[str]:
+    """Every ``ast.Name`` id and ``ast.Attribute`` attr under ``nodes``."""
+    return {n.id if isinstance(n, ast.Name) else n.attr
+            for node in nodes for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))}
+
+
+def _is_registered(node: ast.AST) -> bool:
+    """Decorated ``@register(...)`` (a query) or ``@atexit.register``."""
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if getattr(f, "id", getattr(f, "attr", None)) == "register":
+            return True
+    return False
+
+
+def unreached_definitions() -> list[str]:
+    """``module.py::name`` for every top-level ``def`` or ``class`` under
+    the package that no root reaches by name.
+
+    Roots are the registered queries and exit hooks, the package's
+    ``__all__``, dunder definitions the
+    interpreter calls, every package module's import-time code (statements
+    outside ``def`` and ``class`` bodies, decorators, defaults and bases),
+    and every identifier and string literal in the driver entry point, the
+    bench, ``scripts/`` and ``perfbench/`` (which wraps functions by name).
+    A definition is reached when a reached definition names it."""
+    defs: dict[str, list[ast.AST]] = {}
+    where: dict[int, str] = {}
+    roots: set[str] = set()
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = path.relative_to(ROOT).as_posix()
+        for node in _parsed(path)[1].body:
+            if not isinstance(node, _DEFS):
+                roots |= _names(node)
+                if rel == "__init__.py" and any(
+                        isinstance(t, ast.Name) and t.id == "__all__"
+                        for t in getattr(node, "targets", ())):
+                    roots |= {c.value for c in ast.walk(node.value)
+                              if isinstance(c, ast.Constant)}
+                continue
+            defs.setdefault(node.name, []).append(node)
+            where[id(node)] = f"{rel}::{node.name}"
+            roots |= _names(*node.decorator_list)
+            if isinstance(node, ast.ClassDef):
+                roots |= _names(*node.bases, *node.keywords)
+            else:
+                roots |= _names(*node.args.defaults, *filter(
+                    None, node.args.kw_defaults))
+            if _is_registered(node) or node.name.startswith("__"):
+                roots.add(node.name)
+    for path in _call_sources():
+        if path.is_relative_to(ROOT) or path.is_relative_to(TESTS):
+            continue
+        for n in ast.walk(_parsed(path)[1]):
+            if isinstance(n, ast.Name):
+                roots.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                roots.add(n.attr)
+            elif isinstance(n, ast.alias):
+                roots.add(n.name.rsplit(".", 1)[-1])
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                roots.add(n.value)
+    reached: set[str] = set()
+    todo = list(roots & defs.keys())
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo += _names(*defs[name]) & defs.keys()
+    return sorted(where[id(node)] for name, nodes in defs.items()
+                  if name not in reached for node in nodes)
+
+
+def test_every_definition_is_reached():
+    unreached = unreached_definitions()
+    dead = [k for k in unreached if k not in REACH_ALLOWED]
+    assert not dead, (
+        f"{len(dead)} package definitions are reached by no entry point, "
+        "query, script or benchmark; delete each (with the tests that "
+        "exercise nothing else) or allow-list it with its reason:\n"
+        + "\n".join(dead))
+    stale = sorted(REACH_ALLOWED.keys() - set(unreached))
+    assert not stale, f"allow-listed definitions now reached or gone: {stale}"
+
+
 def test_no_duplicate_table_loads_in_any_query():
     """No query function calls load() twice for the same table: every
     multi-branch consumer either persists the shared frame or derives
@@ -275,7 +384,7 @@ def test_no_duplicate_table_loads_in_any_query():
     scan."""
     offenders = []
     for path in sorted((ROOT / "plans").glob("*_queries.py")):
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        for node in ast.walk(_parsed(path)[1]):
             if not isinstance(node, ast.FunctionDef):
                 continue
             loads = collections.Counter()
@@ -301,7 +410,7 @@ def test_no_test_name_encodes_a_round():
     bad = [p.name for p in sorted(TESTS.glob("*.py"))
            if ROUND_NAME.search(p.stem + "_")]
     for path in sorted(TESTS.glob("test_*.py")):
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        for node in ast.walk(_parsed(path)[1]):
             if isinstance(node, ast.FunctionDef) \
                     and node.name.startswith("test_") \
                     and ROUND_NAME.search(node.name + "_"):
@@ -322,7 +431,7 @@ def test_tests_read_plans_through_the_walker():
     for path in sorted(TESTS.rglob("*.py")):
         if path.name == "plan_walk.py":
             continue
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        for node in ast.walk(_parsed(path)[1]):
             if isinstance(node, ast.Call) \
                     and isinstance(node.func, ast.Attribute) \
                     and node.func.attr == "toString" \

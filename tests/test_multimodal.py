@@ -2,7 +2,6 @@
 codec-free (JVM-native) metadata path."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 from tests.plan_walk import nodes, python_nodes
@@ -70,25 +69,6 @@ def test_decode_features_shape(mm):
     assert 0 <= row["entropy_bits"] <= 8
     assert 1 <= row["width"] <= 640 and 1 <= row["height"] <= 480
     assert feats.count() == mm.count()
-
-
-def test_resize_stub(mm):
-    from spark_sentiment_spark.operators.multimodal import resize_stub
-
-    out = resize_stub(mm, max_dim=16)  # 256-byte cap → everything truncates
-    assert dict(out.dtypes)["content"] == "binary"
-    over = out.where(F.length("content") > 256).count()
-    assert over == 0
-    assert out.where(F.col("resized")).count() > 0
-
-
-def test_frame_sample_stub(mm):
-    from spark_sentiment_spark.operators.multimodal import frame_sample_stub
-
-    out = frame_sample_stub(mm)
-    assert out.count() == mm.count() * 4
-    idx = {r[0] for r in out.select("frame_idx").distinct().collect()}
-    assert idx == {0, 1, 2, 3}
 
 
 # --- Real container-header parsing (native + Arrow twins) -------------------

@@ -9,8 +9,7 @@ from tests.plan_walk import exchanges, nodes
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from spark_sentiment_spark.sources.bucketing import (bucketed_join,
-                                                         save_bucketed)
+    from spark_sentiment_spark.sources.bucketing import save_bucketed
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet") \
         .select("l_orderkey", "l_quantity")
@@ -23,7 +22,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, "li_b", "ord_b", ["l_orderkey"])
+        joined = spark.table("li_b").join(spark.table("ord_b"), "l_orderkey")
         # co-located buckets: no shuffle
         assert not exchanges(nodes(joined))
         # same result as the plain join

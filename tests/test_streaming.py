@@ -242,50 +242,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert sum(rows.values()) <= 3
 
 
-def test_exactly_once_sink_idempotent_across_restart(spark, tmp_path):
-    """The foreachBatch exactly-once sink: (1) stream output == batch
-    output; (2) restarting against the same checkpoint with no new data
-    writes nothing new; (3) a replayed batch overwrites its own directory
-    rather than appending duplicates."""
-    import glob
-
-    from spark_sentiment_spark.streaming.streams import (read_event_stream,
-                                                         write_exactly_once)
-
-    sf_dir = SF_DIR
-    out = str(tmp_path / "eo_out")
-    ckpt = str(tmp_path / "eo_ckpt")
-    stream = (read_event_stream(spark, sf_dir)
-              .where(F.col("event_type") == "click")
-              .select("user_id", "ts", "value"))
-    q = write_exactly_once(stream, out, ckpt)
-    q.awaitTermination()
-
-    batch = (spark.read.parquet(f"{sf_dir}/events.parquet")
-             .where(F.col("event_type") == "click").count())
-    first = spark.read.parquet(out)
-    assert first.count() == batch
-
-    # restart, same checkpoint: availableNow sees no new offsets → no new
-    # batch directories, identical row count
-    dirs_before = sorted(glob.glob(f"{out}/batch_id=*"))
-    q2 = write_exactly_once(stream, out, ckpt)
-    q2.awaitTermination()
-    assert sorted(glob.glob(f"{out}/batch_id=*")) == dirs_before
-    assert spark.read.parquet(out).count() == batch
-
-    # simulate a replay of batch 0 (crash after write, before commit):
-    # rerunning the same batch overwrites its directory — same count, no
-    # duplicates — which is the idempotence the sink contract rests on
-    df0 = spark.read.parquet(dirs_before[0])
-    rows0 = df0.collect()  # materialize: can't lazily read what we overwrite
-    n0 = len(rows0)
-    spark.createDataFrame(rows0, df0.schema) \
-        .write.mode("overwrite").parquet(dirs_before[0])
-    assert spark.read.parquet(dirs_before[0]).count() == n0
-    assert spark.read.parquet(out).count() == batch
-
-
 def test_streaming_hll_state_equals_batch(spark, query):
     """The streaming engine's 256-row HLL state (max rho per bucket) must
     equal the batch groupBy over the same finite source — the
@@ -362,11 +318,13 @@ def test_event_stream_reads_a_replaced_source_file(spark, tmp_path,
                                                   monkeypatch):
     """A bare events file is staged for the stream source; when a new file
     replaces it at the same path, the next stream reads the new rows, not
-    the staged copy of the old ones."""
+    the staged copy of the old ones. The staged copy belongs to the run
+    that read it and is gone when the run ends."""
     import tempfile
 
     import pyarrow.parquet as pq
 
+    from spark_sentiment_spark.plans import registry
     from spark_sentiment_spark.streaming.streams import (read_event_stream,
                                                          run_to_memory)
 
@@ -377,10 +335,12 @@ def test_event_stream_reads_a_replaced_source_file(spark, tmp_path,
     for n in (10, 25):
         pq.write_table(events.slice(0, n), tmp_path / "next.parquet")
         os.replace(tmp_path / "next.parquet", path)
-        got = run_to_memory(read_event_stream(spark, str(tmp_path)),
-                            f"t_restaged_{n}", "append")
-        counts.append(got.count())
+        with registry.run():
+            got = run_to_memory(read_event_stream(spark, str(tmp_path)),
+                                f"t_restaged_{n}", "append")
+            counts.append(got.count())
     assert counts == [10, 25]
+    assert not list(tmp_path.glob("evstream_*"))
 
 
 # --- streaming catalog queries --------------------------------------------

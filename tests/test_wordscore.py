@@ -41,22 +41,6 @@ def test_full_matches_python_transcription(spark, docs):
         )
 
 
-def test_exploded_variant_agrees(spark, docs):
-    """The narrow memoized-UDF plan and the explode/join plan are
-    differential twins — must agree to 1e-9 on every document."""
-    from spark_sentiment_spark.operators.wordscore import (
-        score_documents_exploded)
-
-    a = {r["doc_id"]: r["sentiment"]
-         for r in score_documents(docs).select("doc_id", "sentiment").collect()}
-    b = {r["doc_id"]: r["sentiment"]
-         for r in score_documents_exploded(docs)
-         .select("doc_id", "sentiment").collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert a[k] == pytest.approx(b[k], abs=1e-9), f"doc {k}"
-
-
 def test_known_sentences(spark):
     df = spark.createDataFrame(
         [(1, "this is nice and happy"), (2, "bad badly awful"),
