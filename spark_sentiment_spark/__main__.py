@@ -89,9 +89,9 @@ def main(argv: list[str] | None = None) -> int:
         try:
             for name in all_queries():
                 q = REGISTRY[name]
-                tags = ",".join(q.tags)
+                family = q.fn.__module__.rsplit(".", 1)[-1]
                 oracle = "oracle" if q.sql else "rows-only"
-                print(f"{name}\t[{tags}]\t{oracle}")
+                print(f"{name}\t{family}\t{oracle}")
         except BrokenPipeError:      # e.g. piped into `head`
             sys.stderr.close()
         return 0

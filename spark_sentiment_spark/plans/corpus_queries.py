@@ -93,7 +93,7 @@ ORDER BY source
 """
 
 
-@register("mixture_temperature", sql=MIXTURE_TEMP_SQL, tags=("pipeline",))
+@register(sql=MIXTURE_TEMP_SQL)
 def mixture_temperature(spark, sf_dir):
     """Temperature-scaled source sampling weights (multilingual-LM style:
     w_i ∝ n_i^alpha, alpha=0.7) plus the implied per-source epoch count
@@ -141,8 +141,7 @@ ORDER BY cnt.source
 """
 
 
-@register("corpus_token_entropy", sql=ENTROPY_SQL, bench=True,
-          tags=("pipeline", "text"))
+@register(sql=ENTROPY_SQL, bench=True)
 def corpus_token_entropy(spark, sf_dir):
     """Shannon entropy (bits) of the per-source unigram distribution — a
     diversity/quality signal (template-generated or boilerplate-heavy
@@ -199,7 +198,7 @@ ORDER BY w1, w2
 """
 
 
-@register("token_pmi_bigrams", sql=PMI_SQL, tags=("pipeline", "text"))
+@register(sql=PMI_SQL)
 def token_pmi_bigrams(spark, sf_dir):
     """Pointwise mutual information of adjacent token pairs (collocation
     mining / phrase-vocabulary induction, word2vec-style). The corpus
@@ -272,8 +271,7 @@ ORDER BY label
 """
 
 
-@register("embedding_norm_stats", sql=EMB_STATS_SQL,
-          tags=("pipeline", "similarity"))
+@register(sql=EMB_STATS_SQL)
 def embedding_norm_stats(spark, sf_dir):
     """Embedding-table QA: per-label count, NULL/empty-vector count,
     dimensionality, zero-vector count, norm mean/spread, and mean
@@ -358,8 +356,7 @@ ORDER BY a.vec_id
 """
 
 
-@register("contrastive_pairs", sql=CONTRASTIVE_SQL, bench=True,
-          tags=("pipeline", "similarity"))
+@register(sql=CONTRASTIVE_SQL, bench=True)
 def contrastive_pairs(spark, sf_dir):
     """Deterministic (anchor, positive, negative) triple generation for
     contrastive embedding training. Positives come from a per-label hash
@@ -451,7 +448,7 @@ ORDER BY b.source, pair_id
 """
 
 
-@register("preference_pairs", sql=PREFERENCE_SQL, tags=("pipeline",))
+@register(sql=PREFERENCE_SQL)
 def preference_pairs(spark, sf_dir):
     """Preference-pair assembly for reward-model training: within each
     source, documents are ranked by a quality score (distinct-token ratio
@@ -536,7 +533,7 @@ ORDER BY bin
 """
 
 
-@register("drift_psi", sql=DRIFT_PSI_SQL, tags=("pipeline", "quality"))
+@register(sql=DRIFT_PSI_SQL)
 def drift_psi(spark, sf_dir):
     """Population Stability Index between two corpus cohorts — the
     standard production data-drift monitor (PSI < 0.1 stable, > 0.25
@@ -626,7 +623,7 @@ ORDER BY r.source, r.pick
 """
 
 
-@register("mixture_apply", sql=MIXTURE_APPLY_SQL, tags=("pipeline",))
+@register(sql=MIXTURE_APPLY_SQL)
 def mixture_apply(spark, sf_dir):
     """Materialize the temperature mixture: each source contributes an
     integer-exact quota of documents (capped at its size), selected by
@@ -705,7 +702,7 @@ ORDER BY ks.source, ks.k
 """
 
 
-@register("mixture_upsample", sql=MIXTURE_UPSAMPLE_SQL, tags=("pipeline",))
+@register(sql=MIXTURE_UPSAMPLE_SQL)
 def mixture_upsample(spark, sf_dir):
     """Temperature mixture with UPSAMPLING — what `mixture_apply`'s
     n_docs cap deliberately avoids: in a production pretraining mix,
@@ -814,7 +811,7 @@ ORDER BY token
 PAGERANK_SQL = _pagerank_sql()
 
 
-@register("token_pagerank", sql=PAGERANK_SQL, tags=("pipeline", "text"))
+@register(sql=PAGERANK_SQL)
 def token_pagerank(spark, sf_dir, vocab_cap: int = PAGERANK_VOCAB_CAP):
     """TextRank (Mihalcea & Tarau 2004) centrality of the token
     co-occurrence graph — the keyword-importance signal behind extractive
@@ -949,7 +946,7 @@ ORDER BY shard
 """
 
 
-@register("vocab_growth_curve", sql=VOCAB_GROWTH_SQL, tags=("corpus",))
+@register(sql=VOCAB_GROWTH_SQL)
 def vocab_growth_curve(spark, sf_dir):
     """Heaps'-law vocabulary growth: stream the corpus in 16
     content-addressed shards (first md5 hex digit of doc_id — a
@@ -1041,7 +1038,7 @@ FROM sums
 """
 
 
-@register("token_zipf_fit", sql=ZIPF_FIT_SQL, tags=("corpus", "stats"))
+@register(sql=ZIPF_FIT_SQL)
 def token_zipf_fit(spark, sf_dir):
     """Zipf power-law fit: least-squares slope (and r²) of ln(freq) vs
     ln(rank) over the full vocabulary — the one-number corpus-health
@@ -1108,7 +1105,7 @@ ORDER BY source
 """
 
 
-@register("token_hapax_rate", sql=HAPAX_SQL, tags=("text", "corpus"))
+@register(sql=HAPAX_SQL)
 def token_hapax_rate(spark, sf_dir):
     """Hapax-legomena share per source — the lexical-richness /
     boilerplate dial: a source whose vocabulary is dominated by
@@ -1180,7 +1177,7 @@ FROM stats s CROSS JOIN tri t
 """
 
 
-@register("graph_triangle_count", sql=TRIANGLE_SQL, tags=("text", "graph"))
+@register(sql=TRIANGLE_SQL)
 def graph_triangle_count(spark, sf_dir):
     """Triangle count + global transitivity of the token co-occurrence
     graph — the third graph-analytics class in the catalog (after
@@ -1261,7 +1258,7 @@ LIMIT 50
 """
 
 
-@register("token_burstiness", sql=BURSTINESS_SQL, tags=("text", "corpus"))
+@register(sql=BURSTINESS_SQL)
 def token_burstiness(spark, sf_dir):
     """Church–Gale burstiness of each term: the variance-to-mean ratio
     of its per-document counts, restricted to documents that contain it.
@@ -1339,8 +1336,7 @@ WHERE CAST(n AS DOUBLE) * CAST(q AS DOUBLE)
 """
 
 
-@register("graph_degree_assortativity", sql=ASSORT_SQL,
-          tags=("text", "graph"))
+@register(sql=ASSORT_SQL)
 def graph_degree_assortativity(spark, sf_dir):
     """Degree assortativity (Newman's r) of the token co-occurrence
     graph — completing the graph-analytics family's structural triple
@@ -1402,7 +1398,7 @@ ORDER BY doc_id
 """
 
 
-@register("doc_winnowing", sql=WINNOW_SQL, tags=("text", "dedup"))
+@register(sql=WINNOW_SQL)
 def doc_winnowing(spark, sf_dir):
     """WINNOWING fingerprints (Schleimer–Wilkerson–Aiken, the MOSS
     algorithm) — the position-robust upgrade of `doc_fingerprints` and
@@ -1470,8 +1466,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register("dedup_winnowing_pairs", sql=WINNOW_PAIRS_SQL,
-          tags=("dedup", "text"))
+@register(sql=WINNOW_PAIRS_SQL)
 def dedup_winnowing_pairs(spark, sf_dir):
     """Near-dup candidate pairs from WINNOWING fingerprints — the
     payoff query that turns `doc_winnowing`'s sketch into a dedup
@@ -1555,8 +1550,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register("dedup_winnowing_incremental", sql=WINNOW_INCR_SQL,
-          tags=("dedup", "text", "pipeline"))
+@register(sql=WINNOW_INCR_SQL)
 def dedup_winnowing_incremental(spark, sf_dir):
     """Incremental WINNOWING near-dup — the growing-corpus shape for the
     MOSS fingerprint family, mirroring `dedup_incremental_minhash`'s
@@ -1689,7 +1683,7 @@ ORDER BY d0.doc_id
 """
 
 
-@register("corpus_dsir_weights", sql=DSIR_SQL, tags=("corpus", "pipeline"))
+@register(sql=DSIR_SQL)
 def corpus_dsir_weights(spark, sf_dir):
     """Per-document DSIR importance weight log p_target(x)/p_raw(x) under
     hashed-bigram bag models — the data-selection score that, fed to the
@@ -1782,7 +1776,7 @@ ORDER BY rn
 """
 
 
-@register("sample_dsir", sql=SAMPLE_DSIR_SQL, tags=("corpus", "pipeline"))
+@register(sql=SAMPLE_DSIR_SQL)
 def sample_dsir(spark, sf_dir):
     """The MATERIALIZED DSIR resample — `corpus_dsir_weights` driven
     through the Gumbel-top-k draw the weights exist for: sampling k docs

@@ -40,7 +40,7 @@ ORDER BY doc_id
 """
 
 
-@register("dedup_exact", sql=EXACT_SQL, bench=True, tags=("dedup",))
+@register(sql=EXACT_SQL, bench=True)
 def dedup_exact(spark, sf_dir):
     """Exact dedup, keep-first (lowest doc_id) per content hash — one
     hash shuffle, no collect."""
@@ -87,7 +87,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register("dedup_jaccard_pairs", sql=JACCARD_SQL, tags=("dedup",))
+@register(sql=JACCARD_SQL)
 def dedup_jaccard_pairs(spark, sf_dir):
     """Exact 3-shingle-set Jaccard near-dup pairs (threshold 0.9). The
     inverted-index self-join is the textbook exact formulation — quadratic in
@@ -118,8 +118,7 @@ def _jaccard_pair_frame(docs):
     )
 
 
-@register("dedup_minhash_lsh", bench=True, sql=minhash_oracle_sql(),
-          tags=("dedup",))
+@register(sql=minhash_oracle_sql(), bench=True)
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash near-dup candidate pairs at scale: shingle → minhash
     signature → band → bucket join (the standard LSH banding scheme).
@@ -182,8 +181,7 @@ def _batch_signatures(spark, sf_dir):
     return sig, sig.where(is_new), sig.where(~is_new)
 
 
-@register("dedup_incremental_minhash", sql=_incr_minhash_oracle_sql(),
-          tags=("dedup", "pipeline"))
+@register(sql=_incr_minhash_oracle_sql())
 def dedup_incremental_minhash(spark, sf_dir):
     """Incremental NEAR-dup — the production shape for a GROWING corpus,
     marrying `dedup_incremental` (exact-hash index maintained across
@@ -278,7 +276,7 @@ ORDER BY doc_id
 """
 
 
-@register("dedup_simhash", sql=_simhash_oracle_sql(), tags=("dedup",))
+@register(sql=_simhash_oracle_sql())
 def dedup_simhash(spark, sf_dir):
     """60-bit SimHash per document, fully native: per-token md5-derived
     hash, per-bit +1/−1 vote weighted by token frequency, sign → bit.
@@ -366,7 +364,7 @@ ORDER BY doc_id
 """
 
 
-@register("dedup_clusters", sql=CLUSTERS_SQL, tags=("dedup",))
+@register(sql=CLUSTERS_SQL)
 def dedup_clusters(spark, sf_dir):
     """Duplicate GROUPS, not just pairs: connected components of the
     >= 0.9-Jaccard near-dup graph, each doc labeled with the smallest
@@ -444,8 +442,7 @@ ORDER BY train_doc, eval_doc
 """
 
 
-@register("decontaminate_minhash", sql=DECON_MINHASH_SQL,
-          tags=("dedup", "text"))
+@register(sql=DECON_MINHASH_SQL)
 def decontaminate_minhash(spark, sf_dir):
     """Fuzzy train/eval decontamination — the near-dup complement of
     `decontaminate_ngram` (which needs an exact 8-gram hit). Documents with
@@ -562,7 +559,7 @@ ORDER BY cluster_size
 """
 
 
-@register("dedup_cluster_stats", sql=CLUSTER_STATS_SQL, tags=("dedup",))
+@register(sql=CLUSTER_STATS_SQL)
 def dedup_cluster_stats(spark, sf_dir):
     """Duplicate-group size histogram — the dashboard number a dedup run
     reports: how many groups of each size exist, how many documents they
@@ -608,8 +605,7 @@ ORDER BY component
 """
 
 
-@register("dedup_cluster_canonical", sql=CLUSTER_CANONICAL_SQL,
-          tags=("dedup",))
+@register(sql=CLUSTER_CANONICAL_SQL)
 def dedup_cluster_canonical(spark, sf_dir):
     """The end of the near-dup pipeline: one surviving document per
     duplicate component, chosen by QUALITY (longest text, ties to lowest
@@ -672,7 +668,7 @@ def char_ngram_stats(docs, n: int = CHAR_NGRAM_LEN):
             .orderBy("doc_id"))
 
 
-@register("dedup_char_ngrams", sql=CHAR_NGRAM_SQL, tags=("dedup", "text"))
+@register(sql=CHAR_NGRAM_SQL)
 def dedup_char_ngrams(spark, sf_dir):
     """Per-document verbatim-span duplication signal: the fraction of a
     doc's distinct character ``CHAR_NGRAM_LEN``-grams that also appear in at
@@ -795,7 +791,7 @@ def _simjoin_candidates(tok):
             .distinct())
 
 
-@register("dedup_simjoin_prefix", sql=SIMJOIN_PREFIX_SQL, tags=("dedup",))
+@register(sql=SIMJOIN_PREFIX_SQL)
 def dedup_simjoin_prefix(spark, sf_dir):
     """EXACT bigram-set similarity join at Jaccard >= 3/5 via prefix
     filtering (PPJoin's candidate rule): order every doc's token bigrams
@@ -869,7 +865,7 @@ ORDER BY src, dst
 """
 
 
-@register("dedup_containment_prefix", sql=CONTAINMENT_SQL, tags=("dedup",))
+@register(sql=CONTAINMENT_SQL)
 def dedup_containment_prefix(spark, sf_dir):
     """DIRECTIONAL near-dup: containment c(src->dst) = |src ∩ dst| /
     |src| >= 3/4 over the same bigram sets as dedup_simjoin_prefix —
@@ -1035,7 +1031,7 @@ def span_excise(docs):
             .orderBy("doc_id"))
 
 
-@register("dedup_span_excise", sql=SPAN_EXCISE_SQL, tags=("dedup", "text"))
+@register(sql=SPAN_EXCISE_SQL)
 def dedup_span_excise(spark, sf_dir):
     """Duplicated-span EXCISION — the transform `dedup_char_ngrams` only
     scores: every character covered by a cross-document-shared
@@ -1092,8 +1088,7 @@ ORDER BY doc_id
 """
 
 
-@register("dedup_sentence_exact", sql=SENTENCE_DEDUP_SQL,
-          tags=("dedup", "text"))
+@register(sql=SENTENCE_DEDUP_SQL)
 def dedup_sentence_exact(spark, sf_dir):
     """Sentence-level exact deduplication with document REBUILD — the
     middle granularity between whole-document exact dedup and char-span
@@ -1170,8 +1165,7 @@ ORDER BY source_a, source_b
 """)
 
 
-@register("dedup_cross_source_pairs", sql=_cross_source_oracle_sql(),
-          tags=("dedup", "pipeline"))
+@register(sql=_cross_source_oracle_sql())
 def dedup_cross_source_pairs(spark, sf_dir):
     """Provenance matrix of near-dup mass: the `dedup_minhash_lsh` pair
     set (est_jaccard >= 0.5) rolled up per unordered SOURCE pair — the
@@ -1214,8 +1208,7 @@ def dedup_cross_source_pairs(spark, sf_dir):
 # near-dup, materialized instead of promised) --------------------------------
 
 
-@register("dedup_minhash_bucketed_probe", sql=probe_minhash_oracle_sql(),
-          tags=("dedup", "layout", "pipeline"))
+@register(sql=probe_minhash_oracle_sql())
 def dedup_minhash_bucketed_probe(spark, sf_dir):
     """The incremental near-dup's band-index probe routed through an
     ACTUAL bucketed layout (sources/bucketing.py) — materializing the

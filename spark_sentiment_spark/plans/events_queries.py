@@ -14,7 +14,7 @@ from spark_sentiment_spark.operators.scd2 import (SCD2_SQL, scd2_dim,
 from spark_sentiment_spark.plans.registry import (load, register,
                                                   track_persist)
 
-@register("events_tumbling_hour", sql=TUMBLE_SQL, bench=True, tags=("events",))
+@register(sql=TUMBLE_SQL, bench=True)
 def events_tumbling_hour(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     return (
@@ -29,7 +29,7 @@ def events_tumbling_hour(spark, sf_dir):
     )
 
 
-@register("events_sliding_hour", sql=SLIDE_SQL, tags=("events",))
+@register(sql=SLIDE_SQL)
 def events_sliding_hour(spark, sf_dir):
     """Sliding window (1h window, 30min slide) — F.window produces the
     overlapping assignment natively; the oracle reconstructs the same grid
@@ -77,7 +77,7 @@ def _sessionized(ev):
         .withColumn("session_id", F.sum("new_session").over(wrun)))
 
 
-@register("events_sessionize", sql=SESSION_SQL, bench=True, tags=("events",))
+@register(sql=SESSION_SQL, bench=True)
 def events_sessionize(spark, sf_dir):
     """Sessionization with a 1-hour inactivity gap — lag + cumulative-sum
     windows, one shuffle on user_id (the streaming twin uses
@@ -104,7 +104,7 @@ ORDER BY e.event_id
 """
 
 
-@register("events_asof_join", sql=ASOF_SQL, tags=("events", "join"))
+@register(sql=ASOF_SQL)
 def events_asof_join(spark, sf_dir):
     """As-of join: every event picks up the value of the user's most recent
     strictly-earlier purchase (operators.asof union-merge plan — one
@@ -134,7 +134,7 @@ ORDER BY event_type
 """
 
 
-@register("events_json_extract", sql=JSON_SQL, tags=("events", "scalar"))
+@register(sql=JSON_SQL)
 def events_json_extract(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k")
@@ -165,7 +165,7 @@ ORDER BY e.user_id
 """
 
 
-@register("events_range_join", sql=RANGE_SQL, tags=("events", "join"))
+@register(sql=RANGE_SQL)
 def events_range_join(spark, sf_dir):
     """Range join: events falling inside any 1-hour window opened by an
     error event of the same user — bucketized equi-join + exact refine
@@ -199,7 +199,7 @@ ORDER BY day, event_type
 """
 
 
-@register("events_daily_rollup", sql=DAILY_ROLLUP_SQL, tags=("events",))
+@register(sql=DAILY_ROLLUP_SQL)
 def events_daily_rollup(spark, sf_dir):
     """Hypertable-style hierarchical rollup: the daily aggregate is
     RE-AGGREGATED from the hourly aggregate (count→sum, sum→sum, max→max),
@@ -235,7 +235,7 @@ ORDER BY user_id
 """
 
 
-@register("events_user_rates", sql=RATE_SQL, tags=("events",))
+@register(sql=RATE_SQL)
 def events_user_rates(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     span_days = (
@@ -280,7 +280,7 @@ ORDER BY grid.user_id, hour_str
 """
 
 
-@register("events_gap_fill", sql=GAP_FILL_SQL, tags=("events", "window"))
+@register(sql=GAP_FILL_SQL)
 def events_gap_fill(spark, sf_dir):
     """Hypertable-style gap filling: densify each user's hourly series over
     the observed range (sequence + explode builds the grid distributed, no
@@ -370,7 +370,7 @@ def _funnel_steps(ev, click_within_ms=None, purchase_within_ms=None):
     return s1, s2, s3
 
 
-@register("events_funnel", sql=FUNNEL_SQL, tags=("events", "funnel"))
+@register(sql=FUNNEL_SQL)
 def events_funnel(spark, sf_dir):
     """Ordered 3-step funnel (signup → click → purchase): each step keeps
     the earliest qualifying timestamp per user, constrained to fall after
@@ -401,7 +401,7 @@ ORDER BY k
 """
 
 
-@register("events_props_map", sql=PROPS_MAP_SQL, tags=("events", "map"))
+@register(sql=PROPS_MAP_SQL)
 def events_props_map(spark, sf_dir):
     """Typed map-column operators: parse the JSON props payload into a
     native map<string,bigint> once (`from_json`), explode its entries, and
@@ -437,7 +437,7 @@ ORDER BY event_id
 """
 
 
-@register("events_rolling_1h", sql=ROLLING_SQL, tags=("events", "window"))
+@register(sql=ROLLING_SQL)
 def events_rolling_1h(spark, sf_dir):
     """Trailing 1-hour rolling stats per user — a RANGE frame keyed on
     event time (every row's frame is [ts-1h, ts], irregular row counts),
@@ -488,7 +488,7 @@ ORDER BY cohort_day, day_offset
 """
 
 
-@register("events_retention_cohorts", sql=RETENTION_SQL, tags=("events",))
+@register(sql=RETENTION_SQL)
 def events_retention_cohorts(spark, sf_dir):
     """Cohort retention: users grouped by first-event day, activity counted
     per whole-day offset from each user's own first event (microsecond-
@@ -539,7 +539,7 @@ ORDER BY event_type, next_type
 """
 
 
-@register("events_transitions", sql=TRANSITIONS_SQL, tags=("events",))
+@register(sql=TRANSITIONS_SQL)
 def events_transitions(spark, sf_dir):
     """First-order Markov transition matrix over per-user event sequences:
     count (event_type → next event_type) bigrams and the conditional
@@ -581,7 +581,7 @@ ORDER BY channel
 """
 
 
-@register("events_attribution", sql=ATTRIBUTION_SQL, tags=("events",))
+@register(sql=ATTRIBUTION_SQL)
 def events_attribution(spark, sf_dir):
     """Last-touch attribution: each purchase is credited to the most
     recent preceding non-purchase event of the same user ('direct' when
@@ -628,7 +628,7 @@ ORDER BY user_id, session_start
 """
 
 
-@register("events_session_sequences", sql=SESSION_SEQ_SQL, tags=("events",))
+@register(sql=SESSION_SEQ_SQL)
 def events_session_sequences(spark, sf_dir):
     """Ordered per-session event-type sequences — the training-example
     shape for behavioral sequence models (next-action prediction): each
@@ -682,7 +682,7 @@ ORDER BY day, event_type
 """
 
 
-@register("events_rollup_incremental", sql=ROLLUP_INCR_SQL, tags=("events",))
+@register(sql=ROLLUP_INCR_SQL)
 def events_rollup_incremental(spark, sf_dir):
     """Incremental VIEW MAINTENANCE of the daily rollup: everything
     after the last day's noon plays the incoming batch, everything
@@ -785,7 +785,7 @@ ORDER BY segment
 """
 
 
-@register("events_cdc_state", sql=CDC_STATE_SQL, tags=("events", "cdc"))
+@register(sql=CDC_STATE_SQL)
 def events_cdc_state(spark, sf_dir):
     """CDC changelog application — the piece between merge_upsert (pure
     upsert) and events_dedup_latest (latest-wins compaction): the event
@@ -844,8 +844,7 @@ ORDER BY event_id
 """
 
 
-@register("events_rolling_distinct", sql=ROLLING_DISTINCT_SQL,
-          tags=("events", "window"))
+@register(sql=ROLLING_DISTINCT_SQL)
 def events_rolling_distinct(spark, sf_dir):
     """Per event: how many DISTINCT event types its user produced in the
     trailing hour — the rolling-uniques signal behind rate limiting and
@@ -876,7 +875,7 @@ def events_rolling_distinct(spark, sf_dir):
 # --- SCD Type-2 dimension build from the event stream -----------------------
 
 
-@register("events_scd2_history", sql=SCD2_SQL, tags=("events", "cdc"))
+@register(sql=SCD2_SQL)
 def events_scd2_history(spark, sf_dir):
     """Slowly-Changing-Dimension TYPE 2 build from a change stream — the
     companion to `events_cdc_state` (which keeps only the CURRENT row):
@@ -944,8 +943,7 @@ ORDER BY r.day
 """
 
 
-@register("events_peak_concurrency", sql=PEAK_CONCURRENCY_SQL,
-          tags=("events", "window"))
+@register(sql=PEAK_CONCURRENCY_SQL)
 def events_peak_concurrency(spark, sf_dir):
     """Peak concurrent sessions per day via the classic SWEEP LINE: each
     session (1-hour-gap sessionization, same recipe as
@@ -1015,7 +1013,7 @@ ORDER BY a.day
 """
 
 
-@register("events_cumulative_users", sql=CUM_USERS_SQL, tags=("events",))
+@register(sql=CUM_USERS_SQL)
 def events_cumulative_users(spark, sf_dir):
     """Cumulative distinct users over time — the growth curve computed
     the SCALABLE way: a running COUNT(DISTINCT) recomputes an
@@ -1095,7 +1093,7 @@ ORDER BY type_a, type_b
 """
 
 
-@register("events_type_affinity", sql=TYPE_AFFINITY_SQL, tags=("events",))
+@register(sql=TYPE_AFFINITY_SQL)
 def events_type_affinity(spark, sf_dir):
     """Session-level event-type co-occurrence LIFT — market-basket
     affinity over behavioral sessions: for each unordered type pair, the
@@ -1171,8 +1169,7 @@ ORDER BY state, event_type
 """
 
 
-@register("events_temporal_join", sql=TEMPORAL_JOIN_SQL,
-          tags=("events", "join", "cdc"))
+@register(sql=TEMPORAL_JOIN_SQL)
 def events_temporal_join(spark, sf_dir):
     """Temporal (AS-OF-validity) join — the CONSUMER of the type-2
     dimension `events_scd2_history` builds: every fact row joins the
@@ -1269,7 +1266,7 @@ def _rfm_per_user(spark, sf_dir):
                     .alias("r_days"), "f_events", "m_e4"))
 
 
-@register("events_rfm_scores", sql=RFM_SQL, tags=("events",))
+@register(sql=RFM_SQL)
 def events_rfm_scores(spark, sf_dir):
     """RFM segmentation — the classic behavioral-cohort scoring: per
     user, Recency (whole days between their last event and the corpus
@@ -1389,7 +1386,7 @@ def _cutpoint_quintile(scored, colname, score_name, descending=False):
                  .alias(score_name)))
 
 
-@register("events_rfm_cutpoints", sql=RFM_CUTPOINT_SQL, tags=("events",))
+@register(sql=RFM_CUTPOINT_SQL)
 def events_rfm_cutpoints(spark, sf_dir):
     """The CHEAP RFM form — quintiles from percentile CUTPOINTS:
     `events_rfm_scores` is the semantics (global ntile), and this ranks
@@ -1457,8 +1454,7 @@ ORDER BY s.user_id
 """
 
 
-@register("events_rfm_cutpoints_bucketed", sql=RFM_CUTPOINT_BUCKETED_SQL,
-          tags=("events",))
+@register(sql=RFM_CUTPOINT_BUCKETED_SQL)
 def events_rfm_cutpoints_bucketed(spark, sf_dir):
     """`events_rfm_cutpoints` with the near-continuous monetary axis
     PRE-BUCKETED into fixed-width cells (m_cell = m_e4 div M_CELL_W) —
@@ -1511,7 +1507,7 @@ ORDER BY event_type
 """
 
 
-@register("events_gap_percentiles", sql=GAP_PCT_SQL, tags=("events",))
+@register(sql=GAP_PCT_SQL)
 def events_gap_percentiles(spark, sf_dir):
     """Inter-arrival time distribution per event type: each event's gap
     to the SAME USER's previous event (any type — the behavioral pause
@@ -1575,7 +1571,7 @@ ORDER BY week_start
 """
 
 
-@register("events_user_lifecycle", sql=LIFECYCLE_SQL, tags=("events",))
+@register(sql=LIFECYCLE_SQL)
 def events_user_lifecycle(spark, sf_dir):
     """Weekly growth-accounting lifecycle: every active (user, week) is
     NEW (first week ever), RETAINED (also active the immediately
@@ -1644,8 +1640,7 @@ FROM (SELECT CAST((SELECT count(*) FROM s1) AS BIGINT) AS n_signup,
 """
 
 
-@register("events_funnel_windowed", sql=FUNNEL_WINDOWED_SQL,
-          tags=("events", "funnel"))
+@register(sql=FUNNEL_WINDOWED_SQL)
 def events_funnel_windowed(spark, sf_dir):
     """The production variant of `events_funnel`: each step must land
     within a CONVERSION WINDOW of the previous one (click within 1h of
@@ -1714,8 +1709,7 @@ ORDER BY f.event_type, day, f.hod
 """
 
 
-@register("events_seasonal_anomaly", sql=SEASONAL_ANOMALY_SQL,
-          tags=("events", "anomaly"))
+@register(sql=SEASONAL_ANOMALY_SQL)
 def events_seasonal_anomaly(spark, sf_dir):
     """Seasonality-aware volume anomaly: each (event_type, day,
     hour-of-day) cell is z-scored against ITS OWN hour-of-day baseline
@@ -1797,7 +1791,7 @@ ORDER BY day
 """
 
 
-@register("events_stickiness", sql=STICKINESS_SQL, tags=("events",))
+@register(sql=STICKINESS_SQL)
 def events_stickiness(spark, sf_dir):
     """DAU / trailing-28-day-MAU stickiness per day — the engagement
     ratio every growth dashboard pairs with `events_user_lifecycle`'s

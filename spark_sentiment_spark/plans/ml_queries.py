@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from spark_sentiment_spark.plans.registry import load, register
 
 
-@register("mlib_score_documents", tags=("ml",))
+@register()
 def mlib_score_documents(spark, sf_dir):
     """End-to-end model-scoring smoke: train a NaiveBayes pipeline
     (static fit, no sweep — one distributed fit) on a deterministic

@@ -18,8 +18,7 @@ ORDER BY doc_id
 """
 
 
-@register("multimodal_fingerprints", sql=FINGERPRINT_SQL,
-          tags=("multimodal",))
+@register(sql=FINGERPRINT_SQL)
 def multimodal_fingerprints(spark, sf_dir):
     """Codec-free binary metadata (length, sha256, magic-byte mime sniff) —
     JVM-native over the binary column; text payloads sniff to octet-stream."""
@@ -68,8 +67,7 @@ ORDER BY doc_id
 """
 
 
-@register("multimodal_decode_features", sql=DECODE_FEATURES_SQL,
-          tags=("multimodal",))
+@register(sql=DECODE_FEATURES_SQL)
 def multimodal_decode_features(spark, sf_dir):
     """Arrow-batched decode/feature-extract via mapInPandas. The decode is
     the deterministic fake codec (byte-histogram mean/entropy, length-

@@ -65,7 +65,7 @@ ORDER BY source, doc_id
 """
 
 
-@register("pack_sequences", bench=True, sql=PACK_SQL, tags=("pipeline",))
+@register(sql=PACK_SQL, bench=True)
 def pack_sequences(spark, sf_dir):
     """Assign each document the context-window index where its first token
     lands when the corpus is concatenated shard-by-shard and chunked into
@@ -119,7 +119,7 @@ ORDER BY source, window_id, pos_in_window, doc_id
 """
 
 
-@register("pack_sequences_spans", sql=PACK_SPANS_SQL, tags=("pipeline",))
+@register(sql=PACK_SPANS_SQL)
 def pack_sequences_spans(spark, sf_dir):
     """`pack_sequences` taken to its production conclusion: the
     concat-and-chunk layout SPLITS documents across window boundaries
@@ -190,7 +190,7 @@ ORDER BY doc_id
 """
 
 
-@register("split_by_hash", sql=SPLIT_SQL, tags=("pipeline",))
+@register(sql=SPLIT_SQL)
 def split_by_hash(spark, sf_dir):
     """Stable train/holdout assignment from the first md5 byte of the doc id
     (240/256 ≈ 93.75% train). Content-addressed splits survive reshuffles,
@@ -227,7 +227,7 @@ ORDER BY source, doc_id
 """
 
 
-@register("cap_per_source", sql=CAP_SQL, tags=("pipeline",))
+@register(sql=CAP_SQL)
 def cap_per_source(spark, sf_dir):
     """Keep at most N documents per source — the domain-balancing step that
     stops a handful of giant crawl domains from dominating the training mix.
@@ -267,7 +267,7 @@ ORDER BY cnt DESC, token
 """
 
 
-@register("vocab_coverage", bench=True, sql=VOCAB_SQL, tags=("pipeline",))
+@register(sql=VOCAB_SQL, bench=True)
 def vocab_coverage(spark, sf_dir):
     """Top-k tokens with cumulative corpus coverage — the Zipf profile used
     to size tokenizer vocabularies and spot boilerplate-dominated corpora.
@@ -345,7 +345,7 @@ def _prefix_group_first(spark, sf_dir, order, *cols):
             .where(F.col("rn") == 1))
 
 
-@register("dedup_prefix", sql=PREFIX_SQL, tags=("dedup", "pipeline",))
+@register(sql=PREFIX_SQL)
 def dedup_prefix(spark, sf_dir):
     """Keep-first dedup on the first K tokens — the prefix-dedup pass that
     collapses boilerplate-headed scrapes (cookie banners, license headers)
@@ -383,7 +383,7 @@ ORDER BY doc_id
 """
 
 
-@register("dedup_keep_best", sql=KEEP_BEST_SQL, tags=("dedup", "pipeline",))
+@register(sql=KEEP_BEST_SQL)
 def dedup_keep_best(spark, sf_dir):
     """Quality-aware canonical selection: within each prefix-duplicate
     group keep the LONGEST member (ties to the lowest doc_id), not the
@@ -426,7 +426,7 @@ ORDER BY doc_id
 """
 
 
-@register("dedup_incremental", bench=True, sql=INCREMENTAL_SQL, tags=("dedup", "pipeline",))
+@register(sql=INCREMENTAL_SQL, bench=True)
 def dedup_incremental(spark, sf_dir):
     """Production dedup shape: an incoming batch (here the doc_id%5==4
     slice) is deduped within itself (keep-first) and anti-joined against
@@ -476,7 +476,7 @@ ORDER BY doc_id
 """
 
 
-@register("mixture_sample", sql=MIX_SQL, tags=("pipeline",))
+@register(sql=MIX_SQL)
 def mixture_sample(spark, sf_dir):
     """Deterministic data-mixing: sample each language at its target rate
     (en 0.75, others 0.5) by comparing an md5 prefix of the doc id against
@@ -499,8 +499,7 @@ def mixture_sample(spark, sf_dir):
 # --- Multimodal header round-trip (construct natively, parse natively) ------
 
 
-@register("multimodal_headers", sql=HEADERS_SQL,
-          tags=("multimodal", "pipeline",))
+@register(sql=HEADERS_SQL)
 def multimodal_headers(spark, sf_dir):
     """Round-trip proof that the multimodal binary path is real end-to-end:
     `attach_media_content` synthesizes PNG/WAV/mp4 containers with
@@ -530,7 +529,7 @@ ORDER BY lang
 """
 
 
-@register("skew_salted_agg", sql=SALTED_AGG_SQL, tags=("pipeline", "skew"))
+@register(sql=SALTED_AGG_SQL)
 def skew_salted_agg(spark, sf_dir):
     """The salted two-phase aggregation (operators/skew.py) routed through
     the driver gate: phase 1 aggregates on (lang, salt) spreading any hot
@@ -583,7 +582,7 @@ def _md5_shard(h):
     ).cast("bigint")
 
 
-@register("shuffle_shards", sql=SHUFFLE_SQL, tags=("pipeline",))
+@register(sql=SHUFFLE_SQL)
 def shuffle_shards(spark, sf_dir):
     """Reproducible global shuffle for training order: shard = first md5
     nibble / 2 ({N_SHARDS} shards), position = rank of the md5 within the
@@ -630,7 +629,7 @@ ORDER BY doc_id
 """
 
 
-@register("quality_gate", sql=GATE_SQL, tags=("pipeline", "quality"))
+@register(sql=GATE_SQL)
 def quality_gate(spark, sf_dir):
     """The composite keep/drop gate a pretraining pipeline actually runs:
     length bounds, alpha-character ratio, and repetition (distinct-token
@@ -773,8 +772,7 @@ def _composite_gate(docs):
                         q_reason.alias("q_reason"))
 
 
-@register("curate_corpus", sql=CURATE_SQL, tags=("pipeline", "quality",
-                                                 "dedup"))
+@register(sql=CURATE_SQL)
 def curate_corpus(spark, sf_dir):
     """The whole curation pass as ONE declarative plan — the query a
     pretraining-data user actually runs nightly, composed from the
@@ -881,8 +879,7 @@ gate AS (
 )"""
 
 
-@register("curate_corpus_gopher", sql=_curate_sql(_gopher_gate_ctes()),
-          bench=True, tags=("pipeline", "quality", "dedup", "text"))
+@register(sql=_curate_sql(_gopher_gate_ctes()), bench=True)
 def curate_corpus_gopher(spark, sf_dir):
     """`curate_corpus` with the PUBLISHED Gopher gate (Rae et al. 2021,
     arXiv:2112.11446 A1.1 — `quality_gopher_rules`' exact thresholds and
@@ -923,8 +920,7 @@ gate AS (
 )"""
 
 
-@register("curate_corpus_c4", sql=_curate_sql(_c4_gate_ctes()),
-          tags=("pipeline", "quality", "dedup", "text"))
+@register(sql=_curate_sql(_c4_gate_ctes()))
 def curate_corpus_c4(spark, sf_dir):
     """`curate_corpus` with the C4 gate (Raffel et al. 2020,
     arXiv:1910.10683 §2.2 — `quality_c4_rules`' exact rules and
@@ -974,7 +970,7 @@ ORDER BY doc_id
 """
 
 
-@register("merge_upsert", sql=MERGE_SQL, tags=("pipeline",))
+@register(sql=MERGE_SQL)
 def merge_upsert(spark, sf_dir):
     """MERGE INTO without a table format: a full-outer join on the key
     with update-wins coalesce — updates overwrite matched rows, unmatched
@@ -1023,7 +1019,7 @@ ORDER BY user_id
 """
 
 
-@register("events_dedup_latest", sql=LATEST_SQL, tags=("pipeline", "events"))
+@register(sql=LATEST_SQL)
 def events_dedup_latest(spark, sf_dir):
     """Latest-state compaction of an event log: keep each user's most
     recent event (ties broken deterministically) — the read-side half of
@@ -1067,8 +1063,7 @@ ORDER BY source
 """
 
 
-@register("quality_gate_rates", sql=GATE_RATES_SQL,
-          tags=("pipeline", "quality"))
+@register(sql=GATE_RATES_SQL)
 def quality_gate_rates(spark, sf_dir):
     """Per-source keep rates of the composite quality gate — the filter
     dashboard a data team watches to spot a crawl source going bad. Same
@@ -1117,8 +1112,7 @@ ORDER BY lang, predicted_lang
 """
 
 
-@register("langid_confusion", sql=CONFUSION_SQL,
-          tags=("pipeline", "text", "eval"))
+@register(sql=CONFUSION_SQL)
 def langid_confusion(spark, sf_dir):
     """Confusion matrix of the stop-word language classifier against the
     labeled lang column — the evaluation aggregate every classifier in
@@ -1186,7 +1180,7 @@ FROM tot t CROSS JOIN agree a CROSS JOIN marg m
 """
 
 
-@register("langid_kappa", sql=KAPPA_SQL, tags=("pipeline", "text", "eval"))
+@register(sql=KAPPA_SQL)
 def langid_kappa(spark, sf_dir):
     """Cohen's kappa for the stop-word language classifier against the
     labeled lang column — the CHANCE-CORRECTED companion to
@@ -1243,8 +1237,7 @@ def langid_kappa(spark, sf_dir):
 # --- Event-volume anomaly detection (z-score over hourly counts) ------------
 
 
-@register("events_volume_anomaly", sql=ANOMALY_SQL,
-          tags=("pipeline", "events"))
+@register(sql=ANOMALY_SQL)
 def events_volume_anomaly(spark, sf_dir):
     """Hourly-volume anomaly flags per event type: bucket to hours, then
     z-score each bucket against its type's distribution and keep |z| >= 2
@@ -1334,8 +1327,7 @@ ORDER BY a.vec_id
 """
 
 
-@register("dedup_semantic", sql=SEMDEDUP_SQL, bench=True,
-          tags=("dedup", "similarity"))
+@register(sql=SEMDEDUP_SQL, bench=True)
 def dedup_semantic(spark, sf_dir):
     """Semantic dedup à la SemDeDup (Abbas et al. 2023, arXiv:2303.09540):
     a coarse quantizer scopes the quadratic pair search to within cells,
@@ -1523,7 +1515,7 @@ LEFT JOIN (SELECT dt.doc_id, sum(w.n) AS n
 ORDER BY doc_id"""
 
 
-@register("bpe_merges", sql=_bpe_merges_sql(), tags=("pipeline", "text"))
+@register(sql=_bpe_merges_sql())
 def bpe_merges(spark, sf_dir):
     """Learned BPE merge table over the corpus (Sennrich-style, see
     operators/bpe.py): one distributed word-frequency pass, bounded
@@ -1537,8 +1529,7 @@ def bpe_merges(spark, sf_dir):
     return bpe_train(spark, docs, n_merges=BPE_N_MERGES).orderBy("rank")
 
 
-@register("bpe_token_counts", sql=_bpe_token_counts_sql(),
-          tags=("pipeline", "text"))
+@register(sql=_bpe_token_counts_sql())
 def bpe_token_counts(spark, sf_dir):
     """Per-document token counts under the learned BPE vocabulary — the
     training-budget metric (tokens, not words, is what a 100 TB corpus is
@@ -1589,8 +1580,7 @@ def _ws_lower_tokens(spark, sf_dir):
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"))
 
 
-@register("quality_perplexity", bench=True, sql=PPL_SQL,
-          tags=("pipeline", "text"))
+@register(sql=PPL_SQL, bench=True)
 def quality_perplexity(spark, sf_dir):
     """Unigram language-model perplexity per document — the simplified
     CCNet-style quality signal: documents whose tokens are improbable
@@ -1666,8 +1656,7 @@ ORDER BY doc_id
 """
 
 
-@register("quality_bigram_backoff", sql=BIGRAM_PPL_SQL,
-          tags=("pipeline", "text", "quality"))
+@register(sql=BIGRAM_PPL_SQL)
 def quality_bigram_backoff(spark, sf_dir):
     """Bigram LM quality scoring with Stupid Backoff (Brants et al. 2007,
     the web-scale scheme: S(w2|w1) = c12/c1 when the bigram was seen,
@@ -1798,8 +1787,7 @@ ORDER BY qid, rn
 """
 
 
-@register("hybrid_search_rrf", bench=True, sql=HYBRID_SQL,
-          tags=("similarity", "text", "pipeline"))
+@register(sql=HYBRID_SQL, bench=True)
 def hybrid_search_rrf(spark, sf_dir):
     """Hybrid retrieval: lexical candidates (distinct-token Jaccard via the
     inverted-index self-join) and vector candidates (embedding cosine,
@@ -1891,7 +1879,7 @@ FROM lineitem"""
     for c in _PROFILE_COLS) + "\nORDER BY col"
 
 
-@register("profile_columns", sql=PROFILE_SQL, tags=("pipeline", "profile"))
+@register(sql=PROFILE_SQL)
 def profile_columns(spark, sf_dir):
     """Long-format numeric column profile (count/nulls/distinct/min/max/
     mean/sd) — the dataset health check that runs before any pipeline
@@ -1941,7 +1929,7 @@ FROM lineitem"""
     for a, b in _CORR_PAIRS) + "\nORDER BY col_a, col_b"
 
 
-@register("corr_matrix", sql=CORR_SQL, tags=("pipeline", "profile"))
+@register(sql=CORR_SQL)
 def corr_matrix(spark, sf_dir):
     """Pairwise Pearson correlations of the numeric columns in one corpus
     pass (native `corr` partial aggregates — each executor folds its
@@ -1990,7 +1978,7 @@ ORDER BY change
 """
 
 
-@register("snapshot_diff", sql=DIFF_SQL, tags=("pipeline",))
+@register(sql=DIFF_SQL)
 def snapshot_diff(spark, sf_dir):
     """Dataset-version diff summary — the audit companion to
     `merge_upsert`: project both snapshots to (key, content-hash), one
@@ -2092,8 +2080,7 @@ ORDER BY doc_id
 """
 
 
-@register("multimodal_ppm_decode", sql=PPM_DECODE_SQL,
-          tags=("multimodal", "pipeline"))
+@register(sql=PPM_DECODE_SQL)
 def multimodal_ppm_decode(spark, sf_dir):
     """REAL image decode end-to-end: binary P6 PPM rasters are synthesized
     natively (scan-speed projection, every byte reproducible), then
@@ -2158,8 +2145,7 @@ ORDER BY b.doc_id
 """
 
 
-@register("multimodal_wav_decode", sql=WAV_DECODE_SQL,
-          tags=("multimodal", "pipeline"))
+@register(sql=WAV_DECODE_SQL)
 def multimodal_wav_decode(spark, sf_dir):
     """REAL audio decode over the natively constructed mixed-media table
     (`attach_media_content`): WAV rows chunk-walk to their PCM payload and
@@ -2208,8 +2194,7 @@ ORDER BY doc_id, frame
 """
 
 
-@register("multimodal_frame_sample", sql=FRAME_SAMPLE_SQL,
-          tags=("multimodal", "pipeline"))
+@register(sql=FRAME_SAMPLE_SQL)
 def multimodal_frame_sample(spark, sf_dir):
     """REAL frame sampling: natively constructed PPMV frame streams (6
     uncompressed 8×8 frames per doc), every 2nd frame decoded to true
@@ -2249,7 +2234,7 @@ ORDER BY doc_id
 """
 
 
-@register("curriculum_buckets", sql=CURRICULUM_SQL, tags=("pipeline", "text"))
+@register(sql=CURRICULUM_SQL)
 def curriculum_buckets(spark, sf_dir):
     """Quality-curriculum assignment: score every document (alpha-char
     ratio — the cheapest robust quality proxy), then quartile it WITHIN
@@ -2286,7 +2271,7 @@ ORDER BY doc_id
 """
 
 
-@register("sample_exact_n", sql=SAMPLE_N_SQL, tags=("pipeline",))
+@register(sql=SAMPLE_N_SQL)
 def sample_exact_n(spark, sf_dir):
     """Exactly-N-per-stratum sampling: rank every document inside its
     language by md5(doc_id) — a content-addressed pseudo-random order that
@@ -2347,7 +2332,7 @@ ORDER BY doc_id
 """
 
 
-@register("sample_weighted", sql=SAMPLE_W_SQL, tags=("pipeline",))
+@register(sql=SAMPLE_W_SQL)
 def sample_weighted(spark, sf_dir):
     """Weighted sampling WITHOUT replacement via priority sampling: draw
     the ``SAMPLE_W_K`` documents with the largest w/u priorities (w =
@@ -2390,7 +2375,7 @@ def sample_weighted(spark, sf_dir):
 # --- Embedding PCA (distributed Gram accumulation + driver eigensolve) ------
 
 
-@register("embedding_pca", tags=("pipeline", "similarity"))
+@register()
 def embedding_pca(spark, sf_dir):
     """PCA over the embedding store — the whitening/compaction step before
     large-scale retrieval or semantic dedup. Distributed shape: each Arrow
@@ -2466,7 +2451,7 @@ ORDER BY dow, hour_of_day
 """
 
 
-@register("events_heatmap", sql=HEATMAP_SQL, tags=("pipeline", "events"))
+@register(sql=HEATMAP_SQL)
 def events_heatmap(spark, sf_dir):
     """Hour-of-day × day-of-week activity matrix (events + distinct
     users) — the load-profile dashboard behind capacity planning and
@@ -2501,7 +2486,7 @@ ORDER BY 1, 2
 """
 
 
-@register("source_overlap", sql=OVERLAP_SQL, tags=("dedup", "pipeline"))
+@register(sql=OVERLAP_SQL)
 def source_overlap(spark, sf_dir):
     """Cross-source provenance overlap matrix: for each source pair, how
     many boilerplate prefixes they share and how many cross-source dup
@@ -2553,7 +2538,7 @@ FROM agg ORDER BY shard
 """
 
 
-@register("shard_balance", sql=BALANCE_SQL, tags=("pipeline",))
+@register(sql=BALANCE_SQL)
 def shard_balance(spark, sf_dir):
     """Operational companion to ``shuffle_shards``: per-shard doc and
     token totals plus each shard's token mass relative to the mean — the
@@ -2597,7 +2582,7 @@ FROM t GROUP BY source ORDER BY source
 """
 
 
-@register("packing_efficiency", sql=PACK_EFF_SQL, tags=("pipeline",))
+@register(sql=PACK_EFF_SQL)
 def packing_efficiency(spark, sf_dir):
     """Padding-waste accounting for the two batch layouts: one-doc-per-
     window with right-padding (naive_waste = padded slots / capacity)
@@ -2679,8 +2664,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register("multimodal_phash_dedup", sql=PHASH_DEDUP_SQL,
-          tags=("multimodal", "dedup"))
+@register(sql=PHASH_DEDUP_SQL)
 def multimodal_phash_dedup(spark, sf_dir):
     """Near-duplicate IMAGES by perceptual hash — the multimodal arm of
     the dedup family: synthesize 8x8 P6 PPMs with planted near-dup
@@ -2760,7 +2744,7 @@ ORDER BY flag, bucket
 """
 
 
-@register("window_dist_funcs", sql=WINDOW_DIST_SQL, tags=("agg", "window"))
+@register(sql=WINDOW_DIST_SQL)
 def window_dist_funcs(spark, sf_dir):
     """The DISTRIBUTION window functions the rank family doesn't cover:
     percent_rank (= (rank-1)/(N-1)) and cume_dist (= peers-so-far / N)
@@ -2808,7 +2792,7 @@ ORDER BY source
 """
 
 
-@register("io_json_roundtrip", sql=IO_JSON_SQL, tags=("io", "pipeline"))
+@register(sql=IO_JSON_SQL)
 def io_json_roundtrip(spark, sf_dir):
     """S1/S8/S11 routed through the DRIVER gate, not just unit tests:
     the documents table is written as JSON lines by the engine's own
@@ -2878,7 +2862,7 @@ ORDER BY lang
 """
 
 
-@register("io_csv_roundtrip", sql=IO_CSV_SQL, tags=("io", "pipeline"))
+@register(sql=IO_CSV_SQL)
 def io_csv_roundtrip(spark, sf_dir):
     """S2/S3/S4/S8/S12 routed through the DRIVER gate: the documents
     table (metadata columns — the free-text column is JSON's job, CSV
@@ -2935,7 +2919,7 @@ ORDER BY lang
 """
 
 
-@register("io_schema_evolution", sql=IO_EVOLVE_SQL, tags=("io", "pipeline"))
+@register(sql=IO_EVOLVE_SQL)
 def io_schema_evolution(spark, sf_dir):
     """Schema evolution across a long-lived table's lifetime, routed
     through the driver gate: an "old" batch (even doc_ids, written
@@ -2980,7 +2964,7 @@ def io_schema_evolution(spark, sf_dir):
 IO_ORC_SQL = IO_JSON_SQL
 
 
-@register("io_orc_roundtrip", sql=IO_ORC_SQL, tags=("io", "pipeline"))
+@register(sql=IO_ORC_SQL)
 def io_orc_roundtrip(spark, sf_dir):
     """The ORC leg of the S11-S14 sink/scan extension routed through the
     DRIVER gate, completing the columnar-format pair next to
@@ -3090,8 +3074,7 @@ ORDER BY shard, pos
 """
 
 
-@register("prepare_training_set", sql=PREP_SQL,
-          tags=("pipeline", "quality", "dedup"))
+@register(sql=PREP_SQL)
 def prepare_training_set(spark, sf_dir):
     """The pipeline TAIL composed end-to-end — the one-manifest
     training-set build downstream of everything else in the catalog,

@@ -20,7 +20,7 @@ import shutil
 import tempfile
 from contextlib import contextmanager
 from contextvars import ContextVar
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,7 +31,6 @@ class Query:
     fn: Callable[[SparkSession, str], DataFrame]
     sql: Optional[str] = None         # DuckDB oracle (None → rows-only check)
     bench: bool = False               # part of the bench.py headline set
-    tags: tuple = field(default_factory=tuple)
 
 
 REGISTRY: dict[str, Query] = {}
@@ -123,10 +122,13 @@ def _cleanup_staging_at_exit() -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
-def register(name: str, sql: str | None = None, bench: bool = False,
-             tags: tuple = ()):
+def register(sql: str | None = None, bench: bool = False):
+    """Register the decorated function as the query named after it; its
+    family is its module."""
     def deco(fn):
-        REGISTRY[name] = Query(fn=fn, sql=sql, bench=bench, tags=tags)
+        if fn.__name__ in REGISTRY:
+            raise ValueError(f"query {fn.__name__!r} is already registered")
+        REGISTRY[fn.__name__] = Query(fn=fn, sql=sql, bench=bench)
         return fn
     return deco
 

@@ -67,7 +67,7 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-@register("q1_pricing_summary", sql=Q1_SQL, bench=True, tags=("agg",))
+@register(sql=Q1_SQL, bench=True)
 def q1_pricing_summary(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -118,7 +118,7 @@ LIMIT 10
 """
 
 
-@register("q3_shipping_priority", sql=Q3_SQL, bench=True, tags=("join", "agg"))
+@register(sql=Q3_SQL, bench=True)
 def q3_shipping_priority(spark, sf_dir):
     cust = load(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
@@ -165,7 +165,7 @@ ORDER BY revenue DESC, n_name
 """
 
 
-@register("q5_local_supplier", sql=Q5_SQL, bench=True, tags=("join", "agg"))
+@register(sql=Q5_SQL, bench=True)
 def q5_local_supplier(spark, sf_dir):
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders").where(
@@ -203,7 +203,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 """
 
 
-@register("q6_forecast_revenue", sql=Q6_SQL, bench=True, tags=("agg", "filter"))
+@register(sql=Q6_SQL, bench=True)
 def q6_forecast_revenue(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     return (
@@ -234,7 +234,7 @@ LIMIT 20
 """
 
 
-@register("q10_returned_items", sql=Q10_SQL, bench=True, tags=("join", "agg"))
+@register(sql=Q10_SQL, bench=True)
 def q10_returned_items(spark, sf_dir):
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
@@ -266,7 +266,7 @@ ORDER BY c_mktsegment
 """
 
 
-@register("join_semi", sql=SEMI_SQL, tags=("join",))
+@register(sql=SEMI_SQL)
 def join_semi(spark, sf_dir):
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
@@ -285,7 +285,7 @@ WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
 """
 
 
-@register("join_anti", sql=ANTI_SQL, tags=("join",))
+@register(sql=ANTI_SQL)
 def join_anti(spark, sf_dir):
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
@@ -308,7 +308,7 @@ ORDER BY n_name
 """
 
 
-@register("join_left_outer", sql=LEFT_SQL, tags=("join",))
+@register(sql=LEFT_SQL)
 def join_left_outer(spark, sf_dir):
     nation = load(spark, sf_dir, "nation")
     cust = load(spark, sf_dir, "customer")
@@ -330,7 +330,7 @@ JOIN orders b ON a.o_custkey IS NOT DISTINCT FROM b.o_custkey
 """
 
 
-@register("join_null_safe", sql=NULLSAFE_SQL, tags=("join",))
+@register(sql=NULLSAFE_SQL)
 def join_null_safe(spark, sf_dir):
     """The reference's J1: null-safe equi-join (<=>), SRC/TrainingSet.scala:51
     — intended multi-source alignment semantics (dead code there, live here).
@@ -355,7 +355,7 @@ ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
 """
 
 
-@register("agg_rollup", sql=ROLLUP_SQL, tags=("agg",))
+@register(sql=ROLLUP_SQL)
 def agg_rollup(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     return (
@@ -376,7 +376,7 @@ ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """
 
 
-@register("agg_cube", sql=CUBE_SQL, tags=("agg",))
+@register(sql=CUBE_SQL)
 def agg_cube(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     return (
@@ -402,7 +402,7 @@ FROM lineitem
 """
 
 
-@register("agg_global_stats", sql=STATS_SQL, tags=("agg",))
+@register(sql=STATS_SQL)
 def agg_global_stats(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
@@ -427,7 +427,7 @@ ORDER BY l_suppkey
 """
 
 
-@register("agg_having", sql=HAVING_SQL, tags=("agg",))
+@register(sql=HAVING_SQL)
 def agg_having(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     return (
@@ -450,7 +450,7 @@ ORDER BY band
 """
 
 
-@register("agg_case_bucket", sql=BUCKET_SQL, tags=("agg", "scalar"))
+@register(sql=BUCKET_SQL)
 def agg_case_bucket(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     band = (
@@ -476,7 +476,7 @@ ORDER BY y, m
 """
 
 
-@register("agg_by_month", sql=DATE_SQL, tags=("agg", "scalar"))
+@register(sql=DATE_SQL)
 def agg_by_month(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     return (
@@ -505,7 +505,7 @@ ORDER BY o_orderstatus, rn
 """
 
 
-@register("window_topk_per_group", sql=WTOPK_SQL, tags=("window",))
+@register(sql=WTOPK_SQL)
 def window_topk_per_group(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy(
@@ -530,7 +530,7 @@ ORDER BY o_custkey, o_orderkey
 """
 
 
-@register("window_running_sum", sql=WRUN_SQL, bench=True, tags=("window",))
+@register(sql=WRUN_SQL, bench=True)
 def window_running_sum(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     w = (
@@ -556,7 +556,7 @@ ORDER BY o_custkey, o_orderkey
 """
 
 
-@register("window_lag_delta", sql=WLAG_SQL, tags=("window",))
+@register(sql=WLAG_SQL)
 def window_lag_delta(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -581,7 +581,7 @@ ORDER BY p_brand, p_partkey
 """
 
 
-@register("window_rank_mix", sql=RANKDENSE_SQL, tags=("window",))
+@register(sql=RANKDENSE_SQL)
 def window_rank_mix(spark, sf_dir):
     part = load(spark, sf_dir, "part")
     wr = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"),
@@ -614,7 +614,7 @@ LIMIT 100
 """
 
 
-@register("sort_topk_global", sql=TOPK_SQL, bench=True, tags=("sort",))
+@register(sql=TOPK_SQL, bench=True)
 def sort_topk_global(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     return (
@@ -634,7 +634,7 @@ SELECT CAST(count(*) AS BIGINT) AS n FROM (
 """
 
 
-@register("set_union", sql=UNION_SQL, tags=("setop",))
+@register(sql=UNION_SQL)
 def set_union(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     f = orders.where(F.col("o_orderstatus") == "F").select("o_custkey")
@@ -650,7 +650,7 @@ ORDER BY o_custkey
 """
 
 
-@register("set_intersect", sql=INTERSECT_SQL, tags=("setop",))
+@register(sql=INTERSECT_SQL)
 def set_intersect(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     f = orders.where(F.col("o_orderstatus") == "F").select("o_custkey")
@@ -666,7 +666,7 @@ ORDER BY c_custkey
 """
 
 
-@register("set_except", sql=EXCEPT_SQL, tags=("setop",))
+@register(sql=EXCEPT_SQL)
 def set_except(spark, sf_dir):
     cust = load(spark, sf_dir, "customer").select("c_custkey")
     orders = load(spark, sf_dir, "orders").select(
@@ -682,7 +682,7 @@ ORDER BY c_mktsegment, c_nationkey
 """
 
 
-@register("distinct_pairs", sql=DISTINCT_SQL, tags=("setop",))
+@register(sql=DISTINCT_SQL)
 def distinct_pairs(spark, sf_dir):
     cust = load(spark, sf_dir, "customer")
     return (cust.select("c_mktsegment", "c_nationkey").distinct()
@@ -703,7 +703,7 @@ ORDER BY brand_uc, name_len, type_prefix, brand_short
 """
 
 
-@register("scalar_string_funcs", sql=STRING_SQL, tags=("scalar",))
+@register(sql=STRING_SQL)
 def scalar_string_funcs(spark, sf_dir):
     part = load(spark, sf_dir, "part")
     return (
@@ -734,7 +734,7 @@ ORDER BY l_linenumber
 """
 
 
-@register("scalar_math_funcs", sql=MATH_SQL, tags=("scalar",))
+@register(sql=MATH_SQL)
 def scalar_math_funcs(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     return (
@@ -767,7 +767,7 @@ ORDER BY rflag, lstatus
 """
 
 
-@register("agg_grouping_sets", sql=GSETS_SQL, tags=("agg",))
+@register(sql=GSETS_SQL)
 def agg_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (beyond the rollup/cube queries) — one pass,
     partial aggregation per set expanded by Catalyst."""
@@ -795,7 +795,7 @@ ORDER BY l_returnflag
 """
 
 
-@register("agg_pivot", sql=PIVOT_SQL, tags=("agg",))
+@register(sql=PIVOT_SQL)
 def agg_pivot(spark, sf_dir):
     """PIVOT: per-return-flag quantity split by line status into columns —
     native pivot with an explicit value list (no extra distinct scan)."""
@@ -815,7 +815,7 @@ def agg_pivot(spark, sf_dir):
     )
 
 
-@register("agg_approx_distinct", tags=("agg",))
+@register()
 def agg_approx_distinct(spark, sf_dir):
     """approx_count_distinct (HyperLogLog++) next to the exact count —
     rows-only check (Spark's HLL++ register layout is engine-specific,
@@ -850,7 +850,7 @@ WHERE l_quantity < 0.5 * avg_qty
 """
 
 
-@register("q17_small_qty_revenue", sql=Q17_SQL, tags=("join", "agg"))
+@register(sql=Q17_SQL)
 def q17_small_qty_revenue(spark, sf_dir):
     """TPC-H Q17 pattern: correlated scalar subquery (per-part average
     quantity) decorrelated into an aggregate + equi-join back on the key.
@@ -886,7 +886,7 @@ ORDER BY totalprice DESC, o_orderkey
 """
 
 
-@register("q18_large_orders", sql=Q18_SQL, tags=("join", "agg"))
+@register(sql=Q18_SQL)
 def q18_large_orders(spark, sf_dir):
     """TPC-H Q18 pattern: HAVING-filtered aggregate used as a join filter.
     The per-order aggregate runs first (map-side partial sum, then one
@@ -922,7 +922,7 @@ ORDER BY l_returnflag
 """
 
 
-@register("agg_percentiles", sql=PERCENTILES_SQL, tags=("agg", "percentile"))
+@register(sql=PERCENTILES_SQL)
 def agg_percentiles(spark, sf_dir):
     """Exact interpolated percentiles (percentile_cont semantics) per group.
     Spark's native `percentile` aggregate runs as a partial+final hash agg —
@@ -956,7 +956,7 @@ ORDER BY bucket
 """
 
 
-@register("agg_histogram", sql=HISTOGRAM_SQL, tags=("agg", "histogram"))
+@register(sql=HISTOGRAM_SQL)
 def agg_histogram(spark, sf_dir):
     """Fixed-width histogram: bucket = floor(x / width) computed map-side,
     then one hash agg on the bucket id — the distribution-profiling shape
@@ -1002,7 +1002,7 @@ LEFT JOIN (SELECT DISTINCT {pk} AS k FROM {parent}) p ON c.{ck} = p.k"""
     for fk, child, ck, parent, pk in _RI_EDGES) + "\nORDER BY fk"
 
 
-@register("audit_referential", sql=RI_AUDIT_SQL, tags=("agg", "quality"))
+@register(sql=RI_AUDIT_SQL)
 def audit_referential(spark, sf_dir):
     """Referential-integrity audit across every foreign-key edge of the
     star schema: per edge the child row count and the orphan count
@@ -1051,7 +1051,7 @@ ORDER BY l.l_returnflag
 """
 
 
-@register("agg_mad_by_group", sql=MAD_SQL, tags=("agg", "percentile"))
+@register(sql=MAD_SQL)
 def agg_mad_by_group(spark, sf_dir):
     """Median absolute deviation per group — the robust-spread statistic
     outlier trimming should use when the tail is heavy (stddev is itself
@@ -1112,7 +1112,7 @@ ORDER BY nation
 """
 
 
-@register("pareto_revenue_share", sql=PARETO_SQL, tags=("agg", "window"))
+@register(sql=PARETO_SQL)
 def pareto_revenue_share(spark, sf_dir):
     """Pareto (80/20) concentration of customer spend per nation: how
     many customers cover 80% of a nation's order value (the minimal
@@ -1181,7 +1181,7 @@ ORDER BY priority
 """
 
 
-@register("join_bucketed", sql=BUCKETED_SQL, tags=("join", "layout"))
+@register(sql=BUCKETED_SQL)
 def join_bucketed(spark, sf_dir):
     """Co-located (bucketed) fact-fact join — the layout answer to the
     one shuffle class this catalog couldn't otherwise avoid: two big
@@ -1266,8 +1266,7 @@ ORDER BY brand, dist
 """
 
 
-@register("link_parts_fuzzy", sql=LINK_FUZZY_SQL,
-          tags=("join", "fuzzy", "curation"))
+@register(sql=LINK_FUZZY_SQL)
 def link_parts_fuzzy(spark, sf_dir):
     """Blocked record linkage (entity resolution) over the part catalog:
     candidate pairs come ONLY from within a blocking key (p_brand — the
@@ -1338,8 +1337,7 @@ ORDER BY brand_a, brand_b
 """
 
 
-@register("orders_basket_lift", sql=BASKET_LIFT_SQL,
-          tags=("join", "agg", "curation"))
+@register(sql=BASKET_LIFT_SQL)
 def orders_basket_lift(spark, sf_dir):
     """Market-basket association rules over order baskets: for every
     pair of part brands co-occurring in >= 5 orders, support,

@@ -58,7 +58,7 @@ ORDER BY qid, rn
 """
 
 
-@register("knn_cosine_topk", sql=KNN_SQL, tags=("similarity",))
+@register(sql=KNN_SQL)
 def knn_cosine_topk(spark, sf_dir):
     """Exact cosine top-10 for 5 query vectors — broadcast the queries,
     stream the corpus once, per-query top-k via window."""
@@ -100,7 +100,7 @@ ORDER BY label
 """
 
 
-@register("embedding_centroids", sql=CENTROID_SQL, tags=("similarity",))
+@register(sql=CENTROID_SQL)
 def embedding_centroids(spark, sf_dir):
     """Per-label centroid squared-norm — element-wise aggregate over array
     columns via posexplode (the building block of IVF coarse quantization)."""
@@ -141,7 +141,7 @@ def _ivf_candidates(spark, sf_dir, n_queries, *query_cols):
             .where(F.col("vec_id") != F.col("qid")))
 
 
-@register("ann_ivf_topk", sql=ANN_IVF_SQL, tags=("similarity",))
+@register(sql=ANN_IVF_SQL)
 def ann_ivf_topk(spark, sf_dir):
     """Multi-assignment IVF (inverted-file) ANN: a coarse quantizer
     partitions the corpus into 16 cells; every vector is INDEXED in its
@@ -197,8 +197,7 @@ ORDER BY vec_a, vec_b
 """
 
 
-@register("dedup_embedding_cosine", sql=EMB_DEDUP_SQL,
-          tags=("dedup", "similarity"))
+@register(sql=EMB_DEDUP_SQL)
 def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-dup pairs (threshold 0.4 — the tail of this
     corpus's similarity distribution), exact all-pairs formulation as the
@@ -333,7 +332,7 @@ def _hyperplanes(seed: str, dim: int, n_tables: int, n_planes: int):
     return planes_t, radix
 
 
-@register("ann_lsh_topk", sql=ANN_LSH_SQL, bench=True, tags=("similarity",))
+@register(sql=ANN_LSH_SQL, bench=True)
 def ann_lsh_topk(spark, sf_dir):
     """Approximate NN via multi-table random-hyperplane LSH, fully native:
     T = ANN_LSH_TABLES independent P-plane tables (P adaptive, at least
@@ -429,7 +428,7 @@ ORDER BY vec_id
 """
 
 
-@register("embedding_quantize", sql=QUANTIZE_SQL, tags=("similarity",))
+@register(sql=QUANTIZE_SQL)
 def embedding_quantize(spark, sf_dir):
     """Symmetric per-vector int8 scalar quantization — the 4× storage
     compression step of a 100 TB embedding store. Reports per-vector scale
@@ -450,7 +449,7 @@ def embedding_quantize(spark, sf_dir):
     )
 
 
-@register("ann_pq_topk", sql=ANN_PQ_SQL, tags=("similarity",))
+@register(sql=ANN_PQ_SQL)
 def ann_pq_topk(spark, sf_dir):
     """Product-quantization ANN (the IVF-PQ memory-compression path):
 
@@ -537,8 +536,7 @@ def _tombstones(vecs):
             .select("vec_id"))
 
 
-@register("ann_ivfpq_persisted_probe", sql=ANN_IVFPQ_SQL,
-          tags=("similarity", "layout", "pipeline"))
+@register(sql=ANN_IVFPQ_SQL)
 def ann_ivfpq_persisted_probe(spark, sf_dir):
     """The COMPOSED persisted vector index — per-cell PQ codes under the
     bucketed IVF cell layout, the FAISS-IVFPQ production shape (Jégou
@@ -602,8 +600,7 @@ ANN_IVFPQ_TOMBSTONE_SQL = ivfpq_sql(
     cand_pred=f"\n    AND a.vec_id % {TOMB_MOD} <> {TOMB_RES}")
 
 
-@register("ann_ivfpq_tombstone_probe", sql=ANN_IVFPQ_TOMBSTONE_SQL,
-          tags=("similarity", "layout", "pipeline"))
+@register(sql=ANN_IVFPQ_TOMBSTONE_SQL)
 def ann_ivfpq_tombstone_probe(spark, sf_dir):
     """DELETES for the composed IVFPQ index — the lifecycle leg after
     build → append → compact: takedowns (rights removal, dedup purges,
@@ -657,8 +654,7 @@ def _count_cell_parts(codes_dir: str) -> int:
     return len(glob.glob(f"{codes_dir}/cell=*/*.parquet"))
 
 
-@register("ann_ivfpq_compacted_probe", sql=ANN_IVFPQ_COMPACT_SQL,
-          tags=("similarity", "layout", "pipeline"))
+@register(sql=ANN_IVFPQ_COMPACT_SQL)
 def ann_ivfpq_compacted_probe(spark, sf_dir):
     """Index MAINTENANCE for the composed IVFPQ layout — the pass that
     completes the artifact lifecycle build → append → COMPACT → probe.
@@ -752,8 +748,7 @@ ANN_IVFPQ_REFRESH_SQL = ivfpq_sql(
             AS BIGINT) AS refreshed""")
 
 
-@register("ann_ivfpq_refresh_probe", sql=ANN_IVFPQ_REFRESH_SQL,
-          tags=("similarity", "layout", "pipeline"))
+@register(sql=ANN_IVFPQ_REFRESH_SQL)
 def ann_ivfpq_refresh_probe(spark, sf_dir, refresh_pct: int = REFRESH_PCT):
     """Quantizer REFRESH for the composed IVFPQ index — the decision pass
     that closes the maintenance loop: build → append → compact → delete →
@@ -1002,8 +997,7 @@ def multiprobe_candidates(emb, n_planes: int = MP_PLANES,
             .distinct())
 
 
-@register("dedup_embedding_multiprobe", sql=ANN_MULTIPROBE_SQL,
-          tags=("dedup", "similarity"))
+@register(sql=ANN_MULTIPROBE_SQL)
 def dedup_embedding_multiprobe(spark, sf_dir):
     """Embedding near-dup pairs via MULTI-PROBE hyperplane LSH — the scale
     upgrade of the bucketed path: instead of adding whole hash tables to
@@ -1070,8 +1064,7 @@ ORDER BY train_vec, eval_vec
 """
 
 
-@register("decontaminate_semantic", sql=DECON_SEMANTIC_SQL,
-          tags=("dedup", "similarity"))
+@register(sql=DECON_SEMANTIC_SQL)
 def decontaminate_semantic(spark, sf_dir):
     """Semantic train/eval decontamination: flag training vectors whose
     embedding sits within cosine ``MP_TAU`` of any eval-set vector
@@ -1145,7 +1138,7 @@ ORDER BY qid
 """
 
 
-@register("knn_classify", sql=KNN_CLASSIFY_SQL, tags=("similarity", "ml"))
+@register(sql=KNN_CLASSIFY_SQL)
 def knn_classify(spark, sf_dir):
     """Leave-one-out kNN classification — similarity search used as a
     LABELER (weak supervision / label propagation for curation): each of
@@ -1231,7 +1224,7 @@ ORDER BY qid
 """
 
 
-@register("knn_classify_ivf", sql=KNN_IVF_SQL, tags=("similarity", "ml"))
+@register(sql=KNN_IVF_SQL)
 def knn_classify_ivf(spark, sf_dir):
     """`knn_classify` at scale: the vote/argmax layer is index-agnostic
     by construction, so this variant swaps the exact full-corpus scan for
@@ -1316,8 +1309,7 @@ ORDER BY vec_id
 """
 
 
-@register("embedding_outliers", sql=EMB_OUTLIER_SQL,
-          tags=("similarity", "quality"))
+@register(sql=EMB_OUTLIER_SQL)
 def embedding_outliers(spark, sf_dir):
     """Centroid-distance outlier flagging — the embedding-space curation
     op that catches mislabeled or noise samples: per label, the mean
@@ -1428,8 +1420,7 @@ ORDER BY c0.cell
 """
 
 
-@register("embedding_kmeans_iter", sql=KMEANS_SQL,
-          tags=("similarity", "ml"))
+@register(sql=KMEANS_SQL)
 def embedding_kmeans_iter(spark, sf_dir):
     """ONE LLOYD ITERATION of spherical k-means, engine-exact — the
     refinement step the catalog's content-addressed coarse quantizers

@@ -54,7 +54,7 @@ FROM sketch CROSS JOIN exact
 """
 
 
-@register("agg_hll_sketch", sql=HLL_SQL, tags=("sketch",))
+@register(sql=HLL_SQL)
 def agg_hll_sketch(spark, sf_dir):
     """Distinct l_orderkey count two ways: exact, and via a 256-bucket
     HyperLogLog built from md5 — bucket = first 8 hash bits, rho = leading
@@ -117,7 +117,7 @@ ORDER BY n_exact DESC, token
 """
 
 
-@register("token_cms_topk", sql=CMS_SQL, tags=("sketch", "text"))
+@register(sql=CMS_SQL)
 def token_cms_topk(spark, sf_dir):
     """Count-min sketch (d=4 rows x w=1024 buckets, md5-derived hashes)
     probed at the exact top-20 tokens: per token the exact count, the CMS
@@ -212,7 +212,7 @@ ORDER BY file_id
 """
 
 
-@register("zorder_layout", sql=ZORDER_SQL, tags=("layout",))
+@register(sql=ZORDER_SQL)
 def zorder_layout(spark, sf_dir):
     """Z-order (Morton) layout planner: quantize (l_partkey, l_suppkey)
     into a 256x256 grid via integer range buckets, interleave the bits
@@ -300,7 +300,7 @@ ORDER BY f.file_id
 """
 
 
-@register("zorder_probe", sql=ZPROBE_SQL, tags=("layout",))
+@register(sql=ZPROBE_SQL)
 def zorder_probe(spark, sf_dir):
     """The payoff query for `zorder_layout`: prune the 64 Z-range files
     against a two-dimensional box predicate (an eighth of EACH key range)
@@ -378,7 +378,7 @@ ORDER BY p_brand
 """
 
 
-@register("join_skew_salted", sql=SALTED_JOIN_SQL, tags=("skew", "join"))
+@register(sql=SALTED_JOIN_SQL)
 def join_skew_salted(spark, sf_dir):
     """Brand revenue through ``operators/skew.py::salted_join``: lineitem
     rows take a per-row salt in [0,8), part is replicated once per salt,
@@ -459,7 +459,7 @@ ORDER BY quantile
 """
 
 
-@register("quantile_histogram_sketch", sql=QHIST_SQL, tags=("sketch",))
+@register(sql=QHIST_SQL)
 def quantile_histogram_sketch(spark, sf_dir):
     """p50/p95/p99 of documents.n_chars from a 128-bin equi-width
     histogram — the mergeable fixed-state quantile estimator (each
@@ -561,7 +561,7 @@ SKEW_PROFILE_SQL = ("\nUNION ALL\n".join(
     + "\nORDER BY key_col")
 
 
-@register("skew_profile", sql=SKEW_PROFILE_SQL, tags=("sketch", "skew"))
+@register(sql=SKEW_PROFILE_SQL)
 def skew_profile(spark, sf_dir):
     """Join-key skew diagnostic over the three fact join keys: per key
     column the row/key counts, the hottest key's frequency, the p99
@@ -642,8 +642,7 @@ ORDER BY e.day
 """
 
 
-@register("events_daily_uniques_hll", sql=DAILY_HLL_SQL,
-          tags=("sketch", "events"))
+@register(sql=DAILY_HLL_SQL)
 def events_daily_uniques_hll(spark, sf_dir):
     """Daily distinct users, sketched: the GROUPED form of
     agg_hll_sketch — one 256-register HLL per calendar day, which is the
@@ -723,8 +722,7 @@ ORDER BY h.lang, h.quantile
 """
 
 
-@register("quantile_histogram_by_lang", sql=QHIST_GROUP_SQL,
-          tags=("sketch",))
+@register(sql=QHIST_GROUP_SQL)
 def quantile_histogram_by_lang(spark, sf_dir):
     """The GROUPED form of quantile_histogram_sketch: per language, a
     128-bin histogram over its own [min, max] range with rank-targeted
@@ -813,8 +811,7 @@ ORDER BY window_start
 """
 
 
-@register("events_sliding_users_hll", sql=SLIDING_USERS_HLL_SQL,
-          tags=("sketch", "events", "window"))
+@register(sql=SLIDING_USERS_HLL_SQL)
 def events_sliding_users_hll(spark, sf_dir):
     """Sliding-window distinct USERS (1 h windows, 30 min slide) computed
     the way a 100 TB pipeline must: per-minute HLL partials (minute ×
@@ -936,7 +933,7 @@ FROM exact x CROSS JOIN shards s CROSS JOIN est_m m CROSS JOIN est_d d
 """
 
 
-@register("agg_hll_merge_shards", sql=HLL_MERGE_SQL, tags=("sketch",))
+@register(sql=HLL_MERGE_SQL)
 def agg_hll_merge_shards(spark, sf_dir):
     """The MERGEABILITY theorem of the HLL sketch, checked as an output:
     events are split into 8 shards (event_id % 8 — users deliberately
@@ -1004,8 +1001,7 @@ ORDER BY day, event_type
 """
 
 
-@register("io_partitioned_prune", sql=PARTITIONED_PRUNE_SQL,
-          tags=("io", "layout"))
+@register(sql=PARTITIONED_PRUNE_SQL)
 def io_partitioned_prune(spark, sf_dir):
     """Hive-style partition PRUNING — the third leg of the layout
     family, next to footer-stats skipping (`zorder_probe`) and bucketed
@@ -1068,7 +1064,7 @@ ORDER BY event_type
 """
 
 
-@register("io_compact_small_files", sql=COMPACT_SQL, tags=("io", "layout"))
+@register(sql=COMPACT_SQL)
 def io_compact_small_files(spark, sf_dir):
     """Small-file COMPACTION — the write-side maintenance pass that
     completes the layout family (footer-stats skipping, bucketing,
@@ -1226,8 +1222,7 @@ def _stickiness_hll_core(ud):
             .orderBy("day"))
 
 
-@register("events_stickiness_hll", sql=STICKINESS_HLL_SQL, bench=True,
-          tags=("sketch", "events"))
+@register(sql=STICKINESS_HLL_SQL, bench=True)
 def events_stickiness_hll(spark, sf_dir):
     """DAU / trailing-28-day-MAU stickiness from MERGEABLE per-day HLL
     partials — the certified scale swap for `events_stickiness`, whose

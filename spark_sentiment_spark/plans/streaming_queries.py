@@ -1,7 +1,7 @@
 """Driver-checkable streaming queries (SURVEY §7.4 streaming extension).
 
 The streaming operators in ``streaming.streams`` are unit-tested as
-stream==batch twins; the two queries here additionally route a *real
+stream==batch twins; the 18 queries here additionally route a *real
 Structured Streaming execution* (file source → watermarked agg →
 ``trigger(availableNow)`` → memory sink) through the external correctness
 harness, with the same DuckDB oracle SQL as their batch twins. Over a
@@ -18,8 +18,6 @@ landing exactly on the boundary.
 """
 
 from __future__ import annotations
-
-import itertools
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -85,23 +83,13 @@ from spark_sentiment_spark.streaming.streams import (
 )
 
 
-# Memory-sink table names must be unique per execution within a session.
-_run_seq = itertools.count()
-
-
-def _unique(name: str) -> str:
-    return f"{name}_{next(_run_seq)}"
-
-
-@register("streaming_tumbling_hour", sql=TUMBLE_SQL,
-          tags=("streaming", "events"))
+@register(sql=TUMBLE_SQL)
 def streaming_tumbling_hour(spark, sf_dir):
     """Tumbling 1h/event_type aggregation executed BY the streaming engine
     (not the batch twin): watermarked state, availableNow trigger, memory
     sink. Oracle = the same SQL as ``events_tumbling_hour``."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = tumbling_hourly(read_event_stream(spark, sf_dir))
-    out = run_to_memory(stream, _unique("stream_tumble"))
+    out = run_to_memory(stream)
     return out.orderBy("window_start", "event_type")
 
 
@@ -116,17 +104,15 @@ ORDER BY segment
 """
 
 
-@register("streaming_static_enrich", sql=STREAM_ENRICH_SQL,
-          tags=("streaming", "events", "join"))
+@register(sql=STREAM_ENRICH_SQL)
 def streaming_static_enrich(spark, sf_dir):
     """Stream–static broadcast join + aggregation executed by the streaming
     engine: the event stream is enriched with the static customer dimension
     per micro-batch, then aggregated per segment in complete mode."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     events = read_event_stream(spark, sf_dir)
     dim = load(spark, sf_dir, "customer")
     stream = stream_static_enrich(events, dim)
-    out = run_to_memory(stream, _unique("stream_enrich"))
+    out = run_to_memory(stream)
     return out.orderBy("segment")
 
 
@@ -140,17 +126,15 @@ ORDER BY user_id
 """
 
 
-@register("streaming_stateful_counts", sql=STREAM_STATEFUL_SQL,
-          tags=("streaming", "events", "stateful"))
+@register(sql=STREAM_STATEFUL_SQL)
 def streaming_stateful_counts(spark, sf_dir):
     """Custom stateful operator through the harness: per-user running
     count + last-seen timestamp via ``applyInPandasWithState`` (update
     mode). Over the finite source the final state per user equals the
     batch groupBy — the oracle. last_ts is re-formatted Spark-side to a
     fixed 6-digit-microsecond form so both engines render identically."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = stateful_user_counts(read_event_stream(spark, sf_dir))
-    out = run_to_memory(stream, _unique("stream_state"), output_mode="update")
+    out = run_to_memory(stream, output_mode="update")
     # update mode emits one row per user per micro-batch; keep the final
     # state per user (single batch here, but be order-proof anyway).
     latest = out.groupBy("user_id").agg(
@@ -197,22 +181,19 @@ ORDER BY user_id, session_start
 """
 
 
-@register("streaming_sessionize", sql=SESSION_STREAM_SQL,
-          tags=("streaming", "events"))
+@register(sql=SESSION_STREAM_SQL)
 def streaming_sessionize(spark, sf_dir):
     """Native incremental session windows (``F.session_window``, 1h gap)
     executed BY the streaming engine through the harness. The oracle
     reconstructs the same sessions with a lag/cumsum using the
     session_window boundary rule (`>= gap` splits — exclusive window
     end), so this is an exact hash check, not rows-only."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = session_windows(read_event_stream(spark, sf_dir))
-    out = run_to_memory(stream, _unique("stream_sessions"))
+    out = run_to_memory(stream)
     return out.orderBy("user_id", "session_start")
 
 
-@register("streaming_volume_anomaly", sql=ANOMALY_SQL,
-          tags=("streaming", "events"))
+@register(sql=ANOMALY_SQL)
 def streaming_volume_anomaly(spark, sf_dir):
     """Streaming ingest monitor: hourly per-type counts aggregate IN the
     streaming engine (watermarked tumbling windows, complete mode); every
@@ -222,7 +203,6 @@ def streaming_volume_anomaly(spark, sf_dir):
     per-batch sink, so a replayed batch never duplicates alerts. Over the
     finite source the final snapshot equals the batch
     ``events_volume_anomaly`` — the shared oracle."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     events = read_event_stream(spark, sf_dir)
     hourly = (
         events.withWatermark("ts", WATERMARK)
@@ -259,8 +239,7 @@ def streaming_volume_anomaly(spark, sf_dir):
             .orderBy("event_type", "hour_start"))
 
 
-@register("streaming_multimodal_headers", sql=HEADERS_SQL,
-          tags=("streaming", "multimodal"))
+@register(sql=HEADERS_SQL)
 def streaming_multimodal_headers(spark, sf_dir):
     """Media-ingest streaming ETL: the multimodal container construction +
     header parse (binary-column byte arithmetic, zero Python) executed BY
@@ -271,7 +250,7 @@ def streaming_multimodal_headers(spark, sf_dir):
     ``multimodal_headers``."""
     stream = read_document_stream(spark, sf_dir)
     out = run_to_memory(header_metadata(attach_media_content(stream)),
-                        _unique("stream_headers"), output_mode="append")
+                        output_mode="append")
     return out.orderBy("doc_id")
 
 
@@ -292,8 +271,7 @@ ORDER BY s.user_id, signup_ts, purchase_ts, purchase_value
 """
 
 
-@register("streaming_conversions", sql=STREAM_CONVERSIONS_SQL,
-          tags=("streaming", "events", "join"))
+@register(sql=STREAM_CONVERSIONS_SQL)
 def streaming_conversions(spark, sf_dir):
     """Stream–stream time-interval join executed BY the streaming engine
     (`streams.stream_stream_conversions`): purchases within 1 hour after
@@ -304,10 +282,8 @@ def streaming_conversions(spark, sf_dir):
     the DuckDB interval-join twin is exact. Completes the
     driver-routed streaming surface: windows, sessions, stream–static,
     stateful, dedup-by-watermark, anomaly, and now stream–stream."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = stream_stream_conversions(read_event_stream(spark, sf_dir))
-    out = run_to_memory(stream, _unique("stream_conv"),
-                        output_mode="append")
+    out = run_to_memory(stream, output_mode="append")
     return (out.select("user_id", "signup_ts", "purchase_ts",
                        F.round("purchase_value", 4)
                        .alias("purchase_value"))
@@ -331,8 +307,7 @@ ORDER BY event_type
 """
 
 
-@register("streaming_dedup", sql=STREAM_DEDUP_SQL,
-          tags=("streaming", "events", "dedup"))
+@register(sql=STREAM_DEDUP_SQL)
 def streaming_dedup(spark, sf_dir):
     """Watermarked streaming ingest dedup executed by the streaming
     engine: the event stream unioned with a second read of itself (every
@@ -344,13 +319,11 @@ def streaming_dedup(spark, sf_dir):
     of the original table (exactly-once emission). The streaming stage
     is the dedup itself; the batch agg over the finite sink output keeps
     the plan to one stateful operator."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     doubled = read_event_stream(spark, sf_dir).unionByName(
         read_event_stream(spark, sf_dir))
     deduped = dedup_stream(doubled).select("event_id", "event_type",
                                            "value")
-    out = run_to_memory(deduped, _unique("stream_dedup"),
-                        output_mode="append")
+    out = run_to_memory(deduped, output_mode="append")
     return (out.groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_unique"),
                  F.round(F.sum("value"), 4).alias("total_value"))
@@ -359,17 +332,15 @@ def streaming_dedup(spark, sf_dir):
 
 # --- Sliding windows on the streaming engine --------------------------------
 
-@register("streaming_sliding_hour", sql=SLIDE_SQL,
-          tags=("streaming", "events"))
+@register(sql=SLIDE_SQL)
 def streaming_sliding_hour(spark, sf_dir):
     """1h window sliding by 30min executed BY the streaming engine
     (`streams.sliding_hourly`): overlapping watermarked windows, complete
     mode, memory sink — each event lands in two windows, the overlap
     bookkeeping the tumbling query doesn't exercise. Oracle = the batch
     twin's grid-join SQL (`events_sliding_hour`)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = sliding_hourly(read_event_stream(spark, sf_dir))
-    out = run_to_memory(stream, _unique("stream_slide"))
+    out = run_to_memory(stream)
     return out.orderBy("window_start")
 
 
@@ -398,8 +369,7 @@ FROM sketch CROSS JOIN exact
 """
 
 
-@register("streaming_hll_distinct", sql=STREAM_HLL_SQL,
-          tags=("streaming", "sketch"))
+@register(sql=STREAM_HLL_SQL)
 def streaming_hll_distinct(spark, sf_dir):
     """The HLL distinct sketch maintained BY the streaming engine: the
     event stream maps to (bucket, rho) and Structured Streaming keeps
@@ -413,10 +383,9 @@ def streaming_hll_distinct(spark, sf_dir):
     whole estimate; the exact COUNT(DISTINCT) twin comes from a static
     read of the same source (the error-measurement side, dropped at
     scale)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir)
     keyed = ev.select(F.md5(F.col("event_id").cast("string")).alias("h"))
-    mem = run_to_memory(hll_registers(keyed), _unique("stream_hll"))
+    mem = run_to_memory(hll_registers(keyed))
     exact = (load(spark, sf_dir, "events")
              .agg(F.countDistinct("event_id").cast("bigint")
                   .alias("n_exact")))
@@ -442,8 +411,7 @@ ORDER BY window_start, rn
 """
 
 
-@register("streaming_topk_types", sql=STREAM_TOPK_SQL,
-          tags=("streaming", "events", "window"))
+@register(sql=STREAM_TOPK_SQL)
 def streaming_topk_types(spark, sf_dir):
     """Per-window top-3 event types with the WINDOWED COUNTS executed by
     the streaming engine (watermarked tumbling state, availableNow,
@@ -454,9 +422,8 @@ def streaming_topk_types(spark, sf_dir):
     split is exactly this: incremental windowed counts in the stream,
     cheap top-k on the bounded (windows × types) result downstream.
     State is bounded by the watermark horizon × type vocabulary."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = tumbling_hourly(read_event_stream(spark, sf_dir))
-    out = run_to_memory(stream, _unique("stream_topk"))
+    out = run_to_memory(stream)
     w = Window.partitionBy("window_start").orderBy(F.desc("n"),
                                                    F.asc("event_type"))
     return (out.select("window_start", "event_type", "n")
@@ -465,8 +432,7 @@ def streaming_topk_types(spark, sf_dir):
             .orderBy("window_start", "rn"))
 
 
-@register("streaming_minhash_probe", sql=probe_minhash_oracle_sql(),
-          tags=("streaming", "dedup", "join"))
+@register(sql=probe_minhash_oracle_sql())
 def streaming_minhash_probe(spark, sf_dir):
     """Streaming incremental NEAR-dup ingest — the stream twin completing
     the dedup family's batch (`dedup_minhash_lsh`) / incremental
@@ -525,14 +491,13 @@ def streaming_minhash_probe(spark, sf_dir):
             .where(F.col("est") >= THRESHOLD)
             .groupBy("doc_a", "doc_b")
             .agg(F.max("est").alias("est_jaccard")))
-    out = run_to_memory(hits, _unique("stream_mh_probe"))
+    out = run_to_memory(hits)
     return out.orderBy("doc_a", "doc_b")
 
 
 
 
-@register("streaming_scd2_merge", sql=SCD2_SQL,
-          tags=("streaming", "events", "cdc"))
+@register(sql=SCD2_SQL)
 def streaming_scd2_merge(spark, sf_dir):
     """The STREAMING consumer of the nightly SCD2 merge — the
     incremental form of `events_scd2_history`: the existing dimension
@@ -631,8 +596,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register("streaming_winnowing_probe", sql=WINNOW_STREAM_SQL,
-          tags=("streaming", "dedup", "text"))
+@register(sql=WINNOW_STREAM_SQL)
 def streaming_winnowing_probe(spark, sf_dir):
     """Streaming consumer of the winnowing index — completes the
     family's batch / incremental / streaming triad
@@ -703,8 +667,7 @@ def streaming_winnowing_probe(spark, sf_dir):
 # --- Streaming IVF probe (the vector index's streaming leg) -----------------
 
 
-@register("streaming_ivf_probe", sql=ANN_IVF_SQL,
-          tags=("similarity", "streaming", "pipeline"))
+@register(sql=ANN_IVF_SQL)
 def streaming_ivf_probe(spark, sf_dir):
     """Streaming consumer of the persisted IVF cell index — the
     streaming form of `ann_ivf_topk`: the corpus's multi-assignment cell
@@ -778,8 +741,7 @@ def streaming_ivf_probe(spark, sf_dir):
 # --- Streaming PQ probe (the quantized index's streaming leg) ---------------
 
 
-@register("streaming_pq_probe", sql=ANN_PQ_SQL,
-          tags=("similarity", "streaming", "pipeline"))
+@register(sql=ANN_PQ_SQL)
 def streaming_pq_probe(spark, sf_dir):
     """Streaming consumer of the persisted PQ index — the streaming
     form of `ann_pq_topk`. The corpus's code table + codebook are staged
@@ -844,8 +806,7 @@ def streaming_pq_probe(spark, sf_dir):
 # --- Streaming IVF+PQ probe (the composed index's streaming leg) ------------
 
 
-@register("streaming_ivfpq_probe", sql=ANN_IVFPQ_SQL,
-          tags=("similarity", "streaming", "pipeline"))
+@register(sql=ANN_IVFPQ_SQL)
 def streaming_ivfpq_probe(spark, sf_dir):
     """Streaming consumer of the COMPOSED IVF+PQ index — gives the
     composition the same persisted / streaming pair the flat
@@ -901,8 +862,7 @@ def streaming_ivfpq_probe(spark, sf_dir):
 # --- Streaming BM25 probe (the retrieval family's streaming leg) ------------
 
 
-@register("streaming_bm25_probe", sql=BM25_SQL,
-          tags=("text", "search", "streaming", "pipeline"))
+@register(sql=BM25_SQL)
 def streaming_bm25_probe(spark, sf_dir):
     """Streaming consumer of the persisted inverted index — the
     streaming form of `search_bm25`, and the most production-literal

@@ -35,7 +35,7 @@ ORDER BY doc_id
 """
 
 
-@register("clean_text", sql=CLEAN_SQL, tags=("text",))
+@register(sql=CLEAN_SQL)
 def clean_text(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     return (docs.select("doc_id", clean_text_col("text").alias("cleaned"))
@@ -71,7 +71,7 @@ ORDER BY d.doc_id
 """
 
 
-@register("wordscore_sentiment", sql=WORDSCORE_SQL, bench=True, tags=("text",))
+@register(sql=WORDSCORE_SQL, bench=True)
 def wordscore_sentiment(spark, sf_dir):
     from spark_sentiment_spark.operators.wordscore import score_documents_raw
 
@@ -79,7 +79,7 @@ def wordscore_sentiment(spark, sf_dir):
     return score_documents_raw(docs).orderBy("doc_id")
 
 
-@register("wordscore_full_parity", tags=("text",))
+@register()
 def wordscore_full_parity(spark, sf_dir):
     """Full reference-parity scoring (stemming + duplicate-char fallback,
     PlainTextAnalyser.computeSentiment). Not SQL-expressible (Porter stemmer)
@@ -116,7 +116,7 @@ ORDER BY category, word
 """
 
 
-@register("wordlist_extraction", sql=WORDLIST_SQL, tags=("text", "train"))
+@register(sql=WORDLIST_SQL)
 def wordlist_extraction(spark, sf_dir):
     """M16: per-category vocabulary (minDF=5; minTF accepted-but-unused,
     matching CountVectorizer.fit) minus words in >2 category vocabularies —
@@ -154,8 +154,7 @@ ORDER BY category, word
 """
 
 
-@register("wordlist_extraction_scaled", sql=WORDLIST_SCALED_SQL,
-          tags=("text", "train"))
+@register(sql=WORDLIST_SCALED_SQL)
 def wordlist_extraction_scaled(spark, sf_dir):
     """M16 with fixture-scaled thresholds (minDF=2, overlap_limit=5): the
     reference-parity constants (minDF=5, overlap>2) retain only 2 rows at
@@ -218,7 +217,7 @@ ORDER BY doc_id
 """
 
 
-@register("quality_repetition", sql=REPETITION_SQL, tags=("text", "quality"))
+@register(sql=REPETITION_SQL)
 def quality_repetition(spark, sf_dir):
     """Within-document repetition score (the Gopher-rules quality signal):
     fraction of duplicate word 3-grams per doc. One explode + one hash
@@ -257,8 +256,7 @@ ORDER BY doc_id
 """
 
 
-@register("decontaminate_ngram", sql=DECONTAMINATE_SQL,
-          tags=("text", "dedup"))
+@register(sql=DECONTAMINATE_SQL)
 def decontaminate_ngram(spark, sf_dir):
     """Benchmark decontamination: flag training documents sharing any word
     3-gram with a benchmark set (stand-in here: the n-grams of doc_id < 5;
@@ -305,7 +303,7 @@ ORDER BY doc_id
 """
 
 
-@register("ngram_novelty", sql=NOVELTY_SQL, tags=("text", "dedup"))
+@register(sql=NOVELTY_SQL)
 def ngram_novelty(spark, sf_dir):
     """Per-document novelty: the fraction of a doc's distinct word 5-grams
     whose first corpus appearance (min doc_id) is this document. The
@@ -346,7 +344,7 @@ ORDER BY lang
 """
 
 
-@register("text_stats_by_lang", sql=WORDCOUNT_SQL, tags=("text",))
+@register(sql=WORDCOUNT_SQL)
 def text_stats_by_lang(spark, sf_dir):
     """A1 (avg word count) generalized to per-group statistics."""
     docs = load(spark, sf_dir, "documents")
@@ -373,7 +371,7 @@ ORDER BY doc_id
 """
 
 
-@register("token_counts", sql=TOKCOUNT_SQL, tags=("text",))
+@register(sql=TOKCOUNT_SQL)
 def token_counts(spark, sf_dir):
     """Token counting: whitespace tokens + a BPE-ish regex token count
     (letters runs / digit runs / single punctuation)."""
@@ -403,7 +401,7 @@ ORDER BY doc_id
 """
 
 
-@register("quality_scores", sql=QUALITY_SQL, tags=("text",))
+@register(sql=QUALITY_SQL)
 def quality_scores(spark, sf_dir):
     """Document quality heuristics: alpha-character ratio, distinct-token
     ratio (repetition detector), length gate — the standard pretraining-data
@@ -447,7 +445,7 @@ ORDER BY doc_id
 """
 
 
-@register("langid_stopword", sql=LANGID_SQL, tags=("text",))
+@register(sql=LANGID_SQL)
 def langid_stopword(spark, sf_dir):
     """Language ID by stop-word voting — the n-gram-heuristic family,
     deterministic and fully native (no Python). The classifier
@@ -474,7 +472,7 @@ ORDER BY doc_id
 """
 
 
-@register("doc_rolling_hash", sql=ROLLING_HASH_SQL, tags=("text", "dedup"))
+@register(sql=ROLLING_HASH_SQL)
 def doc_rolling_hash(spark, sf_dir):
     """Rolling (polynomial) document fingerprint, fully native: per-token
     hash folded left with acc = (acc * B + h) mod p over the token
@@ -512,7 +510,7 @@ ORDER BY doc_id
 """
 
 
-@register("doc_fingerprints", sql=FINGERPRINT_SQL, tags=("text", "dedup"))
+@register(sql=FINGERPRINT_SQL)
 def doc_fingerprints(spark, sf_dir):
     """Document fingerprinting: exact content hash + order-insensitive
     bag-of-words fingerprint (sorted distinct tokens)."""
@@ -540,7 +538,7 @@ ORDER BY doc_id, chunk_id
 """
 
 
-@register("doc_chunks", sql=CHUNKS_SQL, tags=("text",))
+@register(sql=CHUNKS_SQL)
 def doc_chunks(spark, sf_dir):
     """Fixed-size training-chunk extraction via the Python-UDTF +
     lateralJoin surface (functions/chunker.py): one row per 32-token
@@ -569,7 +567,7 @@ ORDER BY doc_id
 """
 
 
-@register("quality_zscore_by_lang", sql=ZSCORE_SQL, tags=("text",))
+@register(sql=ZSCORE_SQL)
 def quality_zscore_by_lang(spark, sf_dir):
     """Per-language token-count z-score via plain grouped applyInPandas —
     the remaining cell of the pandas-API matrix (mapInPandas: multimodal;
@@ -619,8 +617,7 @@ ORDER BY doc_id, tfidf DESC, term
 """
 
 
-@register("text_tfidf_topk", sql=TFIDF_SQL, bench=True,
-          tags=("text", "tfidf", "window"))
+@register(sql=TFIDF_SQL, bench=True)
 def text_tfidf_topk(spark, sf_dir):
     """Top-3 TF-IDF terms per document, fully native: explode → two hash
     aggs (term-frequency and doc-frequency) → broadcast of the corpus-size
@@ -671,8 +668,7 @@ ORDER BY doc_id
 """
 
 
-@register("quality_outlier_trim", sql=OUTLIER_TRIM_SQL,
-          tags=("text", "quality", "percentile"))
+@register(sql=OUTLIER_TRIM_SQL)
 def quality_outlier_trim(spark, sf_dir):
     """Length-outlier filtering for training corpora: keep documents within
     the per-language [p05, p95] band of n_chars. The percentile bounds
@@ -701,8 +697,7 @@ ORDER BY doc_id
 """
 
 
-@register("sample_stratified", sql=STRAT_SAMPLE_SQL,
-          tags=("text", "sampling"))
+@register(sql=STRAT_SAMPLE_SQL)
 def sample_stratified(spark, sf_dir):
     """Stratified sampling without a shuffle: per-stratum Bernoulli draw
     (en 0.5, others 0.25) decided by comparing an md5 prefix of
@@ -741,8 +736,7 @@ LIMIT 20
 """
 
 
-@register("boilerplate_ngrams", sql=BOILERPLATE_SQL,
-          tags=("text", "dedup", "heavy-hitters"))
+@register(sql=BOILERPLATE_SQL)
 def boilerplate_ngrams(spark, sf_dir):
     """Corpus-level heavy hitters: the 20 most frequent 5-gram phrases
     appearing in >= 2 distinct documents — the detector for boilerplate
@@ -827,8 +821,7 @@ ORDER BY doc_id
 """
 
 
-@register("pii_redaction", sql=PII_SQL, bench=True,
-          tags=("text", "quality", "pii"))
+@register(sql=PII_SQL, bench=True)
 def pii_redaction(spark, sf_dir):
     """PII scrub as a driver-checked differential: inject
     deterministic doc_id-derived email/URL/IPv4/phone spans into the
@@ -922,7 +915,7 @@ ORDER BY lang, predicted_lang
 """
 
 
-@register("langid_char_ngram", sql=LANGID_NGRAM_SQL, tags=("text", "eval"))
+@register(sql=LANGID_NGRAM_SQL)
 def langid_char_ngram(spark, sf_dir):
     """Second language-ID method next to the stop-word voter: ranked
     char-TRIGRAM profiles (Cavnar-Trenkle's n-gram-frequency scheme with
@@ -1015,7 +1008,7 @@ ORDER BY token
 """
 
 
-@register("fuzzy_lexicon_match", sql=FUZZY_MATCH_SQL, tags=("text", "fuzzy"))
+@register(sql=FUZZY_MATCH_SQL)
 def fuzzy_lexicon_match(spark, sf_dir):
     """The J3 fuzzy Levenshtein fallback routed through the driver gate
     (previously unit-only): corpus tokens that miss the lexicon exactly
@@ -1079,7 +1072,7 @@ ORDER BY lang
 """
 
 
-@register("token_counts_regex", sql=TOKEN_REGEX_SQL, tags=("text",))
+@register(sql=TOKEN_REGEX_SQL)
 def token_counts_regex(spark, sf_dir):
     """Per-language token accounting under the GPT-2-style regex
     pre-tokenizer (contraction suffixes, space-prefixed letter/digit
@@ -1140,7 +1133,7 @@ ORDER BY ph.phrase
 """
 
 
-@register("search_phrase", sql=PHRASE_SEARCH_SQL, tags=("text", "search"))
+@register(sql=PHRASE_SEARCH_SQL)
 def search_phrase(spark, sf_dir):
     """POSITIONAL phrase search — the index capability ranked retrieval
     (hybrid_search_rrf) and boolean retrieval don't need but phrase
@@ -1219,7 +1212,7 @@ def _lower_terms(docs):
         F.split(F.lower("text"), " ", -1)).alias("w"))
 
 
-@register("search_boolean_and", sql=BOOL_SEARCH_SQL, tags=("text", "search"))
+@register(sql=BOOL_SEARCH_SQL)
 def search_boolean_and(spark, sf_dir):
     """Boolean AND retrieval over the inverted index: a doc matches a
     query when it contains EVERY query term — resolved as one
@@ -1310,7 +1303,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register("dedup_tfidf_cosine", sql=TFIDF_DEDUP_SQL, tags=("dedup", "text"))
+@register(sql=TFIDF_DEDUP_SQL)
 def dedup_tfidf_cosine(spark, sf_dir):
     """Lexical near-dup pairs by TF-IDF cosine over the inverted index —
     the sparse-VECTOR sibling of the token-set Jaccard family: term
@@ -1374,7 +1367,7 @@ def dedup_tfidf_cosine(spark, sf_dir):
 # --- BM25 ranked retrieval ---------------------------------------------------
 
 
-@register("search_bm25", sql=BM25_SQL, tags=("text", "search"))
+@register(sql=BM25_SQL)
 def search_bm25(spark, sf_dir):
     """BM25 ranked retrieval (k1=1.2, b=0.75) — the scoring layer the
     retrieval triad lacked: boolean AND (membership), phrase
@@ -1424,7 +1417,7 @@ ORDER BY doc_id
 """
 
 
-@register("quality_gopher_rules", sql=GOPHER_SQL, tags=("text", "pipeline"))
+@register(sql=GOPHER_SQL)
 def quality_gopher_rules(spark, sf_dir):
     """The Gopher heuristic quality gate with its published thresholds:
     50–100k words, mean word length 3–10, symbol-to-word ratio ≤ 0.1
@@ -1486,7 +1479,7 @@ ORDER BY doc_id
 """
 
 
-@register("quality_c4_rules", sql=C4_SQL, tags=("text", "pipeline"))
+@register(sql=C4_SQL)
 def quality_c4_rules(spark, sf_dir):
     """The C4 heuristic gate with its published thresholds: retain lines
     ending in a terminal punctuation mark ('.', '!', '?', '"') with >= 5

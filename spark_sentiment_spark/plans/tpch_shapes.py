@@ -57,7 +57,7 @@ ORDER BY o_orderpriority
 """
 
 
-@register("q4_priority_exists", sql=Q4_SQL, tags=("join", "semi", "agg"))
+@register(sql=Q4_SQL)
 def q4_priority_exists(spark, sf_dir):
     orders = load(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= _ts("1996-01-01"))
@@ -97,7 +97,7 @@ ORDER BY supp_nation, cust_nation, l_year
 """
 
 
-@register("q7_volume_shipping", sql=Q7_SQL, tags=("join", "agg"))
+@register(sql=Q7_SQL)
 def q7_volume_shipping(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
@@ -155,7 +155,7 @@ ORDER BY o_year
 """
 
 
-@register("q8_market_share", sql=Q8_SQL, tags=("join", "agg", "conditional"))
+@register(sql=Q8_SQL)
 def q8_market_share(spark, sf_dir):
     part = load(spark, sf_dir, "part").where(F.col("p_type") == "STANDARD")
     li = load(spark, sf_dir, "lineitem")
@@ -209,7 +209,7 @@ ORDER BY nation, o_year DESC
 """
 
 
-@register("q9_product_profit", sql=Q9_SQL, tags=("join", "agg"))
+@register(sql=Q9_SQL)
 def q9_product_profit(spark, sf_dir):
     part = load(spark, sf_dir, "part").where(F.col("p_name").like("%widget%"))
     li = load(spark, sf_dir, "lineitem")
@@ -247,8 +247,7 @@ ORDER BY value DESC, n_name
 """
 
 
-@register("q11_nation_concentration", sql=Q11_SQL,
-          tags=("agg", "scalar-subquery"))
+@register(sql=Q11_SQL)
 def q11_nation_concentration(spark, sf_dir):
     supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
@@ -285,7 +284,7 @@ ORDER BY l_linestatus
 """
 
 
-@register("q12_priority_classes", sql=Q12_SQL, tags=("join", "conditional"))
+@register(sql=Q12_SQL)
 def q12_priority_classes(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem").where(
@@ -319,8 +318,7 @@ ORDER BY custdist DESC, c_count DESC
 """
 
 
-@register("q13_customer_distribution", sql=Q13_SQL,
-          tags=("join", "outer", "agg"))
+@register(sql=Q13_SQL)
 def q13_customer_distribution(spark, sf_dir):
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
@@ -350,7 +348,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-09-01'
 """
 
 
-@register("q14_promo_revenue", sql=Q14_SQL, tags=("join", "conditional"))
+@register(sql=Q14_SQL)
 def q14_promo_revenue(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= _ts("1997-09-01"))
@@ -383,7 +381,7 @@ ORDER BY s_suppkey
 """
 
 
-@register("q15_top_supplier", sql=Q15_SQL, tags=("agg", "scalar-subquery"))
+@register(sql=Q15_SQL)
 def q15_top_supplier(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= _ts("1997-01-01"))
@@ -427,8 +425,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_size
 """
 
 
-@register("q16_supplier_variety", sql=Q16_SQL,
-          tags=("join", "anti", "distinct-agg"))
+@register(sql=Q16_SQL)
 def q16_supplier_variety(spark, sf_dir):
     part = load(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#1")
@@ -464,8 +461,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
 """
 
 
-@register("q19_disjunctive_brackets", sql=Q19_SQL,
-          tags=("join", "filter", "disjunction"))
+@register(sql=Q19_SQL)
 def q19_disjunctive_brackets(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
@@ -507,7 +503,7 @@ ORDER BY s_name
 """
 
 
-@register("q20_part_suppliers", sql=Q20_SQL, tags=("join", "semi", "agg"))
+@register(sql=Q20_SQL)
 def q20_part_suppliers(spark, sf_dir):
     supp = load(spark, sf_dir, "supplier")
     part = load(spark, sf_dir, "part").where(F.col("p_name").like("%widget%"))
@@ -547,8 +543,7 @@ ORDER BY cntrycode
 """
 
 
-@register("q22_dormant_customers", sql=Q22_SQL,
-          tags=("anti", "scalar-subquery", "agg"))
+@register(sql=Q22_SQL)
 def q22_dormant_customers(spark, sf_dir):
     cust = load(spark, sf_dir, "customer")
     # "Dormant" = no orders since mid-2000 (every synthetic customer has at
@@ -602,8 +597,7 @@ ORDER BY acctbal DESC, c.p_partkey, c.s_name
 """
 
 
-@register("q2_min_cost_supplier", sql=Q2_SQL,
-          tags=("join", "scalar-subquery", "agg"))
+@register(sql=Q2_SQL)
 def q2_min_cost_supplier(spark, sf_dir):
     """Q2's shape on the reduced schema: per-part minimum over a joined
     candidate set, keeping the achieving rows. The per-group min is a
@@ -665,8 +659,7 @@ LIMIT 20
 """
 
 
-@register("q21_waiting_suppliers", sql=Q21_SQL,
-          tags=("join", "semi", "agg"))
+@register(sql=Q21_SQL)
 def q21_waiting_suppliers(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").where(

@@ -21,12 +21,14 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_sentiment_spark.operators.event_windows import sliding_hour_counts
-from spark_sentiment_spark.plans.registry import track_staging_dir
+from spark_sentiment_spark.plans.registry import (track_staging_dir,
+                                                  track_temp_table)
 from spark_sentiment_spark.sources.io import events_ts_utc, load_parquet_utc
 
 #: The longest any streaming run here may take, in seconds. A run still
@@ -150,16 +152,19 @@ def stateful_user_counts(events: DataFrame) -> DataFrame:
         outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout))
 
 
-def run_to_memory(stream_df: DataFrame, name: str,
+def run_to_memory(stream_df: DataFrame,
                   output_mode: str = "complete") -> DataFrame:
     """Execute a streaming plan over the finite file source with
     ``trigger(availableNow)`` into an in-memory sink; returns the result
-    table. This is the test/benchmark harness — production sinks swap in
-    ``format("parquet")``/``foreachBatch`` with checkpointing."""
+    table, a temp view the current run drops. This is the test/benchmark
+    harness — production sinks swap in ``format("parquet")``/
+    ``foreachBatch`` with checkpointing."""
+    spark = stream_df.sparkSession
+    name = track_temp_table(spark, f"stream_{uuid.uuid4().hex}")
     await_stream(stream_df.writeStream.format("memory").queryName(name)
                  .outputMode(output_mode).trigger(availableNow=True)
                  .start())
-    return stream_df.sparkSession.table(name)
+    return spark.table(name)
 
 
 def dedup_stream(events: DataFrame) -> DataFrame:

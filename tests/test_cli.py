@@ -109,7 +109,7 @@ def test_cli_list_queries(capsys):
     rc = main(["--list-queries"])
     assert rc == 0
     out = capsys.readouterr().out
-    assert "dedup_exact\t[dedup]\toracle" in out
+    assert "dedup_exact\tdedup_queries\toracle" in out
     assert "hybrid_search_rrf" in out
     assert len(out.strip().splitlines()) >= 120
 

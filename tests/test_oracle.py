@@ -155,11 +155,25 @@ def test_one_batch_query_per_oracle():
     each is the only check of its source and sink path."""
     groups = {}
     for name, q in REGISTRY.items():
-        if q.sql is not None and "streaming" not in q.tags:
+        if q.sql is not None and not q.fn.__module__.endswith(
+                ".streaming_queries"):
             groups.setdefault(" ".join(q.sql.split()), set()).add(name)
     shared = sorted(sorted(g) for g in groups.values()
                     if len(g) > 1 and g not in SHARED_ORACLE_OK)
     assert not shared, f"batch queries share an oracle: {shared}"
+
+
+def test_registering_a_name_twice_raises_and_keeps_the_first():
+    """A query is named by its function; a second function of the same
+    name is refused, never silently put in the first one's place."""
+    first = REGISTRY["dedup_exact"]
+
+    def dedup_exact(spark, sf_dir):
+        raise AssertionError("the duplicate must never be registered")
+
+    with pytest.raises(ValueError, match="dedup_exact"):
+        registry.register()(dedup_exact)
+    assert REGISTRY["dedup_exact"] is first
 
 
 def test_money_sites_match_audited_snapshot():

@@ -344,7 +344,7 @@ def test_streaming_dedup_stream_stage_shape(spark):
     _no_python(lp)
 
 
-def test_streaming_hll_state_bounded_and_jvm(spark, query):
+def test_streaming_hll_state_bounded_and_jvm(spark, query, run):
     """streaming_hll_distinct keeps ONE row of streaming state per HLL
     register — the memory sink can never exceed 256 rows regardless of
     stream length — and the batch fold over the sink is pure JVM with
@@ -354,11 +354,10 @@ def test_streaming_hll_state_bounded_and_jvm(spark, query):
     ns = nodes(query("streaming_hll_distinct"))
     _no_python(ns)
     assert count(ns, "BroadcastNestedLoopJoin")  # 1-row exact twin broadcast
-    # the sink table is the bucket-maxima state: bounded by the register
-    # count
-    sink_rows = spark.table([t for t in spark.catalog.listTables()
-                             if t.name.startswith("stream_hll")][-1].name) \
-        .count()
+    # the sink table (the one temp table the query's run holds) is the
+    # bucket-maxima state: bounded by the register count
+    [sink] = [x[1] for kind, x in run if kind == "table"]
+    sink_rows = spark.table(sink).count()
     assert sink_rows <= HLL_M
 
 

@@ -31,7 +31,7 @@ def test_tumbling_stream_equals_batch(spark, events_stream, events_batch):
     from spark_sentiment_spark.streaming.streams import (run_to_memory,
                                                          tumbling_hourly)
 
-    got = run_to_memory(tumbling_hourly(events_stream), "t_tumble")
+    got = run_to_memory(tumbling_hourly(events_stream))
     want = (
         events_batch.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"),
@@ -47,7 +47,7 @@ def test_sliding_stream_equals_batch(spark, events_stream, events_batch):
     from spark_sentiment_spark.streaming.streams import (run_to_memory,
                                                          sliding_hourly)
 
-    got = run_to_memory(sliding_hourly(events_stream), "t_slide")
+    got = run_to_memory(sliding_hourly(events_stream))
     want = (
         events_batch.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"),
@@ -66,7 +66,7 @@ def test_session_stream_matches_batch_session_count(query, events_stream):
     from spark_sentiment_spark.streaming.streams import (run_to_memory,
                                                          session_windows)
 
-    got = run_to_memory(session_windows(events_stream), "t_sess")
+    got = run_to_memory(session_windows(events_stream))
     stream_counts = (got.groupBy("user_id")
                      .agg(F.count(F.lit(1)).alias("n_sessions"),
                           F.sum("n_events").alias("n_events")))
@@ -85,7 +85,7 @@ def test_stateful_user_counts(spark, events_stream, events_batch):
     from spark_sentiment_spark.streaming.streams import (run_to_memory,
                                                          stateful_user_counts)
 
-    got = run_to_memory(stateful_user_counts(events_stream), "t_state",
+    got = run_to_memory(stateful_user_counts(events_stream),
                         output_mode="update")
     # one availableNow batch → one emission per user with the full count
     want = events_batch.groupBy("user_id").agg(
@@ -126,8 +126,7 @@ def test_dedup_stream_drops_duplicated_source(spark, events_batch, tmp_path):
             "ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif dict(static.dtypes)["ts"] == "timestamp_ntz":
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    got = run_to_memory(dedup_stream(stream), "t_dedup",
-                        output_mode="append")
+    got = run_to_memory(dedup_stream(stream), output_mode="append")
     assert got.count() == events_batch.count()
     assert got.select("event_id").distinct().count() == got.count()
 
@@ -138,7 +137,7 @@ def test_stream_static_enrich_equals_batch(spark, events_stream, events_batch):
                                                          stream_static_enrich)
 
     dim = load(spark, SF_DIR, "customer")
-    got = run_to_memory(stream_static_enrich(events_stream, dim), "t_enrich")
+    got = run_to_memory(stream_static_enrich(events_stream, dim))
     seg = dim.select(F.col("c_custkey").alias("user_id"),
                      F.col("c_mktsegment").alias("segment"))
     want = (events_batch.join(seg, "user_id").groupBy("segment")
@@ -153,7 +152,7 @@ def test_stream_stream_conversions_equals_batch(spark, events_stream,
     from spark_sentiment_spark.streaming.streams import (
         run_to_memory, stream_stream_conversions)
 
-    got = run_to_memory(stream_stream_conversions(events_stream), "t_ssj",
+    got = run_to_memory(stream_stream_conversions(events_stream),
                         output_mode="append")
     s = (events_batch.where(F.col("event_type") == "signup")
          .select(F.col("user_id").alias("s_user"), F.col("ts").alias("s_ts")))
@@ -337,10 +336,27 @@ def test_event_stream_reads_a_replaced_source_file(spark, tmp_path,
         os.replace(tmp_path / "next.parquet", path)
         with registry.run():
             got = run_to_memory(read_event_stream(spark, str(tmp_path)),
-                                f"t_restaged_{n}", "append")
+                                "append")
             counts.append(got.count())
     assert counts == [10, 25]
     assert not list(tmp_path.glob("evstream_*"))
+
+
+def test_memory_sink_views_are_dropped_with_their_run(spark, query):
+    """The temp view a memory-sink streaming query reads its result from
+    belongs to the query's run: none is left in the catalog after it."""
+    from spark_sentiment_spark.plans import registry
+
+    def views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("stream_")}
+
+    before = views()
+    for name in ("streaming_tumbling_hour", "streaming_sessionize"):
+        with registry.run():
+            assert query(name).count() > 0
+            assert views() - before
+    assert views() == before
 
 
 # --- streaming catalog queries --------------------------------------------
